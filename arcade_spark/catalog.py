@@ -44,17 +44,20 @@ class EncodedTable:
     # -- metadata ----------------------------------------------------
     @property
     def columns(self) -> list[tuple[str, str]]:
-        from arcade_spark.decode import table_columns
+        from arcade_spark.partread import load_manifest
 
-        return table_columns(self.spark, self.out_dir)
+        return load_manifest(self.out_dir)[0]
 
     def manifest(self) -> DataFrame:
         return self.spark.read.parquet(f"{self.out_dir}/manifest")
 
     def blocks(self, columns: list[str] | None = None) -> DataFrame:
-        from arcade_spark.decode import read_blocks
+        from pyspark.sql import functions as F
 
-        return read_blocks(self.spark, self.out_dir, columns)
+        df = self.spark.read.parquet(f"{self.out_dir}/blocks")
+        if columns is not None:
+            df = df.filter(F.col("column").isin(columns))
+        return df
 
     def stats(self) -> dict:
         from pyspark.sql import functions as F

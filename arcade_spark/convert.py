@@ -77,7 +77,3 @@ def block_to_arrow(block, vtype: str) -> pa.Array:
         arr = pa.Array.from_pandas(block.values, mask=validity_mask, type=pa.int64())
         return arr.cast(pa.bool_())
     raise TypeError(vtype)
-
-
-def block_to_series(block, vtype: str) -> pd.Series:
-    return pd.Series(block_to_arrow(block, vtype).to_pandas())

@@ -1,33 +1,19 @@
-"""Decode kernels: full scan (ArcadeReader::scan — reader.cpp:146-195),
-reconstructing the original typed DataFrame from the encoded-blocks
-table, bit-identical to the source.
+"""Full scan (ArcadeReader::scan — reader.cpp:146-195): the original
+typed DataFrame, bit-identical to the source, decoded per partition by
+partread.scan_parts with per-(part, column) running dictionaries
+replayed in block order (process.cpp:456-503). Also the Arrow type map
+and zero-copy binary views the partread kernels share.
 
-Plan shape:
-
-    blocks scan (Catalyst prunes to selected columns via the `column`
-    predicate, pushed to parquet row-group stats)
-      → repartition(P, part_id)
-      → sortWithinPartitions(part_id, block_id, column)
-      → mapInPandas(decode_kernel)   [replays per-(part, column)
-        running dictionaries in block order — process.cpp:456-503]
-
-Pagination is inherent: the kernel yields one pandas DataFrame per
-decoded block (the coroutine `co_yield` per page of the reference —
+Pagination is inherent: the kernel yields one RecordBatch per decoded
+block (the coroutine `co_yield` per page of the reference —
 generator.h:44-60 — is just Spark's iterator model).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from arcade_spark.convert import block_to_arrow
-from arcade_spark.core import decode_int_block, decode_str_block
-from arcade_spark.gdict import GlobalDictDecoder
-from arcade_spark.schema import spark_type_for
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _out_arrow_type(vtype: str) -> pa.DataType:
@@ -66,188 +52,21 @@ def _binary_views(arr: pa.Array):
     return offsets, data
 
 
-def read_blocks(spark: SparkSession, out_dir: str, columns: list[str] | None = None) -> DataFrame:
-    df = spark.read.parquet(f"{out_dir}/blocks")
-    if columns is not None:
-        df = df.filter(F.col("column").isin(columns))
-    return df
-
-
-_manifest_meta_cache: dict[str, tuple[list[tuple[str, str]], int]] = {}
-
-
-def _manifest_meta(spark: SparkSession, out_dir: str) -> tuple[list[tuple[str, str]], int]:
-    """(columns, n_parts) in ONE tiny manifest job, cached per out_dir
-    for the session (the manifest is immutable once written)."""
-    import json
-
-    cached = _manifest_meta_cache.get(out_dir)
-    if cached is not None:
-        return cached
-    mdf = spark.read.parquet(f"{out_dir}/manifest")
-    if "format_rev" not in mdf.columns:
-        from arcade_spark.manifest import FORMAT_REV
-
-        raise ValueError(
-            f"{out_dir}: no format_rev in manifest (written before rev 6); "
-            f"this reader is FORMAT_REV {FORMAT_REV} — re-encode the table"
-        )
-    rows = mdf.select("columns", "format_rev").collect()
-    from arcade_spark.manifest import FORMAT_REV
-
-    bad = {r["format_rev"] for r in rows} - {FORMAT_REV}
-    if bad:
-        raise ValueError(
-            f"{out_dir}: manifest format_rev {sorted(bad)} != reader "
-            f"FORMAT_REV {FORMAT_REV} — re-encode the table"
-        )
-    cols = [tuple(c) for c in json.loads(rows[0]["columns"])]
-    meta = (cols, len(rows))
-    _manifest_meta_cache[out_dir] = meta
-    return meta
-
-
-def num_parts(spark: SparkSession, out_dir: str) -> int:
-    return _manifest_meta(spark, out_dir)[1]
-
-
-def table_columns(spark: SparkSession, out_dir: str) -> list[tuple[str, str]]:
-    """(name, vtype) in encode order, from the manifest (authoritative —
-    per-column block files make blocks-table row order arbitrary)."""
-    return _manifest_meta(spark, out_dir)[0]
-
-
-def make_decode_kernel(columns: list[tuple[str, str]], emit_meta: bool = False):
-    """Decode blocks into original rows (Arrow-native). Expects chunks
-    sorted by (part_id, block_id, column); all selected columns present
-    per block. Yields one RecordBatch per decoded block — the paging
-    model of the reference's coroutine scan (generator.h:44-60)."""
-    want = {name for name, _ in columns}
-    meta_fields = (
-        [pa.field("part_id", pa.int32()), pa.field("block_id", pa.int32()),
-         pa.field("pos", pa.int64())] if emit_meta else []
-    )
-    out_schema = pa.schema(
-        meta_fields + [pa.field(n, _out_arrow_type(v)) for n, v in columns]
-    )
-
-    def kernel(batches) -> Iterator[pa.RecordBatch]:
-        gdecs: dict[tuple[int, str], GlobalDictDecoder] = {}
-        pending: dict[tuple[int, int], dict[str, tuple]] = {}
-
-        def decode_block(part_id: int, block_id: int, chunks) -> pa.RecordBatch:
-            arrays = []
-            n = None
-            for name, vt in columns:
-                blob, meta = chunks[name]
-                if vt in ("str", "binary"):
-                    gdec = gdecs.setdefault((part_id, name), GlobalDictDecoder())
-                    block = decode_str_block(blob, meta, gdec)
-                else:
-                    block = decode_int_block(blob, meta)
-                arr = block_to_arrow(block, vt).cast(_out_arrow_type(vt))
-                arrays.append(arr)
-                n = len(arr)
-            if emit_meta:
-                import numpy as np
-
-                arrays = [
-                    pa.array(np.full(n, part_id, dtype=np.int32)),
-                    pa.array(np.full(n, block_id, dtype=np.int32)),
-                    pa.array(np.arange(n, dtype=np.int64)),
-                ] + arrays
-            return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-        def drain_ready() -> Iterator[pa.RecordBatch]:
-            done = sorted(k for k, chunks in pending.items() if set(chunks) >= want)
-            for key in done:
-                yield decode_block(key[0], key[1], pending.pop(key))
-
-        for batch in batches:
-            # Arrow-native row access: index the columns directly and
-            # slice blobs as zero-copy memoryviews into the batch's data
-            # buffer (the buffer stays alive as long as a view on it
-            # does, so pending blocks may span batches). No to_pylist —
-            # that copied every blob into per-row Python dicts.
-            col = {n: batch.column(j) for j, n in enumerate(batch.schema.names)}
-            names = col["column"].to_pylist()
-            codecs = col["codec"].to_pylist()
-            posts = col["post"].to_pylist()
-            part_ids = col["part_id"].to_numpy(zero_copy_only=False)
-            block_ids = col["block_id"].to_numpy(zero_copy_only=False)
-            n_vals = col["n_values"].to_numpy(zero_copy_only=False)
-            widths = col["code_width"].to_numpy(zero_copy_only=False)
-            gstarts = col["global_start"].to_numpy(zero_copy_only=False)
-            resets = col["gdict_reset"].to_numpy(zero_copy_only=False)
-            seeds = col["gdict_seed"].to_numpy(zero_copy_only=False)
-            blob_off, blob_mv = _binary_views(col["blob"])
-            seg_off, seg_mv = _binary_views(col["seg"])
-            for i in range(batch.num_rows):
-                name = names[i]
-                if name not in want:
-                    continue
-                meta = {
-                    "codec": codecs[i],
-                    "post": posts[i],
-                    "n_values": int(n_vals[i]),
-                    "code_width": int(widths[i]),
-                    "global_start": int(gstarts[i]),
-                    "gdict_reset": bool(resets[i]),
-                    "gdict_seed": bool(seeds[i]),
-                    "seg": seg_mv[seg_off[i] : seg_off[i + 1]],
-                }
-                key = (int(part_ids[i]), int(block_ids[i]))
-                blob = blob_mv[blob_off[i] : blob_off[i + 1]]
-                pending.setdefault(key, {})[name] = (blob, meta)
-                if set(pending[key]) >= want:
-                    yield from drain_ready()
-        yield from drain_ready()
-
-    return kernel
-
-
 def scan(
     spark: SparkSession,
     out_dir: str,
     columns: list[str] | None = None,
     emit_meta: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
-    """Full scan: decoded DataFrame with the original schema (projected).
+    """Full scan: decoded DataFrame with the original schema (projected),
+    read per partition in-process by partread.scan_parts (zero shuffle,
+    no JVM→Python IPC of blob bytes).
 
-    ``mode="files"`` (default) runs the per-partition pyarrow in-process
-    reader (partread.scan_parts — zero shuffle, no JVM→Python IPC of
-    blob bytes); ``mode="plan"`` keeps the DataFrame pipeline below.
+    Note on pruning: even when projecting a subset, every chunk of the
+    selected columns is read — differential-dictionary segments ride
+    inside each chunk, so later blocks need earlier chunks' segments
+    replayed (ARCADE resolves these via the previndex walk —
+    process.cpp:88-123; we replay in block order)."""
+    from arcade_spark.partread import scan_parts
 
-    Note on ordering/pruning: even when projecting a subset, all chunks
-    of the selected columns are shipped — differential-dictionary
-    segments ride inside each chunk, so later blocks need earlier
-    chunks' segments replayed (ARCADE resolves these via the previndex
-    walk — process.cpp:88-123; we replay in block order)."""
-    if mode == "files":
-        from arcade_spark.partread import scan_parts
-
-        return scan_parts(spark, out_dir, columns, emit_meta)
-    if mode != "plan":
-        raise ValueError(f"mode must be 'files' or 'plan': {mode!r}")
-    all_cols = table_columns(spark, out_dir)
-    if columns is not None:
-        sel = [(n, v) for n, v in all_cols if n in columns]
-    else:
-        sel = all_cols
-    blocks = read_blocks(spark, out_dir, [n for n, _ in sel])
-    n_parts = num_parts(spark, out_dir)
-    kernel = make_decode_kernel(sel, emit_meta=emit_meta)
-    schema = ", ".join(
-        (["part_id int", "block_id int", "pos long"] if emit_meta else [])
-        + [f"{n} {spark_type_for(v)}" for n, v in sel]
-    )
-    if emit_meta:
-        schema = "part_id int, block_id int, pos long, " + ", ".join(
-            f"{n} {spark_type_for(v)}" for n, v in sel
-        )
-    return (
-        blocks.repartition(max(n_parts, 1), F.col("part_id"))
-        .sortWithinPartitions("part_id", "block_id", "column")
-        .mapInArrow(kernel, schema=schema)
-    )
+    return scan_parts(spark, out_dir, columns, emit_meta)

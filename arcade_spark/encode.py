@@ -201,15 +201,6 @@ def make_encode_kernel(
     return kernel
 
 
-
-def _invalidate_meta(out_dir: str) -> None:
-    try:
-        from arcade_spark.decode import _manifest_meta_cache
-
-        _manifest_meta_cache.pop(out_dir, None)
-    except Exception:
-        pass
-
 def encode_job(
     spark: SparkSession,
     source: DataFrame,
@@ -277,7 +268,6 @@ def encode_job(
         .collect()
     )
     wall_seconds = time.time() - t0
-    _invalidate_meta(out_dir)
 
     import pyarrow.parquet as pq
     import os
@@ -452,7 +442,6 @@ def encode_files_job(
         adf = spark.createDataFrame(rdd, "gid int, paths string")
         new_rows = adf.mapInArrow(kernel, schema=MANIFEST_DDL).collect()
     wall_seconds = time.time() - t0
-    _invalidate_meta(out_dir)
 
     mdir = os.path.join(out_dir, "manifest")
     totals = {"rows": 0, "raw": 0, "enc": 0, "kernel_s": 0.0}

@@ -1,32 +1,25 @@
-"""Files-mode read path: per-partition tasks reading their own encoded
-column files with pyarrow IN-PROCESS — the read-side mirror of
+"""The read path: per-partition tasks reading their own encoded column
+files with pyarrow IN-PROCESS — the read-side mirror of
 ``encode_files_job`` (the 100 TB fast path).
 
-Why this exists (and is the default): the encoded table is one parquet
-file per (partition, column) (manifest.PartWriter), so every read
-operator can be expressed as "each task owns one partition's files":
+The encoded table is one parquet file per (partition, column)
+(manifest.PartWriter), so every read operator is expressed as "each
+task owns one partition's files":
 
     driver: manifest read (tiny) → assignment list [(part_id,)]
       → sc.parallelize(items, len(items))      [1:1, no balls-in-bins]
       → mapInArrow(part kernel)                [pyarrow reads, numpy prune]
 
-vs the plan-mode pipeline (kept as ``mode="plan"`` in readops/decode):
-
-    JVM parquet scan → zone filter → repartition shuffle → Arrow IPC
-    → python kernel
-
-Measured on this class of workload, the JVM→Python Arrow IPC alone
-costs ~13 ns/byte/core — 3× the decode kernels — and plan mode adds a
-shuffle of the blob bytes plus (for filters) a second metadata scan +
-broadcast join for the per-block verdict. Files mode removes all three:
+No blob bytes cross the JVM→Python boundary (measured on this class of
+workload, that Arrow IPC alone costs ~13 ns/byte/core — 3× the decode
+kernels):
 
 - **zero shuffle** for scan / filter / random_access (group_count keeps
   one O(distinct) partial-merge shuffle);
 - **zone pruning in numpy** on the chunk-metadata columns (a few KB per
   partition — parquet column pruning reads no payload bytes);
 - **match-level late materialization**: projection blobs are fetched
-  (by parquet row group) only for blocks with actual filter MATCHES —
-  strictly tighter than the plan-mode zone-level verdict;
+  (by parquet row group) only for blocks with actual filter MATCHES;
 - dictionary replay still ships segments only (seg column reads).
 
 At cluster scale the same shape holds: Spark distributes part ids with
@@ -110,8 +103,9 @@ def quantized_agg_lane(
 
 def load_manifest(out_dir: str) -> tuple[list[tuple[str, str]], list[tuple[int, int]]]:
     """((name, vtype) list, [(part_id, n_rows)] sorted) from the manifest
-    directory — driver-side pyarrow, no Spark job. Validates FORMAT_REV
-    exactly like decode._manifest_meta."""
+    directory — driver-side pyarrow, no Spark job, no cache (a table
+    path may be rewritten within a session). Rejects any part whose
+    FORMAT_REV differs from this reader's."""
     mdir = os.path.join(out_dir, "manifest")
     t = pq.read_table(mdir, columns=["part_id", "n_rows", "columns", "format_rev"])
     revs = set(t.column("format_rev").to_pylist())
@@ -239,9 +233,9 @@ class _ColFile:
 
 
 def _zone_keep_np(pred, cm: _ColMeta) -> np.ndarray:
-    """Per-block zone verdict for one compiled predicate (numpy twin of
-    readops._Pred.zone_keep_expr). Missing zone info ⇒ keep (pruning is
-    an optimization, never a correctness gate).
+    """Per-block zone verdict for one compiled predicate (readops._Pred)
+    over one column file's chunk metadata. Missing zone info ⇒ keep
+    (pruning is an optimization, never a correctness gate).
 
     Negated predicates prune only when the zone PROVES every valid row
     matches the inner predicate (complement = empty): a single-key zone
@@ -744,6 +738,25 @@ def _scan_part_batches(
             yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
+def _random_access_targets(
+    parts: list[tuple[int, int]], row_ids: list[int]
+) -> dict[int, list[tuple[int, int]]]:
+    """Global rowid → {part_id: [(local position, rowid)]} via the
+    manifest prefix sums over ``parts`` (load_manifest's sorted
+    [(part_id, n_rows)] — the ``blocksizes`` index analogue,
+    reader.cpp:113-115). Driver-side metadata math only."""
+    part_ids = [p for p, _ in parts]
+    offsets = np.concatenate([[0], np.cumsum([n for _, n in parts])])
+
+    targets: dict[int, list[tuple[int, int]]] = {}
+    for rid in row_ids:
+        pi = int(np.searchsorted(offsets, rid, side="right")) - 1
+        if pi < 0 or pi >= len(part_ids) or rid >= offsets[pi + 1]:
+            raise IndexError(f"row id {rid} out of range")
+        targets.setdefault(part_ids[pi], []).append((rid - int(offsets[pi]), rid))
+    return targets
+
+
 def random_access_parts(
     spark: SparkSession,
     out_dir: str,
@@ -753,13 +766,12 @@ def random_access_parts(
     """Files-mode point lookup: tasks launch ONLY for touched
     partitions, read metadata, then fetch exactly the touched blocks'
     blobs (+ stateful segs before them) — reader.cpp:69-143."""
-    from arcade_spark.readops import _random_access_targets
     from arcade_spark.schema import spark_type_for
 
-    all_cols, _parts = load_manifest(out_dir)
+    all_cols, parts = load_manifest(out_dir)
     if project is not None:
         all_cols = [(n, v) for n, v in all_cols if n in project]
-    targets = _random_access_targets(out_dir, row_ids)
+    targets = _random_access_targets(parts, row_ids)
     touched = sorted(targets)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

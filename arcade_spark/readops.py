@@ -1,11 +1,10 @@
 """Read operators over the encoded-blocks table:
 
 - ``equi_filter`` — ArcadeReader::equi_filter (reader.cpp:7-66,
-  process.cpp:182-422): zone-map block pruning decided in the DataFrame
-  plan (Catalyst pushes the min/max predicate to parquet row-group
-  stats), then an Arrow-batched kernel that compares dictionary CODES —
-  integer compare, no string materialization — with late
-  materialization of projected columns at matched positions only.
+  process.cpp:182-422): zone-map block pruning on the chunk metadata,
+  then a per-partition kernel that compares dictionary CODES — integer
+  compare, no string materialization — with late materialization of
+  projected columns at matched positions only (partread.filter_parts).
 - ``random_access`` — ArcadeReader::random_access (reader.cpp:69-143):
   rowid → (partition, block, position) via the manifest prefix sums
   (the analogue of the ``blocksizes`` index, reader.cpp:113-115), then
@@ -26,18 +25,15 @@ import os
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arcade_spark.bits import unpack_sections, unpack_uints, unpack_validity
 from arcade_spark.codecs import strcodecs as sc
 from arcade_spark.codecs.intcodecs import decode_for_int
-from arcade_spark.convert import block_to_series
 from arcade_spark.core import decode_int_block, decode_str_block
 from arcade_spark.postpass import unpost
-from arcade_spark.decode import num_parts as _num_parts
-from arcade_spark.decode import read_blocks, table_columns
+from arcade_spark.partread import filter_parts, load_manifest
 from arcade_spark.gdict import GlobalDictDecoder
 from arcade_spark.schema import spark_type_for
 
@@ -68,19 +64,6 @@ def release_key_caches() -> None:
 
 def _register_key_cache(df: DataFrame) -> None:
     _KEY_CACHES.append(df)
-
-
-def _meta_from_row(row) -> dict:
-    return {
-        "codec": row.codec,
-        "post": row.post,
-        "n_values": int(row.n_values),
-        "code_width": int(row.code_width),
-        "global_start": int(row.global_start),
-        "gdict_reset": bool(row.gdict_reset),
-        "gdict_seed": bool(row.gdict_seed),
-        "seg": row.seg if row.seg is not None else b"",
-    }
 
 
 def _searchsorted_bytes(sorted_obj: np.ndarray, value: bytes) -> int:
@@ -414,28 +397,6 @@ class _StrMatchState(_MaskState):
         return fn(arr, pattern=self.pattern).to_numpy(zero_copy_only=False).astype(bool)
 
 
-def _dispatch_filter(
-    spark, out_dir, spec, project, count_only, mode, combine="and"
-) -> DataFrame:
-    """Route to the files-mode driver (default — per-part pyarrow
-    in-process reads, zero shuffle; partread.py) or the plan-mode
-    pipeline (Catalyst zone pruning + repartition + mapInPandas; kept
-    for blocks tables not laid out one-file-per-(part, column) and as
-    the cross-check twin in tests)."""
-    if mode == "files":
-        from arcade_spark.partread import filter_parts
-
-        return filter_parts(spark, out_dir, spec, project, count_only, combine=combine)
-    if mode != "plan":
-        raise ValueError(f"mode must be 'files' or 'plan': {mode!r}")
-    if combine != "and":
-        raise NotImplementedError(
-            "plan mode is a debug/cross-check path (README round-4): "
-            "conjunctions of eq/range/in only — use files mode"
-        )
-    return _filter_op(spark, out_dir, spec, project, count_only)
-
-
 def equi_filter(
     spark: SparkSession,
     out_dir: str,
@@ -443,12 +404,11 @@ def equi_filter(
     value,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``SELECT project... FROM encoded WHERE column = value``
     (ArcadeReader::equi_filter, reader.cpp:7-66)."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("eq", value))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("eq", value))], project, count_only
     )
 
 
@@ -460,15 +420,14 @@ def filter_range(
     hi,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``SELECT project... FROM encoded WHERE column BETWEEN lo AND hi``
     (inclusive). The reference lists range filters as future work
     (README.md:115-131); our sorted dictionaries + zone maps make them
     cheap: blocks prune on min/max, local/rle dicts compare a code
     range, the global dict keeps a growing in-range entry bitmask."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("range", lo, hi))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("range", lo, hi))], project, count_only
     )
 
 
@@ -507,15 +466,14 @@ def filter_and(
     preds: list[tuple],
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Conjunctive filter: ``WHERE p1 AND p2 AND ...`` where each pred
     is ("eq", column, value), ("range", column, lo, hi) or ("in",
     column, values). Zone maps prune a block when ANY predicate's zone
     rules it out; the kernel intersects per-column match-position sets,
     and projection columns materialize only the intersection."""
-    return _dispatch_filter(
-        spark, out_dir, _preds_to_spec(preds), project, count_only, mode
+    return filter_parts(
+        spark, out_dir, _preds_to_spec(preds), project, count_only
     )
 
 
@@ -525,7 +483,6 @@ def filter_dnf(
     conjuncts: list[list[tuple]],
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Full disjunctive-normal-form filter: ``WHERE (p11 AND p12 ...)
     OR (p21 AND ...) OR ...`` — each inner list is a conjunction of
@@ -536,13 +493,6 @@ def filter_dnf(
     within a conjunct and union across conjuncts (partread kernel).
     ``filter_and`` / ``filter_or`` are the one-conjunct / singleton-
     conjunct special cases."""
-    if mode != "files":
-        raise NotImplementedError(
-            "filter_dnf is files-mode only (plan mode is a debug/"
-            "cross-check path, README round-4)"
-        )
-    from arcade_spark.partread import filter_parts
-
     return filter_parts(
         spark, out_dir, project=project, count_only=count_only,
         dnf_spec=[_preds_to_spec(c) for c in conjuncts],
@@ -555,7 +505,6 @@ def filter_or(
     preds: list[tuple],
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Disjunctive filter: ``WHERE p1 OR p2 OR ...`` (same predicate
     forms as ``filter_and``; repeated columns allowed). Zone-envelope
@@ -563,8 +512,8 @@ def filter_or(
     column admits it, and survives overall iff any disjunct's zone
     admits it; the kernel unions per-predicate match positions, so
     projection columns still materialize matched positions only."""
-    return _dispatch_filter(
-        spark, out_dir, _preds_to_spec(preds), project, count_only, mode,
+    return filter_parts(
+        spark, out_dir, _preds_to_spec(preds), project, count_only,
         combine="or",
     )
 
@@ -576,14 +525,13 @@ def filter_in(
     values: list,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column IN (...)``: dictionary paths match against the
     memoized global-code set of the target values (multi-value
     generalization of the equi-filter's carried offset); zone maps
     prune on the [min, max] envelope of the list."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("in", list(values)))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("in", list(values)))], project, count_only
     )
 
 
@@ -594,7 +542,6 @@ def filter_prefix(
     pattern,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column LIKE 'pattern%'`` (string/binary columns). The
     predicate is evaluated once per dictionary ENTRY (Arrow
@@ -602,8 +549,8 @@ def filter_prefix(
     zone maps prune blocks outside [pattern, next_prefix(pattern)) —
     prefix-truncated bounds stay safe because a truncated min is ≤ the
     true min."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("prefix", pattern))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("prefix", pattern))], project, count_only
     )
 
 
@@ -614,15 +561,14 @@ def filter_contains(
     pattern,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column LIKE '%pattern%'`` — substring search. Dictionary
     paths run Arrow ``match_substring`` once per DISTINCT value (the
     dict-encoding payoff: O(dict) string work, O(rows) code gather);
     plain/fsst blocks materialize and run the same kernel. No zone
     pruning is possible (a substring says nothing about value order)."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("contains", pattern))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("contains", pattern))], project, count_only
     )
 
 
@@ -644,9 +590,7 @@ def filter_agg(
     exact ints); double/float columns use the fixed-point contract at
     ``agg_scale`` (partread.quantized_agg_lane) with single IEEE
     divisions at output — cross-engine bit-identical either way."""
-    from arcade_spark.partread import filter_parts
-
-    avt = dict(table_columns(spark, out_dir)).get(agg_col)
+    avt = dict(load_manifest(out_dir)[0]).get(agg_col)
     partial = filter_parts(
         spark, out_dir, _preds_to_spec(preds), agg_col=agg_col,
         agg_scale=agg_scale,
@@ -697,7 +641,6 @@ def filter_sample(
     denominator: int,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Deterministic hash sampling pushed into the encoded scan: keep
     rows where ``md5_60bit(column) % denominator < numerator`` (e.g.
@@ -708,9 +651,9 @@ def filter_sample(
     sampling, on an entity key (host, source) for leakage-free
     group-level splits. Composable in AND/OR/DNF (e.g. sample ∧ lang
     filter) and negatable (``not_sample`` = the exact complement)."""
-    return _dispatch_filter(
+    return filter_parts(
         spark, out_dir, [(column, ("sample", numerator, denominator))],
-        project, count_only, mode,
+        project, count_only,
     )
 
 
@@ -721,7 +664,6 @@ def filter_like(
     pattern,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Full SQL ``WHERE column LIKE pattern`` (``%`` and ``_``
     wildcards, no escape character): the pattern translates to one
@@ -729,8 +671,8 @@ def filter_like(
     through bit-packed codes, and zone maps prune on the literal prefix
     before the first wildcard. ``filter_prefix`` / ``filter_contains``
     / ``filter_suffix`` are the specialized fast forms."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("like", pattern))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("like", pattern))], project, count_only
     )
 
 
@@ -741,12 +683,11 @@ def filter_suffix(
     pattern,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column LIKE '%pattern'`` (Arrow ``ends_with`` over
     dictionary entries; no zone pruning)."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("suffix", pattern))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("suffix", pattern))], project, count_only
     )
 
 
@@ -785,7 +726,7 @@ def _int_literal(v) -> int:
 
 
 class _Pred:
-    """Compiled per-column predicate: zone expression, kernel matcher,
+    """Compiled per-column predicate: zone bounds, kernel matcher,
     replay-state factory."""
 
     def __init__(self, column: str, vtype: str, pred: tuple):
@@ -943,32 +884,6 @@ class _Pred:
             return [int(t) for t in self.targets]
         return []
 
-    def zone_keep_expr(self):
-        if self.negated:
-            raise NotImplementedError(
-                "negated predicates are files-mode only (plan mode is "
-                "a debug/cross-check path, README round-4)"
-            )
-        if self.kind in ("contains", "suffix", "sample"):
-            # any value can match regardless of its zone bounds
-            return F.lit(True)
-        if self.is_str and self.lob is None:
-            # LIKE starting with a wildcard: no literal prefix to prune on
-            return F.lit(True)
-        if self.is_str:
-            lo_lit = F.lit(bytearray(self.lob))
-            max_prune = F.col("max_exact") & (lo_lit > F.col("max_bin"))
-            if self.hib is None:  # all-0xFF prefix: unbounded above
-                prune = max_prune
-            else:
-                hi_lit = F.lit(bytearray(self.hib))
-                prune = (hi_lit < F.col("min_bin")) | max_prune
-        else:
-            prune = (F.lit(self.zone_hi) < F.col("min_int")) | (
-                F.lit(self.zone_lo) > F.col("max_int")
-            )
-        return ~F.coalesce(prune, F.lit(False))
-
     def new_state(self):
         if self.kind == "eq":
             return _StrFilterState(self.lob)
@@ -1004,222 +919,12 @@ class _Pred:
         return pos
 
 
-def _filter_op(
-    spark: SparkSession,
-    out_dir: str,
-    preds_spec: list[tuple[str, tuple]],
-    project: list[str] | None = None,
-    count_only: bool = False,
-) -> DataFrame:
-    """Shared filter driver over a CONJUNCTION of per-column predicates
-    (("eq", value) / ("range", lo, hi), inclusive bounds; at most one
-    predicate per column).
-
-    The zone-map prune is computed in the DataFrame plan (`zone_keep`),
-    so Catalyst evaluates min/max against parquet row-group stats
-    before any Python runs; pruned dictionary blocks are still replayed
-    (seg column only) but never scanned or materialized — mirroring
-    process.cpp:256-273 + the previndex segment walk (process.cpp:88-123)."""
-    all_cols = dict(table_columns(spark, out_dir))
-    preds: dict[str, _Pred] = {}
-    for column, pred in preds_spec:
-        if column not in all_cols:
-            raise KeyError(f"no such column: {column}")
-        if column in preds:
-            raise ValueError(f"multiple predicates on {column!r} not supported")
-        preds[column] = _Pred(column, all_cols[column], pred)
-    pred_cols = list(preds)
-
-    if count_only:
-        # count-only fast path (runner.cpp:11): no projection chunks
-        # are read at all — only the filter columns' files ship
-        project = []
-    else:
-        project = [
-            c for c in (project or [c for c in all_cols if c not in preds])
-        ]
-    sel_cols = pred_cols + [c for c in project if c not in preds]
-    vtypes = {c: all_cols[c] for c in sel_cols}
-
-    blocks = read_blocks(spark, out_dir, sel_cols)
-    zk_chain = F.lit(True)
-    for p in preds.values():
-        zk_chain = F.when(F.col("column") == p.column, p.zone_keep_expr()).otherwise(
-            zk_chain
-        )
-    blocks = blocks.withColumn("zone_keep", zk_chain)
-    is_pred_col = F.col("column").isin(pred_cols)
-    stateful = (F.col("codec") == "dict_global") | F.col("gdict_seed")
-    # per-(part,block) verdict = AND of every predicate column's zone
-    # verdict (min over booleans == AND)
-    fmeta_keep = F.lit(True)
-    for p in preds.values():
-        fmeta_keep = F.when(F.col("column") == p.column, p.zone_keep_expr()).otherwise(
-            fmeta_keep
-        )
-    if not count_only:
-        fmeta = (
-            read_blocks(spark, out_dir, pred_cols)
-            .filter(F.col("column").isin(pred_cols))
-            .select("part_id", "block_id", fmeta_keep.alias("keep"))
-            .groupBy("part_id", "block_id")
-            .agg(F.min("keep").alias("blk_keep"))
-        )
-        # true I/O skip (predicate columns): pruned chunks whose codec
-        # carries no cross-block dictionary state are DROPPED in the
-        # plan — the predicate is on raw stats columns, so parquet
-        # row-group pruning elides their blob bytes entirely. Stateful
-        # chunks (differential dict segments, local-dict seeds) are
-        # retained for replay (the previndex walk analogue,
-        # process.cpp:88-123). count_only keeps every row so the
-        # zone_skipped metric is observable (FIXTURES.md §3).
-        blocks = blocks.filter((~is_pred_col) | F.col("zone_keep") | stateful)
-        # block-level propagation to PROJECTION columns: a block pruned
-        # by ANY predicate's zone map can produce no matches, so every
-        # other chunk of it is replay-only. The per-block verdict is a
-        # tiny metadata-only scan (no blob/seg bytes read — parquet
-        # column pruning), broadcast-joined onto every chunk row. At
-        # scale this is the difference between shipping all html blobs
-        # of all blocks vs only matched blocks'.
-        blocks = blocks.join(F.broadcast(fmeta), ["part_id", "block_id"], "left")
-        blocks = blocks.withColumn("blk_keep", F.coalesce("blk_keep", F.lit(True)))
-        blocks = blocks.filter((F.col("zone_keep") & F.col("blk_keep")) | stateful)
-    else:
-        # count-only keeps every chunk row (zone_skipped metric) and
-        # needs no cross-column verdict — every predicate chunk ships
-        # anyway, so skip the fmeta scan+join entirely (single scan)
-        blocks = blocks.withColumn("blk_keep", F.col("zone_keep"))
-    # replay-only chunks ship their dict segment but never the code
-    # array: NULL out the blob in the plan so shuffle + Arrow IPC move
-    # segments only (the blob column bytes dominate at scale)
-    blocks = blocks.withColumn(
-        "blob",
-        F.when(F.col("zone_keep") & F.col("blk_keep"), F.col("blob")),
-    )
-
-    n_parts = _num_parts(spark, out_dir)
-    proj_items = [(c, vtypes[c]) for c in project]
-    pred_list = list(preds.values())
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fstates: dict[tuple[int, str], object] = {}
-        gdecs: dict[tuple[int, str], GlobalDictDecoder] = {}
-
-        def handle_block(part_id: int, block_id: int, chunks) -> pd.DataFrame | None:
-            pos = None
-            n_skipped = 0
-            for p in pred_list:
-                fchunk = chunks.get(p.column)
-                if fchunk is None:
-                    # pruned out of the plan entirely (stateless codec
-                    # outside the zone map) → zero matches
-                    pos_c = np.empty(0, dtype=np.int64)
-                    n_skipped += 1
-                else:
-                    fblob, fmeta_, fkeep = fchunk
-                    if p.is_str:
-                        st = fstates.setdefault((part_id, p.column), p.new_state())
-                        if fkeep and fblob is not None:
-                            pos_c = st.match_positions(fblob, fmeta_)
-                        else:
-                            st.replay(fmeta_)
-                            pos_c = np.empty(0, dtype=np.int64)
-                            n_skipped += 1
-                    else:
-                        if fkeep and fblob is not None:
-                            pos_c = p.int_positions(decode_int_block(fblob, fmeta_))
-                        else:
-                            pos_c = np.empty(0, dtype=np.int64)
-                            n_skipped += 1
-                if pos is None:
-                    pos = pos_c
-                elif len(pos) and len(pos_c):
-                    pos = np.intersect1d(pos, pos_c, assume_unique=True)
-                else:
-                    pos = np.empty(0, dtype=np.int64)
-            if pos is None:
-                pos = np.empty(0, dtype=np.int64)
-
-            if count_only:
-                return pd.DataFrame(
-                    {"part_id": [part_id], "block_id": [block_id],
-                     "matches": [len(pos)],
-                     "zone_skipped": [1 if n_skipped else 0]}
-                )
-
-            data = {}
-            for name, vt in proj_items:
-                chunk = chunks.get(name)
-                if chunk is None:
-                    # only the filter column can be absent (pruned,
-                    # stateless) — and then pos is empty: nothing to
-                    # materialize or replay
-                    continue
-                blob, meta, _ = chunk
-                if vt in ("str", "binary"):
-                    gdec = gdecs.setdefault((part_id, name), GlobalDictDecoder())
-                    if len(pos) == 0 or blob is None:
-                        from arcade_spark.core import replay_str_block
-
-                        replay_str_block(meta, gdec)
-                        continue
-                    from arcade_spark.core import decode_str_positions
-
-                    block = decode_str_positions(blob, meta, pos, gdec)
-                    data[name] = block_to_series(block, vt)
-                else:
-                    if len(pos) == 0:
-                        continue
-                    block = decode_int_block(blob, meta)
-                    s = block_to_series(block, vt)
-                    data[name] = s.iloc[pos].reset_index(drop=True)
-            if len(pos) == 0:
-                return None
-            return pd.DataFrame(data)
-
-        # chunks arrive sorted by (part_id, block_id, column): flush each
-        # block as soon as the key advances (a pruned-out filter chunk
-        # never arrives, so completion can't key on column count)
-        cur_key: tuple[int, int] | None = None
-        cur_chunks: dict[str, tuple] = {}
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                key = (int(row.part_id), int(row.block_id))
-                if cur_key is not None and key != cur_key:
-                    out = handle_block(cur_key[0], cur_key[1], cur_chunks)
-                    if out is not None and len(out):
-                        yield out
-                    cur_chunks = {}
-                cur_key = key
-                cur_chunks[row.column] = (
-                    row.blob,
-                    _meta_from_row(row),
-                    bool(row.zone_keep) and bool(row.blk_keep),
-                )
-        if cur_key is not None and cur_chunks:
-            out = handle_block(cur_key[0], cur_key[1], cur_chunks)
-            if out is not None and len(out):
-                yield out
-
-    if count_only:
-        schema = "part_id int, block_id int, matches long, zone_skipped int"
-    else:
-        schema = ", ".join(f"{n} {spark_type_for(v)}" for n, v in proj_items)
-
-    result = (
-        blocks.repartition(max(n_parts, 1), F.col("part_id"))
-        .sortWithinPartitions("part_id", "block_id", "column")
-        .mapInPandas(kernel, schema=schema)
-    )
-    return result
-
-
 def filter_count(
-    spark: SparkSession, out_dir: str, column: str, value, mode: str = "files"
+    spark: SparkSession, out_dir: str, column: str, value
 ) -> DataFrame:
     """Count-only fast path: one row ``cnt`` (plus blocks_skipped for
     zone-map observability — FIXTURES.md §3)."""
-    per_block = equi_filter(spark, out_dir, column, value, count_only=True, mode=mode)
+    per_block = equi_filter(spark, out_dir, column, value, count_only=True)
     return per_block.agg(
         F.sum("matches").alias("cnt"), F.sum("zone_skipped").alias("blocks_skipped")
     )
@@ -1370,9 +1075,7 @@ def column_agg(
                             mode=mode)
 
 
-def group_count(
-    spark: SparkSession, out_dir: str, column: str, mode: str = "files"
-) -> DataFrame:
+def group_count(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
     """``SELECT column, count(*) GROUP BY column`` computed on the
     ENCODED representation — no payload materialization on the
     dictionary/RLE paths (the ARCADE thesis applied to aggregation):
@@ -1389,61 +1092,11 @@ def group_count(
     count of non-null values per group, like COUNT(col)). Doubles group
     by canonicalized value (-0.0 = 0.0, NaN payloads collapsed) to
     match SQL GROUP BY equality."""
-    if mode == "files":
-        from arcade_spark.partread import group_count_partials
+    from arcade_spark.partread import group_count_partials
 
-        partial, fvt = group_count_partials(spark, out_dir, column)
-        is_str = fvt in ("str", "binary")
-        is_float = fvt in ("double", "float")
-    elif mode == "plan":
-        all_cols = dict(table_columns(spark, out_dir))
-        if column not in all_cols:
-            raise KeyError(f"no such column: {column}")
-        fvt = all_cols[column]
-        is_str = fvt in ("str", "binary")
-        is_float = fvt in ("double", "float")
-        n_parts = _num_parts(spark, out_dir)
-        blocks = read_blocks(spark, out_dir, [column]).filter(F.col("column") == column)
-
-        if not is_str:
-            key_col = "value_dbl" if is_float else "value_int"
-            key_ddl = f"{key_col} double" if is_float else f"{key_col} long"
-
-            def int_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    for row in pdf.itertuples(index=False):
-                        out = _int_chunk_counts(row.blob, _meta_from_row(row), is_float)
-                        if out is None:
-                            continue
-                        vals, cnts = out
-                        yield pd.DataFrame({key_col: vals, "cnt": cnts.astype(np.int64)})
-
-            partial = (
-                blocks.repartition(max(n_parts, 1), F.col("part_id"))
-                .mapInPandas(int_kernel, schema=f"{key_ddl}, cnt long")
-            )
-        else:
-
-            def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                gdecs: dict[int, GlobalDictDecoder] = {}
-                for pdf in batches:
-                    for row in pdf.itertuples(index=False):
-                        gdec = gdecs.setdefault(int(row.part_id), GlobalDictDecoder())
-                        out = _str_chunk_counts(gdec, row.blob, _meta_from_row(row))
-                        if out is None:
-                            continue
-                        vals, cnts = out
-                        yield pd.DataFrame(
-                            {"value_bin": list(vals), "cnt": cnts.astype(np.int64)}
-                        )
-
-            partial = (
-                blocks.repartition(max(n_parts, 1), F.col("part_id"))
-                .sortWithinPartitions("part_id", "block_id")
-                .mapInPandas(kernel, schema="value_bin binary, cnt long")
-            )
-    else:
-        raise ValueError(f"mode must be 'files' or 'plan': {mode!r}")
+    partial, fvt = group_count_partials(spark, out_dir, column)
+    is_str = fvt in ("str", "binary")
+    is_float = fvt in ("double", "float")
 
     if is_str:
         agg = partial.groupBy("value_bin").agg(F.sum("cnt").alias("cnt"))
@@ -1490,7 +1143,7 @@ def group_sum(
     partread.group_sum_partials."""
     from arcade_spark.partread import group_sum_partials
 
-    avt = dict(table_columns(spark, out_dir)).get(agg_col)
+    avt = dict(load_manifest(out_dir)[0]).get(agg_col)
     partial, gvt = group_sum_partials(
         spark, out_dir, group_col, agg_col, agg_scale=agg_scale
     )
@@ -1560,7 +1213,7 @@ def group_by(
     quantizer). See partread.group_by_partials."""
     from arcade_spark.partread import group_by_partials
 
-    agg_vt = dict(table_columns(spark, out_dir)).get(agg_col) if agg_col else None
+    agg_vt = dict(load_manifest(out_dir)[0]).get(agg_col) if agg_col else None
     partial, vts = group_by_partials(
         spark, out_dir, group_cols, agg_col, agg_scale=agg_scale
     )
@@ -1624,7 +1277,7 @@ def filter_group_by(
     See partread.filter_group_by_partials."""
     from arcade_spark.partread import filter_group_by_partials
 
-    agg_vt = dict(table_columns(spark, out_dir)).get(agg_col) if agg_col else None
+    agg_vt = dict(load_manifest(out_dir)[0]).get(agg_col) if agg_col else None
     partial, vts = filter_group_by_partials(
         spark, out_dir, _preds_to_spec(preds), group_cols, agg_col,
         agg_scale=agg_scale,
@@ -2315,7 +1968,7 @@ def column_rank_values(
     Returns DF (pos long, v <column's logical type>) — one row per
     requested rank."""
     import pyarrow as pa
-    from arcade_spark.partread import key_rowid_parts, load_manifest
+    from arcade_spark.partread import key_rowid_parts
 
     if (ranks is None) == (quantiles is None):
         raise ValueError("pass exactly one of ranks= / quantiles=")
@@ -2459,7 +2112,7 @@ def group_rank_values(
     dropped (SQL aggregate + group-by semantics). Returns DF
     (group_cols..., pos long, v <column type>)."""
     import pyarrow as pa
-    from arcade_spark.partread import key_rowid_parts, load_manifest
+    from arcade_spark.partread import key_rowid_parts
 
     if (ranks is None) == (quantiles is None):
         raise ValueError("pass exactly one of ranks= / quantiles=")
@@ -2671,7 +2324,6 @@ def orderby_export(
         _ColFile,
         _assign_df,
         key_rowid_parts,
-        load_manifest,
         materialize_rowids_parts,
     )
 
@@ -2927,8 +2579,6 @@ def table_count(spark: SparkSession, out_dir: str) -> DataFrame:
     At 10^12 rows the manifest is one row per partition; this is the
     cheapest query the format can answer (the blocksizes prefix-sum
     index, reader.cpp:113-115, read for its total)."""
-    from arcade_spark.partread import load_manifest
-
     _, parts = load_manifest(out_dir)
     return spark.createDataFrame([(int(sum(n for _, n in parts)),)], "cnt long")
 
@@ -2944,7 +2594,6 @@ def column_null_count(spark: SparkSession, out_dir: str, column: str) -> DataFra
 
 def distinct_values(
     spark: SparkSession, out_dir: str, column: str | list[str],
-    mode: str = "files",
 ) -> DataFrame:
     """``SELECT DISTINCT col[, col2, ...]`` over rows whose listed
     columns are all NON-NULL (COUNT(DISTINCT) semantics). Single column
@@ -2958,16 +2607,14 @@ def distinct_values(
             column = cols[0]
         else:
             return group_by(spark, out_dir, cols).select(*cols)
-    return group_count(spark, out_dir, column, mode).select(column)
+    return group_count(spark, out_dir, column).select(column)
 
 
-def distinct_count(
-    spark: SparkSession, out_dir: str, column: str, mode: str = "files"
-) -> DataFrame:
+def distinct_count(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
     """``SELECT count(DISTINCT column)`` (nulls excluded, SQL
     semantics) — one row."""
     return (
-        group_count(spark, out_dir, column, mode)
+        group_count(spark, out_dir, column)
         .agg(F.count("*").cast("long").alias("n_distinct"))
     )
 
@@ -2985,7 +2632,6 @@ def filter_semijoin(
     keys_df: DataFrame,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column IN (SELECT key FROM dim)`` — semi-join pushdown
     into the encoded table (the dynamic-partition-pruning pattern):
@@ -3016,13 +2662,13 @@ def filter_semijoin(
     if not keys:
         # empty key set: nothing matches; run the filter with a typed
         # dummy key and drop every row, keeping the output schema
-        vt = dict(table_columns(spark, out_dir)).get(column)
+        vt = dict(load_manifest(out_dir)[0]).get(column)
         if vt is None:
             raise KeyError(f"no such column: {column}")
         dummy = "" if vt in ("str", "binary") else 0
         empty = filter_in(
             spark, out_dir, column, [dummy],
-            project=project, count_only=count_only, mode=mode,
+            project=project, count_only=count_only,
         )
         # count_only keeps its per-block count rows so SUM(matches)
         # folds to 0, not NULL — matches forced to 0 in case the typed
@@ -3036,7 +2682,7 @@ def filter_semijoin(
         return empty.limit(0)
     return filter_in(
         spark, out_dir, column, keys, project=project,
-        count_only=count_only, mode=mode,
+        count_only=count_only,
     )
 
 
@@ -3298,9 +2944,7 @@ def _lane_vtypes(
     spark: SparkSession, out_dir: str, cols: list[str]
 ) -> list[str]:
     """Manifest vtypes for ``cols`` (in order), KeyError on a miss."""
-    from arcade_spark.decode import table_columns
-
-    all_cols = dict(table_columns(spark, out_dir))
+    all_cols = dict(load_manifest(out_dir)[0])
     out = []
     for c in cols:
         if c not in all_cols:
@@ -4164,8 +3808,6 @@ def _manifest_total_rows(out_dir: str) -> int:
     read) — the free upper bound that lets the per-key window ops skip
     the hot-key stats pass entirely when no key CAN exceed the
     threshold."""
-    from arcade_spark.partread import load_manifest
-
     _cols, parts = load_manifest(out_dir)
     return sum(n for _pid, n in parts)
 
@@ -6001,183 +5643,18 @@ def join_group_by_chain(
     return merged.select(*out_cols, *[sp["name"] for sp in cspecs_a])
 
 
-def _random_access_targets(out_dir: str, row_ids: list[int]):
-    """Global rowid → per-partition local positions via the manifest
-    prefix sums (the ``blocksizes`` index analogue, reader.cpp:113-115).
-    Driver-side metadata math only."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    manifest = pq.read_table(os.path.join(out_dir, "manifest"),
-                             columns=["part_id", "n_rows"])
-    parts = sorted(zip(manifest.column("part_id").to_pylist(),
-                       manifest.column("n_rows").to_pylist()))
-    part_ids = [p for p, _ in parts]
-    offsets = np.concatenate([[0], np.cumsum([n for _, n in parts])])
-
-    targets: dict[int, list[tuple[int, int]]] = {}
-    for rid in row_ids:
-        pi = int(np.searchsorted(offsets, rid, side="right")) - 1
-        if pi < 0 or pi >= len(part_ids) or rid >= offsets[pi + 1]:
-            raise IndexError(f"row id {rid} out of range")
-        targets.setdefault(part_ids[pi], []).append((rid - int(offsets[pi]), rid))
-    return targets
-
-
-_RA_PRECISE_MAX = 32  # total id count above which the plan predicate
-# switches from per-position OR terms to one [min,max] envelope per part
-
-
-def _random_access_blocks(
-    spark: SparkSession, out_dir: str, col_names: list[str],
-    targets: dict[int, list[tuple[int, int]]],
-) -> DataFrame:
-    """Block-range pruning for point lookups: only chunks of TOUCHED
-    blocks ship their blob; stateful chunks (differential dict segments,
-    local-dict seeds) before the last touched position of each partition
-    ship seg-only (NULL blob) for dictionary replay; everything else is
-    dropped in the plan — the predicates are on raw stats columns
-    (row_start, n_values, codec), so parquet row-group pruning elides
-    the dropped chunks' bytes. A 6-row lookup reads ~6 blocks' blobs,
-    not whole partitions."""
-    touched = sorted(targets)
-    blocks = read_blocks(spark, out_dir, col_names).filter(
-        F.col("part_id").isin(touched) if touched else F.lit(False)
-    )
-    if targets:
-        # coarse pushable bound first (simple compare → parquet
-        # row-group pruning): nothing after the globally last touched
-        # position is ever needed. The precise OR-tree below contains
-        # arithmetic (row_start + n_values) that cannot be pushed.
-        global_max = max(lp for lps in targets.values() for lp, _ in lps)
-        blocks = blocks.filter(F.col("row_start") <= F.lit(int(global_max)))
-    # the TOTAL id count decides the plan shape: a per-position OR tree
-    # blows up Catalyst analysis + whole-stage codegen once it reaches
-    # a few hundred terms (measured: a 500-term tree turned a 2 s
-    # lookup into minutes of planning). Point lookups (few ids) get the
-    # precise predicate; bulk lookups get one [min, max] envelope per
-    # part — the kernel always does the exact per-block selection, so
-    # the envelope only affects which blocks ship, never the result.
-    total_ids = sum(len({lp for lp, _ in lps}) for lps in targets.values())
-    precise = total_ids <= _RA_PRECISE_MAX
-    tgt = F.lit(False)
-    state_before = F.lit(False)
-    for p, lps in targets.items():
-        uniq_lps = sorted({lp for lp, _ in lps})
-        if precise:
-            per = None
-            for lp in uniq_lps:
-                c = (F.col("row_start") <= F.lit(int(lp))) & (
-                    F.col("row_start") + F.col("n_values") > F.lit(int(lp))
-                )
-                per = c if per is None else per | c
-        else:
-            per = (F.col("row_start") <= F.lit(int(uniq_lps[-1]))) & (
-                F.col("row_start") + F.col("n_values") > F.lit(int(uniq_lps[0]))
-            )
-        tgt = tgt | ((F.col("part_id") == p) & per)
-        last = max(lp for lp, _ in lps)
-        state_before = state_before | (
-            (F.col("part_id") == p) & (F.col("row_start") <= F.lit(int(last)))
-        )
-    stateful = (F.col("codec") == "dict_global") | F.col("gdict_seed")
-    blocks = blocks.filter(tgt | (stateful & state_before))
-    blocks = blocks.withColumn("is_target", tgt)
-    return blocks.withColumn("blob", F.when(F.col("is_target"), F.col("blob")))
-
-
 def random_access(
     spark: SparkSession,
     out_dir: str,
     row_ids: list[int],
     project: list[str] | None = None,
-    mode: str = "files",
 ) -> DataFrame:
     """Multi-row lookup by global rowid (canonical order: part_id asc,
     block order within part). Metadata math on the driver (manifest +
     chunk headers are metadata, not data), positional decode on
-    executors for only the touched BLOCKS (reader.cpp:69-143). Files
-    mode launches tasks ONLY for touched partitions and fetches exactly
-    the touched blocks' row groups."""
-    if mode == "files":
-        from arcade_spark.partread import random_access_parts
+    executors for only the touched BLOCKS (reader.cpp:69-143): tasks
+    launch ONLY for touched partitions and fetch exactly the touched
+    blocks' row groups."""
+    from arcade_spark.partread import random_access_parts
 
-        return random_access_parts(spark, out_dir, row_ids, project)
-    if mode != "plan":
-        raise ValueError(f"mode must be 'files' or 'plan': {mode!r}")
-    all_cols = table_columns(spark, out_dir)
-    if project is not None:
-        all_cols = [(n, v) for n, v in all_cols if n in project]
-
-    targets = _random_access_targets(out_dir, row_ids)
-    touched = sorted(targets)
-    blocks = _random_access_blocks(spark, out_dir, [n for n, _ in all_cols], targets)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gdecs: dict[tuple[int, str], GlobalDictDecoder] = {}
-
-        def handle(part_id: int, block_id: int, chunks) -> pd.DataFrame | None:
-            from arcade_spark.core import decode_str_positions, replay_str_block
-
-            if not chunks["__is_target"]:
-                # replay-only block: stateful str chunks only (partial
-                # column set by construction)
-                for name, vt in all_cols:
-                    ch = chunks.get(name)
-                    if ch is not None and vt in ("str", "binary"):
-                        gdec = gdecs.setdefault((part_id, name), GlobalDictDecoder())
-                        replay_str_block(ch[1], gdec)
-                return None
-            row_start = chunks["__row_start"]
-            n_vals = next(
-                ch[1]["n_values"] for k, ch in chunks.items() if not k.startswith("__")
-            )
-            local = targets.get(part_id, [])
-            pos_rid = [
-                (lp - row_start, rid)
-                for lp, rid in local
-                if row_start <= lp < row_start + n_vals
-            ]
-            pos = np.array([p for p, _ in pos_rid], dtype=np.int64)
-            data = {"row_id": pd.Series([r for _, r in pos_rid], dtype="int64")}
-            for name, vt in all_cols:
-                blob, meta = chunks[name][:2]
-                if vt in ("str", "binary"):
-                    gdec = gdecs.setdefault((part_id, name), GlobalDictDecoder())
-                    order = np.argsort(pos, kind="stable")
-                    inv = np.empty(len(order), dtype=np.int64)
-                    inv[order] = np.arange(len(order))
-                    block = decode_str_positions(blob, meta, pos[order], gdec)
-                    s = block_to_series(block, vt)
-                    data[name] = s.iloc[inv].reset_index(drop=True)
-                else:
-                    block = decode_int_block(blob, meta)
-                    data[name] = block_to_series(block, vt).iloc[pos].reset_index(drop=True)
-            return pd.DataFrame(data)
-
-        cur_key: tuple[int, int] | None = None
-        cur_chunks: dict[str, tuple] = {}
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                key = (int(row.part_id), int(row.block_id))
-                if cur_key is not None and key != cur_key:
-                    out = handle(cur_key[0], cur_key[1], cur_chunks)
-                    if out is not None and len(out):
-                        yield out
-                    cur_chunks = {}
-                cur_key = key
-                cur_chunks[row.column] = (row.blob, _meta_from_row(row))
-                cur_chunks["__row_start"] = int(row.row_start)
-                cur_chunks["__is_target"] = bool(row.is_target)
-        if cur_key is not None and cur_chunks:
-            out = handle(cur_key[0], cur_key[1], cur_chunks)
-            if out is not None and len(out):
-                yield out
-
-    schema = "row_id long, " + ", ".join(f"{n} {spark_type_for(v)}" for n, v in all_cols)
-    return (
-        blocks.repartition(max(len(touched), 1), F.col("part_id"))
-        .sortWithinPartitions("part_id", "block_id", "column")
-        .mapInPandas(kernel, schema=schema)
-    )
+    return random_access_parts(spark, out_dir, row_ids, project)

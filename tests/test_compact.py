@@ -90,6 +90,36 @@ def test_compact_group_count(spark, compacted):
     assert a == b
 
 
+def test_compact_into_rewritten_path_reads_new_types(spark, tmp_path):
+    """Deleting a table path and compacting a table with a different
+    agg column type into it, within one session, must read the new
+    manifest: a stale per-path vtype sends the double fixed-point lane
+    out as an integer (sum 7500 instead of 75.0)."""
+    import shutil
+
+    from arcade_spark.readops import group_by
+
+    n = 200
+    base = pd.DataFrame({
+        "url": [f"https://h.ex/{i}" for i in range(n)],
+        "k": np.arange(n, dtype=np.int64) % 4,
+    })
+    a, b, dest = (str(tmp_path / d) for d in ("a", "b", "p"))
+    encode_job(spark, spark.createDataFrame(base.assign(v=np.arange(n, dtype=np.int64))),
+               a, num_parts=2, block_rows=64, order_col="url")
+    encode_job(spark, spark.createDataFrame(base.assign(v=1.5)),
+               b, num_parts=2, block_rows=64, order_col="url")
+
+    def sums(path):
+        return {r["k"]: r["sum_v"] for r in group_by(spark, path, ["k"], "v").collect()}
+
+    compact_job(spark, a, dest, group_size=2)
+    assert sums(dest) == sums(a)
+    shutil.rmtree(dest)
+    compact_job(spark, b, dest, group_size=2)
+    assert sums(dest) == sums(b) == {k: 75.0 for k in range(4)}
+
+
 def test_compact_refuses_nonempty_dest(spark, compacted):
     src, dest, _pdf, _stats = compacted
     with pytest.raises(ValueError, match="not empty"):

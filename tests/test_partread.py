@@ -1,5 +1,5 @@
-"""Round-3 files-mode read path (partread.py): files-vs-plan mode
-equivalence on every operator, disjunctive (OR) filter algebra,
+"""Round-3 files-mode read path (partread.py): every operator against
+the source pandas frame, disjunctive (OR) filter algebra,
 ±0.0 float-equality semantics (ADVICE r2), null-tolerant / string
 column_minmax, and the truncated-buffer guard in bits.unpack_uints."""
 
@@ -47,44 +47,55 @@ def table(spark, tmp_path_factory):
 
 def test_modes_agree_filter(spark, table):
     out, pdf = table
-    for mk in ("files", "plan"):
-        got = equi_filter(spark, out, "lang", "de", project=["url", "x"], mode=mk)
-        want = pdf.loc[pdf["lang"] == "de"]
-        g = got.toPandas().sort_values("url").reset_index(drop=True)
-        w = want[["url", "x"]].sort_values("url").reset_index(drop=True)
-        pd.testing.assert_frame_equal(g, w)
+    got = equi_filter(spark, out, "lang", "de", project=["url", "x"])
+    want = pdf.loc[pdf["lang"] == "de"]
+    g = got.toPandas().sort_values("url").reset_index(drop=True)
+    w = want[["url", "x"]].sort_values("url").reset_index(drop=True)
+    pd.testing.assert_frame_equal(g, w)
 
 
 def test_modes_agree_count_only(spark, table):
     out, pdf = table
-    a = filter_count(spark, out, "lang", "el", mode="files").collect()[0]
-    b = filter_count(spark, out, "lang", "el", mode="plan").collect()[0]
-    assert a["cnt"] == b["cnt"] == int((pdf["lang"] == "el").sum())
+    a = filter_count(spark, out, "lang", "el").collect()[0]
+    assert a["cnt"] == int((pdf["lang"] == "el").sum())
 
 
 def test_modes_agree_random_access(spark, table):
+    """Rowids address the scan order (part_id, block_id, pos); every
+    projected column of a looked-up row equals its source row."""
+    from arcade_spark.decode import scan
+
     out, pdf = table
     ids = [0, 7, 300, 301, 1199]
-    a = random_access(spark, out, ids, mode="files").toPandas().sort_values("row_id")
-    b = random_access(spark, out, ids, mode="plan").toPandas().sort_values("row_id")
-    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
+    order = (
+        scan(spark, out, emit_meta=True)
+        .orderBy("part_id", "block_id", "pos")
+        .select("url")
+        .toPandas()["url"]
+    )
+    got = random_access(spark, out, ids).toPandas().sort_values("row_id")
+    got = got.reset_index(drop=True)
+    assert list(got["row_id"]) == ids
+    assert list(got["url"]) == [order[i] for i in ids]
+    want = pdf.set_index("url").loc[got["url"]].reset_index()
+    pd.testing.assert_frame_equal(got[list(pdf.columns)], want[list(pdf.columns)])
 
 
 def test_modes_agree_scan(spark, table):
     from arcade_spark.decode import scan
 
     out, pdf = table
-    a = scan(spark, out, mode="files").toPandas().sort_values("url").reset_index(drop=True)
-    b = scan(spark, out, mode="plan").toPandas().sort_values("url").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    assert len(a) == len(pdf)
+    a = scan(spark, out).toPandas().sort_values("url").reset_index(drop=True)
+    w = pdf.sort_values("url").reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, w)
+    # bit-identical doubles: -0.0 survives as -0.0
+    assert (a["v"].to_numpy().view(np.int64) == w["v"].to_numpy().view(np.int64)).all()
 
 
 def test_modes_agree_group_count(spark, table):
     out, pdf = table
-    a = {r["lang"]: r["cnt"] for r in group_count(spark, out, "lang", mode="files").collect()}
-    b = {r["lang"]: r["cnt"] for r in group_count(spark, out, "lang", mode="plan").collect()}
-    assert a == b == pdf.groupby("lang").size().to_dict()
+    a = {r["lang"]: r["cnt"] for r in group_count(spark, out, "lang").collect()}
+    assert a == pdf.groupby("lang").size().to_dict()
 
 
 def test_filter_or_cross_column(spark, table):
@@ -279,8 +290,8 @@ def test_predicate_column_in_projection(spark, table):
 
 def test_files_mode_on_reset_heavy_corpus(spark, tmp_path_factory):
     """Blocks alternating low/high cardinality force dict resets and
-    local-dict seeds mid-partition; files-mode filter and scan must
-    replay the same dictionary lineage as plan mode."""
+    local-dict seeds mid-partition; filter and scan must replay the
+    dictionary lineage exactly (checked against the source frame)."""
     import numpy as np
 
     from arcade_spark.decode import scan
@@ -307,14 +318,13 @@ def test_files_mode_on_reset_heavy_corpus(spark, tmp_path_factory):
               spark.read.parquet(f"{out}/blocks").filter("column='tag'")
               .select("codec").distinct().collect()}
     assert len(codecs) >= 2, codecs
-    a = scan(spark, out, mode="files").toPandas().sort_values("url").reset_index(drop=True)
-    b = scan(spark, out, mode="plan").toPandas().sort_values("url").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    for mk in ("files", "plan"):
-        got = equi_filter(spark, out, "tag", "rep3", project=["url"], mode=mk)
-        assert sorted(r["url"] for r in got.collect()) == sorted(
-            pdf.loc[pdf["tag"] == "rep3", "url"]
-        )
+    a = scan(spark, out).toPandas().sort_values("url").reset_index(drop=True)
+    w = pdf.sort_values("url").reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, w)
+    got = equi_filter(spark, out, "tag", "rep3", project=["url"])
+    assert sorted(r["url"] for r in got.collect()) == sorted(
+        pdf.loc[pdf["tag"] == "rep3", "url"]
+    )
 
 
 def test_random_access_duplicate_ids_files_mode(spark, table):
@@ -464,3 +474,32 @@ def test_crosscheck_or_trees_random(spark, table):
             "url",
         ]
         assert sorted(got["url"]) == sorted(want)
+
+
+def test_reads_reject_other_format_rev(spark, tmp_path):
+    """A manifest part written by another FORMAT_REV is refused by every
+    read operator with a re-encode hint, never decoded."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from arcade_spark.decode import scan
+    from arcade_spark.manifest import FORMAT_REV
+
+    src = spark.createDataFrame(
+        [(f"u{i:02d}", i) for i in range(40)], "url string, x long"
+    )
+    out = str(tmp_path / "enc")
+    encode_job(spark, src, out, num_parts=2, block_rows=16, order_col="url")
+    mdir = tmp_path / "enc" / "manifest"
+    mpath = str(sorted(mdir.glob("part-*.parquet"))[-1])
+    t = pq.read_table(mpath)
+    i = t.schema.get_field_index("format_rev")
+    rev = pa.array([FORMAT_REV + 1] * t.num_rows, type=t.schema.field(i).type)
+    pq.write_table(t.set_column(i, t.schema.field(i), rev), mpath)
+    for read in (
+        lambda: scan(spark, out),
+        lambda: equi_filter(spark, out, "url", "u03", project=["x"]),
+        lambda: random_access(spark, out, [0]),
+    ):
+        with pytest.raises(ValueError, match="re-encode"):
+            read().collect()

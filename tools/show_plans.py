@@ -1,14 +1,13 @@
 """Print the key physical plans (docs/PLANS.md evidence), runnable:
 
-    python tools/show_plans.py [encoded_out_dir]
+    python tools/show_plans.py
 
-Encodes a small corpus first if no out_dir is given.
+Writes a small corpus to encode-plan against.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -18,33 +17,18 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from arcade_spark.corpus import write_corpus_files
-    from arcade_spark.decode import read_blocks
     from arcade_spark.dedup import dedup_minhash_lsh
-    from arcade_spark.encode import _PART_COL, encode_files_job, with_part_id
+    from arcade_spark.encode import _PART_COL, with_part_id
     from arcade_spark.session import get_spark
 
     spark = get_spark(app="show-plans", cores=4)
-    if len(sys.argv) > 1:
-        out = sys.argv[1]
-        corpus = None
-    else:
-        corpus = write_corpus_files("/tmp/plans_corpus", 20000, 4)
-        out = "/tmp/plans_enc"
-        if not os.path.isdir(out):
-            encode_files_job(spark, corpus, out)
+    corpus = write_corpus_files("/tmp/plans_corpus", 20000, 4)
 
-    print("=== zone-map prefiltered blocks scan ===")
-    read_blocks(spark, out, ["lang"]).filter(
-        (F.lit(bytearray(b"en")) >= F.col("min_bin"))
-        & (F.lit(bytearray(b"en")) <= F.col("max_bin"))
-    ).select("part_id", "block_id", "codec").explain("formatted")
-
-    if corpus:
-        print("=== shuffle-mode encode plan (single exchange) ===")
-        src = spark.read.parquet(corpus)
-        with_part_id(src, 16).repartition(16, F.col(_PART_COL)).sortWithinPartitions(
-            _PART_COL, "url"
-        ).explain("formatted")
+    print("=== shuffle-mode encode plan (single exchange) ===")
+    src = spark.read.parquet(corpus)
+    with_part_id(src, 16).repartition(16, F.col(_PART_COL)).sortWithinPartitions(
+        _PART_COL, "url"
+    ).explain("formatted")
 
     print("=== minhash-LSH plan (broadcast joins) ===")
     dedup_minhash_lsh(spark, "/root/testdata/sf0.001").explain("formatted")
