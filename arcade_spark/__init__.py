@@ -11,6 +11,10 @@ frame-of-reference) with a greedy cost-model selector that replicates
 ARCADE's adaptive-dictionary decision logic (reference: writer.cpp:48-376).
 """
 
+from arcade_spark import zipcache
+
+zipcache.install()  # per-task zip re-reads in workers — see zipcache.py
+
 __version__ = "0.1.0"
 
 BLOCK_ROWS = 65536

@@ -52,6 +52,7 @@ from arcade_spark.manifest import (
     completed_parts,
     validated_completed_parts,
 )
+from arcade_spark.partread import range_rows_df
 from arcade_spark.schema import MANIFEST_DDL, spark_vtype
 
 _PART_COL = "__arcade_part"
@@ -436,10 +437,12 @@ def encode_files_job(
         # EXACTLY one group per Spark partition: hash repartition(n, gid)
         # scatters n keys into n partitions with collisions (balls-in-
         # bins), leaving some task slots with 2-3 groups and others
-        # empty — a silent scaling killer at low parallelism.
-        # parallelize(groups, len(groups)) slices 1:1 deterministically.
-        rdd = spark.sparkContext.parallelize(groups, len(groups))
-        adf = spark.createDataFrame(rdd, "gid int, paths string")
+        # empty — a silent scaling killer at low parallelism. Range
+        # slicing with len(groups) slices is 1:1 deterministically.
+        adf = range_rows_df(spark, [
+            ("gid", "int", [g for g, _ in groups]),
+            ("paths", "string", [p for _, p in groups]),
+        ], len(groups))
         new_rows = adf.mapInArrow(kernel, schema=MANIFEST_DDL).collect()
     wall_seconds = time.time() - t0
 

@@ -6,8 +6,9 @@ The encoded table is one parquet file per (partition, column)
 (manifest.PartWriter), so every read operator is expressed as "each
 task owns one partition's files":
 
-    driver: manifest read (tiny) → assignment list [(part_id,)]
-      → sc.parallelize(items, len(items))      [1:1, no balls-in-bins]
+    driver: manifest read (tiny) → part id list
+      → spark.range + literal part-id array    [contiguous slices, no
+                                                balls-in-bins, no Python]
       → mapInArrow(part kernel)                [pyarrow reads, numpy prune]
 
 No blob bytes cross the JVM→Python boundary (measured on this class of
@@ -43,7 +44,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arcade_spark.manifest import FORMAT_REV, blocks_path
 
@@ -127,22 +128,46 @@ def load_manifest(out_dir: str) -> tuple[list[tuple[str, str]], list[tuple[int, 
     return cols, parts
 
 
+def range_rows_df(
+    spark: SparkSession, columns: list[tuple[str, str, list]], slices: int
+) -> DataFrame:
+    """``len(values)`` literal rows as a JVM-built DataFrame: one
+    ``(name, spark type, values)`` triple per column, row i holding
+    each column's ``values[i]``. ``spark.range(0, n, 1, slices)`` gives
+    slice j the contiguous ids ``[j·n/s, (j+1)·n/s)`` and each id
+    indexes the columns' literal arrays. A ``parallelize →
+    createDataFrame`` source would add a PythonRDD runner (one more
+    Python task start) to every task of the consuming ``mapInArrow``;
+    this one runs no Python. Each column travels as ONE JSON string
+    literal that the optimizer folds into an array literal — a py4j
+    ``lit`` call per value costs ~0.3 ms on the driver (3 s at 10k
+    parts)."""
+    n = len(columns[0][2])
+    rid = F.col("id").cast("int")
+    return spark.range(0, n, 1, max(1, slices)).select(*[
+        F.from_json(F.lit(json.dumps(vals)), f"array<{typ}>")[rid].alias(name)
+        for name, typ, vals in columns
+    ])
+
+
 def _assign_df(spark: SparkSession, part_ids: list[int]) -> DataFrame:
-    """Deterministic part→task assignment via parallelize slicing (never
-    hash-repartition — balls-in-bins leaves slots empty). Slice count
-    (round-8, guide §2.2/§6 "fewer, larger tasks"): each Python task
-    costs a measurable constant (~5 ms dispatch + Arrow handshake on
-    this box — a bare 64-task python job is 0.47 s while the same
-    kernel work in-process is 0.05 s), so tasks get ≥2 parts whenever
+    """Deterministic part→task assignment (column ``part_id``) by
+    contiguous range slicing (never hash-repartition — balls-in-bins
+    leaves slots empty), built in the JVM by ``range_rows_df``. Slice
+    count (round-8, guide §2.2/§6 "fewer, larger tasks"): each Python
+    task costs a measurable constant, so tasks get ≥2 parts whenever
     that still fills the cluster; with many parts the old cap of 4×
     parallelism keeps contiguous runs per task (straggler balance),
     and with fewer parts than cores it stays 1:1. All three regimes
-    derive from defaultParallelism, never a constant."""
-    items = [(int(p),) for p in part_ids]
+    derive from defaultParallelism, never a constant. That constant
+    was ~0.3 s per task until ``zipcache`` stopped the per-task zip
+    directory re-reads (~290 ms measured inside a reused worker) and
+    this source stopped running a PythonRDD before every task; what
+    is left is the Arrow handshake and the kernel's own work."""
+    n = len(part_ids)
     par = spark.sparkContext.defaultParallelism
-    slices = max(1, min(len(items), max(par, min(len(items) // 2, 4 * par))))
-    rdd = spark.sparkContext.parallelize(items, slices)
-    return spark.createDataFrame(rdd, "part_id int")
+    slices = max(1, min(n, max(par, min(n // 2, 4 * par))))
+    return range_rows_df(spark, [("part_id", "int", [int(p) for p in part_ids])], slices)
 
 
 class _ColMeta:
@@ -1091,11 +1116,18 @@ def materialize_rowids_parts(
     rid stream (two more exchanges + a sort-merge join, plus a second
     execution of the rid-producing subtree) gets the attachment for
     the cost of one extra int64 lane. Output columns: row_id,
-    *carry, *project."""
+    *carry, *project; a carry name may not repeat, be one of the
+    shuffle lanes (row_id, part_id, split, lp, rid) or a ``project``
+    column — the output schema would hold duplicate fields."""
     from arcade_spark.schema import spark_type_for
-    from pyspark.sql import functions as F
 
     carry = list(carry or [])
+    clash = sorted(set(carry) & ({"row_id", "part_id", "split", "lp", "rid"} | set(project)))
+    if clash or len(set(carry)) != len(carry):
+        raise ValueError(
+            f"carry names {carry} repeat or collide with reserved lanes / "
+            f"projected columns {clash}"
+        )
     all_cols, parts = load_manifest(out_dir)
     missing = [c for c in project if c not in dict(all_cols)]
     if missing:
@@ -2264,8 +2296,6 @@ def column_topk_parts(
                         [pa.array(keys, type=pa.int64())], names=["v"]
                     )
 
-    from pyspark.sql import functions as F
-
     ddl = "v double" if is_float else "v long"
     partial = _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl)
     ordered = partial.orderBy(F.col("v").desc() if descending else F.col("v").asc())
@@ -2402,7 +2432,6 @@ def _column_topk_str_parts(
     """String/binary ORDER BY LIMIT k: per-partition zone-pruned
     partials (≤ k values each, see _topk_str_part) merged by one tiny
     global sort."""
-    from pyspark.sql import functions as F
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:

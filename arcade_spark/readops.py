@@ -1600,7 +1600,9 @@ def pivot_table(
     for v in pivot_values:
         for sp in cspecs:
             src = v if single else f"{v}_{sp['name']}"
-            col = merged[f"_c{mcols.index(src)}"]
+            # search past the n group-key lanes: a pivot value literally
+            # named like a lane (k0, ...) must bind its pivot cell
+            col = merged[f"_c{mcols.index(src, n)}"]
             if sp["kind"] == "count":
                 col = F.coalesce(col, F.lit(0))
             out_aggs.append(col.alias(f"{v}_{sp['name']}"))
@@ -2322,7 +2324,6 @@ def orderby_export(
     import pyarrow as pa
     from arcade_spark.partread import (
         _ColFile,
-        _assign_df,
         key_rowid_parts,
         materialize_rowids_parts,
     )

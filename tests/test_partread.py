@@ -503,3 +503,73 @@ def test_reads_reject_other_format_rev(spark, tmp_path):
     ):
         with pytest.raises(ValueError, match="re-encode"):
             read().collect()
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("size", ["1", "par-1", "par", "2par+1", "5par", "100"])
+def test_assignment_slices_match_parallelize(spark, size):
+    """Part assignment is built in the JVM (spark.range + a literal
+    part-id array), with the slice count and contiguous slices the
+    earlier parallelize → createDataFrame source had, and no PythonRDD
+    scan in the executed plan."""
+    from arcade_spark.partread import _assign_df
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    n = {"1": 1, "par-1": par - 1, "par": par, "2par+1": 2 * par + 1,
+         "5par": 5 * par, "100": 100}[size]
+    ids = [3 * i + 1 for i in range(n)]
+    slices = max(1, min(n, max(par, min(n // 2, 4 * par))))
+    got = [[r.part_id for r in s] for s in _assign_df(spark, ids).rdd.glom().collect()]
+    old = sc.parallelize([(p,) for p in ids], slices).glom().collect()
+    old = [[t[0] for t in s] for s in old]
+    assert got == [ids[j * n // slices:(j + 1) * n // slices] for j in range(slices)]
+    if n % slices == 0 or n < 2 * slices:
+        assert got == old
+    else:
+        # PySpark slices a Python list by serialized batches of
+        # n // slices items, so its last slice took the remainder
+        # (100 on 16: 15×6 + 10); range slicing spreads it evenly
+        assert len(got) == len(old) and sum(got, []) == sum(old, [])
+        assert max(map(len, got)) <= max(map(len, old))
+    plan = _executed_plan(_assign_df(spark, ids).mapInArrow(
+        lambda it: it, "part_id int"))
+    assert "Range" in plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+
+
+def test_encode_groups_assignment_is_one_per_task(spark):
+    """encode_files_job's (gid, paths) groups go through the same
+    helper with one slice per group — the 1:1 slicing parallelize
+    gave it."""
+    import json
+
+    from arcade_spark.partread import range_rows_df
+
+    groups = [(g, json.dumps([[g, f"/src/f{g}'\".parquet"]])) for g in range(7)]
+    df = range_rows_df(spark, [
+        ("gid", "int", [g for g, _ in groups]),
+        ("paths", "string", [p for _, p in groups]),
+    ], len(groups))
+    got = [[tuple(r) for r in s] for s in df.rdd.glom().collect()]
+    assert got == spark.sparkContext.parallelize(groups, len(groups)).glom().collect()
+    plan = _executed_plan(df)
+    assert "Range" in plan and "ExistingRDD" not in plan
+
+
+def test_materialize_carry_names_must_not_collide(spark, table):
+    """A carried lane named like a shuffle lane or a projected column
+    would put duplicate fields in the applyInArrow schema."""
+    from arcade_spark.partread import materialize_rowids_parts
+
+    out, _ = table
+    rids = spark.createDataFrame([(0, 5, 6)], "rid long, pos long, x long")
+    for carry in (["row_id"], ["part_id"], ["split"], ["lp"], ["rid"],
+                  ["x"], ["pos", "pos"]):
+        with pytest.raises(ValueError, match="carry"):
+            materialize_rowids_parts(spark, out, rids, ["url", "x"], carry=carry)
+    got = materialize_rowids_parts(spark, out, rids, ["url"], carry=["pos", "x"])
+    assert [tuple(r) for r in got.select("row_id", "pos", "x").collect()] == [(0, 5, 6)]

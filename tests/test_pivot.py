@@ -162,3 +162,27 @@ def test_pivot_colliding_output_names(spark, pv_table):
             [("x", "count", None), ("news_x", "sum", "qty")],
             pivot_values=["news", "news_news"],
         )
+
+
+def test_pivot_value_named_like_key_lane(spark, tmp_path):
+    """Pivot values literally named like the internal group-key lanes
+    (k0, k1) must bind their pivot cells, not the group keys."""
+    rng = np.random.default_rng(11)
+    n = 240
+    df = pd.DataFrame({
+        "url": [f"u{i:04d}" for i in range(n)],
+        "lang": np.array(["en", "de", "fr"])[rng.integers(0, 3, n)],
+        "src": np.array(["web", "news"])[rng.integers(0, 2, n)],
+        "tag": np.array(["k0", "k1", "k2"])[rng.integers(0, 3, n)],
+    })
+    out = str(tmp_path / "enc")
+    encode_job(spark, spark.createDataFrame(df), out,
+               num_parts=2, block_rows=64, order_col="url")
+    got = pivot_table(spark, out, ["lang", "src"], "tag",
+                      [("cnt", "count", None)])
+    assert list(got.columns) == ["lang", "src", "k0_cnt", "k1_cnt", "k2_cnt"]
+    exp = (df.groupby(["lang", "src", "tag"]).size().unstack("tag", fill_value=0)
+           .reset_index().sort_values(["lang", "src"]))
+    rows = _rows(got, ["lang", "src"])
+    assert rows == [tuple(r) for r in exp[["lang", "src", "k0", "k1", "k2"]]
+                    .itertuples(index=False)]
