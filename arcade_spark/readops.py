@@ -20,8 +20,6 @@ prune ``v > max_bin`` is applied only when ``max_exact``.
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Iterator
 
 import numpy as np
@@ -33,27 +31,31 @@ from arcade_spark.codecs import strcodecs as sc
 from arcade_spark.codecs.intcodecs import decode_for_int
 from arcade_spark.core import decode_int_block, decode_str_block
 from arcade_spark.postpass import unpost
-from arcade_spark.partread import filter_parts, load_manifest
+from arcade_spark.partread import filter_parts, load_manifest, map_in_task
 from arcade_spark.gdict import GlobalDictDecoder
 from arcade_spark.schema import spark_type_for
 
 
-# key-stream caches persisted by orderby_export / column_rank_values,
-# released by release_key_caches(). Each new sort/rank call releases the
-# previous entries first, so a long-lived session holds at most ONE
-# persisted key stream at a time (interleave two sorts and the earlier
-# one recomputes — correctness is unaffected, persist is a pure hint).
+# key-stream caches persisted by the sort/rank ops, the grouping-set
+# and pivot partials and the hot-key split, released by
+# release_key_caches(). Each registering call releases the previous
+# entries first, so a long-lived session holds at most ONE op's
+# persisted streams at a time (interleave two sorts and the earlier one
+# recomputes — correctness is unaffected, persist is a pure hint).
 _KEY_CACHES: list[DataFrame] = []
 
 
 def release_key_caches() -> None:
     """Unpersist every registered key-stream cache. Called automatically
-    at the start of each orderby_export / column_rank_values /
-    join_encoded call and by the query-job CLI after its action; call it
-    yourself after consuming a sort/rank/join result in a long-lived
-    session. (Round-8: one op may register more than one handle — e.g.
-    a hot-key split's input cache plus its sliced stream — so this
-    releases a short list, still bounded per query.)"""
+    at the start of each orderby_export / column_rank_values call and of
+    each hot-key split (join_asof, sessionize, rolling_agg,
+    window_shift), and by the query-job CLI after its action; call it
+    yourself after consuming a sort/rank/window result in a long-lived
+    session. join_encoded persists nothing: its match stream flows
+    through the gather-expand attach once. (One op may register more
+    than one handle — e.g. a hot-key split's input cache plus its
+    sliced stream — so this releases a short list, still bounded per
+    query.)"""
     while _KEY_CACHES:
         df = _KEY_CACHES.pop()
         try:
@@ -1937,9 +1939,7 @@ def _bucketize_stream(
         f"k{i} {'binary' if vt in ('str', 'binary') else 'long'}"
         for i, vt in enumerate(kvts)
     )
-    return keyed.mapInArrow(
-        bucketize, schema=f"bkt int, {lanes_ddl}, rid long"
-    )
+    return map_in_task(keyed, bucketize, f"bkt int, {lanes_ddl}, rid long")
 
 
 def column_rank_values(
@@ -2305,8 +2305,9 @@ def orderby_export(
        global rank offsets; each bucket sorts independently
        (Arrow sort_indices on the full lanes + rid tiebreak) and emits
        (pos, rid);
-    4. the projection LATE-MATERIALIZES at the sorted rowids via the
-       random-access kernel and joins back by rowid.
+    4. the projection LATE-MATERIALIZES at the sorted rowids in one
+       gather-expand attach (partread.attach_rowids_parts), the rank
+       riding along.
 
     Ordering contract: ascending sorts nulls LAST; ``desc=True`` is
     the exact reverse (nulls first) — state NULLS FIRST/LAST
@@ -2322,11 +2323,7 @@ def orderby_export(
     keys (bits.float_order_keys — NaN above +inf, -0.0 just before
     0.0)."""
     import pyarrow as pa
-    from arcade_spark.partread import (
-        _ColFile,
-        key_rowid_parts,
-        materialize_rowids_parts,
-    )
+    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
 
     order_cols = [order_cols] if isinstance(order_cols, str) else list(order_cols)
     if not order_cols:
@@ -2491,15 +2488,10 @@ def orderby_export(
     )
 
     # ---- 4) late-materialize the projection at the sorted rowids ----
-    # the global rank rides the materialization shuffle as a carried
-    # int64 lane (round-8, guide §2.4): attaching it by join would add
-    # two exchanges + a sort-merge join AND execute the bucket-sort
-    # subtree twice (once as the join input, once to feed the rid
-    # stream) — measured 3.3 s of the 5.1 s wall on 600k rows
-    mat = materialize_rowids_parts(
-        spark, out_dir, sorted_ids.select("rid", "pos"), list(project),
-        carry=["pos"],
-    )
+    # the global rank rides the attach shuffle with its rid: joining
+    # it back would add two exchanges + a sort-merge join AND execute
+    # the bucket-sort subtree twice
+    mat = attach_rowids_parts(spark, out_dir, sorted_ids, "rid", list(project))
     result = mat.select("pos", *project)
     if persist:
         # handle kept for callers that release eagerly (bench.py);
@@ -2727,10 +2719,11 @@ def join_encoded(
        so the join shuffle moves tens-of-byte rows;
     2. Spark shuffle-joins the two key streams (Catalyst picks
        sort-merge/hash; AQE handles skewed keys);
-    3. each side LATE-MATERIALIZES its projected columns at the
-       DISTINCT matched rowids via the random-access kernel (touched
-       blocks' blobs only, applyInArrow per partition — no driver
-       collect), and the projections join back by rowid.
+    3. the match stream flows through one gather-expand attach per
+       projected side (partread.attach_rowids_parts): each DISTINCT
+       matched rowid decodes once via the random-access kernel
+       (touched blocks' blobs only, applyInArrow per rowid range — no
+       driver collect) and expands to every match row in-kernel.
 
     Round-5 generality: ``key_a``/``key_b`` may be LISTS (composite
     keys — each component gets its own narrow lane; a key is null if
@@ -2757,7 +2750,7 @@ def join_encoded(
     so without the hint a dim⋈fact join sort-merges both streams until
     AQE notices at runtime). ``broadcast="b"`` forces the hint on B,
     ``broadcast=None`` disables (both sides huge — let AQE decide)."""
-    from arcade_spark.partread import key_rowid_parts, materialize_rowids_parts
+    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
 
     if how not in ("inner", "left", "right", "full", "semi", "anti"):
         raise ValueError(
@@ -2812,14 +2805,11 @@ def join_encoded(
     # manifest row totals are a free pre-job upper bound on each key
     # stream; B under the cap → hint BroadcastHashJoin so the fact
     # side's keys never shuffle (every B usage below is a build side)
+    rows_a, rows_b = _manifest_total_rows(out_a), _manifest_total_rows(out_b)
     bc_b = broadcast == "b" or (
-        broadcast == "auto"
-        and _manifest_total_rows(out_b) <= _BCAST_MAX_KEY_ROWS
+        broadcast == "auto" and rows_b <= _BCAST_MAX_KEY_ROWS
     )
-    bc_a = (
-        broadcast == "auto"
-        and _manifest_total_rows(out_a) <= _BCAST_MAX_KEY_ROWS
-    )
+    bc_a = broadcast == "auto" and rows_a <= _BCAST_MAX_KEY_ROWS
     _hb = F.broadcast if bc_b else (lambda df: df)
     if how in ("semi", "anti"):
         ids = ka_n.join(
@@ -2832,47 +2822,11 @@ def join_encoded(
         ]
         if not project_a:
             return ids.select(*out_cols)
-        # rid_a is already unique here (one row per left row after the
-        # deduped-probe semi/anti) — no distinct pass needed, and the
-        # key lanes can RIDE the materialization shuffle as carried
-        # int64 lanes instead of joining the match stream back to the
-        # decoded rows (round-8: saves two exchanges + a sort-merge
-        # join + a second run of the semi/anti subtree). Binary key
-        # lanes can't ride an int64 lane — they keep the join path.
-        if all(va not in ("str", "binary") for va in kvts_a):
-            mat_a = materialize_rowids_parts(
-                spark, out_a,
-                ids.select(F.col("rid_a").alias("rid"), *knames),
-                project_a, carry=knames,
-            )
-            return mat_a.select(
-                *[_group_key_out(F.col(kn), va).alias(ka_name)
-                  for kn, va, ka_name in zip(knames, kvts_a, keys_a)],
-                *[F.col(c) for c in project_a],
-            )
-        mat_a = materialize_rowids_parts(
-            spark, out_a,
-            ids.select(F.col("rid_a").alias("rid")), project_a,
-        )
-        if _bcast_mat_ok(out_a):
-            mat_a = F.broadcast(mat_a)  # see attach note below
-        joined = ids.join(mat_a, ids["rid_a"] == mat_a["row_id"], "inner")
-        return joined.select(*out_cols, *[F.col(c) for c in project_a])
+        # rid_a is unique here (one row per left row after the deduped-
+        # probe semi/anti)
+        joined = attach_rowids_parts(spark, out_a, ids, "rid_a", project_a)
+        return joined.select(*out_cols, *project_a)
     ids = ka_n.join(_hb(kb_n), knames)
-    if (project_a or project_b) and os.environ.get("ARCADE_JOIN_IDS_PERSIST", "1") != "0":
-        # the narrow (key, rid_a, rid_b) match stream is consumed up to
-        # three times below (per-side materialization rid sets + the
-        # final attach joins); without a persist each consumer replans
-        # the whole subtree — runtime exchange reuse dedupes the key
-        # kernels but re-runs the join merge per consumer (round-8,
-        # guide §5 "reused AND recomputing is more expensive"). Rows
-        # are tens of bytes; the registry keeps at most one persisted
-        # stream per session (released on the next register/release).
-        from pyspark import StorageLevel
-
-        release_key_caches()
-        ids = ids.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(ids)
     if keep_a:
         # ANTI join keeps null-key rows too (null never equi-matches)
         unmatched_a = (
@@ -2893,41 +2847,22 @@ def join_encoded(
         _group_key_out(F.col(kn), va).alias(ka_name)
         for kn, va, ka_name in zip(knames, kvts_a, keys_a)
     ]
+    # the match stream flows through one gather-expand attach per side
+    # (a rid repeats once per match; the other side's manifest row
+    # total bounds that multiplicity); a null rid is an outer side's
+    # unmatched row and keeps null projections
     joined = ids
-    # attach joins: hint BROADCAST on the materialized side when the
-    # manifest's row AND raw-byte totals bound it small (round-8, guide
-    # §3.1) — Catalyst cannot estimate a mapInArrow output, so without
-    # the hint these sort-merge and shuffle the big match stream by
-    # rowid (plans/r08/join_li_orders_before.txt: 4 SortMergeJoin)
     if project_a:
-        mat_a = materialize_rowids_parts(
-            spark, out_a,
-            ids.filter(F.col("rid_a").isNotNull())
-            .select(F.col("rid_a").alias("rid")).distinct(),
-            project_a,
+        joined = attach_rowids_parts(
+            spark, out_a, joined, "rid_a", project_a, keep_null=keep_b,
+            dup_bound=rows_b,
         )
-        if _bcast_mat_ok(out_a):
-            mat_a = F.broadcast(mat_a)
-        joined = joined.join(
-            mat_a, joined["rid_a"] == mat_a["row_id"],
-            "left" if keep_b else "inner",
-        ).drop("row_id")
-        out_cols += [F.col(c) for c in project_a]
     if project_b:
-        mat_b = materialize_rowids_parts(
-            spark, out_b,
-            ids.filter(F.col("rid_b").isNotNull())
-            .select(F.col("rid_b").alias("rid")).distinct(),
-            project_b,
+        joined = attach_rowids_parts(
+            spark, out_b, joined, "rid_b", project_b, keep_null=keep_a,
+            dup_bound=rows_a,
         )
-        if _bcast_mat_ok(out_b):
-            mat_b = F.broadcast(mat_b)
-        joined = joined.join(
-            mat_b, joined["rid_b"] == mat_b["row_id"],
-            "left" if keep_a else "inner",
-        ).drop("row_id")
-        out_cols += [F.col(c) for c in project_b]
-    return joined.select(*out_cols)
+    return joined.select(*out_cols, *project_a, *project_b)
 
 
 def _require_int64_lane(vt: str, col: str, what: str) -> None:
@@ -2992,7 +2927,7 @@ def join_asof(
        reset at key runs) resolves every match — O(n log n), no
        per-key Python loop;
     4. projections late-materialize at the matched rowids (touched
-       blocks only) and join back by rowid.
+       blocks only) in one gather-expand attach per side.
 
     ``on`` must be an int64-lane column (int/bigint/ts/date/bool) on
     both sides; ``by`` components may be int-family or str/binary
@@ -3018,7 +2953,7 @@ def join_asof(
     (matched right value, null if unmatched), project_a..., project_b...
     """
     import pyarrow as pa
-    from arcade_spark.partread import key_rowid_parts, materialize_rowids_parts
+    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
 
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left': {how!r}")
@@ -3104,7 +3039,6 @@ def join_asof(
         # and the hot-key join/explode run once, not three times
         from pyspark import StorageLevel
 
-        release_key_caches()
         sliced = sliced.persist(StorageLevel.MEMORY_AND_DISK)
         _register_key_cache(sliced)
         # CARRY rows give each slice the out-of-slice context its merge
@@ -3377,33 +3311,15 @@ def join_asof(
     out_cols.append(_group_key_out(F.col("t_b"), vts_b[m]).alias(f"{on_b}_b"))
     joined = ids
     if project_a:
-        # rid_a is one-per-left-row in the as-of output (never null) —
-        # no distinct pass needed before materialization
-        mat_a = materialize_rowids_parts(
-            spark, out_a,
-            ids.select(F.col("rid_a").alias("rid")), project_a,
-        )
-        if _bcast_mat_ok(out_a):
-            mat_a = F.broadcast(mat_a)  # see join_encoded attach note
-        joined = joined.join(
-            mat_a, joined["rid_a"] == mat_a["row_id"], "inner",
-        ).drop("row_id")
-        out_cols += [F.col(c) for c in project_a]
+        # rid_a is one-per-left-row in the as-of output (never null)
+        joined = attach_rowids_parts(spark, out_a, joined, "rid_a", project_a)
     if project_b:
-        mat_b = materialize_rowids_parts(
-            spark, out_b,
-            ids.filter(F.col("rid_b").isNotNull())
-            .select(F.col("rid_b").alias("rid")).distinct(),
-            project_b,
+        # one right row may be the match of every left row
+        joined = attach_rowids_parts(
+            spark, out_b, joined, "rid_b", project_b, keep_null=keep_a,
+            dup_bound=_manifest_total_rows(out_a),
         )
-        if _bcast_mat_ok(out_b):
-            mat_b = F.broadcast(mat_b)
-        joined = joined.join(
-            mat_b, joined["rid_b"] == mat_b["row_id"],
-            "left" if keep_a else "inner",
-        ).drop("row_id")
-        out_cols += [F.col(c) for c in project_b]
-    res = joined.select(*out_cols)
+    res = joined.select(*out_cols, *project_a, *project_b)
     if with_slices:
         res._arcade_key_cache = sliced
     return res
@@ -3476,7 +3392,7 @@ def top_per_key(
     3. rows hash-repartition on the group lanes and the SAME kernel
        finalizes global ranks per group;
     4. the projection late-materializes at the ≤ n·|keys| surviving
-       rowids (touched blocks only) and joins back by rowid.
+       rowids (touched blocks only) in one gather-expand attach.
 
     Ordering contract: every order key sorts NULLS LAST (asc and
     desc); ties beyond ``order_cols`` break by encoded-table rowid
@@ -3497,7 +3413,7 @@ def top_per_key(
     rank, so the per-partition keep is a superset of the survivors.
     Output: group columns, ``rn`` (1-based), projection columns."""
     import pyarrow as pa
-    from arcade_spark.partread import key_rowid_parts, materialize_rowids_parts
+    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
 
     group_cols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     order_cols = [order_cols] if isinstance(order_cols, str) else list(order_cols)
@@ -3619,9 +3535,7 @@ def top_per_key(
         f"{k} {'binary' if b else 'long'}"
         for k, b in zip(knames, g_bin + o_bin)
     )
-    partial = keyed.mapInArrow(
-        topn_kernel(False), schema=f"{lanes_ddl}, rid long"
-    )
+    partial = map_in_task(keyed, topn_kernel(False), f"{lanes_ddl}, rid long")
     final = partial.repartition(*[F.col(k) for k in knames[:g]]).mapInArrow(
         topn_kernel(True), schema=f"{lanes_ddl}, rn long, rid long"
     )
@@ -3630,31 +3544,12 @@ def top_per_key(
         for kn, vt, name in zip(knames[:g], kvts[:g], group_cols)
     ]
     out_cols.append(F.col("rn"))
-    result = final
-    if project:
-        # every output row has a distinct rid, so when the group lanes
-        # are int64 they (plus rn) RIDE the materialization shuffle as
-        # carried lanes instead of a join-back that would re-run the
-        # two-pass top-N subtree (round-8, guide §2.4 — same pattern
-        # as orderby_export)
-        if all(not b for b in g_bin):
-            mat = materialize_rowids_parts(
-                spark, out_dir,
-                final.select(F.col("rid"), *knames[:g], "rn"),
-                project, carry=[*knames[:g], "rn"],
-            )
-            return mat.select(
-                *[_group_key_out(F.col(kn), vt).alias(name)
-                  for kn, vt, name in zip(knames[:g], kvts[:g], group_cols)],
-                F.col("rn"),
-                *[F.col(c) for c in project],
-            )
-        mat = materialize_rowids_parts(
-            spark, out_dir, final.select(F.col("rid")), project
-        )
-        result = final.join(mat, final["rid"] == mat["row_id"], "inner")
-        out_cols += [F.col(c) for c in project]
-    return result.select(*out_cols)
+    # every output row has a distinct rid; the group lanes and rn ride
+    # the attach shuffle (the order lanes are dropped first)
+    result = attach_rowids_parts(
+        spark, out_dir, final.select(*knames[:g], "rn", "rid"), "rid", project
+    )
+    return result.select(*out_cols, *project)
 
 
 def _split_hot_keys(
@@ -3697,10 +3592,15 @@ def _split_hot_keys(
     # guide §5): the stream is consumed again right below by the
     # hot-key join/explode, so without this the kernel decode runs
     # twice (stats + slicing). Rows are tens of bytes. The handle is
-    # attached to the returned frame as ``_arcade_input_cache`` —
-    # callers unpersist it once their own downstream persist is
-    # materialized (or it falls to the next release_key_caches()).
+    # registered at once — a caller that raises before releasing it
+    # cannot leak it past the next release_key_caches() — and attached
+    # to the returned frame as ``_arcade_input_cache``, so callers
+    # unpersist it early once their own downstream persist is
+    # materialized. Registering releases the previous op's caches
+    # first: at most one op's streams stay outstanding per session.
+    release_key_caches()
     keyed_c = keyed.persist(StorageLevel.MEMORY_AND_DISK)
+    _register_key_cache(keyed_c)
     stats_df = (
         keyed_c.groupBy(*knames)
         .agg(
@@ -3811,29 +3711,6 @@ def _manifest_total_rows(out_dir: str) -> int:
     threshold."""
     _cols, parts = load_manifest(out_dir)
     return sum(n for _pid, n in parts)
-
-
-_BCAST_MAT_MAX_RAW = 128 << 20  # decoded-bytes bound for payload broadcasts
-
-
-def _bcast_mat_ok(out_dir: str) -> bool:
-    """May a MATERIALIZED projection of this table be broadcast-hinted?
-    Manifest row total bounds the row count and the manifest raw-byte
-    total bounds the DECODED size of any projection of it — both free,
-    known before any job runs (guide §3.1: size estimates through
-    mapInArrow are opaque to Catalyst, so without the hint the attach
-    join sort-merges and shuffles the big match stream by rowid)."""
-    import pyarrow.parquet as pq
-    import os as _os
-
-    try:
-        mdir = _os.path.join(out_dir, "manifest")
-        t = pq.read_table(mdir, columns=["n_rows", "raw_bytes"])
-        rows = sum(t.column("n_rows").to_pylist())
-        raw = sum(t.column("raw_bytes").to_pylist())
-    except Exception:
-        return False
-    return rows <= _BCAST_MAX_KEY_ROWS and raw <= _BCAST_MAT_MAX_RAW
 
 
 def sessionize(
@@ -4074,7 +3951,6 @@ def sessionize(
 
     from pyspark import StorageLevel
 
-    release_key_caches()
     u = sliced.repartition(
         *[F.col(k) for k in knames], F.col("slc")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -4190,7 +4066,7 @@ def join_band(
     keeps unmatched (and null-key) A rows with null B columns.
     Output: by columns (A values), ``on_a``, ``{on_b}_b``,
     project_a..., project_b... — one row per matched pair."""
-    from arcade_spark.partread import key_rowid_parts, materialize_rowids_parts
+    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
 
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left': {how!r}")
@@ -4299,31 +4175,16 @@ def join_band(
     out_cols.append(_group_key_out(F.col("s"), vts_b[m]).alias(f"{on_b}_b"))
     joined = ids
     if project_a:
-        mat_a = materialize_rowids_parts(
-            spark, out_a,
-            ids.select(F.col("rid_a").alias("rid")).distinct(), project_a,
+        joined = attach_rowids_parts(
+            spark, out_a, joined, "rid_a", project_a,
+            dup_bound=_manifest_total_rows(out_b),
         )
-        if _bcast_mat_ok(out_a):
-            mat_a = F.broadcast(mat_a)  # see join_encoded attach note
-        joined = joined.join(
-            mat_a, joined["rid_a"] == mat_a["row_id"], "inner",
-        ).drop("row_id")
-        out_cols += [F.col(c) for c in project_a]
     if project_b:
-        mat_b = materialize_rowids_parts(
-            spark, out_b,
-            ids.filter(F.col("rid_b").isNotNull())
-            .select(F.col("rid_b").alias("rid")).distinct(),
-            project_b,
+        joined = attach_rowids_parts(
+            spark, out_b, joined, "rid_b", project_b, keep_null=keep_a,
+            dup_bound=_manifest_total_rows(out_a),
         )
-        if _bcast_mat_ok(out_b):
-            mat_b = F.broadcast(mat_b)
-        joined = joined.join(
-            mat_b, joined["rid_b"] == mat_b["row_id"],
-            "left" if keep_a else "inner",
-        ).drop("row_id")
-        out_cols += [F.col(c) for c in project_b]
-    return joined.select(*out_cols)
+    return joined.select(*out_cols, *project_a, *project_b)
 
 
 def rolling_agg(
@@ -4752,7 +4613,6 @@ def rolling_agg(
 
         from pyspark import StorageLevel
 
-        release_key_caches()
         u = sliced.repartition(
             *[F.col(k) for k in knames], F.col("slc")
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -4824,14 +4684,11 @@ def rolling_agg(
         )
     else:
         if has_slices:
-            u = sliced.repartition(*[F.col(k) for k in knames], F.col("slc"))
             # the sliced stream is consumed once (lazily, by the
-            # caller's action) — hand the split's input key-stream
-            # cache to the registry so the next op (or an explicit
+            # caller's action); the split's input key-stream cache is
+            # already registered, so the next op (or an explicit
             # release_key_caches()) frees it after consumption
-            _ic = getattr(sliced, "_arcade_input_cache", None)
-            if _ic is not None:
-                _register_key_cache(_ic)
+            u = sliced.repartition(*[F.col(k) for k in knames], F.col("slc"))
         else:
             u = keyed.repartition(*[F.col(k) for k in knames])
         ids = u.mapInArrow(
@@ -5141,7 +4998,6 @@ def window_shift(
     if sliced is not None:
         from pyspark import StorageLevel
 
-        release_key_caches()
         # persist the UN-repartitioned slice stream: the edge pass and
         # the final pass each repartition it by (key, slc) themselves —
         # the final pass must shuffle the carry union anyway so the

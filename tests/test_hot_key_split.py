@@ -369,3 +369,31 @@ def test_window_shift_split_bounds_task_rows(spark, hot_table):
     )
     assert len(cells) > 1
     assert max(r["rows"] for r in cells) <= 2 * THRESH
+
+
+def test_split_input_cache_released_after_consumer_raises(
+    spark, hot_table, monkeypatch
+):
+    """The split persists its narrow input stream; a caller that raises
+    after the split, before its own release, must not leak that cache
+    past the next release_key_caches()."""
+    import arcade_spark.readops as ro
+
+    out, _con = hot_table
+    split = ro._split_hot_keys
+
+    def split_then_raise(*args, **kwargs):
+        split(*args, **kwargs)
+        raise RuntimeError("consumer failed after the split")
+
+    monkeypatch.setattr(ro, "_split_hot_keys", split_then_raise)
+    ro.release_key_caches()
+    spark.catalog.clearCache()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    assert persisted().size() == 0
+    with pytest.raises(RuntimeError, match="after the split"):
+        rolling_agg(spark, out, "uid", "t", window=5000,
+                    hot_key_threshold=THRESH)
+    assert persisted().size() > 0
+    ro.release_key_caches()
+    assert persisted().size() == 0

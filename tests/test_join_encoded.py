@@ -312,9 +312,9 @@ def test_join_composite_key_count_mismatch(spark, composite_tables):
 
 
 def test_materialize_split_key_multi_group(spark, tmp_path_factory, monkeypatch):
-    """Round-5 (VERDICT r4 latent #4): late materialization splits a
-    partition's rowids into block-range groups — forced here by
-    shrinking the cap — and the union of splits is byte-identical."""
+    """Round-5 (VERDICT r4 latent #4): late materialization splits the
+    rowids into rowid-range groups — forced here by shrinking the cap —
+    and the union of splits is byte-identical to the unsplit attach."""
     import arcade_spark.partread as pr
 
     src = spark.createDataFrame(
@@ -325,13 +325,16 @@ def test_materialize_split_key_multi_group(spark, tmp_path_factory, monkeypatch)
     encode_job(spark, src, out, num_parts=1, block_rows=128, order_col="url")
     from pyspark.sql import functions as F
 
-    monkeypatch.setattr(pr, "_MAT_SPLIT_ROWS", 500)
     rids = spark.range(0, 3000, 3).select(F.col("id").alias("rid"))
-    got = pr.materialize_rowids_parts(spark, out, rids, ["url", "tag", "n"])
+    whole = sorted(tuple(r) for r in pr.attach_rowids_parts(
+        spark, out, rids, "rid", ["url", "tag", "n"]).collect())
+    monkeypatch.setattr(pr, "_MAT_SPLIT_ROWS", 500)
+    got = pr.attach_rowids_parts(spark, out, rids, "rid", ["url", "tag", "n"])
     rows = sorted(tuple(r) for r in got.collect())
     assert len(rows) == 1000
     assert rows[0] == (0, "u00000", "t-0", 0)
     assert all(r[0] % 3 == 0 and r[3] == r[0] for r in rows)
+    assert rows == whole
 
 
 def test_join_semi(spark, two_tables):
