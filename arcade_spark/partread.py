@@ -909,6 +909,7 @@ def key_rowid_parts(
     preds_spec: list[tuple[str, tuple]] | None = None,
     keep_null_keys: bool = False,
     float_order_lane: bool = False,
+    post: tuple | None = None,
 ) -> tuple[DataFrame, list[str]]:
     """(key..., global row id) tuples for every [predicate-matched] row
     with a fully-non-null key — the probe side of the encoded-to-encoded
@@ -933,7 +934,14 @@ def key_rowid_parts(
     keys). ``keep_null_keys`` emits null-key rows too — they never
     equi-match but outer joins must preserve them.
 
-    Returns (df with columns ``k0..kn, rid``, list of key vtypes)."""
+    ``post = (fn, ddl)`` runs the batch kernel ``fn`` over the key
+    stream inside the same Python task (its output schema ``ddl``):
+    a second ``mapInArrow`` chained on the stream would need two Python
+    workers per task, and past the idle-worker cap every such task
+    kills and re-forks workers and pays their imports again.
+
+    Returns (df with columns ``k0..kn, rid`` — or ``post``'s —, list of
+    key vtypes)."""
     from arcade_spark.readops import _Pred
 
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
@@ -1091,23 +1099,12 @@ def key_rowid_parts(
     ddl = ", ".join(
         f"k{i} {'binary' if s else 'long'}" for i, s in enumerate(str_flags)
     ) + ", rid long"
-    base = _assign_df(spark, [p for p, _ in parts])
-    df = base.mapInArrow(kernel, schema=ddl)
-    df._arcade_kernel = (base, kernel)
+    run = kernel
+    if post is not None:
+        fn, ddl = post
+        run = lambda batches: fn(kernel(batches))  # noqa: E731
+    df = _assign_df(spark, [p for p, _ in parts]).mapInArrow(run, schema=ddl)
     return df, kvts
-
-
-def map_in_task(df: DataFrame, fn, schema: str) -> DataFrame:
-    """``df.mapInArrow(fn, schema)`` — run inside the Python task of the
-    kernel that produced ``df`` when ``df`` is a bare key stream from
-    ``key_rowid_parts``. Two Python execs chained in one stage need two
-    Python workers per task; past the idle-worker cap every such task
-    kills and re-forks workers and pays their imports again."""
-    src = getattr(df, "_arcade_kernel", None)
-    if src is None:
-        return df.mapInArrow(fn, schema=schema)
-    base, kernel = src
-    return base.mapInArrow(lambda batches: fn(kernel(batches)), schema=schema)
 
 
 _MAT_SPLIT_ROWS = 1 << 18  # late-materialization group cap (rowid range)
@@ -1137,17 +1134,21 @@ def attach_rowids_parts(
     Plan shape: the group key ``rid div _MAT_SPLIT_ROWS`` is computed
     in the JVM, so the only Python exec is the ``applyInArrow`` kernel
     after the shuffle — no tag kernel chained in the upstream stage
-    (see ``map_in_task``). The kernel finds each distinct rid's part
-    with a ``searchsorted`` over the manifest prefix sums and runs the
-    random-access kernel (``_ra_part_batches``: touched blocks' blobs
-    only) on every part the group's rid range touches.
+    (see ``key_rowid_parts``'s ``post``). The kernel finds each distinct
+    rid's part with a ``searchsorted`` over the manifest prefix sums and
+    runs the random-access kernel (``_ra_part_batches``: touched blocks'
+    blobs only) on every part the group's rid range touches.
 
+    Memory: the kernel takes its group as a stream of Arrow batches and
+    decodes + expands ``_MAT_SPLIT_ROWS`` stream rows at a time
+    (``_row_chunks``), so a rid range full of repeated rids never sits
+    whole in one Python worker; a group of unique rids is one chunk.
     ``dup_bound`` is an upper bound on how many stream rows share one
     rid (the other side's manifest row total for a join). Past
     ``_MAT_SPLIT_ROWS`` a deterministic salt ``pmod(xxhash64(stream
     lanes), n)`` spreads each rid range over ``n = ceil(dup_bound /
     _MAT_SPLIT_ROWS)`` groups, so one hot rid cannot serialize into
-    one unbounded task, and a retried task regroups identically."""
+    one task, and a retried task regroups identically."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
@@ -1179,8 +1180,9 @@ def attach_rowids_parts(
            for n, v in cols]
     )
     out_arrow = to_arrow_schema(out_struct)
+    cap = _MAT_SPLIT_ROWS
 
-    def gather_expand(tbl: pa.Table) -> pa.Table:
+    def expand(tbl: pa.Table) -> pa.Table:
         rid = tbl.column(rid_col)
         if rid.null_count:  # the null-rid group (keep_null)
             dec = [pa.nulls(tbl.num_rows, dec_schema.field(n).type)
@@ -1208,9 +1210,35 @@ def attach_rowids_parts(
         ]
         return pa.Table.from_arrays(arrays, schema=out_arrow)
 
+    def gather_expand(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        for tbl in _row_chunks(batches, cap):
+            yield from expand(tbl).to_batches()
+
     return stream.groupBy(*_attach_keys(stream, rid_col, dup_bound)).applyInArrow(
         gather_expand, schema=out_struct
     )
+
+
+def _row_chunks(
+    batches: Iterator[pa.RecordBatch], cap: int
+) -> Iterator[pa.Table]:
+    """Regroup a batch stream into tables of exactly ``cap`` rows (the
+    last one shorter) — zero-copy slices, in stream order."""
+    buf, n = [], 0
+    for b in batches:
+        off = 0
+        while off < b.num_rows:
+            piece = b.slice(off, cap - n)
+            off += piece.num_rows
+            buf.append(piece)
+            n += piece.num_rows
+            if n == cap:
+                yield pa.Table.from_batches(buf)
+                buf, n = [], 0
+    if buf:
+        yield pa.Table.from_batches(buf)
 
 
 def _attach_keys(stream: DataFrame, rid_col: str, dup_bound: int) -> list:

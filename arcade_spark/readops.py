@@ -31,7 +31,7 @@ from arcade_spark.codecs import strcodecs as sc
 from arcade_spark.codecs.intcodecs import decode_for_int
 from arcade_spark.core import decode_int_block, decode_str_block
 from arcade_spark.postpass import unpost
-from arcade_spark.partread import filter_parts, load_manifest, map_in_task
+from arcade_spark.partread import filter_parts, load_manifest
 from arcade_spark.gdict import GlobalDictDecoder
 from arcade_spark.schema import spark_type_for
 
@@ -1868,14 +1868,15 @@ def _pair_buckets(
     return bkt
 
 
-def _bucketize_stream(
-    keyed: DataFrame, kvts: list[str], first_str: bool,
+def _bucketizer(
+    kvts: list[str], first_str: bool,
     splits: _SplitPairs, null_bucket: int,
     second_mode: str | None = None, null1_sentinel: int | None = None,
-) -> DataFrame:
-    """Vectorized range-bucket assignment over a (k0.., rid) key
-    stream: searchsorted on the first lane (binary lanes by monotone
-    7-byte prefix), pair ties resolved on the second lane
+) -> tuple:
+    """``key_rowid_parts`` ``post`` kernel (fn, ddl): vectorized
+    range-bucket assignment over a (k0.., rid) key stream: searchsorted
+    on the first lane (binary lanes by monotone 7-byte prefix), pair
+    ties resolved on the second lane
     (``second_mode``: None | 'col' (k1) | 'rid'), first-lane nulls to
     ``null_bucket``, second-lane nulls to ``null1_sentinel`` (±inf per
     the caller's null-ordering contract)."""
@@ -1939,7 +1940,7 @@ def _bucketize_stream(
         f"k{i} {'binary' if vt in ('str', 'binary') else 'long'}"
         for i, vt in enumerate(kvts)
     )
-    return map_in_task(keyed, bucketize, f"bkt int, {lanes_ddl}, rid long")
+    return bucketize, f"bkt int, {lanes_ddl}, rid long"
 
 
 def column_rank_values(
@@ -1993,14 +1994,13 @@ def column_rank_values(
     splits = _zone_splits(
         spark, out_dir, column, is_str, parts, n_buckets, second_rid=True,
     )
-    keyed, kvts = key_rowid_parts(
+    keyed_b, _ = key_rowid_parts(
         spark, out_dir, [column],
         _preds_to_spec(preds) if preds else None,
         keep_null_keys=False,  # ranks are over non-null values
         float_order_lane=True,
-    )
-    keyed_b = _bucketize_stream(
-        keyed, kvts, is_str, splits, len(splits) + 1, second_mode="rid",
+        post=_bucketizer([vt], is_str, splits, len(splits) + 1,
+                         second_mode="rid"),
     )
     if persist:
         # counts + targeted-bucket sorts both consume the stream (see
@@ -2148,14 +2148,13 @@ def group_rank_values(
     splits = _zone_splits(
         spark, out_dir, column, is_str, parts, n_buckets, second_rid=True,
     )
-    keyed, kvts = key_rowid_parts(
+    keyed_b, kvts = key_rowid_parts(
         spark, out_dir, [column] + list(group_cols),
         _preds_to_spec(preds) if preds else None,
         keep_null_keys=False,  # null value or null group key → dropped
         float_order_lane=True,
-    )
-    keyed_b = _bucketize_stream(
-        keyed, kvts, is_str, splits, len(splits) + 1, second_mode="rid",
+        post=_bucketizer([cols[c] for c in [column, *group_cols]], is_str,
+                         splits, len(splits) + 1, second_mode="rid"),
     )
     from pyspark import StorageLevel
 
@@ -2381,16 +2380,15 @@ def orderby_export(
         second_is_str=second is not None and cols[second] in ("str", "binary"),
         second_rid=second_rid,
     )
-    keyed, kvts = key_rowid_parts(
+    null_bucket = len(splits) + 1  # one past the last range bucket
+    keyed_b, _ = key_rowid_parts(
         spark, out_dir, order_cols,
         _preds_to_spec(preds) if preds else None,
         keep_null_keys=True,
         float_order_lane=True,
-    )
-    null_bucket = len(splits) + 1  # one past the last range bucket
-    keyed_b = _bucketize_stream(
-        keyed, kvts, first_str, splits, null_bucket,
-        second_mode=second_mode, null1_sentinel=sentinel,
+        post=_bucketizer([cols[c] for c in order_cols], first_str, splits,
+                         null_bucket, second_mode=second_mode,
+                         null1_sentinel=sentinel),
     )
     if persist:
         # the counts action and the sort action both consume the key
@@ -2491,8 +2489,9 @@ def orderby_export(
     # the global rank rides the attach shuffle with its rid: joining
     # it back would add two exchanges + a sort-merge join AND execute
     # the bucket-sort subtree twice
-    mat = attach_rowids_parts(spark, out_dir, sorted_ids, "rid", list(project))
-    result = mat.select("pos", *project)
+    sorted_ids, ln = _clear_lanes(sorted_ids, project)
+    mat = attach_rowids_parts(spark, out_dir, sorted_ids, ln["rid"], list(project))
+    result = mat.select(F.col(ln["pos"]).alias("pos"), *project)
     if persist:
         # handle kept for callers that release eagerly (bench.py);
         # otherwise the NEXT sort/rank call — or release_key_caches() —
@@ -2816,15 +2815,16 @@ def join_encoded(
             _hb(kb_n.select(*knames).distinct()), knames,
             "left_semi" if how == "semi" else "left_anti",
         )
+        ids, ln = _clear_lanes(ids, project_a)
         out_cols = [
-            _group_key_out(F.col(kn), va).alias(ka_name)
+            _group_key_out(F.col(ln[kn]), va).alias(ka_name)
             for kn, va, ka_name in zip(knames, kvts_a, keys_a)
         ]
         if not project_a:
             return ids.select(*out_cols)
         # rid_a is unique here (one row per left row after the deduped-
         # probe semi/anti)
-        joined = attach_rowids_parts(spark, out_a, ids, "rid_a", project_a)
+        joined = attach_rowids_parts(spark, out_a, ids, ln["rid_a"], project_a)
         return joined.select(*out_cols, *project_a)
     ids = ka_n.join(_hb(kb_n), knames)
     if keep_a:
@@ -2843,23 +2843,23 @@ def join_encoded(
             .select(*knames, F.lit(None).cast("long").alias("rid_a"), "rid_b")
         )
         ids = ids.unionByName(unmatched_b)
+    joined, ln = _clear_lanes(ids, project_a + project_b)
     out_cols = [
-        _group_key_out(F.col(kn), va).alias(ka_name)
+        _group_key_out(F.col(ln[kn]), va).alias(ka_name)
         for kn, va, ka_name in zip(knames, kvts_a, keys_a)
     ]
     # the match stream flows through one gather-expand attach per side
     # (a rid repeats once per match; the other side's manifest row
     # total bounds that multiplicity); a null rid is an outer side's
     # unmatched row and keeps null projections
-    joined = ids
     if project_a:
         joined = attach_rowids_parts(
-            spark, out_a, joined, "rid_a", project_a, keep_null=keep_b,
+            spark, out_a, joined, ln["rid_a"], project_a, keep_null=keep_b,
             dup_bound=rows_b,
         )
     if project_b:
         joined = attach_rowids_parts(
-            spark, out_b, joined, "rid_b", project_b, keep_null=keep_a,
+            spark, out_b, joined, ln["rid_b"], project_b, keep_null=keep_a,
             dup_bound=rows_a,
         )
     return joined.select(*out_cols, *project_a, *project_b)
@@ -3303,20 +3303,24 @@ def join_asof(
     # (measured round-8: persisting ids here HURTS — the merge kernel
     # re-run that exchange reuse leaves is cheaper than forcing cache
     # materialization, unlike join_encoded's triple-consumed stream)
+    joined, ln = _clear_lanes(ids, project_a + project_b)
     out_cols = [
-        _group_key_out(F.col(kn), vt).alias(name)
+        _group_key_out(F.col(ln[kn]), vt).alias(name)
         for kn, vt, name in zip(knames, vts_a, by_cols)
     ]
-    out_cols.append(_group_key_out(F.col("t"), vts_a[m]).alias(on))
-    out_cols.append(_group_key_out(F.col("t_b"), vts_b[m]).alias(f"{on_b}_b"))
-    joined = ids
+    out_cols.append(_group_key_out(F.col(ln["t"]), vts_a[m]).alias(on))
+    out_cols.append(
+        _group_key_out(F.col(ln["t_b"]), vts_b[m]).alias(f"{on_b}_b")
+    )
     if project_a:
         # rid_a is one-per-left-row in the as-of output (never null)
-        joined = attach_rowids_parts(spark, out_a, joined, "rid_a", project_a)
+        joined = attach_rowids_parts(
+            spark, out_a, joined, ln["rid_a"], project_a
+        )
     if project_b:
         # one right row may be the match of every left row
         joined = attach_rowids_parts(
-            spark, out_b, joined, "rid_b", project_b, keep_null=keep_a,
+            spark, out_b, joined, ln["rid_b"], project_b, keep_null=keep_a,
             dup_bound=_manifest_total_rows(out_a),
         )
     res = joined.select(*out_cols, *project_a, *project_b)
@@ -3447,15 +3451,9 @@ def top_per_key(
             raise NotImplementedError(
                 f"float group columns are not a sane partition contract: {c}"
             )
-    keyed, kvts = key_rowid_parts(
-        spark, out_dir, group_cols + order_cols,
-        _preds_to_spec(preds) if preds else None,
-        keep_null_keys=True,
-        float_order_lane=True,
-    )
-    m = len(kvts)
-    g_bin = [vt in ("str", "binary") for vt in kvts[:g]]
-    o_bin = [vt in ("str", "binary") for vt in kvts[g:]]
+    m = len(vts)
+    g_bin = [vt in ("str", "binary") for vt in vts[:g]]
+    o_bin = [vt in ("str", "binary") for vt in vts[g:]]
     knames = [f"k{i}" for i in range(m)]
     top_n = n
     o_dirs = list(dirs)
@@ -3535,20 +3533,26 @@ def top_per_key(
         f"{k} {'binary' if b else 'long'}"
         for k, b in zip(knames, g_bin + o_bin)
     )
-    partial = map_in_task(keyed, topn_kernel(False), f"{lanes_ddl}, rid long")
+    # the partial top-N pass runs inside the key kernel's task
+    partial, _ = key_rowid_parts(
+        spark, out_dir, group_cols + order_cols,
+        _preds_to_spec(preds) if preds else None,
+        keep_null_keys=True,
+        float_order_lane=True,
+        post=(topn_kernel(False), f"{lanes_ddl}, rid long"),
+    )
     final = partial.repartition(*[F.col(k) for k in knames[:g]]).mapInArrow(
         topn_kernel(True), schema=f"{lanes_ddl}, rn long, rid long"
     )
-    out_cols = [
-        _group_key_out(F.col(kn), vt).alias(name)
-        for kn, vt, name in zip(knames[:g], kvts[:g], group_cols)
-    ]
-    out_cols.append(F.col("rn"))
     # every output row has a distinct rid; the group lanes and rn ride
     # the attach shuffle (the order lanes are dropped first)
-    result = attach_rowids_parts(
-        spark, out_dir, final.select(*knames[:g], "rn", "rid"), "rid", project
-    )
+    stream, ln = _clear_lanes(final.select(*knames[:g], "rn", "rid"), project)
+    out_cols = [
+        _group_key_out(F.col(ln[kn]), vt).alias(name)
+        for kn, vt, name in zip(knames[:g], vts[:g], group_cols)
+    ]
+    out_cols.append(F.col(ln["rn"]).alias("rn"))
+    result = attach_rowids_parts(spark, out_dir, stream, ln["rid"], project)
     return result.select(*out_cols, *project)
 
 
@@ -3711,6 +3715,25 @@ def _manifest_total_rows(out_dir: str) -> int:
     threshold."""
     _cols, parts = load_manifest(out_dir)
     return sum(n for _pid, n in parts)
+
+
+def _clear_lanes(stream: DataFrame, project: list[str]) -> tuple[DataFrame, dict]:
+    """Rename the internal lanes of an attach ``stream`` that share a
+    name with a ``project``ed column (a table may have a column called
+    ``rid`` or ``k0``): the attach appends the projected columns next
+    to the lanes. Returns (stream, lane → its name in the stream)."""
+    taken = set(project) | set(stream.columns)
+    names = {}
+    for c in stream.columns:
+        n = c
+        if c in project:
+            while n in taken:
+                n = "_" + n
+            taken.add(n)
+        names[c] = n
+    if all(c == n for c, n in names.items()):
+        return stream, names
+    return stream.select(*[F.col(c).alias(n) for c, n in names.items()]), names
 
 
 def sessionize(
@@ -4167,21 +4190,21 @@ def join_band(
             F.lit(None).cast("long").alias("rid_b"),
         )
         ids = pairs.unionByName(unmatched).unionByName(nulls)
+    joined, ln = _clear_lanes(ids, project_a + project_b)
     out_cols = [
-        _group_key_out(F.col(kn), vt).alias(name)
+        _group_key_out(F.col(ln[kn]), vt).alias(name)
         for kn, vt, name in zip(knames, vts_a, by_cols)
     ]
-    out_cols.append(_group_key_out(F.col("t"), vts_a[m]).alias(on_a))
-    out_cols.append(_group_key_out(F.col("s"), vts_b[m]).alias(f"{on_b}_b"))
-    joined = ids
+    out_cols.append(_group_key_out(F.col(ln["t"]), vts_a[m]).alias(on_a))
+    out_cols.append(_group_key_out(F.col(ln["s"]), vts_b[m]).alias(f"{on_b}_b"))
     if project_a:
         joined = attach_rowids_parts(
-            spark, out_a, joined, "rid_a", project_a,
+            spark, out_a, joined, ln["rid_a"], project_a,
             dup_bound=_manifest_total_rows(out_b),
         )
     if project_b:
         joined = attach_rowids_parts(
-            spark, out_b, joined, "rid_b", project_b, keep_null=keep_a,
+            spark, out_b, joined, ln["rid_b"], project_b, keep_null=keep_a,
             dup_bound=_manifest_total_rows(out_a),
         )
     return joined.select(*out_cols, *project_a, *project_b)

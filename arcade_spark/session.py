@@ -61,10 +61,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(BLOCK_ROWS))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # no per-call origin capture: PySpark otherwise wraps every
-        # Column/DataFrame call in ~10 py4j round trips to record its
-        # call site (only runtime error text loses that section)
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if os.path.isdir("/dev/shm"):
         # tmpfs shuffle spill: single-host sandbox proxy for a real

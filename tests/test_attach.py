@@ -134,3 +134,93 @@ def test_attach_passes_stream_columns_unchanged(spark, table):
     assert sorted(tuple(r)[:7] for r in rows) == sorted(
         tuple(r) for r in stream.collect())
     _check(rows, ref)
+
+
+def test_row_chunks_hold_at_most_cap_rows():
+    """The attach kernel decodes and expands a group ``cap`` stream rows
+    at a time, whatever the batch sizes the group arrives in."""
+    import pyarrow as pa
+
+    cap, sizes = 64, [10, 200, 1, 63, 64, 65, 0, 7]
+    rids = [i % 5 for i in range(sum(sizes))]  # many rows per rid
+    batches, at = [], 0
+    for n in sizes:
+        batches.append(pa.record_batch({"rid": pa.array(rids[at:at + n],
+                                                         pa.int64())}))
+        at += n
+    chunks = list(pr._row_chunks(iter(batches), cap))
+    assert [c.num_rows for c in chunks[:-1]] == [cap] * (len(chunks) - 1)
+    assert 0 < chunks[-1].num_rows <= cap
+    assert [v for c in chunks for v in c.column("rid").to_pylist()] == rids
+
+
+def test_attach_many_to_many_range_chunks(spark, table, monkeypatch):
+    """A rowid range full of repeated rowids (every rowid matched ~10
+    times, no salt) streams through the kernel in split-sized chunks:
+    same rows as the unsplit attach, all expanded correctly."""
+    out, ref = table
+    data = [(seq, rid) for seq, rid in enumerate(
+        rid for rid in range(0, 3000, 5) for _ in range(1 + rid % 19))]
+    stream = spark.createDataFrame(data, "seq long, rid long")
+    whole = sorted(tuple(r) for r in pr.attach_rowids_parts(
+        spark, out, stream, "rid", PROJECT).collect())
+    monkeypatch.setattr(pr, "_MAT_SPLIT_ROWS", 64)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "50")
+    try:
+        rows = pr.attach_rowids_parts(spark, out, stream, "rid",
+                                      PROJECT).collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert sorted(tuple(r) for r in rows) == whole
+    assert sorted((r["seq"], r["rid"]) for r in rows) == data
+    _check(rows, ref)
+
+
+@pytest.fixture(scope="module")
+def lane_named(spark, tmp_path_factory):
+    """A table whose columns carry the attach callers' internal lane
+    names (rid, k0, pos, rn)."""
+    rows = [(i % 10, (i * 37) % 200, i * 3, f"s{i}", i + 1000, i % 4)
+            for i in range(200)]
+    src = spark.createDataFrame(
+        rows, "g long, v long, rid long, k0 string, pos long, rn long")
+    out = str(tmp_path_factory.mktemp("lanes") / "enc")
+    encode_job(spark, src, out, num_parts=2, block_rows=64, order_col="g")
+    return out, rows
+
+
+def test_orderby_projects_lane_named_columns(spark, lane_named):
+    from arcade_spark.readops import orderby_export
+
+    out, rows = lane_named
+    got = orderby_export(spark, out, "v", ["rid", "k0", "pos"],
+                         persist=False).collect()
+    want = [(p, r[2], r[3], r[4])
+            for p, r in enumerate(sorted(rows, key=lambda r: r[1]))]
+    assert sorted(tuple(r) for r in got) == want
+
+
+def test_top_per_key_projects_lane_named_columns(spark, lane_named):
+    from arcade_spark.readops import top_per_key
+
+    out, rows = lane_named
+    got = top_per_key(spark, out, "g", "v", 2,
+                      project=["rid", "k0", "rn"]).collect()
+    want = []
+    for g in range(10):
+        best = sorted((r for r in rows if r[0] == g), key=lambda r: r[1])[:2]
+        want += [(g, i + 1, r[2], r[3], r[5]) for i, r in enumerate(best)]
+    assert sorted(tuple(r) for r in got) == want
+
+
+def test_join_projects_lane_named_columns(spark, lane_named):
+    from arcade_spark.readops import join_encoded
+
+    out, rows = lane_named
+    got = join_encoded(spark, out, out, "g", project_a=["rid"],
+                       project_b=["k0"]).collect()
+    want = sorted((a[0], a[2], b[3]) for a in rows for b in rows
+                  if a[0] == b[0])
+    assert sorted(tuple(r) for r in got) == want

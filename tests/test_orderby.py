@@ -294,7 +294,7 @@ def test_composite_splits_low_cardinality_first(spark, tmp_path_factory):
     mean. Data clustered by lang (order_col), the layout where zone
     splits apply."""
     from arcade_spark.partread import key_rowid_parts
-    from arcade_spark.readops import _bucketize_stream, _zone_splits
+    from arcade_spark.readops import _bucketizer, _zone_splits
     from pyspark.sql import functions as F2
 
     rng = np.random.default_rng(7)
@@ -312,17 +312,20 @@ def test_composite_splits_low_cardinality_first(spark, tmp_path_factory):
 
     from arcade_spark.partread import load_manifest
 
-    _, parts = load_manifest(out)
+    all_cols, parts = load_manifest(out)
     splits = _zone_splits(
         spark, out, "lang", True, parts, 24,
         second="url", second_is_str=True,
     )
     assert len(splits) >= 20, f"only {len(splits)} split pairs"
 
-    keyed, kvts = key_rowid_parts(spark, out, ["lang", "url"])
-    keyed_b = _bucketize_stream(
-        keyed, kvts, True, splits, len(splits) + 1,
-        second_mode="col", null1_sentinel=np.iinfo(np.int64).max,
+    kvts = [dict(all_cols)[c] for c in ("lang", "url")]
+    keyed_b, _ = key_rowid_parts(
+        spark, out, ["lang", "url"],
+        post=_bucketizer(
+            kvts, True, splits, len(splits) + 1,
+            second_mode="col", null1_sentinel=np.iinfo(np.int64).max,
+        ),
     )
     counts = [
         r["cnt"] for r in
