@@ -29,7 +29,7 @@ Subcommands:
     topn          --by k --order c -n 3 [--project a,b]
                   [--desc | --directions desc,asc]
     sessionize    --by k --ts c --gap N [--emit sessions]
-    rolling       --by k --ts c --window N [--agg-column v]
+    rolling       --by k --ts c [--window N] [--agg-column v]
                   [--aggs count,sum,avg]
 
 Output: ``df.show()`` (the reference's print sink, R9) or

@@ -1251,531 +1251,6 @@ def _attach_keys(stream: DataFrame, rid_col: str, dup_bound: int) -> list:
     return keys
 
 
-def group_count_partials(
-    spark: SparkSession, out_dir: str, column: str
-) -> tuple[DataFrame, str]:
-    """Files-mode per-block partial counts for ``group_count``: each
-    task bincounts its partition's codes (dictionary/RLE paths never
-    materialize payloads) and emits tiny (value, cnt) partials; the
-    caller merges with one O(distinct) groupBy. Returns (partials_df,
-    vtype)."""
-    all_cols, parts = load_manifest(out_dir)
-    vt = dict(all_cols).get(column)
-    if vt is None:
-        raise KeyError(f"no such column: {column}")
-    is_str = vt in ("str", "binary")
-    is_float = vt in ("double", "float")
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from arcade_spark.decode import _binary_views
-        from arcade_spark.gdict import GlobalDictDecoder
-        from arcade_spark.readops import _int_chunk_counts, _str_chunk_counts
-
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                cf = _ColFile(out_dir, int(pid), column)
-                gdec = GlobalDictDecoder()
-                for rg in range(cf.pf.metadata.num_row_groups):
-                    tbl = cf.pf.read_row_group(rg, columns=_META_COLS + ["blob", "seg"])
-                    cm = _ColMeta(tbl)
-                    b_off, b_mv = _binary_views(tbl.column("blob").combine_chunks())
-                    s_off, s_mv = _binary_views(tbl.column("seg").combine_chunks())
-                    for i in range(cm.n):
-                        meta = cm.meta_dict(i, s_mv[s_off[i]: s_off[i + 1]])
-                        blob = b_mv[b_off[i]: b_off[i + 1]]
-                        if is_str:
-                            out = _str_chunk_counts(gdec, blob, meta)
-                            if out is None:
-                                continue
-                            vals, cnts = out
-                            yield pa.RecordBatch.from_arrays(
-                                [pa.array(list(vals), type=pa.binary()),
-                                 pa.array(cnts.astype(np.int64))],
-                                names=["value_bin", "cnt"],
-                            )
-                        else:
-                            out = _int_chunk_counts(blob, meta, is_float)
-                            if out is None:
-                                continue
-                            vals, cnts = out
-                            yield pa.RecordBatch.from_arrays(
-                                [pa.array(vals), pa.array(cnts.astype(np.int64))],
-                                names=["value_dbl" if is_float else "value_int", "cnt"],
-                            )
-
-    if is_str:
-        ddl = "value_bin binary, cnt long"
-    elif is_float:
-        ddl = "value_dbl double, cnt long"
-    else:
-        ddl = "value_int long, cnt long"
-    return _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl), vt
-
-
-def group_sum_partials(
-    spark: SparkSession, out_dir: str, group_col: str, agg_col: str,
-    agg_scale: int = AGG_SCALE,
-) -> tuple[DataFrame, str]:
-    """Files-mode partials for ``GROUP BY group_col: SUM(agg_col),
-    COUNT(*)``: per chunk the GROUP column contributes its bit-packed
-    codes (no string materialization on dict/rle paths) and the agg
-    column decodes to its int64 lane; sums/counts accumulate per code
-    (np.add.at — one pass), and only the few USED codes resolve through
-    the dictionary. Partials are O(distinct per chunk); the caller's
-    merge keeps the only shuffle at O(distinct), not O(rows).
-
-    Exactness contract (same as column_agg): integer agg columns only —
-    int64 partial sums are exact in any order, so the DuckDB oracle
-    hash-matches. Null group values form no group (group_count's
-    documented contract); null agg values are excluded from the sum but
-    rows still count (SQL SUM/COUNT semantics)."""
-    all_cols, parts = load_manifest(out_dir)
-    cols = dict(all_cols)
-    gvt = cols.get(group_col)
-    avt = cols.get(agg_col)
-    if gvt is None:
-        raise KeyError(f"no such column: {group_col}")
-    if avt is None:
-        raise KeyError(f"no such column: {agg_col}")
-    if avt not in _AGG_VTS:
-        raise NotImplementedError(f"group_sum {_AGG_GUARD}")
-    g_str = gvt in ("str", "binary")
-    g_float = gvt in ("double", "float")
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from arcade_spark.core import decode_int_block
-        from arcade_spark.gdict import GlobalDictDecoder
-        from arcade_spark.readops import _str_chunk_codes
-
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                gcf = _ColFile(out_dir, int(pid), group_col)
-                acf = _ColFile(out_dir, int(pid), agg_col)
-                gcm, acm = gcf.meta(), acf.meta()
-                if gcm.n != acm.n:
-                    raise ValueError(
-                        f"part {pid}: block count mismatch "
-                        f"({group_col} {gcm.n} vs {agg_col} {acm.n})"
-                    )
-                nb = gcm.n
-                rows = np.arange(nb, dtype=np.int64)
-                gblobs = gcf.payloads(rows, "blob")
-                ablobs = acf.payloads(rows, "blob")
-                gsegs = gcf.payloads(rows, "seg") if g_str else {}
-                gdec = GlobalDictDecoder()
-                for b in range(nb):
-                    gmeta = gcm.meta_dict(b, gsegs.get(b, b""))
-                    if g_str:
-                        codes, gvalid, resolve = _str_chunk_codes(
-                            gdec, gblobs[b], gmeta
-                        )
-                    else:
-                        giblock = decode_int_block(gblobs[b], gmeta)
-                        gv = giblock.values
-                        if g_float:
-                            gv = gv.copy()
-                            f = gv.view(np.float64)
-                            gv[f == 0.0] = 0  # both ±0.0
-                            gv[np.isnan(f)] = np.int64(0x7FF8000000000000)
-                        uniq, codes = np.unique(gv, return_inverse=True)
-                        gvalid = giblock.validity
-                        resolve = lambda used, u=uniq: u[used]  # noqa: E731
-                    aiblock = decode_int_block(ablobs[b], acm.meta_dict(b))
-                    avalid = aiblock.validity
-                    av = quantized_agg_lane(aiblock.values, avalid, avt, agg_scale)
-                    n = len(codes)
-                    cmask = (
-                        np.ones(n, dtype=bool) if gvalid is None else gvalid
-                    )
-                    smask = cmask if avalid is None else (cmask & avalid)
-                    if not cmask.any():
-                        continue
-                    width = int(codes[cmask].max()) + 1
-                    cnt = np.bincount(codes[cmask], minlength=width)
-                    sums = np.zeros(width, dtype=np.int64)
-                    np.add.at(sums, codes[smask], av[smask])
-                    acnt = np.bincount(codes[smask], minlength=width)
-                    used = np.nonzero(cnt)[0]
-                    vals = resolve(used)
-                    # SQL SUM over zero valid values is NULL — null-mask
-                    # chunk partials so the merge's sum skips them
-                    s_mask = acnt[used] == 0
-                    if g_str:
-                        key = pa.array(list(vals), type=pa.binary())
-                        names = ["value_bin", "s", "c"]
-                    elif g_float:
-                        key = pa.array(vals.view(np.float64), type=pa.float64())
-                        names = ["value_dbl", "s", "c"]
-                    else:
-                        key = pa.array(vals.astype(np.int64), type=pa.int64())
-                        names = ["value_int", "s", "c"]
-                    yield pa.RecordBatch.from_arrays(
-                        [key,
-                         pa.array(sums[used].astype(np.int64), mask=s_mask),
-                         pa.array(cnt[used].astype(np.int64))],
-                        names=names,
-                    )
-
-    if g_str:
-        ddl = "value_bin binary, s long, c long"
-    elif g_float:
-        ddl = "value_dbl double, s long, c long"
-    else:
-        ddl = "value_int long, s long, c long"
-    return _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl), gvt
-
-
-def group_by_partials(
-    spark: SparkSession, out_dir: str, group_cols: list[str],
-    agg_col: str | None = None, agg_scale: int = AGG_SCALE,
-) -> tuple[DataFrame, list[str]]:
-    """Files-mode partials for MULTI-COLUMN ``GROUP BY g1, g2, ...
-    [SUM(agg)], COUNT(*)``: per chunk every group column contributes a
-    per-row code array (bit-packed codes on dict/rle paths — no string
-    materialization; int lanes factorize), the composite key is the
-    code TUPLE (np.unique over the stacked code matrix), and counts /
-    integer sums accumulate per composite key. Only USED per-column
-    codes resolve through their dictionaries. Partials and the merge
-    shuffle are O(distinct tuples), never O(rows).
-
-    Returns (partials_df, vtypes) where partials_df has columns
-    k0..k{n-1} (binary for str lanes, double for canonicalized float
-    keys, long otherwise), plus ``s``/``mn``/``mx`` (int64 sum/min/max,
-    null mn/mx when a group has no valid agg values in the chunk) and
-    ``c`` (count). Null semantics: a row joins a group iff EVERY group
-    column is non-null (the group_count contract applied tuple-wise);
-    null agg values are excluded from sum/min/max."""
-    all_cols, parts = load_manifest(out_dir)
-    cols = dict(all_cols)
-    if not group_cols:
-        raise ValueError("group_cols must be non-empty")
-    if len(set(group_cols)) != len(group_cols):
-        raise ValueError("duplicate group columns")
-    vts = []
-    for g in group_cols:
-        if g not in cols:
-            raise KeyError(f"no such column: {g}")
-        vts.append(cols[g])
-    if agg_col is not None:
-        avt = cols.get(agg_col)
-        if avt is None:
-            raise KeyError(f"no such column: {agg_col}")
-        if avt not in _AGG_VTS:
-            raise NotImplementedError(f"group_by {_AGG_GUARD}")
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from arcade_spark.core import decode_int_block
-        from arcade_spark.gdict import GlobalDictDecoder
-        from arcade_spark.readops import _str_chunk_codes
-
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                cfs = {g: _ColFile(out_dir, int(pid), g) for g in group_cols}
-                cms = {g: cfs[g].meta() for g in group_cols}
-                nb = cms[group_cols[0]].n
-                if any(cms[g].n != nb for g in group_cols):
-                    raise ValueError(f"part {pid}: block count mismatch")
-                rows = np.arange(nb, dtype=np.int64)
-                blobs = {g: cfs[g].payloads(rows, "blob") for g in group_cols}
-                segs = {
-                    g: (cfs[g].payloads(rows, "seg")
-                        if cols[g] in ("str", "binary") else {})
-                    for g in group_cols
-                }
-                if agg_col is not None:
-                    acf = _ColFile(out_dir, int(pid), agg_col)
-                    acm = acf.meta()
-                    if acm.n != nb:
-                        raise ValueError(f"part {pid}: block count mismatch")
-                    ablobs = acf.payloads(rows, "blob")
-                gdecs = {g: GlobalDictDecoder() for g in group_cols}
-                for b in range(nb):
-                    key_codes, resolvers = [], []
-                    cmask = None
-                    for g, vt in zip(group_cols, vts):
-                        meta = cms[g].meta_dict(b, segs[g].get(b, b""))
-                        if vt in ("str", "binary"):
-                            codes, gvalid, resolve = _str_chunk_codes(
-                                gdecs[g], blobs[g][b], meta
-                            )
-                        else:
-                            ib = decode_int_block(blobs[g][b], meta)
-                            gv = ib.values
-                            if vt in ("double", "float"):
-                                gv = gv.copy()
-                                f = gv.view(np.float64)
-                                gv[f == 0.0] = 0
-                                gv[np.isnan(f)] = np.int64(0x7FF8000000000000)
-                            uniq, codes = np.unique(gv, return_inverse=True)
-                            gvalid = ib.validity
-                            resolve = (lambda used, u=uniq: u[used])
-                        key_codes.append(codes.astype(np.int64))
-                        resolvers.append(resolve)
-                        if gvalid is not None:
-                            cmask = gvalid if cmask is None else (cmask & gvalid)
-                    n = len(key_codes[0])
-                    if cmask is None:
-                        cmask = np.ones(n, dtype=bool)
-                    if not cmask.any():
-                        continue
-                    stack = np.stack(key_codes)  # (k, n)
-                    tuples, inv = np.unique(stack, axis=1, return_inverse=True)
-                    width = tuples.shape[1]
-                    cnt = np.bincount(inv[cmask], minlength=width)
-                    sums = np.zeros(width, dtype=np.int64)
-                    mins = np.full(width, np.iinfo(np.int64).max, dtype=np.int64)
-                    maxs = np.full(width, np.iinfo(np.int64).min, dtype=np.int64)
-                    acnt = np.zeros(width, dtype=np.int64)
-                    if agg_col is not None:
-                        aib = decode_int_block(ablobs[b], acm.meta_dict(b))
-                        qv = quantized_agg_lane(
-                            aib.values, aib.validity, avt, agg_scale
-                        )
-                        smask = (
-                            cmask if aib.validity is None
-                            else (cmask & aib.validity)
-                        )
-                        np.add.at(sums, inv[smask], qv[smask])
-                        np.minimum.at(mins, inv[smask], qv[smask])
-                        np.maximum.at(maxs, inv[smask], qv[smask])
-                        acnt = np.bincount(inv[smask], minlength=width)
-                    used = np.nonzero(cnt)[0]
-                    arrays = []
-                    for i, vt in enumerate(vts):
-                        vals = resolvers[i](tuples[i, used])
-                        if vt in ("str", "binary"):
-                            arrays.append(pa.array(list(vals), type=pa.binary()))
-                        elif vt in ("double", "float"):
-                            arrays.append(pa.array(
-                                vals.view(np.float64), type=pa.float64()))
-                        else:
-                            arrays.append(pa.array(
-                                vals.astype(np.int64), type=pa.int64()))
-                    has_agg = acnt[used] > 0
-                    arrays += [
-                        pa.array(sums[used].astype(np.int64)),
-                        pa.array(mins[used].astype(np.int64), mask=~has_agg),
-                        pa.array(maxs[used].astype(np.int64), mask=~has_agg),
-                        pa.array(cnt[used].astype(np.int64)),
-                    ]
-                    yield pa.RecordBatch.from_arrays(
-                        arrays,
-                        names=[f"k{i}" for i in range(len(group_cols))]
-                        + ["s", "mn", "mx", "c"],
-                    )
-
-    def lane(vt: str) -> str:
-        if vt in ("str", "binary"):
-            return "binary"
-        if vt in ("double", "float"):
-            return "double"
-        return "long"
-
-    ddl = ", ".join(
-        [f"k{i} {lane(vt)}" for i, vt in enumerate(vts)]
-        + ["s long", "mn long", "mx long", "c long"]
-    )
-    return _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl), vts
-
-
-def filter_group_by_partials(
-    spark: SparkSession,
-    out_dir: str,
-    preds_spec: list[tuple[str, tuple]],
-    group_cols: list[str],
-    agg_col: str | None = None,
-    agg_scale: int = AGG_SCALE,
-) -> tuple[DataFrame, list[str]]:
-    """Fused ``WHERE <conjunction> GROUP BY g1, g2 [SUM/MIN/MAX(agg)]``
-    in one pass per partition: the predicate kernel produces match
-    positions, group columns contribute codes gathered AT those
-    positions (dict/rle paths never materialize strings; unmatched
-    blocks replay segments only), the agg column decodes matched
-    positions, and per-chunk code-tuple accumulators emit O(distinct)
-    partials — the classic warehouse query shape (TPC-H Q1) without
-    materializing a single matched row. Same output contract as
-    group_by_partials."""
-    from arcade_spark.readops import _Pred
-
-    all_cols, parts = load_manifest(out_dir)
-    cols = dict(all_cols)
-    if not group_cols:
-        raise ValueError("group_cols must be non-empty")
-    if len(set(group_cols)) != len(group_cols):
-        raise ValueError("duplicate group columns")
-    vts = []
-    for g in group_cols:
-        if g not in cols:
-            raise KeyError(f"no such column: {g}")
-        vts.append(cols[g])
-    if agg_col is not None:
-        avt = cols.get(agg_col)
-        if avt is None:
-            raise KeyError(f"no such column: {agg_col}")
-        if avt not in _AGG_VTS:
-            raise NotImplementedError(f"fused group-by {_AGG_GUARD}")
-    seen: set[str] = set()
-    compiled = []
-    for column, pred in preds_spec:
-        if column not in cols:
-            raise KeyError(f"no such column: {column}")
-        if column in seen:
-            raise ValueError(
-                f"multiple predicates on {column!r} within one conjunct "
-                "not supported"
-            )
-        seen.add(column)
-        compiled.append(_Pred(column, cols[column], pred))
-    conjuncts = [compiled]
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from arcade_spark.core import decode_int_block, replay_str_block
-        from arcade_spark.gdict import GlobalDictDecoder
-        from arcade_spark.readops import _str_chunk_codes
-
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                pos_of, nb, _blk, p_cfs, p_cms = _part_match_positions(
-                    out_dir, int(pid), conjuncts
-                )
-                matched = [b for b in range(nb) if len(pos_of[b])]
-                if not matched:
-                    continue
-                last_m = matched[-1]
-                matched_mask = np.zeros(nb, dtype=bool)
-                matched_mask[matched] = True
-                midx = np.asarray(matched, dtype=np.int64)
-
-                gcf = {g: p_cfs.get(g) or _ColFile(out_dir, int(pid), g)
-                       for g in group_cols}
-                gcm = {g: (p_cms.get(g) or gcf[g].meta()) for g in group_cols}
-                for g in group_cols:
-                    if gcm[g].n != nb:
-                        raise ValueError(
-                            f"column {g!r}: block count mismatch in part {pid}"
-                        )
-                rng = np.arange(nb)
-                gblobs = {g: gcf[g].payloads(midx, "blob") for g in group_cols}
-                gsegs = {}
-                for g, vt in zip(group_cols, vts):
-                    if vt in ("str", "binary"):
-                        seg_rows = np.nonzero(
-                            (gcm[g].stateful | matched_mask) & (rng <= last_m)
-                        )[0]
-                        gsegs[g] = gcf[g].payloads(seg_rows, "seg")
-                if agg_col is not None:
-                    acf = p_cfs.get(agg_col) or _ColFile(out_dir, int(pid), agg_col)
-                    acm = p_cms.get(agg_col) or acf.meta()
-                    if acm.n != nb:
-                        raise ValueError(
-                            f"column {agg_col!r}: block count mismatch in part {pid}"
-                        )
-                    ablobs = acf.payloads(midx, "blob")
-                gdecs = {g: GlobalDictDecoder() for g in group_cols}
-
-                for b in range(last_m + 1):
-                    if not matched_mask[b]:
-                        for g, vt in zip(group_cols, vts):
-                            if vt in ("str", "binary"):
-                                replay_str_block(
-                                    gcm[g].meta_dict(b, gsegs[g].get(b, b"")),
-                                    gdecs[g],
-                                )
-                        continue
-                    pos = pos_of[b]
-                    key_codes, resolvers = [], []
-                    cmask = None
-                    for g, vt in zip(group_cols, vts):
-                        if vt in ("str", "binary"):
-                            meta = gcm[g].meta_dict(b, gsegs[g].get(b, b""))
-                            codes, gvalid, resolve = _str_chunk_codes(
-                                gdecs[g], gblobs[g][b], meta
-                            )
-                        else:
-                            ib = decode_int_block(
-                                gblobs[g][b], gcm[g].meta_dict(b)
-                            )
-                            gv = ib.values
-                            if vt in ("double", "float"):
-                                gv = gv.copy()
-                                f = gv.view(np.float64)
-                                gv[f == 0.0] = 0
-                                gv[np.isnan(f)] = np.int64(0x7FF8000000000000)
-                            uniq, codes = np.unique(gv, return_inverse=True)
-                            gvalid = ib.validity
-                            resolve = (lambda used, u=uniq: u[used])
-                        key_codes.append(codes.astype(np.int64)[pos])
-                        resolvers.append(resolve)
-                        if gvalid is not None:
-                            gv_pos = gvalid[pos]
-                            cmask = gv_pos if cmask is None else (cmask & gv_pos)
-                    n = len(pos)
-                    if cmask is None:
-                        cmask = np.ones(n, dtype=bool)
-                    if not cmask.any():
-                        continue
-                    stack = np.stack(key_codes)
-                    tuples, inv = np.unique(stack, axis=1, return_inverse=True)
-                    width = tuples.shape[1]
-                    cnt = np.bincount(inv[cmask], minlength=width)
-                    sums = np.zeros(width, dtype=np.int64)
-                    mins = np.full(width, np.iinfo(np.int64).max, dtype=np.int64)
-                    maxs = np.full(width, np.iinfo(np.int64).min, dtype=np.int64)
-                    acnt = np.zeros(width, dtype=np.int64)
-                    if agg_col is not None:
-                        aib = decode_int_block(ablobs[b], acm.meta_dict(b))
-                        # quantize MATCHED rows only: a non-finite/overflow
-                        # value in a predicate-excluded row must not raise
-                        # (same contract as _filter_part_batches)
-                        avd = (None if aib.validity is None
-                               else aib.validity[pos])
-                        av = quantized_agg_lane(
-                            aib.values[pos], avd, avt, agg_scale
-                        )
-                        smask = cmask if avd is None else (cmask & avd)
-                        np.add.at(sums, inv[smask], av[smask])
-                        np.minimum.at(mins, inv[smask], av[smask])
-                        np.maximum.at(maxs, inv[smask], av[smask])
-                        acnt = np.bincount(inv[smask], minlength=width)
-                    used = np.nonzero(cnt)[0]
-                    has_agg = acnt[used] > 0
-                    arrays = []
-                    for i, vt in enumerate(vts):
-                        vals = resolvers[i](tuples[i, used])
-                        if vt in ("str", "binary"):
-                            arrays.append(pa.array(list(vals), type=pa.binary()))
-                        elif vt in ("double", "float"):
-                            arrays.append(pa.array(
-                                vals.view(np.float64), type=pa.float64()))
-                        else:
-                            arrays.append(pa.array(
-                                vals.astype(np.int64), type=pa.int64()))
-                    arrays += [
-                        pa.array(sums[used].astype(np.int64), mask=~has_agg),
-                        pa.array(mins[used].astype(np.int64), mask=~has_agg),
-                        pa.array(maxs[used].astype(np.int64), mask=~has_agg),
-                        pa.array(cnt[used].astype(np.int64)),
-                    ]
-                    yield pa.RecordBatch.from_arrays(
-                        arrays,
-                        names=[f"k{i}" for i in range(len(group_cols))]
-                        + ["s", "mn", "mx", "c"],
-                    )
-
-    def lane(vt: str) -> str:
-        if vt in ("str", "binary"):
-            return "binary"
-        if vt in ("double", "float"):
-            return "double"
-        return "long"
-
-    ddl = ", ".join(
-        [f"k{i} {lane(vt)}" for i, vt in enumerate(vts)]
-        + ["s long", "mn long", "mx long", "c long"]
-    )
-    return _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl), vts
-
-
 def compile_agg_specs(
     specs: list[tuple], cols: dict[str, str], agg_scale: int
 ) -> list[dict]:
@@ -1849,6 +1324,90 @@ def _bin_spec(sp: dict) -> bool:
     return sp["kind"] in ("min", "max") and sp.get("vt") in ("str", "binary")
 
 
+def _densify(key: np.ndarray) -> tuple[np.ndarray, int]:
+    """``(index, count)``: ``key`` renumbered 0..count-1 in value order."""
+    uniq, inv = np.unique(key, return_inverse=True)
+    return inv.astype(np.int64, copy=False), len(uniq)
+
+
+def _dense_group_index(key_codes: list[np.ndarray]) -> tuple[np.ndarray, int]:
+    """``(inv, width)``: a group index in ``[0, width)`` per row, equal
+    for two rows iff their per-column code tuples are equal. Codes shift
+    by +1 (``keep_null_keys``' −1 becomes 0) and combine in mixed radix;
+    the running key re-densifies with a 1-D ``np.unique`` before its
+    span would reach 2^62, and a final span too sparse to bincount
+    (past ``max(4·n, 2^16)``) does the same. A mixed-radix key plus
+    ``bincount`` costs ~0.1 ms per 65k-row block where a row-wise
+    ``np.unique`` over the stacked code matrix costs 6-55 ms."""
+    n = len(key_codes[0])
+    key, span = None, 1
+    for codes in key_codes:
+        c = codes + 1
+        radix = int(c.max()) + 1
+        if key is not None and span * radix >= 1 << 62:
+            key, span = _densify(key)
+            if span * radix >= 1 << 62:  # codes sparser than 2^62 / n
+                c, radix = _densify(c)
+        key = c if key is None else key * radix + c
+        span *= radix
+    if span > max(4 * n, 1 << 16):
+        key, span = _densify(key)
+    return key, span
+
+
+def _narrow(rows, valid: np.ndarray | None):
+    """Row selector ``rows`` (a bool mask, or ``slice(None)`` for every
+    row) narrowed to the rows where ``valid`` holds (None: all)."""
+    if valid is None:
+        return rows
+    return valid if isinstance(rows, slice) else rows & valid
+
+
+def _spec_values(sp: dict, qcache: dict, smask) -> np.ndarray:
+    """Per-row int64 values of one int-lane spec: the quantized column
+    itself for a MIN/MAX over one bare column (a comparison cannot
+    wrap, so any int64 magnitude is exact), else the product of its
+    affine terms ``a + m·q``, overflow-guarded on the rows the
+    ``_narrow`` selector ``smask`` picks."""
+    terms = sp["terms"]
+    if sp["kind"] in ("min", "max") and [tuple(t[1:]) for t in terms] == [(1, 0)]:
+        return qcache[terms[0][0]][0]
+    # guarded product chain: verify the magnitude in float64 BEFORE
+    # each exact int64 multiply — an intermediate that wraps past ±2^63
+    # would pass an after-the-fact check (e.g. 2^32·2^32 ≡ 0). The 2^62
+    # bar leaves a 2× margin over int64, so the ≤2^-52-relative float
+    # estimate can't mis-classify a genuinely unsafe product.
+    val = val_f = None
+    for c, m, a in terms:
+        q = qcache[c][0]
+        mq_f = float(m) * q.astype(np.float64)
+        if (np.abs(mq_f[smask]) >= 2.0 ** 62).any():
+            # check the PRODUCT too, not just the affine result: a large
+            # |a| of opposite sign would cancel a wrapped m·q in the
+            # combined estimate
+            raise ValueError(
+                "multi-agg affine term overflows int64: |m·q| must stay < 2^62"
+            )
+        t_f = float(a) + mq_f
+        if (np.abs(t_f[smask]) >= 2.0 ** 62).any():
+            raise ValueError(
+                "multi-agg affine term overflows int64: |a + m·q| must stay < 2^62"
+            )
+        t = a + m * q
+        if val is None:
+            val, val_f = t, t_f
+            continue
+        val_f = val_f * t_f
+        if (np.abs(val_f[smask]) >= 2.0 ** 62).any():
+            raise ValueError(
+                "multi-agg term product overflows int64: the fixed-point "
+                "contract requires |Π terms| < 2^62 (lower agg_scale or "
+                "split the product)"
+            )
+        val = val * t
+    return val
+
+
 def filter_group_by_multi_partials(
     spark: SparkSession,
     out_dir: str,
@@ -1860,11 +1419,18 @@ def filter_group_by_multi_partials(
     keep_null_keys: bool = False,
 ) -> tuple[DataFrame, list[str], list[dict]]:
     """MULTI-aggregate fused ``WHERE <conj> GROUP BY g1.. `` — the
-    COMPLETE TPC-H Q1 shape: one predicate pass, one positional decode
-    per referenced agg column, N integer accumulators per group tuple.
-    Every aggregate (including Σ price·(1−disc)·(1+tax) products) runs
-    in the exact fixed-point int64 domain (compile_agg_specs), so the
-    partials merge in any order and the DuckDB oracle replays the bytes.
+    engine's one group-by kernel (group_count, group_sum, group_by and
+    the rest are aggregate specs over it) and the COMPLETE TPC-H Q1
+    shape: one predicate pass (none for an empty conjunction), one
+    positional decode per referenced agg column, N integer accumulators
+    per group. Group columns contribute per-row codes (dictionary/RLE
+    codes as stored — no string materialization; int and float lanes
+    factorize) and a row's group is the dense composite index of its
+    code tuple (``_dense_group_index``); only the USED codes resolve to
+    values, read off one member row per group. Every aggregate
+    (including Σ price·(1−disc)·(1+tax) products) runs in the exact
+    fixed-point int64 domain (compile_agg_specs), so the partials merge
+    in any order and the DuckDB oracle replays the bytes.
     Partial schema: k0..kn, then (s{i}, c{i}) per non-count spec, then
     ``c`` (matched rows). A row feeds spec i iff every referenced
     column is valid there (SQL aggregate null semantics); count counts
@@ -1934,16 +1500,15 @@ def filter_group_by_multi_partials(
                     pos_of, nb, _blk, p_cfs, p_cms = _part_match_positions(
                         out_dir, int(pid), conjuncts
                     )
+                    matched = [b for b in range(nb) if len(pos_of[b])]
                 else:
                     cf0 = _ColFile(out_dir, int(pid), group_cols[0])
                     cm0 = cf0.meta()
                     nb = cm0.n
-                    pos_of = [
-                        np.arange(int(cm0.n_values[b]), dtype=np.int64)
-                        for b in range(nb)
-                    ]
+                    # no predicate: every row, as views (no gathers)
+                    pos_of = [slice(None)] * nb
+                    matched = [b for b in range(nb) if cm0.n_values[b]]
                     p_cfs, p_cms = {group_cols[0]: cf0}, {group_cols[0]: cm0}
-                matched = [b for b in range(nb) if len(pos_of[b])]
                 if not matched:
                     continue
                 last_m = matched[-1]
@@ -2033,7 +1598,7 @@ def filter_group_by_multi_partials(
                             uniq, codes = np.unique(gv, return_inverse=True)
                             gvalid = ib.validity
                             resolve = (lambda used, u=uniq: u[used])
-                        kc = codes.astype(np.int64)[pos]
+                        kc = np.asarray(codes, dtype=np.int64)[pos]
                         if gvalid is not None:
                             gv_pos = gvalid[pos]
                             if keep_null_keys:
@@ -2049,15 +1614,14 @@ def filter_group_by_multi_partials(
                             bdecs[c], bblobs[c][b],
                             bcm[c].meta_dict(b, bsegs[c].get(b, b"")),
                         )
-                    n = len(pos)
-                    if cmask is None:
-                        cmask = np.ones(n, dtype=bool)
-                    if not cmask.any():
+                    if cmask is not None and not cmask.any():
                         continue
-                    stack = np.stack(key_codes)
-                    tuples, inv = np.unique(stack, axis=1, return_inverse=True)
-                    width = tuples.shape[1]
-                    cnt = np.bincount(inv[cmask], minlength=width)
+                    # rows that join a group; slice(None) when all do
+                    # (a view, where an all-true mask would copy)
+                    rows = slice(None) if cmask is None else cmask
+                    n = len(key_codes[0])
+                    inv, width = _dense_group_index(key_codes)
+                    cnt = np.bincount(inv[rows], minlength=width)
 
                     # decode each referenced agg column ONCE per block;
                     # quantize MATCHED rows only (a non-finite value in a
@@ -2084,16 +1648,15 @@ def filter_group_by_multi_partials(
                             # preserving), take per-group extremal rank
                             c = sp["terms"][0][0]
                             codes_c, valid_c, resolve_c = str_dec[c]
-                            sel = codes_c.astype(np.int64)[pos]
-                            vmask = (cmask if valid_c is None
-                                     else (cmask & valid_c[pos]))
-                            spec_cnts.append(
-                                np.bincount(inv[vmask], minlength=width)
+                            sel = np.asarray(codes_c, dtype=np.int64)[pos]
+                            vmask = _narrow(
+                                rows, None if valid_c is None else valid_c[pos]
                             )
-                            if vmask.any():
-                                sub = sel[vmask]
+                            gi = inv[vmask]
+                            spec_cnts.append(np.bincount(gi, minlength=width))
+                            if len(gi):
                                 uniqc, subinv = np.unique(
-                                    sub, return_inverse=True
+                                    sel[vmask], return_inverse=True
                                 )
                                 varr = np.asarray(
                                     list(resolve_c(uniqc)), dtype=object
@@ -2105,10 +1668,10 @@ def filter_group_by_multi_partials(
                                 if sp["kind"] == "min":
                                     extr = np.full(width, len(uniqc),
                                                    dtype=np.int64)
-                                    np.minimum.at(extr, inv[vmask], r)
+                                    np.minimum.at(extr, gi, r)
                                 else:
                                     extr = np.full(width, -1, dtype=np.int64)
-                                    np.maximum.at(extr, inv[vmask], r)
+                                    np.maximum.at(extr, gi, r)
                                 sv = varr[order]
                             else:
                                 extr = np.full(width, -1, dtype=np.int64)
@@ -2117,77 +1680,35 @@ def filter_group_by_multi_partials(
                             continue
                         # SQL agg null semantics: a row feeds the spec iff
                         # every referenced column is valid there
-                        smask = cmask
+                        smask = rows
                         for c, _m, _a in sp["terms"]:
-                            v = qcache[c][1]
-                            if v is not None:
-                                smask = smask & v
-                        # guarded product chain: verify the magnitude in
-                        # float64 BEFORE each exact int64 multiply — an
-                        # intermediate that wraps past ±2^63 would pass an
-                        # after-the-fact check (e.g. 2^32·2^32 ≡ 0).  The
-                        # 2^62 bar leaves a 2× margin over int64, so the
-                        # ≤2^-52-relative float estimate can't mis-classify
-                        # a genuinely unsafe product.
-                        val = None
-                        val_f = None
-                        any_live = bool(smask.any())
-                        for c, m, a in sp["terms"]:
-                            q = qcache[c][0]
-                            mq_f = float(m) * q.astype(np.float64)
-                            if any_live and (
-                                np.abs(mq_f[smask]) >= 2.0 ** 62
-                            ).any():
-                                # check the PRODUCT too, not just the
-                                # affine result: a large |a| of opposite
-                                # sign would cancel a wrapped m·q in the
-                                # combined estimate
-                                raise ValueError(
-                                    "multi-agg affine term overflows int64: "
-                                    "|m·q| must stay < 2^62"
-                                )
-                            t_f = float(a) + mq_f
-                            if any_live and (
-                                np.abs(t_f[smask]) >= 2.0 ** 62
-                            ).any():
-                                raise ValueError(
-                                    "multi-agg affine term overflows int64: "
-                                    "|a + m·q| must stay < 2^62"
-                                )
-                            t = a + m * q
-                            if val is None:
-                                val, val_f = t, t_f
-                                continue
-                            val_f = val_f * t_f
-                            if any_live and (
-                                np.abs(val_f[smask]) >= 2.0 ** 62
-                            ).any():
-                                raise ValueError(
-                                    "multi-agg term product overflows int64: "
-                                    "the fixed-point contract requires "
-                                    "|Π terms| < 2^62 (lower agg_scale or "
-                                    "split the product)"
-                                )
-                            val = val * t
+                            smask = _narrow(smask, qcache[c][1])
+                        val = _spec_values(sp, qcache, smask)[smask]
+                        gi = inv[smask]
                         kind = sp["kind"]
                         if kind == "min":
                             s_i = np.full(width, np.iinfo(np.int64).max,
                                           dtype=np.int64)
-                            np.minimum.at(s_i, inv[smask], val[smask])
+                            np.minimum.at(s_i, gi, val)
                         elif kind == "max":
                             s_i = np.full(width, np.iinfo(np.int64).min,
                                           dtype=np.int64)
-                            np.maximum.at(s_i, inv[smask], val[smask])
+                            np.maximum.at(s_i, gi, val)
                         else:
                             s_i = np.zeros(width, dtype=np.int64)
-                            np.add.at(s_i, inv[smask], val[smask])
+                            np.add.at(s_i, gi, val)
                         spec_sums.append(s_i)
-                        spec_cnts.append(np.bincount(inv[smask], minlength=width))
+                        spec_cnts.append(np.bincount(gi, minlength=width))
 
                     used = np.nonzero(cnt)[0]
+                    # every row of a group holds its code tuple: read
+                    # each used group's codes off one member row
+                    rep = np.empty(width, dtype=np.int64)
+                    rep[inv] = np.arange(n)
+                    rep = rep[used]
                     arrays = []
                     for i, vt in enumerate(vts):
-                        code_row = tuples[i, used]
+                        code_row = key_codes[i][rep]
                         nullm = code_row < 0  # keep_null_keys groups
                         if nullm.all():
                             nz = len(code_row)

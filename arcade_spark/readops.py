@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from arcade_spark.bits import unpack_sections, unpack_uints, unpack_validity
 from arcade_spark.codecs import strcodecs as sc
 from arcade_spark.codecs.intcodecs import decode_for_int
-from arcade_spark.core import decode_int_block, decode_str_block
 from arcade_spark.postpass import unpost
 from arcade_spark.partread import filter_parts, load_manifest
 from arcade_spark.gdict import GlobalDictDecoder
@@ -953,28 +952,6 @@ def column_minmax(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
     return column_minmax_parts(spark, out_dir, column)
 
 
-def _int_chunk_counts(blob, meta: dict, is_float: bool):
-    """Per-chunk (values, counts) partial for integer-family group
-    counts. Doubles group by canonicalized bit pattern: -0.0 folds into
-    +0.0 and every NaN payload collapses to the quiet-NaN pattern, so
-    grouping matches SQL value-equality semantics."""
-    iblock = decode_int_block(blob, meta)
-    v = iblock.values
-    if iblock.validity is not None:
-        v = v[iblock.validity]
-    if len(v) == 0:
-        return None
-    if is_float:
-        v = v.copy()
-        f = v.view(np.float64)
-        v[f == 0.0] = 0  # catches both ±0.0 (IEEE equality)
-        v[np.isnan(f)] = np.int64(0x7FF8000000000000)
-    vals, cnts = np.unique(v, return_counts=True)
-    if is_float:
-        vals = vals.view(np.float64)
-    return vals, cnts
-
-
 def _str_chunk_codes(gdec: GlobalDictDecoder, blob, meta: dict):
     """Per-chunk (codes, validity, resolve) for string group-by kernels:
     ``codes`` is an int64 per-row code array, ``resolve(used_codes)``
@@ -1033,20 +1010,6 @@ def _str_chunk_codes(gdec: GlobalDictDecoder, blob, meta: dict):
     return codes.astype(np.int64), validity, resolve
 
 
-def _str_chunk_counts(gdec: GlobalDictDecoder, blob, meta: dict):
-    """Per-chunk (values, counts) partial for string group counts —
-    decode-free on dict/rle paths: bincount the bit-packed codes and
-    resolve only the few used codes through the (running) dictionary."""
-    codes, validity, resolve = _str_chunk_codes(gdec, blob, meta)
-    if validity is not None:
-        codes = codes[validity]
-    if len(codes) == 0:
-        return None
-    cnt = np.bincount(codes)
-    used = np.nonzero(cnt)[0]
-    return resolve(used), cnt[used]
-
-
 def column_topk(
     spark: SparkSession, out_dir: str, column: str, k: int, descending: bool = True
 ) -> DataFrame:
@@ -1079,104 +1042,48 @@ def column_agg(
 
 def group_count(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
     """``SELECT column, count(*) GROUP BY column`` computed on the
-    ENCODED representation — no payload materialization on the
-    dictionary/RLE paths (the ARCADE thesis applied to aggregation):
+    ENCODED representation: the ``[("cnt", "count", None)]`` spec of
+    the one group-by kernel (``filter_group_by_multi``). Dictionary
+    blocks bincount their bit-packed codes and resolve only the used
+    codes through the (running) dictionary; RLE blocks expand run codes
+    (``np.repeat``) and bincount those; plain/fsst blocks — where
+    dictionaries lost the codec race — factorize the materialized
+    strings (``np.unique``), int lanes factorize their values.
 
-    - dict codecs: bincount the bit-packed codes, then resolve only the
-      few distinct codes through the (running) dictionary;
-    - rle: bincount run codes weighted by run lengths;
-    - plain/fsst: Arrow ``value_counts`` (C-speed) on the materialized
-      block — the codecs chosen for blocks where dictionaries lost.
-
-    Each task emits per-block partial aggregates (tiny), and one final
-    groupBy over (value) merges them — map-side partials keep the only
-    shuffle at O(distinct), not O(rows). Null slots are excluded (the
-    count of non-null values per group, like COUNT(col)). Doubles group
-    by canonicalized value (-0.0 = 0.0, NaN payloads collapsed) to
-    match SQL GROUP BY equality."""
-    from arcade_spark.partread import group_count_partials
-
-    partial, fvt = group_count_partials(spark, out_dir, column)
-    is_str = fvt in ("str", "binary")
-    is_float = fvt in ("double", "float")
-
-    if is_str:
-        agg = partial.groupBy("value_bin").agg(F.sum("cnt").alias("cnt"))
-        if fvt == "str":
-            # decode utf-8 for string columns so the result matches the
-            # source column type
-            return agg.select(
-                F.col("value_bin").cast("string").alias(column), F.col("cnt")
-            )
-        return agg.select(F.col("value_bin").alias(column), F.col("cnt"))
-    key_col = "value_dbl" if is_float else "value_int"
-    agg = partial.groupBy(key_col).agg(F.sum("cnt").alias("cnt"))
-    if is_float:
-        out_col = F.col(key_col).cast(spark_type_for(fvt))
-    elif fvt in ("ts", "tsntz"):
-        out_col = F.timestamp_micros(F.col(key_col))
-        if fvt == "tsntz":
-            out_col = out_col.cast("timestamp_ntz")
-    elif fvt == "date":
-        out_col = F.date_from_unix_date(F.col(key_col).cast("int"))
-    else:
-        # bool/ints: bigint lane casts directly (0/1 → boolean)
-        out_col = F.col(key_col).cast(spark_type_for(fvt))
-    return agg.select(out_col.alias(column), F.col("cnt"))
+    Each task emits per-block partial counts (tiny), and one final
+    groupBy merges them — map-side partials keep the only shuffle at
+    O(distinct), not O(rows). Null slots are excluded (the count of
+    non-null values per group, like COUNT(col)). Doubles group by
+    canonicalized value (-0.0 = 0.0, NaN payloads collapsed) to match
+    SQL GROUP BY equality."""
+    return filter_group_by_multi(
+        spark, out_dir, [], [column], [("cnt", "count", None)]
+    )
 
 
 def group_sum(
     spark: SparkSession, out_dir: str, group_col: str, agg_col: str,
     agg_scale: int = 100,
 ) -> DataFrame:
-    """``SELECT group_col, sum(agg_col), count(*) GROUP BY group_col``
-    on the ENCODED table: the group column contributes bit-packed codes
+    """``SELECT group_col, sum(agg_col) AS sum_v, count(*) AS cnt GROUP
+    BY group_col`` on the ENCODED table — the ``sum_v``/``cnt`` specs
+    of ``filter_group_by_multi``: the group column contributes its codes
     (dict/rle paths never materialize strings), the agg column decodes
-    to its int64 lane, and per-chunk code-indexed accumulators produce
-    O(distinct) partials — one O(distinct) merge shuffle, never O(rows).
+    to its int64 lane, and per-chunk accumulators produce O(distinct)
+    partials — one O(distinct) merge shuffle, never O(rows).
 
     Exactness contract (column_agg's): int64 partial sums are exact in
     any order → cross-engine hash-identical; double/float agg columns
     ride the fixed-point lane (partread.quantized_agg_lane) with one
-    IEEE division at output. Null group values form no group; null agg
-    values are excluded from the sum but their rows still count (SQL
-    semantics). Doubles as the GROUP key canonicalize like group_count
-    (-0.0 = 0.0, NaN payloads collapsed). See
-    partread.group_sum_partials."""
-    from arcade_spark.partread import group_sum_partials
-
-    avt = dict(load_manifest(out_dir)[0]).get(agg_col)
-    partial, gvt = group_sum_partials(
-        spark, out_dir, group_col, agg_col, agg_scale=agg_scale
+    IEEE division at output; a value with |v| ≥ 2^62 raises rather than
+    risk a wrapped sum. Null group values form no group; null agg values
+    are excluded from the sum but their rows still count (SQL
+    semantics). Doubles as the GROUP key canonicalize like
+    group_count."""
+    return filter_group_by_multi(
+        spark, out_dir, [], [group_col],
+        [("sum_v", "sum", agg_col), ("cnt", "count", None)], agg_scale,
     )
-    sum_col = F.sum("s")
-    if avt in ("double", "float"):
-        sum_col = sum_col.cast("double") / F.lit(float(agg_scale))
-    is_str = gvt in ("str", "binary")
-    is_float = gvt in ("double", "float")
-    if is_str:
-        agg = partial.groupBy("value_bin").agg(
-            sum_col.alias("sum_v"), F.sum("c").alias("cnt")
-        )
-        key = (
-            F.col("value_bin").cast("string") if gvt == "str" else F.col("value_bin")
-        )
-        return agg.select(key.alias(group_col), "sum_v", "cnt")
-    key_col = "value_dbl" if is_float else "value_int"
-    agg = partial.groupBy(key_col).agg(
-        sum_col.alias("sum_v"), F.sum("c").alias("cnt")
-    )
-    if is_float:
-        out_col = F.col(key_col).cast(spark_type_for(gvt))
-    elif gvt in ("ts", "tsntz"):
-        out_col = F.timestamp_micros(F.col(key_col))
-        if gvt == "tsntz":
-            out_col = out_col.cast("timestamp_ntz")
-    elif gvt == "date":
-        out_col = F.date_from_unix_date(F.col(key_col).cast("int"))
-    else:
-        out_col = F.col(key_col).cast(spark_type_for(gvt))
-    return agg.select(out_col.alias(group_col), "sum_v", "cnt")
 
 
 def _group_key_out(col_expr, vt: str):
@@ -1204,60 +1111,18 @@ def group_by(
 ) -> DataFrame:
     """Multi-column ``SELECT g1, g2, ..., [sum(agg) AS sum_v, min(agg)
     AS min_v, max(agg) AS max_v,] count(*) AS cnt GROUP BY g1, g2,
-    ...`` on the encoded table: group columns contribute bit-packed
-    codes, the composite key is the code TUPLE, partials and the merge
-    shuffle are O(distinct tuples). A row joins a group iff every group
-    column is non-null; null agg values are excluded from sum/min/max
-    (SQL semantics — a group with no valid agg values reports null
+    ...`` on the encoded table — ``filter_group_by`` with no predicate.
+    Group columns contribute codes, a row's group is the dense
+    composite index of its code tuple, partials and the merge shuffle
+    are O(distinct tuples). A row joins a group iff every group column
+    is non-null; null agg values are excluded from sum/min/max (SQL
+    semantics — a group with no valid agg values reports null
     min/max). Integer agg columns aggregate natively; double/float agg
     columns ride the fixed-point lane at ``agg_scale`` (the column_agg
     exactness contract either way — min/max commute with the monotone
-    quantizer). See partread.group_by_partials."""
-    from arcade_spark.partread import group_by_partials
-
-    agg_vt = dict(load_manifest(out_dir)[0]).get(agg_col) if agg_col else None
-    partial, vts = group_by_partials(
-        spark, out_dir, group_cols, agg_col, agg_scale=agg_scale
-    )
-    return _merge_group_partials(
-        partial, vts, group_cols, agg_col is not None, agg_vt, agg_scale
-    )
-
-
-def _merge_group_partials(
-    partial: DataFrame, vts: list[str], group_cols: list[str], has_agg: bool,
-    agg_vt: str | None = None, agg_scale: int = 100,
-) -> DataFrame:
-    """Fold (k0.., s, mn, mx, c) chunk partials into the final typed
-    grouped result — one O(distinct tuples) shuffle. A double/float agg
-    column's partials are in the fixed-point int64 lane; the output
-    columns divide the exact merged integers by the scale (one IEEE
-    division each — cross-engine bit-identical)."""
-    keys = [f"k{i}" for i in range(len(group_cols))]
-    sum_v = F.when(F.min("mn").isNotNull(), F.sum("s"))
-    min_v: object = F.min("mn")
-    max_v: object = F.max("mx")
-    if agg_vt in ("double", "float"):
-        sc = F.lit(float(agg_scale))
-        sum_v = sum_v.cast("double") / sc
-        min_v = min_v.cast("double") / sc
-        max_v = max_v.cast("double") / sc
-    aggs = [F.sum("c").alias("cnt")]
-    if has_agg:
-        aggs = [
-            # SQL SUM over zero valid values is NULL, not 0 — a group
-            # has valid agg values iff its min partial survived
-            sum_v.alias("sum_v"),
-            min_v.alias("min_v"),
-            max_v.alias("max_v"),
-        ] + aggs
-    merged = partial.groupBy(*keys).agg(*aggs)
-    out_keys = [
-        _group_key_out(F.col(k), vt).alias(name)
-        for k, vt, name in zip(keys, vts, group_cols)
-    ]
-    tail = (["sum_v", "min_v", "max_v"] if has_agg else []) + ["cnt"]
-    return merged.select(*out_keys, *tail)
+    quantizer); an agg value with |v| ≥ 2^62 raises rather than risk a
+    wrapped sum. See partread.filter_group_by_multi_partials."""
+    return filter_group_by(spark, out_dir, [], group_cols, agg_col, agg_scale)
 
 
 def filter_group_by(
@@ -1276,16 +1141,15 @@ def filter_group_by(
     only shuffle is the O(distinct tuples) partial merge. Same
     predicate forms as ``filter_and``; double/float agg columns ride
     the fixed-point lane at ``agg_scale`` (the column_agg contract).
-    See partread.filter_group_by_partials."""
-    from arcade_spark.partread import filter_group_by_partials
-
-    agg_vt = dict(load_manifest(out_dir)[0]).get(agg_col) if agg_col else None
-    partial, vts = filter_group_by_partials(
-        spark, out_dir, _preds_to_spec(preds), group_cols, agg_col,
-        agg_scale=agg_scale,
-    )
-    return _merge_group_partials(
-        partial, vts, group_cols, agg_col is not None, agg_vt, agg_scale
+    The ``sum_v``/``min_v``/``max_v``/``cnt`` specs of
+    ``filter_group_by_multi``."""
+    aggs = [] if agg_col is None else [
+        ("sum_v", "sum", agg_col), ("min_v", "min", agg_col),
+        ("max_v", "max", agg_col),
+    ]
+    return filter_group_by_multi(
+        spark, out_dir, preds, group_cols, aggs + [("cnt", "count", None)],
+        agg_scale,
     )
 
 
@@ -2547,21 +2411,21 @@ def distinct_count_approx(
     spark: SparkSession, out_dir: str, column: str, rsd: float = 0.05,
 ) -> DataFrame:
     """Approximate ``COUNT(DISTINCT col)`` via HyperLogLog++ (round-5):
-    the per-partition kernels emit each partition's DISTINCT values
-    once (the group_count partials — dict/RLE chunks contribute used
+    the per-partition kernels emit each block's DISTINCT values once
+    (the group kernel's ``k0`` lane — dict/RLE chunks contribute used
     dictionary entries, never materialized rows), and Spark's
-    approx_count_distinct folds that already-distinct-per-part stream.
+    approx_count_distinct folds that already-distinct-per-block stream.
     At 10^12 rows the shuffle is O(distinct-per-part) sketch inputs,
     and the final state is one HLL sketch — use this over
     ``distinct_count`` when the exact merge's O(global distinct)
     shuffle is itself the bottleneck (e.g. distinct urls)."""
-    from arcade_spark.partread import group_count_partials
+    from arcade_spark.partread import filter_group_by_multi_partials
 
-    partial, fvt = group_count_partials(spark, out_dir, column)
-    vcol = ("value_bin" if fvt in ("str", "binary")
-            else ("value_dbl" if fvt in ("double", "float") else "value_int"))
+    partial, _vts, _ = filter_group_by_multi_partials(
+        spark, out_dir, [], [column], []
+    )
     return partial.agg(
-        F.approx_count_distinct(vcol, rsd).alias("n_distinct_approx")
+        F.approx_count_distinct("k0", rsd).alias("n_distinct_approx")
     )
 
 
@@ -2588,18 +2452,11 @@ def distinct_values(
     spark: SparkSession, out_dir: str, column: str | list[str],
 ) -> DataFrame:
     """``SELECT DISTINCT col[, col2, ...]`` over rows whose listed
-    columns are all NON-NULL (COUNT(DISTINCT) semantics). Single column
-    rides the group_count partials; multi-column rides group_by's
-    code-tuple partials — either way dict/rle chunks emit used
-    dictionary entries only and the merge shuffle is O(distinct),
-    never O(rows)."""
-    if isinstance(column, (list, tuple)):
-        cols = list(column)
-        if len(cols) == 1:
-            column = cols[0]
-        else:
-            return group_by(spark, out_dir, cols).select(*cols)
-    return group_count(spark, out_dir, column).select(column)
+    columns are all NON-NULL (COUNT(DISTINCT) semantics): ``group_by``
+    with its counts dropped — dict/rle chunks emit used dictionary
+    entries only and the merge shuffle is O(distinct), never O(rows)."""
+    cols = [column] if isinstance(column, str) else list(column)
+    return group_by(spark, out_dir, cols).select(*cols)
 
 
 def distinct_count(spark: SparkSession, out_dir: str, column: str) -> DataFrame:

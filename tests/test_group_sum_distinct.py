@@ -368,13 +368,30 @@ def test_filter_group_by_fused(spark, gs_table):
     assert got.count() == 0
 
 
+def _same_rows(got, want) -> bool:
+    """Multiset equality of two DataFrames with the same columns
+    (nulls compare equal, as in Spark's exceptAll)."""
+    want = want.select(*got.columns)
+    return got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
 def test_group_by_matches_spark_native_on_random_tables(spark, tmp_path_factory):
-    """Cross-path check: the code-tuple group_by kernel must agree with
-    Spark's own groupBy over the decoded scan — two independent
-    aggregation implementations over the same encoded bytes."""
+    """Cross-path check: the group-by kernel (every public wrapper) must
+    agree with Spark's own groupBy over the decoded scan — two
+    independent aggregation implementations over the same encoded
+    bytes. The wide near-unique key drives the composite group index
+    through both of its fallbacks: the running mixed-radix key
+    re-densifies before 2^62, and the final span is too sparse to
+    bincount."""
     import pyspark.sql.functions as F
 
     from arcade_spark.decode import scan
+    from arcade_spark.readops import (
+        filter_group_by,
+        filter_group_by_sets,
+        group_count,
+        release_key_caches,
+    )
 
     for seed in (7, 19):
         rng = np.random.default_rng(seed)
@@ -407,6 +424,59 @@ def test_group_by_matches_spark_native_on_random_tables(spark, tmp_path_factory)
             )
         }
         assert got == want, seed
+
+        dec = scan(spark, out)
+        keyed = dec.filter(F.col("lang").isNotNull()).groupBy("lang")
+        assert _same_rows(
+            group_count(spark, out, "lang"),
+            keyed.agg(F.count("*").alias("cnt")),
+        ), seed
+        assert _same_rows(
+            group_sum(spark, out, "lang", "x"),
+            keyed.agg(F.sum("x").alias("sum_v"), F.count("*").alias("cnt")),
+        ), seed
+        assert _same_rows(
+            filter_group_by(spark, out, [("range", "x", -10, 20)], ["lang", "x"], "x"),
+            dec.filter(F.col("lang").isNotNull() & F.col("x").between(-10, 20))
+            .groupBy("lang", "x")
+            .agg(F.sum("x").alias("sum_v"), F.min("x").alias("min_v"),
+                 F.max("x").alias("max_v"), F.count("*").alias("cnt")),
+        ), seed
+
+    # five near-unique int64 key columns in 16k-row blocks: each block's
+    # per-column codes span ~14k values, so the running radix passes
+    # 2^62 at the fifth column and the final span far exceeds 4·n
+    rng = np.random.default_rng(31)
+    n = 2 * 16384 + 700
+    keys = [f"g{i}" for i in range(5)]
+    pdf = pd.DataFrame({
+        "id": np.arange(n, dtype=np.int64),
+        **{k: pd.array(rng.integers(0, 40000, n) * 1_000_003 - 2**40,
+                       dtype="Int64") for k in keys},
+        "x": rng.integers(-1000, 1000, n).astype(np.int64),
+    })
+    for k in keys:
+        pdf.loc[rng.random(n) < 0.03, k] = pd.NA
+    out = str(tmp_path_factory.mktemp("xgb") / "wide")
+    encode_job(spark, spark.createDataFrame(pdf), out, num_parts=2,
+               block_rows=16384, order_col="id")
+    dec = scan(spark, out)
+    aggs = [F.sum("x").alias("sum_v"), F.min("x").alias("min_v"),
+            F.max("x").alias("max_v"), F.count("*").alias("cnt")]
+    assert _same_rows(
+        group_by(spark, out, keys, "x"),
+        dec.dropna(subset=keys).groupBy(*keys).agg(*aggs),
+    )
+    assert _same_rows(
+        filter_group_by_sets(
+            spark, out, [], keys,
+            [("sum_v", "sum", "x"), ("min_v", "min", "x"),
+             ("max_v", "max", "x"), ("cnt", "count", None)],
+            sets="rollup",
+        ),
+        dec.rollup(*keys).agg(F.grouping_id().alias("grouping_id"), *aggs),
+    )
+    release_key_caches()
 
 
 def test_distinct_values_multi_column(spark, gs_table):
@@ -583,3 +653,44 @@ def test_filter_group_by_multi_dnf(spark, gs_table):
     assert list(got["lang"]) == list(want["lang"])
     assert (got["sum_x"].to_numpy() == want["sum_x"].to_numpy()).all()
     assert (got["cnt"].to_numpy() == want["cnt"].to_numpy()).all()
+
+
+def test_bare_min_max_exact_past_2_62(spark, tmp_path):
+    """MIN/MAX over one bare column is a comparison and cannot wrap, so
+    it is exact at any int64 magnitude — the 2^62 overflow guard binds
+    only aggregates that add or multiply (a sum here raises)."""
+    from arcade_spark.readops import filter_group_by_multi
+
+    big = 2 ** 62
+    rows = [(f"u{i:03d}", f"g{i % 3}", (big + i) * (1 if i % 2 else -1))
+            for i in range(60)]
+    src = spark.createDataFrame(rows, "url string, g string, v long")
+    out = str(tmp_path / "enc")
+    encode_job(spark, src, out, num_parts=2, block_rows=16, order_col="url")
+    want = {}
+    for _u, g, v in rows:
+        lo, hi, c = want.get(g, (v, v, 0))
+        want[g] = (min(lo, v), max(hi, v), c + 1)
+    got = {
+        r["g"]: (r["mn"], r["mx"], r["cnt"])
+        for r in filter_group_by_multi(
+            spark, out, [], ["g"],
+            [("mn", "min", "v"), ("mx", "max", "v"), ("cnt", "count", None)],
+        ).collect()
+    }
+    assert got == want
+    # every group's max is positive: a predicate keeping v >= 0 leaves it
+    got = {
+        r["g"]: r["mx"]
+        for r in filter_group_by_multi(
+            spark, out, [("range", "v", 0, big + 100)], ["g"],
+            [("mx", "max", "v")],
+        ).collect()
+    }
+    assert got == {g: mx for g, (_mn, mx, _c) in want.items()}
+    # group_by and group_sum carry a sum spec: it could wrap, so it raises
+    overflow = "ValueError: multi-agg affine term overflows int64"
+    with pytest.raises(Exception, match=overflow):
+        group_by(spark, out, ["g"], "v").collect()
+    with pytest.raises(Exception, match=overflow):
+        group_sum(spark, out, "g", "v").collect()

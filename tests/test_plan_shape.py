@@ -1,9 +1,10 @@
-"""Plan-shape guard for the late-materializing operators: in the AQE
-final plan no stage chains two Python execs (each task would need two
-Python workers — past the idle-worker cap every such task re-forks and
-re-imports one), nothing is read back from a cache, no join is keyed on
-``row_id`` (projections attach by gather-expand, not by joining decoded
-rows back), and join_asof runs its merge kernel once."""
+"""Plan-shape guard for the late-materializing operators and the
+group-by family: in the AQE final plan no stage chains two Python execs
+(each task would need two Python workers — past the idle-worker cap
+every such task re-forks and re-imports one), nothing is read back from
+a cache, no join is keyed on ``row_id`` (projections attach by
+gather-expand, not by joining decoded rows back), and join_asof runs its
+merge kernel once."""
 
 from __future__ import annotations
 
@@ -12,6 +13,11 @@ import pytest
 from arcade_spark.encode import encode_job
 from arcade_spark.planshape import stages
 from arcade_spark.readops import (
+    distinct_count_approx,
+    filter_group_by,
+    group_by,
+    group_count,
+    group_sum,
     join_asof,
     join_band,
     join_encoded,
@@ -53,6 +59,13 @@ OPS = {
     # hint for its two passes, not part of the attach under test
     "orderby_export": lambda s, oa, ob: orderby_export(
         s, oa, ["ts"], ["tag", "id"], persist=False),
+    "group_count": lambda s, oa, ob: group_count(s, oa, "tag"),
+    "group_sum": lambda s, oa, ob: group_sum(s, oa, "tag", "ts"),
+    "group_by": lambda s, oa, ob: group_by(s, oa, ["tag", "fk"], "ts"),
+    "filter_group_by": lambda s, oa, ob: filter_group_by(
+        s, oa, [("range", "ts", 0, 9000)], ["tag"], "ts"),
+    "distinct_count_approx": lambda s, oa, ob: distinct_count_approx(
+        s, oa, "tag"),
 }
 
 
