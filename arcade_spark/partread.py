@@ -13,22 +13,29 @@ task owns one partition's files":
 
 No blob bytes cross the JVM→Python boundary (measured on this class of
 workload, that Arrow IPC alone costs ~13 ns/byte/core — 3× the decode
-kernels):
+kernels). Scan, filter and random access run with zero shuffle.
 
-- **zero shuffle** for scan / filter / random_access (group_count keeps
-  one O(distinct) partial-merge shuffle);
-- **zone pruning in numpy** on the chunk-metadata columns (a few KB per
-  partition — parquet column pruning reads no payload bytes);
-- **match-level late materialization**: projection blobs are fetched
-  (by parquet row group) only for blocks with actual filter MATCHES;
-- dictionary replay still ships segments only (seg column reads).
+Every kernel reads a column file through one reader, ``_ColFile``:
+
+- its chunk metadata (a few KB — parquet column pruning reads no
+  payload bytes) is read once per handle, and zone pruning runs in
+  numpy over it;
+- ``_ColFile.blocks(touched)`` walks the blocks in order up to the
+  last touched one, one row group at a time, with one parquet read per
+  row group. The fetch rule: ``blob`` only for touched blocks (filter
+  MATCHES, looked-up rows, zone survivors), ``seg`` for str/binary
+  blocks that are touched or carry running-dictionary state, nothing
+  for a row group that needs neither. An untouched block yields a
+  ``None`` blob, and a string consumer replays its segment;
+- multi-column kernels walk their columns in lockstep
+  (``_lockstep``) and decode through ``_decode_at``.
 
 At cluster scale the same shape holds: Spark distributes part ids with
 retries/locality, tasks read their own files from shared storage
 (pyarrow.fs handles s3://..., hdfs://...), and no row data ever crosses
 the JVM.
 
-Reference parity: the per-part kernel IS ArcadeReader's single-file
+Reference parity: ``_ColFile.blocks`` IS ArcadeReader's single-file
 loop (reader.cpp:7-195) — zone prune (process.cpp:256-273), previndex
 segment replay (process.cpp:88-123), late materialization
 (process.cpp:4-180) — distributed by partition.
@@ -218,43 +225,185 @@ class _ColMeta:
 
 
 class _ColFile:
-    """One (part, column) parquet file: tiny metadata read + row-group-
-    pruned payload fetches (the parquet analogue of ARCADE's per-chunk
-    offsets — reader seeks only touched chunks, reader.cpp:113-143)."""
+    """One (part, column) parquet file: its chunk metadata ``cm``, read
+    once, and the block walk every kernel reads payloads through — the
+    parquet analogue of ARCADE's per-chunk offsets (the reader seeks
+    only touched chunks, reader.cpp:113-143). A handle keeps no state
+    between walks, so two passes may walk one file independently."""
 
-    def __init__(self, out_dir: str, part_id: int, column: str):
+    def __init__(self, out_dir: str, part_id: int, column: str, vt: str):
         self.path = blocks_path(out_dir, part_id, column)
+        self.vt = vt
+        self.is_str = vt in ("str", "binary")
         self.pf = pq.ParquetFile(self.path)
         md = self.pf.metadata
         rg_rows = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
         self.rg_off = np.concatenate([[0], np.cumsum(rg_rows)]).astype(np.int64)
+        self.cm = _ColMeta(self.pf.read(columns=_META_COLS))
 
-    def meta(self) -> _ColMeta:
-        return _ColMeta(self.pf.read(columns=_META_COLS))
-
-    def _take_rows(self, idx: np.ndarray, columns: list[str]) -> pa.Table:
-        """Rows ``idx`` (sorted ascending) of ``columns``, reading only
-        the row groups that contain them."""
-        which = np.searchsorted(self.rg_off, idx, side="right") - 1
-        rgs = np.unique(which)
-        tbl = self.pf.read_row_groups([int(r) for r in rgs], columns=columns)
-        sel_sizes = self.rg_off[rgs + 1] - self.rg_off[rgs]
-        sel_start = np.concatenate([[0], np.cumsum(sel_sizes)])
-        pos = sel_start[np.searchsorted(rgs, which)] + (idx - self.rg_off[which])
-        return tbl.take(pa.array(pos, type=pa.int64()))
-
-    def payloads(self, idx: np.ndarray, column: str) -> dict[int, memoryview]:
-        """{block_row_index: payload memoryview} for the given rows of
-        ``blob`` or ``seg`` — zero-copy views into the fetched buffer."""
+    def read(self, rows: dict[str, np.ndarray]) -> dict[str, dict[int, memoryview]]:
+        """The one payload read: ``rows`` maps a payload column
+        (``blob``/``seg``) to the block rows wanted from it, all inside
+        one row group, and one parquet call reads that row group's
+        columns. Returns {column: {block row: zero-copy view}}."""
         from arcade_spark.decode import _binary_views
 
-        idx = np.asarray(idx, dtype=np.int64)
-        if len(idx) == 0:
-            return {}
-        tbl = self._take_rows(idx, [column])
-        arr = tbl.column(column).combine_chunks()
-        off, mv = _binary_views(arr)
-        return {int(r): mv[off[j]: off[j + 1]] for j, r in enumerate(idx)}
+        first = min(int(r[0]) for r in rows.values())
+        rg = int(np.searchsorted(self.rg_off, first, side="right")) - 1
+        tbl = self.pf.read_row_group(rg, columns=list(rows))
+        base = int(self.rg_off[rg])
+        out = {}
+        for col, idx in rows.items():
+            off, mv = _binary_views(tbl.column(col).combine_chunks())
+            out[col] = {int(b): mv[off[b - base]: off[b - base + 1]] for b in idx}
+        return out
+
+    def blocks(
+        self, touched: np.ndarray | None = None
+    ) -> Iterator[tuple[int, dict, memoryview | None]]:
+        """``(b, meta, blob)`` for every block up to the last touched
+        one (``touched``: bool per block, None = all), in block order.
+        ``blob`` is None for an untouched block; ``meta["seg"]`` is
+        filled for a str/binary block that is touched or stateful (what
+        a replay needs), else empty."""
+        cm = self.cm
+        if touched is None:
+            touched = np.ones(cm.n, dtype=bool)
+        hit = np.flatnonzero(touched)
+        if not len(hit):
+            return
+        last = int(hit[-1])
+        seg = (cm.stateful | touched) if self.is_str else np.zeros(cm.n, dtype=bool)
+        for lo, hi in zip(self.rg_off[:-1], self.rg_off[1:]):
+            lo, hi = int(lo), min(int(hi), last + 1)
+            if lo >= hi:
+                break
+            want = {
+                col: np.flatnonzero(m[lo:hi]) + lo
+                for col, m in (("blob", touched), ("seg", seg))
+                if m[lo:hi].any()
+            }
+            got = self.read(want) if want else {}
+            blobs, segs = got.get("blob", {}), got.get("seg", {})
+            for b in range(lo, hi):
+                yield b, cm.meta_dict(b, segs.get(b, b"")), blobs.get(b)
+
+
+def _open_cols(
+    out_dir: str, pid: int, cols: list[tuple[str, str]],
+    cfs: dict[str, _ColFile] | None = None,
+) -> dict[str, _ColFile]:
+    """Handles for part ``pid``'s ``cols`` ((name, vtype) pairs) plus
+    those already open in ``cfs`` (reused, not reopened); every column
+    must hold the same blocks."""
+    cfs = dict(cfs or {})
+    for name, vt in cols:
+        if name not in cfs:
+            cfs[name] = _ColFile(out_dir, pid, name, vt)
+    nb = next(iter(cfs.values())).cm.n
+    for name, cf in cfs.items():
+        if cf.cm.n != nb:
+            raise ValueError(f"column {name!r}: block count mismatch in part {pid}")
+    return cfs
+
+
+def _lockstep(
+    cfs: list[_ColFile], touched: np.ndarray | None
+) -> Iterator[tuple[int, list[tuple[dict, memoryview, object]]]]:
+    """Walk ``cfs`` block by block together: ``(b, [(meta, blob, gdec)]
+    per column)`` for each touched block, where ``gdec`` is the
+    column's running-dictionary decoder (None for a non-string column).
+    Untouched blocks replay their string columns' segments and are not
+    yielded."""
+    from arcade_spark.core import replay_str_block
+    from arcade_spark.gdict import GlobalDictDecoder
+
+    gdecs = [GlobalDictDecoder() if cf.is_str else None for cf in cfs]
+    for row in zip(*(cf.blocks(touched) for cf in cfs)):
+        if row[0][2] is None:
+            for (_, meta, _), gdec in zip(row, gdecs):
+                if gdec is not None:
+                    replay_str_block(meta, gdec)
+            continue
+        yield row[0][0], [(meta, blob, g) for (_, meta, blob), g in zip(row, gdecs)]
+
+
+def _decode_at(vt: str, meta: dict, blob, pos, gdec) -> pa.Array:
+    """One block decoded to its output Arrow type, at sorted positions
+    ``pos`` (None = every row); ``gdec`` is a string column's running
+    dictionary."""
+    from arcade_spark.blocks import IntBlock
+    from arcade_spark.convert import block_to_arrow
+    from arcade_spark.core import decode_int_block, decode_str_block, decode_str_positions
+    from arcade_spark.decode import _out_arrow_type
+
+    if vt in ("str", "binary"):
+        blk = (decode_str_block(blob, meta, gdec) if pos is None
+               else decode_str_positions(blob, meta, pos, gdec))
+    else:
+        blk = decode_int_block(blob, meta)
+        if pos is not None:
+            blk = IntBlock(
+                values=blk.values[pos],
+                validity=None if blk.validity is None else blk.validity[pos],
+            )
+    return block_to_arrow(blk, vt).cast(_out_arrow_type(vt))
+
+
+def _resolve_project(
+    all_cols: list[tuple[str, str]], names: list[str]
+) -> list[tuple[str, str]]:
+    """``(name, vtype)`` per projected name, in the caller's order."""
+    vt_of = dict(all_cols)
+    missing = [c for c in names if c not in vt_of]
+    if missing:
+        raise KeyError(f"no such column(s): {missing}")
+    return [(c, vt_of[c]) for c in names]
+
+
+def _compile_conjuncts(
+    raw_conjs: list[list[tuple[str, tuple]]], cols: dict[str, str]
+) -> list[list]:
+    """A DNF predicate spec — an OR of AND-lists of ``(column, pred)``
+    — compiled to lists of ``readops._Pred``, at most one per column
+    within a conjunct."""
+    from arcade_spark.readops import _Pred
+
+    conjuncts = []
+    for conj in raw_conjs:
+        if not conj:
+            raise ValueError("empty conjunct")
+        seen: set[str] = set()
+        compiled = []
+        for column, pred in conj:
+            if column not in cols:
+                raise KeyError(f"no such column: {column}")
+            if column in seen:
+                raise ValueError(
+                    f"multiple predicates on {column!r} within one conjunct "
+                    "not supported"
+                )
+            seen.add(column)
+            compiled.append(_Pred(column, cols[column], pred))
+        conjuncts.append(compiled)
+    return conjuncts
+
+
+def _map_parts(
+    spark: SparkSession, part_ids: list[int], part_fn, ddl: str, post=None
+) -> DataFrame:
+    """One ``mapInArrow`` over the parts: each task runs ``part_fn(pid)``
+    (an iterator of batches of schema ``ddl``) for every part it owns,
+    then ``post`` (a batch-iterator function, optional) over that
+    stream inside the same task."""
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for pid in batch.column("part_id").to_pylist():
+                yield from part_fn(int(pid))
+
+    run = kernel if post is None else (lambda batches: post(kernel(batches)))
+    return _assign_df(spark, part_ids).mapInArrow(run, schema=ddl)
 
 
 def _zone_keep_np(pred, cm: _ColMeta) -> np.ndarray:
@@ -348,7 +497,8 @@ def _filter_part_batches(
 ) -> Iterator[pa.RecordBatch]:
     """Run the whole filter for ONE partition: predicate pass (zone
     prune → kernel match on kept blocks, dict replay on the rest) then
-    match-level projection decode. All IO is row-group-pruned pyarrow.
+    match-level projection decode, one batch per matched block. All IO
+    is row-group-pruned pyarrow.
 
     The predicate tree is DISJUNCTIVE NORMAL FORM: ``conjuncts`` is an
     OR of AND-lists of compiled _Pred objects (a plain conjunction is
@@ -359,23 +509,16 @@ def _filter_part_batches(
     conjunct and union across conjuncts. Each predicate occurrence owns
     an independent dictionary-replay state, so repeated columns across
     conjuncts are fine."""
-    from arcade_spark.convert import block_to_arrow
-    from arcade_spark.core import (
-        decode_int_block,
-        decode_str_positions,
-        replay_str_block,
-    )
-    from arcade_spark.decode import _out_arrow_type
-    from arcade_spark.gdict import GlobalDictDecoder
+    from arcade_spark.core import decode_int_block
 
-    pos_of, nb, blk, cfs, cms = _part_match_positions(out_dir, pid, conjuncts)
+    pos_of, blk, cfs = _part_match_positions(out_dir, pid, conjuncts)
 
     if count_only:
         zskip = ~blk
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(np.full(nb, pid, dtype=np.int32)),
-                pa.array(cms[next(iter(cms))].block_id.astype(np.int32)),
+                pa.array(np.full(len(pos_of), pid, dtype=np.int32)),
+                pa.array(next(iter(cfs.values())).cm.block_id.astype(np.int32)),
                 pa.array(np.array([len(p) for p in pos_of], dtype=np.int64)),
                 pa.array(zskip.astype(np.int32)),
             ],
@@ -386,24 +529,20 @@ def _filter_part_batches(
         )
         return
 
-    matched = [b for b in range(nb) if len(pos_of[b])]
+    matched = np.array([len(p) > 0 for p in pos_of], dtype=bool)
 
     if agg_item is not None:
         # fused filter+aggregate: decode ONLY the agg column, ONLY at
         # matched positions, and emit one integer partial per part —
         # matched rows never materialize
         name, avt, agg_scale = agg_item
-        acf = cfs.get(name) or _ColFile(out_dir, pid, name)
-        acm = cms.get(name) or acf.meta()
-        if acm.n != nb:
-            raise ValueError(f"column {name!r}: block count mismatch in part {pid}")
-        blobs = acf.payloads(np.asarray(matched, dtype=np.int64), "blob")
+        acf = _open_cols(out_dir, pid, [(name, avt)], cfs)[name]
         s = 0
         mn = mx = None
         cv = 0
         cr = 0
-        for b in matched:
-            ib = decode_int_block(blobs[b], acm.meta_dict(b))
+        for b, [(meta, blob, _)] in _lockstep([acf], matched):
+            ib = decode_int_block(blob, meta)
             pos = pos_of[b]
             cr += len(pos)
             v = ib.values[pos]
@@ -426,85 +565,53 @@ def _filter_part_batches(
         )
         return
 
-    if not matched or not proj_items:
+    if not matched.any() or not proj_items:
         return
-    last_m = matched[-1]
-    matched_mask = np.zeros(nb, dtype=bool)
-    matched_mask[matched] = True
-
+    cfs = _open_cols(out_dir, pid, proj_items, cfs)
     # ---- projection pass: decode matched positions only ----
-    schema = _out_schema(proj_items)
-    col_arrays: dict[str, dict[int, pa.Array]] = {}
-    for name, vt in proj_items:
-        cf = cfs.get(name) or _ColFile(out_dir, pid, name)
-        cm = cms.get(name) or cf.meta()
-        if cm.n != nb:
-            raise ValueError(f"column {name!r}: block count mismatch in part {pid}")
-        out: dict[int, pa.Array] = {}
-        if vt in ("str", "binary"):
-            rng = np.arange(nb)
-            seg_rows = np.nonzero((cm.stateful | matched_mask) & (rng <= last_m))[0]
-            segs = cf.payloads(seg_rows, "seg")
-            blobs = cf.payloads(np.asarray(matched, dtype=np.int64), "blob")
-            gdec = GlobalDictDecoder()
-            for b in range(last_m + 1):
-                meta = cm.meta_dict(b, segs.get(b, b""))
-                if matched_mask[b]:
-                    blkd = decode_str_positions(blobs[b], meta, pos_of[b], gdec)
-                    out[b] = block_to_arrow(blkd, vt).cast(_out_arrow_type(vt))
-                else:
-                    replay_str_block(meta, gdec)
-        else:
-            blobs = cf.payloads(np.asarray(matched, dtype=np.int64), "blob")
-            for b in matched:
-                iblock = decode_int_block(blobs[b], cm.meta_dict(b))
-                pos = pos_of[b]
-                from arcade_spark.blocks import IntBlock
+    yield from _project_batches(
+        [cfs[n] for n, _ in proj_items], matched, pos_of, _out_schema(proj_items)
+    )
 
-                sub = IntBlock(
-                    values=iblock.values[pos],
-                    validity=None if iblock.validity is None else iblock.validity[pos],
-                )
-                out[b] = block_to_arrow(sub, vt).cast(_out_arrow_type(vt))
-        col_arrays[name] = out
 
-    for b in matched:
+def _project_batches(
+    cfs: list[_ColFile], touched: np.ndarray | None, pos_of, schema: pa.Schema,
+    lead=None,
+) -> Iterator[pa.RecordBatch]:
+    """One batch per touched block: ``lead(b)`` (leading arrays, if
+    given), then each column decoded at ``pos_of[b]`` (``pos_of`` None:
+    every row) — scan, filter projection and random access."""
+    for b, row in _lockstep(cfs, touched):
+        pos = None if pos_of is None else pos_of[b]
+        arrays = [_decode_at(cf.vt, meta, blob, pos, gdec)
+                  for cf, (meta, blob, gdec) in zip(cfs, row)]
         yield pa.RecordBatch.from_arrays(
-            [col_arrays[n][b] for n, _ in proj_items], schema=schema
+            (lead(b) if lead else []) + arrays, schema=schema
         )
 
 
 def _part_match_positions(
     out_dir: str, pid: int, conjuncts: list[list]
-) -> tuple[list[np.ndarray], int, np.ndarray, dict, dict]:
+) -> tuple[list[np.ndarray], np.ndarray, dict[str, _ColFile]]:
     """The DNF predicate pass for ONE partition: returns (per-block
-    match positions, block count, per-block zone-alive mask, open
-    _ColFile handles, their _ColMeta) so filter / fused-aggregate /
-    fused-group-by kernels share one implementation."""
+    match positions, per-block zone-alive mask, the open
+    predicate-column handles) so filter / fused-aggregate / fused-
+    group-by / key kernels share one implementation and reuse the
+    handles through ``_open_cols``."""
     from arcade_spark.core import decode_int_block
+    from arcade_spark.readops import _complement_positions
 
     # ---- group predicate OCCURRENCES by column, zone verdicts ----
-    occs: list[tuple[int, object]] = [
-        (j, p) for j, conj in enumerate(conjuncts) for p in conj
-    ]
     col_occs: dict[str, list[tuple[int, object]]] = {}
-    for j, p in occs:
-        col_occs.setdefault(p.column, []).append((j, p))
-    cfs: dict[str, _ColFile] = {}
-    cms: dict[str, _ColMeta] = {}
-    zk: dict[int, np.ndarray] = {}
-    nb = None
-    for c, plist in col_occs.items():
-        cfs[c] = _ColFile(out_dir, pid, c)
-        cms[c] = cfs[c].meta()
-        if nb is None:
-            nb = cms[c].n
-        elif cms[c].n != nb:
-            raise ValueError(f"column {c!r}: block count mismatch in part {pid}")
-        for _, p in plist:
-            if id(p) not in zk:
-                zk[id(p)] = _zone_keep_np(p, cms[c])
-    assert nb is not None
+    for j, conj in enumerate(conjuncts):
+        for p in conj:
+            col_occs.setdefault(p.column, []).append((j, p))
+    cfs = _open_cols(
+        out_dir, pid, [(c, plist[0][1].vtype) for c, plist in col_occs.items()]
+    )
+    nb = next(iter(cfs.values())).cm.n
+    zk = {id(p): _zone_keep_np(p, cfs[c].cm)
+          for c, plist in col_occs.items() for _, p in plist}
     # conjunct alive per block = AND of its predicates' zone verdicts
     alive = np.ones((len(conjuncts), nb), dtype=bool)
     for j, conj in enumerate(conjuncts):
@@ -529,48 +636,30 @@ def _part_match_positions(
             )
 
     for c, plist in col_occs.items():
-        cm, cf = cms[c], cfs[c]
+        cf = cfs[c]
         # scan a block for this column iff any conjunct with a pred on
         # it is alive there
         scan = np.zeros(nb, dtype=bool)
         for j, _p in plist:
             scan |= alive[j]
-        idxs = np.nonzero(scan)[0]
-        last = int(idxs[-1]) if len(idxs) else -1
-        is_str = plist[0][1].is_str
-        if is_str:
-            rng = np.arange(nb)
-            seg_rows = np.nonzero((cm.stateful | scan) & (rng <= last))[0]
-            blobs = cf.payloads(idxs, "blob")
-            segs = cf.payloads(seg_rows, "seg")
-            states = [(j, p, p.new_state()) for j, p in plist]
-            from arcade_spark.readops import _complement_positions
-
-            for b in range(last + 1):
-                meta = cm.meta_dict(b, segs.get(b, b""))
-                blob = blobs.get(b)
-                for j, p, st in states:
-                    # each state owns an independent replay decoder, so
-                    # every occurrence consumes every block exactly once
-                    if alive[j][b] and blob is not None:
-                        pos_c = st.match_positions(blob, meta)
-                        if p.negated:
-                            pos_c = _complement_positions(
-                                pos_c, blob, meta["n_values"]
-                            )
-                    else:
+        # each string predicate occurrence owns an independent replay
+        # state, so every occurrence consumes every block exactly once
+        states = [p.new_state() if cf.is_str else None for _, p in plist]
+        for b, meta, blob in cf.blocks(scan):
+            iblock = (decode_int_block(blob, meta)
+                      if blob is not None and not cf.is_str else None)
+            for (j, p), st in zip(plist, states):
+                if blob is None or not alive[j][b]:
+                    if st is not None:
                         st.replay(meta)
-                        pos_c = _EMPTY
-                    fold(j, b, pos_c)
-        else:
-            blobs = cf.payloads(idxs, "blob")
-            for b in idxs:
-                iblock = decode_int_block(blobs[int(b)], cm.meta_dict(int(b)))
-                for j, p in plist:
-                    if alive[j][int(b)]:
-                        fold(j, int(b), p.int_positions(iblock))
-                    else:
-                        fold(j, int(b), _EMPTY)
+                    pos_c = _EMPTY
+                elif st is not None:
+                    pos_c = st.match_positions(blob, meta)
+                    if p.negated:
+                        pos_c = _complement_positions(pos_c, blob, meta["n_values"])
+                else:
+                    pos_c = p.int_positions(iblock)
+                fold(j, b, pos_c)
         # dead-conjunct blocks contribute empty for this column
         for j, _p in plist:
             for b in np.nonzero(~alive[j])[0]:
@@ -587,7 +676,7 @@ def _part_match_positions(
         else:
             pos_of.append(np.unique(np.concatenate(parts_b)))
 
-    return pos_of, nb, blk, cfs, cms
+    return pos_of, blk, cfs
 
 
 def filter_parts(
@@ -611,7 +700,6 @@ def filter_parts(
       (each inner list is a conjunction; columns may repeat anywhere).
 
     All three lower to the same DNF kernel."""
-    from arcade_spark.readops import _Pred
     from arcade_spark.schema import spark_type_for
 
     if (preds_spec is None) == (dnf_spec is None):
@@ -627,26 +715,8 @@ def filter_parts(
         raw_conjs = [preds_spec]
     else:
         raw_conjs = [[pc] for pc in preds_spec]
-
-    seen: set[str] = set()
-    conjuncts: list[list[_Pred]] = []
-    for conj in raw_conjs:
-        if not conj:
-            raise ValueError("empty conjunct")
-        conj_cols: set[str] = set()
-        compiled = []
-        for column, pred in conj:
-            if column not in all_cols:
-                raise KeyError(f"no such column: {column}")
-            if column in conj_cols:
-                raise ValueError(
-                    f"multiple predicates on {column!r} within one conjunct "
-                    "not supported"
-                )
-            conj_cols.add(column)
-            seen.add(column)
-            compiled.append(_Pred(column, all_cols[column], pred))
-        conjuncts.append(compiled)
+    conjuncts = _compile_conjuncts(raw_conjs, all_cols)
+    seen = {p.column for conj in conjuncts for p in conj}
 
     agg_item: tuple[str, str] | None = None
     if agg_col is not None:
@@ -665,15 +735,12 @@ def filter_parts(
         names = project if project is not None else [
             c for c, _ in columns if c not in seen
         ]
-        proj_items = [(c, all_cols[c]) for c in names]
+        proj_items = _resolve_project(columns, names)
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                yield from _filter_part_batches(
-                    out_dir, int(pid), conjuncts, proj_items, count_only,
-                    agg_item=agg_item,
-                )
+    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
+        return _filter_part_batches(
+            out_dir, pid, conjuncts, proj_items, count_only, agg_item=agg_item
+        )
 
     if count_only:
         ddl = "part_id int, block_id int, matches long, zone_skipped int"
@@ -681,7 +748,7 @@ def filter_parts(
         ddl = "s long, mn long, mx long, cv long, cr long"
     else:
         ddl = ", ".join(f"{n} {spark_type_for(v)}" for n, v in proj_items)
-    return _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl)
+    return _map_parts(spark, [p for p, _ in parts], part_batches, ddl)
 
 
 def scan_parts(
@@ -692,75 +759,44 @@ def scan_parts(
 ) -> DataFrame:
     """Files-mode full scan: each task decodes its partition's column
     files in block order, streaming one RecordBatch per block (the
-    reference's coroutine paging — generator.h:44-60)."""
+    reference's coroutine paging — generator.h:44-60). Output columns
+    follow ``columns`` (table order when None)."""
     from arcade_spark.schema import spark_type_for
 
     all_cols, parts = load_manifest(out_dir)
-    sel = [(n, v) for n, v in all_cols if columns is None or n in columns]
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                yield from _scan_part_batches(out_dir, int(pid), sel, emit_meta)
-
+    sel = all_cols if columns is None else _resolve_project(all_cols, columns)
     ddl = ", ".join(
         (["part_id int", "block_id int", "pos long"] if emit_meta else [])
         + [f"{n} {spark_type_for(v)}" for n, v in sel]
     )
-    return _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl)
+    return _map_parts(
+        spark, [p for p, _ in parts],
+        lambda pid: _scan_part_batches(out_dir, pid, sel, emit_meta), ddl,
+    )
 
 
 def _scan_part_batches(
     out_dir: str, pid: int, sel: list[tuple[str, str]], emit_meta: bool
 ) -> Iterator[pa.RecordBatch]:
-    from arcade_spark.convert import block_to_arrow
-    from arcade_spark.core import decode_int_block, decode_str_block
-    from arcade_spark.decode import _binary_views, _out_arrow_type
-    from arcade_spark.gdict import GlobalDictDecoder
-
-    cfs = [(n, v, _ColFile(out_dir, pid, n)) for n, v in sel]
-    n_rgs = {cf.pf.metadata.num_row_groups for _, _, cf in cfs}
-    if len(n_rgs) != 1:
-        raise ValueError(f"part {pid}: row-group count differs across columns")
-    meta_fields = (
+    cfs = _open_cols(out_dir, pid, sel)
+    cm = cfs[sel[0][0]].cm
+    lead_fields = (
         [pa.field("part_id", pa.int32()), pa.field("block_id", pa.int32()),
          pa.field("pos", pa.int64())] if emit_meta else []
     )
-    schema = _out_schema(sel, lead=meta_fields)
-    gdecs: dict[str, GlobalDictDecoder] = {}
-    for rg in range(next(iter(n_rgs))):
-        views = []
-        rows = None
-        for n, v, cf in cfs:
-            tbl = cf.pf.read_row_group(rg, columns=_META_COLS + ["blob", "seg"])
-            cm = _ColMeta(tbl)
-            b_off, b_mv = _binary_views(tbl.column("blob").combine_chunks())
-            s_off, s_mv = _binary_views(tbl.column("seg").combine_chunks())
-            views.append((n, v, cm, b_off, b_mv, s_off, s_mv))
-            rows = cm.n
-        for i in range(rows):
-            arrays = []
-            nvals = None
-            bid = None
-            for n, v, cm, b_off, b_mv, s_off, s_mv in views:
-                meta = cm.meta_dict(i, s_mv[s_off[i]: s_off[i + 1]])
-                blob = b_mv[b_off[i]: b_off[i + 1]]
-                if v in ("str", "binary"):
-                    gdec = gdecs.setdefault(n, GlobalDictDecoder())
-                    blk = decode_str_block(blob, meta, gdec)
-                else:
-                    blk = decode_int_block(blob, meta)
-                arr = block_to_arrow(blk, v).cast(_out_arrow_type(v))
-                arrays.append(arr)
-                nvals = len(arr)
-                bid = int(cm.block_id[i])
-            if emit_meta:
-                arrays = [
-                    pa.array(np.full(nvals, pid, dtype=np.int32)),
-                    pa.array(np.full(nvals, bid, dtype=np.int32)),
-                    pa.array(np.arange(nvals, dtype=np.int64)),
-                ] + arrays
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    def lead(b: int) -> list[pa.Array]:
+        n = int(cm.n_values[b])
+        return [
+            pa.array(np.full(n, pid, dtype=np.int32)),
+            pa.array(np.full(n, int(cm.block_id[b]), dtype=np.int32)),
+            pa.array(np.arange(n, dtype=np.int64)),
+        ]
+
+    yield from _project_batches(
+        [cfs[n] for n, _ in sel], None, None, _out_schema(sel, lead=lead_fields),
+        lead=lead if emit_meta else None,
+    )
 
 
 def _random_access_targets(
@@ -790,26 +826,24 @@ def random_access_parts(
 ) -> DataFrame:
     """Files-mode point lookup: tasks launch ONLY for touched
     partitions, read metadata, then fetch exactly the touched blocks'
-    blobs (+ stateful segs before them) — reader.cpp:69-143."""
+    blobs (+ stateful segs before them) — reader.cpp:69-143. Output:
+    ``row_id``, then ``project`` in the caller's order (every column,
+    in table order, when None)."""
     from arcade_spark.schema import spark_type_for
 
     all_cols, parts = load_manifest(out_dir)
     if project is not None:
-        all_cols = [(n, v) for n, v in all_cols if n in project]
+        if not project:
+            raise ValueError("random_access needs at least one projected column")
+        all_cols = _resolve_project(all_cols, project)
     targets = _random_access_targets(parts, row_ids)
-    touched = sorted(targets)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                yield from _ra_part_batches(
-                    out_dir, int(pid), targets[int(pid)], all_cols
-                )
-
     ddl = "row_id long, " + ", ".join(
         f"{n} {spark_type_for(v)}" for n, v in all_cols
     )
-    return _assign_df(spark, touched).mapInArrow(kernel, schema=ddl)
+    return _map_parts(
+        spark, sorted(targets),
+        lambda pid: _ra_part_batches(out_dir, pid, targets[pid], all_cols), ddl,
+    )
 
 
 def _ra_part_batches(
@@ -820,16 +854,6 @@ def _ra_part_batches(
     position order (round-8: fully vectorized — the previous per-row
     Python grouping loop dominated large materializations, measured
     1.7 s of a 2.2 s 200k-row attach join)."""
-    from arcade_spark.blocks import IntBlock
-    from arcade_spark.convert import block_to_arrow
-    from arcade_spark.core import (
-        decode_int_block,
-        decode_str_positions,
-        replay_str_block,
-    )
-    from arcade_spark.decode import _out_arrow_type
-    from arcade_spark.gdict import GlobalDictDecoder
-
     if isinstance(local, tuple):
         lps_in, rids_in = local
         lps_in = np.asarray(lps_in, dtype=np.int64)
@@ -840,9 +864,8 @@ def _ra_part_batches(
     if len(lps_in) == 0:
         return
 
-    first = _ColFile(out_dir, pid, all_cols[0][0])
-    cm0 = first.meta()
-    nb = cm0.n
+    cfs = _open_cols(out_dir, pid, all_cols)
+    cm0 = cfs[all_cols[0][0]].cm
     ends = cm0.row_start + cm0.n_values
     # sort by local position: block index is monotone in lp, so the
     # sorted stream is grouped by block with in-block positions
@@ -856,50 +879,17 @@ def _ra_part_batches(
     stops = np.concatenate([starts[1:], [len(blocks)]])
     target_blocks = blocks[starts]
     pos_all = lps - cm0.row_start[blocks]
-    last_t = int(target_blocks[-1])
-    tmask = np.zeros(nb, dtype=bool)
+    tmask = np.zeros(cm0.n, dtype=bool)
     tmask[target_blocks] = True
-    span = {int(b): (int(s), int(e))
+    span = {int(b): slice(int(s), int(e))
             for b, s, e in zip(target_blocks, starts, stops)}
 
-    schema = _out_schema(all_cols, lead=[pa.field("row_id", pa.int64())])
-    decoded: dict[str, dict[int, pa.Array]] = {}
-    for name, vt in all_cols:
-        cf = first if name == all_cols[0][0] else _ColFile(out_dir, pid, name)
-        cm = cm0 if name == all_cols[0][0] else cf.meta()
-        out: dict[int, pa.Array] = {}
-        blobs = cf.payloads(target_blocks, "blob")
-        if vt in ("str", "binary"):
-            rng = np.arange(nb)
-            seg_rows = np.nonzero((cm.stateful | tmask) & (rng <= last_t))[0]
-            segs = cf.payloads(seg_rows, "seg")
-            gdec = GlobalDictDecoder()
-            for b in range(last_t + 1):
-                meta = cm.meta_dict(b, segs.get(b, b""))
-                if not tmask[b]:
-                    replay_str_block(meta, gdec)
-                    continue
-                s0, e0 = span[b]
-                blkd = decode_str_positions(blobs[b], meta, pos_all[s0:e0], gdec)
-                out[b] = block_to_arrow(blkd, vt).cast(_out_arrow_type(vt))
-        else:
-            for b in (int(x) for x in target_blocks):
-                s0, e0 = span[b]
-                pos = pos_all[s0:e0]
-                iblock = decode_int_block(blobs[b], cm.meta_dict(b))
-                sub = IntBlock(
-                    values=iblock.values[pos],
-                    validity=None if iblock.validity is None else iblock.validity[pos],
-                )
-                out[b] = block_to_arrow(sub, vt).cast(_out_arrow_type(vt))
-        decoded[name] = out
-
-    for b in (int(x) for x in target_blocks):
-        s0, e0 = span[b]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(rids[s0:e0], type=pa.int64())]
-            + [decoded[n][b] for n, _ in all_cols], schema=schema
-        )
+    yield from _project_batches(
+        [cfs[n] for n, _ in all_cols], tmask,
+        {b: pos_all[sl] for b, sl in span.items()},
+        _out_schema(all_cols, lead=[pa.field("row_id", pa.int64())]),
+        lead=lambda b: [pa.array(rids[span[b]], type=pa.int64())],
+    )
 
 
 def key_rowid_parts(
@@ -942,8 +932,6 @@ def key_rowid_parts(
 
     Returns (df with columns ``k0..kn, rid`` — or ``post``'s —, list of
     key vtypes)."""
-    from arcade_spark.readops import _Pred
-
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
     if not key_cols:
         raise ValueError("key_col must name at least one column")
@@ -960,150 +948,79 @@ def key_rowid_parts(
                 "(float equality is not a sane join contract)"
             )
         kvts.append(kvt)
-    conjuncts = None
-    if preds_spec:
-        seen: set[str] = set()
-        compiled = []
-        for column, pred in preds_spec:
-            if column not in cols:
-                raise KeyError(f"no such column: {column}")
-            if column in seen:
-                raise ValueError(
-                    f"multiple predicates on {column!r} within one "
-                    "conjunct not supported"
-                )
-            seen.add(column)
-            compiled.append(_Pred(column, cols[column], pred))
-        conjuncts = [compiled]
+    conjuncts = _compile_conjuncts([preds_spec], cols) if preds_spec else None
     offsets: dict[int, int] = {}
     lo = 0
     for pid, n in parts:
         offsets[pid] = lo
         lo += n
-    str_flags = [vt in ("str", "binary") for vt in kvts]
+    key_items = list(zip(key_cols, kvts))
+    names = [f"k{i}" for i in range(len(key_cols))] + ["rid"]
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from arcade_spark.core import (
-            decode_int_block,
-            decode_str_positions,
-            replay_str_block,
-        )
-        from arcade_spark.gdict import GlobalDictDecoder
+    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
+        from arcade_spark.bits import float_order_keys
+        from arcade_spark.core import decode_int_block, decode_str_positions
 
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                pid = int(pid)
-                base = offsets[pid]
-                cfs = {kc: _ColFile(out_dir, pid, kc) for kc in key_cols}
-                cms = {kc: cfs[kc].meta() for kc in key_cols}
-                nb = cms[key_cols[0]].n
-                for kc in key_cols[1:]:
-                    if cms[kc].n != nb:
-                        raise ValueError(
-                            f"column {kc!r}: block count mismatch in part {pid}"
-                        )
-                if conjuncts is not None:
-                    pos_of, pnb, _blk, _cfs, _cms = _part_match_positions(
-                        out_dir, pid, conjuncts
-                    )
-                    if pnb != nb:
-                        raise ValueError(
-                            f"part {pid}: block count mismatch "
-                            f"({key_cols} vs predicate columns)"
-                        )
+        if conjuncts is not None:
+            pos_of, _blk, pcfs = _part_match_positions(out_dir, pid, conjuncts)
+            cfs = _open_cols(out_dir, pid, key_items, pcfs)
+        else:
+            cfs = _open_cols(out_dir, pid, key_items)
+            cm0 = cfs[key_cols[0]].cm
+            pos_of = [np.arange(int(n), dtype=np.int64) for n in cm0.n_values]
+        kcfs = [cfs[kc] for kc in key_cols]
+        row_start = kcfs[0].cm.row_start
+        matched = np.array([len(p) > 0 for p in pos_of], dtype=bool)
+        for b, row in _lockstep(kcfs, matched):
+            pos = pos_of[b]
+            rids = offsets[pid] + int(row_start[b]) + pos
+            arrays = []
+            null_any = None
+            for cf, (meta, blob, gdec) in zip(kcfs, row):
+                if cf.is_str:
+                    blkd = decode_str_positions(blob, meta, pos, gdec)
+                    arrays.append(blkd.to_arrow(binary=True))
+                    valid = blkd.validity
                 else:
-                    cm0 = cms[key_cols[0]]
-                    pos_of = [
-                        np.arange(int(cm0.n_values[b]), dtype=np.int64)
-                        for b in range(nb)
-                    ]
-                matched = [b for b in range(nb) if len(pos_of[b])]
-                if not matched:
+                    ib = decode_int_block(blob, meta)
+                    valid = None if ib.validity is None else ib.validity[pos]
+                    vvals = ib.values[pos]
+                    if cf.vt in ("double", "float"):
+                        # canonicalize NaN payloads FIRST: a sign-bit
+                        # NaN (0xFFF8...) would map below -inf; the
+                        # contract is NaN above +inf, one NaN class
+                        f = vvals.view(np.float64)
+                        if np.isnan(f).any():
+                            vvals = np.where(
+                                np.isnan(f), np.int64(0x7FF8000000000000), vvals
+                            )
+                        vvals = float_order_keys(vvals)
+                    arrays.append(pa.array(
+                        vvals, type=pa.int64(),
+                        mask=None if valid is None else ~valid,
+                    ))
+                if valid is not None:
+                    nv = ~valid
+                    null_any = nv if null_any is None else (null_any | nv)
+            if null_any is not None and not keep_null_keys:
+                keep = ~null_any
+                if not keep.any():
                     continue
-                last_m = matched[-1]
-                midx = np.asarray(matched, dtype=np.int64)
-                mmask = np.zeros(nb, dtype=bool)
-                mmask[midx] = True
-                rng = np.arange(nb)
-                blobs = {kc: cfs[kc].payloads(midx, "blob") for kc in key_cols}
-                segs, gdecs = {}, {}
-                for kc, is_str in zip(key_cols, str_flags):
-                    if is_str:
-                        seg_rows = np.nonzero(
-                            (cms[kc].stateful | mmask) & (rng <= last_m)
-                        )[0]
-                        segs[kc] = cfs[kc].payloads(seg_rows, "seg")
-                        gdecs[kc] = GlobalDictDecoder()
-                for b in range(last_m + 1):
-                    if not len(pos_of[b]):
-                        for kc, is_str in zip(key_cols, str_flags):
-                            if is_str:
-                                replay_str_block(
-                                    cms[kc].meta_dict(b, segs[kc].get(b, b"")),
-                                    gdecs[kc],
-                                )
-                        continue
-                    pos = pos_of[b]
-                    rids = base + int(cms[key_cols[0]].row_start[b]) + pos
-                    arrays = []
-                    null_any = None
-                    for kc, is_str in zip(key_cols, str_flags):
-                        if is_str:
-                            meta = cms[kc].meta_dict(b, segs[kc].get(b, b""))
-                            blkd = decode_str_positions(
-                                blobs[kc][b], meta, pos, gdecs[kc]
-                            )
-                            arrays.append(blkd.to_arrow(binary=True))
-                            valid = blkd.validity
-                        else:
-                            ib = decode_int_block(
-                                blobs[kc][b], cms[kc].meta_dict(b)
-                            )
-                            valid = (None if ib.validity is None
-                                     else ib.validity[pos])
-                            vvals = ib.values[pos]
-                            if cols[kc] in ("double", "float"):
-                                from arcade_spark.bits import float_order_keys
-
-                                # canonicalize NaN payloads FIRST: a
-                                # sign-bit NaN (0xFFF8...) would map
-                                # below -inf; the contract is NaN
-                                # above +inf, one NaN class
-                                f = vvals.view(np.float64)
-                                if np.isnan(f).any():
-                                    vvals = np.where(
-                                        np.isnan(f),
-                                        np.int64(0x7FF8000000000000),
-                                        vvals,
-                                    )
-                                vvals = float_order_keys(vvals)
-                            arrays.append(pa.array(
-                                vvals, type=pa.int64(),
-                                mask=None if valid is None else ~valid,
-                            ))
-                        if valid is not None:
-                            nv = ~valid
-                            null_any = nv if null_any is None else (null_any | nv)
-                    if null_any is not None and not keep_null_keys:
-                        keep = ~null_any
-                        if not keep.any():
-                            continue
-                        kmask = pa.array(keep)
-                        arrays = [a.filter(kmask) for a in arrays]
-                        rids = rids[keep]
-                    yield pa.RecordBatch.from_arrays(
-                        arrays + [pa.array(rids, type=pa.int64())],
-                        names=[f"k{i}" for i in range(len(key_cols))] + ["rid"],
-                    )
+                kmask = pa.array(keep)
+                arrays = [a.filter(kmask) for a in arrays]
+                rids = rids[keep]
+            yield pa.RecordBatch.from_arrays(
+                arrays + [pa.array(rids, type=pa.int64())], names=names
+            )
 
     ddl = ", ".join(
-        f"k{i} {'binary' if s else 'long'}" for i, s in enumerate(str_flags)
+        f"k{i} {'binary' if vt in ('str', 'binary') else 'long'}"
+        for i, vt in enumerate(kvts)
     ) + ", rid long"
-    run = kernel
+    fn = None
     if post is not None:
         fn, ddl = post
-        run = lambda batches: fn(kernel(batches))  # noqa: E731
-    df = _assign_df(spark, [p for p, _ in parts]).mapInArrow(run, schema=ddl)
+    df = _map_parts(spark, [p for p, _ in parts], part_batches, ddl, post=fn)
     return df, kvts
 
 
@@ -1162,15 +1079,11 @@ def attach_rowids_parts(
             f"{stream.columns}"
         )
     all_cols, parts = load_manifest(out_dir)
-    vt_of = dict(all_cols)
-    missing = [c for c in project if c not in vt_of]
-    if missing:
-        raise KeyError(f"no such column(s): {missing}")
+    cols = _resolve_project(all_cols, project)
     if not keep_null:
         stream = stream.filter(F.col(rid_col).isNotNull())
     if not project:
         return stream
-    cols = [(n, vt_of[n]) for n in project]
     pids = np.array([p for p, _ in parts], dtype=np.int64)
     offs = np.concatenate([[0], np.cumsum([n for _, n in parts])]).astype(np.int64)
     dec_schema = _out_schema(cols, lead=[pa.field("row_id", pa.int64())])
@@ -1440,8 +1353,6 @@ def filter_group_by_multi_partials(
     partials) and count counts every matched row — the grouping-sets
     operator needs this, since a rolled-up level must keep rows that
     are null in an unrelated group column."""
-    from arcade_spark.readops import _Pred
-
     all_cols, parts = load_manifest(out_dir)
     cols = dict(all_cols)
     if not group_cols:
@@ -1463,307 +1374,220 @@ def filter_group_by_multi_partials(
         {c for sp in cspecs for c, _m, _a in sp["terms"]} - set(bin_cols)
     )
     live = [i for i, sp in enumerate(cspecs) if sp["kind"] != "count"]
-
-    def _compile_conj(spec: list[tuple[str, tuple]]) -> list:
-        seen: set[str] = set()
-        compiled = []
-        for column, pred in spec:
-            if column not in cols:
-                raise KeyError(f"no such column: {column}")
-            if column in seen:
-                raise ValueError(
-                    f"multiple predicates on {column!r} within one "
-                    "conjunct not supported"
-                )
-            seen.add(column)
-            compiled.append(_Pred(column, cols[column], pred))
-        return compiled
+    # binary min/max agg columns not already decoded as group keys
+    # need their own dict-replay state
+    bin_only = [c for c in bin_cols if c not in group_cols]
+    walk = group_cols + [c for c in needed if c not in group_cols] + bin_only
+    walk_items = [(c, cols[c]) for c in walk]
 
     if dnf_spec is not None:
         if preds_spec:
             raise ValueError("pass either preds_spec or dnf_spec, not both")
-        conjuncts = [_compile_conj(c) for c in dnf_spec]
-        if not all(conjuncts):
-            raise ValueError("empty conjunct")
-    else:
-        compiled = _compile_conj(preds_spec)
-        conjuncts = [compiled] if compiled else None  # None = full scan
+        conjuncts = _compile_conjuncts(dnf_spec, cols)
+    else:  # None = full scan
+        conjuncts = _compile_conjuncts([preds_spec], cols) if preds_spec else None
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from arcade_spark.core import decode_int_block, replay_str_block
-        from arcade_spark.gdict import GlobalDictDecoder
+    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
+        from arcade_spark.core import decode_int_block
         from arcade_spark.readops import _str_chunk_codes
 
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                if conjuncts is not None:
-                    pos_of, nb, _blk, p_cfs, p_cms = _part_match_positions(
-                        out_dir, int(pid), conjuncts
+        if conjuncts is not None:
+            pos_of, _blk, pcfs = _part_match_positions(out_dir, pid, conjuncts)
+            cfs = _open_cols(out_dir, pid, walk_items, pcfs)
+            matched = np.array([len(p) > 0 for p in pos_of], dtype=bool)
+        else:
+            cfs = _open_cols(out_dir, pid, walk_items)
+            n_values = cfs[group_cols[0]].cm.n_values
+            # no predicate: every row, as views (no gathers)
+            pos_of = [slice(None)] * len(n_values)
+            matched = n_values > 0
+        for b, row in _lockstep([cfs[c] for c in walk], matched):
+            meta_of = {c: meta for c, (meta, _, _) in zip(walk, row)}
+            blob_of = {c: blob for c, (_, blob, _) in zip(walk, row)}
+            gdec_of = {c: gdec for c, (_, _, gdec) in zip(walk, row)}
+            pos = pos_of[b]
+            key_codes, resolvers = [], []
+            str_dec: dict[str, tuple] = {}
+            cmask = None
+            for g, vt in zip(group_cols, vts):
+                if vt in ("str", "binary"):
+                    codes, gvalid, resolve = _str_chunk_codes(
+                        gdec_of[g], blob_of[g], meta_of[g]
                     )
-                    matched = [b for b in range(nb) if len(pos_of[b])]
+                    # a binary min/max spec over a group column
+                    # reuses this decode (replay runs ONCE)
+                    str_dec[g] = (codes, gvalid, resolve)
                 else:
-                    cf0 = _ColFile(out_dir, int(pid), group_cols[0])
-                    cm0 = cf0.meta()
-                    nb = cm0.n
-                    # no predicate: every row, as views (no gathers)
-                    pos_of = [slice(None)] * nb
-                    matched = [b for b in range(nb) if cm0.n_values[b]]
-                    p_cfs, p_cms = {group_cols[0]: cf0}, {group_cols[0]: cm0}
-                if not matched:
+                    ib = decode_int_block(blob_of[g], meta_of[g])
+                    gv = ib.values
+                    if vt in ("double", "float"):
+                        gv = gv.copy()
+                        f = gv.view(np.float64)
+                        gv[f == 0.0] = 0
+                        gv[np.isnan(f)] = np.int64(0x7FF8000000000000)
+                    uniq, codes = np.unique(gv, return_inverse=True)
+                    gvalid = ib.validity
+                    resolve = (lambda used, u=uniq: u[used])
+                kc = np.asarray(codes, dtype=np.int64)[pos]
+                if gvalid is not None:
+                    gv_pos = gvalid[pos]
+                    if keep_null_keys:
+                        # null is its own group: code -1
+                        kc = np.where(gv_pos, kc, np.int64(-1))
+                    else:
+                        cmask = (gv_pos if cmask is None
+                                 else (cmask & gv_pos))
+                key_codes.append(kc)
+                resolvers.append(resolve)
+            for c in bin_only:
+                str_dec[c] = _str_chunk_codes(gdec_of[c], blob_of[c], meta_of[c])
+            if cmask is not None and not cmask.any():
+                continue
+            # rows that join a group; slice(None) when all do
+            # (a view, where an all-true mask would copy)
+            rows = slice(None) if cmask is None else cmask
+            n = len(key_codes[0])
+            inv, width = _dense_group_index(key_codes)
+            cnt = np.bincount(inv[rows], minlength=width)
+
+            # decode each referenced agg column ONCE per block;
+            # quantize MATCHED rows only (a non-finite value in a
+            # predicate-excluded row must not raise — same contract
+            # as _filter_part_batches)
+            qcache: dict[str, tuple[np.ndarray, np.ndarray | None]] = {}
+            for c in needed:
+                ib = decode_int_block(blob_of[c], meta_of[c])
+                v = None if ib.validity is None else ib.validity[pos]
+                q = quantized_agg_lane(
+                    ib.values[pos], v, cols[c], agg_scale
+                )
+                qcache[c] = (q, v)
+
+            spec_sums, spec_cnts = [], []
+            for i in live:
+                sp = cspecs[i]
+                if _bin_spec(sp):
+                    # binary MIN/MAX: rank the USED dictionary
+                    # entries by VALUE (codes are not order-
+                    # preserving), take per-group extremal rank
+                    c = sp["terms"][0][0]
+                    codes_c, valid_c, resolve_c = str_dec[c]
+                    sel = np.asarray(codes_c, dtype=np.int64)[pos]
+                    vmask = _narrow(
+                        rows, None if valid_c is None else valid_c[pos]
+                    )
+                    gi = inv[vmask]
+                    spec_cnts.append(np.bincount(gi, minlength=width))
+                    if len(gi):
+                        uniqc, subinv = np.unique(
+                            sel[vmask], return_inverse=True
+                        )
+                        varr = np.asarray(
+                            list(resolve_c(uniqc)), dtype=object
+                        )
+                        order = np.argsort(varr)
+                        rank = np.empty(len(uniqc), dtype=np.int64)
+                        rank[order] = np.arange(len(uniqc))
+                        r = rank[subinv]
+                        if sp["kind"] == "min":
+                            extr = np.full(width, len(uniqc),
+                                           dtype=np.int64)
+                            np.minimum.at(extr, gi, r)
+                        else:
+                            extr = np.full(width, -1, dtype=np.int64)
+                            np.maximum.at(extr, gi, r)
+                        sv = varr[order]
+                    else:
+                        extr = np.full(width, -1, dtype=np.int64)
+                        sv = np.zeros(0, dtype=object)
+                    spec_sums.append((extr, sv))
                     continue
-                last_m = matched[-1]
-                matched_mask = np.zeros(nb, dtype=bool)
-                matched_mask[matched] = True
-                midx = np.asarray(matched, dtype=np.int64)
+                # SQL agg null semantics: a row feeds the spec iff
+                # every referenced column is valid there
+                smask = rows
+                for c, _m, _a in sp["terms"]:
+                    smask = _narrow(smask, qcache[c][1])
+                val = _spec_values(sp, qcache, smask)[smask]
+                gi = inv[smask]
+                kind = sp["kind"]
+                if kind == "min":
+                    s_i = np.full(width, np.iinfo(np.int64).max,
+                                  dtype=np.int64)
+                    np.minimum.at(s_i, gi, val)
+                elif kind == "max":
+                    s_i = np.full(width, np.iinfo(np.int64).min,
+                                  dtype=np.int64)
+                    np.maximum.at(s_i, gi, val)
+                else:
+                    s_i = np.zeros(width, dtype=np.int64)
+                    np.add.at(s_i, gi, val)
+                spec_sums.append(s_i)
+                spec_cnts.append(np.bincount(gi, minlength=width))
 
-                gcf = {g: p_cfs.get(g) or _ColFile(out_dir, int(pid), g)
-                       for g in group_cols}
-                gcm = {g: (p_cms.get(g) or gcf[g].meta()) for g in group_cols}
-                acf = {c: p_cfs.get(c) or _ColFile(out_dir, int(pid), c)
-                       for c in needed if c not in gcf}
-                acm = {c: (p_cms.get(c) or acf[c].meta()) for c in acf}
-                # binary min/max agg columns not already decoded as
-                # group keys need their own dict-replay state
-                bcf = {c: p_cfs.get(c) or _ColFile(out_dir, int(pid), c)
-                       for c in bin_cols if c not in gcf}
-                bcm = {c: (p_cms.get(c) or bcf[c].meta()) for c in bcf}
-                for g in group_cols:
-                    if gcm[g].n != nb:
-                        raise ValueError(
-                            f"column {g!r}: block count mismatch in part {pid}"
-                        )
-                for cms_x in (acm, bcm):
-                    for c in cms_x:
-                        if cms_x[c].n != nb:
-                            raise ValueError(
-                                f"column {c!r}: block count mismatch in part {pid}"
-                            )
-                rng = np.arange(nb)
-                gblobs = {g: gcf[g].payloads(midx, "blob") for g in group_cols}
-                gsegs = {}
-                for g, vt in zip(group_cols, vts):
+            used = np.nonzero(cnt)[0]
+            # every row of a group holds its code tuple: read
+            # each used group's codes off one member row
+            rep = np.empty(width, dtype=np.int64)
+            rep[inv] = np.arange(n)
+            rep = rep[used]
+            arrays = []
+            for i, vt in enumerate(vts):
+                code_row = key_codes[i][rep]
+                nullm = code_row < 0  # keep_null_keys groups
+                if nullm.all():
+                    nz = len(code_row)
                     if vt in ("str", "binary"):
-                        seg_rows = np.nonzero(
-                            (gcm[g].stateful | matched_mask) & (rng <= last_m)
-                        )[0]
-                        gsegs[g] = gcf[g].payloads(seg_rows, "seg")
-                ablobs = {c: acf[c].payloads(midx, "blob") for c in acf}
-                bblobs = {c: bcf[c].payloads(midx, "blob") for c in bcf}
-                bsegs = {}
-                for c in bcf:
-                    seg_rows = np.nonzero(
-                        (bcm[c].stateful | matched_mask) & (rng <= last_m)
-                    )[0]
-                    bsegs[c] = bcf[c].payloads(seg_rows, "seg")
-                gdecs = {g: GlobalDictDecoder() for g in group_cols}
-                bdecs = {c: GlobalDictDecoder() for c in bcf}
-
-                for b in range(last_m + 1):
-                    if not matched_mask[b]:
-                        for g, vt in zip(group_cols, vts):
-                            if vt in ("str", "binary"):
-                                replay_str_block(
-                                    gcm[g].meta_dict(b, gsegs[g].get(b, b"")),
-                                    gdecs[g],
-                                )
-                        for c in bcf:
-                            replay_str_block(
-                                bcm[c].meta_dict(b, bsegs[c].get(b, b"")),
-                                bdecs[c],
-                            )
-                        continue
-                    pos = pos_of[b]
-                    key_codes, resolvers = [], []
-                    str_dec: dict[str, tuple] = {}
-                    cmask = None
-                    for g, vt in zip(group_cols, vts):
-                        if vt in ("str", "binary"):
-                            meta = gcm[g].meta_dict(b, gsegs[g].get(b, b""))
-                            codes, gvalid, resolve = _str_chunk_codes(
-                                gdecs[g], gblobs[g][b], meta
-                            )
-                            # a binary min/max spec over a group column
-                            # reuses this decode (replay runs ONCE)
-                            str_dec[g] = (codes, gvalid, resolve)
-                        else:
-                            ib = decode_int_block(
-                                gblobs[g][b], gcm[g].meta_dict(b)
-                            )
-                            gv = ib.values
-                            if vt in ("double", "float"):
-                                gv = gv.copy()
-                                f = gv.view(np.float64)
-                                gv[f == 0.0] = 0
-                                gv[np.isnan(f)] = np.int64(0x7FF8000000000000)
-                            uniq, codes = np.unique(gv, return_inverse=True)
-                            gvalid = ib.validity
-                            resolve = (lambda used, u=uniq: u[used])
-                        kc = np.asarray(codes, dtype=np.int64)[pos]
-                        if gvalid is not None:
-                            gv_pos = gvalid[pos]
-                            if keep_null_keys:
-                                # null is its own group: code -1
-                                kc = np.where(gv_pos, kc, np.int64(-1))
-                            else:
-                                cmask = (gv_pos if cmask is None
-                                         else (cmask & gv_pos))
-                        key_codes.append(kc)
-                        resolvers.append(resolve)
-                    for c in bcf:
-                        str_dec[c] = _str_chunk_codes(
-                            bdecs[c], bblobs[c][b],
-                            bcm[c].meta_dict(b, bsegs[c].get(b, b"")),
-                        )
-                    if cmask is not None and not cmask.any():
-                        continue
-                    # rows that join a group; slice(None) when all do
-                    # (a view, where an all-true mask would copy)
-                    rows = slice(None) if cmask is None else cmask
-                    n = len(key_codes[0])
-                    inv, width = _dense_group_index(key_codes)
-                    cnt = np.bincount(inv[rows], minlength=width)
-
-                    # decode each referenced agg column ONCE per block;
-                    # quantize MATCHED rows only (a non-finite value in a
-                    # predicate-excluded row must not raise — same contract
-                    # as _filter_part_batches)
-                    qcache: dict[str, tuple[np.ndarray, np.ndarray | None]] = {}
-                    for c in needed:
-                        ib = decode_int_block(
-                            ablobs[c][b] if c in ablobs else gblobs[c][b],
-                            (acm.get(c) or gcm[c]).meta_dict(b),
-                        )
-                        v = None if ib.validity is None else ib.validity[pos]
-                        q = quantized_agg_lane(
-                            ib.values[pos], v, cols[c], agg_scale
-                        )
-                        qcache[c] = (q, v)
-
-                    spec_sums, spec_cnts = [], []
-                    for i in live:
-                        sp = cspecs[i]
-                        if _bin_spec(sp):
-                            # binary MIN/MAX: rank the USED dictionary
-                            # entries by VALUE (codes are not order-
-                            # preserving), take per-group extremal rank
-                            c = sp["terms"][0][0]
-                            codes_c, valid_c, resolve_c = str_dec[c]
-                            sel = np.asarray(codes_c, dtype=np.int64)[pos]
-                            vmask = _narrow(
-                                rows, None if valid_c is None else valid_c[pos]
-                            )
-                            gi = inv[vmask]
-                            spec_cnts.append(np.bincount(gi, minlength=width))
-                            if len(gi):
-                                uniqc, subinv = np.unique(
-                                    sel[vmask], return_inverse=True
-                                )
-                                varr = np.asarray(
-                                    list(resolve_c(uniqc)), dtype=object
-                                )
-                                order = np.argsort(varr)
-                                rank = np.empty(len(uniqc), dtype=np.int64)
-                                rank[order] = np.arange(len(uniqc))
-                                r = rank[subinv]
-                                if sp["kind"] == "min":
-                                    extr = np.full(width, len(uniqc),
-                                                   dtype=np.int64)
-                                    np.minimum.at(extr, gi, r)
-                                else:
-                                    extr = np.full(width, -1, dtype=np.int64)
-                                    np.maximum.at(extr, gi, r)
-                                sv = varr[order]
-                            else:
-                                extr = np.full(width, -1, dtype=np.int64)
-                                sv = np.zeros(0, dtype=object)
-                            spec_sums.append((extr, sv))
-                            continue
-                        # SQL agg null semantics: a row feeds the spec iff
-                        # every referenced column is valid there
-                        smask = rows
-                        for c, _m, _a in sp["terms"]:
-                            smask = _narrow(smask, qcache[c][1])
-                        val = _spec_values(sp, qcache, smask)[smask]
-                        gi = inv[smask]
-                        kind = sp["kind"]
-                        if kind == "min":
-                            s_i = np.full(width, np.iinfo(np.int64).max,
-                                          dtype=np.int64)
-                            np.minimum.at(s_i, gi, val)
-                        elif kind == "max":
-                            s_i = np.full(width, np.iinfo(np.int64).min,
-                                          dtype=np.int64)
-                            np.maximum.at(s_i, gi, val)
-                        else:
-                            s_i = np.zeros(width, dtype=np.int64)
-                            np.add.at(s_i, gi, val)
-                        spec_sums.append(s_i)
-                        spec_cnts.append(np.bincount(gi, minlength=width))
-
-                    used = np.nonzero(cnt)[0]
-                    # every row of a group holds its code tuple: read
-                    # each used group's codes off one member row
-                    rep = np.empty(width, dtype=np.int64)
-                    rep[inv] = np.arange(n)
-                    rep = rep[used]
-                    arrays = []
-                    for i, vt in enumerate(vts):
-                        code_row = key_codes[i][rep]
-                        nullm = code_row < 0  # keep_null_keys groups
-                        if nullm.all():
-                            nz = len(code_row)
-                            if vt in ("str", "binary"):
-                                arrays.append(pa.array(
-                                    [None] * nz, type=pa.binary()))
-                            elif vt in ("double", "float"):
-                                arrays.append(pa.array(
-                                    np.zeros(nz), type=pa.float64(),
-                                    mask=nullm))
-                            else:
-                                arrays.append(pa.array(
-                                    np.zeros(nz, dtype=np.int64),
-                                    type=pa.int64(), mask=nullm))
-                            continue
-                        safe = (np.where(nullm, code_row[~nullm][0],
-                                         code_row)
-                                if nullm.any() else code_row)
-                        mask = nullm if nullm.any() else None
-                        vals = resolvers[i](safe)
-                        if vt in ("str", "binary"):
-                            arrays.append(pa.array(
-                                list(vals), type=pa.binary(), mask=mask))
-                        elif vt in ("double", "float"):
-                            arrays.append(pa.array(
-                                vals.view(np.float64), type=pa.float64(),
-                                mask=mask))
-                        else:
-                            arrays.append(pa.array(
-                                vals.astype(np.int64), type=pa.int64(),
-                                mask=mask))
-                    names = [f"k{i}" for i in range(len(group_cols))]
-                    for j, i in enumerate(live):
-                        if _bin_spec(cspecs[i]):
-                            extr, sv = spec_sums[j]
-                            eu = extr[used]
-                            arrays.append(pa.array(
-                                [(sv[e] if 0 <= e < len(sv) else None)
-                                 for e in eu],
-                                type=pa.binary(),
-                            ))
-                        elif cspecs[i]["kind"] in ("min", "max"):
-                            # null-mask empty groups so extremum
-                            # sentinels never merge
-                            arrays.append(pa.array(
-                                spec_sums[j][used],
-                                mask=spec_cnts[j][used] == 0,
-                            ))
-                        else:
-                            arrays.append(pa.array(spec_sums[j][used]))
-                        arrays.append(pa.array(spec_cnts[j][used]))
-                        names += [f"s{i}", f"c{i}"]
-                    arrays.append(pa.array(cnt[used].astype(np.int64)))
-                    names.append("c")
-                    yield pa.RecordBatch.from_arrays(arrays, names=names)
+                        arrays.append(pa.array(
+                            [None] * nz, type=pa.binary()))
+                    elif vt in ("double", "float"):
+                        arrays.append(pa.array(
+                            np.zeros(nz), type=pa.float64(),
+                            mask=nullm))
+                    else:
+                        arrays.append(pa.array(
+                            np.zeros(nz, dtype=np.int64),
+                            type=pa.int64(), mask=nullm))
+                    continue
+                safe = (np.where(nullm, code_row[~nullm][0],
+                                 code_row)
+                        if nullm.any() else code_row)
+                mask = nullm if nullm.any() else None
+                vals = resolvers[i](safe)
+                if vt in ("str", "binary"):
+                    arrays.append(pa.array(
+                        list(vals), type=pa.binary(), mask=mask))
+                elif vt in ("double", "float"):
+                    arrays.append(pa.array(
+                        vals.view(np.float64), type=pa.float64(),
+                        mask=mask))
+                else:
+                    arrays.append(pa.array(
+                        vals.astype(np.int64), type=pa.int64(),
+                        mask=mask))
+            names = [f"k{i}" for i in range(len(group_cols))]
+            for j, i in enumerate(live):
+                if _bin_spec(cspecs[i]):
+                    extr, sv = spec_sums[j]
+                    eu = extr[used]
+                    arrays.append(pa.array(
+                        [(sv[e] if 0 <= e < len(sv) else None)
+                         for e in eu],
+                        type=pa.binary(),
+                    ))
+                elif cspecs[i]["kind"] in ("min", "max"):
+                    # null-mask empty groups so extremum
+                    # sentinels never merge
+                    arrays.append(pa.array(
+                        spec_sums[j][used],
+                        mask=spec_cnts[j][used] == 0,
+                    ))
+                else:
+                    arrays.append(pa.array(spec_sums[j][used]))
+                arrays.append(pa.array(spec_cnts[j][used]))
+                names += [f"s{i}", f"c{i}"]
+            arrays.append(pa.array(cnt[used].astype(np.int64)))
+            names.append("c")
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     def lane(vt: str) -> str:
         if vt in ("str", "binary"):
@@ -1780,11 +1604,7 @@ def filter_group_by_multi_partials(
         )]
         + ["c long"]
     )
-    return (
-        _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl),
-        vts,
-        cspecs,
-    )
+    return _map_parts(spark, [p for p, _ in parts], part_batches, ddl), vts, cspecs
 
 
 def column_topk_parts(
@@ -1820,48 +1640,44 @@ def column_topk_parts(
     is_float = vt in ("double", "float")
     sign = 1 if descending else -1
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                cf = _ColFile(out_dir, int(pid), column)
-                cm = cf.meta()
-                hz = np.nonzero(cm.has_zone)[0]
-                if len(hz) == 0:
-                    continue
-                bound = (cm.max_int if descending else cm.min_int)[hz] * sign
-                order = hz[np.argsort(-bound, kind="stable")]
-                best = np.empty(0, dtype=np.int64)  # key-domain, ascending
-                scanned = 0
-                for b in order:
-                    b = int(b)
-                    bnd = int((cm.max_int if descending else cm.min_int)[b]) * sign
-                    if len(best) >= k and bnd <= int(best[0]):
-                        break
-                    blob = cf.payloads(np.array([b], dtype=np.int64), "blob")[b]
-                    iblock = decode_int_block(blob, cm.meta_dict(b))
-                    v = iblock.values
-                    if iblock.validity is not None:
-                        v = v[iblock.validity]
-                    if len(v) == 0:
-                        continue
-                    scanned += 1
-                    keys = (float_order_keys(v) if is_float else v) * sign
-                    best = np.sort(np.concatenate([best, keys]))[-k:]
-                # emit the partition partial in the STORED domain
-                keys = best * sign
-                if is_float:
-                    # float_order_keys is its own inverse
-                    out = float_order_keys(keys).view(np.float64)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(out, type=pa.float64())], names=["v"]
-                    )
-                else:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(keys, type=pa.int64())], names=["v"]
-                    )
+    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
+        cf = _ColFile(out_dir, pid, column, vt)
+        cm = cf.cm
+        hz = np.nonzero(cm.has_zone)[0]
+        if len(hz) == 0:
+            return
+        bound = (cm.max_int if descending else cm.min_int)[hz] * sign
+        order = hz[np.argsort(-bound, kind="stable")]
+        best = np.empty(0, dtype=np.int64)  # key-domain, ascending
+        for b in order:
+            b = int(b)
+            bnd = int((cm.max_int if descending else cm.min_int)[b]) * sign
+            if len(best) >= k and bnd <= int(best[0]):
+                break
+            blob = cf.read({"blob": np.array([b])})["blob"][b]
+            iblock = decode_int_block(blob, cm.meta_dict(b))
+            v = iblock.values
+            if iblock.validity is not None:
+                v = v[iblock.validity]
+            if len(v) == 0:
+                continue
+            keys = (float_order_keys(v) if is_float else v) * sign
+            best = np.sort(np.concatenate([best, keys]))[-k:]
+        # emit the partition partial in the STORED domain
+        keys = best * sign
+        if is_float:
+            # float_order_keys is its own inverse
+            out = float_order_keys(keys).view(np.float64)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(out, type=pa.float64())], names=["v"]
+            )
+        else:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(keys, type=pa.int64())], names=["v"]
+            )
 
     ddl = "v double" if is_float else "v long"
-    partial = _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl)
+    partial = _map_parts(spark, [p for p, _ in parts], part_batches, ddl)
     ordered = partial.orderBy(F.col("v").desc() if descending else F.col("v").asc())
     out = ordered.limit(k)
     if is_float:
@@ -1909,8 +1725,9 @@ def _topk_str_part(
     from arcade_spark.core import decode_str_block, replay_str_block
     from arcade_spark.gdict import GlobalDictDecoder
 
-    cf = _ColFile(out_dir, pid, column)
-    cm = cf.meta()
+    # the kernel orders raw bytes, so a str column reads as binary
+    cf = _ColFile(out_dir, pid, column, "binary")
+    cm = cf.cm
     nb = cm.n
     n_valid = cm.n_values - cm.n_nulls
     los: list[bytes | None] = []
@@ -1955,19 +1772,12 @@ def _topk_str_part(
     alive = np.zeros(nb, dtype=bool)
     for i in valid:
         alive[i] = beats(i, t0)
-    aidx = np.nonzero(alive)[0]
-    last = int(aidx[-1]) if len(aidx) else -1
-    rng = np.arange(nb)
-    seg_rows = np.nonzero((cm.stateful | alive) & (rng <= last))[0]
-    segs = cf.payloads(seg_rows, "seg")
-    blobs = cf.payloads(aidx, "blob")
     if probe is not None:
-        probe["blob_rows"] = sorted(int(i) for i in aidx)
+        probe["blob_rows"] = np.flatnonzero(alive).tolist()
         probe["t0"] = t0
     gdec = GlobalDictDecoder()
     best: list[bytes] = []  # sorted ascending, len <= k
-    for b in range(last + 1):
-        meta = cm.meta_dict(b, segs.get(b, b""))
+    for b, meta, blob in cf.blocks(alive):
         t = None
         if len(best) >= k:
             t = best[0] if descending else best[-1]
@@ -1975,10 +1785,10 @@ def _topk_str_part(
                 t = max(t, t0) if descending else min(t, t0)
         else:
             t = t0
-        if not alive[b] or not beats(b, t):
+        if blob is None or not beats(b, t):
             replay_str_block(meta, gdec)
             continue
-        blk = decode_str_block(blobs[b], meta, gdec)
+        blk = decode_str_block(blob, meta, gdec)
         arr = blk.to_arrow(binary=True)
         if blk.validity is not None:
             arr = arr.drop_null()
@@ -1997,17 +1807,13 @@ def _column_topk_str_parts(
     partials (≤ k values each, see _topk_str_part) merged by one tiny
     global sort."""
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                best = _topk_str_part(out_dir, int(pid), column, k, descending)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(best, type=pa.binary())], names=["v"]
-                )
+    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
+        best = _topk_str_part(out_dir, pid, column, k, descending)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(best, type=pa.binary())], names=["v"]
+        )
 
-    partial = _assign_df(spark, [p for p, _ in parts]).mapInArrow(
-        kernel, schema="v binary"
-    )
+    partial = _map_parts(spark, [p for p, _ in parts], part_batches, "v binary")
     ordered = partial.orderBy(F.col("v").desc() if descending else F.col("v").asc())
     out = ordered.limit(k)
     if vt == "str":
@@ -2043,7 +1849,6 @@ def column_agg_parts(
     EAGERLY (the pinned fold happens at call time) and returns a wider
     schema than fixed mode (adds min_v/max_v)."""
     from arcade_spark.core import decode_int_block
-    from arcade_spark.schema import spark_type_for  # noqa: F401
 
     all_cols, parts = load_manifest(out_dir)
     vt = dict(all_cols).get(column)
@@ -2058,82 +1863,61 @@ def column_agg_parts(
         raise ValueError("mode='ieee' applies to double/float columns only")
 
     if mode == "ieee":
-        def ikernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            from arcade_spark.decode import _binary_views
-
-            for batch in batches:
-                for pid in batch.column("part_id").to_pylist():
-                    cf = _ColFile(out_dir, int(pid), column)
-                    s = 0.0
-                    comp = 0.0  # Kahan compensation across blocks
-                    mn = mx = None  # extrema over NON-NaN values
-                    has_nan = False
-                    cnt_all = 0
-                    cnt_col = 0
-                    for rg in range(cf.pf.metadata.num_row_groups):
-                        tbl = cf.pf.read_row_group(
-                            rg, columns=_META_COLS + ["blob"])
-                        cm = _ColMeta(tbl)
-                        b_off, b_mv = _binary_views(
-                            tbl.column("blob").combine_chunks())
-                        for i in range(cm.n):
-                            iblock = decode_int_block(
-                                b_mv[b_off[i]: b_off[i + 1]], cm.meta_dict(i)
-                            )
-                            v = iblock.values
-                            if iblock.validity is not None:
-                                v = v[iblock.validity]
-                            f = v.view(np.float64)
-                            cnt_all += int(cm.n_values[i])
-                            cnt_col += len(f)
-                            if len(f):
-                                bs = float(f.sum())
-                                if np.isfinite(bs) and np.isfinite(s):
-                                    y = bs - comp
-                                    t = s + y
-                                    comp = (t - s) - y
-                                    s = t
-                                else:
-                                    # Kahan compensation is NaN-poison
-                                    # around ±inf — fall back to plain
-                                    # IEEE accumulation
-                                    s = s + bs
-                                    comp = 0.0
-                                # NaN-deterministic extrema (Spark's
-                                # NaN-greatest contract, layout-
-                                # independent): track NaN presence,
-                                # min/max over the non-NaN values
-                                nanmask = np.isnan(f)
-                                if nanmask.any():
-                                    has_nan = True
-                                    fv = f[~nanmask]
-                                else:
-                                    fv = f
-                                if len(fv):
-                                    bmn = float(np.min(fv))
-                                    bmx = float(np.max(fv))
-                                    mn = bmn if mn is None else min(mn, bmn)
-                                    mx = bmx if mx is None else max(mx, bmx)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([int(pid)], type=pa.int64()),
-                         pa.array([s], type=pa.float64()),
-                         pa.array([mn], type=pa.float64()),
-                         pa.array([mx], type=pa.float64()),
-                         pa.array([bool(has_nan)], type=pa.bool_()),
-                         pa.array([cnt_all], type=pa.int64()),
-                         pa.array([cnt_col], type=pa.int64())],
-                        names=["pid", "s", "mn", "mx", "hn", "ca", "cc"],
-                    )
-
-        rows = (
-            _assign_df(spark, [p for p, _ in parts])
-            .mapInArrow(
-                ikernel,
-                schema="pid long, s double, mn double, mx double, "
-                       "hn boolean, ca long, cc long",
+        def ipart(pid: int) -> Iterator[pa.RecordBatch]:
+            cf = _ColFile(out_dir, pid, column, vt)
+            s = 0.0
+            comp = 0.0  # Kahan compensation across blocks
+            mn = mx = None  # extrema over NON-NaN values
+            has_nan = False
+            cnt_col = 0
+            for _b, meta, blob in cf.blocks():
+                iblock = decode_int_block(blob, meta)
+                v = iblock.values
+                if iblock.validity is not None:
+                    v = v[iblock.validity]
+                f = v.view(np.float64)
+                cnt_col += len(f)
+                if len(f):
+                    bs = float(f.sum())
+                    if np.isfinite(bs) and np.isfinite(s):
+                        y = bs - comp
+                        t = s + y
+                        comp = (t - s) - y
+                        s = t
+                    else:
+                        # Kahan compensation is NaN-poison around ±inf
+                        # — fall back to plain IEEE accumulation
+                        s = s + bs
+                        comp = 0.0
+                    # NaN-deterministic extrema (Spark's NaN-greatest
+                    # contract, layout-independent): track NaN
+                    # presence, min/max over the non-NaN values
+                    nanmask = np.isnan(f)
+                    if nanmask.any():
+                        has_nan = True
+                        fv = f[~nanmask]
+                    else:
+                        fv = f
+                    if len(fv):
+                        bmn = float(np.min(fv))
+                        bmx = float(np.max(fv))
+                        mn = bmn if mn is None else min(mn, bmn)
+                        mx = bmx if mx is None else max(mx, bmx)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([pid], type=pa.int64()),
+                 pa.array([s], type=pa.float64()),
+                 pa.array([mn], type=pa.float64()),
+                 pa.array([mx], type=pa.float64()),
+                 pa.array([bool(has_nan)], type=pa.bool_()),
+                 pa.array([int(cf.cm.n_values.sum())], type=pa.int64()),
+                 pa.array([cnt_col], type=pa.int64())],
+                names=["pid", "s", "mn", "mx", "hn", "ca", "cc"],
             )
-            .collect()
-        )
+
+        rows = _map_parts(
+            spark, [p for p, _ in parts], ipart,
+            "pid long, s double, mn double, mx double, hn boolean, ca long, cc long",
+        ).collect()
         rows = sorted(rows, key=lambda r: r["pid"])  # pinned fold order
         s = comp = 0.0
         ca = cc = 0
@@ -2168,42 +1952,28 @@ def column_agg_parts(
             "cnt_all long, cnt_col long, avg_v double",
         )
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from arcade_spark.decode import _binary_views
+    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
+        cf = _ColFile(out_dir, pid, column, vt)
+        total = 0
+        cnt_col = 0
+        for _b, meta, blob in cf.blocks():
+            iblock = decode_int_block(blob, meta)
+            v = iblock.values
+            if iblock.validity is not None:
+                v = v[iblock.validity]
+            v = quantized_agg_lane(v, None, vt, agg_scale)
+            total += int(v.sum()) if len(v) else 0
+            cnt_col += len(v)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([total], type=pa.int64()),
+             pa.array([int(cf.cm.n_values.sum())], type=pa.int64()),
+             pa.array([cnt_col], type=pa.int64())],
+            names=["s", "ca", "cc"],
+        )
 
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                cf = _ColFile(out_dir, int(pid), column)
-                total = 0
-                cnt_all = 0
-                cnt_col = 0
-                for rg in range(cf.pf.metadata.num_row_groups):
-                    tbl = cf.pf.read_row_group(rg, columns=_META_COLS + ["blob"])
-                    cm = _ColMeta(tbl)
-                    b_off, b_mv = _binary_views(tbl.column("blob").combine_chunks())
-                    for i in range(cm.n):
-                        iblock = decode_int_block(
-                            b_mv[b_off[i]: b_off[i + 1]], cm.meta_dict(i)
-                        )
-                        v = iblock.values
-                        if iblock.validity is not None:
-                            v = v[iblock.validity]
-                        v = quantized_agg_lane(v, None, vt, agg_scale)
-                        total += int(v.sum()) if len(v) else 0
-                        cnt_all += int(cm.n_values[i])
-                        cnt_col += len(v)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([total], type=pa.int64()),
-                     pa.array([cnt_all], type=pa.int64()),
-                     pa.array([cnt_col], type=pa.int64())],
-                    names=["s", "ca", "cc"],
-                )
-
-    rows = (
-        _assign_df(spark, [p for p, _ in parts])
-        .mapInArrow(kernel, schema="s long, ca long, cc long")
-        .collect()
-    )
+    rows = _map_parts(
+        spark, [p for p, _ in parts], part_batches, "s long, ca long, cc long"
+    ).collect()
     s = sum(r["s"] for r in rows)
     ca = sum(r["ca"] for r in rows)
     cc = sum(r["cc"] for r in rows)
@@ -2226,32 +1996,25 @@ def column_null_count_parts(
     spark: SparkSession, out_dir: str, column: str
 ) -> DataFrame:
     """``SELECT count(*), count(col), count(*) - count(col)`` from
-    chunk METADATA only: each task reads the column file's
-    (n_values, n_nulls) columns — a few KB per partition, no payload
-    bytes (parquet column pruning) — and the driver folds |parts|
-    partial rows."""
+    chunk METADATA only: each task reads the column file's chunk
+    metadata — a few KB per partition, no payload bytes (parquet column
+    pruning) — and the driver folds |parts| partial rows."""
     all_cols, parts = load_manifest(out_dir)
-    if column not in dict(all_cols):
+    vt = dict(all_cols).get(column)
+    if vt is None:
         raise KeyError(f"no such column: {column}")
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                pf = pq.ParquetFile(blocks_path(out_dir, int(pid), column))
-                t = pf.read(columns=["n_values", "n_nulls"])
-                cnt = int(np.sum(t.column("n_values").to_numpy(zero_copy_only=False)))
-                nulls = int(np.sum(t.column("n_nulls").to_numpy(zero_copy_only=False)))
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([cnt], type=pa.int64()),
-                     pa.array([nulls], type=pa.int64())],
-                    names=["cnt", "nulls"],
-                )
+    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
+        cm = _ColFile(out_dir, pid, column, vt).cm
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([int(cm.n_values.sum())], type=pa.int64()),
+             pa.array([int(cm.n_nulls.sum())], type=pa.int64())],
+            names=["cnt", "nulls"],
+        )
 
-    rows = (
-        _assign_df(spark, [p for p, _ in parts])
-        .mapInArrow(kernel, schema="cnt long, nulls long")
-        .collect()
-    )
+    rows = _map_parts(
+        spark, [p for p, _ in parts], part_batches, "cnt long, nulls long"
+    ).collect()
     cnt = sum(r["cnt"] for r in rows)
     nulls = sum(r["nulls"] for r in rows)
     return spark.createDataFrame(
@@ -2280,103 +2043,90 @@ def column_minmax_parts(spark: SparkSession, out_dir: str, column: str) -> DataF
         raise KeyError(f"no such column: {column}")
     is_str = vt in ("str", "binary")
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
         from arcade_spark.core import decode_str_block
-        from arcade_spark.decode import _binary_views
         from arcade_spark.gdict import GlobalDictDecoder
 
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                cf = _ColFile(out_dir, int(pid), column)
-                cm = cf.meta()
-                cnt = int(cm.n_values.sum())
-                nulls = int(cm.n_nulls.sum())
-                if not is_str:
-                    hz = cm.has_zone  # all-null chunks carry no zone
-                    if hz.any():
-                        lo = int(cm.min_int[hz].min())
-                        hi = int(cm.max_int[hz].max())
-                        lo_a = pa.array([lo], type=pa.int64())
-                        hi_a = pa.array([hi], type=pa.int64())
-                    else:
-                        lo_a = pa.array([None], type=pa.int64())
-                        hi_a = pa.array([None], type=pa.int64())
-                    yield pa.RecordBatch.from_arrays(
-                        [lo_a, hi_a, pa.array([None], type=pa.binary()),
-                         pa.array([None], type=pa.binary()),
-                         pa.array([cnt], type=pa.int64()),
-                         pa.array([nulls], type=pa.int64())],
-                        names=["lo_int", "hi_int", "lo_bin", "hi_bin", "cnt", "nulls"],
-                    )
+        cf = _ColFile(out_dir, pid, column, vt)
+        cm = cf.cm
+        cnt = int(cm.n_values.sum())
+        nulls = int(cm.n_nulls.sum())
+        if not is_str:
+            hz = cm.has_zone  # all-null chunks carry no zone
+            if hz.any():
+                lo = int(cm.min_int[hz].min())
+                hi = int(cm.max_int[hz].max())
+                lo_a = pa.array([lo], type=pa.int64())
+                hi_a = pa.array([hi], type=pa.int64())
+            else:
+                lo_a = pa.array([None], type=pa.int64())
+                hi_a = pa.array([None], type=pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [lo_a, hi_a, pa.array([None], type=pa.binary()),
+                 pa.array([None], type=pa.binary()),
+                 pa.array([cnt], type=pa.int64()),
+                 pa.array([nulls], type=pa.int64())],
+                names=["lo_int", "hi_int", "lo_bin", "hi_bin", "cnt", "nulls"],
+            )
+            return
+        # string column: metadata path iff the winning bounds are
+        # exact. All-null chunks carry min_bin None.
+        lo = hi = None
+        meta_ok = True
+        for i in range(cm.n):
+            if cm.n_nulls[i] == cm.n_values[i]:
+                continue  # all-null chunk: no extrema
+            mb, xb = cm.min_bin[i], cm.max_bin[i]
+            if mb is None or xb is None:
+                meta_ok = False
+                break
+            if lo is None or mb < lo[0]:
+                lo = (mb, bool(cm.min_exact[i]))
+            # max side: a TIE with an inexact candidate demotes
+            # exactness — the candidate's true max extends the shared
+            # 128-byte prefix and so EXCEEDS the tied "exact" winner
+            # (min side is safe: an inexact tying prefix understates its
+            # chunk's true min, so the exact winner remains the smaller
+            # value)
+            if hi is None or xb > hi[0]:
+                hi = (xb, bool(cm.max_exact[i]))
+            elif xb == hi[0] and not cm.max_exact[i]:
+                hi = (xb, False)
+        if meta_ok and lo is not None and not (lo[1] and hi[1]):
+            meta_ok = False
+        if not meta_ok:
+            # decode fallback (this partition's column only)
+            gdec = GlobalDictDecoder()
+            lo_v = hi_v = None
+            for _b, meta, blob in cf.blocks():
+                blk = decode_str_block(blob, meta, gdec)
+                arr = blk.to_arrow(binary=True)
+                if blk.validity is not None:
+                    arr = arr.drop_null()
+                if len(arr) == 0:
                     continue
-                # string column: metadata path iff the winning bounds
-                # are exact. All-null chunks carry min_bin None.
-                lo = hi = None
-                meta_ok = True
-                for i in range(cm.n):
-                    if cm.n_nulls[i] == cm.n_values[i]:
-                        continue  # all-null chunk: no extrema
-                    mb, xb = cm.min_bin[i], cm.max_bin[i]
-                    if mb is None or xb is None:
-                        meta_ok = False
-                        break
-                    if lo is None or mb < lo[0]:
-                        lo = (mb, bool(cm.min_exact[i]))
-                    # max side: a TIE with an inexact candidate demotes
-                    # exactness — the candidate's true max extends the
-                    # shared 128-byte prefix and so EXCEEDS the tied
-                    # "exact" winner (min side is safe: an inexact tying
-                    # prefix understates its chunk's true min, so the
-                    # exact winner remains the smaller value)
-                    if hi is None or xb > hi[0]:
-                        hi = (xb, bool(cm.max_exact[i]))
-                    elif xb == hi[0] and not cm.max_exact[i]:
-                        hi = (xb, False)
-                if meta_ok and lo is not None and not (lo[1] and hi[1]):
-                    meta_ok = False
-                if not meta_ok:
-                    # decode fallback (this partition's column only)
-                    gdec = GlobalDictDecoder()
-                    lo_v = hi_v = None
-                    for rg in range(cf.pf.metadata.num_row_groups):
-                        tbl = cf.pf.read_row_group(
-                            rg, columns=_META_COLS + ["blob", "seg"]
-                        )
-                        rcm = _ColMeta(tbl)
-                        b_off, b_mv = _binary_views(tbl.column("blob").combine_chunks())
-                        s_off, s_mv = _binary_views(tbl.column("seg").combine_chunks())
-                        for i in range(rcm.n):
-                            meta = rcm.meta_dict(i, s_mv[s_off[i]: s_off[i + 1]])
-                            blk = decode_str_block(
-                                b_mv[b_off[i]: b_off[i + 1]], meta, gdec
-                            )
-                            arr = blk.to_arrow(binary=True)
-                            if blk.validity is not None:
-                                arr = arr.drop_null()
-                            if len(arr) == 0:
-                                continue
-                            mm = pc.min_max(arr)
-                            bmn, bmx = mm["min"].as_py(), mm["max"].as_py()
-                            if lo_v is None or bmn < lo_v:
-                                lo_v = bmn
-                            if hi_v is None or bmx > hi_v:
-                                hi_v = bmx
-                    lo_b, hi_b = lo_v, hi_v
-                else:
-                    lo_b = None if lo is None else lo[0]
-                    hi_b = None if hi is None else hi[0]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([None], type=pa.int64()),
-                     pa.array([None], type=pa.int64()),
-                     pa.array([lo_b], type=pa.binary()),
-                     pa.array([hi_b], type=pa.binary()),
-                     pa.array([cnt], type=pa.int64()),
-                     pa.array([nulls], type=pa.int64())],
-                    names=["lo_int", "hi_int", "lo_bin", "hi_bin", "cnt", "nulls"],
-                )
+                mm = pc.min_max(arr)
+                bmn, bmx = mm["min"].as_py(), mm["max"].as_py()
+                if lo_v is None or bmn < lo_v:
+                    lo_v = bmn
+                if hi_v is None or bmx > hi_v:
+                    hi_v = bmx
+            lo_b, hi_b = lo_v, hi_v
+        else:
+            lo_b = None if lo is None else lo[0]
+            hi_b = None if hi is None else hi[0]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([None], type=pa.int64()),
+             pa.array([None], type=pa.int64()),
+             pa.array([lo_b], type=pa.binary()),
+             pa.array([hi_b], type=pa.binary()),
+             pa.array([cnt], type=pa.int64()),
+             pa.array([nulls], type=pa.int64())],
+            names=["lo_int", "hi_int", "lo_bin", "hi_bin", "cnt", "nulls"],
+        )
 
     ddl = "lo_int long, hi_int long, lo_bin binary, hi_bin binary, cnt long, nulls long"
-    rows = _assign_df(spark, [p for p, _ in parts]).mapInArrow(kernel, schema=ddl).collect()
+    rows = _map_parts(spark, [p for p, _ in parts], part_batches, ddl).collect()
 
     cnt = sum(r["cnt"] for r in rows)
     if is_str:

@@ -1571,7 +1571,9 @@ def _zone_splits(
     def cand_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for pid in batch.column("part_id").to_pylist():
-                cm = _ColFile(out_dir, int(pid), column).meta()
+                # zone metadata only: the lane type is all that matters
+                cm = _ColFile(out_dir, int(pid), column,
+                              "binary" if is_str else "int").cm
                 w = cm.n_values - cm.n_nulls
                 if is_str:
                     full = list(cm.min_bin)
@@ -1591,7 +1593,8 @@ def _zone_splits(
                 if second_rid:
                     k1c = offsets[int(pid)] + cm.row_start.astype(np.int64)
                 elif second is not None:
-                    cm1 = _ColFile(out_dir, int(pid), second).meta()
+                    cm1 = _ColFile(out_dir, int(pid), second,
+                                   "binary" if second_is_str else "int").cm
                     if second_is_str:
                         k1c = np.array(
                             [_prefix56(b) if b is not None else i64_min

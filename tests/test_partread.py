@@ -79,6 +79,16 @@ def test_modes_agree_random_access(spark, table):
     assert list(got["url"]) == [order[i] for i in ids]
     want = pdf.set_index("url").loc[got["url"]].reset_index()
     pd.testing.assert_frame_equal(got[list(pdf.columns)], want[list(pdf.columns)])
+    # a projection keeps the caller's column order; unknown names and an
+    # empty projection are rejected before any Spark job
+    sub = random_access(spark, out, ids, project=["lang", "url"])
+    assert sub.columns == ["row_id", "lang", "url"]
+    sub = sub.toPandas().sort_values("row_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(sub, got[["row_id", "lang", "url"]])
+    with pytest.raises(KeyError):
+        random_access(spark, out, ids, project=["nope"])
+    with pytest.raises(ValueError):
+        random_access(spark, out, ids, project=[])
 
 
 def test_modes_agree_scan(spark, table):
@@ -90,6 +100,14 @@ def test_modes_agree_scan(spark, table):
     pd.testing.assert_frame_equal(a, w)
     # bit-identical doubles: -0.0 survives as -0.0
     assert (a["v"].to_numpy().view(np.int64) == w["v"].to_numpy().view(np.int64)).all()
+    # a projection keeps the caller's column order; an unknown name
+    # raises instead of returning no columns
+    sub = scan(spark, out, ["v", "url"])
+    assert sub.columns == ["v", "url"]
+    sub = sub.toPandas().sort_values("url").reset_index(drop=True)
+    pd.testing.assert_frame_equal(sub, a[["v", "url"]])
+    with pytest.raises(KeyError):
+        scan(spark, out, ["nope"])
 
 
 def test_modes_agree_group_count(spark, table):

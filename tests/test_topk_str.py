@@ -65,7 +65,7 @@ def test_column_topk_str_prunes_blobs(spark, tmp_path_factory):
     encode_job(spark, src, out, num_parts=1, block_rows=128, order_col="url")
     _, parts = load_manifest(out)
     pid = parts[0][0]
-    nb = _ColFile(out, pid, "s").meta().n
+    nb = _ColFile(out, pid, "s", "str").cm.n
     assert nb >= 20
     probe: dict = {}
     best = _topk_str_part(out, pid, "s", 10, True, probe=probe)
