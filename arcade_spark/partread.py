@@ -351,9 +351,13 @@ def _decode_at(vt: str, meta: dict, blob, pos, gdec) -> pa.Array:
 
 
 def _resolve_project(
-    all_cols: list[tuple[str, str]], names: list[str]
+    all_cols: list[tuple[str, str]], names: list[str], op: str | None = None
 ) -> list[tuple[str, str]]:
-    """``(name, vtype)`` per projected name, in the caller's order."""
+    """``(name, vtype)`` per projected name, in the caller's order.
+    ``op`` names a read that needs at least one column: an empty
+    projection then raises before any Spark job."""
+    if op is not None and not names:
+        raise ValueError(f"{op} needs at least one projected column")
     vt_of = dict(all_cols)
     missing = [c for c in names if c not in vt_of]
     if missing:
@@ -764,7 +768,7 @@ def scan_parts(
     from arcade_spark.schema import spark_type_for
 
     all_cols, parts = load_manifest(out_dir)
-    sel = all_cols if columns is None else _resolve_project(all_cols, columns)
+    sel = all_cols if columns is None else _resolve_project(all_cols, columns, "scan")
     ddl = ", ".join(
         (["part_id int", "block_id int", "pos long"] if emit_meta else [])
         + [f"{n} {spark_type_for(v)}" for n, v in sel]
@@ -833,9 +837,7 @@ def random_access_parts(
 
     all_cols, parts = load_manifest(out_dir)
     if project is not None:
-        if not project:
-            raise ValueError("random_access needs at least one projected column")
-        all_cols = _resolve_project(all_cols, project)
+        all_cols = _resolve_project(all_cols, project, "random_access")
     targets = _random_access_targets(parts, row_ids)
     ddl = "row_id long, " + ", ".join(
         f"{n} {spark_type_for(v)}" for n, v in all_cols

@@ -1803,9 +1803,8 @@ def _bucketizer(
                 names=["bkt"] + batch.schema.names,
             )
 
-    lanes_ddl = ", ".join(
-        f"k{i} {'binary' if vt in ('str', 'binary') else 'long'}"
-        for i, vt in enumerate(kvts)
+    lanes_ddl = _lanes_ddl(
+        [f"k{i}" for i in range(len(kvts))], [vt in ("str", "binary") for vt in kvts]
     )
     return bucketize, f"bkt int, {lanes_ddl}, rid long"
 
@@ -2075,9 +2074,8 @@ def group_rank_values(
                 )
                 ri += 1
             acc = hi
-    lanes_ddl = ", ".join(
-        f"{g} {'binary' if kvts[i + 1] in ('str', 'binary') else 'long'}"
-        for i, g in enumerate(gnames)
+    lanes_ddl = _lanes_ddl(
+        gnames, [vt in ("str", "binary") for vt in kvts[1:len(gnames) + 1]]
     ) + ", bkt int"
     # the per-cell rank targets travel ON the broadcast-joined cells
     # frame (array columns), not in the kernel closure — closing over
@@ -2546,8 +2544,9 @@ def filter_semijoin(
 _BCAST_MAX_KEY_ROWS = 2_000_000
 
 # per-task row bound for the per-key window operators (sessionize /
-# rolling_agg / join_asof): a key whose row count exceeds this pre-splits into
-# time-range slices so no single task absorbs its whole timeline.
+# rolling_agg / window_shift / join_asof — the ``_keyed_pass`` gate): a
+# key whose row count exceeds this pre-splits into time-range slices so
+# no single task absorbs its whole timeline.
 # 4M narrow lane rows ≈ 100-160 MB of lexsort input — comfortable for
 # one executor task; at 10^12 rows the stats pass that finds hot keys
 # is one map-side-combined O(distinct keys) aggregation.
@@ -2676,10 +2675,7 @@ def join_encoded(
             "left_semi" if how == "semi" else "left_anti",
         )
         ids, ln = _clear_lanes(ids, project_a)
-        out_cols = [
-            _group_key_out(F.col(ln[kn]), va).alias(ka_name)
-            for kn, va, ka_name in zip(knames, kvts_a, keys_a)
-        ]
+        out_cols = _keys_out([ln[kn] for kn in knames], kvts_a, keys_a)
         if not project_a:
             return ids.select(*out_cols)
         # rid_a is unique here (one row per left row after the deduped-
@@ -2704,10 +2700,7 @@ def join_encoded(
         )
         ids = ids.unionByName(unmatched_b)
     joined, ln = _clear_lanes(ids, project_a + project_b)
-    out_cols = [
-        _group_key_out(F.col(ln[kn]), va).alias(ka_name)
-        for kn, va, ka_name in zip(knames, kvts_a, keys_a)
-    ]
+    out_cols = _keys_out([ln[kn] for kn in knames], kvts_a, keys_a)
     # the match stream flows through one gather-expand attach per side
     # (a rid repeats once per match; the other side's manifest row
     # total bounds that multiplicity); a null rid is an outer side's
@@ -2747,6 +2740,472 @@ def _lane_vtypes(
             raise KeyError(f"no such column: {c}")
         out.append(all_cols[c])
     return out
+
+
+def _as_cols(cols: str | list[str]) -> list[str]:
+    return [cols] if isinstance(cols, str) else list(cols)
+
+
+def _keyed_vtypes(
+    spark: SparkSession, out_dir: str, keys: list[str], rest: list[str],
+    what: str = "key",
+) -> list[str]:
+    """The shared lane-type check of the keyed-timeline operators:
+    manifest vtypes of ``keys + rest``; a float key column is rejected
+    (float equality is not a sane partition contract)."""
+    vts = _lane_vtypes(spark, out_dir, keys + rest)
+    for c, vt in zip(keys, vts):
+        if vt in ("double", "float"):
+            raise NotImplementedError(
+                f"float {what} columns are not a sane partition contract: {c}"
+            )
+    return vts
+
+
+def _lanes_ddl(names: list[str], is_bin: list[bool]) -> str:
+    """Spark DDL of narrow lanes: binary for str/binary, else long."""
+    return ", ".join(
+        f"{k} {'binary' if b else 'long'}" for k, b in zip(names, is_bin)
+    )
+
+
+def _keys_out(knames: list[str], vts: list[str], names: list[str]) -> list:
+    """Key lanes back to their logical column types and names."""
+    return [
+        _group_key_out(F.col(kn), vt).alias(name)
+        for kn, vt, name in zip(knames, vts, names)
+    ]
+
+
+def _i64(tbl, name: str) -> np.ndarray:
+    return tbl.column(name).to_numpy(zero_copy_only=False).astype(np.int64)
+
+
+def _row_key(row, names) -> tuple:
+    """Row → hashable driver-side key tuple: with
+    ``spark.sql.execution.pyspark.binaryAsBytes`` off, Spark hands
+    binary lanes back as bytearray, which doesn't hash — normalize to
+    bytes."""
+    return tuple(
+        bytes(v) if isinstance(v, (bytearray, memoryview)) else v
+        for v in (row[k] for k in names)
+    )
+
+
+def _win_lanes(tbl, names: list[str], is_bin: list[bool]):
+    """Per-lane (is_null uint8, grouping/sort value, original) arrays
+    for a keyed kernel batch. Int lanes fill nulls with 0 (the
+    is_null lane keeps them distinct and NULLS-LAST); binary lanes
+    factorize to dense per-task codes (None → b"" + is_null;
+    ``np.unique`` is lexicographic, matching bytewise ORDER BY)."""
+    import pyarrow as pa
+
+    out = []
+    for name, b in zip(names, is_bin):
+        arr = tbl.column(name)
+        if isinstance(arr, pa.ChunkedArray):
+            arr = arr.combine_chunks()
+        isn = arr.is_null().to_numpy(zero_copy_only=False).astype(np.uint8)
+        if b:
+            _, codes = np.unique(
+                arr.fill_null(b"").to_numpy(zero_copy_only=False),
+                return_inverse=True,
+            )
+            out.append((isn, codes.astype(np.int64),
+                        arr.to_numpy(zero_copy_only=False)))
+        else:
+            vals = (
+                arr.fill_null(0).to_numpy(zero_copy_only=False)
+                .astype(np.int64)
+            )
+            out.append((isn, vals, None))
+    return out
+
+
+def _lane_arrays(lanes, is_bin: list[bool], rows) -> list:
+    """Arrow arrays of ``_win_lanes`` lanes at ``rows``: original bytes
+    for binary lanes (None stays null), int lanes null where the lane
+    was null."""
+    import pyarrow as pa
+
+    out = []
+    for (isn, val, obj), b in zip(lanes, is_bin):
+        if b:
+            out.append(pa.array(obj[rows], type=pa.binary()))
+        else:
+            out.append(pa.array(
+                val[rows], mask=isn[rows].astype(bool) if isn.any() else None
+            ))
+    return out
+
+
+def _runs_kernel(fn):
+    """``fn(tbl)`` as a ``mapInArrow`` kernel: the one batch-concat
+    prologue of the keyed-timeline kernels (a task without rows yields
+    nothing). ``functools.wraps`` keeps ``fn``'s name, which the plan
+    shows (``asof_merge``)."""
+    import functools
+
+    @functools.wraps(fn)
+    def kernel(batches):
+        import pyarrow as pa
+
+        chunks = [pa.Table.from_batches([b]) for b in batches]
+        if not chunks:
+            return
+        tbl = pa.concat_tables(chunks).combine_chunks()
+        if tbl.num_rows:
+            yield from fn(tbl)
+
+    return kernel
+
+
+class _Runs:
+    """The sorted runs of one keyed-timeline kernel task — the one
+    task-side sort of join_asof, sessionize, rolling_agg, window_shift
+    and top_per_key.
+
+    Rows sort by the key lanes ``knames`` (through ``_win_lanes``; a
+    lane's is-null key sorts first, NULLS LAST, only when that lane
+    has a null in this task), then by the ``slc`` lane when ``slc`` is
+    set, then by ``inner`` (the operator's sort keys, primary first).
+    A run is one key's rows — one (key, slice)'s when sliced: a slice
+    boundary is a run boundary, and the split's context, carry or base
+    rows supply what lies beyond it. Every position below is in SORTED
+    order: ``order`` maps it to the input row; ``change`` marks run
+    starts; ``run_start`` / ``run_end`` (exclusive) bound each row's
+    run; ``starts`` / ``ends`` list the runs; ``slc`` is the sorted
+    slice lane."""
+
+    def __init__(self, tbl, knames: list[str], k_bin: list[bool],
+                 inner: list, slc: bool = False):
+        self.tbl, self.n, self.k_bin = tbl, tbl.num_rows, k_bin
+        self.lanes = _win_lanes(tbl, knames, k_bin)
+        runs = []  # the run-defining sort keys, primary first
+        for isn, val, _o in self.lanes:
+            if isn.any():
+                runs.append(isn)
+            runs.append(val)
+        if slc:
+            runs.append(_i64(tbl, "slc"))
+        self.order = np.lexsort(tuple(reversed(runs + list(inner))))
+        self.slc = runs[-1][self.order] if slc else None
+        self.idx = np.arange(self.n, dtype=np.int64)
+        self.change = self.breaks(runs)
+        self.run_start = np.maximum.accumulate(
+            np.where(self.change, self.idx, 0)
+        )
+        self.starts = np.nonzero(self.change)[0]
+        self.ends = np.append(self.starts[1:], self.n)
+        self.run_end = np.repeat(self.ends, self.ends - self.starts)
+
+    def breaks(self, lanes: list, change=None) -> np.ndarray:
+        """``change`` (default: position 0 only) OR every position
+        where one of ``lanes`` (input order) differs from the previous
+        sorted row."""
+        out = np.zeros(self.n, dtype=bool) if change is None else change.copy()
+        out[0] = True
+        for lane in lanes:
+            s = lane[self.order]
+            out[1:] |= s[1:] != s[:-1]
+        return out
+
+    def search(self, vals, q, lo, hi, side: str) -> np.ndarray:
+        """Per query, the first position p in ``[lo, hi)`` with
+        ``vals[p] > q`` (``side="right"``) or ``>= q`` (``"left"``),
+        else ``hi``: one vectorized binary search (≈log2 n numpy passes,
+        no per-key Python). ``vals`` is sorted; each query's range lies
+        in one run, where it ascends."""
+        last = vals.size - 1
+        while True:
+            active = lo < hi
+            if not active.any():
+                return lo
+            mid = (lo + hi) // 2
+            v = vals[np.minimum(mid, last)]
+            go = (v <= q) if side == "right" else (v < q)
+            lo = np.where(active & go, mid + 1, lo)
+            hi = np.where(active & ~go, mid, hi)
+
+    def sliced(self):
+        """``(starts, ends, keep)``: the runs of sliced keys
+        (``nsl > 1``) and their mask over all runs — a summary pass
+        emits rows for these only, so its collect stays O(hot rows /
+        threshold)."""
+        keep = _i64(self.tbl, "nsl")[self.order][self.starts] > 1
+        return self.starts[keep], self.ends[keep], keep
+
+    def keys_at(self, pos) -> list:
+        """Arrow arrays of the key lanes at sorted positions ``pos``
+        (index array, bool mask or slice)."""
+        return _lane_arrays(self.lanes, self.k_bin, self.order[pos])
+
+
+def _split_hot_keys(
+    spark: SparkSession,
+    keyed: DataFrame,
+    knames: list[str],
+    k_bin: list[bool],
+    t_name: str,
+    overlap: int,
+    threshold: int,
+    max_hot: int = _HOT_KEY_MAX,
+    overlap_after: int = 0,
+    row_bound: int | None = None,
+) -> tuple[DataFrame | None, int]:
+    """Time-range pre-split for hot keys (PLANS.md §9 escape hatch).
+
+    Finds keys with more than ``threshold`` rows (one map-side-combined
+    aggregation over the narrow key stream), assigns every row of a hot
+    key a time-range slice ``slc = (t - tmin) div S`` with slice width
+    ``S = max(overlap, ceil(span / ceil(cnt / threshold)))``, and —
+    when ``overlap > 0`` (rolling frames) — replicates each row in the
+    ``overlap`` band below a slice boundary into the NEXT slice as a
+    context row (``emit = false``): every emitted row's trailing frame
+    is then complete within its own (key, slc) task. ``overlap_after``
+    symmetrically replicates rows in that band ABOVE a slice's lower
+    boundary into the PREVIOUS slice — two-sided RANGE frames need
+    both; ``S >= overlap + overlap_after`` keeps the bands disjoint
+    (at most one copy per row per direction). ``overlap = 0``
+    (sessionize) adds no context rows; boundary stitching is the
+    caller's job via the ``nsl`` column (> 1 marks sliced keys).
+
+    Returns ``(sliced_df, n_hot)`` where sliced_df adds ``slc`` (long),
+    ``emit`` (boolean) and ``nsl`` (long, slices for the row's key) to
+    ``keyed``'s columns — or ``(None, 0)`` when no key is hot. All
+    arithmetic is exact int64 (Spark ``div``/``%`` on longs; the
+    driver-side slice math uses Python ints)."""
+    from pyspark import StorageLevel
+
+    # persist the NARROW key stream before the stats pass (round-8,
+    # guide §5): the stream is consumed again right below by the
+    # hot-key join/explode, so without this the kernel decode runs
+    # twice (stats + slicing). Rows are tens of bytes. The handle is
+    # registered at once — a caller that raises before releasing it
+    # cannot leak it past the next release_key_caches() — and attached
+    # to the returned frame as ``_arcade_input_cache``, so
+    # ``_keyed_pass`` unpersists it early once its own downstream
+    # persist is materialized. Registering releases the previous op's
+    # caches first: at most one op's streams stay outstanding per
+    # session.
+    release_key_caches()
+    keyed_c = keyed.persist(StorageLevel.MEMORY_AND_DISK)
+    _register_key_cache(keyed_c)
+    stats_df = (
+        keyed_c.groupBy(*knames)
+        .agg(
+            F.count("*").alias("_cnt"),
+            F.min(t_name).alias("_tmin"),
+            F.max(t_name).alias("_tmax"),
+        )
+        .filter(F.col("_cnt") > threshold)
+    )
+    if row_bound is not None and row_bound // max(threshold, 1) <= max_hot:
+        # a key is hot only past `threshold` rows, so n_hot <=
+        # row_bound/threshold — when that bound already fits max_hot
+        # the guard count is redundant and one whole action round is
+        # saved (round-8; the stats pass is the split's serial prefix)
+        hot = stats_df.collect()
+        if not hot:
+            keyed_c.unpersist()
+            return None, 0
+    else:
+        stats = stats_df.persist(StorageLevel.MEMORY_AND_DISK)
+        # persist + full count, never limit(n+1).collect(): CollectLimit
+        # executes partition-batch by partition-batch and re-runs the
+        # whole keyed-stream kernel several times (measured 6x the cost
+        # of one full pass on a 200k-row stream)
+        try:
+            n_hot = stats.count()
+            if n_hot == 0:
+                keyed_c.unpersist()
+                return None, 0
+            if n_hot > max_hot:
+                keyed_c.unpersist()
+                raise ValueError(
+                    f"more than {max_hot} keys exceed {threshold} rows — "
+                    "raise the hot-key threshold or aggregate first"
+                )
+            hot = stats.collect()
+        finally:
+            stats.unpersist()
+    rows = []
+    for r in hot:
+        cnt, tmin, tmax = int(r["_cnt"]), int(r["_tmin"]), int(r["_tmax"])
+        span = tmax - tmin
+        if float(tmax) - float(tmin) >= float(2**62):
+            raise NotImplementedError(
+                "a hot key's timeline spans more than 2^62 lane units — "
+                "time-range slicing would overflow; filter sentinels first"
+            )
+        nsl_target = -(-cnt // threshold)  # ceil
+        s_width = max(int(overlap) + int(overlap_after),
+                      -(-(span + 1) // nsl_target), 1)
+        nsl = span // s_width + 1
+        rows.append((*_row_key(r, knames), tmin, s_width, nsl))
+    hot_df = spark.createDataFrame(
+        rows, schema=f"{_lanes_ddl(knames, k_bin)}, _tmin long, _s long, _nsl long"
+    )
+    j = keyed.join(F.broadcast(hot_df), on=knames, how="left")
+    slc = F.expr(f"CASE WHEN _s IS NULL THEN 0L "
+                 f"ELSE ({t_name} - _tmin) div _s END")
+    base = F.struct(slc.alias("slc"), F.lit(True).alias("emit"))
+    copies = F.array(base)
+    if overlap > 0:
+        # rows within `overlap` below the next slice's lower boundary
+        # replicate into it as context (emit=false); s_width >= overlap
+        # caps replication at one extra copy per row
+        ctx_cond = (
+            F.col("_s").isNotNull()
+            & (slc < F.col("_nsl") - 1)
+            & (F.expr(f"({t_name} - _tmin) % _s")
+               >= F.col("_s") - F.lit(int(overlap)))
+        )
+        ctx = F.struct((slc + 1).alias("slc"), F.lit(False).alias("emit"))
+        copies = F.when(ctx_cond, F.array(base, ctx)).otherwise(copies)
+    if overlap_after > 0:
+        # rows within `overlap_after` at-or-above a slice's lower
+        # boundary replicate into the PREVIOUS slice (two-sided
+        # frames); disjoint from the up-band since S >= sum of bands,
+        # so array_union of the two whens never double-copies
+        ctx2_cond = (
+            F.col("_s").isNotNull()
+            & (slc > 0)
+            & (F.expr(f"({t_name} - _tmin) % _s")
+               < F.lit(int(overlap_after)))
+        )
+        ctx2 = F.struct((slc - 1).alias("slc"), F.lit(False).alias("emit"))
+        copies = F.when(
+            ctx2_cond, F.concat(copies, F.array(ctx2))
+        ).otherwise(copies)
+    out = (
+        j.withColumn("_se", F.explode(copies))
+        .select(
+            *keyed.columns,
+            F.col("_se.slc").alias("slc"),
+            F.col("_se.emit").alias("emit"),
+            F.coalesce(F.col("_nsl"), F.lit(1)).alias("nsl"),
+        )
+    )
+    out._arcade_input_cache = keyed_c
+    return out, len(hot)
+
+
+def _keyed_pass(
+    spark: SparkSession,
+    keyed: DataFrame,
+    knames: list[str],
+    k_bin: list[bool],
+    final,
+    schema: str,
+    finish,
+    *,
+    t_name: str | None = None,
+    out_dirs: tuple = (),
+    threshold: int | None = None,
+    band: tuple[int, int] = (0, 0),
+    summary: tuple | None = None,
+    fold: tuple | None = None,
+    bases: dict | None = None,
+) -> DataFrame:
+    """The one driver-side partitioner of the keyed-timeline operators:
+    key stream → hot-key gate → repartition → final kernel.
+
+    ``keyed`` is the narrow key stream (key lanes ``knames``, the
+    timeline lane ``t_name``, and whatever else the kernels read);
+    ``final(split)`` builds the final ``mapInArrow`` kernel, whose
+    output DDL is ``schema``; ``finish(ids, split)`` turns its output
+    into the operator's result.
+
+    Hot-key gate: when ``threshold`` is set and the manifests of
+    ``out_dirs`` hold more rows than it (a free bound — no job when it
+    cannot pass), ``_split_hot_keys`` slices every key past
+    ``threshold`` rows into ``t_name`` ranges. With no hot key the
+    stream hash-repartitions on the key lanes into ``final(False)``.
+    Otherwise it repartitions on the key lanes plus ``slc`` into
+    ``final(True)``, and each slice gets the context from outside it by
+    one of three boundary strategies:
+
+    - band (no ``summary``): the split replicates the rows within
+      ``band = (overlap, overlap_after)`` of a slice boundary into the
+      neighbour slice as context rows (``emit = false``) — bounded
+      ``rolling_agg``;
+    - bases (``bases`` = {column: identity}): ``summary = (kernel,
+      ddl)`` emits one row per sliced run, the driver collects them and
+      ``fold = (fn, ddl)`` runs ``fn`` per key over its summary rows in
+      ``slc`` order, yielding ``(slc, *base values)``; the bases
+      broadcast-join onto the slice stream, the identity filling
+      unsliced keys — ``sessionize`` and cumulative ``rolling_agg``;
+    - carries (``summary`` without ``bases``): the same summary →
+      collect → fold, but ``fn`` yields ``(target slc, *fields)`` rows
+      that are unioned into the stream as carry rows — ``window_shift``
+      and ``join_asof``.
+
+    Bases and carries persist the slice stream (repartitioned for
+    bases, so the summary and final passes read it in place; as-is for
+    carries, whose final pass shuffles the union anyway), register it
+    for ``release_key_caches()``, release the split's input cache once
+    the summary collect has materialized it, and attach it to the
+    result as ``_arcade_key_cache``."""
+    from collections import defaultdict
+
+    from pyspark import StorageLevel
+
+    sliced = None
+    if threshold is not None:
+        bound = sum(_manifest_total_rows(d) for d in out_dirs)
+        if bound > threshold:
+            sliced, _n_hot = _split_hot_keys(
+                spark, keyed, knames, k_bin, t_name, overlap=band[0],
+                threshold=threshold, overlap_after=band[1], row_bound=bound,
+            )
+    keys = [F.col(k) for k in knames]
+    if sliced is None:
+        ids = keyed.repartition(*keys).mapInArrow(final(False), schema=schema)
+        return finish(ids, False)
+    keys.append(F.col("slc"))
+    if summary is None:
+        # band: the split's context rows complete every emitted row's
+        # frame inside its (key, slc) task; the stream is consumed
+        # once, and its input cache stays registered for release
+        ids = sliced.repartition(*keys).mapInArrow(final(True), schema=schema)
+        return finish(ids, True)
+    u = (sliced.repartition(*keys) if bases is not None else sliced).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    _register_key_cache(u)
+    kernel, ddl = summary
+    summaries = (
+        (u if bases is not None else u.repartition(*keys))
+        .mapInArrow(kernel, schema=ddl).collect()
+    )
+    # the summary collect materialized u — release the split's input
+    # key-stream cache
+    sliced._arcade_input_cache.unpersist()
+    per_key: dict[tuple, list] = defaultdict(list)
+    for r in summaries:
+        per_key[_row_key(r, knames)].append(r)
+    fn, fold_ddl = fold
+    rows = [
+        (*kv, *out)
+        for kv, lst in per_key.items()
+        for out in fn(sorted(lst, key=lambda r: r["slc"]))
+    ]
+    fed = spark.createDataFrame(
+        rows, schema=f"{_lanes_ddl(knames, k_bin)}, slc long, {fold_ddl}"
+    )
+    if bases is not None:
+        fed = u.join(
+            F.broadcast(fed), on=[*knames, "slc"], how="left"
+        ).withColumns({
+            c: F.coalesce(F.col(c), F.lit(v)) for c, v in bases.items()
+        })
+    else:
+        own = u.select(*fed.columns)
+        fed = (own.unionByName(fed) if rows else own).repartition(*keys)
+    res = finish(fed.mapInArrow(final(True), schema=schema), True)
+    res._arcade_key_cache = u
+    return res
 
 
 def join_asof(
@@ -2822,7 +3281,7 @@ def join_asof(
             f"direction must be 'backward', 'forward' or 'nearest': "
             f"{direction!r}"
         )
-    by_cols = [by] if isinstance(by, str) else list(by)
+    by_cols = _as_cols(by)
     if not by_cols:
         raise ValueError("by must name at least one column")
     on_b = on if on_b is None else on_b
@@ -2839,9 +3298,9 @@ def join_asof(
     # validate lane types from the manifests BEFORE building either
     # stream, so a bad on-column reports its own error (not a missing-
     # column KeyError from the other side's key extraction)
-    vts_a = _lane_vtypes(spark, out_a, by_cols + [on])
+    vts_a = _keyed_vtypes(spark, out_a, by_cols, [on])
     _require_int64_lane(vts_a[m], on, "as-of on")
-    vts_b = _lane_vtypes(spark, out_b, by_cols + [on_b])
+    vts_b = _keyed_vtypes(spark, out_b, by_cols, [on_b])
     _require_int64_lane(vts_b[m], on_b, "as-of on")
     for i, (va, vb) in enumerate(zip(vts_a, vts_b)):
         if (va in ("str", "binary")) != (vb in ("str", "binary")):
@@ -2881,350 +3340,179 @@ def join_asof(
         *knames, F.col(f"k{m}").alias("t"),
         F.lit(side_right).cast("int").alias("side"), "rid",
     )
-    u_base = lv.unionByName(rv)
-    sliced = None
-    _rb = (
-        _manifest_total_rows(out_a) + _manifest_total_rows(out_b)
-        if hot_key_threshold is not None else 0
-    )
-    if hot_key_threshold is not None and _rb > hot_key_threshold:
-        sliced, _n_hot = _split_hot_keys(
-            spark, u_base, knames, lane_is_bin, "t",
-            overlap=0, threshold=hot_key_threshold, row_bound=_rb,
-        )
-    with_slices = sliced is not None
-    if with_slices:
-        # the sliced stream feeds BOTH the per-slice carry aggregation
-        # and the final merge — persist so the union key-stream kernel
-        # and the hot-key join/explode run once, not three times
-        from pyspark import StorageLevel
-
-        sliced = sliced.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(sliced)
-        # CARRY rows give each slice the out-of-slice context its merge
-        # needs — one virtual right row per (hot key, slice, direction):
-        # backward = the latest right of all EARLIER slices (exclusive
-        # prefix max over per-slice argmax); forward = the earliest
-        # right of all LATER slices (suffix min, ties to greatest rid);
-        # nearest carries both. A carried row duplicates a real right
-        # row, and the kernel emits left rows only, so output never
-        # duplicates. Boundary ties are impossible: a carry's t is
-        # strictly outside its target slice's time range.
-        want_back = direction in ("backward", "nearest")
-        want_fwd = direction in ("forward", "nearest")
-        is_r = F.col("side") == F.lit(side_right)
-        # forward-carry tie at equal t must MATCH the kernel's pick:
-        # the nearest kernel's suffix-min of positions takes the
-        # SMALLEST rid among tied rights, while the pure forward
-        # merge (max-accumulate over the negated lane) takes the
-        # GREATEST — a mismatched carry would make the split path
-        # diverge from the unsplit one exactly on carried ties
-        fwd_tie = (F.col("rid") if direction == "nearest"
-                   else (-F.col("rid")))
-        per_slice = (
-            sliced.filter(F.col("nsl") > 1)  # every present slice of a
-            # hot key, even ones with left rows only — they need carry
-            .groupBy(*knames, "slc")
-            .agg(
-                F.max(
-                    F.when(is_r, F.struct(F.col("t"), F.col("rid")))
-                ).alias("mx"),
-                F.min(
-                    F.when(is_r, F.struct(
-                        F.col("t"), fwd_tie.alias("r2")
-                    ))
-                ).alias("mn"),
-            )
-            .collect()
-        )
-        # the per-slice collect materialized the sliced persist — the
-        # split's input key-stream cache is no longer needed
-        _ic = getattr(sliced, "_arcade_input_cache", None)
-        if _ic is not None:
-            _ic.unpersist()
-        from collections import defaultdict
-
-        per_key: dict[tuple, list] = defaultdict(list)
-        for r in per_slice:
-            kv = _row_key(r, knames)
-            mx = (None if r["mx"] is None
-                  else (int(r["mx"]["t"]), int(r["mx"]["rid"])))
-            mn = (None if r["mn"] is None
-                  else (int(r["mn"]["t"]),
-                        int(r["mn"]["r2"]) if direction == "nearest"
-                        else -int(r["mn"]["r2"])))
-            per_key[kv].append((int(r["slc"]), mx, mn))
-        carry_rows = []
-        for kv, lst in per_key.items():
-            lst.sort()
-            if want_back:
-                best = None
-                for i in range(1, len(lst)):
-                    cand = lst[i - 1][1]
-                    if cand is not None and (best is None or cand > best):
-                        best = cand
-                    if best is not None:
-                        carry_rows.append(
-                            (*kv, best[0], side_right, best[1], lst[i][0])
-                        )
-            if want_fwd:
-                best = None
-                # tie key mirrors fwd_tie: smallest rid for nearest
-                # (the kernel's suffix-min), greatest for forward
-                _fk = ((lambda c: (c[0], c[1]))
-                       if direction == "nearest"
-                       else (lambda c: (c[0], -c[1])))
-                for i in range(len(lst) - 2, -1, -1):
-                    cand = lst[i + 1][2]
-                    if cand is not None and (
-                        best is None or _fk(cand) < _fk(best)
-                    ):
-                        best = cand
-                    if best is not None:
-                        carry_rows.append(
-                            (*kv, best[0], side_right, best[1], lst[i][0])
-                        )
-        base_cols = [*knames, "t", "side", "rid", "slc"]
-        u = sliced.select(*base_cols)
-        if carry_rows:
-            lanes_sch = ", ".join(
-                f"{k} {'binary' if b else 'long'}"
-                for k, b in zip(knames, lane_is_bin)
-            )
-            carry_df = spark.createDataFrame(
-                carry_rows,
-                schema=f"{lanes_sch}, t long, side int, rid long, slc long",
-            )
-            u = u.unionByName(carry_df)
-        u = u.repartition(*[F.col(k) for k in knames], F.col("slc"))
-    else:
-        u = u_base.repartition(*[F.col(k) for k in knames])
-
     tol = tolerance
     inner_only = not keep_a
-    n_by_bin = list(lane_is_bin)
 
-    def asof_merge(batches):
-        chunks = [pa.Table.from_batches([b]) for b in batches]
-        if not chunks:
-            return
-        tbl = pa.concat_tables(chunks).combine_chunks()
-        n = tbl.num_rows
-        if n == 0:
-            return
-        lanes = []
-        orig_bin = []  # original binary lane values for output
-        for i in range(m):
-            arr = tbl.column(f"k{i}")
-            if n_by_bin[i]:
-                obj = arr.to_numpy(zero_copy_only=False)
-                _, codes = np.unique(obj, return_inverse=True)
-                lanes.append(codes.astype(np.int64))
-                orig_bin.append(obj)
-            else:
-                lanes.append(
-                    arr.to_numpy(zero_copy_only=False).astype(np.int64)
-                )
-                orig_bin.append(None)
-        t = tbl.column("t").to_numpy(zero_copy_only=False).astype(np.int64)
-        side = tbl.column("side").to_numpy(zero_copy_only=False)
-        rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
+    def sorted_runs(tbl, split: bool):
+        t = _i64(tbl, "t")
         # ~t (= -t-1) is an order-reversing involution with no wrap at
         # int64 min, and its pairwise differences equal those of -t
         t_sort = np.bitwise_not(t) if negate else t
-        keys = (rid, side, t_sort)
-        slc = None
-        if with_slices:
-            slc = (
-                tbl.column("slc").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            keys = keys + (slc,)
-        order = np.lexsort(keys + tuple(reversed(lanes)))
-        side_s = side[order]
-        t_s = t_sort[order]
-        rid_s = rid[order]
-        idx = np.arange(n, dtype=np.int64)
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        for lane in lanes:
-            ls = lane[order]
-            change[1:] |= ls[1:] != ls[:-1]
-        if with_slices:
-            # a slice boundary is a run boundary: carry rows supply the
-            # out-of-slice context, so the merge never crosses it
-            ss = slc[order]
-            change[1:] |= ss[1:] != ss[:-1]
-        run_start = np.maximum.accumulate(np.where(change, idx, 0))
-        is_right = side_s == side_right
-        acc = np.maximum.accumulate(np.where(is_right, idx, -1))
-        left_pos = idx[~is_right]
-        match = acc[left_pos]
-        ok = match >= run_start[left_pos]
-        safe = np.where(ok, match, 0)
-        if nearest:
-            # forward candidate on the SAME ascending sort: the first
-            # in-run position with t strictly greater than the left's
-            # (an exact-tie right is already the backward candidate at
-            # gap 0, which wins every tie) via run-bounded binary
-            # search, then a suffix-min of right positions
-            starts_n = np.nonzero(change)[0]
-            run_end = np.repeat(
-                np.append(starts_n[1:], n),
-                np.diff(np.append(starts_n, n)),
-            )
-            q = t_s[left_pos]
-            lo = left_pos + 1
-            hi = run_end[left_pos]
-            while True:
-                active = lo < hi
-                if not active.any():
-                    break
-                mid = (lo + hi) // 2
-                le = t_s[np.minimum(mid, n - 1)] <= q
-                step = active & le
-                lo = np.where(step, mid + 1, lo)
-                hi = np.where(active & ~le, mid, hi)
-            sufmin = np.minimum.accumulate(
-                np.where(is_right, idx, n)[::-1]
-            )[::-1]
-            sufmin = np.append(sufmin, n)
-            match_f = sufmin[lo]
-            ok_f = match_f < run_end[left_pos]
-            safe_f = np.where(ok_f, match_f, 0)
-            u64max = np.uint64(np.iinfo(np.uint64).max)
-            # both gaps nonnegative in sorted order → exact uint64
-            gap_b = np.where(
-                ok,
-                t_s[left_pos].astype(np.uint64) - t_s[safe].astype(np.uint64),
-                u64max,
-            )
-            gap_f = np.where(
-                ok_f,
-                t_s[safe_f].astype(np.uint64) - t_s[left_pos].astype(np.uint64),
-                u64max,
-            )
-            use_f = ok_f & (~ok | (gap_f < gap_b))
-            match = np.where(use_f, match_f, match)
-            ok = ok | ok_f
-            if tol is not None:
-                gap = np.where(use_f, gap_f, gap_b)
-                ok &= gap <= np.uint64(tol)
-            safe = np.where(ok, match, 0)
-        elif tol is not None:
-            # gap in original units: backward t_a - t_b; forward
-            # t_b - t_a — both equal t_sort[left] - t_sort[match].
-            # Sorted order makes the true gap nonnegative, so two's-
-            # complement uint64 subtraction is EXACT even when the lane
-            # spans more than int63 (plain int64 subtraction would wrap
-            # negative and silently pass the tolerance); rows where
-            # safe is the 0 placeholder are already ok=False and a huge
-            # wrapped uint64 gap keeps them false.
-            gap = t_s[left_pos].astype(np.uint64) - t_s[safe].astype(np.uint64)
-            ok &= gap <= np.uint64(tol)
-            safe = np.where(ok, match, 0)
-        if inner_only:
-            left_pos = left_pos[ok]
-            safe = safe[ok]
-            ok = ok[ok]
-        t_out = t[order]
-        cols_out = []
-        for i in range(m):
-            if n_by_bin[i]:
-                cols_out.append(
-                    pa.array(orig_bin[i][order][left_pos], type=pa.binary())
-                )
-            else:
-                cols_out.append(pa.array(lanes[i][order][left_pos]))
-        cols_out.append(pa.array(t_out[left_pos]))
-        cols_out.append(pa.array(t_out[safe], mask=~ok))
-        cols_out.append(pa.array(rid_s[left_pos]))
-        cols_out.append(pa.array(rid_s[safe], mask=~ok))
+        side = _i64(tbl, "side")
+        rid = _i64(tbl, "rid")
+        r = _Runs(tbl, knames, lane_is_bin, [t_sort, side, rid], slc=split)
+        o = r.order
+        return r, t[o], t_sort[o], side[o] == side_right, rid[o]
+
+    @_runs_kernel
+    def asof_edges(tbl):
+        # per sliced (key, slc) run: its LAST right row in sort order
+        # (backward: greatest t, then greatest rid; forward, over the
+        # negated lane: least t, then greatest rid) and its FIRST
+        # (nearest's forward candidate: least t, then least rid) — each
+        # the very row the merge kernel picks among tied rights
+        r, t_o, _t_s, is_right, rid_s = sorted_runs(tbl, True)
+        rs, re_, _keep = r.sliced()
+        if rs.size == 0:
+            return
+        last = np.maximum.accumulate(np.where(is_right, r.idx, -1))[re_ - 1]
+        first = np.minimum.accumulate(
+            np.where(is_right, r.idx, r.n)[::-1]
+        )[::-1][rs]
+        ok_l, ok_f = last >= rs, first < re_
+        last, first = np.where(ok_l, last, 0), np.where(ok_f, first, 0)
         yield pa.RecordBatch.from_arrays(
-            cols_out, names=[*knames, "t", "t_b", "rid_a", "rid_b"]
+            [*r.keys_at(rs), pa.array(r.slc[rs]),
+             pa.array(t_o[last], mask=~ok_l), pa.array(rid_s[last], mask=~ok_l),
+             pa.array(t_o[first], mask=~ok_f), pa.array(rid_s[first], mask=~ok_f)],
+            names=[*knames, "slc", "l_t", "l_rid", "f_t", "f_rid"],
         )
 
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}"
-        for k, b in zip(knames, lane_is_bin)
-    )
-    ids = u.mapInArrow(
-        asof_merge, schema=f"{lanes_ddl}, t long, t_b long, rid_a long, rid_b long"
-    )
-    if keep_a:
-        ids = ids.unionByName(
-            left_null.select(
-                *knames, F.col(f"k{m}").alias("t"),
-                F.lit(None).cast("long").alias("t_b"),
-                F.col("rid").alias("rid_a"),
-                F.lit(None).cast("long").alias("rid_b"),
+    def carry(slices):
+        # CARRY rows give each slice the out-of-slice context its merge
+        # needs — one virtual right row per (hot key, slice,
+        # direction): backward = the latest right of all EARLIER
+        # slices, forward = the earliest right of all LATER slices,
+        # nearest both. Slices are disjoint time ranges in slc order,
+        # so that right is the edge row of the nearest slice holding
+        # one. A carried row duplicates a real right row and the kernel
+        # emits left rows only, so output never duplicates; boundary
+        # ties are impossible (a carry's t lies strictly outside its
+        # target slice's range).
+        sweeps = []
+        if direction != "forward":
+            sweeps.append((slices, "l_"))
+        if direction != "backward":
+            sweeps.append((slices[::-1], "l_" if negate else "f_"))
+        for seq, edge in sweeps:
+            best = None
+            for s in seq:
+                if best is not None:
+                    yield (s["slc"], best[0], side_right, best[1])
+                if s[edge + "t"] is not None:
+                    best = (s[edge + "t"], s[edge + "rid"])
+
+    def make_merge(split: bool):
+        @_runs_kernel
+        def asof_merge(tbl):
+            r, t_o, t_s, is_right, rid_s = sorted_runs(tbl, split)
+            n, idx = r.n, r.idx
+            acc = np.maximum.accumulate(np.where(is_right, idx, -1))
+            left_pos = idx[~is_right]
+            match = acc[left_pos]
+            ok = match >= r.run_start[left_pos]
+            safe = np.where(ok, match, 0)
+            if nearest:
+                # forward candidate on the SAME ascending sort: the
+                # first in-run position with t strictly greater than the
+                # left's (an exact-tie right is already the backward
+                # candidate at gap 0, which wins every tie), then a
+                # suffix-min of right positions
+                run_end = r.run_end[left_pos]
+                lo = r.search(t_s, t_s[left_pos], left_pos + 1, run_end, "right")
+                sufmin = np.minimum.accumulate(
+                    np.where(is_right, idx, n)[::-1]
+                )[::-1]
+                sufmin = np.append(sufmin, n)
+                match_f = sufmin[lo]
+                ok_f = match_f < run_end
+                safe_f = np.where(ok_f, match_f, 0)
+                u64max = np.uint64(np.iinfo(np.uint64).max)
+                # both gaps nonnegative in sorted order → exact uint64
+                gap_b = np.where(
+                    ok,
+                    t_s[left_pos].astype(np.uint64) - t_s[safe].astype(np.uint64),
+                    u64max,
+                )
+                gap_f = np.where(
+                    ok_f,
+                    t_s[safe_f].astype(np.uint64) - t_s[left_pos].astype(np.uint64),
+                    u64max,
+                )
+                use_f = ok_f & (~ok | (gap_f < gap_b))
+                match = np.where(use_f, match_f, match)
+                ok = ok | ok_f
+                if tol is not None:
+                    gap = np.where(use_f, gap_f, gap_b)
+                    ok &= gap <= np.uint64(tol)
+                safe = np.where(ok, match, 0)
+            elif tol is not None:
+                # gap in original units: backward t_a - t_b; forward
+                # t_b - t_a — both equal t_sort[left] - t_sort[match].
+                # Sorted order makes the true gap nonnegative, so two's-
+                # complement uint64 subtraction is EXACT even when the
+                # lane spans more than int63 (plain int64 subtraction
+                # would wrap negative and silently pass the tolerance);
+                # rows where safe is the 0 placeholder are already
+                # ok=False and a huge wrapped uint64 gap keeps them false.
+                gap = t_s[left_pos].astype(np.uint64) - t_s[safe].astype(np.uint64)
+                ok &= gap <= np.uint64(tol)
+                safe = np.where(ok, match, 0)
+            if inner_only:
+                left_pos = left_pos[ok]
+                safe = safe[ok]
+                ok = ok[ok]
+            yield pa.RecordBatch.from_arrays(
+                [*r.keys_at(left_pos), pa.array(t_o[left_pos]),
+                 pa.array(t_o[safe], mask=~ok), pa.array(rid_s[left_pos]),
+                 pa.array(rid_s[safe], mask=~ok)],
+                names=[*knames, "t", "t_b", "rid_a", "rid_b"],
             )
-        )
-    # (measured round-8: persisting ids here HURTS — the merge kernel
-    # re-run that exchange reuse leaves is cheaper than forcing cache
-    # materialization, unlike join_encoded's triple-consumed stream)
-    joined, ln = _clear_lanes(ids, project_a + project_b)
-    out_cols = [
-        _group_key_out(F.col(ln[kn]), vt).alias(name)
-        for kn, vt, name in zip(knames, vts_a, by_cols)
-    ]
-    out_cols.append(_group_key_out(F.col(ln["t"]), vts_a[m]).alias(on))
-    out_cols.append(
-        _group_key_out(F.col(ln["t_b"]), vts_b[m]).alias(f"{on_b}_b")
-    )
-    if project_a:
-        # rid_a is one-per-left-row in the as-of output (never null)
-        joined = attach_rowids_parts(
-            spark, out_a, joined, ln["rid_a"], project_a
-        )
-    if project_b:
-        # one right row may be the match of every left row
-        joined = attach_rowids_parts(
-            spark, out_b, joined, ln["rid_b"], project_b, keep_null=keep_a,
-            dup_bound=_manifest_total_rows(out_a),
-        )
-    res = joined.select(*out_cols, *project_a, *project_b)
-    if with_slices:
-        res._arcade_key_cache = sliced
-    return res
 
+        return asof_merge
 
-def _row_key(row, names) -> tuple:
-    """Row → hashable driver-side key tuple: Spark hands binary lanes
-    back as bytearray, which doesn't hash — normalize to bytes."""
-    return tuple(
-        bytes(v) if isinstance(v, (bytearray, memoryview)) else v
-        for v in (row[k] for k in names)
-    )
-
-
-def _win_lanes(tbl, names: list[str], is_bin: list[bool]):
-    """Per-lane (is_null uint8, grouping/sort value, original) arrays
-    for a window kernel batch. Int lanes fill nulls with 0 (the
-    is_null lane keeps them distinct and NULLS-LAST); binary lanes
-    factorize to dense per-task codes (None → b"" + is_null)."""
-    import pyarrow as pa
-
-    out = []
-    for name, b in zip(names, is_bin):
-        arr = tbl.column(name)
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        isn = arr.is_null().to_numpy(zero_copy_only=False).astype(np.uint8)
-        if b:
-            obj = arr.to_numpy(zero_copy_only=False)
-            filled = np.array(
-                [b"" if v is None else v for v in obj], dtype=object
+    def finish(ids, _split):
+        if keep_a:
+            ids = ids.unionByName(
+                left_null.select(
+                    *knames, F.col(f"k{m}").alias("t"),
+                    F.lit(None).cast("long").alias("t_b"),
+                    F.col("rid").alias("rid_a"),
+                    F.lit(None).cast("long").alias("rid_b"),
+                )
             )
-            _, codes = np.unique(filled, return_inverse=True)
-            out.append((isn, codes.astype(np.int64), obj))
-        else:
-            vals = (
-                arr.fill_null(0).to_numpy(zero_copy_only=False)
-                .astype(np.int64)
+        # (measured round-8: persisting ids here HURTS — the merge
+        # kernel re-run that exchange reuse leaves is cheaper than
+        # forcing cache materialization, unlike join_encoded's
+        # triple-consumed stream)
+        joined, ln = _clear_lanes(ids, project_a + project_b)
+        out_cols = _keys_out([ln[kn] for kn in knames], vts_a, by_cols)
+        out_cols.append(_group_key_out(F.col(ln["t"]), vts_a[m]).alias(on))
+        out_cols.append(
+            _group_key_out(F.col(ln["t_b"]), vts_b[m]).alias(f"{on_b}_b")
+        )
+        if project_a:
+            # rid_a is one-per-left-row in the as-of output (never null)
+            joined = attach_rowids_parts(
+                spark, out_a, joined, ln["rid_a"], project_a
             )
-            out.append((isn, vals, None))
-    return out
+        if project_b:
+            # one right row may be the match of every left row
+            joined = attach_rowids_parts(
+                spark, out_b, joined, ln["rid_b"], project_b,
+                keep_null=keep_a, dup_bound=_manifest_total_rows(out_a),
+            )
+        return joined.select(*out_cols, *project_a, *project_b)
+
+    lanes_ddl = _lanes_ddl(knames, lane_is_bin)
+    return _keyed_pass(
+        spark, lv.unionByName(rv), knames, lane_is_bin, make_merge,
+        f"{lanes_ddl}, t long, t_b long, rid_a long, rid_b long", finish,
+        t_name="t", out_dirs=(out_a, out_b), threshold=hot_key_threshold,
+        summary=(asof_edges, f"{lanes_ddl}, slc long, l_t long, "
+                             f"l_rid long, f_t long, f_rid long"),
+        fold=(carry, "t long, side int, rid long"),
+    )
 
 
 def top_per_key(
@@ -3279,8 +3567,8 @@ def top_per_key(
     import pyarrow as pa
     from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
 
-    group_cols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    order_cols = [order_cols] if isinstance(order_cols, str) else list(order_cols)
+    group_cols = _as_cols(group_cols)
+    order_cols = _as_cols(order_cols)
     project = list(project or [])
     if not group_cols or not order_cols:
         raise ValueError("group_cols and order_cols must be non-empty")
@@ -3304,95 +3592,56 @@ def top_per_key(
         raise ValueError(
             f"mode must be row_number/rank/dense_rank: {mode!r}"
         )
-    vts = _lane_vtypes(spark, out_dir, group_cols + order_cols)
+    vts = _keyed_vtypes(spark, out_dir, group_cols, order_cols, "group")
     g = len(group_cols)
-    for c, vt in zip(group_cols, vts[:g]):
-        if vt in ("double", "float"):
-            raise NotImplementedError(
-                f"float group columns are not a sane partition contract: {c}"
-            )
-    m = len(vts)
     g_bin = [vt in ("str", "binary") for vt in vts[:g]]
     o_bin = [vt in ("str", "binary") for vt in vts[g:]]
-    knames = [f"k{i}" for i in range(m)]
+    knames = [f"k{i}" for i in range(len(vts))]
     top_n = n
-    o_dirs = list(dirs)
     rank_mode = mode
 
     def topn_kernel(emit_rank: bool):
-        def kernel(batches):
-            chunks = [pa.Table.from_batches([b]) for b in batches]
-            if not chunks:
-                return
-            tbl = pa.concat_tables(chunks).combine_chunks()
-            nr = tbl.num_rows
-            if nr == 0:
-                return
-            gl = _win_lanes(tbl, knames[:g], g_bin)
+        @_runs_kernel
+        def top_n_rows(tbl):
             ol = _win_lanes(tbl, knames[g:], o_bin)
-            rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
-            # lexsort keys, last = primary: group lanes (null lane then
-            # value), then per order col (is_null asc = NULLS LAST,
-            # direction via ~x involution), then rid asc
-            keys = [rid]
-            for (isn, val, _o), d in zip(reversed(ol), reversed(o_dirs)):
-                keys.append(np.bitwise_not(val) if d else val)
-                keys.append(isn)
-            for isn, val, _o in reversed(gl):
-                keys.append(val)
-                keys.append(isn)
-            order = np.lexsort(tuple(keys))
-            idx = np.arange(nr, dtype=np.int64)
-            change = np.zeros(nr, dtype=bool)
-            change[0] = True
-            for isn, val, _o in gl:
-                vs, ns = val[order], isn[order]
-                change[1:] |= (vs[1:] != vs[:-1]) | (ns[1:] != ns[:-1])
-            run_start = np.maximum.accumulate(np.where(change, idx, 0))
+            # per order col: is_null asc (NULLS LAST), then the value
+            # (direction via the ~x involution); then rid asc
+            inner = []
+            for (isn, val, _o), d in zip(ol, dirs):
+                inner += [isn, np.bitwise_not(val) if d else val]
+            rid = _i64(tbl, "rid")
+            r = _Runs(tbl, knames[:g], g_bin, inner + [rid])
+            idx = r.idx
             if rank_mode == "row_number":
-                rank = idx - run_start  # 0-based within group
+                rank = idx - r.run_start  # 0-based within group
             else:
                 # tie runs: a new tie starts at a group change or any
                 # ORDER lane value/null change
-                tie = change.copy()
-                for isn, val, _o in ol:
-                    vs, ns = val[order], isn[order]
-                    tie[1:] |= (vs[1:] != vs[:-1]) | (ns[1:] != ns[:-1])
+                tie = r.breaks(
+                    [x for isn, val, _o in ol for x in (val, isn)], r.change
+                )
                 if rank_mode == "rank":
-                    tie_start = np.maximum.accumulate(
+                    rank = np.maximum.accumulate(
                         np.where(tie, idx, 0)
-                    )
-                    rank = tie_start - run_start
+                    ) - r.run_start
                 else:  # dense_rank
                     c = np.cumsum(tie)
-                    first_c = np.maximum.accumulate(np.where(change, c, 0))
-                    rank = c - first_c
+                    rank = c - np.maximum.accumulate(np.where(r.change, c, 0))
             keep = rank < top_n
-            sel = order[keep]
             # group then order lanes ship through for the final pass:
             # binary lanes keep original bytes (None stays null), int
             # lanes restore nulls via the is_null mask
-            cols_out = []
-            for (isn, val, obj), b in zip(gl + ol, g_bin + o_bin):
-                if b:
-                    cols_out.append(pa.array(obj[sel], type=pa.binary()))
-                else:
-                    cols_out.append(
-                        pa.array(val[sel], mask=isn[sel].astype(bool))
-                    )
+            cols_out = r.keys_at(keep) + _lane_arrays(ol, o_bin, r.order[keep])
             names = list(knames)
             if emit_rank:
                 cols_out.append(pa.array(rank[keep] + 1))
-                names = names + ["rn"]
-            cols_out.append(pa.array(rid[sel]))
+                names.append("rn")
+            cols_out.append(pa.array(rid[r.order[keep]]))
             yield pa.RecordBatch.from_arrays(cols_out, names=names + ["rid"])
 
-        return kernel
+        return top_n_rows
 
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}"
-        for k, b in zip(knames, g_bin + o_bin)
-    )
+    lanes_ddl = _lanes_ddl(knames, g_bin + o_bin)
     # the partial top-N pass runs inside the key kernel's task
     partial, _ = key_rowid_parts(
         spark, out_dir, group_cols + order_cols,
@@ -3401,171 +3650,24 @@ def top_per_key(
         float_order_lane=True,
         post=(topn_kernel(False), f"{lanes_ddl}, rid long"),
     )
-    final = partial.repartition(*[F.col(k) for k in knames[:g]]).mapInArrow(
-        topn_kernel(True), schema=f"{lanes_ddl}, rn long, rid long"
-    )
-    # every output row has a distinct rid; the group lanes and rn ride
-    # the attach shuffle (the order lanes are dropped first)
-    stream, ln = _clear_lanes(final.select(*knames[:g], "rn", "rid"), project)
-    out_cols = [
-        _group_key_out(F.col(ln[kn]), vt).alias(name)
-        for kn, vt, name in zip(knames[:g], vts[:g], group_cols)
-    ]
-    out_cols.append(F.col(ln["rn"]).alias("rn"))
-    result = attach_rowids_parts(spark, out_dir, stream, ln["rid"], project)
-    return result.select(*out_cols, *project)
 
-
-def _split_hot_keys(
-    spark: SparkSession,
-    keyed: DataFrame,
-    knames: list[str],
-    k_bin: list[bool],
-    t_name: str,
-    overlap: int,
-    threshold: int,
-    max_hot: int = _HOT_KEY_MAX,
-    overlap_after: int = 0,
-    row_bound: int | None = None,
-) -> tuple[DataFrame | None, int]:
-    """Time-range pre-split for hot keys (PLANS.md §9 escape hatch).
-
-    Finds keys with more than ``threshold`` rows (one map-side-combined
-    aggregation over the narrow key stream), assigns every row of a hot
-    key a time-range slice ``slc = (t - tmin) div S`` with slice width
-    ``S = max(overlap, ceil(span / ceil(cnt / threshold)))``, and —
-    when ``overlap > 0`` (rolling frames) — replicates each row in the
-    ``overlap`` band below a slice boundary into the NEXT slice as a
-    context row (``emit = false``): every emitted row's trailing frame
-    is then complete within its own (key, slc) task. ``overlap_after``
-    symmetrically replicates rows in that band ABOVE a slice's lower
-    boundary into the PREVIOUS slice — two-sided RANGE frames need
-    both; ``S >= overlap + overlap_after`` keeps the bands disjoint
-    (at most one copy per row per direction). ``overlap = 0``
-    (sessionize) adds no context rows; boundary stitching is the
-    caller's job via the ``nsl`` column (> 1 marks sliced keys).
-
-    Returns ``(sliced_df, n_hot)`` where sliced_df adds ``slc`` (long),
-    ``emit`` (boolean) and ``nsl`` (long, slices for the row's key) to
-    ``keyed``'s columns — or ``(None, 0)`` when no key is hot. All
-    arithmetic is exact int64 (Spark ``div``/``%`` on longs; the
-    driver-side slice math uses Python ints)."""
-    from pyspark import StorageLevel
-
-    # persist the NARROW key stream before the stats pass (round-8,
-    # guide §5): the stream is consumed again right below by the
-    # hot-key join/explode, so without this the kernel decode runs
-    # twice (stats + slicing). Rows are tens of bytes. The handle is
-    # registered at once — a caller that raises before releasing it
-    # cannot leak it past the next release_key_caches() — and attached
-    # to the returned frame as ``_arcade_input_cache``, so callers
-    # unpersist it early once their own downstream persist is
-    # materialized. Registering releases the previous op's caches
-    # first: at most one op's streams stay outstanding per session.
-    release_key_caches()
-    keyed_c = keyed.persist(StorageLevel.MEMORY_AND_DISK)
-    _register_key_cache(keyed_c)
-    stats_df = (
-        keyed_c.groupBy(*knames)
-        .agg(
-            F.count("*").alias("_cnt"),
-            F.min(t_name).alias("_tmin"),
-            F.max(t_name).alias("_tmax"),
+    def finish(final, _split):
+        # every output row has a distinct rid; the group lanes and rn
+        # ride the attach shuffle (the order lanes are dropped first)
+        stream, ln = _clear_lanes(
+            final.select(*knames[:g], "rn", "rid"), project
         )
-        .filter(F.col("_cnt") > threshold)
+        out_cols = _keys_out([ln[kn] for kn in knames[:g]], vts, group_cols)
+        out_cols.append(F.col(ln["rn"]).alias("rn"))
+        result = attach_rowids_parts(spark, out_dir, stream, ln["rid"], project)
+        return result.select(*out_cols, *project)
+
+    # no hot-key gate: the partial pass already bounds each key's rows
+    # per task to n per encode partition
+    return _keyed_pass(
+        spark, partial, knames[:g], g_bin, lambda _split: topn_kernel(True),
+        f"{lanes_ddl}, rn long, rid long", finish,
     )
-    if row_bound is not None and row_bound // max(threshold, 1) <= max_hot:
-        # a key is hot only past `threshold` rows, so n_hot <=
-        # row_bound/threshold — when that bound already fits max_hot
-        # the guard count is redundant and one whole action round is
-        # saved (round-8; the stats pass is the split's serial prefix)
-        hot = stats_df.collect()
-        if not hot:
-            keyed_c.unpersist()
-            return None, 0
-    else:
-        stats = stats_df.persist(StorageLevel.MEMORY_AND_DISK)
-        # persist + full count, never limit(n+1).collect(): CollectLimit
-        # executes partition-batch by partition-batch and re-runs the
-        # whole keyed-stream kernel several times (measured 6x the cost
-        # of one full pass on a 200k-row stream)
-        try:
-            n_hot = stats.count()
-            if n_hot == 0:
-                keyed_c.unpersist()
-                return None, 0
-            if n_hot > max_hot:
-                keyed_c.unpersist()
-                raise ValueError(
-                    f"more than {max_hot} keys exceed {threshold} rows — "
-                    "raise the hot-key threshold or aggregate first"
-                )
-            hot = stats.collect()
-        finally:
-            stats.unpersist()
-    rows = []
-    for r in hot:
-        cnt, tmin, tmax = int(r["_cnt"]), int(r["_tmin"]), int(r["_tmax"])
-        span = tmax - tmin
-        if float(tmax) - float(tmin) >= float(2**62):
-            raise NotImplementedError(
-                "a hot key's timeline spans more than 2^62 lane units — "
-                "time-range slicing would overflow; filter sentinels first"
-            )
-        nsl_target = -(-cnt // threshold)  # ceil
-        s_width = max(int(overlap) + int(overlap_after),
-                      -(-(span + 1) // nsl_target), 1)
-        nsl = span // s_width + 1
-        rows.append((*_row_key(r, knames), tmin, s_width, nsl))
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}" for k, b in zip(knames, k_bin)
-    )
-    hot_df = spark.createDataFrame(
-        rows, schema=f"{lanes_ddl}, _tmin long, _s long, _nsl long"
-    )
-    j = keyed.join(F.broadcast(hot_df), on=knames, how="left")
-    slc = F.expr(f"CASE WHEN _s IS NULL THEN 0L "
-                 f"ELSE ({t_name} - _tmin) div _s END")
-    base = F.struct(slc.alias("slc"), F.lit(True).alias("emit"))
-    copies = F.array(base)
-    if overlap > 0:
-        # rows within `overlap` below the next slice's lower boundary
-        # replicate into it as context (emit=false); s_width >= overlap
-        # caps replication at one extra copy per row
-        ctx_cond = (
-            F.col("_s").isNotNull()
-            & (slc < F.col("_nsl") - 1)
-            & (F.expr(f"({t_name} - _tmin) % _s")
-               >= F.col("_s") - F.lit(int(overlap)))
-        )
-        ctx = F.struct((slc + 1).alias("slc"), F.lit(False).alias("emit"))
-        copies = F.when(ctx_cond, F.array(base, ctx)).otherwise(copies)
-    if overlap_after > 0:
-        # rows within `overlap_after` at-or-above a slice's lower
-        # boundary replicate into the PREVIOUS slice (two-sided
-        # frames); disjoint from the up-band since S >= sum of bands,
-        # so array_union of the two whens never double-copies
-        ctx2_cond = (
-            F.col("_s").isNotNull()
-            & (slc > 0)
-            & (F.expr(f"({t_name} - _tmin) % _s")
-               < F.lit(int(overlap_after)))
-        )
-        ctx2 = F.struct((slc - 1).alias("slc"), F.lit(False).alias("emit"))
-        copies = F.when(
-            ctx2_cond, F.concat(copies, F.array(ctx2))
-        ).otherwise(copies)
-    out = (
-        j.withColumn("_se", F.explode(copies))
-        .select(
-            *keyed.columns,
-            F.col("_se.slc").alias("slc"),
-            F.col("_se.emit").alias("emit"),
-            F.coalesce(F.col("_nsl"), F.lit(1)).alias("nsl"),
-        )
-    )
-    out._arcade_input_cache = keyed_c
-    return out, len(hot)
 
 
 def _manifest_total_rows(out_dir: str) -> int:
@@ -3641,21 +3743,16 @@ def sessionize(
     import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts
 
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    key_cols = _as_cols(key_cols)
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     if gap <= 0:
         raise ValueError(f"gap must be > 0: {gap}")
     if emit not in ("rows", "sessions"):
         raise ValueError(f"emit must be 'rows' or 'sessions': {emit!r}")
-    vts = _lane_vtypes(spark, out_dir, key_cols + [ts_col])
     g = len(key_cols)
+    vts = _keyed_vtypes(spark, out_dir, key_cols, [ts_col])
     _require_int64_lane(vts[g], ts_col, "sessionize timestamp")
-    for c, vt in zip(key_cols, vts[:g]):
-        if vt in ("double", "float"):
-            raise NotImplementedError(
-                f"float key columns are not a sane partition contract: {c}"
-            )
     keyed, kvts = key_rowid_parts(
         spark, out_dir, key_cols + [ts_col],
         _preds_to_spec(preds) if preds else None,
@@ -3665,161 +3762,81 @@ def sessionize(
     gap_units = gap
     want_rows = emit == "rows"
 
-    def _make_kernel(with_slices: bool, summary: bool):
-        def kern(batches):
-            chunks = [pa.Table.from_batches([b]) for b in batches]
-            if not chunks:
-                return
-            tbl = pa.concat_tables(chunks).combine_chunks()
-            nr = tbl.num_rows
-            if nr == 0:
-                return
-            kl = _win_lanes(tbl, knames, k_bin)
-            ts = (
-                tbl.column(f"k{g}").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            rid = (
-                tbl.column("rid").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            ss = None
-            keys = [rid, ts]
-            if with_slices:
-                slc = (
-                    tbl.column("slc").to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                keys.append(slc)
-            for isn, val, _o in reversed(kl):
-                keys.append(val)
-                keys.append(isn)
-            order = np.lexsort(tuple(keys))
-            idx = np.arange(nr, dtype=np.int64)
-            change = np.zeros(nr, dtype=bool)
-            change[0] = True
-            for isn, val, _o in kl:
-                vs = val[order]
-                change[1:] |= vs[1:] != vs[:-1]
-            if with_slices:
-                # a slice boundary is a run boundary: local ordinals
-                # restart and the stitch pass re-bases them
-                ss = slc[order]
-                change[1:] |= ss[1:] != ss[:-1]
-            ts_s = ts[order]
+    def make_kernel(split: bool, summary: bool = False):
+        @_runs_kernel
+        def sessions(tbl):
+            ts = _i64(tbl, f"k{g}")
+            r = _Runs(tbl, knames, k_bin, [ts, _i64(tbl, "rid")], slc=split)
+            nr = r.n
+            ts_s = ts[r.order]
             bump = np.zeros(nr, dtype=bool)
             bump[1:] = ts_s[1:] - ts_s[:-1] > gap_units
-            new_sess = change | bump
+            new_sess = r.change | bump
             gs = np.cumsum(new_sess)  # 1-based global session ordinal
-            first_gs = np.maximum.accumulate(np.where(change, gs, 0))
-            sess = gs - first_gs  # 0-based session id within run
+            # 0-based session id within run; a slice's local ordinals
+            # restart at its boundary and the stitch re-bases them
+            sess = gs - np.maximum.accumulate(np.where(r.change, gs, 0))
             if summary:
                 # one row per SLICED (key, slc) run: local session count
-                # + boundary timestamps (unsliced keys skipped — the
-                # collect stays O(hot rows / threshold))
-                nsl = (
-                    tbl.column("nsl").to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                starts = np.nonzero(change)[0]
-                ends = np.append(starts[1:], nr)
-                keep = nsl[order][starts] > 1
-                rs = starts[keep]
-                re_ = ends[keep]
+                # + boundary timestamps
+                rs, re_, _keep = r.sliced()
                 if rs.size == 0:
                     return
-                sel = order[rs]
-                cols_out = []
-                for (isn, val, obj), b in zip(kl, k_bin):
-                    if b:
-                        cols_out.append(pa.array(obj[sel], type=pa.binary()))
-                    else:
-                        cols_out.append(pa.array(val[sel]))
-                cols_out.append(pa.array(ss[rs]))
-                cols_out.append(pa.array(sess[re_ - 1] + 1))
-                cols_out.append(pa.array(ts_s[rs]))
-                cols_out.append(pa.array(ts_s[re_ - 1]))
                 yield pa.RecordBatch.from_arrays(
-                    cols_out,
+                    [*r.keys_at(rs), pa.array(r.slc[rs]),
+                     pa.array(sess[re_ - 1] + 1), pa.array(ts_s[rs]),
+                     pa.array(ts_s[re_ - 1])],
                     names=[*knames, "slc", "n_sess", "t_first", "t_last"],
                 )
                 return
-            if with_slices:
-                bs = (
-                    tbl.column("base").to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                sess = sess + bs[order]
+            if split:
+                sess = sess + _i64(tbl, "base")[r.order]
             if want_rows:
-                cols_out = []
-                for (isn, val, obj), b in zip(kl, k_bin):
-                    if b:
-                        cols_out.append(
-                            pa.array(obj[order], type=pa.binary())
-                        )
-                    else:
-                        cols_out.append(pa.array(val[order]))
-                cols_out.append(pa.array(ts_s))
-                cols_out.append(pa.array(sess))
                 yield pa.RecordBatch.from_arrays(
-                    cols_out, names=[*knames, "t", "session"]
+                    [*r.keys_at(slice(None)), pa.array(ts_s), pa.array(sess)],
+                    names=[*knames, "t", "session"],
                 )
                 return
             # per-session aggregate: runs of new_sess
             starts = np.nonzero(new_sess)[0]
             ends = np.append(starts[1:], nr)
-            sel = order[starts]
-            cols_out = []
-            for (isn, val, obj), b in zip(kl, k_bin):
-                if b:
-                    cols_out.append(pa.array(obj[sel], type=pa.binary()))
-                else:
-                    cols_out.append(pa.array(val[sel]))
-            cols_out.append(pa.array(sess[starts]))
-            cols_out.append(pa.array(ends - starts))
-            cols_out.append(pa.array(ts_s[starts]))
-            cols_out.append(pa.array(ts_s[ends - 1]))
             yield pa.RecordBatch.from_arrays(
-                cols_out,
+                [*r.keys_at(starts), pa.array(sess[starts]),
+                 pa.array(ends - starts), pa.array(ts_s[starts]),
+                 pa.array(ts_s[ends - 1])],
                 names=[*knames, "session", "n_events", "t_start", "t_end"],
             )
 
-        return kern
+        return sessions
 
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}" for k, b in zip(knames, k_bin)
-    )
-    key_out = [
-        _group_key_out(F.col(kn), vt).alias(name)
-        for kn, vt, name in zip(knames, kvts, key_cols)
-    ]
-    sliced = None
-    _rb = (_manifest_total_rows(out_dir)
-           if hot_key_threshold is not None else 0)
-    if hot_key_threshold is not None and _rb > hot_key_threshold:
-        sliced, _n_hot = _split_hot_keys(
-            spark, keyed, knames, k_bin, f"k{g}",
-            overlap=0, threshold=hot_key_threshold, row_bound=_rb,
-        )
-    if sliced is None:
-        u = keyed.repartition(*[F.col(k) for k in knames])
+    def stitch(slices):
+        base, prev = 0, None
+        for s in slices:
+            if prev is not None:
+                # a session bridges the boundary iff the gap between
+                # the last event before it and the first after it is
+                # <= gap — the exact complement of the batch > gap bump
+                base += prev["n_sess"] - (s["t_first"] - prev["t_last"] <= gap_units)
+            yield s["slc"], base
+            prev = s
+
+    key_out = _keys_out(knames, kvts, key_cols)
+
+    def finish(ids, split):
         if want_rows:
-            ids = u.mapInArrow(
-                _make_kernel(False, False),
-                schema=f"{lanes_ddl}, t long, session long",
-            )
             return ids.select(
                 *key_out,
                 _group_key_out(F.col("t"), kvts[g]).alias(ts_col),
                 F.col("session"),
             )
-        ids = u.mapInArrow(
-            _make_kernel(False, False),
-            schema=(
-                f"{lanes_ddl}, session long, n_events long, "
-                f"t_start long, t_end long"
-            ),
-        )
+        if split:
+            # boundary-straddling sessions emitted from two slices
+            # merge here — one O(sessions) group-by, not O(events)
+            ids = ids.groupBy(*knames, "session").agg(
+                F.sum("n_events").alias("n_events"),
+                F.min("t_start").alias("t_start"),
+                F.max("t_end").alias("t_end"),
+            )
         return ids.select(
             *key_out,
             F.col("session"),
@@ -3827,87 +3844,20 @@ def sessionize(
             _group_key_out(F.col("t_start"), kvts[g]).alias(f"{ts_col}_start"),
             _group_key_out(F.col("t_end"), kvts[g]).alias(f"{ts_col}_end"),
         )
-    # --- split path: summaries → driver stitch → re-based final pass.
-    # The repartitioned slice stream persists so the two passes share
-    # one kernel read; the handle is registered for release.
-    from collections import defaultdict
 
-    from pyspark import StorageLevel
-
-    u = sliced.repartition(
-        *[F.col(k) for k in knames], F.col("slc")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _register_key_cache(u)
-    summaries = u.mapInArrow(
-        _make_kernel(True, True),
-        schema=f"{lanes_ddl}, slc long, n_sess long, t_first long, t_last long",
-    ).collect()
-    # the summaries collect materialized u — release the split's input
-    # key-stream cache
-    _ic = getattr(sliced, "_arcade_input_cache", None)
-    if _ic is not None:
-        _ic.unpersist()
-    per_key: dict[tuple, list] = defaultdict(list)
-    for r in summaries:
-        kv = _row_key(r, knames)
-        per_key[kv].append(
-            (int(r["slc"]), int(r["n_sess"]), int(r["t_first"]),
-             int(r["t_last"]))
-        )
-    brows = []
-    for kv, lst in per_key.items():
-        lst.sort()
-        base = 0
-        prev_ns = prev_tl = None
-        for s, ns, tf, tl in lst:
-            if prev_ns is not None:
-                # a session bridges the boundary iff the gap between
-                # the last event before it and the first after it is
-                # <= gap — the exact complement of the batch > gap bump
-                merge = 1 if tf - prev_tl <= gap_units else 0
-                base = base + prev_ns - merge
-            brows.append((*kv, s, base))
-            prev_ns, prev_tl = ns, tl
-    bases_df = spark.createDataFrame(
-        brows, schema=f"{lanes_ddl}, slc long, base long"
+    lanes_ddl = _lanes_ddl(knames, k_bin)
+    return _keyed_pass(
+        spark, keyed, knames, k_bin, make_kernel,
+        f"{lanes_ddl}, t long, session long" if want_rows else (
+            f"{lanes_ddl}, session long, n_events long, "
+            f"t_start long, t_end long"
+        ),
+        finish, t_name=f"k{g}", out_dirs=(out_dir,),
+        threshold=hot_key_threshold,
+        summary=(make_kernel(True, summary=True),
+                 f"{lanes_ddl}, slc long, n_sess long, t_first long, t_last long"),
+        fold=(stitch, "base long"), bases={"base": 0},
     )
-    ub = u.join(
-        F.broadcast(bases_df), on=[*knames, "slc"], how="left"
-    ).withColumn("base", F.coalesce(F.col("base"), F.lit(0)))
-    if want_rows:
-        ids = ub.mapInArrow(
-            _make_kernel(True, False),
-            schema=f"{lanes_ddl}, t long, session long",
-        )
-        res = ids.select(
-            *key_out,
-            _group_key_out(F.col("t"), kvts[g]).alias(ts_col),
-            F.col("session"),
-        )
-    else:
-        ids = ub.mapInArrow(
-            _make_kernel(True, False),
-            schema=(
-                f"{lanes_ddl}, session long, n_events long, "
-                f"t_start long, t_end long"
-            ),
-        )
-        # boundary-straddling sessions emitted from two slices merge
-        # here — one O(sessions) group-by, not O(events)
-        merged = ids.groupBy(*knames, "session").agg(
-            F.sum("n_events").alias("n_events"),
-            F.min("t_start").alias("t_start"),
-            F.max("t_end").alias("t_end"),
-        )
-        res = merged.select(
-            *key_out,
-            F.col("session"),
-            F.col("n_events"),
-            _group_key_out(F.col("t_start"), kvts[g]).alias(f"{ts_col}_start"),
-            _group_key_out(F.col("t_end"), kvts[g]).alias(f"{ts_col}_end"),
-        )
-    res._arcade_key_cache = u
-    return res
 
 
 def join_band(
@@ -4051,10 +4001,7 @@ def join_band(
         )
         ids = pairs.unionByName(unmatched).unionByName(nulls)
     joined, ln = _clear_lanes(ids, project_a + project_b)
-    out_cols = [
-        _group_key_out(F.col(ln[kn]), vt).alias(name)
-        for kn, vt, name in zip(knames, vts_a, by_cols)
-    ]
+    out_cols = _keys_out([ln[kn] for kn in knames], vts_a, by_cols)
     out_cols.append(_group_key_out(F.col(ln["t"]), vts_a[m]).alias(on_a))
     out_cols.append(_group_key_out(F.col(ln["s"]), vts_b[m]).alias(f"{on_b}_b"))
     if project_a:
@@ -4137,7 +4084,7 @@ def rolling_agg(
     import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts
 
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    key_cols = _as_cols(key_cols)
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     cumulative = window is None
@@ -4163,18 +4110,14 @@ def rolling_agg(
     if need_val and agg_col is None:
         raise ValueError("sum/avg/min/max need an agg_col")
     g = len(key_cols)
-    lane_cols = key_cols + [ts_col] + ([agg_col] if need_val else [])
-    vts = _lane_vtypes(spark, out_dir, lane_cols)
+    vts = _keyed_vtypes(
+        spark, out_dir, key_cols, [ts_col] + ([agg_col] if need_val else [])
+    )
     _require_int64_lane(vts[g], ts_col, "rolling_agg ts")
     if need_val:
         _require_int64_lane(vts[g + 1], agg_col, "rolling_agg agg")
-    for c, vt in zip(key_cols, vts[:g]):
-        if vt in ("double", "float"):
-            raise NotImplementedError(
-                f"float key columns are not a sane partition contract: {c}"
-            )
     keyed, kvts = key_rowid_parts(
-        spark, out_dir, lane_cols,
+        spark, out_dir, key_cols + [ts_col] + ([agg_col] if need_val else []),
         _preds_to_spec(preds) if preds else None,
     )
     k_bin = [vt in ("str", "binary") for vt in kvts[:g]]
@@ -4182,426 +4125,209 @@ def rolling_agg(
     win_units = window
     w_after = int(window_after)
     want = aggs
-    sliced = None
-    _rb = (_manifest_total_rows(out_dir)
-           if hot_key_threshold is not None else 0)
-    if hot_key_threshold is not None and _rb > hot_key_threshold:
-        sliced, _n_hot = _split_hot_keys(
-            spark, keyed, knames, k_bin, f"k{g}",
-            overlap=0 if cumulative else win_units,
-            threshold=hot_key_threshold,
-            overlap_after=int(window_after),
-            row_bound=_rb,
-        )
-    has_slices = sliced is not None
-    with_bases = has_slices and cumulative
     _I64_MAX, _I64_MIN = np.iinfo(np.int64).max, np.iinfo(np.int64).min
 
-    def rolling_kernel(batches):
-        chunks = [pa.Table.from_batches([b]) for b in batches]
-        if not chunks:
-            return
-        tbl = pa.concat_tables(chunks).combine_chunks()
-        nr = tbl.num_rows
-        if nr == 0:
-            return
-        kl = _win_lanes(tbl, knames, k_bin)
-        ts = tbl.column(f"k{g}").to_numpy(zero_copy_only=False).astype(np.int64)
-        rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
-        vals = None
-        if need_val:
-            vals = (
-                tbl.column(f"k{g + 1}")
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-        slc = emit = None
-        if has_slices:
-            slc = (
-                tbl.column("slc").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            emit = tbl.column("emit").to_numpy(zero_copy_only=False)
-        keys = [rid, ts]
-        if has_slices:
-            keys.append(slc)
-        for isn, val, _o in reversed(kl):
-            keys.append(val)
-            keys.append(isn)
-        order = np.lexsort(tuple(keys))
-        idx = np.arange(nr, dtype=np.int64)
-        change = np.zeros(nr, dtype=bool)
-        change[0] = True
-        for isn, val, _o in kl:
-            vs = val[order]
-            change[1:] |= vs[1:] != vs[:-1]
-        if has_slices:
-            # a slice boundary is a run boundary: context rows carry the
-            # previous slice's tail, so frames never need to cross it
-            ss = slc[order]
-            change[1:] |= ss[1:] != ss[:-1]
-        run_start = np.maximum.accumulate(np.where(change, idx, 0))
-        # run_end (exclusive): next run's start, backwards-filled
-        starts = np.nonzero(change)[0]
-        run_end = np.repeat(np.append(starts[1:], nr), np.diff(np.append(starts, nr)))
-        ts_s = ts[order]
-        if cumulative:
-            # UNBOUNDED PRECEDING: the frame starts at the run start
-            lb = run_start
-        else:
-            # frame lower bound: first j in [run_start, i] with
-            # ts[j] >= ts[i] - window — vectorized binary search bounded
-            # to each row's run (global searchsorted can't cross-compare
-            # between runs)
-            # saturating lower bound: ts near int64 min (sentinel stamps)
-            # would wrap ts - win to a huge positive bound and corrupt
-            # the binary search; clamping to int64 min is exact — the
-            # true bound is below every representable value, so the
-            # frame reaches the run start either way
-            i64_min = np.iinfo(np.int64).min
-            q_lo = np.where(
-                ts_s < i64_min + win_units, i64_min, ts_s - win_units
-            )
-            lo = run_start.copy()
-            hi = idx + 1
-            while True:
-                active = lo < hi
-                if not active.any():
-                    break
-                mid = (lo + hi) // 2
-                less = ts_s[np.minimum(mid, nr - 1)] < q_lo
-                step = active & less
-                lo = np.where(step, mid + 1, lo)
-                hi = np.where(active & ~less, mid, hi)
-            lb = lo
-        # frame upper bound: last j in run with ts[j] <= ts[i] + after
-        # (peers after i included) — upper_bound within run; the add
-        # saturates like q_lo (ts near int64 max must not wrap)
-        i64_max = np.iinfo(np.int64).max
-        q_hi = (ts_s if w_after == 0 else np.where(
-            ts_s > i64_max - w_after, i64_max, ts_s + w_after
-        ))
-        lo2 = idx + 1  # peers before/at i are already <= ts[i]
-        hi2 = run_end
-        while True:
-            active = lo2 < hi2
-            if not active.any():
-                break
-            mid = (lo2 + hi2) // 2
-            le = ts_s[np.minimum(mid, nr - 1)] <= q_hi
-            step = active & le
-            lo2 = np.where(step, mid + 1, lo2)
-            hi2 = np.where(active & ~le, mid, hi2)
-        ub = lo2
-        cnt = ub - lb
-        bc = bs = bmin = bmax = None
-        if with_bases:
-            # per-(key, slc) BASES from the driver stitch ride every
-            # row (constant within a slice); identities for unsliced
-            # keys / slice 0 arrive as 0 / 0 / int64 max / int64 min
-            bc = (
-                tbl.column("b_cnt").to_numpy(zero_copy_only=False)
-                .astype(np.int64)[order]
-            )
-            bs = (
-                tbl.column("b_sum").to_numpy(zero_copy_only=False)
-                .astype(np.int64)[order]
-            )
-            bmin = (
-                tbl.column("b_min").to_numpy(zero_copy_only=False)
-                .astype(np.int64)[order]
-            )
-            bmax = (
-                tbl.column("b_max").to_numpy(zero_copy_only=False)
-                .astype(np.int64)[order]
-            )
-            cnt = cnt + bc
-        out_aggs = {}
-        if "count" in want:
-            out_aggs["w_count"] = cnt
-        vs = vals[order] if need_val else None
-        if need_sum:
-            # int64 prefix sums may WRAP mid-task (a 10^9-row hot key
-            # with 10^10-scale values is legitimate), but wrapped
-            # differences recover the true window sum exactly whenever
-            # THAT sum fits int64 — so the guard bounds the largest
-            # actual window's |v| mass (float64 prefix differences,
-            # 2^62 margin absorbs their rounding), not the task total
-            pref_f = np.concatenate(
-                ([0.0], np.cumsum(np.abs(vs), dtype=np.float64))
-            )
-            mass = pref_f[ub] - pref_f[lb]
-            if with_bases:
-                mass = mass + np.abs(bs).astype(np.float64)
-            if mass.size and mass.max() >= float(2**62):
-                raise OverflowError(
-                    "a rolling_agg window sum would exceed int64"
-                )
-            pref = np.concatenate(
-                ([0], np.cumsum(vs, dtype=np.int64))
-            )
-            wsum = pref[ub] - pref[lb]
-            if with_bases:
-                wsum = wsum + bs
-            if "sum" in want:
-                out_aggs["w_sum"] = wsum
-            if "avg" in want:
-                out_aggs["w_avg"] = (
-                    wsum.astype(np.float64) / cnt.astype(np.float64)
-                )
-        if need_ext:
-            # sparse table: level k holds op over [i, i + 2^k); a frame
-            # of length L answers as op(level[kq][lb], level[kq][ub-2^kq])
-            # with 2^kq the largest power <= L — the two blocks overlap
-            # and exactly cover [lb, ub). Frames never span runs (lb is
-            # bounded below by run_start), so one table serves all keys.
-            frame_len = ub - lb  # >= 1: the frame includes current row
-            kq = np.frexp(frame_len.astype(np.float64))[1] - 1
-            levels_needed = int(kq.max()) + 1
+    def make_kernel(split: bool, summary: bool = False):
+        with_bases = split and cumulative
 
-            def _ext(op):
-                levels = [vs]
-                size = 1
-                while len(levels) < levels_needed:
-                    prev = levels[-1]
-                    levels.append(op(prev[: prev.size - size], prev[size:]))
-                    size *= 2
-                out = np.empty(nr, dtype=np.int64)
-                for k in np.unique(kq):
-                    m = kq == k
-                    half = 1 << int(k)
-                    lvl = levels[int(k)]
-                    out[m] = op(lvl[lb[m]], lvl[ub[m] - half])
-                return out
+        @_runs_kernel
+        def rolling(tbl):
+            ts = _i64(tbl, f"k{g}")
+            r = _Runs(tbl, knames, k_bin, [ts, _i64(tbl, "rid")], slc=split)
+            order, idx, nr = r.order, r.idx, r.n
+            vs = _i64(tbl, f"k{g + 1}")[order] if need_val else None
+            if summary:
+                # cumulative split pass 1: one row per SLICED (key, slc)
+                # run — the slice's total count/sum/min/max
+                rs, re_, keep = r.sliced()
+                if rs.size == 0:
+                    return
+                s_cnt = re_ - rs
+                if need_val:
+                    pref_f = np.concatenate(
+                        ([0.0], np.cumsum(np.abs(vs), dtype=np.float64))
+                    )
+                    if (pref_f[re_] - pref_f[rs]).max() >= float(2**62):
+                        raise OverflowError(
+                            "a cumulative slice sum would exceed int64"
+                        )
+                    pref = np.concatenate(([0], np.cumsum(vs, dtype=np.int64)))
+                    s_sum = pref[re_] - pref[rs]
+                    s_min = np.minimum.reduceat(vs, r.starts)[keep]
+                    s_max = np.maximum.reduceat(vs, r.starts)[keep]
+                else:
+                    s_sum = np.zeros(rs.size, dtype=np.int64)
+                    s_min = np.full(rs.size, _I64_MAX, dtype=np.int64)
+                    s_max = np.full(rs.size, _I64_MIN, dtype=np.int64)
+                yield pa.RecordBatch.from_arrays(
+                    [*r.keys_at(rs), pa.array(r.slc[rs]), pa.array(s_cnt),
+                     pa.array(s_sum), pa.array(s_min), pa.array(s_max)],
+                    names=[*knames, "slc", "s_cnt", "s_sum", "s_min", "s_max"],
+                )
+                return
+            ts_s = ts[order]
+            if cumulative:
+                # UNBOUNDED PRECEDING: the frame starts at the run start
+                lb = r.run_start
+            else:
+                # frame lower bound: first j in [run_start, i] with
+                # ts[j] >= ts[i] - window, searched within each row's
+                # run (a global searchsorted can't cross-compare
+                # between runs). Saturating bound: ts near int64 min
+                # (sentinel stamps) would wrap ts - win to a huge
+                # positive bound and corrupt the search; clamping to
+                # int64 min is exact — the true bound is below every
+                # representable value, so the frame reaches the run
+                # start either way
+                q_lo = np.where(
+                    ts_s < _I64_MIN + win_units, _I64_MIN, ts_s - win_units
+                )
+                lb = r.search(ts_s, q_lo, r.run_start, idx + 1, "left")
+            # frame upper bound: last j in run with ts[j] <= ts[i] + after
+            # (peers after i included) — upper_bound within run; the add
+            # saturates like q_lo (ts near int64 max must not wrap).
+            # Peers before/at i are already <= ts[i].
+            q_hi = (ts_s if w_after == 0 else np.where(
+                ts_s > _I64_MAX - w_after, _I64_MAX, ts_s + w_after
+            ))
+            ub = r.search(ts_s, q_hi, idx + 1, r.run_end, "right")
+            cnt = ub - lb
+            if with_bases:
+                # per-(key, slc) BASES from the driver stitch ride every
+                # row (constant within a slice); identities for unsliced
+                # keys / slice 0 arrive as 0 / 0 / int64 max / int64 min
+                bc, bs, bmin, bmax = (
+                    _i64(tbl, c)[order] for c in ("b_cnt", "b_sum", "b_min", "b_max")
+                )
+                cnt = cnt + bc
+            out_aggs = {}
+            if "count" in want:
+                out_aggs["w_count"] = cnt
+            if need_sum:
+                # int64 prefix sums may WRAP mid-task (a 10^9-row hot
+                # key with 10^10-scale values is legitimate), but
+                # wrapped differences recover the true window sum
+                # exactly whenever THAT sum fits int64 — so the guard
+                # bounds the largest actual window's |v| mass (float64
+                # prefix differences, 2^62 margin absorbs their
+                # rounding), not the task total
+                pref_f = np.concatenate(
+                    ([0.0], np.cumsum(np.abs(vs), dtype=np.float64))
+                )
+                mass = pref_f[ub] - pref_f[lb]
+                if with_bases:
+                    mass = mass + np.abs(bs).astype(np.float64)
+                if mass.size and mass.max() >= float(2**62):
+                    raise OverflowError(
+                        "a rolling_agg window sum would exceed int64"
+                    )
+                pref = np.concatenate(
+                    ([0], np.cumsum(vs, dtype=np.int64))
+                )
+                wsum = pref[ub] - pref[lb]
+                if with_bases:
+                    wsum = wsum + bs
+                if "sum" in want:
+                    out_aggs["w_sum"] = wsum
+                if "avg" in want:
+                    out_aggs["w_avg"] = (
+                        wsum.astype(np.float64) / cnt.astype(np.float64)
+                    )
+            if need_ext:
+                # sparse table: level k holds op over [i, i + 2^k); a
+                # frame of length L answers as op(level[kq][lb],
+                # level[kq][ub-2^kq]) with 2^kq the largest power <= L
+                # — the two blocks overlap and exactly cover [lb, ub).
+                # Frames never span runs (lb is bounded below by
+                # run_start), so one table serves all keys.
+                frame_len = ub - lb  # >= 1: the frame includes current row
+                kq = np.frexp(frame_len.astype(np.float64))[1] - 1
+                levels_needed = int(kq.max()) + 1
 
-            if "min" in want:
-                ext = _ext(np.minimum)
-                out_aggs["w_min"] = (
-                    np.minimum(ext, bmin) if with_bases else ext
-                )
-            if "max" in want:
-                ext = _ext(np.maximum)
-                out_aggs["w_max"] = (
-                    np.maximum(ext, bmax) if with_bases else ext
-                )
-        sel = None
-        if has_slices:
+                def _ext(op):
+                    levels = [vs]
+                    size = 1
+                    while len(levels) < levels_needed:
+                        prev = levels[-1]
+                        levels.append(op(prev[: prev.size - size], prev[size:]))
+                        size *= 2
+                    out = np.empty(nr, dtype=np.int64)
+                    for k in np.unique(kq):
+                        m = kq == k
+                        half = 1 << int(k)
+                        lvl = levels[int(k)]
+                        out[m] = op(lvl[lb[m]], lvl[ub[m] - half])
+                    return out
+
+                if "min" in want:
+                    ext = _ext(np.minimum)
+                    out_aggs["w_min"] = (
+                        np.minimum(ext, bmin) if with_bases else ext
+                    )
+                if "max" in want:
+                    ext = _ext(np.maximum)
+                    out_aggs["w_max"] = (
+                        np.maximum(ext, bmax) if with_bases else ext
+                    )
             # context rows (emit=false) exist only to complete their
             # slice's leading frames — their own rows emit from the
             # previous slice
-            sel = np.nonzero(emit[order])[0]
-        cols_out = []
-        for (isn, val, obj), b in zip(kl, k_bin):
-            lane = obj if b else val
-            lane = lane[order] if sel is None else lane[order][sel]
-            if b:
-                cols_out.append(pa.array(lane, type=pa.binary()))
-            else:
-                cols_out.append(pa.array(lane))
-        cols_out.append(pa.array(ts_s if sel is None else ts_s[sel]))
-        names = [*knames, "t"]
-        for nm, arr in out_aggs.items():
-            cols_out.append(pa.array(arr if sel is None else arr[sel]))
-            names.append(nm)
-        yield pa.RecordBatch.from_arrays(cols_out, names=names)
-
-    def summary_kernel(batches):
-        # cumulative split pass 1: one row per SLICED (key, slc) run —
-        # the slice's total count/sum/min/max (unsliced keys skipped,
-        # so the driver collect stays O(hot rows / threshold))
-        chunks = [pa.Table.from_batches([b]) for b in batches]
-        if not chunks:
-            return
-        tbl = pa.concat_tables(chunks).combine_chunks()
-        nr = tbl.num_rows
-        if nr == 0:
-            return
-        kl = _win_lanes(tbl, knames, k_bin)
-        ts = tbl.column(f"k{g}").to_numpy(zero_copy_only=False).astype(np.int64)
-        rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
-        slc = tbl.column("slc").to_numpy(zero_copy_only=False).astype(np.int64)
-        nsl = tbl.column("nsl").to_numpy(zero_copy_only=False).astype(np.int64)
-        keys = [rid, ts, slc]
-        for isn, val, _o in reversed(kl):
-            keys.append(val)
-            keys.append(isn)
-        order = np.lexsort(tuple(keys))
-        change = np.zeros(nr, dtype=bool)
-        change[0] = True
-        for isn, val, _o in kl:
-            vs_ = val[order]
-            change[1:] |= vs_[1:] != vs_[:-1]
-        ss = slc[order]
-        change[1:] |= ss[1:] != ss[:-1]
-        starts = np.nonzero(change)[0]
-        ends = np.append(starts[1:], nr)
-        keep = nsl[order][starts] > 1
-        rs, re_ = starts[keep], ends[keep]
-        if rs.size == 0:
-            return
-        s_cnt = re_ - rs
-        if need_val:
-            vs = (
-                tbl.column(f"k{g + 1}")
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            )[order]
-            pref_f = np.concatenate(
-                ([0.0], np.cumsum(np.abs(vs), dtype=np.float64))
+            sel = (
+                np.nonzero(tbl.column("emit").to_numpy(zero_copy_only=False)[order])[0]
+                if split else slice(None)
             )
-            if (pref_f[re_] - pref_f[rs]).max() >= float(2**62):
+            yield pa.RecordBatch.from_arrays(
+                [*r.keys_at(sel), pa.array(ts_s[sel]),
+                 *(pa.array(a[sel]) for a in out_aggs.values())],
+                names=[*knames, "t", *out_aggs],
+            )
+
+        return rolling
+
+    def prefix(slices):
+        b_cnt, b_sum = 0, 0
+        b_min, b_max = int(_I64_MAX), int(_I64_MIN)
+        for s in slices:
+            yield s["slc"], b_cnt, b_sum, b_min, b_max
+            b_cnt += s["s_cnt"]
+            b_sum += s["s_sum"]  # exact Python ints — never wraps
+            if abs(b_sum) >= 2**62:
                 raise OverflowError(
-                    "a cumulative slice sum would exceed int64"
+                    "a cumulative running sum would exceed int64"
                 )
-            pref = np.concatenate(([0], np.cumsum(vs, dtype=np.int64)))
-            s_sum = pref[re_] - pref[rs]
-            s_min = np.minimum.reduceat(vs, starts)[keep]
-            s_max = np.maximum.reduceat(vs, starts)[keep]
-        else:
-            s_sum = np.zeros(rs.size, dtype=np.int64)
-            s_min = np.full(rs.size, _I64_MAX, dtype=np.int64)
-            s_max = np.full(rs.size, _I64_MIN, dtype=np.int64)
-        sel = order[rs]
-        cols_out = []
-        for (isn, val, obj), b in zip(kl, k_bin):
-            if b:
-                cols_out.append(pa.array(obj[sel], type=pa.binary()))
-            else:
-                cols_out.append(pa.array(val[sel]))
-        cols_out += [pa.array(ss[rs]), pa.array(s_cnt), pa.array(s_sum),
-                     pa.array(s_min), pa.array(s_max)]
-        yield pa.RecordBatch.from_arrays(
-            cols_out,
-            names=[*knames, "slc", "s_cnt", "s_sum", "s_min", "s_max"],
-        )
+            b_min, b_max = min(b_min, s["s_min"]), max(b_max, s["s_max"])
 
-    agg_ddl = []
-    if "count" in aggs:
-        agg_ddl.append("w_count long")
-    if "sum" in aggs:
-        agg_ddl.append("w_sum long")
-    if "avg" in aggs:
-        agg_ddl.append("w_avg double")
-    if "min" in aggs:
-        agg_ddl.append("w_min long")
-    if "max" in aggs:
-        agg_ddl.append("w_max long")
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}" for k, b in zip(knames, k_bin)
-    )
-    key_cache = None
-    if with_bases:
-        # cumulative + hot keys: summaries → driver prefix-combine →
-        # per-slice bases folded in the final pass. The repartitioned
-        # slice stream persists so the two passes share one kernel read.
-        from collections import defaultdict
-
-        from pyspark import StorageLevel
-
-        u = sliced.repartition(
-            *[F.col(k) for k in knames], F.col("slc")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(u)
-        key_cache = u
-        summaries = u.mapInArrow(
-            summary_kernel,
-            schema=(f"{lanes_ddl}, slc long, s_cnt long, s_sum long, "
-                    f"s_min long, s_max long"),
-        ).collect()
-        # the summaries collect materialized u — release the split's
-        # input key-stream cache
-        _ic = getattr(sliced, "_arcade_input_cache", None)
-        if _ic is not None:
-            _ic.unpersist()
-        per_key: dict[tuple, list] = defaultdict(list)
-        for r in summaries:
-            kv = _row_key(r, knames)
-            per_key[kv].append(
-                (int(r["slc"]), int(r["s_cnt"]), int(r["s_sum"]),
-                 int(r["s_min"]), int(r["s_max"]))
-            )
-        brows = []
-        for kv, lst in per_key.items():
-            lst.sort()
-            b_cnt, b_sum = 0, 0
-            b_min, b_max = int(_I64_MAX), int(_I64_MIN)
-            for s, sc, ssum, smin, smax in lst:
-                brows.append((*kv, s, b_cnt, b_sum, b_min, b_max))
-                b_cnt += sc
-                b_sum += ssum  # exact Python ints — never wraps
-                if abs(b_sum) >= 2**62:
-                    raise OverflowError(
-                        "a cumulative running sum would exceed int64"
-                    )
-                b_min, b_max = min(b_min, smin), max(b_max, smax)
-        if brows:
-            bases_df = spark.createDataFrame(
-                brows,
-                schema=(f"{lanes_ddl}, slc long, b_cnt long, b_sum long, "
-                        f"b_min long, b_max long"),
-            )
-            ub_df = u.join(
-                F.broadcast(bases_df), on=[*knames, "slc"], how="left"
-            )
-        else:
-            # every hot key collapsed to one slice (zero time span) —
-            # identities only
-            ub_df = u.withColumns({
-                "b_cnt": F.lit(None).cast("long"),
-                "b_sum": F.lit(None).cast("long"),
-                "b_min": F.lit(None).cast("long"),
-                "b_max": F.lit(None).cast("long"),
-            })
-        ub_df = (
-            ub_df
-            .withColumn("b_cnt", F.coalesce(F.col("b_cnt"), F.lit(0)))
-            .withColumn("b_sum", F.coalesce(F.col("b_sum"), F.lit(0)))
-            .withColumn(
-                "b_min", F.coalesce(F.col("b_min"), F.lit(int(_I64_MAX)))
-            )
-            .withColumn(
-                "b_max", F.coalesce(F.col("b_max"), F.lit(int(_I64_MIN)))
-            )
-        )
-        ids = ub_df.mapInArrow(
-            rolling_kernel,
-            schema=f"{lanes_ddl}, t long, {', '.join(agg_ddl)}",
-        )
-    else:
-        if has_slices:
-            # the sliced stream is consumed once (lazily, by the
-            # caller's action); the split's input key-stream cache is
-            # already registered, so the next op (or an explicit
-            # release_key_caches()) frees it after consumption
-            u = sliced.repartition(*[F.col(k) for k in knames], F.col("slc"))
-        else:
-            u = keyed.repartition(*[F.col(k) for k in knames])
-        ids = u.mapInArrow(
-            rolling_kernel, schema=f"{lanes_ddl}, t long, {', '.join(agg_ddl)}"
-        )
-    out_cols = [
-        _group_key_out(F.col(kn), vt).alias(name)
-        for kn, vt, name in zip(knames, kvts, key_cols)
-    ]
+    agg_types = {"count": "w_count long", "sum": "w_sum long",
+                 "avg": "w_avg double", "min": "w_min long",
+                 "max": "w_max long"}
+    agg_ddl = [ddl for a, ddl in agg_types.items() if a in aggs]
+    lanes_ddl = _lanes_ddl(knames, k_bin)
+    out_cols = _keys_out(knames, kvts, key_cols)
     out_cols.append(_group_key_out(F.col("t"), kvts[g]).alias(ts_col))
-    if "count" in aggs:
-        out_cols.append(F.col("w_count"))
-    if "sum" in aggs:
-        out_cols.append(F.col("w_sum"))
-    if "avg" in aggs:
-        out_cols.append(F.col("w_avg"))
     # min/max commute with the lane mapping, so restoring the agg
     # column's logical type (ts/date/bool) is exact
-    if "min" in aggs:
-        out_cols.append(
-            _group_key_out(F.col("w_min"), kvts[g + 1]).alias("w_min")
-        )
-    if "max" in aggs:
-        out_cols.append(
-            _group_key_out(F.col("w_max"), kvts[g + 1]).alias("w_max")
-        )
-    res = ids.select(*out_cols)
-    if key_cache is not None:
-        res._arcade_key_cache = key_cache
-    return res
+    out_cols += [
+        _group_key_out(F.col(f"w_{a}"), kvts[g + 1]).alias(f"w_{a}")
+        if a in ("min", "max") else F.col(f"w_{a}")
+        for a in agg_types if a in aggs
+    ]
+    # bounded frames take window-width context bands; cumulative frames
+    # (window=None) stitch per-slice bases instead
+    strategy = dict(
+        summary=(make_kernel(True, summary=True),
+                 f"{lanes_ddl}, slc long, s_cnt long, s_sum long, "
+                 f"s_min long, s_max long"),
+        fold=(prefix, "b_cnt long, b_sum long, b_min long, b_max long"),
+        bases={"b_cnt": 0, "b_sum": 0, "b_min": int(_I64_MAX),
+               "b_max": int(_I64_MIN)},
+    ) if cumulative else dict(band=(win_units, w_after))
+    return _keyed_pass(
+        spark, keyed, knames, k_bin, make_kernel,
+        f"{lanes_ddl}, t long, {', '.join(agg_ddl)}",
+        lambda ids, _split: ids.select(*out_cols),
+        t_name=f"k{g}", out_dirs=(out_dir,), threshold=hot_key_threshold,
+        **strategy,
+    )
 
 
 def window_shift(
@@ -4655,10 +4381,8 @@ def window_shift(
     import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts
 
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    order_cols = (
-        [order_cols] if isinstance(order_cols, str) else list(order_cols)
-    )
+    key_cols = _as_cols(key_cols)
+    order_cols = _as_cols(order_cols)
     if not key_cols or not order_cols:
         raise ValueError("key_cols and order_cols must be non-empty")
     if offset < 1:
@@ -4667,17 +4391,11 @@ def window_shift(
         raise ValueError(f"direction must be 'lag' or 'lead': {direction!r}")
     g = len(key_cols)
     m = len(order_cols)
-    lane_cols = key_cols + order_cols + [val_col]
-    vts = _lane_vtypes(spark, out_dir, lane_cols)
-    for c, vt in zip(key_cols, vts[:g]):
-        if vt in ("double", "float"):
-            raise NotImplementedError(
-                f"float key columns are not a sane partition contract: {c}"
-            )
+    vts = _keyed_vtypes(spark, out_dir, key_cols, order_cols + [val_col])
     # keep_null_keys so null-VAL rows survive the kernel; the required
     # non-null key/order contract is re-imposed on the lanes below
     keyed, kvts = key_rowid_parts(
-        spark, out_dir, lane_cols,
+        spark, out_dir, key_cols + order_cols + [val_col],
         _preds_to_spec(preds) if preds else None,
         keep_null_keys=True,
         float_order_lane=any(
@@ -4687,110 +4405,50 @@ def window_shift(
     keyed = keyed.filter(
         F.expr(" AND ".join(f"k{i} IS NOT NULL" for i in range(g + m)))
     )
-    k_bin = [vt in ("str", "binary") for vt in kvts[:g]]
-    o_bin = [vt in ("str", "binary") for vt in kvts[g:g + m]]
+    lane_bin = [vt in ("str", "binary") for vt in kvts]
+    k_bin, o_bin, v_bin = lane_bin[:g], lane_bin[g:g + m], lane_bin[g + m]
     o_float = [vt in ("double", "float") for vt in kvts[g:g + m]]
-    v_bin = kvts[g + m] in ("str", "binary")
     v_float = kvts[g + m] in ("double", "float")
     knames = [f"k{i}" for i in range(g)]
     onames = [f"k{g + i}" for i in range(m)]
+    vname = f"k{g + m}"
     off = int(offset)
     is_lag = direction == "lag"
-    all_lanes = [f"k{i}" for i in range(g + m + 1)]
 
-    def _sorted_state(tbl, with_slices: bool):
-        """Shared lexsort + run bookkeeping for the shift/summary
-        kernels: returns (order, change, slc_sorted-or-None, plus the
-        loaded lanes)."""
-        nr = tbl.num_rows
-        kl = _win_lanes(tbl, knames, k_bin)
+    def sorted_runs(tbl, split: bool):
+        # order lanes have no nulls (filtered above), so they sort by
+        # value alone; binary lanes by their per-task dense codes
         ol = _win_lanes(tbl, onames, o_bin)
-        rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
-        slc = None
-        # order lanes have no nulls (filtered above), so their isn keys
-        # are skipped; binary lanes sort by their per-task dense codes
-        # (np.unique is lexicographic, matching bytewise ORDER BY)
-        keys = [rid]
-        for _isn, oval, _o in reversed(ol):
-            keys.append(oval)
-        if with_slices:
-            slc = (
-                tbl.column("slc").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            keys.append(slc)
-        for isn, val, _o in reversed(kl):
-            keys.append(val)
-            keys.append(isn)
-        order = np.lexsort(tuple(keys))
-        change = np.zeros(nr, dtype=bool)
-        change[0] = True
-        for isn, val, _o in kl:
-            vs = val[order]
-            change[1:] |= vs[1:] != vs[:-1]
-        if with_slices:
-            # a slice boundary is a run boundary: carry rows supply the
-            # cross-boundary context, the shift never crosses it
-            ss = slc[order]
-            change[1:] |= ss[1:] != ss[:-1]
-        return order, change, slc, kl, ol, rid
+        inner = [val for _isn, val, _o in ol] + [_i64(tbl, "rid")]
+        return _Runs(tbl, knames, k_bin, inner, slc=split), ol
 
-    def make_shift_kernel(with_slices: bool):
-        def shift_kernel(batches):
+    def make_shift_kernel(split: bool):
+        @_runs_kernel
+        def shift_kernel(tbl):
             from arcade_spark.bits import float_order_keys
 
-            chunks = [pa.Table.from_batches([b]) for b in batches]
-            if not chunks:
-                return
-            tbl = pa.concat_tables(chunks).combine_chunks()
-            nr = tbl.num_rows
-            if nr == 0:
-                return
-            order, change, _slc, kl, ol, _rid = _sorted_state(
-                tbl, with_slices
-            )
-            (v_isn, v_val, v_obj), = _win_lanes(tbl, [f"k{g + m}"], [v_bin])
-            idx = np.arange(nr, dtype=np.int64)
-            run_start = np.maximum.accumulate(np.where(change, idx, 0))
+            r, ol = sorted_runs(tbl, split)
+            order, idx = r.order, r.idx
+            (v_isn, v_val, v_obj), = _win_lanes(tbl, [vname], [v_bin])
             if is_lag:
                 src = idx - off
-                valid = src >= run_start
+                valid = src >= r.run_start
             else:
-                starts = np.nonzero(change)[0]
-                run_end = np.repeat(
-                    np.append(starts[1:], nr), np.diff(np.append(starts, nr))
-                )
                 src = idx + off
-                valid = src < run_end
-            src_c = np.clip(src, 0, nr - 1)
+                valid = src < r.run_end
+            src_c = np.clip(src, 0, r.n - 1)
             v_isn_s = v_isn[order]
             shift_null = ~valid | (v_isn_s[src_c] == 1)
-            if with_slices:
-                emit = (
-                    tbl.column("emit").to_numpy(zero_copy_only=False)
-                    .astype(bool)[order]
-                )
-            else:
-                emit = slice(None)  # all rows
-            cols_out = []
-            for (isn, val, obj), b in zip(kl, k_bin):
-                if b:
-                    cols_out.append(
-                        pa.array(obj[order][emit], type=pa.binary())
-                    )
-                else:
-                    cols_out.append(pa.array(val[order][emit]))
-            for (isn, oval, obj), b, fl in zip(ol, o_bin, o_float):
-                if b:
-                    cols_out.append(
-                        pa.array(obj[order][emit], type=pa.binary())
-                    )
-                elif fl:
-                    cols_out.append(pa.array(
-                        float_order_keys(oval[order]).view(np.float64)[emit]
-                    ))
-                else:
-                    cols_out.append(pa.array(oval[order][emit]))
+            # carry rows (emit=false) only feed their slice's shifts
+            emit = (
+                tbl.column("emit").to_numpy(zero_copy_only=False)
+                .astype(bool)[order] if split else slice(None)
+            )
+            cols_out = r.keys_at(emit)
+            for lane, b, fl in zip(ol, o_bin, o_float):
+                cols_out += [pa.array(
+                    float_order_keys(lane[1][order]).view(np.float64)[emit]
+                )] if fl else _lane_arrays([lane], [b], order[emit])
             if v_bin:
                 v_obj_s = v_obj[order]
                 cols_out.append(pa.array(v_obj_s[emit], type=pa.binary()))
@@ -4817,41 +4475,36 @@ def window_shift(
 
         return shift_kernel
 
-    def edge_kernel(batches):
-        """Per present (hot key, slice): the ``off`` rows at the slice's
-        trailing (lag) / leading (lead) edge in sort order, with their
-        raw lanes — the driver stitches these into per-slice carries."""
-        chunks = [pa.Table.from_batches([b]) for b in batches]
-        if not chunks:
-            return
-        tbl = pa.concat_tables(chunks).combine_chunks()
-        nr = tbl.num_rows
-        if nr == 0:
-            return
-        order, change, _slc, _kl, _ol, _rid = _sorted_state(tbl, True)
-        nsl = (
-            tbl.column("nsl").to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-        )
-        starts = np.nonzero(change)[0]
-        ends = np.append(starts[1:], nr)
-        keep = nsl[order][starts] > 1
-        rs, re_ = starts[keep], ends[keep]
+    edge_names = [*knames, *onames, vname, "rid", "slc"]
+
+    @_runs_kernel
+    def edge_kernel(tbl):
+        # per present (hot key, slice): the ``off`` rows at the slice's
+        # trailing (lag) / leading (lead) edge in sort order, with
+        # their raw lanes — the driver stitches these into carries
+        r, _ol = sorted_runs(tbl, True)
+        rs, re_, _keep = r.sliced()
         if rs.size == 0:
             return
-        sel_parts = []
-        for s0, e0 in zip(rs, re_):
-            take = min(off, int(e0 - s0))
-            sel_parts.append(
-                order[e0 - take:e0] if is_lag else order[s0:s0 + take]
-            )
-        sel = np.concatenate(sel_parts)
-        take_idx = pa.array(sel, type=pa.int64())
-        arrays = [
-            tbl.column(c).combine_chunks().take(take_idx)
-            for c in all_lanes + ["rid", "slc"]
-        ]
-        yield pa.RecordBatch.from_arrays(arrays, names=all_lanes + ["rid", "slc"])
+        sel = np.concatenate([
+            r.order[max(s, e - off):e] if is_lag else r.order[s:min(e, s + off)]
+            for s, e in zip(rs, re_)
+        ])
+        yield from tbl.select(edge_names).take(pa.array(sel)).to_batches()
+
+    fields = [*onames, vname, "rid"]
+
+    def carry(slices):
+        # each present slice receives the `off` rows that globally
+        # precede (lag) / follow (lead) it, as non-emitting carry rows
+        by_slc: dict[int, list] = {}
+        for s in slices:  # edge rows arrive in sort order
+            by_slc.setdefault(s["slc"], []).append(_row_key(s, fields))
+        buf: list = []
+        for s in sorted(by_slc, reverse=not is_lag):
+            for row in buf:
+                yield (s, *row, False)
+            buf = (buf + by_slc[s])[-off:] if is_lag else (by_slc[s] + buf)[:off]
 
     def _lane_ddl(b: bool, fl: bool) -> str:
         return "binary" if b else ("double" if fl else "long")
@@ -4865,99 +4518,35 @@ def window_shift(
     )
     v_ddl = _lane_ddl(v_bin, v_float)
 
-    sliced = None
-    _rb = (_manifest_total_rows(out_dir)
-           if hot_key_threshold is not None else 0)
-    if (
-        hot_key_threshold is not None
-        and not o_bin[0]  # no range arithmetic over binary lanes
-        and off * 8 <= hot_key_threshold  # carry stays far below data
-        and _rb > hot_key_threshold
-    ):
-        sliced, _n_hot = _split_hot_keys(
-            spark, keyed, knames, k_bin, f"k{g}",
-            overlap=0, threshold=hot_key_threshold, row_bound=_rb,
-        )
-    if sliced is not None:
-        from pyspark import StorageLevel
-
-        # persist the UN-repartitioned slice stream: the edge pass and
-        # the final pass each repartition it by (key, slc) themselves —
-        # the final pass must shuffle the carry union anyway so the
-        # carries land in their target slice's task
-        u = sliced.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(u)
-        raw_lane_ddl = ", ".join(
-            f"k{i} {'binary' if vt in ('str', 'binary') else 'long'}"
-            for i, vt in enumerate(kvts)
-        )
-        edges = (
-            u.repartition(*[F.col(k) for k in knames], F.col("slc"))
-            .mapInArrow(
-                edge_kernel, schema=f"{raw_lane_ddl}, rid long, slc long"
-            ).collect()
-        )
-        _ic = getattr(sliced, "_arcade_input_cache", None)
-        if _ic is not None:
-            _ic.unpersist()
-        from collections import defaultdict
-
-        per_key: dict[tuple, list] = defaultdict(list)
-        lane_names = all_lanes + ["rid"]
-        for r in edges:
-            kv = _row_key(r, knames)
-            per_key[kv].append((int(r["slc"]), _row_key(r, lane_names)))
-        carry_rows = []
-        for kv, lst in per_key.items():
-            by_slc: dict[int, list] = defaultdict(list)
-            for s, row in lst:
-                by_slc[s].append(row)  # edge rows arrive in sort order
-            buf: list = []
-            it = sorted(by_slc) if is_lag else sorted(by_slc, reverse=True)
-            for s in it:
-                for row in buf:
-                    carry_rows.append((*row, s))
-                if is_lag:
-                    buf = (buf + by_slc[s])[-off:]
-                else:
-                    buf = (by_slc[s] + buf)[:off]
-        if carry_rows:
-            carries = spark.createDataFrame(
-                carry_rows, schema=f"{raw_lane_ddl}, rid long, slc long"
-            ).select(
-                *all_lanes, "rid", "slc",
-                F.lit(False).alias("emit"), F.lit(2).cast("long").alias("nsl"),
-            )
-            ub = u.unionByName(carries)
-        else:
-            ub = u
-        ids = ub.repartition(
-            *[F.col(k) for k in knames], F.col("slc")
-        ).mapInArrow(
-            make_shift_kernel(True), schema=f"{lanes_ddl}, v {v_ddl}, s {v_ddl}"
-        )
-    else:
-        u = keyed.repartition(*[F.col(k) for k in knames])
-        ids = u.mapInArrow(
-            make_shift_kernel(False), schema=f"{lanes_ddl}, v {v_ddl}, s {v_ddl}"
-        )
-
     def _restore(col, vt):
         if vt in ("double", "float"):
             return col.cast(spark_type_for(vt))
         return _group_key_out(col, vt)
 
-    return ids.select(
-        *[
-            _group_key_out(F.col(kn), vt).alias(name)
-            for kn, vt, name in zip(knames, kvts, key_cols)
-        ],
+    out_cols = [
+        *_keys_out(knames, kvts, key_cols),
         *[
             _restore(F.col(on), vt).alias(name)
             for on, vt, name in zip(onames, kvts[g:g + m], order_cols)
         ],
         _restore(F.col("v"), kvts[g + m]).alias(val_col),
         _restore(F.col("s"), kvts[g + m]).alias("shifted"),
+    ]
+    # range slices need arithmetic on the first order lane (not
+    # binary), and the carry must stay far below the data
+    splittable = not o_bin[0] and (
+        hot_key_threshold is not None and off * 8 <= hot_key_threshold
+    )
+    return _keyed_pass(
+        spark, keyed, knames, k_bin, make_shift_kernel,
+        f"{lanes_ddl}, v {v_ddl}, s {v_ddl}",
+        lambda ids, _split: ids.select(*out_cols),
+        t_name=onames[0], out_dirs=(out_dir,),
+        threshold=hot_key_threshold if splittable else None,
+        summary=(edge_kernel,
+                 _lanes_ddl(edge_names, lane_bin + [False, False])),
+        fold=(carry, f"{_lanes_ddl(fields, lane_bin[g:] + [False])}, "
+                     f"emit boolean"),
     )
 
 

@@ -14,7 +14,7 @@ import pandas as pd
 import pytest
 
 from arcade_spark.encode import encode_job
-from arcade_spark.readops import rolling_agg, sessionize
+from arcade_spark.readops import join_asof, rolling_agg, sessionize, window_shift
 
 
 @pytest.fixture(scope="module")
@@ -371,8 +371,21 @@ def test_window_shift_split_bounds_task_rows(spark, hot_table):
     assert max(r["rows"] for r in cells) <= 2 * THRESH
 
 
+SPLIT_OPS = {
+    "rolling_agg": lambda s, out, h: rolling_agg(
+        s, out, "uid", "t", window=5000, hot_key_threshold=h),
+    "sessionize": lambda s, out, h: sessionize(
+        s, out, "uid", "t", gap=800, hot_key_threshold=h),
+    "window_shift": lambda s, out, h: window_shift(
+        s, out, "uid", ["t", "ev"], "amt", hot_key_threshold=h),
+    "join_asof": lambda s, out, h: join_asof(
+        s, out, out, "t", "uid", hot_key_threshold=h),
+}
+
+
+@pytest.mark.parametrize("op", sorted(SPLIT_OPS))
 def test_split_input_cache_released_after_consumer_raises(
-    spark, hot_table, monkeypatch
+    spark, hot_table, monkeypatch, op
 ):
     """The split persists its narrow input stream; a caller that raises
     after the split, before its own release, must not leak that cache
@@ -392,8 +405,85 @@ def test_split_input_cache_released_after_consumer_raises(
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     assert persisted().size() == 0
     with pytest.raises(RuntimeError, match="after the split"):
-        rolling_agg(spark, out, "uid", "t", window=5000,
-                    hot_key_threshold=THRESH)
+        SPLIT_OPS[op](spark, out, THRESH)
     assert persisted().size() > 0
     ro.release_key_caches()
     assert persisted().size() == 0
+
+
+@pytest.fixture(scope="module")
+def str_hot_table(spark, tmp_path_factory):
+    """A str-keyed table: one 1200-row hot key ("hot"), 20 cold keys of
+    ~20 rows and a few null keys; ``tag`` splits rows into as-of sides."""
+    rng = np.random.default_rng(5)
+    n_hot, n_cold, n_null = 1200, 400, 12
+    n = n_hot + n_cold + n_null
+    key = (["hot"] * n_hot
+           + [f"c{int(i):02d}" for i in rng.integers(0, 20, n_cold)]
+           + [None] * n_null)
+    df = pd.DataFrame({
+        "key": key,
+        "t": pd.array(rng.integers(0, 200_000, n).astype(np.int64),
+                      dtype="Int64"),
+        "amt": pd.array(rng.integers(-50, 100, n).astype(np.int64),
+                        dtype="Int64"),
+        "tag": pd.array(rng.integers(0, 2, n).astype(np.int64),
+                        dtype="Int64"),
+        "ev": [f"s{i:05d}" for i in range(n)],
+    })
+    out = str(tmp_path_factory.mktemp("strhot") / "enc")
+    encode_job(spark, spark.createDataFrame(df), out,
+               num_parts=3, block_rows=256, order_col="ev")
+    return out
+
+
+STR_SPLIT_OPS = {
+    "sessionize_rows": lambda s, out, h: sessionize(
+        s, out, "key", "t", gap=300, hot_key_threshold=h),
+    "sessionize_sessions": lambda s, out, h: sessionize(
+        s, out, "key", "t", gap=300, emit="sessions", hot_key_threshold=h),
+    "rolling_bounded": lambda s, out, h: rolling_agg(
+        s, out, "key", "t", window=3000, agg_col="amt",
+        aggs=("count", "sum", "min"), hot_key_threshold=h),
+    "rolling_cumulative": lambda s, out, h: rolling_agg(
+        s, out, "key", "t", window=None, agg_col="amt",
+        aggs=("count", "sum", "max"), hot_key_threshold=h),
+    "window_shift_lag": lambda s, out, h: window_shift(
+        s, out, "key", ["t", "ev"], "amt", offset=2, hot_key_threshold=h),
+    **{f"join_asof_{d}": (lambda s, out, h, d=d: join_asof(
+        s, out, out, "t", "key", direction=d, project_b=["ev"],
+        preds_a=[("eq", "tag", 0)], preds_b=[("eq", "tag", 1)],
+        hot_key_threshold=h)) for d in ("backward", "nearest")},
+}
+
+
+@pytest.mark.parametrize("op", sorted(STR_SPLIT_OPS))
+def test_str_key_split_matches_unsplit(spark, str_hot_table, monkeypatch, op):
+    """A binary key lane through the split path: the driver-side key
+    tuples, the hot-key, base and carry frames with a binary lane, and
+    the per-slice joins/unions on it. The split runs with
+    ``binaryAsBytes`` off, so its collects hand binary lanes back as
+    bytearray (which must be normalized to hashable bytes). Exactly
+    one key is hot, and the output equals the unsplit path."""
+    import arcade_spark.readops as ro
+
+    hot = []
+    split = ro._split_hot_keys
+
+    def spy(*args, **kwargs):
+        res = split(*args, **kwargs)
+        hot.append(res[1])
+        return res
+
+    monkeypatch.setattr(ro, "_split_hot_keys", spy)
+    run = STR_SPLIT_OPS[op]
+    conf = "spark.sql.execution.pyspark.binaryAsBytes"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        got = _rows(run(spark, str_hot_table, 300))
+    finally:
+        spark.conf.set(conf, before)
+    assert hot == [1]
+    assert got == _rows(run(spark, str_hot_table, None))
+    ro.release_key_caches()

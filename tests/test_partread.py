@@ -108,6 +108,8 @@ def test_modes_agree_scan(spark, table):
     pd.testing.assert_frame_equal(sub, a[["v", "url"]])
     with pytest.raises(KeyError):
         scan(spark, out, ["nope"])
+    with pytest.raises(ValueError):
+        scan(spark, out, [])
 
 
 def test_modes_agree_group_count(spark, table):

@@ -1,8 +1,8 @@
-"""Plan-shape guard for the late-materializing operators and the
-group-by family: in the AQE final plan no stage chains two Python execs
-(each task would need two Python workers — past the idle-worker cap
-every such task re-forks and re-imports one), nothing is read back from
-a cache, no join is keyed on ``row_id`` (projections attach by
+"""Plan-shape guard for the late-materializing operators, the
+group-by family and the keyed-timeline operators: in the AQE final
+plan no stage chains two Python execs (each task would need two Python
+workers — past the idle-worker cap every such task re-forks and
+re-imports one), nothing is read back from a cache, no join is keyed on ``row_id`` (projections attach by
 gather-expand, not by joining decoded rows back), and join_asof runs its
 merge kernel once."""
 
@@ -22,7 +22,10 @@ from arcade_spark.readops import (
     join_band,
     join_encoded,
     orderby_export,
+    rolling_agg,
+    sessionize,
     top_per_key,
+    window_shift,
 )
 
 
@@ -66,6 +69,15 @@ OPS = {
         s, oa, [("range", "ts", 0, 9000)], ["tag"], "ts"),
     "distinct_count_approx": lambda s, oa, ob: distinct_count_approx(
         s, oa, "tag"),
+    # the keyed-timeline operators on their unsplit path
+    **{f"sessionize_{emit}": (lambda s, oa, ob, emit=emit: sessionize(
+        s, oa, "fk", "ts", gap=1000, emit=emit)) for emit in ("rows", "sessions")},
+    "rolling_agg_bounded": lambda s, oa, ob: rolling_agg(
+        s, oa, "fk", "ts", window=2000, agg_col="id",
+        aggs=("count", "sum", "max")),
+    "rolling_agg_cumulative": lambda s, oa, ob: rolling_agg(
+        s, oa, "fk", "ts", window=None, agg_col="id", aggs=("count", "sum")),
+    "window_shift": lambda s, oa, ob: window_shift(s, oa, "fk", ["ts"], "id"),
 }
 
 

@@ -6,6 +6,14 @@ Writes a small corpus to encode-plan against, and encodes two small
 tables to run the late-materializing joins on: for ``join_encoded`` and
 ``join_asof`` it prints the AQE final plan, the Spark job count and the
 Python-exec depth of every stage (no stage may chain two Python execs).
+
+The keyed section runs the five keyed-timeline operators (``join_asof``,
+``sessionize``, ``rolling_agg``, ``window_shift``, ``top_per_key``) on
+the same two tables, unsplit and with a forced ``hot_key_threshold``,
+and prints one line per run: its Spark job count and the Python depth
+of every stage. Run only that section with
+
+    python tools/show_plans.py keyed
 """
 
 from __future__ import annotations
@@ -26,6 +34,9 @@ def main() -> None:
     from arcade_spark.session import get_spark
 
     spark = get_spark(app="show-plans", cores=4)
+    if sys.argv[1:] == ["keyed"]:
+        show_keyed(spark, tempfile.mkdtemp(prefix="plans_keyed"))
+        return
     corpus = write_corpus_files("/tmp/plans_corpus", 20000, 4)
 
     print("=== shuffle-mode encode plan (single exchange) ===")
@@ -38,14 +49,11 @@ def main() -> None:
     dedup_minhash_lsh(spark, "/root/testdata/sf0.001").explain("formatted")
 
     show_attach_joins(spark, tempfile.mkdtemp(prefix="plans_joins"))
+    show_keyed(spark, tempfile.mkdtemp(prefix="plans_keyed"))
 
 
-def show_attach_joins(spark, root: str) -> None:
-    """Run the two gather-expand-attach joins on small encoded tables
-    and print each one's final plan, job count and per-stage depth."""
+def _tables(spark, root: str) -> tuple[str, str]:
     from arcade_spark.encode import encode_job
-    from arcade_spark.planshape import stages
-    from arcade_spark.readops import join_asof, join_encoded
 
     a = spark.createDataFrame(
         [(i, i % 50, f"q{i % 9}", i * 10) for i in range(2000)],
@@ -57,7 +65,27 @@ def show_attach_joins(spark, root: str) -> None:
     oa, ob = os.path.join(root, "a"), os.path.join(root, "b")
     encode_job(spark, a, oa, num_parts=2, block_rows=256, order_col="id")
     encode_job(spark, b, ob, num_parts=2, block_rows=256, order_col="pk")
+    return oa, ob
+
+
+def _run(spark, name: str, run):
+    """Collect ``run()`` under its own job group: (df, Spark jobs)."""
     sc = spark.sparkContext
+    group = f"show-plans-{name}"
+    sc.setJobGroup(group, name)
+    df = run()
+    df.collect()
+    sc.setJobGroup(None, None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def show_attach_joins(spark, root: str) -> None:
+    """Run the two gather-expand-attach joins on small encoded tables
+    and print each one's final plan, job count and per-stage depth."""
+    from arcade_spark.planshape import stages
+    from arcade_spark.readops import join_asof, join_encoded
+
+    oa, ob = _tables(spark, root)
     runs = {
         "join_encoded": lambda: join_encoded(
             spark, oa, ob, "fk", "pk", project_a=["tag", "id"],
@@ -66,17 +94,58 @@ def show_attach_joins(spark, root: str) -> None:
             spark, oa, oa, "ts", "fk", project_a=["tag"], project_b=["id"]),
     }
     for name, run in runs.items():
-        group = f"show-plans-{name}"
-        sc.setJobGroup(group, name)
-        df = run()
-        df.collect()
-        sc.setJobGroup(None, None)
+        df, jobs = _run(spark, name, run)
         print(f"=== {name}: gather-expand attach ===")
         print(df._jdf.queryExecution().executedPlan().toString())
-        print(f"spark jobs: {len(sc.statusTracker().getJobIdsForGroup(group))}")
+        print(f"spark jobs: {jobs}")
         for i, st in enumerate(stages(df)):
             print(f"stage {i}: python depth {st['python_depth']}: "
                   + " <- ".join(st["ops"]))
+
+
+def show_keyed(spark, root: str) -> None:
+    """Run the keyed-timeline operators on the small tables, unsplit
+    and with every key forced hot (50 keys of 40 rows, threshold 20),
+    and print each run's job count and per-stage Python depth.
+    ``top_per_key`` has no hot-key split; it runs once."""
+    from arcade_spark.planshape import stages
+    from arcade_spark.readops import (
+        join_asof, release_key_caches, rolling_agg, sessionize,
+        top_per_key, window_shift,
+    )
+
+    oa, _ob = _tables(spark, root)
+    ops = {
+        "join_asof_backward": lambda h: join_asof(
+            spark, oa, oa, "ts", "fk", project_a=["tag"], project_b=["id"],
+            hot_key_threshold=h),
+        "join_asof_nearest": lambda h: join_asof(
+            spark, oa, oa, "ts", "fk", project_b=["id"], direction="nearest",
+            hot_key_threshold=h),
+        "sessionize_rows": lambda h: sessionize(
+            spark, oa, "fk", "ts", gap=1000, hot_key_threshold=h),
+        "sessionize_sessions": lambda h: sessionize(
+            spark, oa, "fk", "ts", gap=1000, emit="sessions",
+            hot_key_threshold=h),
+        "rolling_agg_bounded": lambda h: rolling_agg(
+            spark, oa, "fk", "ts", window=2000, agg_col="id",
+            aggs=("count", "sum", "max"), hot_key_threshold=h),
+        "rolling_agg_cumulative": lambda h: rolling_agg(
+            spark, oa, "fk", "ts", window=None, agg_col="id",
+            aggs=("count", "sum"), hot_key_threshold=h),
+        "window_shift_lag": lambda h: window_shift(
+            spark, oa, "fk", ["ts"], "id", hot_key_threshold=h),
+    }
+    print("=== keyed-timeline operators: jobs and per-stage python depth ===")
+    runs = [(f"{name} unsplit", lambda op=op: op(None)) for name, op in ops.items()]
+    runs += [(f"{name} split", lambda op=op: op(20)) for name, op in ops.items()]
+    runs.append(("top_per_key", lambda: top_per_key(
+        spark, oa, "fk", "ts", 2, project=["tag", "id"])))
+    for name, run in runs:
+        df, jobs = _run(spark, name.replace(" ", "-"), run)
+        depths = [st["python_depth"] for st in stages(df)]
+        print(f"{name}: jobs {jobs}, rows {df.count()}, stage depths {depths}")
+        release_key_caches()
 
 
 if __name__ == "__main__":
