@@ -497,7 +497,6 @@ def _filter_part_batches(
     conjuncts: list[list],
     proj_items: list[tuple[str, str]],
     count_only: bool,
-    agg_item: tuple[str, str] | None = None,
 ) -> Iterator[pa.RecordBatch]:
     """Run the whole filter for ONE partition: predicate pass (zone
     prune → kernel match on kept blocks, dict replay on the rest) then
@@ -513,8 +512,6 @@ def _filter_part_batches(
     conjunct and union across conjuncts. Each predicate occurrence owns
     an independent dictionary-replay state, so repeated columns across
     conjuncts are fine."""
-    from arcade_spark.core import decode_int_block
-
     pos_of, blk, cfs = _part_match_positions(out_dir, pid, conjuncts)
 
     if count_only:
@@ -534,41 +531,6 @@ def _filter_part_batches(
         return
 
     matched = np.array([len(p) > 0 for p in pos_of], dtype=bool)
-
-    if agg_item is not None:
-        # fused filter+aggregate: decode ONLY the agg column, ONLY at
-        # matched positions, and emit one integer partial per part —
-        # matched rows never materialize
-        name, avt, agg_scale = agg_item
-        acf = _open_cols(out_dir, pid, [(name, avt)], cfs)[name]
-        s = 0
-        mn = mx = None
-        cv = 0
-        cr = 0
-        for b, [(meta, blob, _)] in _lockstep([acf], matched):
-            ib = decode_int_block(blob, meta)
-            pos = pos_of[b]
-            cr += len(pos)
-            v = ib.values[pos]
-            if ib.validity is not None:
-                v = v[ib.validity[pos]]
-            v = quantized_agg_lane(v, None, avt, agg_scale)
-            if len(v):
-                s += int(v.sum())
-                bmn, bmx = int(v.min()), int(v.max())
-                mn = bmn if mn is None else min(mn, bmn)
-                mx = bmx if mx is None else max(mx, bmx)
-                cv += len(v)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([s], type=pa.int64()),
-             pa.array([mn], type=pa.int64()),
-             pa.array([mx], type=pa.int64()),
-             pa.array([cv], type=pa.int64()),
-             pa.array([cr], type=pa.int64())],
-            names=["s", "mn", "mx", "cv", "cr"],
-        )
-        return
-
     if not matched.any() or not proj_items:
         return
     cfs = _open_cols(out_dir, pid, proj_items, cfs)
@@ -599,8 +561,8 @@ def _part_match_positions(
 ) -> tuple[list[np.ndarray], np.ndarray, dict[str, _ColFile]]:
     """The DNF predicate pass for ONE partition: returns (per-block
     match positions, per-block zone-alive mask, the open
-    predicate-column handles) so filter / fused-aggregate / fused-
-    group-by / key kernels share one implementation and reuse the
+    predicate-column handles) so filter / group-by (grand totals
+    included) / key kernels share one implementation and reuse the
     handles through ``_open_cols``."""
     from arcade_spark.core import decode_int_block
     from arcade_spark.readops import _complement_positions
@@ -691,8 +653,6 @@ def filter_parts(
     count_only: bool = False,
     combine: str = "and",
     dnf_spec: list[list[tuple[str, tuple]]] | None = None,
-    agg_col: str | None = None,
-    agg_scale: int = AGG_SCALE,
 ) -> DataFrame:
     """Files-mode filter driver. Predicate forms:
 
@@ -722,18 +682,7 @@ def filter_parts(
     conjuncts = _compile_conjuncts(raw_conjs, all_cols)
     seen = {p.column for conj in conjuncts for p in conj}
 
-    agg_item: tuple[str, str] | None = None
-    if agg_col is not None:
-        if count_only:
-            raise ValueError("agg_col and count_only are mutually exclusive")
-        avt = all_cols.get(agg_col)
-        if avt is None:
-            raise KeyError(f"no such column: {agg_col}")
-        if avt not in _AGG_VTS:
-            raise NotImplementedError(f"filter_agg {_AGG_GUARD}")
-        agg_item = (agg_col, avt, agg_scale)
-
-    if count_only or agg_item is not None:
+    if count_only:
         proj_items: list[tuple[str, str]] = []
     else:
         names = project if project is not None else [
@@ -743,13 +692,11 @@ def filter_parts(
 
     def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
         return _filter_part_batches(
-            out_dir, pid, conjuncts, proj_items, count_only, agg_item=agg_item
+            out_dir, pid, conjuncts, proj_items, count_only
         )
 
     if count_only:
         ddl = "part_id int, block_id int, matches long, zone_skipped int"
-    elif agg_item is not None:
-        ddl = "s long, mn long, mx long, cv long, cr long"
     else:
         ddl = ", ".join(f"{n} {spark_type_for(v)}" for n, v in proj_items)
     return _map_parts(spark, [p for p, _ in parts], part_batches, ddl)
@@ -1354,11 +1301,13 @@ def filter_group_by_multi_partials(
     value is its own group (code −1 in-kernel, a null k-lane in the
     partials) and count counts every matched row — the grouping-sets
     operator needs this, since a rolled-up level must keep rows that
-    are null in an unrelated group column."""
+    are null in an unrelated group column. Empty ``group_cols`` puts
+    every matched row in one group (no k lanes): the grand total. A
+    block's int64 sum is bounded before it is taken: when
+    ``max|v|·rows`` reaches 2^62, float64 estimates of the group sums
+    decide, and one at or past 2^62 raises rather than wrap."""
     all_cols, parts = load_manifest(out_dir)
     cols = dict(all_cols)
-    if not group_cols:
-        raise ValueError("group_cols must be non-empty")
     if len(set(group_cols)) != len(group_cols):
         raise ValueError("duplicate group columns")
     vts = []
@@ -1396,14 +1345,16 @@ def filter_group_by_multi_partials(
         if conjuncts is not None:
             pos_of, _blk, pcfs = _part_match_positions(out_dir, pid, conjuncts)
             cfs = _open_cols(out_dir, pid, walk_items, pcfs)
-            matched = np.array([len(p) > 0 for p in pos_of], dtype=bool)
+            rows_of = np.array([len(p) for p in pos_of], dtype=np.int64)
         else:
-            cfs = _open_cols(out_dir, pid, walk_items)
-            n_values = cfs[group_cols[0]].cm.n_values
-            # no predicate: every row, as views (no gathers)
-            pos_of = [slice(None)] * len(n_values)
-            matched = n_values > 0
-        for b, row in _lockstep([cfs[c] for c in walk], matched):
+            # no predicate: every row, as views (no gathers); a count
+            # with no column to walk reads one column's block sizes
+            cfs = _open_cols(out_dir, pid, walk_items or all_cols[:1])
+            rows_of = next(iter(cfs.values())).cm.n_values
+            pos_of = [slice(None)] * len(rows_of)
+        blocks = (_lockstep([cfs[c] for c in walk], rows_of > 0) if walk
+                  else ((int(b), []) for b in np.flatnonzero(rows_of)))
+        for b, row in blocks:
             meta_of = {c: meta for c, (meta, _, _) in zip(walk, row)}
             blob_of = {c: blob for c, (_, blob, _) in zip(walk, row)}
             gdec_of = {c: gdec for c, (_, _, gdec) in zip(walk, row)}
@@ -1448,8 +1399,9 @@ def filter_group_by_multi_partials(
             # rows that join a group; slice(None) when all do
             # (a view, where an all-true mask would copy)
             rows = slice(None) if cmask is None else cmask
-            n = len(key_codes[0])
-            inv, width = _dense_group_index(key_codes)
+            n = int(rows_of[b])
+            inv, width = (_dense_group_index(key_codes) if key_codes
+                          else (np.zeros(n, dtype=np.int64), 1))
             cnt = np.bincount(inv[rows], minlength=width)
 
             # decode each referenced agg column ONCE per block;
@@ -1521,6 +1473,17 @@ def filter_group_by_multi_partials(
                                   dtype=np.int64)
                     np.maximum.at(s_i, gi, val)
                 else:
+                    # np.add.at wraps silently past int64: a cheap bound
+                    # clears most blocks, float64 sums decide the rest
+                    if len(val) and (float(np.abs(val).max()) * len(val)
+                                     >= 2.0 ** 62):
+                        est = np.bincount(gi, weights=val.astype(np.float64),
+                                          minlength=width)
+                        if (np.abs(est) >= 2.0 ** 62).any():
+                            raise ValueError(
+                                "multi-agg sum overflows int64: a block's "
+                                "group sum must stay < 2^62"
+                            )
                     s_i = np.zeros(width, dtype=np.int64)
                     np.add.at(s_i, gi, val)
                 spec_sums.append(s_i)
@@ -1823,33 +1786,20 @@ def _column_topk_str_parts(
     return out
 
 
-def column_agg_parts(
-    spark: SparkSession, out_dir: str, column: str,
-    agg_scale: int = AGG_SCALE,
-    mode: str = "fixed",
-) -> DataFrame:
-    """``SELECT sum(col), count(*), count(col), avg(col)``: per-
-    partition exact integer partials (nulls excluded from sum/avg, SQL
-    semantics), one-row driver fold. Integer sums are exact in any
-    order, and avg is a single IEEE division of exact integers — every
-    engine reproduces the bytes. double/float columns aggregate through
-    the fixed-point contract (quantized_agg_lane): sum_v/avg_v come
-    from the exact int64 sum of floor(x·scale+0.5) with single IEEE
-    divisions at the end, so they too are cross-engine bit-identical.
-
-    ``mode="ieee"`` (round-5, double/float only): TRUE IEEE float64
-    sums for arbitrary doubles the fixed-point contract can't carry
-    (huge magnitudes, full precision, ±inf/NaN propagate per IEEE).
-    Summation order is PINNED — per-block pairwise np.sum, Kahan
+def column_agg_parts(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
+    """``column_agg(mode="ieee")`` (round-5, double/float only): TRUE
+    IEEE float64 sums for arbitrary doubles the fixed-point contract
+    can't carry (huge magnitudes, full precision, ±inf/NaN propagate per
+    IEEE). Summation order is PINNED — per-block pairwise np.sum, Kahan
     compensation across blocks in block order, parts folded in part_id
     order on the driver — so the result is deterministic across runs
     and cluster sizes, but only tolerance-comparable (≈1e-15 relative)
     against other engines, which own different orders. Extrema follow
     Spark's NaN-greatest contract layout-independently (any NaN ⇒ max
-    NaN; min NaN only if all NaN). Pick fixed for cross-engine hashes,
-    ieee for arbitrary-double fidelity. NOTE: ieee mode runs its scan
+    NaN; min NaN only if all NaN). The fixed-point mode is the zero-key
+    multi-agg kernel (``readops.column_agg``); this one runs its scan
     EAGERLY (the pinned fold happens at call time) and returns a wider
-    schema than fixed mode (adds min_v/max_v)."""
+    schema (adds min_v/max_v)."""
     from arcade_spark.core import decode_int_block
 
     all_cols, parts = load_manifest(out_dir)
@@ -1858,139 +1808,96 @@ def column_agg_parts(
         raise KeyError(f"no such column: {column}")
     if vt not in _AGG_VTS:
         raise NotImplementedError(f"column_agg {_AGG_GUARD}")
-    is_dbl = vt in ("double", "float")
-    if mode not in ("fixed", "ieee"):
-        raise ValueError(f"mode must be 'fixed' or 'ieee': {mode!r}")
-    if mode == "ieee" and not is_dbl:
+    if vt not in ("double", "float"):
         raise ValueError("mode='ieee' applies to double/float columns only")
 
-    if mode == "ieee":
-        def ipart(pid: int) -> Iterator[pa.RecordBatch]:
-            cf = _ColFile(out_dir, pid, column, vt)
-            s = 0.0
-            comp = 0.0  # Kahan compensation across blocks
-            mn = mx = None  # extrema over NON-NaN values
-            has_nan = False
-            cnt_col = 0
-            for _b, meta, blob in cf.blocks():
-                iblock = decode_int_block(blob, meta)
-                v = iblock.values
-                if iblock.validity is not None:
-                    v = v[iblock.validity]
-                f = v.view(np.float64)
-                cnt_col += len(f)
-                if len(f):
-                    bs = float(f.sum())
-                    if np.isfinite(bs) and np.isfinite(s):
-                        y = bs - comp
-                        t = s + y
-                        comp = (t - s) - y
-                        s = t
-                    else:
-                        # Kahan compensation is NaN-poison around ±inf
-                        # — fall back to plain IEEE accumulation
-                        s = s + bs
-                        comp = 0.0
-                    # NaN-deterministic extrema (Spark's NaN-greatest
-                    # contract, layout-independent): track NaN
-                    # presence, min/max over the non-NaN values
-                    nanmask = np.isnan(f)
-                    if nanmask.any():
-                        has_nan = True
-                        fv = f[~nanmask]
-                    else:
-                        fv = f
-                    if len(fv):
-                        bmn = float(np.min(fv))
-                        bmx = float(np.max(fv))
-                        mn = bmn if mn is None else min(mn, bmn)
-                        mx = bmx if mx is None else max(mx, bmx)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([pid], type=pa.int64()),
-                 pa.array([s], type=pa.float64()),
-                 pa.array([mn], type=pa.float64()),
-                 pa.array([mx], type=pa.float64()),
-                 pa.array([bool(has_nan)], type=pa.bool_()),
-                 pa.array([int(cf.cm.n_values.sum())], type=pa.int64()),
-                 pa.array([cnt_col], type=pa.int64())],
-                names=["pid", "s", "mn", "mx", "hn", "ca", "cc"],
-            )
-
-        rows = _map_parts(
-            spark, [p for p, _ in parts], ipart,
-            "pid long, s double, mn double, mx double, hn boolean, ca long, cc long",
-        ).collect()
-        rows = sorted(rows, key=lambda r: r["pid"])  # pinned fold order
-        s = comp = 0.0
-        ca = cc = 0
-        mn = mx = None
-        any_nan = False
-        for r in rows:
-            if np.isfinite(r["s"]) and np.isfinite(s):
-                y = r["s"] - comp
-                t = s + y
-                comp = (t - s) - y
-                s = t
-            else:
-                s = s + r["s"]
-                comp = 0.0
-            ca += r["ca"]
-            cc += r["cc"]
-            any_nan = any_nan or bool(r["hn"])
-            if r["mn"] is not None:
-                mn = r["mn"] if mn is None else min(mn, r["mn"])
-                mx = r["mx"] if mx is None else max(mx, r["mx"])
-        # Spark's NaN-greatest extrema contract, layout-independent:
-        # any NaN present => max is NaN; min is NaN only when every
-        # value is NaN
-        if any_nan:
-            mx = float("nan")
-            if mn is None:
-                mn = float("nan")
-        avg = (s / float(cc)) if cc else None
-        return spark.createDataFrame(
-            [(s if cc else None, mn, mx, ca, cc, avg)],
-            "sum_v double, min_v double, max_v double, "
-            "cnt_all long, cnt_col long, avg_v double",
-        )
-
-    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
+    def ipart(pid: int) -> Iterator[pa.RecordBatch]:
         cf = _ColFile(out_dir, pid, column, vt)
-        total = 0
+        s = 0.0
+        comp = 0.0  # Kahan compensation across blocks
+        mn = mx = None  # extrema over NON-NaN values
+        has_nan = False
         cnt_col = 0
         for _b, meta, blob in cf.blocks():
             iblock = decode_int_block(blob, meta)
             v = iblock.values
             if iblock.validity is not None:
                 v = v[iblock.validity]
-            v = quantized_agg_lane(v, None, vt, agg_scale)
-            total += int(v.sum()) if len(v) else 0
-            cnt_col += len(v)
+            f = v.view(np.float64)
+            cnt_col += len(f)
+            if len(f):
+                bs = float(f.sum())
+                if np.isfinite(bs) and np.isfinite(s):
+                    y = bs - comp
+                    t = s + y
+                    comp = (t - s) - y
+                    s = t
+                else:
+                    # Kahan compensation is NaN-poison around ±inf
+                    # — fall back to plain IEEE accumulation
+                    s = s + bs
+                    comp = 0.0
+                # NaN-deterministic extrema (Spark's NaN-greatest
+                # contract, layout-independent): track NaN
+                # presence, min/max over the non-NaN values
+                nanmask = np.isnan(f)
+                if nanmask.any():
+                    has_nan = True
+                    fv = f[~nanmask]
+                else:
+                    fv = f
+                if len(fv):
+                    bmn = float(np.min(fv))
+                    bmx = float(np.max(fv))
+                    mn = bmn if mn is None else min(mn, bmn)
+                    mx = bmx if mx is None else max(mx, bmx)
         yield pa.RecordBatch.from_arrays(
-            [pa.array([total], type=pa.int64()),
+            [pa.array([pid], type=pa.int64()),
+             pa.array([s], type=pa.float64()),
+             pa.array([mn], type=pa.float64()),
+             pa.array([mx], type=pa.float64()),
+             pa.array([bool(has_nan)], type=pa.bool_()),
              pa.array([int(cf.cm.n_values.sum())], type=pa.int64()),
              pa.array([cnt_col], type=pa.int64())],
-            names=["s", "ca", "cc"],
+            names=["pid", "s", "mn", "mx", "hn", "ca", "cc"],
         )
 
     rows = _map_parts(
-        spark, [p for p, _ in parts], part_batches, "s long, ca long, cc long"
+        spark, [p for p, _ in parts], ipart,
+        "pid long, s double, mn double, mx double, hn boolean, ca long, cc long",
     ).collect()
-    s = sum(r["s"] for r in rows)
-    ca = sum(r["ca"] for r in rows)
-    cc = sum(r["cc"] for r in rows)
-    if is_dbl:
-        # two single IEEE divisions of exact integers, replayed
-        # identically by the oracle: sum = q_total/scale, avg = sum/cc
-        sum_d = float(s) / float(agg_scale)
-        avg = (sum_d / float(cc)) if cc else None
-        return spark.createDataFrame(
-            [(sum_d if cc else None, ca, cc, avg)],
-            "sum_v double, cnt_all long, cnt_col long, avg_v double",
-        )
-    avg = (float(s) / float(cc)) if cc else None
+    rows = sorted(rows, key=lambda r: r["pid"])  # pinned fold order
+    s = comp = 0.0
+    ca = cc = 0
+    mn = mx = None
+    any_nan = False
+    for r in rows:
+        if np.isfinite(r["s"]) and np.isfinite(s):
+            y = r["s"] - comp
+            t = s + y
+            comp = (t - s) - y
+            s = t
+        else:
+            s = s + r["s"]
+            comp = 0.0
+        ca += r["ca"]
+        cc += r["cc"]
+        any_nan = any_nan or bool(r["hn"])
+        if r["mn"] is not None:
+            mn = r["mn"] if mn is None else min(mn, r["mn"])
+            mx = r["mx"] if mx is None else max(mx, r["mx"])
+    # Spark's NaN-greatest extrema contract, layout-independent:
+    # any NaN present => max is NaN; min is NaN only when every
+    # value is NaN
+    if any_nan:
+        mx = float("nan")
+        if mn is None:
+            mn = float("nan")
+    avg = (s / float(cc)) if cc else None
     return spark.createDataFrame(
-        [(s, ca, cc, avg)], "sum_v long, cnt_all long, cnt_col long, avg_v double"
+        [(s if cc else None, mn, mx, ca, cc, avg)],
+        "sum_v double, min_v double, max_v double, "
+        "cnt_all long, cnt_col long, avg_v double",
     )
 
 

@@ -582,56 +582,20 @@ def filter_agg(
 ) -> DataFrame:
     """Fused filter + aggregate: ``SELECT count(*), count(agg),
     sum(agg), min(agg), max(agg), avg(agg) FROM t WHERE <conjunction>``
-    in ONE pass — the predicate kernel produces match positions, the
-    agg column decodes ONLY those positions, and each task emits a
-    five-integer partial. Matched rows never materialize and no
-    projection bytes are read: the cost is predicate columns + the agg
-    column's matched blocks. Same predicate forms as ``filter_and``.
-    Integer columns aggregate natively (avg is one IEEE division of
-    exact ints); double/float columns use the fixed-point contract at
-    ``agg_scale`` (partread.quantized_agg_lane) with single IEEE
-    divisions at output — cross-engine bit-identical either way."""
-    avt = dict(load_manifest(out_dir)[0]).get(agg_col)
-    partial = filter_parts(
-        spark, out_dir, _preds_to_spec(preds), agg_col=agg_col,
-        agg_scale=agg_scale,
-    )
-    rows = partial.collect()
-    s = sum(r["s"] for r in rows)
-    cv = sum(r["cv"] for r in rows)
-    cr = sum(r["cr"] for r in rows)
-    mns = [r["mn"] for r in rows if r["mn"] is not None]
-    mxs = [r["mx"] for r in rows if r["mx"] is not None]
-    mn = min(mns) if mns else None
-    mx = max(mxs) if mxs else None
-    if avt in ("double", "float"):
-        sc = float(agg_scale)
-        out = (
-            cr,
-            cv,
-            (float(s) / sc) if cv else None,
-            (float(mn) / sc) if mn is not None else None,
-            (float(mx) / sc) if mx is not None else None,
-            ((float(s) / sc) / float(cv)) if cv else None,
-        )
-        return spark.createDataFrame(
-            [out],
-            "cnt_rows long, cnt_valid long, sum_v double, min_v double, "
-            "max_v double, avg_v double",
-        )
-    out = (
-        cr,
-        cv,
-        s if cv else None,  # SQL SUM over zero valid values is NULL
-        mn,
-        mx,
-        (float(s) / float(cv)) if cv else None,
-    )
-    return spark.createDataFrame(
-        [out],
-        "cnt_rows long, cnt_valid long, sum_v long, min_v long, "
-        "max_v long, avg_v double",
-    )
+    in ONE pass — the zero-key spec list of the multi-agg kernel
+    (``_column_totals``): the predicate kernel produces match
+    positions, the agg column decodes ONLY those positions, and each
+    task emits per-block integer partials that one global aggregate
+    folds. Matched rows never materialize and no projection bytes are
+    read. Same predicate forms as ``filter_and``. Integer columns
+    aggregate natively (avg is one IEEE division of exact ints);
+    double/float columns use the fixed-point contract at ``agg_scale``
+    (partread.quantized_agg_lane) with single IEEE divisions at output
+    — cross-engine bit-identical either way. A sum that would pass
+    2^62 raises."""
+    return _column_totals(
+        spark, out_dir, preds, agg_col, agg_scale, ("sum", "min", "max", "avg")
+    ).select("cnt_rows", "cnt_valid", "sum_v", "min_v", "max_v", "avg_v")
 
 
 def filter_sample(
@@ -1026,18 +990,25 @@ def column_agg(
     spark: SparkSession, out_dir: str, column: str, agg_scale: int = 100,
     mode: str = "fixed",
 ) -> DataFrame:
-    """``SELECT sum(col), count(*), count(col), avg(col)`` — exact
-    integer partials per partition, one-row fold; double/float columns
-    aggregate through the fixed-point contract at ``agg_scale``.
-    ``mode="ieee"`` instead computes TRUE IEEE float64 sums with a
-    pinned deterministic order (per-block pairwise, Kahan across
+    """``SELECT sum(col), count(*), count(col), avg(col)`` — the
+    zero-key multi-agg kernel with no predicate (``_column_totals``):
+    exact integer partials, one global aggregate; double/float columns
+    aggregate through the fixed-point contract at ``agg_scale``, a sum
+    that would pass 2^62 raises, and SUM over zero valid values is
+    NULL. ``mode="ieee"`` instead computes TRUE IEEE float64 sums with
+    a pinned deterministic order (per-block pairwise, Kahan across
     blocks and parts) for arbitrary doubles — tolerance-comparable
-    cross-engine rather than hash-exact. See
-    partread.column_agg_parts / partread.quantized_agg_lane."""
+    cross-engine rather than hash-exact. See partread.column_agg_parts
+    / partread.quantized_agg_lane."""
     from arcade_spark.partread import column_agg_parts
 
-    return column_agg_parts(spark, out_dir, column, agg_scale=agg_scale,
-                            mode=mode)
+    if mode not in ("fixed", "ieee"):
+        raise ValueError(f"mode must be 'fixed' or 'ieee': {mode!r}")
+    if mode == "ieee":
+        return column_agg_parts(spark, out_dir, column)
+    return _column_totals(
+        spark, out_dir, [], column, agg_scale, ("sum", "avg")
+    ).selectExpr("sum_v", "cnt_rows AS cnt_all", "cnt_valid AS cnt_col", "avg_v")
 
 
 def group_count(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
@@ -1153,43 +1124,188 @@ def filter_group_by(
     )
 
 
-def _multi_agg_exprs(cspecs: list[dict], total_row: bool = False) -> list:
-    """Merge expressions folding filter_group_by_multi_partials output
-    (s{i}/c{i} per aggregate, c row count) to final typed aggregates —
-    shared by the fused group-by, grouping-sets, and chain operators.
-    ``total_row=True`` hardens COUNTs for the no-keys grand-total row
-    (Spark's global agg over an empty relation sums to null; SQL's
-    grand total is COUNT 0)."""
-    agg_exprs = []
+# the aggregate algebra ---------------------------------------------------
+#
+# One kernel (partread.filter_group_by_multi_partials) emits per-block
+# partials: per spec an ``s{i}`` lane (exact int64 sum, or extremum) and
+# a ``c{i}`` lane (valid rows), plus the multiplicity ``c`` (matched
+# rows). ``_side_merge`` folds partials to one row per distinct key
+# tuple, ``_hop`` equi-joins two merged sides (the groupjoin), and
+# ``_multi_agg_exprs`` is the one finalizer from lanes to typed output.
+
+_TYPED_EXTREMA = ("ts", "tsntz", "date", "bool", "str", "binary")
+_DEC = "decimal(38,0)"
+
+
+def _checked_long(x: str, what: str) -> str:
+    """SQL: the decimal(38,0) groupjoin sum ``x`` back to BIGINT
+    through a cast that RAISES past the 2^62 bar — plain int64 products
+    would wrap silently with spark.sql.ansi.enabled=false. An output
+    expression over the tiny merged frame: no extra job."""
+    msg = (f"groupjoin {what} exceeds 2^62 — the join aggregates' int64 "
+           "contract is violated; reduce multiplicities or pre-aggregate")
+    msg = msg.replace("\\", "\\\\").replace("'", "\\'")
+    return (f"CASE WHEN abs({x}) >= CAST({2 ** 62} AS {_DEC}) "
+            f"THEN raise_error('{msg}') ELSE CAST({x} AS BIGINT) END")
+
+
+def _multi_agg_exprs(
+    cspecs: list[dict], total_row: bool = False, checked: bool = False
+) -> list:
+    """The one finalizer: aggregate expressions folding merged lanes
+    (``s{i}``/``c{i}`` per spec, ``c`` for COUNT(*)) to each spec's
+    typed output — count; min/max with the logical type restored
+    (ts/date/bool extrema ride the int64 lane, str/binary the binary
+    value lane, whose unsigned lexicographic order the kernel ranked
+    by); sum/sumprod/avg as one IEEE division of an exact integer by
+    the spec's scale divisor, NULL over zero valid rows. ``total_row``
+    zero-fills COUNTs of the no-keys grand-total row (Spark's global
+    agg over an empty relation sums to null; SQL's COUNT is 0).
+    ``checked``: the lanes carry decimal(38,0) groupjoin products, and
+    every sum and count returns to long through ``_checked_long``.
+    Each spec is one SQL expression (one driver→JVM call, where a
+    chain of Column calls costs one per node)."""
+    out = []
     for i, sp in enumerate(cspecs):
         name, kind, div = sp["name"], sp["kind"], sp["div"]
+        c = "sum(c)" if kind == "count" else f"sum(c{i})"
+        if checked:
+            c = _checked_long(c, f"count {name!r}")
         if kind == "count":
-            cexpr = F.sum("c")
-            if total_row:
-                cexpr = F.coalesce(cexpr, F.lit(0))
-            agg_exprs.append(cexpr.alias(name))
+            out.append(F.expr(f"coalesce({c}, 0)" if total_row else c).alias(name))
             continue
-        if kind == "min":
-            s = F.min(f"s{i}")  # partials null-masked when empty
-        elif kind == "max":
-            s = F.max(f"s{i}")
+        if kind in ("min", "max"):  # partials are null-masked when empty
+            x = f"{kind}(s{i})"
+            if sp["vt"] in _TYPED_EXTREMA:
+                out.append(_group_key_out(F.expr(x), sp["vt"]).alias(name))
+                continue
         else:
-            s = F.when(F.sum(f"c{i}") > 0, F.sum(f"s{i}"))
-        if kind in ("min", "max") and sp.get("vt") in (
-            "ts", "tsntz", "date", "bool", "str", "binary"
-        ):
-            # ts/date/bool extrema ride the int64 lane, str/binary the
-            # binary value lane (Spark's binary min/max is unsigned
-            # lexicographic — same order the kernel ranked by); restore
-            # the logical type at output
-            expr = _group_key_out(s, sp["vt"])
-        elif kind == "avg":
-            num = (s.cast("double") / F.lit(float(div))) if div != 1 else s.cast("double")
-            expr = num / F.sum(f"c{i}").cast("double")
-        else:  # sum / sumprod / min / max
-            expr = (s.cast("double") / F.lit(float(div))) if div != 1 else s
-        agg_exprs.append(expr.alias(name))
-    return agg_exprs
+            x = _checked_long(f"sum(s{i})", f"sum {name!r}") if checked \
+                else f"sum(s{i})"
+            x = f"CASE WHEN ({c}) > 0 THEN {x} END"
+        if div != 1:
+            x = f"CAST({x} AS DOUBLE) / {div}D"
+        if kind == "avg":
+            x = f"CAST({x} AS DOUBLE) / CAST({c} AS DOUBLE)"
+        out.append(F.expr(x).alias(name))
+    return out
+
+
+def _fold_out(
+    df: DataFrame, keys: list[str], vts: list[str], names: list[str],
+    cspecs: list[dict], checked: bool = False,
+) -> DataFrame:
+    """``df``'s lanes grouped by ``keys`` (none: the SQL global
+    aggregate) and finalized: the keys as ``names`` in their logical
+    types (``vts``), then one column per spec."""
+    merged = df.groupBy(*keys).agg(
+        *_multi_agg_exprs(cspecs, total_row=not keys, checked=checked)
+    )
+    return merged.select(
+        *[_group_key_out(F.col(k), vt).alias(n)
+          for k, vt, n in zip(keys, vts, names)],
+        *[sp["name"] for sp in cspecs],
+    )
+
+
+def _side_merge(
+    partial: DataFrame, keys: list[str], cspecs: list[dict],
+    mult: str = "sum(c)",
+) -> DataFrame:
+    """Partials (or a hop's rows) → one row per distinct ``keys``
+    tuple: per non-count spec its ``s{i}`` (summed, or min/max) and
+    ``c{i}`` lanes, and the multiplicity ``c`` (the SQL aggregate
+    ``mult``). Merging before a join keeps it distinct×distinct even
+    under hot keys."""
+    lanes = []
+    for i, sp in enumerate(cspecs):
+        if sp["kind"] != "count":
+            fold = sp["kind"] if sp["kind"] in ("min", "max") else "sum"
+            lanes += [f"{fold}(s{i}) AS s{i}", f"sum(c{i}) AS c{i}"]
+    return partial.groupBy(*keys).agg(
+        *[F.expr(x) for x in lanes + [f"{mult} AS c"]]
+    )
+
+
+def _hop(
+    left: DataFrame, right: DataFrame, keep: list[str],
+    specs: list[tuple[str, int, dict]], on: str = "k0",
+) -> DataFrame:
+    """One groupjoin hop: merged sides equi-joined on ``left.on ==
+    right.k0``. The rows carry ``keep`` (``l_``/``r_``-prefixed side
+    columns) as ``g0..``, then per ``specs`` entry j — (side ``"l"`` or
+    ``"r"``, that side's spec index, spec) — lanes ``s{j}``/``c{j}``:
+    the sum and count times the OTHER side's multiplicity (every row
+    there repeats this side's rows once, and exact integer sums
+    distribute over it), min/max passed through (a pair exists iff both
+    sides matched); the multiplicities multiply into ``c``. Products
+    are decimal(38,0), exact for any realistic chain; the finalizer's
+    checked cast raises past 2^62."""
+    lt = left.toDF(*[f"l_{c}" for c in left.columns])
+    rt = right.toDF(*[f"r_{c}" for c in right.columns])
+    j = lt.join(rt, lt[f"l_{on}"] == rt["r_k0"])
+
+    def times_other(side: str, lane: str) -> str:
+        other = "r" if side == "l" else "l"
+        return f"CAST({side}_{lane} AS {_DEC}) * CAST({other}_c AS {_DEC})"
+
+    lanes = []
+    for n, (side, i, sp) in enumerate(specs):
+        if sp["kind"] == "count":
+            continue
+        s = (f"{side}_s{i}" if sp["kind"] in ("min", "max")
+             else times_other(side, f"s{i}"))
+        lanes += [f"{s} AS s{n}", f"{times_other(side, f'c{i}')} AS c{n}"]
+    return j.selectExpr(
+        *[f"{k} AS g{n}" for n, k in enumerate(keep)], *lanes,
+        f"{times_other('l', 'c')} AS c",
+    )
+
+
+def _check_aggs(keys: list[str], aggs: list[tuple]) -> None:
+    """A join aggregate's spec list is non-empty and its output names
+    (group keys, then spec names) are distinct."""
+    if not aggs:
+        raise ValueError("aggs must be non-empty")
+    names = keys + [a[0] for a in aggs]
+    if len(set(names)) != len(names):
+        raise ValueError(f"output name clash: {names}")
+
+
+def _check_join_lanes(pairs: list[tuple[tuple[str, str], tuple[str, str]]]) -> None:
+    """Each ``((col, vtype), (col, vtype))`` pair is joinable: a float
+    key raises (float equality is not a sane join contract), and a
+    string key against an integer key is a lane mismatch."""
+    for (ca, va), (cb, vb) in pairs:
+        for col, vt in ((ca, va), (cb, vb)):
+            if vt in ("double", "float"):
+                raise NotImplementedError(
+                    f"join on float keys is not supported: {col}"
+                )
+        if (va in ("str", "binary")) != (vb in ("str", "binary")):
+            raise ValueError(f"join key lanes differ: {ca} is {va}, {cb} is {vb}")
+
+
+def _column_totals(
+    spark: SparkSession, out_dir: str, preds: list[tuple], col: str,
+    agg_scale: int, kinds: tuple[str, ...],
+) -> DataFrame:
+    """``count(*) cnt_rows``, ``count(col) cnt_valid`` and one
+    ``{kind}_v`` per aggregate kind over ``col`` (``kinds`` starts with
+    ``"sum"``) [WHERE <conjunction>] in one row: the zero-key kernel
+    and the finalizer (filter_agg, column_agg). count(col) is the sum
+    spec's valid-row lane ``c0``."""
+    from arcade_spark.partread import filter_group_by_multi_partials
+
+    partial, _vts, cspecs = filter_group_by_multi_partials(
+        spark, out_dir, _preds_to_spec(preds), [],
+        [(f"{k}_v", k, col) for k in kinds] + [("cnt_rows", "count", None)],
+        agg_scale,
+    )
+    return partial.agg(
+        *_multi_agg_exprs(cspecs, total_row=True),
+        F.expr("coalesce(sum(c0), 0)").alias("cnt_valid"),
+    )
 
 
 def filter_group_by_multi(
@@ -1215,12 +1331,14 @@ def filter_group_by_multi(
     quantized domain (at scale 100, TPC-H's (1−l_discount) is
     (col, −1, 100); (1+l_tax) is (col, 1, 100)). Every aggregate runs
     as exact int64 sums (partread.compile_agg_specs) with single IEEE
-    divisions at output — cross-engine bit-identical. Each matched
-    block decodes every referenced agg column exactly once; the merge
-    shuffle stays O(distinct tuples) regardless of aggregate count.
-    ``preds`` is a conjunction (may be empty = full table); pass
-    ``dnf=[[conj1...], [conj2...]]`` instead for OR-of-ANDs — the
-    shared DNF predicate kernel handles both."""
+    divisions at output — cross-engine bit-identical; a sum that would
+    pass 2^62 raises. Each matched block decodes every referenced agg
+    column exactly once; the merge shuffle stays O(distinct tuples)
+    regardless of aggregate count. ``preds`` is a conjunction (may be
+    empty = full table); pass ``dnf=[[conj1...], [conj2...]]`` instead
+    for OR-of-ANDs — the shared DNF predicate kernel handles both.
+    Empty ``group_cols`` is the SQL global aggregate: one row, even
+    over no matches (COUNT 0, every other aggregate NULL)."""
     from arcade_spark.partread import filter_group_by_multi_partials
 
     partial, vts, cspecs = filter_group_by_multi_partials(
@@ -1228,12 +1346,7 @@ def filter_group_by_multi(
         dnf_spec=[_preds_to_spec(c) for c in dnf] if dnf is not None else None,
     )
     keys = [f"k{i}" for i in range(len(group_cols))]
-    merged = partial.groupBy(*keys).agg(*_multi_agg_exprs(cspecs))
-    out_keys = [
-        _group_key_out(F.col(k), vt).alias(nm)
-        for k, vt, nm in zip(keys, vts, group_cols)
-    ]
-    return merged.select(*out_keys, *[sp["name"] for sp in cspecs])
+    return _fold_out(partial, keys, vts, group_cols, cspecs)
 
 
 def group_by_multi(
@@ -1335,10 +1448,8 @@ def filter_group_by_sets(
     for idx in idx_sets:
         live = set(idx)
         keys = [f"k{i}" for i in idx]
-        exprs = _multi_agg_exprs(cspecs, total_row=not keys)
-        agged = (
-            partial.groupBy(*keys).agg(*exprs) if keys
-            else partial.agg(*exprs)
+        agged = partial.groupBy(*keys).agg(
+            *_multi_agg_exprs(cspecs, total_row=not keys)
         )
         gid = sum(1 << (n - 1 - i) for i in range(n) if i not in live)
         out_keys = [
@@ -4363,7 +4474,8 @@ def window_shift(
     window width, so carry volume is O(slices · offset). Output is
     identical to the unsplit path. The split is skipped when the
     manifest row total cannot exceed the threshold, when the first
-    order lane is binary (no range arithmetic), or when ``offset``
+    order lane is binary or float (no range arithmetic: a float
+    column's order-key lane spans ~2^64), or when ``offset``
     isn't far below the threshold (carry volume would approach the
     data); ``hot_key_threshold=None`` disables.
 
@@ -4532,9 +4644,10 @@ def window_shift(
         _restore(F.col("v"), kvts[g + m]).alias(val_col),
         _restore(F.col("s"), kvts[g + m]).alias("shifted"),
     ]
-    # range slices need arithmetic on the first order lane (not
-    # binary), and the carry must stay far below the data
-    splittable = not o_bin[0] and (
+    # range slices need arithmetic on the first order lane: not binary,
+    # and not float (its order-key lane spans ~2^64); the carry must
+    # stay far below the data
+    splittable = not (o_bin[0] or o_float[0]) and (
         hot_key_threshold is not None and off * 8 <= hot_key_threshold
     )
     return _keyed_pass(
@@ -4580,14 +4693,14 @@ def join_group_by(
        machinery, one pass, no payload materialization);
     2. side B runs the same kernel grouped by (join key, group_b...)
        and emits row COUNTS per tuple;
-    3. each side merges to one row per distinct tuple, the two
-       O(distinct) streams equi-join on the key lane (AQE broadcasts
-       the dim side when it is small), and the final group-by folds
-       ``Σ_k S_A(k, ga)·nb(k, gb)`` — valid because every B row with
-       key k duplicates A's matched rows exactly once, and the exact
-       integer sums distribute over that multiplication. min/max
-       ignore the multiplicity (a pair exists iff nb ≥ 1); avg divides
-       by ``Σ valid_A(k)·nb(k)``.
+    3. each side merges to one row per distinct tuple (``_side_merge``),
+       the two O(distinct) streams equi-join on the key lane in one
+       groupjoin hop (``_hop``; AQE broadcasts the dim side when it is
+       small), and the finalizer folds ``Σ_k S_A(k, ga)·nb(k, gb)`` —
+       valid because every B row with key k duplicates A's matched
+       rows exactly once, and the exact integer sums distribute over
+       that multiplication. min/max ignore the multiplicity (a pair
+       exists iff nb ≥ 1); avg divides by ``Σ valid_A(k)·nb(k)``.
 
     Shuffle accounting at 100 TB: two O(distinct-tuples) partial
     merges + one key equi-join of those partials + one O(groups)
@@ -4606,9 +4719,11 @@ def join_group_by(
     output groups (named ``key_a``). SQL inner-join semantics: null
     keys never match (the group kernels drop null-key rows); rows with
     null group columns are dropped per the engine's group-by contract.
-    Exactness: |S_A(k,ga)| and |S_A·nb| must stay under 2^63 — the
-    per-value 2^62 bar plus realistic key multiplicities; the final
-    division per spec is one IEEE op (cross-engine bit-identical).
+    Exactness: the hop products run in decimal(38,0) and every output
+    sum and count returns to int64 through a checked cast that RAISES
+    past 2^62 (also with spark.sql.ansi.enabled=false, where an int64
+    product would wrap); the final division per spec is one IEEE op
+    (cross-engine bit-identical).
     ``b_exists=True`` turns side B into an EXISTS semijoin (the TPC-H
     Q4 shape): B's multiplicity is clamped to 1, so each matched A row
     aggregates exactly once regardless of how many B rows share its
@@ -4622,154 +4737,50 @@ def join_group_by(
     group_b = group_b or []
     if b_exists and group_b:
         raise ValueError("b_exists mode cannot take group_b columns")
-    if not aggs:
-        raise ValueError("aggs must be non-empty")
-    out_names = ((([key_a] if include_key else []) + group_a + group_b)
-                 + [a[0] for a in aggs])
-    if len(set(out_names)) != len(out_names):
-        raise ValueError(f"output name clash: {out_names}")
-
-    # split the spec list by SIDE (round-6): a 4th tuple element tags
-    # the side its column(s) live on — ("sum_total","sum","o_totalprice",
-    # "b"). Each side's kernel computes its own exact partials; the
-    # symmetric fold multiplies by the OTHER side's multiplicity:
-    # Σ S_A·nb  and  Σ S_B·na. count is side-neutral (Σ na·nb).
-    slots: list[tuple[str, int]] = []
-    aggs_a: list[tuple] = []
-    aggs_b: list[tuple] = []
-    for sp0 in aggs:
-        if len(sp0) == 4:
-            name, kind, arg, side = sp0
-        else:
-            (name, kind, arg), side = sp0, "a"
+    gnames = ([key_a] if include_key else []) + group_a + group_b
+    _check_aggs(gnames, aggs)
+    # a 4th spec element tags the side its column(s) live on
+    # (round-6); count is side-neutral (Σ na·nb)
+    sides = []
+    for sp in aggs:
+        side = sp[3] if len(sp) == 4 else "a"
         if side not in ("a", "b"):
             raise ValueError(f"agg side must be 'a' or 'b': {side!r}")
-        if kind == "count":
-            side = "a"  # joined-row count — same fold either way
-        dst = aggs_a if side == "a" else aggs_b
-        slots.append((side, len(dst)))
-        dst.append((name, kind, arg))
-    if b_exists and aggs_b:
+        sides.append("a" if sp[1] == "count" else side)
+    if b_exists and "b" in sides:
         raise ValueError(
             "b_exists (EXISTS semijoin) cannot aggregate side-B columns"
         )
 
-    partial_a, vts_a, cspecs_a = filter_group_by_multi_partials(
-        spark, out_a, _preds_to_spec(preds_a or []), [key_a] + group_a,
-        aggs_a, agg_scale,
-        dnf_spec=[_preds_to_spec(c) for c in dnf_a] if dnf_a else None,
-    )
-    partial_b, vts_b, cspecs_b = filter_group_by_multi_partials(
-        spark, out_b, _preds_to_spec(preds_b or []), [key_b] + group_b,
-        aggs_b, agg_scale,
-        dnf_spec=[_preds_to_spec(c) for c in dnf_b] if dnf_b else None,
-    )
-    str_a = vts_a[0] in ("str", "binary")
-    str_b = vts_b[0] in ("str", "binary")
-    if vts_a[0] in ("double", "float") or vts_b[0] in ("double", "float"):
-        raise NotImplementedError(
-            "join on float keys is not supported "
-            "(float equality is not a sane join contract)"
+    def side_partials(out, key, groups, preds, dnf, side):
+        return filter_group_by_multi_partials(
+            spark, out, _preds_to_spec(preds or []), [key] + groups,
+            [sp[:3] for sp, s in zip(aggs, sides) if s == side], agg_scale,
+            dnf_spec=[_preds_to_spec(c) for c in dnf] if dnf else None,
         )
-    if str_a != str_b:
-        raise ValueError(
-            f"join key lanes differ: {key_a} is {vts_a[0]}, "
-            f"{key_b} is {vts_b[0]}"
-        )
-    live_a = [i for i, sp in enumerate(cspecs_a) if sp["kind"] != "count"]
-    live_b = [i for i, sp in enumerate(cspecs_b) if sp["kind"] != "count"]
 
-    # per-side merge to one row per distinct (key, groups) tuple — keeps
-    # the key join distinct×distinct (scale-safe for hot keys) instead
-    # of partials×partials. Spec lanes get side-prefixed names so the
-    # two merged streams can join without collisions.
-    def _side_merge(partial, n_groups, live, cspecs, pre, total_alias,
-                    total_expr):
-        keys = [f"k{i}" for i in range(1 + n_groups)]
-        side_aggs = []
-        for i in live:
-            kind = cspecs[i]["kind"]
-            if kind == "min":
-                s = F.min(f"s{i}")
-            elif kind == "max":
-                s = F.max(f"s{i}")
-            else:
-                s = F.when(F.sum(f"c{i}") > 0, F.sum(f"s{i}"))
-            side_aggs.append(s.alias(f"{pre}s{i}"))
-            side_aggs.append(F.sum(f"c{i}").alias(f"{pre}c{i}"))
-        side_aggs.append(total_expr.alias(total_alias))
-        return partial.groupBy(*keys).agg(*side_aggs)
-
-    A = _side_merge(partial_a, len(group_a), live_a, cspecs_a, "a",
-                    "ca", F.sum("c"))
-    A = A.select(
-        F.col("k0").alias("jk"),
-        *[F.col(f"k{i + 1}").alias(f"ga{i}") for i in range(len(group_a))],
-        *[c for i in live_a for c in (f"as{i}", f"ac{i}")],
-        "ca",
+    partial_a, vts_a, cspecs_a = side_partials(
+        out_a, key_a, group_a, preds_a, dnf_a, "a")
+    partial_b, vts_b, cspecs_b = side_partials(
+        out_b, key_b, group_b, preds_b, dnf_b, "b")
+    _check_join_lanes([((key_a, vts_a[0]), (key_b, vts_b[0]))])
+    a = _side_merge(partial_a, [f"k{i}" for i in range(len(vts_a))], cspecs_a)
+    # EXISTS: clamp B's multiplicity to 1 (a merged tuple has c >= 1,
+    # so least(sum(c), 1) is exactly the indicator)
+    b = _side_merge(
+        partial_b, [f"k{i}" for i in range(len(vts_b))], cspecs_b,
+        "least(sum(c), 1)" if b_exists else "sum(c)",
     )
-    # EXISTS: clamp B's multiplicity to 1 (groups only exist with
-    # c >= 1, so least(sum(c), 1) is exactly the indicator)
-    nb_expr = (F.least(F.sum("c"), F.lit(1).cast("long")) if b_exists
-               else F.sum("c"))
-    B = _side_merge(partial_b, len(group_b), live_b, cspecs_b, "b",
-                    "nb", nb_expr)
-    B = B.select(
-        F.col("k0").alias("jk_b"),
-        *[F.col(f"k{i + 1}").alias(f"gb{i}") for i in range(len(group_b))],
-        *[c for i in live_b for c in (f"bs{i}", f"bc{i}")],
-        "nb",
+    idx = {"a": iter(enumerate(cspecs_a)), "b": iter(enumerate(cspecs_b))}
+    specs = [("l" if s == "a" else "r", *next(idx[s])) for s in sides]
+    keep = ((["l_k0"] if include_key else [])
+            + [f"l_k{i + 1}" for i in range(len(group_a))]
+            + [f"r_k{i + 1}" for i in range(len(group_b))])
+    return _fold_out(
+        _hop(a, b, keep, specs), [f"g{i}" for i in range(len(keep))],
+        (vts_a[:1] if include_key else []) + vts_a[1:] + vts_b[1:], gnames,
+        [sp for *_, sp in specs], checked=True,
     )
-    j = A.join(B, A["jk"] == B["jk_b"])
-
-    gkeys = ((["jk"] if include_key else [])
-             + [f"ga{i}" for i in range(len(group_a))]
-             + [f"gb{i}" for i in range(len(group_b))])
-    final_aggs = []
-    for side, i in slots:
-        sp = (cspecs_a if side == "a" else cspecs_b)[i]
-        name, kind, div = sp["name"], sp["kind"], sp["div"]
-        if kind == "count":
-            final_aggs.append(F.sum(F.col("ca") * F.col("nb")).alias(name))
-            continue
-        pre, mult = ("a", "nb") if side == "a" else ("b", "ca")
-        scol, ccol = f"{pre}s{i}", f"{pre}c{i}"
-        if kind in ("min", "max"):
-            s = F.min(scol) if kind == "min" else F.max(scol)
-        else:
-            s = F.when(
-                F.sum(F.col(ccol) * F.col(mult)) > 0,
-                F.sum(F.col(scol) * F.col(mult)),
-            )
-        if kind in ("min", "max") and sp.get("vt") in (
-            "ts", "tsntz", "date", "bool", "str", "binary"
-        ):
-            final_aggs.append(_group_key_out(s, sp["vt"]).alias(name))
-            continue
-        if kind == "avg":
-            num = (s.cast("double") / F.lit(float(div))) if div != 1 \
-                else s.cast("double")
-            expr = num / F.sum(F.col(ccol) * F.col(mult)).cast("double")
-        else:
-            expr = (s.cast("double") / F.lit(float(div))) if div != 1 else s
-        final_aggs.append(expr.alias(name))
-    merged = j.groupBy(*gkeys).agg(*final_aggs) if gkeys \
-        else j.agg(*final_aggs)
-
-    out_cols = []
-    if include_key:
-        out_cols.append(_group_key_out(F.col("jk"), vts_a[0]).alias(key_a))
-    out_cols += [
-        _group_key_out(F.col(f"ga{i}"), vts_a[i + 1]).alias(g)
-        for i, g in enumerate(group_a)
-    ]
-    out_cols += [
-        _group_key_out(F.col(f"gb{i}"), vts_b[i + 1]).alias(g)
-        for i, g in enumerate(group_b)
-    ]
-    names = [(cspecs_a if s == "a" else cspecs_b)[i]["name"]
-             for s, i in slots]
-    return merged.select(*out_cols, *names)
 
 
 def join_group_by_chain(
@@ -4807,169 +4818,46 @@ def join_group_by_chain(
     ``aggs`` uses the filter_group_by_multi spec grammar, columns from
     side A only (cross-side products don't factor); ``group_c`` names
     C's group columns. SQL inner-join semantics: null keys at any hop
-    drop. Exactness: the chained products must stay under 2^63 — the
-    per-value 2^62 bar times realistic bridge/dim multiplicities. The
-    reference lists joins and aggregations as future work
-    (README.md:115-138)."""
+    drop. Both hops are ``join_group_by``'s groupjoin hop (``_hop``):
+    the chained products run in decimal(38,0) and every output sum and
+    count returns to int64 through a checked cast that RAISES past
+    2^62 (also with spark.sql.ansi.enabled=false). The reference lists
+    joins and aggregations as future work (README.md:115-138)."""
     from arcade_spark.partread import filter_group_by_multi_partials
 
     group_c = group_c or []
-    if not aggs:
-        raise ValueError("aggs must be non-empty")
-    out_names = group_c + [a[0] for a in aggs]
-    if len(set(out_names)) != len(out_names):
-        raise ValueError(f"output name clash: {out_names}")
-    for sp0 in aggs:
-        if len(sp0) == 4 and sp0[3] != "a":
+    _check_aggs(group_c, aggs)
+    for sp in aggs:
+        if len(sp) == 4 and sp[3] != "a":
             raise ValueError(
                 "chain aggregates must reference side A (the fact); "
-                f"got side {sp0[3]!r}"
+                f"got side {sp[3]!r}"
             )
-    aggs_a = [sp[:3] for sp in aggs]
 
-    partial_a, vts_a, cspecs_a = filter_group_by_multi_partials(
-        spark, out_a, _preds_to_spec(preds_a or []), [key_a],
-        aggs_a, agg_scale,
-    )
-    partial_b, vts_b, _cs_b = filter_group_by_multi_partials(
-        spark, out_b, _preds_to_spec(preds_b or []), [key_b_a, key_b_c],
-        [], agg_scale,
-    )
-    partial_c, vts_c, _cs_c = filter_group_by_multi_partials(
-        spark, out_c, _preds_to_spec(preds_c or []), [key_c] + group_c,
-        [], agg_scale,
-    )
-    for vt, col in ((vts_a[0], key_a), (vts_b[0], key_b_a),
-                    (vts_b[1], key_b_c), (vts_c[0], key_c)):
-        if vt in ("double", "float"):
-            raise NotImplementedError(
-                f"join on float keys is not supported: {col}"
-            )
-    if (vts_a[0] in ("str", "binary")) != (vts_b[0] in ("str", "binary")):
-        raise ValueError(f"join key lanes differ: {key_a} vs {key_b_a}")
-    if (vts_b[1] in ("str", "binary")) != (vts_c[0] in ("str", "binary")):
-        raise ValueError(f"join key lanes differ: {key_b_c} vs {key_c}")
-    live = [i for i, sp in enumerate(cspecs_a) if sp["kind"] != "count"]
-
-    # per-side merge to one row per distinct tuple BEFORE each join —
-    # the joins stay distinct×distinct even under hot keys
-    a_aggs = []
-    for i in live:
-        kind = cspecs_a[i]["kind"]
-        if kind == "min":
-            s = F.min(f"s{i}")
-        elif kind == "max":
-            s = F.max(f"s{i}")
-        else:
-            s = F.when(F.sum(f"c{i}") > 0, F.sum(f"s{i}"))
-        a_aggs.append(s.alias(f"as{i}"))
-        a_aggs.append(F.sum(f"c{i}").alias(f"ac{i}"))
-    a_aggs.append(F.sum("c").alias("ca"))
-    A = partial_a.groupBy("k0").agg(*a_aggs).withColumnRenamed("k0", "jka")
-    B = (
-        partial_b.groupBy("k0", "k1").agg(F.sum("c").alias("nb"))
-        .select(F.col("k0").alias("jkb_a"), F.col("k1").alias("jkb_c"), "nb")
-    )
-    C = (
-        partial_c.groupBy(
-            "k0", *[f"k{i + 1}" for i in range(len(group_c))]
+    def partials(out, keys, preds, specs):
+        return filter_group_by_multi_partials(
+            spark, out, _preds_to_spec(preds or []), keys, specs, agg_scale
         )
-        .agg(F.sum("c").alias("nc"))
-        .select(
-            F.col("k0").alias("jkc"),
-            *[F.col(f"k{i + 1}").alias(f"gc{i}")
-              for i in range(len(group_c))],
-            "nc",
-        )
+
+    partial_a, vts_a, cspecs = partials(
+        out_a, [key_a], preds_a, [sp[:3] for sp in aggs])
+    partial_b, vts_b, _ = partials(out_b, [key_b_a, key_b_c], preds_b, [])
+    partial_c, vts_c, _ = partials(out_c, [key_c] + group_c, preds_c, [])
+    _check_join_lanes([((key_a, vts_a[0]), (key_b_a, vts_b[0])),
+                       ((key_b_c, vts_b[1]), (key_c, vts_c[0]))])
+    specs = [("l", i, sp) for i, sp in enumerate(cspecs)]
+    # hop 1 re-keys A's partials to C's key through the bridge
+    ab = _side_merge(_hop(
+        _side_merge(partial_a, ["k0"], cspecs),
+        _side_merge(partial_b, ["k0", "k1"], []), ["r_k1"], specs,
+    ), ["g0"], cspecs)
+    # hop 2 multiplies by C's multiplicity, grouped by C's columns
+    c = _side_merge(partial_c, [f"k{i}" for i in range(len(vts_c))], [])
+    keep = [f"r_k{i + 1}" for i in range(len(group_c))]
+    return _fold_out(
+        _hop(ab, c, keep, specs, on="g0"), [f"g{i}" for i in range(len(keep))],
+        vts_c[1:], group_c, cspecs, checked=True,
     )
-
-    # hop products run in DECIMAL(38,0) (exact for any realistic chain)
-    # and convert back to int64 through a checked cast that RAISES past
-    # the 2^62 bar, mirroring the OverflowError guards in rolling_agg /
-    # sessionize — plain int64 products would wrap silently with
-    # spark.sql.ansi.enabled=false and return wrong aggregates
-    # (round-8, ADVICE r7). No extra job: the guard is an output
-    # expression over the already-tiny merged frames.
-    _DEC = "decimal(38,0)"
-
-    def _dec(c):
-        return c.cast(_DEC)
-
-    def _checked_long(c, what: str):
-        return F.when(
-            F.abs(c) >= F.lit(2 ** 62).cast(_DEC),
-            F.raise_error(F.lit(
-                f"join_group_by_chain: {what} exceeds 2^62 — the "
-                "chained-product int64 contract (see docstring) is "
-                "violated; reduce multiplicities or pre-aggregate"
-            )),
-        ).otherwise(c.cast("long"))
-
-    # hop 1: re-key A's partials to C's key through the bridge
-    j1 = A.join(B, A["jka"] == B["jkb_a"])
-    h_aggs = []
-    for i in live:
-        kind = cspecs_a[i]["kind"]
-        if kind == "min":
-            s = F.min(f"as{i}")
-        elif kind == "max":
-            s = F.max(f"as{i}")
-        else:
-            s = F.when(
-                F.sum(_dec(F.col(f"ac{i}")) * _dec(F.col("nb"))) > 0,
-                F.sum(_dec(F.col(f"as{i}")) * _dec(F.col("nb"))),
-            )
-        h_aggs.append(s.alias(f"hs{i}"))
-        h_aggs.append(
-            F.sum(_dec(F.col(f"ac{i}")) * _dec(F.col("nb"))).alias(f"hc{i}")
-        )
-    h_aggs.append(F.sum(_dec(F.col("ca")) * _dec(F.col("nb"))).alias("cab"))
-    AB = j1.groupBy("jkb_c").agg(*h_aggs)
-
-    # hop 2: multiply by C's multiplicity, group by C's group columns
-    j2 = AB.join(C, AB["jkb_c"] == C["jkc"])
-    gkeys = [f"gc{i}" for i in range(len(group_c))]
-    final_aggs = []
-    for i, sp in enumerate(cspecs_a):
-        name, kind, div = sp["name"], sp["kind"], sp["div"]
-        if kind == "count":
-            final_aggs.append(_checked_long(
-                F.sum(F.col("cab") * _dec(F.col("nc"))), f"count {name!r}"
-            ).alias(name))
-            continue
-        if kind in ("min", "max"):
-            s = F.min(f"hs{i}") if kind == "min" else F.max(f"hs{i}")
-        else:
-            s = _checked_long(
-                F.when(
-                    F.sum(F.col(f"hc{i}") * _dec(F.col("nc"))) > 0,
-                    F.sum(F.col(f"hs{i}") * _dec(F.col("nc"))),
-                ),
-                f"sum {name!r}",
-            )
-        if kind in ("min", "max") and sp.get("vt") in (
-            "ts", "tsntz", "date", "bool", "str", "binary"
-        ):
-            final_aggs.append(_group_key_out(s, sp["vt"]).alias(name))
-            continue
-        if kind == "avg":
-            num = (s.cast("double") / F.lit(float(div))) if div != 1 \
-                else s.cast("double")
-            expr = num / _checked_long(
-                F.sum(F.col(f"hc{i}") * _dec(F.col("nc"))),
-                f"avg denominator {name!r}",
-            ).cast("double")
-        else:
-            expr = (s.cast("double") / F.lit(float(div))) if div != 1 else s
-        final_aggs.append(expr.alias(name))
-    merged = j2.groupBy(*gkeys).agg(*final_aggs) if gkeys \
-        else j2.agg(*final_aggs)
-
-    out_cols = [
-        _group_key_out(F.col(f"gc{i}"), vts_c[i + 1]).alias(gname)
-        for i, gname in enumerate(group_c)
-    ]
-    return merged.select(*out_cols, *[sp["name"] for sp in cspecs_a])
 
 
 def random_access(

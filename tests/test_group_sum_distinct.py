@@ -318,6 +318,20 @@ def test_filter_agg_fused(spark, gs_table):
         0, None, None, None, None
     )
 
+    # the zero-key count-only form of the same kernel is filter_count
+    from arcade_spark.readops import filter_count, filter_group_by_multi
+
+    def count_where(value):
+        return filter_group_by_multi(
+            spark, out, [("eq", "lang", value)], [], [("c", "count", None)]
+        ).collect()
+
+    got = count_where("en")
+    assert len(got) == 1
+    assert got[0]["c"] == filter_count(spark, out, "lang", "en").collect()[0]["cnt"]
+    assert got[0]["c"] == int((pdf["lang"] == "en").sum())
+    assert [r["c"] for r in count_where("NOPE")] == [0]
+
     # double agg column: fixed-point contract (round-4)
     r = filter_agg(spark, out, [("eq", "lang", "en")], "v").collect()[0]
     subq = np.floor(
@@ -694,3 +708,29 @@ def test_bare_min_max_exact_past_2_62(spark, tmp_path):
         group_by(spark, out, ["g"], "v").collect()
     with pytest.raises(Exception, match=overflow):
         group_sum(spark, out, "g", "v").collect()
+
+
+@pytest.mark.parametrize(
+    "op", ["group_sum", "filter_group_by_multi", "column_agg", "filter_agg"]
+)
+def test_block_sum_past_2_62_raises(spark, tmp_path, op):
+    """Eight rows of 2^61 + 3 in one block: every value passes the
+    per-value 2^62 bar, but their int64 block sum wraps to 24. The
+    kernel's per-block sum bound must raise instead, on every
+    aggregate that runs a sum through it (grouped, global, filtered)."""
+    from arcade_spark import readops
+
+    rows = [(f"u{i}", "g", 2 ** 61 + 3) for i in range(8)]
+    src = spark.createDataFrame(rows, "url string, g string, v long")
+    out = str(tmp_path / "enc")
+    encode_job(spark, src, out, num_parts=1, block_rows=16)
+    run = {
+        "group_sum": lambda: readops.group_sum(spark, out, "g", "v"),
+        "filter_group_by_multi": lambda: readops.filter_group_by_multi(
+            spark, out, [], ["g"], [("s", "sum", "v")]),
+        "column_agg": lambda: readops.column_agg(spark, out, "v"),
+        "filter_agg": lambda: readops.filter_agg(
+            spark, out, [("eq", "g", "g")], "v"),
+    }[op]
+    with pytest.raises(Exception, match="multi-agg sum overflows int64"):
+        run().collect()

@@ -487,3 +487,52 @@ def test_str_key_split_matches_unsplit(spark, str_hot_table, monkeypatch, op):
     assert hot == [1]
     assert got == _rows(run(spark, str_hot_table, None))
     ro.release_key_caches()
+
+
+@pytest.fixture(scope="module")
+def float_hot_table(spark, tmp_path_factory):
+    """A 1,200-row hot key and 20 cold keys whose FIRST order column is
+    a double (negative, fractional and tied values): its order-key
+    lane spans ~2^64, too wide to range-slice."""
+    rng = np.random.default_rng(11)
+    n_hot, n_cold = 1200, 400
+    n = n_hot + n_cold
+    df = pd.DataFrame({
+        "key": np.concatenate([np.full(n_hot, 7), rng.integers(100, 120, n_cold)]),
+        "f": np.round(rng.normal(0, 1e6, n), 1),
+        "amt": rng.integers(-50, 100, n).astype(np.int64),
+        "ev": [f"s{i:05d}" for i in range(n)],
+    })
+    df.loc[::13, "f"] = 0.5
+    out = str(tmp_path_factory.mktemp("floathot") / "enc")
+    encode_job(spark, spark.createDataFrame(df), out,
+               num_parts=3, block_rows=256, order_col="ev")
+    return out
+
+
+@pytest.mark.parametrize("direction", ["lag", "lead"])
+def test_window_shift_float_first_order_split_matches_unsplit(
+    spark, float_hot_table, monkeypatch, direction
+):
+    """A float FIRST order column under a forced hot-key threshold:
+    the split is skipped (as for a binary first lane) and the output
+    equals the ``hot_key_threshold=None`` output, rather than raising
+    from a range split over the float order-key lane."""
+    import arcade_spark.readops as ro
+
+    calls = []
+    split = ro._split_hot_keys
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return split(*args, **kwargs)
+
+    monkeypatch.setattr(ro, "_split_hot_keys", spy)
+
+    def run(h):
+        return _rows(window_shift(
+            spark, float_hot_table, "key", ["f", "ev"], "amt", offset=2,
+            direction=direction, hot_key_threshold=h))
+
+    assert run(200) == run(None)
+    assert calls == []

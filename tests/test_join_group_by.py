@@ -276,3 +276,38 @@ def test_b_side_aggs_rejected_under_exists(spark, jg_tables):
             [("s", "sum", "qty", "b")],
             b_exists=True,
         )
+
+
+@pytest.mark.parametrize("op", ["join_group_by", "join_group_by_chain"])
+def test_hop_products_checked_without_ansi(spark, tmp_path, op):
+    """One A row x = 2^61 on key 1 and eight B rows on key 1: the
+    groupjoin sum S_A·nb is 2^64. With spark.sql.ansi.enabled=false an
+    int64 product would wrap to 0 silently; the hop's decimal(38,0)
+    products and checked cast must raise instead, on both the one-hop
+    and the two-hop operator."""
+    from arcade_spark.readops import join_group_by, join_group_by_chain
+
+    a = spark.createDataFrame([("a0", 1, 2 ** 61)], "url string, k long, x long")
+    b = spark.createDataFrame(
+        [(f"b{i}", 1, 7) for i in range(8)], "url string, k long, kc long"
+    )
+    c = spark.createDataFrame([("c0", 7, "r")], "url string, kc long, region string")
+    outs = {}
+    for name, df in (("a", a), ("b", b), ("c", c)):
+        outs[name] = str(tmp_path / name)
+        encode_job(spark, df, outs[name], num_parts=1, block_rows=16)
+    aggs = [("s", "sum", "x")]
+    run = {
+        "join_group_by": lambda: join_group_by(
+            spark, outs["a"], outs["b"], "k", aggs),
+        "join_group_by_chain": lambda: join_group_by_chain(
+            spark, outs["a"], outs["b"], outs["c"], "k", "k", "kc", "kc",
+            aggs, group_c=["region"]),
+    }[op]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(Exception, match="exceeds 2\\^62"):
+            run().collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -266,6 +266,19 @@ def test_column_agg_with_nulls(spark, tmp_path_factory):
     assert (row["sum_v"], row["cnt_all"], row["cnt_col"]) == (12, 4, 3)
     assert row["avg_v"] == pytest.approx(4.0)
 
+    # an all-null column: SQL SUM and AVG over zero valid values are NULL
+    src = spark.createDataFrame(
+        [("a", None), ("b", None), ("c", None)],
+        T.StructType([T.StructField("url", T.StringType()),
+                      T.StructField("x", T.LongType(), True)]),
+    )
+    out = str(tmp_path_factory.mktemp("agg_nulls") / "enc")
+    encode_job(spark, src, out, num_parts=1, block_rows=8)
+    row = column_agg(spark, out, "x").collect()[0]
+    assert row["sum_v"] is None
+    assert (row["cnt_all"], row["cnt_col"]) == (3, 0)
+    assert row["avg_v"] is None
+
 
 def test_empty_source_file_part_is_skipped(spark, tmp_path_factory):
     """A zero-row source file commits a manifest marker but no column

@@ -1,5 +1,6 @@
 """Plan-shape guard for the late-materializing operators, the
-group-by family and the keyed-timeline operators: in the AQE final
+group-by family (grand totals and groupjoins included) and the
+keyed-timeline operators: in the AQE final
 plan no stage chains two Python execs (each task would need two Python
 workers — past the idle-worker cap every such task re-forks and
 re-imports one), nothing is read back from a cache, no join is keyed on ``row_id`` (projections attach by
@@ -13,7 +14,9 @@ import pytest
 from arcade_spark.encode import encode_job
 from arcade_spark.planshape import stages
 from arcade_spark.readops import (
+    column_agg,
     distinct_count_approx,
+    filter_agg,
     filter_group_by,
     group_by,
     group_count,
@@ -21,6 +24,8 @@ from arcade_spark.readops import (
     join_asof,
     join_band,
     join_encoded,
+    join_group_by,
+    join_group_by_chain,
     orderby_export,
     rolling_agg,
     sessionize,
@@ -69,6 +74,17 @@ OPS = {
         s, oa, [("range", "ts", 0, 9000)], ["tag"], "ts"),
     "distinct_count_approx": lambda s, oa, ob: distinct_count_approx(
         s, oa, "tag"),
+    # the grand totals (zero-key group-by) and the groupjoins
+    "filter_agg": lambda s, oa, ob: filter_agg(
+        s, oa, [("eq", "tag", "q1")], "ts"),
+    "column_agg": lambda s, oa, ob: column_agg(s, oa, "ts"),
+    "join_group_by": lambda s, oa, ob: join_group_by(
+        s, oa, ob, "fk", [("s", "sum", "ts"), ("w", "sum", "w", "b"),
+                          ("n", "count", None)], key_b="pk",
+        group_b=["grade"]),
+    "join_group_by_chain": lambda s, oa, ob: join_group_by_chain(
+        s, oa, ob, ob, "fk", "pk", "grade", "grade", [("s", "sum", "ts")],
+        group_c=["w"]),
     # the keyed-timeline operators on their unsplit path
     **{f"sessionize_{emit}": (lambda s, oa, ob, emit=emit: sessionize(
         s, oa, "fk", "ts", gap=1000, emit=emit)) for emit in ("rows", "sessions")},

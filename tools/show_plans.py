@@ -14,6 +14,13 @@ and prints one line per run: its Spark job count and the Python depth
 of every stage. Run only that section with
 
     python tools/show_plans.py keyed
+
+The agg section runs the aggregate family (grand totals, zero- and
+2-key group-by, rollup, pivot, the groupjoins) on a 20k-row, 4-part
+fact table and two small dimensions, one line per operator in the same
+form. Run only that section with
+
+    python tools/show_plans.py agg
 """
 
 from __future__ import annotations
@@ -37,6 +44,9 @@ def main() -> None:
     if sys.argv[1:] == ["keyed"]:
         show_keyed(spark, tempfile.mkdtemp(prefix="plans_keyed"))
         return
+    if sys.argv[1:] == ["agg"]:
+        show_agg(spark, tempfile.mkdtemp(prefix="plans_agg"))
+        return
     corpus = write_corpus_files("/tmp/plans_corpus", 20000, 4)
 
     print("=== shuffle-mode encode plan (single exchange) ===")
@@ -50,6 +60,7 @@ def main() -> None:
 
     show_attach_joins(spark, tempfile.mkdtemp(prefix="plans_joins"))
     show_keyed(spark, tempfile.mkdtemp(prefix="plans_keyed"))
+    show_agg(spark, tempfile.mkdtemp(prefix="plans_agg"))
 
 
 def _tables(spark, root: str) -> tuple[str, str]:
@@ -143,6 +154,70 @@ def show_keyed(spark, root: str) -> None:
         spark, oa, "fk", "ts", 2, project=["tag", "id"])))
     for name, run in runs:
         df, jobs = _run(spark, name.replace(" ", "-"), run)
+        depths = [st["python_depth"] for st in stages(df)]
+        print(f"{name}: jobs {jobs}, rows {df.count()}, stage depths {depths}")
+        release_key_caches()
+
+
+def show_agg(spark, root: str) -> None:
+    """Run the aggregate operators on a 20k-row fact table (4 parts)
+    joined to a 60-row dimension and a 5-row second hop, and print each
+    run's job count and per-stage Python depth."""
+    from arcade_spark.encode import encode_job
+    from arcade_spark.planshape import stages
+    from arcade_spark.readops import (
+        column_agg, filter_agg, filter_group_by_multi, filter_group_by_sets,
+        join_group_by, join_group_by_chain, pivot_table, release_key_caches,
+    )
+
+    fact = spark.createDataFrame(
+        [(i, i % 50, f"q{i % 9}", i % 1000, (i % 700) * 0.25)
+         for i in range(20000)],
+        "id long, fk long, tag string, x long, v double",
+    )
+    dim = spark.createDataFrame(
+        [(j, f"g{j % 3}", j % 5, j * 3) for j in range(60)],
+        "pk long, grade string, gk long, w long",
+    )
+    hop = spark.createDataFrame(
+        [(k, f"r{k % 2}") for k in range(5)], "ck long, region string"
+    )
+    f, d, c = (os.path.join(root, n) for n in ("f", "d", "c"))
+    encode_job(spark, fact, f, num_parts=4, block_rows=1024, order_col="id")
+    encode_job(spark, dim, d, num_parts=2, block_rows=256, order_col="pk")
+    encode_job(spark, hop, c, num_parts=1, block_rows=256, order_col="ck")
+    aggs = [("s", "sum", "x"), ("lo", "min", "v"), ("a", "avg", "v"),
+            ("n", "count", None)]
+    runs = {
+        "filter_agg": lambda: filter_agg(spark, f, [("eq", "tag", "q1")], "x"),
+        "column_agg": lambda: column_agg(spark, f, "v"),
+        "filter_group_by_multi 0-key": lambda: filter_group_by_multi(
+            spark, f, [("range", "x", 0, 500)], [], aggs),
+        "filter_group_by_multi 2-key": lambda: filter_group_by_multi(
+            spark, f, [], ["tag", "fk"], aggs),
+        "filter_group_by_sets rollup": lambda: filter_group_by_sets(
+            spark, f, [], ["tag", "fk"], aggs, sets="rollup"),
+        "pivot_table": lambda: pivot_table(
+            spark, f, ["fk"], "tag", [("s", "sum", "x")]),
+        "join_group_by": lambda: join_group_by(
+            spark, f, d, "fk", aggs, key_b="pk", group_b=["grade"]),
+        "join_group_by b_exists": lambda: join_group_by(
+            spark, f, d, "fk", aggs, key_b="pk", group_a=["tag"],
+            preds_b=[("eq", "grade", "g1")], b_exists=True),
+        "join_group_by side-B": lambda: join_group_by(
+            spark, f, d, "fk", aggs + [("w", "sum", "w", "b")], key_b="pk",
+            group_a=["tag"]),
+        "join_group_by_chain": lambda: join_group_by_chain(
+            spark, f, d, c, "fk", "pk", "gk", "ck", aggs, group_c=["region"]),
+    }
+    print("=== aggregate operators: jobs and per-stage python depth ===")
+    for name, run in runs.items():
+        try:
+            df, jobs = _run(spark, name.replace(" ", "-"), run)
+        except Exception as e:  # an operator this tree does not support
+            spark.sparkContext.setJobGroup(None, None)
+            print(f"{name}: raises {type(e).__name__}: {str(e).splitlines()[0]}")
+            continue
         depths = [st["python_depth"] for st in stages(df)]
         print(f"{name}: jobs {jobs}, rows {df.count()}, stage depths {depths}")
         release_key_caches()
