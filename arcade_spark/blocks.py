@@ -127,13 +127,6 @@ def strblock_from_arrow(arr: pa.Array) -> StrBlock:
     return StrBlock(lengths=lengths, payload=payload, validity=validity)
 
 
-def strblock_from_pandas(series) -> StrBlock:
-    arr = pa.array(series, from_pandas=True)
-    if pa.types.is_null(arr.type):
-        arr = arr.cast(pa.large_binary())
-    return strblock_from_arrow(arr)
-
-
 def intblock_from_arrow(arr: pa.Array) -> IntBlock:
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()

@@ -208,14 +208,6 @@ def decode_dict_global(payload, meta, gdec: GlobalDictDecoder) -> StrBlock:
     return gdec.take_block(codes)
 
 
-def append_segment_only(seg, gdec: GlobalDictDecoder) -> None:
-    """Zone-map-skipped blocks still contribute their dict segment to the
-    running dictionary (the reference fetches skipped blocks' segments
-    via the previndex walk — process.cpp:88-123; we just replay the
-    ``seg`` column — the code array never ships)."""
-    gdec.append(_deserialize_values_arrow(seg))
-
-
 # ------------------------------------------------------------- rle_str
 # Dictionary + run-length codes: beats dict on sorted/clustered
 # low-cardinality columns (lang). Runs are computed on the factorized

@@ -207,29 +207,6 @@ def write_corpus(path: str, n_rows: int, seed: int = 42, chunk: int = 65536) -> 
     return path
 
 
-def corpus_df(spark, n_rows: int, partitions: int = 32, seed: int = 42):
-    """Distributed generation: spark.range → mapInPandas, each task
-    synthesizing its own deterministic id slice (scales to any corpus
-    size with zero driver memory)."""
-    from pyspark.sql import functions as F
-
-    rows_per = (n_rows + partitions - 1) // partitions
-
-    def gen(iterator):
-        for pdf in iterator:
-            for pid in pdf["id"].to_numpy():
-                start = int(pid) * rows_per
-                count = min(rows_per, n_rows - start)
-                if count > 0:
-                    yield corpus_pandas(count, seed=seed, start=start)
-
-    return (
-        spark.range(partitions)
-        .repartition(partitions, "id")
-        .mapInPandas(gen, schema=CORPUS_SPARK_SCHEMA)
-    )
-
-
 def write_corpus_files(
     dir_path: str, n_rows: int, n_files: int, seed: int = 42, chunk: int = 65536
 ) -> str:

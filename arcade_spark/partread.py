@@ -177,6 +177,27 @@ def _assign_df(spark: SparkSession, part_ids: list[int]) -> DataFrame:
     return range_rows_df(spark, [("part_id", "int", [int(p) for p in part_ids])], slices)
 
 
+def _group_key_out(col_expr, vt: str):
+    """Lane value → the column's logical Spark type. A ``timestamp_ntz``
+    lane adds its micros to the NTZ epoch: casting a ``timestamp``
+    instant to ``timestamp_ntz`` would apply the session time zone."""
+    if vt == "str":
+        return col_expr.cast("string")
+    if vt == "binary":
+        return col_expr
+    if vt == "ts":
+        return F.timestamp_micros(col_expr)
+    if vt == "tsntz":
+        return F.timestamp_add(
+            "MICROSECOND", col_expr, F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'")
+        )
+    if vt == "date":
+        return F.date_from_unix_date(col_expr.cast("int"))
+    from arcade_spark.schema import spark_type_for
+
+    return col_expr.cast(spark_type_for(vt))
+
+
 class _ColMeta:
     """Numpy view over one column file's chunk-metadata rows (one row
     per block, in block order)."""
@@ -1576,85 +1597,33 @@ def column_topk_parts(
     spark: SparkSession, out_dir: str, column: str, k: int, descending: bool = True
 ) -> DataFrame:
     """``SELECT col FROM t ORDER BY col [DESC] LIMIT k`` with zone-map
-    block pruning — the ARCADE-thesis answer to top-k: each task sorts
-    its partition's blocks by their zone bound and decodes them in
-    bound order, STOPPING as soon as the next block's bound cannot beat
-    the partition's current k-th value (ties cannot change the result
-    multiset, so `bound <= threshold` stops). Blob bytes are fetched
-    per block on demand — pruned blocks are never read. Partition
-    partials (≤ k values each) merge with one tiny global sort.
-
-    Doubles compare in the order-preserving key domain
-    (bits.float_order_keys). String/binary columns dispatch to
-    _column_topk_str_parts: their prefix-truncated zone bounds are
-    still valid ENVELOPES (min_bin is always a lower bound; an inexact
-    max_bin's next-prefix is an exclusive upper bound), so blocks prune
-    the same way — see that kernel for the dictionary-replay ordering
-    constraint. Nulls are excluded (SQL ORDER BY semantics for a
-    LIMIT k of non-null values)."""
+    block pruning — the ARCADE-thesis answer to top-k: each task keeps
+    its partition's top k (``_topk_part``), reading only the blocks
+    whose zone envelope can beat the k-th value, and the partition
+    partials (≤ k values each) merge with one tiny global sort. Nulls
+    are excluded (SQL ORDER BY semantics for a LIMIT k of non-null
+    values)."""
     from arcade_spark.bits import float_order_keys
-    from arcade_spark.core import decode_int_block
-    from arcade_spark.schema import spark_type_for
 
     all_cols, parts = load_manifest(out_dir)
     vt = dict(all_cols).get(column)
     if vt is None:
         raise KeyError(f"no such column: {column}")
-    if vt in ("str", "binary"):
-        return _column_topk_str_parts(spark, out_dir, column, k, descending, vt, parts)
-    is_float = vt in ("double", "float")
-    sign = 1 if descending else -1
+    lane = ("binary" if vt in ("str", "binary")
+            else "double" if vt in ("double", "float") else "long")
 
     def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
-        cf = _ColFile(out_dir, pid, column, vt)
-        cm = cf.cm
-        hz = np.nonzero(cm.has_zone)[0]
-        if len(hz) == 0:
-            return
-        bound = (cm.max_int if descending else cm.min_int)[hz] * sign
-        order = hz[np.argsort(-bound, kind="stable")]
-        best = np.empty(0, dtype=np.int64)  # key-domain, ascending
-        for b in order:
-            b = int(b)
-            bnd = int((cm.max_int if descending else cm.min_int)[b]) * sign
-            if len(best) >= k and bnd <= int(best[0]):
-                break
-            blob = cf.read({"blob": np.array([b])})["blob"][b]
-            iblock = decode_int_block(blob, cm.meta_dict(b))
-            v = iblock.values
-            if iblock.validity is not None:
-                v = v[iblock.validity]
-            if len(v) == 0:
-                continue
-            keys = (float_order_keys(v) if is_float else v) * sign
-            best = np.sort(np.concatenate([best, keys]))[-k:]
-        # emit the partition partial in the STORED domain
-        keys = best * sign
-        if is_float:
-            # float_order_keys is its own inverse
-            out = float_order_keys(keys).view(np.float64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out, type=pa.float64())], names=["v"]
-            )
-        else:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(keys, type=pa.int64())], names=["v"]
-            )
+        best = _topk_part(out_dir, pid, column, vt, k, descending)
+        if lane == "double":
+            # float_order_keys is its own inverse: keys → IEEE bits
+            best = float_order_keys(best).view(np.float64)
+        arr = (pa.array(best.tolist(), type=pa.binary()) if lane == "binary"
+               else pa.array(best))
+        yield pa.RecordBatch.from_arrays([arr], names=["v"])
 
-    ddl = "v double" if is_float else "v long"
-    partial = _map_parts(spark, [p for p, _ in parts], part_batches, ddl)
+    partial = _map_parts(spark, [p for p, _ in parts], part_batches, f"v {lane}")
     ordered = partial.orderBy(F.col("v").desc() if descending else F.col("v").asc())
-    out = ordered.limit(k)
-    if is_float:
-        return out.select(F.col("v").cast(spark_type_for(vt)).alias("v"))
-    if vt in ("ts", "tsntz"):
-        col = F.timestamp_micros(F.col("v"))
-        if vt == "tsntz":
-            col = col.cast("timestamp_ntz")
-        return out.select(col.alias("v"))
-    if vt == "date":
-        return out.select(F.date_from_unix_date(F.col("v").cast("int")).alias("v"))
-    return out.select(F.col("v").cast(spark_type_for(vt)).alias("v"))
+    return ordered.limit(k).select(_group_key_out(F.col("v"), vt).alias("v"))
 
 
 def _next_prefix(p: bytes) -> bytes | None:
@@ -1668,122 +1637,121 @@ def _next_prefix(p: bytes) -> bytes | None:
     return None
 
 
-def _topk_str_part(
-    out_dir: str, pid: int, column: str, k: int, descending: bool,
+def _topk_part(
+    out_dir: str, pid: int, column: str, vt: str, k: int, descending: bool,
     probe: dict | None = None,
-) -> list[bytes]:
-    """ORDER BY <string col> LIMIT k for ONE partition, zone-pruned.
+) -> np.ndarray:
+    """ORDER BY <col> LIMIT k for ONE partition, zone-pruned: the k best
+    non-null values, sorted ascending, in the lane's order domain (raw
+    bytes for str/binary, order-preserving int64 keys for double/float
+    — bits.float_order_keys —, the int64 lane otherwise).
 
-    Envelopes from (possibly prefix-truncated) zone bounds: min_bin is
-    ALWAYS a valid lower bound (a truncated min prefix understates its
-    chunk's true min); the upper bound is max_bin itself when exact,
-    else next_prefix(max_bin) — every extension of the prefix is below
-    it. A pre-decode threshold t0 comes from metadata alone (take
-    blocks by their guaranteed-side bound until ≥ k non-null values are
-    guaranteed); blob bytes are fetched ONLY for blocks whose envelope
-    can beat t0. Unlike the int kernel, blocks cannot decode in bound
-    order — differential-dictionary replay is sequential (writer.cpp
-    dict-diff chain) — so the pass runs in block order, replaying
-    segments for pruned blocks and tightening the threshold as decoded
-    blocks fill the running top-k. ``probe`` (tests) records the block
-    rows whose blobs were fetched under key "blob_rows"."""
-    from arcade_spark.core import decode_str_block, replay_str_block
+    Envelopes from the zone bounds: the int lanes' min/max are exact;
+    for strings min_bin is ALWAYS a valid lower bound (a truncated min
+    prefix understates its chunk's true min) and the upper bound is
+    max_bin itself when exact, else next_prefix(max_bin) — every
+    extension of the prefix is below it. A pre-decode threshold t0
+    comes from metadata alone (take blocks by their guaranteed-side
+    bound until ≥ k non-null values are guaranteed); blob bytes are
+    fetched ONLY for blocks whose envelope can beat t0, each row group
+    at most once, and the threshold tightens as decoded blocks fill the
+    running top-k. Int lanes decode in bound order and stop at the
+    first block that cannot beat the threshold (a row group is read
+    when its first block is due, and kept for its later ones). String
+    blocks cannot: differential-dictionary replay is sequential
+    (writer.cpp dict-diff chain), so they walk ``_ColFile.blocks`` in
+    block order, replaying segments for pruned blocks. Ties cannot
+    change the result multiset, so a block whose bound only ties the
+    threshold is skipped. ``probe`` (tests) records the block rows
+    whose blobs may be fetched under key "blob_rows"."""
+    from arcade_spark.bits import float_order_keys
+    from arcade_spark.core import decode_int_block, decode_str_block, replay_str_block
     from arcade_spark.gdict import GlobalDictDecoder
 
+    is_str = vt in ("str", "binary")
     # the kernel orders raw bytes, so a str column reads as binary
-    cf = _ColFile(out_dir, pid, column, "binary")
+    cf = _ColFile(out_dir, pid, column, "binary" if is_str else vt)
     cm = cf.cm
-    nb = cm.n
     n_valid = cm.n_values - cm.n_nulls
-    los: list[bytes | None] = []
-    his: list[bytes | None] = []  # None = unbounded above
-    for i in range(nb):
-        mb, xb = cm.min_bin[i], cm.max_bin[i]
-        if n_valid[i] == 0 or mb is None or xb is None:
-            los.append(None)
-            his.append(None)
-            continue
-        los.append(mb)
-        his.append(xb if cm.max_exact[i] else _next_prefix(xb))
-    valid = [i for i in range(nb) if los[i] is not None]
+    if is_str:
+        ok = [n_valid[i] > 0 and cm.min_bin[i] is not None
+              and cm.max_bin[i] is not None for i in range(cm.n)]
+        los = [mb if o else None for mb, o in zip(cm.min_bin, ok)]
+        his = [None if not o else xb if ex else _next_prefix(xb)
+               for xb, ex, o in zip(cm.max_bin, cm.max_exact, ok)]
+    else:
+        ok = cm.has_zone & (n_valid > 0)
+        los, his = cm.min_int.tolist(), cm.max_int.tolist()
+    valid = np.flatnonzero(ok)
 
     # metadata-only threshold t0: pick blocks by their guaranteed-side
-    # bound until >= k values are guaranteed at-least(t0)/at-most(t0)
-    t0: bytes | None = None
-    if descending:
-        cum = 0
-        for i in sorted(valid, key=lambda i: los[i], reverse=True):
-            cum += int(n_valid[i])
-            if cum >= k:
-                t0 = los[i]
-                break
-    else:
-        cum = 0
-        # unbounded-above blocks can't contribute to the guarantee
-        for i in sorted((i for i in valid if his[i] is not None),
-                        key=lambda i: his[i]):
-            cum += int(n_valid[i])
-            if cum >= k:
-                t0 = his[i]
-                break
+    # bound until >= k values are guaranteed at-least(t0)/at-most(t0);
+    # unbounded-above blocks can't contribute to an ascending guarantee
+    side = los if descending else his
+    t0 = None
+    cum = 0
+    for i in sorted((i for i in valid if side[i] is not None),
+                    key=lambda i: side[i], reverse=descending):
+        cum += int(n_valid[i])
+        if cum >= k:
+            t0 = side[i]
+            break
 
-    def beats(i: int, t: bytes | None) -> bool:
+    def beats(i: int, t) -> bool:
         if t is None:
             return True
         if descending:
             return his[i] is None or his[i] > t
         return los[i] < t
 
-    alive = np.zeros(nb, dtype=bool)
-    for i in valid:
-        alive[i] = beats(i, t0)
+    alive = np.zeros(cm.n, dtype=bool)
+    alive[[i for i in valid if beats(i, t0)]] = True
     if probe is not None:
         probe["blob_rows"] = np.flatnonzero(alive).tolist()
         probe["t0"] = t0
-    gdec = GlobalDictDecoder()
-    best: list[bytes] = []  # sorted ascending, len <= k
-    for b, meta, blob in cf.blocks(alive):
-        t = None
-        if len(best) >= k:
-            t = best[0] if descending else best[-1]
-            if t0 is not None:
-                t = max(t, t0) if descending else min(t, t0)
-        else:
-            t = t0
-        if blob is None or not beats(b, t):
+    gdec = GlobalDictDecoder() if is_str else None
+    best = np.empty(0, dtype=object if is_str else np.int64)  # ascending
+
+    def threshold():
+        if len(best) < k:
+            return t0
+        t = best[0] if descending else best[-1]
+        if t0 is None:
+            return t
+        return max(t, t0) if descending else min(t, t0)
+
+    def walk():
+        if is_str:  # dictionary replay is sequential: block order
+            yield from cf.blocks(alive)
+            return
+        # exact int bounds: bound order, the first loser ends the walk
+        hit = np.flatnonzero(alive)
+        order = np.argsort(np.array(his if descending else los)[hit], kind="stable")
+        got: dict[int, dict] = {}
+        for b in hit[order[::-1] if descending else order]:
+            if not beats(b, threshold()):
+                return
+            rg = int(np.searchsorted(cf.rg_off, b, side="right")) - 1
+            if rg not in got:
+                lo, hi = cf.rg_off[rg], cf.rg_off[rg + 1]
+                got[rg] = cf.read({"blob": hit[(hit >= lo) & (hit < hi)]})["blob"]
+            yield int(b), cm.meta_dict(int(b)), got[rg][int(b)]
+
+    for b, meta, blob in walk():
+        if blob is None or not beats(b, threshold()):
             replay_str_block(meta, gdec)
             continue
-        blk = decode_str_block(blob, meta, gdec)
-        arr = blk.to_arrow(binary=True)
-        if blk.validity is not None:
-            arr = arr.drop_null()
-        vals = arr.to_pylist()
-        if vals:
-            merged = sorted(best + vals)
-            best = merged[-k:] if descending else merged[:k]
+        if is_str:
+            arr = decode_str_block(blob, meta, gdec).to_arrow(binary=True).drop_null()
+            vals = np.array(arr.to_pylist(), dtype=object)
+        else:
+            blk = decode_int_block(blob, meta)
+            vals = blk.values if blk.validity is None else blk.values[blk.validity]
+            if vt in ("double", "float"):
+                vals = float_order_keys(vals)
+        merged = np.sort(np.concatenate([best, vals]))
+        best = merged[-k:] if descending else merged[:k]
     return best
-
-
-def _column_topk_str_parts(
-    spark: SparkSession, out_dir: str, column: str, k: int,
-    descending: bool, vt: str, parts: list[tuple[int, int]],
-) -> DataFrame:
-    """String/binary ORDER BY LIMIT k: per-partition zone-pruned
-    partials (≤ k values each, see _topk_str_part) merged by one tiny
-    global sort."""
-
-    def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
-        best = _topk_str_part(out_dir, pid, column, k, descending)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(best, type=pa.binary())], names=["v"]
-        )
-
-    partial = _map_parts(spark, [p for p, _ in parts], part_batches, "v binary")
-    ordered = partial.orderBy(F.col("v").desc() if descending else F.col("v").asc())
-    out = ordered.limit(k)
-    if vt == "str":
-        return out.select(F.col("v").cast("string").alias("v"))
-    return out
 
 
 def column_agg_parts(spark: SparkSession, out_dir: str, column: str) -> DataFrame:

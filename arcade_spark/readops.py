@@ -30,7 +30,7 @@ from arcade_spark.bits import unpack_sections, unpack_uints, unpack_validity
 from arcade_spark.codecs import strcodecs as sc
 from arcade_spark.codecs.intcodecs import decode_for_int
 from arcade_spark.postpass import unpost
-from arcade_spark.partread import filter_parts, load_manifest
+from arcade_spark.partread import _group_key_out, filter_parts, load_manifest
 from arcade_spark.gdict import GlobalDictDecoder
 from arcade_spark.schema import spark_type_for
 
@@ -54,7 +54,8 @@ def release_key_caches() -> None:
     through the gather-expand attach once. (One op may register more
     than one handle — e.g. a hot-key split's input cache plus its
     sliced stream — so this releases a short list, still bounded per
-    query.)"""
+    query; a rank call also registers the broadcast variable that
+    carries its targets, whose executor copies this drops.)"""
     while _KEY_CACHES:
         df = _KEY_CACHES.pop()
         try:
@@ -978,9 +979,11 @@ def column_topk(
     spark: SparkSession, out_dir: str, column: str, k: int, descending: bool = True
 ) -> DataFrame:
     """``SELECT col FROM t ORDER BY col [DESC] LIMIT k`` with zone-map
-    block pruning: blocks decode in zone-bound order and stop at the
-    first block that cannot beat the k-th value; pruned blocks' blobs
-    are never read. See partread.column_topk_parts."""
+    block pruning: each partition reads each row group at most once
+    and decodes only the blocks whose zone envelope can beat the
+    running k-th value (int lanes in bound order, stopping at the first
+    that cannot; strings in block order); pruned blocks' blobs are
+    never read. See partread.column_topk_parts."""
     from arcade_spark.partread import column_topk_parts
 
     return column_topk_parts(spark, out_dir, column, k, descending)
@@ -1055,22 +1058,6 @@ def group_sum(
         spark, out_dir, [], [group_col],
         [("sum_v", "sum", agg_col), ("cnt", "count", None)], agg_scale,
     )
-
-
-def _group_key_out(col_expr, vt: str):
-    """Partial-lane value → the column's logical Spark type."""
-    if vt == "str":
-        return col_expr.cast("string")
-    if vt == "binary":
-        return col_expr
-    if vt in ("double", "float"):
-        return col_expr.cast(spark_type_for(vt))
-    if vt in ("ts", "tsntz"):
-        out = F.timestamp_micros(col_expr)
-        return out.cast("timestamp_ntz") if vt == "tsntz" else out
-    if vt == "date":
-        return F.date_from_unix_date(col_expr.cast("int"))
-    return col_expr.cast(spark_type_for(vt))
 
 
 def group_by(
@@ -1920,6 +1907,218 @@ def _bucketizer(
     return bucketize, f"bkt int, {lanes_ddl}, rid long"
 
 
+def _bucket_stream(
+    spark: SparkSession, out_dir: str, cols: dict, parts: list[tuple[int, int]],
+    lanes: list[str], preds: list[tuple] | None, keep_null_keys: bool,
+    second_mode: str | None, null1_sentinel: int | None = None,
+    buckets: int | None = None, persist: bool = True,
+) -> tuple[DataFrame, list[str], int]:
+    """The front half of every rank and sort operator: the bucketed
+    ``(bkt, k0.., rid)`` key stream over ``lanes`` (order lanes first,
+    then any group lanes).
+
+    Range split points for the first lane come from the ZONE MAPS
+    (``_zone_splits``, no sampling pass), sub-split on ``second_mode``
+    (None, 'col' = the second lane, 'rid' = the rowid; second-lane nulls
+    map to ``null1_sentinel``). The key kernel decodes only the lanes
+    and bucketizes inside its own task; first-lane nulls (kept only with
+    ``keep_null_keys``) go to the null bucket one past the last range
+    bucket. With ``persist`` the stream is cached for its two consumers
+    (the counts and the bucket sorts) — the narrow rows are a few % of
+    the table, the same order as the shuffle files Spark's own orderBy
+    writes — and registered for ``release_key_caches``.
+
+    Returns (stream, lane vtypes, null bucket)."""
+    from pyspark import StorageLevel
+    from arcade_spark.partread import key_rowid_parts
+
+    first_str = cols[lanes[0]] in ("str", "binary")
+    second = lanes[1] if second_mode == "col" else None
+    n_buckets = buckets or max(
+        8, min(1024, 4 * spark.sparkContext.defaultParallelism)
+    )
+    splits = _zone_splits(
+        spark, out_dir, lanes[0], first_str, parts, n_buckets, second=second,
+        second_is_str=second is not None and cols[second] in ("str", "binary"),
+        second_rid=second_mode == "rid",
+    )
+    null_bucket = len(splits) + 1
+    stream, kvts = key_rowid_parts(
+        spark, out_dir, lanes, _preds_to_spec(preds) if preds else None,
+        keep_null_keys=keep_null_keys,
+        float_order_lane=True,
+        post=_bucketizer([cols[c] for c in lanes], first_str, splits,
+                         null_bucket, second_mode=second_mode,
+                         null1_sentinel=null1_sentinel),
+    )
+    if persist:
+        release_key_caches()  # at most one outstanding per session
+        stream = stream.persist(StorageLevel.MEMORY_AND_DISK)
+        _register_key_cache(stream)
+    return stream, kvts, null_bucket
+
+
+def _bucket_counts(stream: DataFrame, gnames: list[str]) -> dict:
+    """Row counts per (group lanes, bucket) cell of a ``_bucket_stream``,
+    collected as {group tuple: {bucket: count}}. With no group lanes the
+    one group is ``()`` and a cell is a bucket: at most
+    ``len(splits) + 2`` cells. Grouped counts are O(groups × buckets),
+    so their cell count is probed BEFORE collecting — an oversized
+    grouping must fail without first materializing 4M+ rows on the
+    driver (mirrors the _SEMIJOIN_MAX_KEYS pre-check). The probe is a
+    full parallel count on the PERSISTED frame, not limit(n+1).count():
+    CollectLimit executes the plan partition-batch by partition-batch
+    and re-runs the upstream kernel several times."""
+    from collections import defaultdict
+    from pyspark import StorageLevel
+
+    cells = stream.groupBy(*gnames, "bkt").agg(F.count("*").alias("cnt"))
+    if not gnames:
+        rows = cells.collect()
+    else:
+        cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            probe = cells.count()
+            if probe > 4_000_000:
+                raise ValueError(
+                    f"{probe} (group, bucket) cells — too many groups "
+                    "for driver-side rank targeting; aggregate or pre-filter "
+                    "first"
+                )
+            rows = cells.collect()
+        finally:
+            cells.unpersist()
+    out: dict[tuple, dict[int, int]] = defaultdict(dict)
+    for r in rows:
+        out[_row_key(r, gnames)][r["bkt"]] = r["cnt"]
+    return out
+
+
+def _rank_values(
+    spark: SparkSession, out_dir: str, group_cols: list[str], column: str,
+    quantiles: list[float] | None, ranks: list[int] | None,
+    preds: list[tuple] | None, buckets: int | None, persist: bool,
+) -> DataFrame:
+    """``group_rank_values`` for any number of group columns, zero
+    included (``column_rank_values``): count → target → pick over one
+    ``_bucket_stream`` of (value, group.., rid) with rowid sub-splits,
+    so a hot value still spreads across buckets. Counts per
+    (group, bucket) cell locate each group-rank's cell; ONLY those
+    cells sort (Arrow sort_indices on (value, rid) — ties don't matter,
+    the value at a rank of the sorted multiset is unique) and each
+    emits its targets. With zero groups a rank past the count raises
+    ``IndexError`` and quantiles over no values raise ``ValueError``;
+    with groups they simply don't emit."""
+    import pyarrow as pa
+
+    if (ranks is None) == (quantiles is None):
+        raise ValueError("pass exactly one of ranks= / quantiles=")
+    if not (ranks if ranks is not None else quantiles):
+        raise ValueError("ranks/quantiles must be non-empty")
+    all_cols, parts = load_manifest(out_dir)
+    cols = dict(all_cols)
+    for c in [column, *group_cols]:
+        if c not in cols:
+            raise KeyError(f"no such column: {c}")
+    if any(cols[g] in ("double", "float") for g in group_cols):
+        raise NotImplementedError(
+            "float group keys are not a sane grouping contract"
+        )
+    for q in quantiles or ():
+        if not (0.0 <= q <= 1.0):
+            raise ValueError(f"quantile out of [0,1]: {q}")
+    vt = cols[column]
+    is_float = vt in ("double", "float")
+
+    keyed_b, kvts, _ = _bucket_stream(
+        spark, out_dir, cols, parts, [column, *group_cols], preds,
+        keep_null_keys=False,  # null value or null group key → dropped
+        second_mode="rid", buckets=buckets, persist=persist,
+    )
+    gnames = [f"k{i + 1}" for i in range(len(group_cols))]
+    counts = _bucket_counts(keyed_b, gnames)
+    if not gnames:
+        total = sum(counts[()].values())
+        if quantiles is not None and total == 0:
+            raise ValueError("no non-null values to rank")
+        rs = sorted({int(r) for r in ranks or ()})
+        if rs and (rs[0] < 0 or rs[-1] >= total):
+            raise IndexError(f"rank out of range: {rs[0]}..{rs[-1]} vs n={total}")
+    # (group tuple, bucket) → [(rank within cell, rank within group)]
+    targets: dict[tuple, list[tuple[int, int]]] = {}
+    for gkey, cnts in counts.items():
+        total = sum(cnts.values())
+        if quantiles is not None:
+            rks = sorted({int(q * (total - 1)) for q in quantiles})
+        else:
+            rks = sorted({int(r) for r in ranks if 0 <= int(r) < total})
+        acc = 0
+        ri = 0
+        for b in sorted(cnts):
+            hi = acc + cnts[b]
+            while ri < len(rks) and rks[ri] < hi:
+                targets.setdefault((gkey, b), []).append(
+                    (rks[ri] - acc, rks[ri])
+                )
+                ri += 1
+            acc = hi
+    # the targets reach the kernel through its closure, in a broadcast
+    # variable: a Python worker loads them once, where a dict closed
+    # over directly (up to the 4M-cell guard) would be unpickled at
+    # every task start. Registered with the key cache, so
+    # release_key_caches drops the executor copies (a reused result
+    # re-sends them).
+    tb = spark.sparkContext.broadcast(targets)
+    _register_key_cache(tb)
+
+    def pick(key: tuple, tbl: pa.Table) -> pa.Table:
+        cell = tuple(k.as_py() if hasattr(k, "as_py") else k for k in key)
+        want = tb.value[(cell[:-1], cell[-1])]
+        lr = np.array([t[0] for t in want], dtype=np.int64)
+        gp = np.array([t[1] for t in want], dtype=np.int64)
+        idx = pa.compute.sort_indices(
+            tbl, sort_keys=[("k0", "ascending"), ("rid", "ascending")]
+        )
+        sel_idx = idx.take(pa.array(lr))
+        vals = tbl.column("k0").take(sel_idx)
+        if is_float:
+            from arcade_spark.bits import float_order_keys
+
+            k = vals.to_numpy(zero_copy_only=False).astype(np.int64)
+            # float_order_keys is its own inverse (order-key involution
+            # in the int64 bit domain): keys → raw IEEE bit patterns
+            vals = pa.array(float_order_keys(k).view(np.float64),
+                            type=pa.float64())
+        garrs = [tbl.column(g).take(sel_idx) for g in gnames]
+        return pa.Table.from_arrays(
+            garrs + [pa.array(gp), vals], names=gnames + ["pos", "v"],
+        )
+
+    lane = ("binary" if vt in ("str", "binary")
+            else "double" if is_float else "long")
+    glanes = _lanes_ddl(gnames, [v in ("str", "binary") for v in kvts[1:]])
+    # only targeted cells leave the map side: with groups a broadcast
+    # semi-join on the (group.., bkt) keys, else a bucket filter
+    if gnames:
+        hit = keyed_b.join(F.broadcast(spark.createDataFrame(
+            [(*g, int(b)) for g, b in targets], f"{glanes}, bkt int",
+        )), on=[*gnames, "bkt"], how="left_semi")
+    else:
+        hit = keyed_b.filter(F.col("bkt").isin(sorted(b for _, b in targets)))
+    sel = (
+        hit.groupBy(*gnames, "bkt")
+        .applyInArrow(pick, schema=", ".join(
+            filter(None, [glanes, f"pos long, v {lane}"])))
+    )
+    result = sel.select(
+        *_keys_out(gnames, kvts[1:], group_cols), "pos",
+        _group_key_out(F.col("v"), vt).alias("v"),
+    )
+    if persist:
+        result._arcade_key_cache = keyed_b  # see orderby_export
+    return result
+
+
 def column_rank_values(
     spark: SparkSession,
     out_dir: str,
@@ -1935,128 +2134,20 @@ def column_rank_values(
     NON-NULL values (medians, p95/p99, deciles). ``quantiles`` maps
     q → rank ``floor(q·(n−1))`` with n = non-null count (the
     lower-nearest-rank definition — deterministic, replayable in SQL
-    via ROW_NUMBER).
+    via ROW_NUMBER). A rank outside ``[0, n)`` raises ``IndexError``;
+    quantiles over no non-null values raise ``ValueError``.
 
-    Scale design: zone-map range buckets (no sampling pass) partition
-    the narrow (order-key, rid) stream; per-bucket COUNTS locate which
-    bucket holds each target rank; ONLY those buckets sort (Arrow
-    sort_indices on values — ties don't matter, the value at a rank of
-    the sorted multiset is unique) and each emits its targets. A p99
-    over 10^12 rows sorts ~1/n_buckets of the keys, reads zero payload
-    columns, and never range-exchanges the table.
+    This is ``group_rank_values`` with zero groups: the one group is
+    the whole (filtered) table and a cell is a zone-map range bucket.
+    Per-bucket COUNTS locate which bucket holds each target rank and
+    ONLY those buckets sort, so a p99 over 10^12 rows sorts
+    ~1/n_buckets of the keys, reads zero payload columns, and never
+    range-exchanges the table.
 
     Returns DF (pos long, v <column's logical type>) — one row per
     requested rank."""
-    import pyarrow as pa
-    from arcade_spark.partread import key_rowid_parts
-
-    if (ranks is None) == (quantiles is None):
-        raise ValueError("pass exactly one of ranks= / quantiles=")
-    if not (ranks if ranks is not None else quantiles):
-        raise ValueError("ranks/quantiles must be non-empty")
-    all_cols, parts = load_manifest(out_dir)
-    cols = dict(all_cols)
-    vt = cols.get(column)
-    if vt is None:
-        raise KeyError(f"no such column: {column}")
-    is_str = vt in ("str", "binary")
-    is_float = vt in ("double", "float")
-
-    n_buckets = buckets or max(
-        8, min(1024, 4 * spark.sparkContext.defaultParallelism)
-    )
-    # second split component = rowid (the sort's tiebreak), so a hot
-    # value — a median over a 3-distinct-value column — still spreads
-    # across ~n_buckets tasks instead of one bucket's sort
-    splits = _zone_splits(
-        spark, out_dir, column, is_str, parts, n_buckets, second_rid=True,
-    )
-    keyed_b, _ = key_rowid_parts(
-        spark, out_dir, [column],
-        _preds_to_spec(preds) if preds else None,
-        keep_null_keys=False,  # ranks are over non-null values
-        float_order_lane=True,
-        post=_bucketizer([vt], is_str, splits, len(splits) + 1,
-                         second_mode="rid"),
-    )
-    if persist:
-        # counts + targeted-bucket sorts both consume the stream (see
-        # orderby_export)
-        from pyspark import StorageLevel
-
-        release_key_caches()  # at most one outstanding per session
-        keyed_b = keyed_b.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(keyed_b)
-
-    counts = {
-        r["bkt"]: r["cnt"]
-        for r in keyed_b.groupBy("bkt").agg(F.count("*").alias("cnt")).collect()
-    }
-    total = sum(counts.values())
-    if quantiles is not None:
-        for q in quantiles:
-            if not (0.0 <= q <= 1.0):
-                raise ValueError(f"quantile out of [0,1]: {q}")
-        if total == 0:
-            raise ValueError("no non-null values to rank")
-        ranks = sorted({int(q * (total - 1)) for q in quantiles})
-    ranks = sorted(set(int(r) for r in ranks))
-    if ranks and (ranks[0] < 0 or ranks[-1] >= total):
-        raise IndexError(
-            f"rank out of range: {ranks[0]}..{ranks[-1]} vs n={total}"
-        )
-    # bucket → [(local_rank, global_pos), ...]
-    targets: dict[int, list[tuple[int, int]]] = {}
-    acc = 0
-    order = sorted(counts)
-    ri = 0
-    for b in order:
-        hi = acc + counts[b]
-        while ri < len(ranks) and ranks[ri] < hi:
-            targets.setdefault(b, []).append((ranks[ri] - acc, ranks[ri]))
-            ri += 1
-        acc = hi
-    tkeys = sorted(targets)
-
-    def pick(key: tuple, tbl: pa.Table) -> pa.Table:
-        b = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
-        want = targets[b]
-        idx = pa.compute.sort_indices(
-            tbl, sort_keys=[("k0", "ascending"), ("rid", "ascending")]
-        )
-        lr = np.array([t[0] for t in want], dtype=np.int64)
-        gp = np.array([t[1] for t in want], dtype=np.int64)
-        sel_idx = idx.take(pa.array(lr))
-        vals = tbl.column("k0").take(sel_idx)
-        if is_float:
-            # invert the order-key map back to IEEE bits, kernel-side
-            # (bits.float_order_keys is its own inverse) — exact, no
-            # string round-trip
-            from arcade_spark.bits import float_order_keys
-
-            k = vals.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = pa.array(float_order_keys(k).view(np.float64),
-                            type=pa.float64())
-        return pa.Table.from_arrays(
-            [pa.array(gp), vals], names=["pos", "v"]
-        )
-
-    lane = "binary" if is_str else ("double" if is_float else "long")
-    sel = (
-        keyed_b.filter(F.col("bkt").isin([int(b) for b in tkeys]))
-        .groupBy("bkt")
-        .applyInArrow(pick, schema=f"pos long, v {lane}")
-    )
-    if is_str:
-        v_out = F.col("v").cast("string") if vt == "str" else F.col("v")
-    elif is_float:
-        v_out = F.col("v").cast(spark_type_for(vt))
-    else:
-        v_out = _group_key_out(F.col("v"), vt)
-    result = sel.select("pos", v_out.alias("v"))
-    if persist:
-        result._arcade_key_cache = keyed_b  # see orderby_export
-    return result
+    return _rank_values(spark, out_dir, [], column, quantiles, ranks,
+                        preds, buckets, persist)
 
 
 def group_rank_values(
@@ -2081,171 +2172,18 @@ def group_rank_values(
     Scale design: ONE set of zone-map range buckets over the value
     column (rowid sub-splits keep hot values spread) partitions the
     narrow (value, group..., rid) stream; counts per (group, bucket)
-    locate each group-rank's cell; ONLY those cells sort (Arrow
-    sort_indices) and each emits its targets. The counts collect is
-    O(groups × buckets) — guarded, and far below any per-row
-    materialization; a grouped p99 over 10^12 rows sorts only the
-    cells that hold a target.
+    locate each group-rank's cell; ONLY those cells sort. The counts
+    collect is O(groups × buckets) — guarded, and far below any
+    per-row materialization. ``column_rank_values`` is the same
+    pipeline with zero groups.
 
     Null contract: rows with a null value OR any null group column are
     dropped (SQL aggregate + group-by semantics). Returns DF
     (group_cols..., pos long, v <column type>)."""
-    import pyarrow as pa
-    from arcade_spark.partread import key_rowid_parts
-
-    if (ranks is None) == (quantiles is None):
-        raise ValueError("pass exactly one of ranks= / quantiles=")
-    if not (ranks if ranks is not None else quantiles):
-        raise ValueError("ranks/quantiles must be non-empty")
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
-    all_cols, parts = load_manifest(out_dir)
-    cols = dict(all_cols)
-    vt = cols.get(column)
-    if vt is None:
-        raise KeyError(f"no such column: {column}")
-    for g in group_cols:
-        gvt = cols.get(g)
-        if gvt is None:
-            raise KeyError(f"no such column: {g}")
-        if gvt in ("double", "float"):
-            raise NotImplementedError(
-                "float group keys are not a sane grouping contract"
-            )
-    is_str = vt in ("str", "binary")
-    is_float = vt in ("double", "float")
-    if quantiles is not None:
-        for q in quantiles:
-            if not (0.0 <= q <= 1.0):
-                raise ValueError(f"quantile out of [0,1]: {q}")
-
-    n_buckets = buckets or max(
-        8, min(1024, 4 * spark.sparkContext.defaultParallelism)
-    )
-    splits = _zone_splits(
-        spark, out_dir, column, is_str, parts, n_buckets, second_rid=True,
-    )
-    keyed_b, kvts = key_rowid_parts(
-        spark, out_dir, [column] + list(group_cols),
-        _preds_to_spec(preds) if preds else None,
-        keep_null_keys=False,  # null value or null group key → dropped
-        float_order_lane=True,
-        post=_bucketizer([cols[c] for c in [column, *group_cols]], is_str,
-                         splits, len(splits) + 1, second_mode="rid"),
-    )
-    from pyspark import StorageLevel
-
-    if persist:
-        release_key_caches()
-        keyed_b = keyed_b.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(keyed_b)
-
-    gnames = [f"k{i + 1}" for i in range(len(group_cols))]
-    cells = keyed_b.groupBy(*gnames, "bkt").agg(
-        F.count("*").alias("cnt")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # probe the cell count BEFORE collecting — an oversized grouping must
-    # fail without first materializing 4M+ rows on the driver (mirrors
-    # the _SEMIJOIN_MAX_KEYS pre-check). Full parallel count on the
-    # PERSISTED frame, not limit(n+1).count(): CollectLimit executes
-    # the plan partition-batch by partition-batch and re-runs the
-    # upstream kernel several times.
-    try:
-        probe = cells.count()
-        if probe > 4_000_000:
-            raise ValueError(
-                f"{probe} (group, bucket) cells — too many groups "
-                "for driver-side rank targeting; aggregate or pre-filter "
-                "first"
-            )
-        crows = cells.collect()
-    finally:
-        cells.unpersist()
-    from collections import defaultdict
-
-    gb: dict[tuple, dict[int, int]] = defaultdict(dict)
-    for r in crows:
-        gkey = _row_key(r, gnames)
-        gb[gkey][r["bkt"]] = r["cnt"]
-    # (group tuple, bucket) → [(rank within cell, rank within group)]
-    targets: dict[tuple, list[tuple[int, int]]] = {}
-    for gkey, cnts in gb.items():
-        total = sum(cnts.values())
-        if quantiles is not None:
-            rks = sorted({int(q * (total - 1)) for q in quantiles})
-        else:
-            rks = sorted({int(r) for r in ranks if 0 <= int(r) < total})
-        acc = 0
-        ri = 0
-        for b in sorted(cnts):
-            hi = acc + cnts[b]
-            while ri < len(rks) and rks[ri] < hi:
-                targets.setdefault((gkey, b), []).append(
-                    (rks[ri] - acc, rks[ri])
-                )
-                ri += 1
-            acc = hi
-    lanes_ddl = _lanes_ddl(
-        gnames, [vt in ("str", "binary") for vt in kvts[1:len(gnames) + 1]]
-    ) + ", bkt int"
-    # the per-cell rank targets travel ON the broadcast-joined cells
-    # frame (array columns), not in the kernel closure — closing over
-    # the targets dict would cloudpickle up to the 4M-cell guard limit
-    # into every task binary
-    cells = spark.createDataFrame(
-        [
-            tuple(gk) + (int(b),
-                         [int(t[0]) for t in want],
-                         [int(t[1]) for t in want])
-            for (gk, b), want in targets.items()
-        ],
-        lanes_ddl + ", lr array<long>, gp array<long>",
-    )
-
-    def pick(key: tuple, tbl: pa.Table) -> pa.Table:
-        # every row of the cell carries identical lr/gp arrays — read
-        # them from the first row
-        lr = np.asarray(tbl.column("lr")[0].as_py(), dtype=np.int64)
-        gp = np.asarray(tbl.column("gp")[0].as_py(), dtype=np.int64)
-        idx = pa.compute.sort_indices(
-            tbl, sort_keys=[("k0", "ascending"), ("rid", "ascending")]
-        )
-        sel_idx = idx.take(pa.array(lr))
-        vals = tbl.column("k0").take(sel_idx)
-        if is_float:
-            from arcade_spark.bits import float_order_keys
-
-            k = vals.to_numpy(zero_copy_only=False).astype(np.int64)
-            # float_order_keys is its own inverse (order-key involution
-            # in the int64 bit domain): keys → raw IEEE bit patterns
-            vals = pa.array(float_order_keys(k).view(np.float64),
-                            type=pa.float64())
-        garrs = [tbl.column(g).take(sel_idx) for g in gnames]
-        return pa.Table.from_arrays(
-            garrs + [pa.array(gp), vals], names=list(gnames) + ["pos", "v"],
-        )
-
-    lane = "binary" if is_str else ("double" if is_float else "long")
-    sel = (
-        keyed_b.join(F.broadcast(cells), on=gnames + ["bkt"], how="inner")
-        .groupBy(*gnames, "bkt")
-        .applyInArrow(pick, schema=f"{lanes_ddl.rsplit(', bkt', 1)[0]}, "
-                                   f"pos long, v {lane}")
-    )
-    if is_str:
-        v_out = F.col("v").cast("string") if vt == "str" else F.col("v")
-    elif is_float:
-        v_out = F.col("v").cast(spark_type_for(vt))
-    else:
-        v_out = _group_key_out(F.col("v"), vt)
-    out_groups = [
-        _group_key_out(F.col(kn), kvts[i + 1]).alias(g)
-        for i, (kn, g) in enumerate(zip(gnames, group_cols))
-    ]
-    result = sel.select(*out_groups, "pos", v_out.alias("v"))
-    if persist:
-        result._arcade_key_cache = keyed_b
-    return result
+    return _rank_values(spark, out_dir, list(group_cols), column, quantiles,
+                        ranks, preds, buckets, persist)
 
 
 def orderby_export(
@@ -2298,7 +2236,7 @@ def orderby_export(
     keys (bits.float_order_keys — NaN above +inf, -0.0 just before
     0.0)."""
     import pyarrow as pa
-    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
+    from arcade_spark.partread import attach_rowids_parts
 
     order_cols = [order_cols] if isinstance(order_cols, str) else list(order_cols)
     if not order_cols:
@@ -2318,16 +2256,6 @@ def orderby_export(
     for c in order_cols + list(project):
         if c not in cols:
             raise KeyError(f"no such column: {c}")
-    # double/float order columns ride the order-preserving int64 key
-    # lane (bits.float_order_keys): sort order matches float <, NaN
-    # sorts above +inf (its key exceeds every finite key), and -0.0
-    # orders just before 0.0 (deterministic; SQL considers them equal)
-    first = order_cols[0]
-    first_str = cols[first] in ("str", "binary")
-
-    n_buckets = buckets or max(
-        8, min(1024, 4 * spark.sparkContext.defaultParallelism)
-    )
 
     # second split component (round-6): sub-splits hot first values so
     # ORDER BY (lang, url) on 20 langs still fills n_buckets. The
@@ -2339,50 +2267,25 @@ def orderby_export(
     # Second-lane nulls map to +inf except mixed all-desc (bucket ids
     # consumed descending but NULLS LAST ⇒ nulls in the LOWEST
     # sub-bucket of their first-value run).
-    second = None
-    second_rid = False
     second_mode = None
     if len(order_cols) >= 2 and dirs[0] == dirs[1]:
-        second = order_cols[1]
         second_mode = "col"
     elif len(order_cols) == 1 and not (mixed and dirs[0]):
-        second_rid = True
         second_mode = "rid"
     sentinel = (np.iinfo(np.int64).min if (mixed and dirs[0])
                 else np.iinfo(np.int64).max)
-    splits = _zone_splits(
-        spark, out_dir, first, first_str, parts, n_buckets,
-        second=second,
-        second_is_str=second is not None and cols[second] in ("str", "binary"),
-        second_rid=second_rid,
+    # double/float order columns ride the order-preserving int64 key
+    # lane (bits.float_order_keys): sort order matches float <, NaN
+    # sorts above +inf (its key exceeds every finite key), and -0.0
+    # orders just before 0.0 (deterministic; SQL considers them equal)
+    keyed_b, kvts, null_bucket = _bucket_stream(
+        spark, out_dir, cols, parts, order_cols, preds, keep_null_keys=True,
+        second_mode=second_mode, null1_sentinel=sentinel, buckets=buckets,
+        persist=persist,
     )
-    null_bucket = len(splits) + 1  # one past the last range bucket
-    keyed_b, _ = key_rowid_parts(
-        spark, out_dir, order_cols,
-        _preds_to_spec(preds) if preds else None,
-        keep_null_keys=True,
-        float_order_lane=True,
-        post=_bucketizer([cols[c] for c in order_cols], first_str, splits,
-                         null_bucket, second_mode=second_mode,
-                         null1_sentinel=sentinel),
-    )
-    if persist:
-        # the counts action and the sort action both consume the key
-        # stream; persisting the narrow (lanes, rid) rows (~tens of
-        # bytes/row — a few % of table size, same order as the shuffle
-        # files Spark's own orderBy writes) halves the decode work.
-        # Evicted/rebuilt transparently under memory pressure.
-        from pyspark import StorageLevel
-
-        release_key_caches()  # at most one outstanding per session
-        keyed_b = keyed_b.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(keyed_b)
 
     # ---- 3) per-bucket counts → global rank offsets ----
-    counts = {
-        r["bkt"]: r["cnt"]
-        for r in keyed_b.groupBy("bkt").agg(F.count("*").alias("cnt")).collect()
-    }
+    counts = _bucket_counts(keyed_b, [])[()]
     order = sorted(counts)  # asc: range buckets then null bucket (last)
     if mixed:
         if dirs[0]:
@@ -2423,6 +2326,7 @@ def orderby_export(
     lanes_cover = all(
         c in lane_of and cols[c] not in ("double", "float") for c in project
     )
+    keep = sorted({lane_of[c] for c in project}) if lanes_cover else ["rid"]
 
     def sort_bucket(key: tuple, tbl: pa.Table) -> pa.Table:
         b = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
@@ -2432,42 +2336,32 @@ def orderby_export(
         pos = pa.array(
             offsets[b] + np.arange(tbl.num_rows, dtype=np.int64)
         )
-        keep = (sorted({lane_of[c] for c in project})
-                if lanes_cover else ["rid"])
         return pa.Table.from_arrays(
             [pos] + [tbl.column(k).take(idx) for k in keep],
             names=["pos"] + keep,
         )
 
+    keep_ddl = _lanes_ddl(
+        keep, [k != "rid" and kvts[int(k[1:])] in ("str", "binary") for k in keep]
+    )
+    sorted_rows = keyed_b.groupBy("bkt").applyInArrow(
+        sort_bucket, schema=f"pos long, {keep_ddl}"
+    )
     if lanes_cover:
-        need = sorted({lane_of[c] for c in project})
-        lane_ddl = ", ".join(
-            f"{k} {'binary' if cols[order_cols[int(k[1:])]] in ('str', 'binary') else 'long'}"
-            for k in need
-        )
-        sorted_rows = keyed_b.groupBy("bkt").applyInArrow(
-            sort_bucket, schema=f"pos long, {lane_ddl}"
-        )
         result = sorted_rows.select(
             "pos",
             *[_group_key_out(F.col(lane_of[c]), cols[c]).alias(c)
               for c in project],
         )
-        if persist:
-            result._arcade_key_cache = keyed_b
-        return result
-
-    sorted_ids = keyed_b.groupBy("bkt").applyInArrow(
-        sort_bucket, schema="pos long, rid long"
-    )
-
-    # ---- 4) late-materialize the projection at the sorted rowids ----
-    # the global rank rides the attach shuffle with its rid: joining
-    # it back would add two exchanges + a sort-merge join AND execute
-    # the bucket-sort subtree twice
-    sorted_ids, ln = _clear_lanes(sorted_ids, project)
-    mat = attach_rowids_parts(spark, out_dir, sorted_ids, ln["rid"], list(project))
-    result = mat.select(F.col(ln["pos"]).alias("pos"), *project)
+    else:
+        # ---- 4) late-materialize the projection at the sorted rowids ----
+        # the global rank rides the attach shuffle with its rid: joining
+        # it back would add two exchanges + a sort-merge join AND execute
+        # the bucket-sort subtree twice
+        sorted_ids, ln = _clear_lanes(sorted_rows, project)
+        mat = attach_rowids_parts(spark, out_dir, sorted_ids, ln["rid"],
+                                  list(project))
+        result = mat.select(F.col(ln["pos"]).alias("pos"), *project)
     if persist:
         # handle kept for callers that release eagerly (bench.py);
         # otherwise the NEXT sort/rank call — or release_key_caches() —
@@ -4630,19 +4524,14 @@ def window_shift(
     )
     v_ddl = _lane_ddl(v_bin, v_float)
 
-    def _restore(col, vt):
-        if vt in ("double", "float"):
-            return col.cast(spark_type_for(vt))
-        return _group_key_out(col, vt)
-
     out_cols = [
         *_keys_out(knames, kvts, key_cols),
         *[
-            _restore(F.col(on), vt).alias(name)
+            _group_key_out(F.col(on), vt).alias(name)
             for on, vt, name in zip(onames, kvts[g:g + m], order_cols)
         ],
-        _restore(F.col("v"), kvts[g + m]).alias(val_col),
-        _restore(F.col("s"), kvts[g + m]).alias("shifted"),
+        _group_key_out(F.col("v"), kvts[g + m]).alias(val_col),
+        _group_key_out(F.col("s"), kvts[g + m]).alias("shifted"),
     ]
     # range slices need arithmetic on the first order lane: not binary,
     # and not float (its order-key lane spans ~2^64); the carry must

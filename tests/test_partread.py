@@ -249,6 +249,42 @@ def test_column_topk_desc_asc_int_and_float(spark, table):
         assert sorted(got, reverse=True) == pytest.approx(want)
 
 
+def test_column_topk_reads_each_row_group_once(spark, tmp_path_factory, monkeypatch):
+    """The per-part top-k reads every row group of its column file at
+    most once, and the partials merge to the exact top k."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from arcade_spark.corpus import write_corpus
+    from arcade_spark.partread import _ColFile, _topk_part, load_manifest
+
+    root = tmp_path_factory.mktemp("topk_reads")
+    corpus = write_corpus(str(root / "c.parquet"), n_rows=8000)
+    out = str(root / "enc")
+    encode_job(spark, spark.read.parquet(corpus), out, num_parts=3, block_rows=128)
+    ts = pq.read_table(corpus, columns=["warc_ts"]).column(0)
+    ref = sorted(ts.cast(pa.int64()).drop_null().to_pylist())
+    reads = []
+    real = _ColFile.read
+
+    def counted(self, rows):
+        first = min(int(r[0]) for r in rows.values())
+        reads.append((self.path, int(np.searchsorted(self.rg_off, first, side="right"))))
+        return real(self, rows)
+
+    monkeypatch.setattr(_ColFile, "read", counted)
+    cols, parts = load_manifest(out)
+    vt = dict(cols)["warc_ts"]
+    for k, desc in ((2000, True), (2000, False), (10, True)):
+        reads.clear()
+        best = np.concatenate([
+            _topk_part(out, pid, "warc_ts", vt, k, desc) for pid, _ in parts
+        ])
+        assert reads and len(reads) == len(set(reads)), (k, desc, reads)
+        want = ref[-k:][::-1] if desc else ref[:k]
+        assert sorted(best.tolist(), reverse=desc)[:k] == want
+
+
 def test_column_agg_with_nulls(spark, tmp_path_factory):
     """sum/avg exclude nulls; count(*) includes them (SQL semantics)."""
     import pyspark.sql.types as T

@@ -1,6 +1,6 @@
-"""Plan-shape guard for the late-materializing operators, the
-group-by family (grand totals and groupjoins included) and the
-keyed-timeline operators: in the AQE final
+"""Plan-shape guard for the late-materializing operators, the rank
+values, the group-by family (grand totals and groupjoins included) and
+the keyed-timeline operators: in the AQE final
 plan no stage chains two Python execs (each task would need two Python
 workers — past the idle-worker cap every such task re-forks and
 re-imports one), nothing is read back from a cache, no join is keyed on ``row_id`` (projections attach by
@@ -15,11 +15,13 @@ from arcade_spark.encode import encode_job
 from arcade_spark.planshape import stages
 from arcade_spark.readops import (
     column_agg,
+    column_rank_values,
     distinct_count_approx,
     filter_agg,
     filter_group_by,
     group_by,
     group_count,
+    group_rank_values,
     group_sum,
     join_asof,
     join_band,
@@ -67,6 +69,10 @@ OPS = {
     # hint for its two passes, not part of the attach under test
     "orderby_export": lambda s, oa, ob: orderby_export(
         s, oa, ["ts"], ["tag", "id"], persist=False),
+    "column_rank_values": lambda s, oa, ob: column_rank_values(
+        s, oa, "ts", quantiles=[0.5, 0.99], persist=False),
+    "group_rank_values": lambda s, oa, ob: group_rank_values(
+        s, oa, ["tag"], "ts", quantiles=[0.5, 0.99], persist=False),
     "group_count": lambda s, oa, ob: group_count(s, oa, "tag"),
     "group_sum": lambda s, oa, ob: group_sum(s, oa, "tag", "ts"),
     "group_by": lambda s, oa, ob: group_by(s, oa, ["tag", "fk"], "ts"),

@@ -57,7 +57,7 @@ def test_column_topk_str_desc_asc(spark, str_table):
 def test_column_topk_str_prunes_blobs(spark, tmp_path_factory):
     """On a column sorted by the order key, the top-k lives in few
     blocks — the probe shows pruned blocks' blobs were never fetched."""
-    from arcade_spark.partread import _ColFile, _topk_str_part, load_manifest
+    from arcade_spark.partread import _ColFile, _topk_part, load_manifest
 
     rows = [(f"u{i:05d}", f"v{i:05d}") for i in range(4000)]
     src = spark.createDataFrame(rows, "url string, s string")
@@ -68,7 +68,7 @@ def test_column_topk_str_prunes_blobs(spark, tmp_path_factory):
     nb = _ColFile(out, pid, "s", "str").cm.n
     assert nb >= 20
     probe: dict = {}
-    best = _topk_str_part(out, pid, "s", 10, True, probe=probe)
+    best = _topk_part(out, pid, "s", "str", 10, True, probe=probe)
     assert [b.decode() for b in reversed(best)] == [
         f"v{i:05d}" for i in range(3999, 3989, -1)
     ]
@@ -76,7 +76,7 @@ def test_column_topk_str_prunes_blobs(spark, tmp_path_factory):
     # threshold; the vast majority of blobs are never requested
     assert len(probe["blob_rows"]) <= 2
     probe_asc: dict = {}
-    best = _topk_str_part(out, pid, "s", 10, False, probe=probe_asc)
+    best = _topk_part(out, pid, "s", "str", 10, False, probe=probe_asc)
     assert [b.decode() for b in best] == [f"v{i:05d}" for i in range(10)]
     assert len(probe_asc["blob_rows"]) <= 2
 

@@ -21,6 +21,14 @@ fact table and two small dimensions, one line per operator in the same
 form. Run only that section with
 
     python tools/show_plans.py agg
+
+The rank section runs the rank and sort family (``column_rank_values``
+over an int, a str and a double column, ``group_rank_values`` with 1
+and 2 keys, ``orderby_export`` on 1 column, on 2 columns that cover
+the projection, and with mixed directions) on the same fact table, one
+line per run in the same form. Run only that section with
+
+    python tools/show_plans.py rank
 """
 
 from __future__ import annotations
@@ -47,6 +55,9 @@ def main() -> None:
     if sys.argv[1:] == ["agg"]:
         show_agg(spark, tempfile.mkdtemp(prefix="plans_agg"))
         return
+    if sys.argv[1:] == ["rank"]:
+        show_rank(spark, tempfile.mkdtemp(prefix="plans_rank"))
+        return
     corpus = write_corpus_files("/tmp/plans_corpus", 20000, 4)
 
     print("=== shuffle-mode encode plan (single exchange) ===")
@@ -61,6 +72,7 @@ def main() -> None:
     show_attach_joins(spark, tempfile.mkdtemp(prefix="plans_joins"))
     show_keyed(spark, tempfile.mkdtemp(prefix="plans_keyed"))
     show_agg(spark, tempfile.mkdtemp(prefix="plans_agg"))
+    show_rank(spark, tempfile.mkdtemp(prefix="plans_rank"))
 
 
 def _tables(spark, root: str) -> tuple[str, str]:
@@ -159,22 +171,49 @@ def show_keyed(spark, root: str) -> None:
         release_key_caches()
 
 
-def show_agg(spark, root: str) -> None:
-    """Run the aggregate operators on a 20k-row fact table (4 parts)
-    joined to a 60-row dimension and a 5-row second hop, and print each
-    run's job count and per-stage Python depth."""
+def _fact(spark, root: str) -> str:
+    """Encode the 20k-row, 4-part, 1024-row-block fact table."""
     from arcade_spark.encode import encode_job
-    from arcade_spark.planshape import stages
-    from arcade_spark.readops import (
-        column_agg, filter_agg, filter_group_by_multi, filter_group_by_sets,
-        join_group_by, join_group_by_chain, pivot_table, release_key_caches,
-    )
 
     fact = spark.createDataFrame(
         [(i, i % 50, f"q{i % 9}", i % 1000, (i % 700) * 0.25)
          for i in range(20000)],
         "id long, fk long, tag string, x long, v double",
     )
+    f = os.path.join(root, "f")
+    encode_job(spark, fact, f, num_parts=4, block_rows=1024, order_col="id")
+    return f
+
+
+def _print_runs(spark, runs: dict) -> None:
+    """Run each operator and print its job count and per-stage Python
+    depth (or the exception an unsupported operator raises)."""
+    from arcade_spark.planshape import stages
+    from arcade_spark.readops import release_key_caches
+
+    for name, run in runs.items():
+        try:
+            df, jobs = _run(spark, name.replace(" ", "-"), run)
+        except Exception as e:  # an operator this tree does not support
+            spark.sparkContext.setJobGroup(None, None)
+            print(f"{name}: raises {type(e).__name__}: {str(e).splitlines()[0]}")
+            continue
+        depths = [st["python_depth"] for st in stages(df)]
+        print(f"{name}: jobs {jobs}, rows {df.count()}, stage depths {depths}")
+        release_key_caches()
+
+
+def show_agg(spark, root: str) -> None:
+    """Run the aggregate operators on a 20k-row fact table (4 parts)
+    joined to a 60-row dimension and a 5-row second hop, and print each
+    run's job count and per-stage Python depth."""
+    from arcade_spark.encode import encode_job
+    from arcade_spark.readops import (
+        column_agg, filter_agg, filter_group_by_multi, filter_group_by_sets,
+        join_group_by, join_group_by_chain, pivot_table,
+    )
+
+    f = _fact(spark, root)
     dim = spark.createDataFrame(
         [(j, f"g{j % 3}", j % 5, j * 3) for j in range(60)],
         "pk long, grade string, gk long, w long",
@@ -182,8 +221,7 @@ def show_agg(spark, root: str) -> None:
     hop = spark.createDataFrame(
         [(k, f"r{k % 2}") for k in range(5)], "ck long, region string"
     )
-    f, d, c = (os.path.join(root, n) for n in ("f", "d", "c"))
-    encode_job(spark, fact, f, num_parts=4, block_rows=1024, order_col="id")
+    d, c = (os.path.join(root, n) for n in ("d", "c"))
     encode_job(spark, dim, d, num_parts=2, block_rows=256, order_col="pk")
     encode_job(spark, hop, c, num_parts=1, block_rows=256, order_col="ck")
     aggs = [("s", "sum", "x"), ("lo", "min", "v"), ("a", "avg", "v"),
@@ -211,16 +249,37 @@ def show_agg(spark, root: str) -> None:
             spark, f, d, c, "fk", "pk", "gk", "ck", aggs, group_c=["region"]),
     }
     print("=== aggregate operators: jobs and per-stage python depth ===")
-    for name, run in runs.items():
-        try:
-            df, jobs = _run(spark, name.replace(" ", "-"), run)
-        except Exception as e:  # an operator this tree does not support
-            spark.sparkContext.setJobGroup(None, None)
-            print(f"{name}: raises {type(e).__name__}: {str(e).splitlines()[0]}")
-            continue
-        depths = [st["python_depth"] for st in stages(df)]
-        print(f"{name}: jobs {jobs}, rows {df.count()}, stage depths {depths}")
-        release_key_caches()
+    _print_runs(spark, runs)
+
+
+def show_rank(spark, root: str) -> None:
+    """Run the rank and sort operators on the 20k-row fact table and
+    print each run's job count and per-stage Python depth."""
+    from arcade_spark.readops import (
+        column_rank_values, group_rank_values, orderby_export,
+    )
+
+    f = _fact(spark, root)
+    runs = {
+        "column_rank_values int ranks": lambda: column_rank_values(
+            spark, f, "x", ranks=[0, 9999, 19999]),
+        "column_rank_values str quantiles": lambda: column_rank_values(
+            spark, f, "tag", quantiles=[0.1, 0.5, 0.9]),
+        "column_rank_values double": lambda: column_rank_values(
+            spark, f, "v", quantiles=[0.5, 0.99]),
+        "group_rank_values 1-key": lambda: group_rank_values(
+            spark, f, ["tag"], "x", quantiles=[0.5, 0.99]),
+        "group_rank_values 2-key": lambda: group_rank_values(
+            spark, f, ["tag", "fk"], "v", ranks=[0, 3]),
+        "orderby_export 1-col": lambda: orderby_export(
+            spark, f, ["x"], ["tag", "id"]),
+        "orderby_export lanes_cover": lambda: orderby_export(
+            spark, f, ["tag", "fk"], ["fk", "tag"]),
+        "orderby_export mixed desc": lambda: orderby_export(
+            spark, f, ["tag", "x"], ["id", "x"], desc=[True, False]),
+    }
+    print("=== rank and sort operators: jobs and per-stage python depth ===")
+    _print_runs(spark, runs)
 
 
 if __name__ == "__main__":
