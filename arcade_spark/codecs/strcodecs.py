@@ -26,6 +26,7 @@ from arcade_spark.bits import (
 from arcade_spark.blocks import StrBlock, object_array_to_strblock
 from arcade_spark.codecs.intcodecs import decode_for_int, encode_for_int
 from arcade_spark.gdict import GlobalDict, GlobalDictDecoder
+from arcade_spark.postpass import zstd_compressed_len
 
 # ------------------------------------------------------- factorization
 
@@ -538,7 +539,7 @@ def decode_fsst(payload, meta) -> StrBlock:
 def estimate_fsst_bytes(block: StrBlock, rounds: int = 0) -> int:
     """Selector estimate: train + encode on a payload sample, scale the
     ratio to the full payload; add lengths + table overhead. The ratio
-    profile (rounds > 0) also applies the zstd post-pass to the sample
+    profile (rounds > 0) also applies the post-pass codec to the sample
     so the comparison against plain (whose estimate is post-aware via
     zstd_sample_ratio) stays apples-to-apples."""
     data = np.frombuffer(block.payload, dtype=np.uint8)
@@ -548,13 +549,7 @@ def estimate_fsst_bytes(block: StrBlock, rounds: int = 0) -> int:
     enc, sym_lens, _sym_bytes = _fsst_encode_stream(sample, rounds)
     if len(sym_lens) == 0:
         return len(data) * 2
-    if rounds > 0:
-        import pyarrow as pa
-
-        z = pa.Codec("zstd", compression_level=1)
-        enc_bytes = len(z.compress(enc.tobytes(), asbytes=True))
-    else:
-        enc_bytes = len(enc)
+    enc_bytes = zstd_compressed_len(enc.tobytes()) if rounds > 0 else len(enc)
     ratio = enc_bytes / len(sample)
     lens_size = len(encode_for_int(block.lengths)[0])
     return int(len(data) * ratio) + lens_size + int(sym_lens.sum()) + len(sym_lens) + 16

@@ -91,6 +91,35 @@ def with_part_id(
     return df.withColumn(_KEY_COL, key).withColumn(_PART_COL, part)
 
 
+def encode_chunk(
+    table, columns: list[tuple[str, str]], gdicts: dict[str, GlobalDict],
+    part_id: int, block_id: int, row_start: int, fsst_rounds: int = 0,
+) -> list[dict]:
+    """One block of rows (``table``, an Arrow table) → its chunk rows,
+    one per ``columns`` entry (name, vtype) in order: the column sliced
+    zero-copy into a block, profiled, encoded (strings against the
+    part's running ``gdicts`` entry), timed, and tagged with its place
+    in the part. Every encode kernel writes its blocks through here."""
+    from arcade_spark.convert import arrow_to_block
+
+    rows = []
+    for name, vtype in columns:
+        t0 = time.monotonic()
+        block = arrow_to_block(table.column(name), vtype)
+        if isinstance(block, StrBlock):
+            gd = gdicts.setdefault(name, GlobalDict())
+            blob, meta = encode_str_block(block, gd, fsst_rounds=fsst_rounds)
+        else:
+            blob, meta = encode_int_block(block, vtype)
+        meta["kernel_ms"] = (time.monotonic() - t0) * 1000.0
+        meta.update(
+            part_id=part_id, block_id=block_id, column=name, vtype=vtype,
+            row_start=row_start, blob=blob,
+        )
+        rows.append(meta)
+    return rows
+
+
 def make_encode_kernel(
     columns: list[tuple[str, str]],
     out_dir: str,
@@ -108,9 +137,6 @@ def make_encode_kernel(
     per completed partition."""
     import pyarrow as pa
 
-    from arcade_spark.convert import arrow_to_block
-    from arcade_spark.manifest import MANIFEST_ARROW_SCHEMA
-
     col_names = [name for name, _ in columns]
 
     def kernel(batches):
@@ -119,34 +145,12 @@ def make_encode_kernel(
         buffer: list[pa.Table] = []
         buffered = 0
         gdicts: dict[str, GlobalDict] = {}
-        block_id = 0
-        row_start = 0
 
         def encode_block(table: pa.Table) -> None:
-            nonlocal block_id, row_start
-            chunk_rows = []
-            n = table.num_rows
-            for name, vtype in columns:
-                t0 = time.monotonic()
-                block = arrow_to_block(table.column(name), vtype)
-                if isinstance(block, StrBlock):
-                    gd = gdicts.setdefault(name, GlobalDict())
-                    blob, meta = encode_str_block(block, gd, fsst_rounds=fsst_rounds)
-                else:
-                    blob, meta = encode_int_block(block, vtype)
-                meta["kernel_ms"] = (time.monotonic() - t0) * 1000.0
-                meta.update(
-                    part_id=cur_part,
-                    block_id=block_id,
-                    column=name,
-                    vtype=vtype,
-                    row_start=row_start,
-                    blob=blob,
-                )
-                chunk_rows.append(meta)
-            writer.write_block(chunk_rows)
-            block_id += 1
-            row_start += n
+            writer.write_block(encode_chunk(
+                table, columns, gdicts, cur_part, writer.n_blocks,
+                writer.n_rows, fsst_rounds,
+            ))
 
         def drain(final: bool) -> None:
             nonlocal buffer, buffered
@@ -161,15 +165,13 @@ def make_encode_kernel(
             buffered = rest.num_rows
 
         def finish_part():
-            nonlocal writer, gdicts, block_id, row_start
+            nonlocal writer, gdicts
             drain(final=True)
             if writer is not None:
                 row = writer.commit()
                 yield pa.RecordBatch.from_pylist([row], schema=MANIFEST_ARROW_SCHEMA)
             writer = None
             gdicts = {}
-            block_id = 0
-            row_start = 0
 
         try:
             for batch in batches:
@@ -336,9 +338,6 @@ def encode_files_job(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from arcade_spark.convert import arrow_to_block
-    from arcade_spark.manifest import MANIFEST_ARROW_SCHEMA
-
     if os.path.isdir(input_path):
         files = sorted(
             os.path.join(input_path, f)
@@ -396,33 +395,13 @@ def encode_files_job(
                                   "salt_buckets": 0, "order_col": "", "source": path},
                     )
                     gdicts: dict[str, GlobalDict] = {}
-                    state = {"block_id": 0, "row_start": 0}
                     try:
                         pf = pq.ParquetFile(path)
                         for rb in pf.iter_batches(batch_size=block_rows):
-                            table = pa.Table.from_batches([rb])
-                            chunk_rows = []
-                            n = table.num_rows
-                            for name, vtype in columns:
-                                t0 = time.monotonic()
-                                block = arrow_to_block(table.column(name), vtype)
-                                if isinstance(block, StrBlock):
-                                    gd = gdicts.setdefault(name, GlobalDict())
-                                    blob, meta = encode_str_block(
-                                        block, gd, fsst_rounds=fsst_rounds
-                                    )
-                                else:
-                                    blob, meta = encode_int_block(block, vtype)
-                                meta["kernel_ms"] = (time.monotonic() - t0) * 1000.0
-                                meta.update(
-                                    part_id=pid, block_id=state["block_id"],
-                                    column=name, vtype=vtype,
-                                    row_start=state["row_start"], blob=blob,
-                                )
-                                chunk_rows.append(meta)
-                            writer.write_block(chunk_rows)
-                            state["block_id"] += 1
-                            state["row_start"] += n
+                            writer.write_block(encode_chunk(
+                                pa.Table.from_batches([rb]), columns, gdicts,
+                                pid, writer.n_blocks, writer.n_rows, fsst_rounds,
+                            ))
                         mrow = writer.commit()
                     except Exception:
                         writer.abort()

@@ -1125,12 +1125,12 @@ _DEC = "decimal(38,0)"
 
 
 def _checked_long(x: str, what: str) -> str:
-    """SQL: the decimal(38,0) groupjoin sum ``x`` back to BIGINT
-    through a cast that RAISES past the 2^62 bar — plain int64 products
-    would wrap silently with spark.sql.ansi.enabled=false. An output
+    """SQL: the decimal(38,0) sum ``x`` back to BIGINT through a cast
+    that RAISES past the 2^62 bar — plain int64 sums and products would
+    wrap silently with spark.sql.ansi.enabled=false. An output
     expression over the tiny merged frame: no extra job."""
-    msg = (f"groupjoin {what} exceeds 2^62 — the join aggregates' int64 "
-           "contract is violated; reduce multiplicities or pre-aggregate")
+    msg = (f"aggregate {what} exceeds 2^62 — the aggregates' int64 "
+           "contract is violated; narrow the groups or pre-aggregate")
     msg = msg.replace("\\", "\\\\").replace("'", "\\'")
     return (f"CASE WHEN abs({x}) >= CAST({2 ** 62} AS {_DEC}) "
             f"THEN raise_error('{msg}') ELSE CAST({x} AS BIGINT) END")
@@ -1147,9 +1147,10 @@ def _multi_agg_exprs(
     by); sum/sumprod/avg as one IEEE division of an exact integer by
     the spec's scale divisor, NULL over zero valid rows. ``total_row``
     zero-fills COUNTs of the no-keys grand-total row (Spark's global
-    agg over an empty relation sums to null; SQL's COUNT is 0).
-    ``checked``: the lanes carry decimal(38,0) groupjoin products, and
-    every sum and count returns to long through ``_checked_long``.
+    agg over an empty relation sums to null; SQL's COUNT is 0). Every
+    sum folds its int64 partials as decimal(38,0) and returns to long
+    through ``_checked_long``, ANSI mode or not. ``checked``: the count
+    lanes carry decimal(38,0) groupjoin products and return the same way.
     Each spec is one SQL expression (one driver→JVM call, where a
     chain of Column calls costs one per node)."""
     out = []
@@ -1167,8 +1168,7 @@ def _multi_agg_exprs(
                 out.append(_group_key_out(F.expr(x), sp["vt"]).alias(name))
                 continue
         else:
-            x = _checked_long(f"sum(s{i})", f"sum {name!r}") if checked \
-                else f"sum(s{i})"
+            x = _checked_long(f"sum(CAST(s{i} AS {_DEC}))", f"sum {name!r}")
             x = f"CASE WHEN ({c}) > 0 THEN {x} END"
         if div != 1:
             x = f"CAST({x} AS DOUBLE) / {div}D"
@@ -1200,15 +1200,16 @@ def _side_merge(
     mult: str = "sum(c)",
 ) -> DataFrame:
     """Partials (or a hop's rows) → one row per distinct ``keys``
-    tuple: per non-count spec its ``s{i}`` (summed, or min/max) and
-    ``c{i}`` lanes, and the multiplicity ``c`` (the SQL aggregate
-    ``mult``). Merging before a join keeps it distinct×distinct even
-    under hot keys."""
+    tuple: per non-count spec its ``s{i}`` (summed as decimal(38,0), or
+    min/max) and ``c{i}`` lanes, and the multiplicity ``c`` (the SQL
+    aggregate ``mult``). Merging before a join keeps it
+    distinct×distinct even under hot keys."""
     lanes = []
     for i, sp in enumerate(cspecs):
         if sp["kind"] != "count":
-            fold = sp["kind"] if sp["kind"] in ("min", "max") else "sum"
-            lanes += [f"{fold}(s{i}) AS s{i}", f"sum(c{i}) AS c{i}"]
+            fold = (f"{sp['kind']}(s{i})" if sp["kind"] in ("min", "max")
+                    else f"sum(CAST(s{i} AS {_DEC}))")
+            lanes += [f"{fold} AS s{i}", f"sum(c{i}) AS c{i}"]
     return partial.groupBy(*keys).agg(
         *[F.expr(x) for x in lanes + [f"{mult} AS c"]]
     )

@@ -179,6 +179,42 @@ def test_dict_global_differential():
         assert block_values(out) == vals
 
 
+def test_blocks_posted_at_another_zstd_level_still_decode(monkeypatch):
+    """The post-pass level is not stored: blocks written with a level-1
+    codec (older tables) decode bit-identically under the current one,
+    through the full, the positional and the int decoders."""
+    import pyarrow as pa
+
+    from arcade_spark import postpass
+    from arcade_spark.core import decode_str_positions
+
+    r = np.random.default_rng(5)
+    words = [f"w{i}".encode() for i in range(40)]
+    strs = [b" ".join(words[j] for j in r.integers(0, 40, 12)) + b"%d" % i
+            for i in range(3000)]
+    pool = np.append(r.integers(-(2 ** 62), 2 ** 62, 14), [-(2 ** 63), 2 ** 63 - 1])
+    ints = pool[r.integers(0, 16, 3000)].astype(np.int64)
+    str_blk, int_blk = make_block(strs), IntBlock(values=ints)
+
+    def encode():
+        sb, sm = encode_str_block(str_blk, GlobalDict())
+        ib, im = encode_int_block(int_blk)
+        assert (sm["codec"], sm["post"]) == ("plain", "zstd")
+        assert (im["codec"], im["post"]) == ("plain_int", "zstd")
+        return sb, sm, ib, im
+
+    current = encode()
+    monkeypatch.setitem(postpass._CODECS, "zstd", pa.Codec("zstd", compression_level=1))
+    sb, sm, ib, im = encode()
+    monkeypatch.undo()
+    assert (sb, ib) != current[::2]  # the old level wrote other bytes
+    assert block_values(decode_str_block(sb, sm, GlobalDictDecoder())) == strs
+    pos = np.array([0, 7, 1500, 2999])
+    got = decode_str_positions(sb, sm, pos, GlobalDictDecoder())
+    assert block_values(got) == [strs[i] for i in pos]
+    assert np.array_equal(decode_int_block(ib, im).values, ints)
+
+
 def test_nulls_roundtrip():
     vals = np.array([b"a", None, b"b", None, b""] * 200, dtype=object)
     blk = object_array_to_strblock(vals)

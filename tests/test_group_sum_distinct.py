@@ -734,3 +734,29 @@ def test_block_sum_past_2_62_raises(spark, tmp_path, op):
     }[op]
     with pytest.raises(Exception, match="multi-agg sum overflows int64"):
         run().collect()
+
+
+@pytest.mark.parametrize("op", ["group_sum", "column_agg"])
+def test_merged_sum_past_2_62_raises_without_ansi(spark, tmp_path, op):
+    """Sixteen rows of 2^60 + 3 in eight two-row blocks: every block sum
+    passes the kernel's per-block bound, but the total is 2^64 + 48.
+    With spark.sql.ansi.enabled=false an int64 merge of the partials
+    wraps to 48 silently; the decimal(38,0) merge and its checked cast
+    must raise instead, grouped and global."""
+    from arcade_spark import readops
+
+    rows = [(f"u{i:02d}", "g", 2 ** 60 + 3) for i in range(16)]
+    src = spark.createDataFrame(rows, "url string, g string, v long")
+    out = str(tmp_path / "enc")
+    encode_job(spark, src, out, num_parts=1, block_rows=2)
+    run = {
+        "group_sum": lambda: readops.group_sum(spark, out, "g", "v"),
+        "column_agg": lambda: readops.column_agg(spark, out, "v"),
+    }[op]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(Exception, match="exceeds 2\\^62"):
+            run().collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

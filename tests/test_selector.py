@@ -52,12 +52,28 @@ def test_ratio_above_080_forces_plain_or_fsst_and_reset():
 
 
 def test_ratio_below_080_allows_dict():
-    # 0.79 distinct ratio
+    """ARCADE's plain rule (writer.cpp:63) on both sides of the 0.80
+    edge, same value shape. At 0.79 distinct the dictionary path runs
+    (a dict_local estimate exists) and the layer-3 tournament picks its
+    smallest estimate — which may be plain. At 0.81 the rule skips the
+    dictionaries (no estimate for them) and resets the running dict."""
     n = 4000
-    uniq = int(n * 0.79)
-    vals = [f"{i:06d}".encode() for i in range(uniq)] + [b"000000"] * (n - uniq)
-    d, *_ = decide(vals)
-    assert d.codec in ("dict_local", "dict_global", "rle_str", "fsst")
+
+    def block(ratio):
+        uniq = int(n * ratio)
+        return [f"{i:06d}".encode() for i in range(uniq)] + [b"000000"] * (n - uniq)
+
+    d, _, _, stats = decide(block(0.79))
+    assert stats.distinct_ratio == pytest.approx(0.79)
+    assert "dict_local" in d.estimates
+    tournament = {k: d.estimates[k] for k in ("dict_local", "rle_str", "fsst", "plain")}
+    assert d.estimates[d.codec] == min(tournament.values()), d.estimates
+
+    d, _, _, stats = decide(block(0.81))
+    assert stats.distinct_ratio == pytest.approx(0.81)
+    assert not {"dict_local", "dict_global"} & set(d.estimates), d.estimates
+    assert d.codec in ("plain", "fsst")
+    assert d.reset_before
 
 
 def test_unique_urls_pick_compressive_codec():

@@ -29,15 +29,25 @@ the projection, and with mixed directions) on the same fact table, one
 line per run in the same form. Run only that section with
 
     python tools/show_plans.py rank
+
+Every corpus and table it writes is removed when it exits.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_ROOTS: list[str] = []  # every directory a run writes, removed on exit
+
+
+def _root(prefix: str) -> str:
+    _ROOTS.append(tempfile.mkdtemp(prefix=prefix))
+    return _ROOTS[-1]
 
 
 def main() -> None:
@@ -50,15 +60,16 @@ def main() -> None:
 
     spark = get_spark(app="show-plans", cores=4)
     if sys.argv[1:] == ["keyed"]:
-        show_keyed(spark, tempfile.mkdtemp(prefix="plans_keyed"))
+        show_keyed(spark, _root("plans_keyed"))
         return
     if sys.argv[1:] == ["agg"]:
-        show_agg(spark, tempfile.mkdtemp(prefix="plans_agg"))
+        show_agg(spark, _root("plans_agg"))
         return
     if sys.argv[1:] == ["rank"]:
-        show_rank(spark, tempfile.mkdtemp(prefix="plans_rank"))
+        show_rank(spark, _root("plans_rank"))
         return
-    corpus = write_corpus_files("/tmp/plans_corpus", 20000, 4)
+    _ROOTS.append("/tmp/plans_corpus")
+    corpus = write_corpus_files(_ROOTS[-1], 20000, 4)
 
     print("=== shuffle-mode encode plan (single exchange) ===")
     src = spark.read.parquet(corpus)
@@ -69,10 +80,10 @@ def main() -> None:
     print("=== minhash-LSH plan (broadcast joins) ===")
     dedup_minhash_lsh(spark, "/root/testdata/sf0.001").explain("formatted")
 
-    show_attach_joins(spark, tempfile.mkdtemp(prefix="plans_joins"))
-    show_keyed(spark, tempfile.mkdtemp(prefix="plans_keyed"))
-    show_agg(spark, tempfile.mkdtemp(prefix="plans_agg"))
-    show_rank(spark, tempfile.mkdtemp(prefix="plans_rank"))
+    show_attach_joins(spark, _root("plans_joins"))
+    show_keyed(spark, _root("plans_keyed"))
+    show_agg(spark, _root("plans_agg"))
+    show_rank(spark, _root("plans_rank"))
 
 
 def _tables(spark, root: str) -> tuple[str, str]:
@@ -283,4 +294,8 @@ def show_rank(spark, root: str) -> None:
 
 
 if __name__ == "__main__":
-    main()
+    try:
+        main()
+    finally:
+        for d in _ROOTS:
+            shutil.rmtree(d, ignore_errors=True)
