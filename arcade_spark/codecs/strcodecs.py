@@ -25,7 +25,7 @@ from arcade_spark.bits import (
 )
 from arcade_spark.blocks import StrBlock, object_array_to_strblock
 from arcade_spark.codecs.intcodecs import decode_for_int, encode_for_int
-from arcade_spark.gdict import GlobalDict, GlobalDictDecoder
+from arcade_spark.gdict import GlobalDict
 from arcade_spark.postpass import zstd_compressed_len
 
 # ------------------------------------------------------- factorization
@@ -65,6 +65,11 @@ def factorize_block(block: StrBlock) -> StrFactor:
     if block.validity is not None:
         # codecs never see nulls: sentinel b'' under null slots
         arr = pc.fill_null(arr, pa.scalar(b"", type=pa.large_binary()))
+    return factorize_arrow(arr)
+
+
+def factorize_arrow(arr: pa.Array) -> StrFactor:
+    """Codes of a null-free binary array into its sorted distinct set."""
     d = pc.dictionary_encode(arr)
     codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     uniq = d.dictionary
@@ -90,11 +95,19 @@ def encode_plain(block: StrBlock) -> tuple[bytes, dict]:
     return payload, {"codec": "plain", "n_values": block.n}
 
 
-def decode_plain(payload, meta) -> StrBlock:
+def _rows(lens_sec, data, n: int) -> pa.Array:
+    """The ``n`` rows over FOR-packed lengths and their concatenated
+    bytes, as one large_binary array (zero-copy over ``data``)."""
+    offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(decode_for_int(lens_sec, {"n_values": n}), out=offs[1:])
+    return pa.Array.from_buffers(
+        pa.large_binary(), n, [None, pa.py_buffer(offs), pa.py_buffer(data)], null_count=0
+    )
+
+
+def decode_plain(payload, n: int) -> pa.Array:
     lens_sec, data_sec = unpack_sections(payload)
-    n = meta["n_values"]
-    lengths = decode_for_int(lens_sec, {"n_values": n})
-    return StrBlock(lengths=lengths, payload=bytes(data_sec))
+    return _rows(lens_sec, data_sec, n)
 
 
 def _serialize_values(values) -> bytes:
@@ -112,27 +125,11 @@ def _serialize_values(values) -> bytes:
     return struct.pack("<I", blk.n) + payload
 
 
-def _deserialize_values(buf) -> np.ndarray:
+def decode_values(buf) -> pa.Array:
+    """A serialized value list (a dictionary segment) as large_binary."""
     mv = memoryview(buf)
     (n,) = struct.unpack_from("<I", mv, 0)
-    blk = decode_plain(mv[4:], {"n_values": n})
-    return blk.to_object_array()
-
-
-def _deserialize_values_arrow(buf) -> pa.Array:
-    mv = memoryview(buf)
-    (n,) = struct.unpack_from("<I", mv, 0)
-    blk = decode_plain(mv[4:], {"n_values": n})
-    return blk.to_arrow(binary=True)
-
-
-def _take_to_block(values: pa.Array | pa.ChunkedArray, codes: np.ndarray) -> StrBlock:
-    from arcade_spark.blocks import strblock_from_arrow
-
-    taken = pc.take(values, pa.array(codes, type=pa.int64()))
-    if isinstance(taken, pa.ChunkedArray):
-        taken = taken.combine_chunks()
-    return strblock_from_arrow(taken)
+    return decode_plain(mv[4:], n)
 
 
 # --------------------------------------------------------- dict_local
@@ -155,13 +152,6 @@ def encode_dict_local(block: StrBlock, fact: StrFactor) -> tuple[bytes, dict]:
         "code_width": w,
         "seg": _serialize_values(fact.uniques_arrow),
     }
-
-
-def decode_dict_local(payload, meta) -> StrBlock:
-    uniques = _deserialize_values_arrow(meta["seg"])
-    n = meta["n_values"]
-    codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-    return _take_to_block(uniques, codes)
 
 
 # -------------------------------------------------------- dict_global
@@ -194,19 +184,6 @@ def encode_dict_global(
         "gdict_epoch": gdict.epoch,
         "seg": dict_sec,
     }
-
-
-def decode_dict_global(payload, meta, gdec: GlobalDictDecoder) -> StrBlock:
-    segment = _deserialize_values_arrow(meta["seg"])
-    if meta.get("global_start", len(gdec)) != len(gdec):
-        raise ValueError(
-            f"global dict replay out of sync: expected start {len(gdec)}, "
-            f"chunk says {meta.get('global_start')}"
-        )
-    gdec.append(segment)
-    n = meta["n_values"]
-    codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-    return gdec.take_block(codes)
 
 
 # ------------------------------------------------------------- rle_str
@@ -243,14 +220,13 @@ def encode_rle_str(block: StrBlock, fact: StrFactor) -> tuple[bytes, dict]:
     }
 
 
-def decode_rle_str(payload, meta) -> StrBlock:
+def decode_rle_str(payload, meta) -> tuple[np.ndarray, pa.Array]:
+    """(per-row codes, the block's dictionary)."""
     dict_sec, codes_sec, lens_sec = unpack_sections(payload)
-    uniques = _deserialize_values_arrow(dict_sec)
     (nruns,) = struct.unpack_from("<I", codes_sec, 0)
     run_codes = unpack_uints(codes_sec[4:], meta["code_width"], nruns).view(np.int64)
     run_lens = decode_for_int(lens_sec, {"n_values": nruns})
-    codes = np.repeat(run_codes, run_lens)
-    return _take_to_block(uniques, codes)
+    return np.repeat(run_codes, run_lens), decode_values(dict_sec)
 
 
 # ---------------------------------------------------------------- fsst
@@ -526,14 +502,11 @@ def encode_fsst(block: StrBlock, rounds: int = 0) -> tuple[bytes, dict]:
     return payload, {"codec": "fsst", "n_values": block.n, "dict_len": len(sym_lens)}
 
 
-def decode_fsst(payload, meta) -> StrBlock:
+def decode_fsst(payload, n: int) -> pa.Array:
     table_sec, lens_sec, enc_sec = unpack_sections(payload)
     sym_lens, sym_bytes = _deserialize_table(table_sec)
-    n = meta["n_values"]
-    lengths = decode_for_int(lens_sec, {"n_values": n})
-    enc = np.frombuffer(enc_sec, dtype=np.uint8)
-    data = fsst_decompress(enc, sym_lens, sym_bytes)
-    return StrBlock(lengths=lengths, payload=data.tobytes())
+    data = fsst_decompress(np.frombuffer(enc_sec, dtype=np.uint8), sym_lens, sym_bytes)
+    return _rows(lens_sec, data, n)
 
 
 def estimate_fsst_bytes(block: StrBlock, rounds: int = 0) -> int:
@@ -553,3 +526,27 @@ def estimate_fsst_bytes(block: StrBlock, rounds: int = 0) -> int:
     ratio = enc_bytes / len(sample)
     lens_size = len(encode_for_int(block.lengths)[0])
     return int(len(data) * ratio) + lens_size + int(sym_lens.sum()) + len(sym_lens) + 16
+
+
+# ------------------------------------------------------ the block view
+
+
+def decode_str_payload(payload, meta) -> tuple[np.ndarray | None, pa.Array | None]:
+    """``(codes, entries)`` of one string payload (post-pass already
+    undone) — the only reader of the five payload layouts. ``codes`` is
+    int64 row → entry index, or None for plain/fsst, whose entries are
+    the rows themselves; ``entries`` is the block's own dictionary (the
+    rle_str uniques, the dict_local segment) or None for dict_global,
+    whose codes index the running dictionary (``core.str_codes``).
+    Null rows hold b'' sentinels; validity lives outside the payload."""
+    codec, n = meta["codec"], meta["n_values"]
+    if codec == "plain":
+        return None, decode_plain(payload, n)
+    if codec == "fsst":
+        return None, decode_fsst(payload, n)
+    if codec == "rle_str":
+        return decode_rle_str(payload, meta)
+    if codec not in ("dict_local", "dict_global"):  # pragma: no cover
+        raise ValueError(codec)
+    codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
+    return codes, (decode_values(meta["seg"]) if codec == "dict_local" else None)

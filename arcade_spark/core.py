@@ -16,7 +16,7 @@ from typing import Any
 import numpy as np
 
 from arcade_spark.bits import pack_sections, pack_validity, unpack_sections, unpack_validity
-from arcade_spark.blocks import IntBlock, StrBlock
+from arcade_spark.blocks import IntBlock, StrBlock, strblock_from_arrow
 from arcade_spark.codecs.intcodecs import INT_DECODERS, INT_ENCODERS
 from arcade_spark.codecs import strcodecs as sc
 from arcade_spark.gdict import GlobalDict, GlobalDictDecoder
@@ -110,45 +110,52 @@ def encode_str_block(
     return blob, meta
 
 
-def decode_str_block(blob, meta: dict[str, Any], gdec: GlobalDictDecoder) -> StrBlock:
+def str_codes(blob, meta: dict[str, Any], gdec: GlobalDictDecoder):
+    """The one view of a string block: ``(codes, entries, validity)``.
+    ``entries`` is the Arrow array ``codes`` (int64 per row) index — the
+    block's dictionary (dict_local, rle_str) or the running dictionary
+    (dict_global, ``gdec.entries``); plain/fsst blocks have no codes
+    (None) and their entries are the rows. Null rows hold b'' entries
+    and are False in ``validity`` (None = all valid). Advances ``gdec``
+    exactly as a full decode does (``replay_str_block``). Every string
+    decode, predicate and group-by reads blocks through here."""
     validity_sec, payload = unpack_sections(blob)
-    payload = unpost(payload, meta.get("post"))
-    validity = unpack_validity(validity_sec, meta["n_values"])
-    codec = meta["codec"]
+    codes, entries = sc.decode_str_payload(unpost(payload, meta.get("post")), meta)
+    replay_str_block(meta, gdec, entries)
+    if entries is None:
+        entries = gdec.entries
+    return codes, entries, unpack_validity(validity_sec, meta["n_values"])
 
-    if meta.get("gdict_reset"):
-        gdec.reset()
 
-    if codec == "plain":
-        out = sc.decode_plain(payload, meta)
-    elif codec == "fsst":
-        out = sc.decode_fsst(payload, meta)
-    elif codec == "rle_str":
-        out = sc.decode_rle_str(payload, meta)
-    elif codec == "dict_local":
-        out = sc.decode_dict_local(payload, meta)
-        if meta.get("gdict_seed"):
-            gdec.append(sc._deserialize_values_arrow(meta["seg"]))
-    elif codec == "dict_global":
-        out = sc.decode_dict_global(payload, meta, gdec)
-    else:  # pragma: no cover
-        raise ValueError(codec)
-
+def decode_str_block(blob, meta: dict[str, Any], gdec: GlobalDictDecoder) -> StrBlock:
+    codes, entries, validity = str_codes(blob, meta, gdec)
+    out = strblock_from_arrow(entries if codes is None else entries.take(codes))
     out.validity = validity
     return out
 
 
-def replay_str_block(meta: dict[str, Any], gdec: GlobalDictDecoder) -> None:
-    """Advance the running-dictionary state without materializing values
-    — used for zone-map-skipped blocks (SURVEY.md §4 O2; the reference
-    resolves skipped blocks' segments via previndex, process.cpp:88-123).
-    Needs only the chunk's ``seg`` (in meta) — the blob never ships for
-    replay-only chunks (FORMAT_REV 6)."""
+def replay_str_block(meta: dict[str, Any], gdec: GlobalDictDecoder, local=None) -> None:
+    """The running-dictionary rule, and its only copy: a reset empties
+    ``gdec``; a dict_global block then appends its segment, which must
+    start at ``len(gdec)`` (its ``global_start``); a seeding dict_local
+    block appends its dictionary (``local`` when already parsed).
+    ``str_codes`` runs it for every read block; zone-pruned blocks run
+    it alone — it needs only the chunk's ``seg``, as the blob never
+    ships for them (FORMAT_REV 6; SURVEY.md §4 O2, the reference
+    resolves skipped blocks' segments via previndex,
+    process.cpp:88-123)."""
     if meta.get("gdict_reset"):
         gdec.reset()
     codec = meta["codec"]
-    if codec == "dict_global" or (codec == "dict_local" and meta.get("gdict_seed")):
-        gdec.append(sc._deserialize_values_arrow(meta["seg"]))
+    if codec == "dict_global":
+        if meta.get("global_start", len(gdec)) != len(gdec):
+            raise ValueError(
+                f"global dict replay out of sync: expected start {len(gdec)}, "
+                f"chunk says {meta.get('global_start')}"
+            )
+        gdec.append(sc.decode_values(meta["seg"]))
+    elif codec == "dict_local" and meta.get("gdict_seed"):
+        gdec.append(sc.decode_values(meta["seg"]) if local is None else local)
 
 
 def encode_int_block(block: IntBlock, vtype: str = "int") -> tuple[bytes, dict[str, Any]]:
@@ -211,83 +218,14 @@ def decode_int_block(blob, meta: dict[str, Any]) -> IntBlock:
 
 
 def decode_str_positions(blob, meta: dict[str, Any], positions, gdec: GlobalDictDecoder):
-    """Late materialization (ARCADE R6, process.cpp:4-180): decode only
-    the requested positions of a string chunk, advancing running-dict
-    state exactly as a full decode would. For dictionary codecs this
-    touches codes[positions] + a dictionary take — never the whole
-    block's payload. Returns a StrBlock of len(positions) (validity
-    applied); ``positions`` must be sorted ascending."""
-    import numpy as np
-    import pyarrow as pa
-
-    from arcade_spark.bits import unpack_uints
-    from arcade_spark.blocks import StrBlock, strblock_from_arrow
-    from arcade_spark.codecs import strcodecs as sc
-
+    """Late materialization (ARCADE R6, process.cpp:4-180): the rows at
+    ``positions`` (any order, repeats allowed) of a string block,
+    advancing running-dict state exactly as a full decode would. For
+    dictionary codecs this takes codes[positions] from the entries; for
+    plain/fsst it takes the byte slices of those rows. Returns a
+    StrBlock of len(positions) with validity applied."""
+    codes, entries, validity = str_codes(blob, meta, gdec)
     pos = np.asarray(positions, dtype=np.int64)
-    uniq = np.unique(pos)
-    if len(uniq) < len(pos):
-        # duplicate positions (e.g. random_access with repeated row
-        # ids): the plain/fsst keep-mask below would keep one payload
-        # copy while duplicating lengths — decode the unique set once
-        # (single state advance), then re-expand by take
-        inv = np.searchsorted(uniq, pos)
-        blk = decode_str_positions(blob, meta, uniq, gdec)
-        arr = blk.to_arrow(binary=True).take(pa.array(inv, type=pa.int64()))
-        return strblock_from_arrow(arr)
-
-    validity_sec, payload = unpack_sections(blob)
-    payload = unpost(payload, meta.get("post"))
-    validity = unpack_validity(validity_sec, meta["n_values"])
-    codec = meta["codec"]
-    n = meta["n_values"]
-
-    if meta.get("gdict_reset"):
-        gdec.reset()
-
-    if codec == "dict_global":
-        gdec.append(sc._deserialize_values_arrow(meta["seg"]))
-        codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-        out = gdec.take_block(codes[pos])
-    elif codec == "dict_local":
-        uniques = sc._deserialize_values_arrow(meta["seg"])
-        if meta.get("gdict_seed"):
-            gdec.append(uniques)
-        codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-        out = sc._take_to_block(uniques, codes[pos])
-    elif codec == "rle_str":
-        import struct as _struct
-
-        dict_sec, codes_sec, lens_sec = unpack_sections(payload)
-        uniques = sc._deserialize_values_arrow(dict_sec)
-        (nruns,) = _struct.unpack_from("<I", codes_sec, 0)
-        run_codes = unpack_uints(codes_sec[4:], meta["code_width"], nruns).view(np.int64)
-        from arcade_spark.codecs.intcodecs import decode_for_int
-
-        run_lens = decode_for_int(lens_sec, {"n_values": nruns})
-        ends = np.cumsum(run_lens)
-        run_of = np.searchsorted(ends, pos, side="right")
-        out = sc._take_to_block(uniques, run_codes[run_of])
-    elif codec == "plain":
-        lens_sec, data_sec = unpack_sections(payload)
-        from arcade_spark.codecs.intcodecs import decode_for_int
-
-        lengths = decode_for_int(lens_sec, {"n_values": n})
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offs[1:])
-        data = np.frombuffer(data_sec, dtype=np.uint8)
-        keep = np.zeros(len(data), dtype=bool)
-        for p in pos:  # len(pos) is small by construction (matches only)
-            keep[offs[p] : offs[p + 1]] = True
-        out = StrBlock(lengths=lengths[pos], payload=data[keep].tobytes())
-    else:  # fsst: payload must be expanded anyway
-        full = sc.decode_fsst(payload, meta)
-        offs = full.offsets()
-        data = np.frombuffer(full.payload, dtype=np.uint8)
-        keep = np.zeros(len(data), dtype=bool)
-        for p in pos:
-            keep[offs[p] : offs[p + 1]] = True
-        out = StrBlock(lengths=full.lengths[pos], payload=data[keep].tobytes())
-
+    out = strblock_from_arrow(entries.take(pos if codes is None else codes[pos]))
     out.validity = validity[pos] if validity is not None else None
     return out

@@ -85,14 +85,16 @@ class GlobalDictDecoder:
     """Decode-side replay: append each block's diff segment in block
     order (the reader rebuilds the running dict incrementally as it
     pages — reader.cpp:146-195, process.cpp:466-471). Segments are kept
-    as Arrow chunks; materialization is a C-speed chunked ``take``."""
+    as Arrow chunks; ``entries`` concatenates them once per change.
+    ``core.replay_str_block`` is the one rule that drives it."""
 
-    __slots__ = ("chunks", "_n", "epoch")
+    __slots__ = ("chunks", "_n", "epoch", "_entries")
 
     def __init__(self) -> None:
         self.chunks: list = []
         self._n = 0
         self.epoch = 0
+        self._entries = None
 
     def __len__(self) -> int:
         return self._n
@@ -101,32 +103,23 @@ class GlobalDictDecoder:
         self.chunks = []
         self._n = 0
         self.epoch += 1
+        self._entries = None
 
     def append(self, segment) -> None:
-        import pyarrow as pa
-
-        if isinstance(segment, np.ndarray):
-            segment = pa.array(list(segment), type=pa.large_binary())
+        """Append one large_binary segment."""
         if len(segment):
             self.chunks.append(segment)
             self._n += len(segment)
+            self._entries = None
 
-    def take_block(self, codes: np.ndarray):
+    @property
+    def entries(self):
+        """The running dictionary as one large_binary array — the same
+        object until the next append or reset, so a consumer can tell
+        it apart from a block-local dictionary by identity."""
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        from arcade_spark.blocks import strblock_from_arrow
-
-        taken = pc.take(pa.chunked_array(self.chunks), pa.array(codes, type=pa.int64()))
-        return strblock_from_arrow(taken.combine_chunks())
-
-    def index_of(self, value: bytes) -> int:
-        """First global code of ``value`` across appended segments, or
-        -1 (used by the filter path's memoized-code search)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        if not self.chunks:
-            return -1
-        idx = pc.index(pa.chunked_array(self.chunks), pa.scalar(value, type=pa.large_binary()))
-        return int(idx.as_py())
+        if self._entries is None:
+            self._entries = (pa.concat_arrays(self.chunks) if self.chunks
+                             else pa.array([], type=pa.large_binary()))
+        return self._entries

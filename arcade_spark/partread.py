@@ -49,6 +49,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -203,8 +204,6 @@ class _ColMeta:
     per block, in block order)."""
 
     def __init__(self, tbl: pa.Table):
-        import pyarrow.compute as pc
-
         self.n = tbl.num_rows
         self.block_id = tbl.column("block_id").to_numpy(zero_copy_only=False)
         if self.n > 1 and not bool(np.all(np.diff(self.block_id) > 0)):
@@ -469,12 +468,9 @@ def _zone_keep_np(pred, cm: _ColMeta) -> np.ndarray:
                 mb, xb = cm.min_bin[i], cm.max_bin[i]
                 if mb is None or xb is None:
                     continue
-                if pred.kind in ("eq", "in"):
-                    targets = (
-                        [pred.lob] if pred.kind == "eq" else pred.in_vals
-                    )
+                if pred.kind == "in":
                     if (cm.min_exact[i] and cm.max_exact[i]
-                            and mb == xb and mb in targets):
+                            and mb == xb and mb in pred.in_vals):
                         keep[i] = False
                 else:  # range containment: true min ≥ lo even when the
                     # min prefix is truncated (prefix ≤ true min); the
@@ -482,7 +478,7 @@ def _zone_keep_np(pred, cm: _ColMeta) -> np.ndarray:
                     if mb >= pred.lob and cm.max_exact[i] and xb <= pred.hib:
                         keep[i] = False
             return keep
-        if pred.kind in ("eq", "in"):
+        if pred.kind == "in":
             keys = np.array(pred.target_keys(), dtype=np.int64)
             prune = (cm.min_int == cm.max_int) & np.isin(cm.min_int, keys)
         else:
@@ -585,8 +581,7 @@ def _part_match_positions(
     predicate-column handles) so filter / group-by (grand totals
     included) / key kernels share one implementation and reuse the
     handles through ``_open_cols``."""
-    from arcade_spark.core import decode_int_block
-    from arcade_spark.readops import _complement_positions
+    from arcade_spark.core import decode_int_block, str_codes
 
     # ---- group predicate OCCURRENCES by column, zone verdicts ----
     col_occs: dict[str, list[tuple[int, object]]] = {}
@@ -623,30 +618,20 @@ def _part_match_positions(
             )
 
     for c, plist in col_occs.items():
-        cf = cfs[c]
         # scan a block for this column iff any conjunct with a pred on
-        # it is alive there
+        # it is alive there; each block is read through one view
+        # (dictionary replay included) shared by the column's string
+        # predicate occurrences, each of which keeps its own entry flags
         scan = np.zeros(nb, dtype=bool)
         for j, _p in plist:
             scan |= alive[j]
-        # each string predicate occurrence owns an independent replay
-        # state, so every occurrence consumes every block exactly once
-        states = [p.new_state() if cf.is_str else None for _, p in plist]
-        for b, meta, blob in cf.blocks(scan):
-            iblock = (decode_int_block(blob, meta)
-                      if blob is not None and not cf.is_str else None)
+        states = [p.new_state() if cfs[c].is_str else None for _, p in plist]
+        for b, [(meta, blob, gdec)] in _lockstep([cfs[c]], scan):
+            view = (str_codes(blob, meta, gdec) if gdec is not None
+                    else decode_int_block(blob, meta))
             for (j, p), st in zip(plist, states):
-                if blob is None or not alive[j][b]:
-                    if st is not None:
-                        st.replay(meta)
-                    pos_c = _EMPTY
-                elif st is not None:
-                    pos_c = st.match_positions(blob, meta)
-                    if p.negated:
-                        pos_c = _complement_positions(pos_c, blob, meta["n_values"])
-                else:
-                    pos_c = p.int_positions(iblock)
-                fold(j, b, pos_c)
+                if alive[j][b]:
+                    fold(j, b, p.positions(view, st, gdec))
         # dead-conjunct blocks contribute empty for this column
         for j, _p in plist:
             for b in np.nonzero(~alive[j])[0]:
@@ -1213,6 +1198,22 @@ def _densify(key: np.ndarray) -> tuple[np.ndarray, int]:
     return inv.astype(np.int64, copy=False), len(uniq)
 
 
+def _str_group_codes(blob, meta: dict, gdec):
+    """A string block's group-by keys: ``(codes, validity, resolve)``,
+    where ``resolve(used)`` takes entry ids to their large_binary
+    values. Dictionary codecs hand back their stored codes; plain/fsst
+    rows are factorized Arrow C-side into their sorted distinct set
+    (the dictionary lost the codec race there)."""
+    from arcade_spark.codecs.strcodecs import factorize_arrow
+    from arcade_spark.core import str_codes
+
+    codes, entries, validity = str_codes(blob, meta, gdec)
+    if codes is None:
+        fact = factorize_arrow(entries)
+        codes, entries = fact.codes, fact.uniques_arrow
+    return codes, validity, entries.take
+
+
 def _dense_group_index(key_codes: list[np.ndarray]) -> tuple[np.ndarray, int]:
     """``(inv, width)``: a group index in ``[0, width)`` per row, equal
     for two rows iff their per-column code tuples are equal. Codes shift
@@ -1361,7 +1362,6 @@ def filter_group_by_multi_partials(
 
     def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
         from arcade_spark.core import decode_int_block
-        from arcade_spark.readops import _str_chunk_codes
 
         if conjuncts is not None:
             pos_of, _blk, pcfs = _part_match_positions(out_dir, pid, conjuncts)
@@ -1385,8 +1385,8 @@ def filter_group_by_multi_partials(
             cmask = None
             for g, vt in zip(group_cols, vts):
                 if vt in ("str", "binary"):
-                    codes, gvalid, resolve = _str_chunk_codes(
-                        gdec_of[g], blob_of[g], meta_of[g]
+                    codes, gvalid, resolve = _str_group_codes(
+                        blob_of[g], meta_of[g], gdec_of[g]
                     )
                     # a binary min/max spec over a group column
                     # reuses this decode (replay runs ONCE)
@@ -1414,7 +1414,7 @@ def filter_group_by_multi_partials(
                 key_codes.append(kc)
                 resolvers.append(resolve)
             for c in bin_only:
-                str_dec[c] = _str_chunk_codes(gdec_of[c], blob_of[c], meta_of[c])
+                str_dec[c] = _str_group_codes(blob_of[c], meta_of[c], gdec_of[c])
             if cmask is not None and not cmask.any():
                 continue
             # rows that join a group; slice(None) when all do
@@ -1457,10 +1457,8 @@ def filter_group_by_multi_partials(
                         uniqc, subinv = np.unique(
                             sel[vmask], return_inverse=True
                         )
-                        varr = np.asarray(
-                            list(resolve_c(uniqc)), dtype=object
-                        )
-                        order = np.argsort(varr)
+                        varr = resolve_c(uniqc)
+                        order = pc.array_sort_indices(varr).to_numpy()
                         rank = np.empty(len(uniqc), dtype=np.int64)
                         rank[order] = np.arange(len(uniqc))
                         r = rank[subinv]
@@ -1471,10 +1469,10 @@ def filter_group_by_multi_partials(
                         else:
                             extr = np.full(width, -1, dtype=np.int64)
                             np.maximum.at(extr, gi, r)
-                        sv = varr[order]
+                        sv = varr.take(order)
                     else:
                         extr = np.full(width, -1, dtype=np.int64)
-                        sv = np.zeros(0, dtype=object)
+                        sv = pa.array([], type=pa.large_binary())
                     spec_sums.append((extr, sv))
                     continue
                 # SQL agg null semantics: a row feeds the spec iff
@@ -1540,8 +1538,9 @@ def filter_group_by_multi_partials(
                 mask = nullm if nullm.any() else None
                 vals = resolvers[i](safe)
                 if vt in ("str", "binary"):
-                    arrays.append(pa.array(
-                        list(vals), type=pa.binary(), mask=mask))
+                    vals = vals.cast(pa.binary())
+                    arrays.append(vals if mask is None else pc.if_else(
+                        mask, pa.scalar(None, pa.binary()), vals))
                 elif vt in ("double", "float"):
                     arrays.append(pa.array(
                         vals.view(np.float64), type=pa.float64(),
@@ -1555,11 +1554,10 @@ def filter_group_by_multi_partials(
                 if _bin_spec(cspecs[i]):
                     extr, sv = spec_sums[j]
                     eu = extr[used]
-                    arrays.append(pa.array(
-                        [(sv[e] if 0 <= e < len(sv) else None)
-                         for e in eu],
-                        type=pa.binary(),
-                    ))
+                    empty = (eu < 0) | (eu >= len(sv))
+                    arrays.append(sv.take(pa.array(
+                        np.where(empty, 0, eu), mask=empty
+                    )).cast(pa.binary()))
                 elif cspecs[i]["kind"] in ("min", "max"):
                     # null-mask empty groups so extremum
                     # sentinels never merge
@@ -1910,8 +1908,6 @@ def column_minmax_parts(spark: SparkSession, out_dir: str, column: str) -> DataF
     the task falls back to a single-column decode pass FOR ITS OWN
     PARTITION only. Nulls are excluded from min/max (SQL semantics);
     count(*) includes them."""
-    import pyarrow.compute as pc
-
     from arcade_spark.schema import spark_type_for
 
     all_cols, parts = load_manifest(out_dir)

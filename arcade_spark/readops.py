@@ -26,12 +26,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from arcade_spark.bits import unpack_sections, unpack_uints, unpack_validity
-from arcade_spark.codecs import strcodecs as sc
-from arcade_spark.codecs.intcodecs import decode_for_int
-from arcade_spark.postpass import unpost
 from arcade_spark.partread import _group_key_out, filter_parts, load_manifest
-from arcade_spark.gdict import GlobalDictDecoder
 from arcade_spark.schema import spark_type_for
 
 
@@ -68,191 +63,44 @@ def _register_key_cache(df: DataFrame) -> None:
     _KEY_CACHES.append(df)
 
 
-def _searchsorted_bytes(sorted_obj: np.ndarray, value: bytes) -> int:
-    """Index of value in a sorted object array of bytes, or -1."""
-    i = int(np.searchsorted(sorted_obj, value))
-    if i < len(sorted_obj) and sorted_obj[i] == value:
-        return i
-    return -1
-
-
-class _StrFilterState:
-    """Per-(part, column) filter state: running dict replay + the
-    memoized global code of the target value (ARCADE's carried offset,
-    recomputed only after a dict reset — process.cpp:241)."""
-
-    def __init__(self, value: bytes):
-        self.value = value
-        self.gdec = GlobalDictDecoder()
-        self.target_gid = -1
-
-    def _absorb_segment(self, segment) -> None:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        if self.target_gid < 0 and len(segment):
-            idx = int(
-                pc.index(segment, pa.scalar(self.value, type=pa.large_binary())).as_py()
-            )
-            if idx >= 0:
-                self.target_gid = len(self.gdec) + idx
-        self.gdec.append(segment)
-
-    def match_positions(self, blob, meta: dict) -> np.ndarray:
-        """Positions of rows equal to the target value in this block;
-        advances replay state either way."""
-        validity_sec, payload = unpack_sections(blob)
-        payload = unpost(payload, meta.get("post"))
-        codec = meta["codec"]
-        if meta.get("gdict_reset"):
-            self.gdec.reset()
-            self.target_gid = -1
-        n = meta["n_values"]
-
-        if codec == "dict_global":
-            self._absorb_segment(sc._deserialize_values_arrow(meta["seg"]))
-            if self.target_gid < 0:
-                return np.empty(0, dtype=np.int64)
-            codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-            pos = np.nonzero(codes == self.target_gid)[0]
-        elif codec == "dict_local":
-            uniques = sc._deserialize_values_arrow(meta["seg"])
-            if meta.get("gdict_seed"):
-                self._absorb_segment(uniques)
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            code = int(
-                pc.index(uniques, pa.scalar(self.value, type=pa.large_binary())).as_py()
-            )
-            if code < 0:
-                return np.empty(0, dtype=np.int64)
-            codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-            pos = np.nonzero(codes == code)[0]
-        elif codec == "rle_str":
-            dict_sec, codes_sec, lens_sec = unpack_sections(payload)
-            uniques = sc._deserialize_values(dict_sec)
-            code = _searchsorted_bytes(uniques, self.value)
-            if code < 0:
-                return np.empty(0, dtype=np.int64)
-            import struct
-
-            (nruns,) = struct.unpack_from("<I", codes_sec, 0)
-            run_codes = unpack_uints(codes_sec[4:], meta["code_width"], nruns).view(np.int64)
-            run_lens = decode_for_int(lens_sec, {"n_values": nruns})
-            pos = np.nonzero(np.repeat(run_codes == code, run_lens))[0]
-        else:  # plain / fsst: materialize then byte-compare
-            if codec == "plain":
-                block = sc.decode_plain(payload, meta)
-            else:
-                block = sc.decode_fsst(payload, meta)
-            obj = block.to_object_array()
-            pos = np.nonzero(obj == self.value)[0]
-
-        validity = unpack_validity(validity_sec, n)
-        if validity is not None and len(pos):
-            pos = pos[validity[pos]]
-        return pos
-
-    def replay(self, meta: dict) -> None:
-        """Advance replay state from the segment alone — pruned chunks
-        ship ``seg`` but a NULL blob (FORMAT_REV 6 split)."""
-        if meta.get("gdict_reset"):
-            self.gdec.reset()
-            self.target_gid = -1
-        codec = meta["codec"]
-        if codec == "dict_global" or (codec == "dict_local" and meta.get("gdict_seed")):
-            self._absorb_segment(sc._deserialize_values_arrow(meta["seg"]))
-
-
 class _MaskState:
-    """Shared replay skeleton for dictionary-mask string predicates (IN,
-    BETWEEN, prefix/contains/suffix). A concrete class supplies
-    ``_flags(arr) -> bool[n]`` evaluating the predicate over dictionary
-    ENTRIES (Arrow C-side — no Python objects per entry); blocks then
-    match through their bit-packed codes against a growing per-entry
-    bitmask of the running global dictionary — O(dict) string work total,
-    O(n) integer mask-gather per block, no string materialization. This
-    is the dictionary-encoding payoff ARCADE's code-compare exploits for
-    equality (process.cpp:241), generalized to any per-value predicate.
-    plain/fsst blocks (where dictionaries lost) materialize and run the
-    same Arrow kernel over the block values."""
+    """One string predicate's state for one part: ``_flags(arr) ->
+    bool[len(arr)]`` evaluates the predicate over dictionary ENTRIES
+    (Arrow C-side — no Python objects per entry), and rows match
+    through their codes (``flags[codes]``) in the block view
+    (``core.str_codes``). Flags over the running dictionary are kept
+    and extended only by newly appended entries, and dropped when the
+    dictionary resets — ARCADE's memoized target offset
+    (process.cpp:241) generalized to any per-value predicate: O(dict)
+    string work per reset, O(rows) integer gather per block. A local
+    dictionary's flags are computed per block; plain/fsst blocks (where
+    dictionaries lost) run the same kernel over the rows."""
 
     def __init__(self):
-        self.mask = np.zeros(0, dtype=bool)
+        self.flags = np.zeros(0, dtype=bool)  # over gdec.entries
+        self.epoch = -1
 
     def _flags(self, arr) -> np.ndarray:  # pragma: no cover - abstract
         raise NotImplementedError
 
-    def _absorb_segment(self, segment) -> None:
-        if len(segment):
-            self.mask = np.concatenate([self.mask, self._flags(segment)])
-
-    def match_positions(self, blob, meta: dict) -> np.ndarray:
-        validity_sec, payload = unpack_sections(blob)
-        payload = unpost(payload, meta.get("post"))
-        codec = meta["codec"]
-        if meta.get("gdict_reset"):
-            self.mask = np.zeros(0, dtype=bool)
-        n = meta["n_values"]
-
-        if codec == "dict_global":
-            self._absorb_segment(sc._deserialize_values_arrow(meta["seg"]))
-            if not self.mask.any():
-                return np.empty(0, dtype=np.int64)
-            codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-            pos = np.nonzero(self.mask[codes])[0]
-        elif codec == "dict_local":
-            uniques = sc._deserialize_values_arrow(meta["seg"])
-            if meta.get("gdict_seed"):
-                self._absorb_segment(uniques)
-            flags = self._flags(uniques)
-            if not flags.any():
-                return np.empty(0, dtype=np.int64)
-            codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-            pos = np.nonzero(flags[codes])[0]
-        elif codec == "rle_str":
-            dict_sec, codes_sec, lens_sec = unpack_sections(payload)
-            uniques = sc._deserialize_values_arrow(dict_sec)
-            flags = self._flags(uniques)
-            if not flags.any():
-                return np.empty(0, dtype=np.int64)
-            import struct
-
-            (nruns,) = struct.unpack_from("<I", codes_sec, 0)
-            run_codes = unpack_uints(codes_sec[4:], meta["code_width"], nruns).view(np.int64)
-            run_lens = decode_for_int(lens_sec, {"n_values": nruns})
-            pos = np.nonzero(np.repeat(flags[run_codes], run_lens))[0]
-        else:  # plain / fsst: materialize, same Arrow kernel on values
-            import pyarrow as pa
-
-            if codec == "plain":
-                block = sc.decode_plain(payload, meta)
-            else:
-                block = sc.decode_fsst(payload, meta)
-            obj = block.to_object_array()
-            # null slots decode to None — substitute b"" (validity
-            # gating below removes them)
-            obj = np.where(obj == None, b"", obj)  # noqa: E711
-            arr = pa.array(obj, type=pa.large_binary())
-            pos = np.nonzero(self._flags(arr))[0]
-
-        validity = unpack_validity(validity_sec, n)
-        if validity is not None and len(pos):
-            pos = pos[validity[pos]]
-        return pos
-
-    def replay(self, meta: dict) -> None:
-        if meta.get("gdict_reset"):
-            self.mask = np.zeros(0, dtype=bool)
-        codec = meta["codec"]
-        if codec == "dict_global" or (codec == "dict_local" and meta.get("gdict_seed")):
-            self._absorb_segment(sc._deserialize_values_arrow(meta["seg"]))
+    def row_flags(self, codes, entries, gdec) -> np.ndarray:
+        """Per-row predicate flags of one block view (validity not
+        applied)."""
+        if entries is not gdec.entries:
+            flags = self._flags(entries)
+        else:
+            if self.epoch != gdec.epoch:
+                self.flags, self.epoch = self.flags[:0], gdec.epoch
+            k = len(self.flags)
+            if k < len(entries):
+                self.flags = np.concatenate([self.flags, self._flags(entries[k:])])
+            flags = self.flags
+        return flags if codes is None else flags[codes]
 
 
 class _StrInState(_MaskState):
-    """IN-list: Arrow C-side set membership over dictionary entries (the
-    multi-value generalization of _StrFilterState's carried offset)."""
+    """IN-list (and ``eq`` as a one-value list): Arrow C-side set
+    membership over dictionary entries."""
 
     def __init__(self, values: list[bytes]):
         super().__init__()
@@ -446,20 +294,6 @@ def _preds_to_spec(preds: list[tuple]) -> list[tuple[str, tuple]]:
         else:
             raise ValueError(f"unknown predicate kind: {p[0]!r}")
     return spec
-
-
-def _complement_positions(pos: np.ndarray, blob, n: int) -> np.ndarray:
-    """VALID positions of a block not in ``pos`` — the negated-predicate
-    complement (nulls satisfy neither the inner predicate nor its
-    negation, per SQL three-valued logic)."""
-    validity_sec = unpack_sections(blob)[0]
-    validity = unpack_validity(validity_sec, n)
-    allp = (
-        np.arange(n, dtype=np.int64)
-        if validity is None
-        else np.nonzero(validity)[0].astype(np.int64)
-    )
-    return np.setdiff1d(allp, pos, assume_unique=True)
 
 
 def filter_and(
@@ -692,8 +526,9 @@ def _int_literal(v) -> int:
 
 
 class _Pred:
-    """Compiled per-column predicate: zone bounds, kernel matcher,
-    replay-state factory."""
+    """Compiled per-column predicate: zone bounds, the block matcher
+    (``positions``) and, for strings, the per-part entry-flag state
+    (``new_state``)."""
 
     def __init__(self, column: str, vtype: str, pred: tuple):
         from arcade_spark.bits import float_order_key
@@ -712,6 +547,8 @@ class _Pred:
         self.negated = pred[0] in _neg_map
         if self.negated:
             pred = (_neg_map[pred[0]], *pred[1:])
+        if pred[0] == "eq":  # eq / neq compile as a one-value in / not_in
+            pred = ("in", [pred[1]])
         self.kind = pred[0]
         if self.kind == "sample":
             if not self.is_str:
@@ -759,9 +596,7 @@ class _Pred:
             else:
                 self.lob = self.hib = None
             return
-        if self.kind == "eq":
-            self.lob = self.hib = _encode_bound(pred[1])
-        elif self.kind == "in":
+        if self.kind == "in":
             self.in_vals = [_encode_bound(v) for v in pred[1]]
             if not self.in_vals:
                 raise ValueError("empty IN list")
@@ -773,29 +608,13 @@ class _Pred:
         else:
             self.lob, self.hib = _encode_bound(pred[1]), _encode_bound(pred[2])
         if not self.is_str:
-            if self.kind == "eq":
+            if self.kind == "in":
                 if self.is_float:
                     # stored bitcast: equality compares bit patterns,
                     # zone prune compares order-preserving keys. ±0.0
                     # are SQL-equal but distinct bit patterns — expand
                     # a zero literal to both and widen the zone
                     # envelope across both keys (-1 and 0)
-                    f = float(self.lob)
-                    pats = {int(np.float64(f).view(np.int64))}
-                    if f == 0.0:
-                        pats.add(int(np.float64(-0.0).view(np.int64)))
-                        pats.add(int(np.float64(0.0).view(np.int64)))
-                    self.targets = np.array(sorted(pats), dtype=np.int64)
-                    keys = [
-                        float_order_key(float(np.int64(p).view(np.float64)))
-                        for p in pats
-                    ]
-                    self.zone_lo, self.zone_hi = min(keys), max(keys)
-                else:
-                    self.target_int = _int_literal(self.lob)
-                    self.zone_lo = self.zone_hi = self.target_int
-            elif self.kind == "in":
-                if self.is_float:
                     pats = {
                         int(np.float64(float(v)).view(np.int64)) for v in self.in_vals
                     }
@@ -803,10 +622,7 @@ class _Pred:
                         pats.add(int(np.float64(-0.0).view(np.int64)))
                         pats.add(int(np.float64(0.0).view(np.int64)))
                     self.targets = np.array(sorted(pats), dtype=np.int64)
-                    keys = [
-                        float_order_key(float(np.int64(p).view(np.float64)))
-                        for p in pats
-                    ]
+                    keys = self.target_keys()
                     self.zone_lo, self.zone_hi = min(keys), max(keys)
                 else:
                     self.targets = np.array(
@@ -833,26 +649,20 @@ class _Pred:
                     self.zone_lo, self.zone_hi = self.ilo, self.ihi
 
     def target_keys(self) -> list[int]:
-        """Zone-key(s) of the inner eq/IN targets — used by the negated
+        """Zone-key(s) of the inner IN targets — used by the negated
         all-match prune (a block whose zone is a single key equal to a
         target provably matches everywhere → its complement is empty)."""
         from arcade_spark.bits import float_order_key
 
-        if self.kind == "eq":
-            if self.is_float:
-                return [float_order_key(float(np.int64(p).view(np.float64)))
-                        for p in self.targets]
-            return [self.target_int]
-        if self.kind == "in":
-            if self.is_float:
-                return [float_order_key(float(np.int64(p).view(np.float64)))
-                        for p in self.targets]
-            return [int(t) for t in self.targets]
-        return []
+        if self.kind != "in":
+            return []
+        if self.is_float:
+            return [float_order_key(float(np.int64(p).view(np.float64)))
+                    for p in self.targets]
+        return [int(t) for t in self.targets]
 
     def new_state(self):
-        if self.kind == "eq":
-            return _StrFilterState(self.lob)
+        """A string predicate's per-part state (``_MaskState``)."""
         if self.kind == "in":
             return _StrInState(self.in_vals)
         if self.kind == "sample":
@@ -863,26 +673,29 @@ class _Pred:
             return _StrMatchState(self.kind, self.pattern)
         return _StrRangeState(self.lob, self.hib)
 
-    def int_positions(self, iblock) -> np.ndarray:
-        if self.kind == "eq":
-            if self.is_float:
-                # 1 or 2 bit patterns (±0.0 expansion)
-                m = np.isin(iblock.values, self.targets)
-            else:
-                m = iblock.values == self.target_int
-        elif self.kind == "in":
-            m = np.isin(iblock.values, self.targets)
-        elif self.is_float:
-            v = iblock.values.view(np.float64)
-            m = (v >= self.flo) & (v <= self.fhi)
+    def positions(self, view, state, gdec) -> np.ndarray:
+        """Sorted positions of the VALID rows of one block that satisfy
+        the predicate (its complement when negated — SQL: nulls satisfy
+        neither x = v nor x <> v). ``view`` is a string block's
+        ``core.str_codes`` triple, matched through ``state`` over
+        ``gdec``, or an IntBlock (``state`` and ``gdec`` None)."""
+        if self.is_str:
+            codes, entries, validity = view
+            m = state.row_flags(codes, entries, gdec)
         else:
-            m = (iblock.values >= self.ilo) & (iblock.values <= self.ihi)
+            v, validity = view.values, view.validity
+            if self.kind == "in":
+                m = np.isin(v, self.targets)
+            elif self.is_float:
+                f = v.view(np.float64)
+                m = (f >= self.flo) & (f <= self.fhi)
+            else:
+                m = (v >= self.ilo) & (v <= self.ihi)
         if self.negated:
             m = ~m
-        pos = np.nonzero(m)[0]
-        if iblock.validity is not None and len(pos):
-            pos = pos[iblock.validity[pos]]
-        return pos
+        if validity is not None:
+            m = m & validity
+        return np.flatnonzero(m)
 
 
 def filter_count(
@@ -915,64 +728,6 @@ def column_minmax(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
     from arcade_spark.partread import column_minmax_parts
 
     return column_minmax_parts(spark, out_dir, column)
-
-
-def _str_chunk_codes(gdec: GlobalDictDecoder, blob, meta: dict):
-    """Per-chunk (codes, validity, resolve) for string group-by kernels:
-    ``codes`` is an int64 per-row code array, ``resolve(used_codes)``
-    maps code ids to value bytes (object array). Dict/RLE paths hand
-    back the stored codes without materializing any strings; plain/fsst
-    blocks factorize the materialized values (dictionaries lost the
-    codec race there, so the strings exist anyway)."""
-    validity_sec, payload = unpack_sections(blob)
-    payload = unpost(payload, meta.get("post"))
-    codec = meta["codec"]
-    n = meta["n_values"]
-    if meta.get("gdict_reset"):
-        gdec.reset()
-    validity = unpack_validity(validity_sec, n)
-
-    if codec in ("dict_global", "dict_local"):
-        if codec == "dict_global":
-            gdec.append(sc._deserialize_values_arrow(meta["seg"]))
-            dictionary = None  # resolve through the running dict
-        else:
-            dictionary = sc._deserialize_values_arrow(meta["seg"])
-            if meta.get("gdict_seed"):
-                gdec.append(dictionary)
-        codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-
-        def resolve(used: np.ndarray) -> np.ndarray:
-            if dictionary is None:
-                return gdec.take_block(used).to_object_array()
-            return sc._take_to_block(dictionary, used).to_object_array()
-
-        return codes, validity, resolve
-    if codec == "rle_str":
-        import struct
-
-        dict_sec, codes_sec, lens_sec = unpack_sections(payload)
-        uniques = sc._deserialize_values_arrow(dict_sec)
-        (nruns,) = struct.unpack_from("<I", codes_sec, 0)
-        run_codes = unpack_uints(codes_sec[4:], meta["code_width"], nruns).view(np.int64)
-        run_lens = np.asarray(decode_for_int(lens_sec, {"n_values": nruns}),
-                              dtype=np.int64)
-        codes = np.repeat(run_codes, run_lens)
-
-        def resolve(used: np.ndarray) -> np.ndarray:
-            return sc._take_to_block(uniques, used).to_object_array()
-
-        return codes, validity, resolve
-    # plain / fsst: factorize the materialized values
-    block = sc.decode_plain(payload, meta) if codec == "plain" else sc.decode_fsst(payload, meta)
-    obj = block.to_object_array()
-    obj = np.where(obj == None, b"", obj)  # noqa: E711 (masked by validity)
-    uniq, codes = np.unique(obj, return_inverse=True)
-
-    def resolve(used: np.ndarray) -> np.ndarray:
-        return uniq[used]
-
-    return codes.astype(np.int64), validity, resolve
 
 
 def column_topk(

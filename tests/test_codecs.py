@@ -8,7 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from arcade_spark.bits import pack_uints, unpack_uints, zigzag_decode, zigzag_encode
+from arcade_spark.bits import pack_sections, pack_uints, unpack_uints, zigzag_decode, zigzag_encode
 from arcade_spark.blocks import IntBlock, StrBlock, object_array_to_strblock
 from arcade_spark.codecs import intcodecs as ic
 from arcade_spark.codecs import strcodecs as sc
@@ -29,6 +29,13 @@ def make_block(values: list[bytes | None]) -> StrBlock:
 
 def block_values(block: StrBlock) -> list:
     return list(block.to_object_array())
+
+
+def decode_payload(payload: bytes, meta: dict, gdec=None) -> StrBlock:
+    """A bare codec payload decoded through the block view (framed with
+    an empty validity section; no post-pass)."""
+    gdec = GlobalDictDecoder() if gdec is None else gdec
+    return decode_str_block(pack_sections(b"", payload), meta, gdec)
 
 
 # ------------------------------------------------------------ bits
@@ -113,7 +120,7 @@ STR_CASES = {
 def test_plain_roundtrip(case):
     blk = make_block(STR_CASES[case])
     payload, meta = sc.encode_plain(blk)
-    out = sc.decode_plain(payload, meta)
+    out = decode_payload(payload, meta)
     assert block_values(out) == STR_CASES[case]
 
 
@@ -122,7 +129,7 @@ def test_dict_local_roundtrip(case):
     blk = make_block(STR_CASES[case])
     fact = sc.factorize_block(blk)
     payload, meta = sc.encode_dict_local(blk, fact)
-    out = sc.decode_dict_local(payload, meta)
+    out = decode_payload(payload, meta)
     assert block_values(out) == STR_CASES[case]
 
 
@@ -131,7 +138,7 @@ def test_rle_roundtrip(case):
     blk = make_block(STR_CASES[case])
     fact = sc.factorize_block(blk)
     payload, meta = sc.encode_rle_str(blk, fact)
-    out = sc.decode_rle_str(payload, meta)
+    out = decode_payload(payload, meta)
     assert block_values(out) == STR_CASES[case]
 
 
@@ -139,7 +146,7 @@ def test_rle_roundtrip(case):
 def test_fsst_roundtrip(case):
     blk = make_block(STR_CASES[case])
     payload, meta = sc.encode_fsst(blk)
-    out = sc.decode_fsst(payload, meta)
+    out = decode_payload(payload, meta)
     assert block_values(out) == STR_CASES[case]
 
 
@@ -154,7 +161,7 @@ def test_fsst_adversarial_escape_bytes():
     vals = [bytes([255] * 10), bytes(range(256)), b"\xff\x00\xff\xff", b""]
     blk = make_block(vals * 50)
     payload, meta = sc.encode_fsst(blk)
-    out = sc.decode_fsst(payload, meta)
+    out = decode_payload(payload, meta)
     assert block_values(out) == vals * 50
 
 
@@ -175,7 +182,7 @@ def test_dict_global_differential():
         blobs.append((payload, meta, vals))
         all_vals.append(vals)
     for payload, meta, vals in blobs:
-        out = sc.decode_dict_global(payload, meta, gdec)
+        out = decode_payload(payload, meta, gdec)
         assert block_values(out) == vals
 
 

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from arcade_spark.blocks import StrBlock
+from arcade_spark.blocks import StrBlock, strblock_from_arrow
 from arcade_spark.codecs import strcodecs as sc
 
 
@@ -23,7 +23,7 @@ def _block(vals: list[bytes]) -> StrBlock:
 def _roundtrip(vals: list[bytes], rounds: int) -> None:
     blk = _block(vals)
     payload, meta = sc.encode_fsst(blk, rounds=rounds)
-    out = sc.decode_fsst(payload, meta)
+    out = strblock_from_arrow(sc.decode_fsst(payload, meta["n_values"]))
     assert out.payload == blk.payload
     assert (out.lengths == blk.lengths).all()
 

@@ -5,9 +5,12 @@ at both levels with A/B-interleaved repetitions, report GB/s per level
 and the scaling efficiency throughput(4N) / (4 × throughput(N)), and
 write BENCH/BASELINE.md + BENCH/scaling.json.
 
-All efficiency numbers are computed WITHIN the current code revision
-(fingerprint of the encode-path sources) — no cross-revision merging.
-Both best-of and median-of efficiencies are reported side by side.
+All efficiency numbers are computed from THIS invocation's runs only:
+every run is still appended to BENCH/scaling_runs.jsonl (keyed by a
+fingerprint of the encode-path sources), but that log is a record, not
+a pool — one fast outlier from an earlier invocation must not pin the
+best-of figure. Best-of and median-of efficiencies are reported side
+by side.
 
 Encode output goes to /dev/shm: on a real cluster the sink is object
 storage whose aggregate bandwidth scales with executors; the sandbox's
@@ -118,10 +121,9 @@ def main() -> None:
 
     import hashlib
 
-    # key runs by a fingerprint of the ENCODE-path sources plus this
-    # harness (the methodology is part of the evidence: cold-first-run
-    # and steady-state numbers must never pool), not the git rev —
-    # unrelated commits must not reset the accumulated runs
+    # tag logged runs with a fingerprint of the ENCODE-path sources
+    # plus this harness (the methodology is part of the evidence), not
+    # the git rev; the figures below use this invocation's runs only
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     h = hashlib.md5()
     for rel in [
@@ -136,6 +138,7 @@ def main() -> None:
     rev = h.hexdigest()[:10]
     os.makedirs("BENCH", exist_ok=True)
     history = "BENCH/scaling_runs.jsonl"
+    cur: list[dict] = []
     for i in range(reps):
         for cores in (n_small, n_large):
             for r in session_runs(cores, corpus_path, num_parts,
@@ -146,9 +149,8 @@ def main() -> None:
                       flush=True)
                 with open(history, "a") as f:
                     f.write(json.dumps(r) + "\n")
+                cur.append(r)
 
-    all_runs = [json.loads(line) for line in open(history)]
-    cur = [r for r in all_runs if r.get("code_rev") == rev and r.get("corpus_rows") == rows]
     runs = {
         n_small: [r for r in cur if r["cores"] == n_small],
         n_large: [r for r in cur if r["cores"] == n_large],
@@ -201,7 +203,8 @@ Same job, same input ({rows:,} corpus rows, {small['raw_bytes']/1e6:.0f} MB raw,
 tasks), two parallelism levels — the sandbox proxy for N vs 4N
 executors per the hardware calibration below. **All numbers below are
 from ONE code revision ({rev}), {result['n_runs_small']}+{result['n_runs_large']}
-A/B-interleaved runs; no cross-revision merging.** Each Spark session
+A/B-interleaved runs of one invocation; earlier runs in the log are
+not pooled.** Each Spark session
 runs ONE untimed warmup encode before its timed runs: python-worker
 spawn + module import + JIT is a one-time per-executor cost that a real
 cluster amortizes over hours, and in a ~10 s window it lands 25-40 % on

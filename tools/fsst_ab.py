@@ -27,26 +27,32 @@ def main() -> None:
     from arcade_spark.session import get_spark
 
     spark = get_spark(app="fsst-ab", cores=cores)
-    corpus = os.path.join(tempfile.gettempdir(), f"fsst_ab_corpus_{n_rows}")
-    write_corpus_files(corpus, n_rows, 2 * cores)
+    # the corpus and both encoded tables live under one temp dir,
+    # removed however the run ends
+    root = tempfile.mkdtemp(prefix="fsst_ab_")
+    try:
+        corpus = os.path.join(root, f"corpus_{n_rows}")
+        write_corpus_files(corpus, n_rows, 2 * cores)
 
-    for label, rounds in (("throughput r0", 0), ("ratio r3", 3)):
-        out = os.path.join(tempfile.gettempdir(), f"fsst_ab_enc_{rounds}")
-        best = None
-        for _ in range(2):
-            shutil.rmtree(out, ignore_errors=True)
-            t0 = time.time()
-            m = encode_files_job(spark, corpus, out, resume=False,
-                                 fsst_rounds=rounds)
-            dt = time.time() - t0
-            best = min(best, dt) if best else dt
-        gbps = m["raw_bytes"] / best / 1e9
-        print(f"{label}: ratio={m['ratio']:.4f} gbps={gbps:.4f} "
-              f"raw_mb={m['raw_bytes']/1e6:.1f} wall={best:.2f}s")
-        blocks = spark.read.parquet(f"{out}/blocks")
-        mix = blocks.groupBy("column", "codec").count().orderBy("column", "codec")
-        for r in mix.collect():
-            print(f"  {r['column']:10s} {r['codec']:12s} {r['count']}")
+        for label, rounds in (("throughput r0", 0), ("ratio r3", 3)):
+            out = os.path.join(root, f"enc_{rounds}")
+            best = None
+            for _ in range(2):
+                shutil.rmtree(out, ignore_errors=True)
+                t0 = time.time()
+                m = encode_files_job(spark, corpus, out, resume=False,
+                                     fsst_rounds=rounds)
+                dt = time.time() - t0
+                best = min(best, dt) if best else dt
+            gbps = m["raw_bytes"] / best / 1e9
+            print(f"{label}: ratio={m['ratio']:.4f} gbps={gbps:.4f} "
+                  f"raw_mb={m['raw_bytes']/1e6:.1f} wall={best:.2f}s")
+            blocks = spark.read.parquet(f"{out}/blocks")
+            mix = blocks.groupBy("column", "codec").count().orderBy("column", "codec")
+            for r in mix.collect():
+                print(f"  {r['column']:10s} {r['codec']:12s} {r['count']}")
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":
