@@ -132,7 +132,9 @@ def intblock_from_arrow(arr: pa.Array) -> IntBlock:
         arr = arr.combine_chunks()
     t = arr.type
     if pa.types.is_timestamp(t):
-        arr = arr.cast(pa.int64())
+        # blocks hold microseconds: a safe cast scales other units and
+        # raises on a sub-microsecond value instead of truncating it
+        arr = arr.cast(pa.timestamp("us", tz=t.tz)).cast(pa.int64())
     elif pa.types.is_floating(t):
         # lossless bitcast for doubles
         arr = arr.cast(pa.float64()).view(pa.int64())

@@ -18,7 +18,13 @@ its sources' chunk rows with three metadata adjustments:
 
 Payload ``blob``/``seg`` bytes are copied verbatim (parquet column
 reads — no decode, no re-compression), so compaction runs at IO speed
-and the decoded table is bit-identical by construction.
+and the decoded table is bit-identical by construction. The merged
+partition commits through ``manifest.PartWriter``, the writer encode
+uses: same row groups, atomic renames and marker, whose figures (the
+encode time included: the copied chunks' ``kernel_ms``) come from the
+chunk rows written. The job has encode_files_job's shape: one literal
+row per output partition (``partread.range_rows_df``) and one
+``mapInArrow`` task each that yields the partition's manifest row.
 
 Reference parity note: ARCADE has one file per run (no compaction
 surface); this operator exists for the Spark-scale layout where
@@ -37,13 +43,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import SparkSession
 
-from arcade_spark.manifest import (
-    BLOCKS_ARROW_SCHEMA,
-    FORMAT_REV,
-    MANIFEST_ARROW_SCHEMA,
-    blocks_path,
-    manifest_path,
-)
+from arcade_spark.manifest import MANIFEST_ARROW_SCHEMA, PartWriter, blocks_path
 
 
 def _compact_group(
@@ -55,123 +55,39 @@ def _compact_group(
     run_id: str,
 ) -> dict:
     """Merge one group of source partitions into dest partition
-    ``new_pid``. Runs inside a task; commits blocks files then the
-    manifest marker (same atomic protocol as PartWriter)."""
-    os.makedirs(os.path.join(dest_dir, "blocks"), exist_ok=True)
-    os.makedirs(os.path.join(dest_dir, "manifest"), exist_ok=True)
-
-    n_rows_total = 0
-    n_blocks_total = -1
-    raw_bytes = 0
-    encoded_bytes = 0
-    codec_counts: dict[str, int] = {}
-    tmps: list[tuple[str, str]] = []
-
+    ``new_pid`` and commit it through ``PartWriter``; returns the
+    manifest row. Each source part's column files are read, adjusted
+    (part id, block ids, row starts, the first chunk's reset) and
+    appended in part order; the writer's block and row counts at the
+    start of a part are that part's offsets."""
+    writer = PartWriter(dest_dir, new_pid, run_id, columns=columns, job_info={
+        "mode": "compact", "source": json.dumps(src_pids)})
     try:
-        for col, _vt in columns:
-            pieces = []
-            blk_off = 0
-            row_off = 0
-            for i, spid in enumerate(src_pids):
+        for i, spid in enumerate(src_pids):
+            blk_off, row_off = writer.n_blocks, writer.n_rows
+            for col, _vt in columns:
                 t = pq.read_table(blocks_path(src_dir, spid, col))
                 n = t.num_rows
-                bid = t.column("block_id").to_numpy(zero_copy_only=False)
+                bid = t.column("block_id").to_numpy()
                 if n > 1 and not bool(np.all(np.diff(bid) > 0)):
                     raise ValueError(f"part {spid} col {col}: not in block order")
-                t = t.set_column(
-                    t.schema.get_field_index("part_id"), "part_id",
-                    pa.array(np.full(n, new_pid, dtype=np.int32)),
-                )
-                t = t.set_column(
-                    t.schema.get_field_index("block_id"), "block_id",
-                    pa.array((bid + blk_off).astype(np.int32)),
-                )
-                rs = t.column("row_start").to_numpy(zero_copy_only=False)
-                t = t.set_column(
-                    t.schema.get_field_index("row_start"), "row_start",
-                    pa.array((rs + row_off).astype(np.int64)),
-                )
-                if i > 0 and n > 0:
-                    # appended part: its first chunk must reset the
-                    # replayed dictionary to the fresh state its encoder
-                    # actually started from
-                    gr = t.column("gdict_reset").to_numpy(zero_copy_only=False).copy()
-                    gr[0] = True
-                    t = t.set_column(
-                        t.schema.get_field_index("gdict_reset"), "gdict_reset",
-                        pa.array(gr.astype(bool)),
-                    )
-                pieces.append(t)
-                blk_off += n
-                part_rows = int(
-                    np.sum(t.column("n_values").to_numpy(zero_copy_only=False))
-                )
-                row_off += part_rows
-            merged = pa.concat_tables(pieces).cast(BLOCKS_ARROW_SCHEMA)
-            tmp = os.path.join(
-                dest_dir, "blocks",
-                f".tmp-{new_pid:05d}-{col}-{uuid.uuid4().hex[:8]}.parquet",
-            )
-            w = pq.ParquetWriter(
-                tmp, BLOCKS_ARROW_SCHEMA,
-                compression={"blob": "none", "seg": "zstd"},
-            )
-            # mirror PartWriter's 16-chunk row groups so payload fetches
-            # stay row-group-prunable
-            for start in range(0, merged.num_rows, 16):
-                w.write_table(merged.slice(start, 16))
-            w.close()
-            tmps.append((tmp, blocks_path(dest_dir, new_pid, col)))
-            if n_blocks_total not in (-1, merged.num_rows):
-                raise ValueError(
-                    f"column {col!r}: block count {merged.num_rows} != "
-                    f"{n_blocks_total} of earlier columns — corrupt source"
-                )
-            n_blocks_total = merged.num_rows
-            if n_rows_total not in (0, row_off):
-                raise ValueError(
-                    f"column {col!r}: row count {row_off} != {n_rows_total} "
-                    f"of earlier columns — corrupt source"
-                )
-            n_rows_total = row_off
-            raw_bytes += int(np.sum(merged.column("raw_bytes").to_numpy(zero_copy_only=False)))
-            encoded_bytes += int(np.sum(merged.column("encoded_bytes").to_numpy(zero_copy_only=False)))
-            for c in merged.column("codec").to_pylist():
-                codec_counts[c] = codec_counts.get(c, 0) + 1
-        for tmp, final in tmps:
-            os.replace(tmp, final)
+                # an appended part's first chunk resets the replayed
+                # dictionary to the fresh state its encoder started from
+                reset = t.column("gdict_reset").to_numpy(zero_copy_only=False).copy()
+                if i > 0:
+                    reset[:1] = True
+                for name, values in (
+                    ("part_id", np.full(n, new_pid, dtype=np.int32)),
+                    ("block_id", np.arange(blk_off, blk_off + n, dtype=np.int32)),
+                    ("row_start", t.column("row_start").to_numpy() + row_off),
+                    ("gdict_reset", reset),
+                ):
+                    t = t.set_column(t.schema.get_field_index(name), name, pa.array(values))
+                writer.append(col, t)
+        return writer.commit()
     except Exception:
-        for tmp, _ in tmps:
-            if os.path.exists(tmp):
-                os.remove(tmp)
+        writer.abort()
         raise
-
-    row = {
-        "part_id": new_pid,
-        "n_blocks": n_blocks_total,
-        "n_cols": len(columns),
-        "n_rows": n_rows_total,
-        "raw_bytes": raw_bytes,
-        "encoded_bytes": encoded_bytes,
-        "encode_seconds": 0.0,
-        "throughput_mbps": 0.0,
-        "codec_counts": json.dumps(codec_counts, sort_keys=True),
-        "columns": json.dumps([list(c) for c in columns]),
-        "run_id": run_id,
-        "status": "done",
-        "format_rev": FORMAT_REV,
-        "mode": "compact",
-        "num_parts": 0,
-        "salt_buckets": 0,
-        "order_col": "",
-        "source": json.dumps(src_pids),
-    }
-    mtmp = os.path.join(
-        dest_dir, "manifest", f".tmp-{new_pid:05d}-{uuid.uuid4().hex[:8]}.parquet"
-    )
-    pq.write_table(pa.Table.from_pylist([row], schema=MANIFEST_ARROW_SCHEMA), mtmp)
-    os.replace(mtmp, manifest_path(dest_dir, new_pid))
-    return {"part_id": new_pid, "n_rows": n_rows_total, "n_blocks": n_blocks_total}
 
 
 def compact_job(
@@ -191,7 +107,8 @@ def compact_job(
     ``columns`` projects the output table to a subset — the cheap way
     to DROP heavy columns after they've served their purpose (e.g. raw
     html once text is extracted): untouched columns' files never open."""
-    from arcade_spark.partread import load_manifest
+    from arcade_spark.partread import load_manifest, range_rows_df
+    from arcade_spark.schema import MANIFEST_DDL
 
     if group_size < 1:
         raise ValueError("group_size must be >= 1")
@@ -216,13 +133,20 @@ def compact_job(
     pids = [p for p, _ in parts]
     groups = [pids[i: i + group_size] for i in range(0, len(pids), group_size)]
     run_id = uuid.uuid4().hex
-    items = list(enumerate(groups))
-    rdd = spark.sparkContext.parallelize(items, max(1, len(items)))
-    results = rdd.map(
-        lambda it: _compact_group(src_dir, dest_dir, it[0], it[1], columns, run_id)
-    ).collect()
+
+    def kernel(batches):
+        for batch in batches:
+            for gid, src_pids in zip(batch["gid"].to_pylist(), batch["pids"].to_pylist()):
+                row = _compact_group(src_dir, dest_dir, gid, src_pids, columns, run_id)
+                yield pa.RecordBatch.from_pylist([row], schema=MANIFEST_ARROW_SCHEMA)
+
+    # one task per output partition, as encode_files_job slices its groups
+    rows = range_rows_df(spark, [
+        ("gid", "int", list(range(len(groups)))),
+        ("pids", "array<int>", groups),
+    ], len(groups)).mapInArrow(kernel, schema=MANIFEST_DDL).collect()
     return {
         "parts_in": len(pids),
-        "parts_out": len(results),
-        "n_rows": sum(r["n_rows"] for r in results),
+        "parts_out": len(rows),
+        "n_rows": sum(r.n_rows for r in rows),
     }

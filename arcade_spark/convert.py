@@ -4,7 +4,6 @@ the encode and decode kernels. Vectorized only — no per-row Python."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from arcade_spark.blocks import (
@@ -23,31 +22,6 @@ def arrow_to_block(arr, vtype: str):
     if vtype in ("str", "binary"):
         return strblock_from_arrow(arr)
     return intblock_from_arrow(arr)
-
-
-def series_to_block(series: pd.Series, vtype: str):
-    if vtype == "str":
-        arr = pa.Array.from_pandas(series, type=pa.large_string())
-        return strblock_from_arrow(arr)
-    if vtype == "binary":
-        arr = pa.Array.from_pandas(series, type=pa.large_binary())
-        return strblock_from_arrow(arr)
-    if vtype in ("ts", "tsntz"):
-        arr = pa.Array.from_pandas(series, type=pa.timestamp("us"))
-        return intblock_from_arrow(arr)
-    if vtype in ("int", "i32", "i16", "i8"):
-        arr = pa.Array.from_pandas(series, type=pa.int64())
-        return intblock_from_arrow(arr)
-    if vtype in ("double", "float"):
-        arr = pa.Array.from_pandas(series, type=pa.float64())
-        return intblock_from_arrow(arr)
-    if vtype == "date":
-        arr = pa.Array.from_pandas(series, type=pa.date32())
-        return intblock_from_arrow(arr)
-    if vtype == "bool":
-        arr = pa.Array.from_pandas(series, type=pa.bool_())
-        return intblock_from_arrow(arr)
-    raise TypeError(vtype)
 
 
 def block_to_arrow(block, vtype: str) -> pa.Array:

@@ -15,22 +15,14 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
+from arcade_spark.schema import arrow_type_for
+
 
 def _out_arrow_type(vtype: str) -> pa.DataType:
-    return {
-        "str": pa.string(),
-        "binary": pa.binary(),
-        "ts": pa.timestamp("us", tz="UTC"),
-        "tsntz": pa.timestamp("us"),
-        "int": pa.int64(),
-        "i32": pa.int32(),
-        "i16": pa.int16(),
-        "i8": pa.int8(),
-        "double": pa.float64(),
-        "float": pa.float32(),
-        "date": pa.date32(),
-        "bool": pa.bool_(),
-    }[vtype]
+    """A column's Arrow type in scan output: the vtype's, with 32-bit
+    offsets for strings and binaries."""
+    return {"str": pa.string(), "binary": pa.binary()}.get(vtype) or arrow_type_for(vtype)
+
 
 def _binary_views(arr: pa.Array):
     """(offsets int64[n+1], data memoryview) for a binary/large_binary

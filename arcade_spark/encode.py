@@ -25,7 +25,7 @@ which also makes the tmp+rename block writes idempotent under Spark
 task retries and speculative execution.
 
 Resume: a partition is complete iff its manifest marker exists
-(manifest.completed_parts); the job anti-joins those out of the input,
+(manifest.validated_completed_parts); the job anti-joins those out of the input,
 so a killed run re-encodes only unfinished partitions (FIXTURES.md §4).
 
 Scale note: out_dir must be shared storage on a real cluster (the
@@ -35,10 +35,12 @@ via pyarrow.fs — local paths here because the sandbox is single-host).
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 
 import numpy as np
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -49,11 +51,10 @@ from arcade_spark.gdict import GlobalDict
 from arcade_spark.manifest import (
     MANIFEST_ARROW_SCHEMA,
     PartWriter,
-    completed_parts,
     validated_completed_parts,
 )
 from arcade_spark.partread import range_rows_df
-from arcade_spark.schema import MANIFEST_DDL, spark_vtype
+from arcade_spark.schema import MANIFEST_DDL, arrow_vtype, spark_vtype
 
 _PART_COL = "__arcade_part"
 _KEY_COL = "__arcade_key"
@@ -252,7 +253,6 @@ def encode_job(
         df = df.filter(~F.col(_PART_COL).isin(*sorted(done)))
 
     run_id = uuid.uuid4().hex[:12]
-    t0 = time.time()
     kernel = make_encode_kernel(
         columns, out_dir, run_id, block_rows, job_info=job_info,
         fsst_rounds=fsst_rounds,
@@ -263,37 +263,39 @@ def encode_job(
     # spark_partition_id). One part per task, balanced at row level,
     # single pass (repartitionByRange would re-run the whole source
     # scan to sample range bounds).
-    new_rows = (
+    df = (
         df.repartition(num_parts, F.col(_KEY_COL))
         .sortWithinPartitions(_PART_COL, order_col)
         .drop(_KEY_COL)
-        .mapInArrow(kernel, schema=MANIFEST_DDL)
-        .collect()
     )
+    return _run_encode(df, kernel, out_dir, len(done), run_id)
+
+
+def _run_encode(df: DataFrame | None, kernel, out_dir: str, skipped: int,
+                run_id: str) -> dict:
+    """Run ``kernel`` over ``df`` (None: nothing left to encode) and
+    return the job metrics: totals over every committed part of
+    ``out_dir``, this run's and resumed ones; wall time and throughput
+    of this run's."""
+    t0 = time.time()
+    new_rows = [] if df is None else df.mapInArrow(kernel, schema=MANIFEST_DDL).collect()
     wall_seconds = time.time() - t0
-
-    import pyarrow.parquet as pq
-    import os
-
     mdir = os.path.join(out_dir, "manifest")
-    totals = {"rows": 0, "raw": 0, "enc": 0, "kernel_s": 0.0}
+    sums = dict.fromkeys(["n_rows", "raw_bytes", "encoded_bytes", "encode_seconds"], 0)
     if os.path.isdir(mdir):
         t = pq.read_table(mdir, schema=MANIFEST_ARROW_SCHEMA)
-        totals["rows"] = sum(t.column("n_rows").to_pylist())
-        totals["raw"] = sum(t.column("raw_bytes").to_pylist())
-        totals["enc"] = sum(t.column("encoded_bytes").to_pylist())
-        totals["kernel_s"] = sum(t.column("encode_seconds").to_pylist())
-    new_raw = sum(r.raw_bytes for r in new_rows)
+        sums = {k: sum(t.column(k).to_pylist()) for k in sums}
+    raw, enc = sums["raw_bytes"], sums["encoded_bytes"]
     return {
-        "rows": totals["rows"],
-        "raw_bytes": totals["raw"],
-        "encoded_bytes": totals["enc"],
-        "ratio": (totals["enc"] / totals["raw"]) if totals["raw"] else None,
+        "rows": sums["n_rows"],
+        "raw_bytes": raw,
+        "encoded_bytes": enc,
+        "ratio": enc / raw if raw else None,
         "encode_seconds": wall_seconds,
-        "kernel_seconds": totals["kernel_s"],
-        "throughput_mbps": new_raw / max(wall_seconds, 1e-9) / 1e6,
+        "kernel_seconds": sums["encode_seconds"],
+        "throughput_mbps": sum(r.raw_bytes for r in new_rows) / max(wall_seconds, 1e-9) / 1e6,
         "new_parts": len(new_rows),
-        "skipped_parts": len(done),
+        "skipped_parts": skipped,
         "run_id": run_id,
     }
 
@@ -333,10 +335,7 @@ def encode_files_job(
     its own part_id, blocks file, and manifest marker, committed as the
     task reaches it, so a killed task still resumes per file.
     """
-    import os
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     if os.path.isdir(input_path):
         files = sorted(
@@ -349,20 +348,7 @@ def encode_files_job(
     if not files:
         raise ValueError(f"no parquet files under {input_path}")
 
-    schema = pq.read_schema(files[0])
-    arrow_to_vtype = {
-        "string": "str", "large_string": "str", "binary": "binary",
-        "large_binary": "binary", "int64": "int", "int32": "i32",
-        "int16": "i16", "int8": "i8", "double": "double", "float": "float",
-        "date32[day]": "date", "bool": "bool",
-    }
-
-    def vtype_of(field: pa.Field) -> str:
-        if pa.types.is_timestamp(field.type):
-            return "ts" if field.type.tz else "tsntz"
-        return arrow_to_vtype[str(field.type)]
-
-    columns = [(f.name, vtype_of(f)) for f in schema]
+    columns = [(f.name, arrow_vtype(f.type)) for f in pq.read_schema(files[0])]
 
     n_files = len(files)
     done = (
@@ -391,8 +377,7 @@ def encode_files_job(
                     pid = int(pid)
                     writer = PartWriter(
                         out_dir, pid, run_id, columns=columns,
-                        job_info={"mode": "files", "num_parts": n_files,
-                                  "salt_buckets": 0, "order_col": "", "source": path},
+                        job_info={"mode": "files", "num_parts": n_files, "source": path},
                     )
                     gdicts: dict[str, GlobalDict] = {}
                     try:
@@ -410,8 +395,7 @@ def encode_files_job(
                         [mrow], schema=MANIFEST_ARROW_SCHEMA
                     )
 
-    t0 = time.time()
-    new_rows = []
+    adf = None
     if groups:
         # EXACTLY one group per Spark partition: hash repartition(n, gid)
         # scatters n keys into n partitions with collisions (balls-in-
@@ -422,27 +406,4 @@ def encode_files_job(
             ("gid", "int", [g for g, _ in groups]),
             ("paths", "string", [p for _, p in groups]),
         ], len(groups))
-        new_rows = adf.mapInArrow(kernel, schema=MANIFEST_DDL).collect()
-    wall_seconds = time.time() - t0
-
-    mdir = os.path.join(out_dir, "manifest")
-    totals = {"rows": 0, "raw": 0, "enc": 0, "kernel_s": 0.0}
-    if os.path.isdir(mdir):
-        t = pq.read_table(mdir, schema=MANIFEST_ARROW_SCHEMA)
-        totals["rows"] = sum(t.column("n_rows").to_pylist())
-        totals["raw"] = sum(t.column("raw_bytes").to_pylist())
-        totals["enc"] = sum(t.column("encoded_bytes").to_pylist())
-        totals["kernel_s"] = sum(t.column("encode_seconds").to_pylist())
-    new_raw = sum(r.raw_bytes for r in new_rows)
-    return {
-        "rows": totals["rows"],
-        "raw_bytes": totals["raw"],
-        "encoded_bytes": totals["enc"],
-        "ratio": (totals["enc"] / totals["raw"]) if totals["raw"] else None,
-        "encode_seconds": wall_seconds,
-        "kernel_seconds": totals["kernel_s"],
-        "throughput_mbps": new_raw / max(wall_seconds, 1e-9) / 1e6,
-        "new_parts": len(new_rows),
-        "skipped_parts": len(done),
-        "run_id": run_id,
-    }
+    return _run_encode(adf, kernel, out_dir, len(done), run_id)

@@ -6,11 +6,18 @@ format revisions.
 
 Layout under an encode out_dir:
 
-    blocks/part-NNNNN.parquet     one file per encode partition (all its
-                                  chunk rows, written by the kernel task)
+    blocks/part-NNNNN-<column>.parquet
+                                  one file per (partition, column): its
+                                  chunk rows in block order, 16 per
+                                  parquet row group
     manifest/part-NNNNN.parquet   one-row manifest file per partition —
                                   the COMMIT MARKER: written only after
-                                  the blocks file is durably renamed
+                                  every column file is durably renamed
+
+``PartWriter`` is the only code that writes either directory: the
+encode kernels feed it one block at a time, compaction whole column
+tables, and its ``commit`` derives every marker figure from the chunk
+rows it wrote. A new block field or a FORMAT_REV bump lands here.
 
 This is the analogue of ARCADE's backpatched file header + blocksizes
 index (writer.cpp:419-430, :488-493) re-expressed as an Iceberg-style
@@ -30,6 +37,7 @@ import os
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 # ...4: manifest column order; 5: narrow int vtypes (i32/i16/i8);
@@ -204,9 +212,15 @@ def validated_completed_parts(
 
 
 class PartWriter:
-    """Streams one partition's chunk rows to its blocks file, then
-    commits the manifest marker. Row groups flush per block batch, so
-    task memory stays O(block)."""
+    """The one writer of a partition: streams its chunk rows to one
+    blocks file per column, then commits the manifest marker. Encode
+    feeds it block by block (``write_block``), compaction column table
+    by column table (``append``); row groups hold ``_FLUSH_ROWS`` chunk
+    rows, so task memory stays O(row group) and payload reads stay
+    row-group-prunable. Every marker figure comes from the rows
+    written."""
+
+    _FLUSH_ROWS = 16  # chunk rows per parquet row group (per column)
 
     def __init__(self, out_dir: str, part_id: int, run_id: str,
                  columns: list[tuple[str, str]] | None = None,
@@ -226,15 +240,45 @@ class PartWriter:
         # Catalyst's In(column, ...) predicate prunes whole files
         self._tmps: dict[str, str] = {}
         self._writers: dict[str, pq.ParquetWriter] = {}
-        self._rowbuf: dict[str, list[dict]] = {}
-        self.n_blocks = 0
-        self.n_rows = 0
-        self.raw_bytes = 0
-        self.encoded_bytes = 0
-        self.kernel_ms = 0.0
-        self.codec_counts: dict[str, int] = {}
+        self._pending: dict[str, list[pa.Table]] = {}
+        self._counts: dict[str, tuple[int, int]] = {}  # column → (chunks, values)
+        self._sums = {"raw_bytes": 0, "encoded_bytes": 0, "kernel_ms": 0.0}
+        self._codecs: dict[str, int] = {}
 
-    def _writer_for(self, column: str) -> pq.ParquetWriter:
+    @property
+    def n_blocks(self) -> int:
+        return max((b for b, _ in self._counts.values()), default=0)
+
+    @property
+    def n_rows(self) -> int:
+        return max((n for _, n in self._counts.values()), default=0)
+
+    def write_block(self, chunk_rows: list[dict]) -> None:
+        """Append one block: its chunk row of each column."""
+        t = pa.Table.from_pylist(chunk_rows, schema=BLOCKS_ARROW_SCHEMA)
+        for i, r in enumerate(chunk_rows):
+            self.append(r["column"], t.slice(i, 1))
+
+    def append(self, column: str, rows: pa.Table) -> None:
+        """Append ``column``'s next chunk rows (``BLOCKS_ARROW_SCHEMA``,
+        in block order); each full ``_FLUSH_ROWS`` goes out as one row
+        group."""
+        b, n = self._counts.get(column, (0, 0))
+        self._counts[column] = (b + rows.num_rows, n + (pc.sum(rows["n_values"]).as_py() or 0))
+        pending = self._pending.setdefault(column, [])
+        pending.append(rows)
+        if sum(t.num_rows for t in pending) >= self._FLUSH_ROWS:
+            self._flush(column, final=False)
+
+    def _flush(self, column: str, final: bool) -> None:
+        t = pa.concat_tables(self._pending.pop(column)).combine_chunks()
+        end = t.num_rows if final else t.num_rows - t.num_rows % self._FLUSH_ROWS
+        for start in range(0, end, self._FLUSH_ROWS):
+            self._write(column, t.slice(start, min(self._FLUSH_ROWS, end - start)))
+        if end < t.num_rows:
+            self._pending[column] = [t.slice(end)]
+
+    def _write(self, column: str, rows: pa.Table) -> None:
         w = self._writers.get(column)
         if w is None:
             tmp = os.path.join(
@@ -251,49 +295,39 @@ class PartWriter:
             )
             self._tmps[column] = tmp
             self._writers[column] = w
-        return w
-
-    _FLUSH_ROWS = 16  # chunk rows per parquet row group (per column)
-
-    def _flush(self, column: str) -> None:
-        rows = self._rowbuf.get(column)
-        if rows:
-            self._writer_for(column).write_table(
-                pa.Table.from_pylist(rows, schema=BLOCKS_ARROW_SCHEMA)
-            )
-            self._rowbuf[column] = []
-
-    def write_block(self, chunk_rows: list[dict]) -> None:
-        for r in chunk_rows:
-            buf = self._rowbuf.setdefault(r["column"], [])
-            buf.append(r)
-            if len(buf) >= self._FLUSH_ROWS:
-                self._flush(r["column"])
-        self.n_blocks += 1
-        self.n_rows += chunk_rows[0]["n_values"]
-        for r in chunk_rows:
-            self.raw_bytes += r["raw_bytes"]
-            self.encoded_bytes += r["encoded_bytes"]
-            self.kernel_ms += r["kernel_ms"]
-            self.codec_counts[r["codec"]] = self.codec_counts.get(r["codec"], 0) + 1
+        w.write_table(rows)
+        for k in self._sums:
+            self._sums[k] += pc.sum(rows[k]).as_py() or 0
+        for c in rows["codec"].to_pylist():
+            self._codecs[c] = self._codecs.get(c, 0) + 1
 
     def commit(self) -> dict:
-        for column in list(self._rowbuf):
-            self._flush(column)
+        """Flush, rename every column file into place, then write the
+        marker. Raises ValueError, before anything is renamed, when the
+        columns disagree on block count or row total."""
+        counts = set(self._counts.values())
+        if len(counts) > 1:
+            raise ValueError(
+                f"part {self.part_id}: columns disagree on (blocks, rows): "
+                f"{self._counts}"
+            )
+        n_blocks, n_rows = counts.pop() if counts else (0, 0)
+        for column in list(self._pending):
+            self._flush(column, final=True)
         for column, w in self._writers.items():
             w.close()
             os.replace(self._tmps[column], blocks_path(self.out_dir, self.part_id, column))
-        secs = self.kernel_ms / 1000.0
+        secs = self._sums["kernel_ms"] / 1000.0
         row = {
             "part_id": self.part_id,
-            "n_blocks": self.n_blocks,
+            "n_blocks": n_blocks,
             "n_cols": len(self._writers),
-            "n_rows": self.n_rows,
-            "raw_bytes": self.raw_bytes,
-            "encoded_bytes": self.encoded_bytes,
+            "n_rows": n_rows,
+            "raw_bytes": self._sums["raw_bytes"],
+            "encoded_bytes": self._sums["encoded_bytes"],
             "encode_seconds": secs,
-            "throughput_mbps": self.raw_bytes / max(secs, 1e-9) / 1e6,
-            "codec_counts": json.dumps(self.codec_counts, sort_keys=True),
+            "throughput_mbps": self._sums["raw_bytes"] / max(secs, 1e-9) / 1e6,
+            "codec_counts": json.dumps(self._codecs, sort_keys=True),
             "columns": json.dumps([list(c) for c in self.columns]),
             "run_id": self.run_id,
             "status": "done",
@@ -320,7 +354,8 @@ class PartWriter:
 def verify_integrity(spark, out_dir: str) -> dict:
     """Cross-check manifest vs blocks: every committed partition's
     blocks file must exist with matching block/row counts (guards the
-    silent-shrink failure mode when files go missing)."""
+    silent-shrink failure mode when files go missing). A zero-row part
+    (an empty source file) commits a marker and no column files."""
     from pyspark.sql import functions as F
 
     manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
@@ -335,9 +370,13 @@ def verify_integrity(spark, out_dir: str) -> dict:
         .join(per_part.alias("b"), "part_id", "full_outer")
         .withColumn(
             "ok",
-            (F.col("m.n_blocks") == F.col("b.b_blocks"))
-            & (F.col("m.n_cols") == F.col("b.b_cols"))
-            & (F.col("m.n_rows") * F.col("b.b_cols") == F.col("b.chunk_vals")),
+            F.when(F.col("b.b_blocks").isNull(),
+                   (F.col("m.n_rows") == 0) & (F.col("m.n_blocks") == 0))
+            .otherwise(
+                (F.col("m.n_blocks") == F.col("b.b_blocks"))
+                & (F.col("m.n_cols") == F.col("b.b_cols"))
+                & (F.col("m.n_rows") * F.col("b.b_cols") == F.col("b.chunk_vals"))
+            ),
         )
     )
     bad = joined.filter(~F.coalesce(F.col("ok"), F.lit(False))).select("part_id").collect()

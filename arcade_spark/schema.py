@@ -1,137 +1,64 @@
-"""Schemas for the encoded-blocks and manifest tables — the queryable
-analogue of ARCADE's binary file/block/chunk headers (``fileH`` +
-``blocksizes`` + ``columnindexes`` + ``struct D``, process.h:5-20,
-writer.cpp:419-493). One blocks-table row per (partition, block,
-column) chunk; one manifest row per encoded partition.
+"""Spark-side names for the on-disk tables and the value types. The
+tables' one definition is the Arrow schemas in ``manifest``, the
+queryable analogue of ARCADE's binary file/block/chunk headers
+(``fileH`` + ``blocksizes`` + ``columnindexes`` + ``struct D``,
+process.h:5-20, writer.cpp:419-493); ``MANIFEST_DDL`` is derived from
+them. Each logical value type (vtype) is one row of ``_VTYPES``: its
+Arrow type in decoded blocks and its Spark type.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-BLOCKS_SPARK_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("block_id", T.IntegerType(), False),
-        T.StructField("column", T.StringType(), False),
-        T.StructField("vtype", T.StringType(), False),  # str|binary|int|ts|double
-        T.StructField("codec", T.StringType(), False),
-        T.StructField("post", T.StringType(), True),
-        T.StructField("n_values", T.IntegerType(), False),
-        T.StructField("row_start", T.LongType(), False),  # first row id within part
-        T.StructField("raw_bytes", T.LongType(), False),
-        T.StructField("encoded_bytes", T.LongType(), False),
-        T.StructField("n_distinct", T.LongType(), False),
-        T.StructField("n_runs", T.LongType(), False),
-        T.StructField("n_nulls", T.LongType(), False),
-        T.StructField("code_width", T.IntegerType(), False),
-        T.StructField("dict_len", T.LongType(), False),
-        T.StructField("global_start", T.LongType(), False),
-        T.StructField("global_size", T.LongType(), False),
-        T.StructField("gdict_epoch", T.IntegerType(), False),
-        T.StructField("gdict_reset", T.BooleanType(), False),
-        T.StructField("gdict_seed", T.BooleanType(), False),
-        T.StructField("min_bin", T.BinaryType(), True),
-        T.StructField("max_bin", T.BinaryType(), True),
-        T.StructField("min_exact", T.BooleanType(), False),
-        T.StructField("max_exact", T.BooleanType(), False),
-        T.StructField("min_int", T.LongType(), True),
-        T.StructField("max_int", T.LongType(), True),
-        T.StructField("entropy", T.DoubleType(), False),
-        T.StructField("kernel_ms", T.DoubleType(), False),
-        T.StructField("blob", T.BinaryType(), False),
-        T.StructField("seg", T.BinaryType(), True),
-    ]
-)
-
-BLOCKS_DDL = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in BLOCKS_SPARK_SCHEMA)
-
-MANIFEST_SPARK_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("n_blocks", T.IntegerType(), False),
-        T.StructField("n_cols", T.IntegerType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("raw_bytes", T.LongType(), False),
-        T.StructField("encoded_bytes", T.LongType(), False),
-        T.StructField("encode_seconds", T.DoubleType(), False),
-        T.StructField("throughput_mbps", T.DoubleType(), False),
-        T.StructField("codec_counts", T.StringType(), False),  # json
-        T.StructField("columns", T.StringType(), False),  # json [[name, vtype], ...]
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("format_rev", T.IntegerType(), False),
-        T.StructField("mode", T.StringType(), False),
-        T.StructField("num_parts", T.IntegerType(), False),
-        T.StructField("salt_buckets", T.IntegerType(), False),
-        T.StructField("order_col", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),
-    ]
-)
+from arcade_spark.manifest import MANIFEST_ARROW_SCHEMA
 
 MANIFEST_DDL = ", ".join(
-    f"{f.name} {f.dataType.simpleString()}" for f in MANIFEST_SPARK_SCHEMA
+    f"{f.name} {f.dataType.simpleString()}" for f in from_arrow_schema(MANIFEST_ARROW_SCHEMA)
 )
+
+_VTYPES = {  # vtype: (Arrow type, Spark type)
+    "str": (pa.large_string(), "string"),
+    "binary": (pa.large_binary(), "binary"),
+    "ts": (pa.timestamp("us", tz="UTC"), "timestamp"),
+    "tsntz": (pa.timestamp("us"), "timestamp_ntz"),
+    "int": (pa.int64(), "bigint"),
+    "i32": (pa.int32(), "int"),
+    "i16": (pa.int16(), "smallint"),
+    "i8": (pa.int8(), "tinyint"),
+    "double": (pa.float64(), "double"),
+    "float": (pa.float32(), "float"),
+    "date": (pa.date32(), "date"),
+    "bool": (pa.bool_(), "boolean"),
+}
+_BY_SPARK = {spark: vt for vt, (_, spark) in _VTYPES.items()}
+# a source file's Arrow type → vtype: the regular-width string types and
+# every timestamp unit encode too (blocks hold microseconds)
+_BY_ARROW = {arrow: vt for vt, (arrow, _) in _VTYPES.items()
+             } | {pa.string(): "str", pa.binary(): "binary"}
 
 
 def spark_vtype(dt: T.DataType) -> str:
-    if isinstance(dt, T.StringType):
-        return "str"
-    if isinstance(dt, T.BinaryType):
-        return "binary"
-    if isinstance(dt, T.TimestampType):
-        return "ts"
-    if isinstance(dt, T.TimestampNTZType):
-        return "tsntz"
-    if isinstance(dt, T.LongType):
-        return "int"
-    if isinstance(dt, T.IntegerType):
-        return "i32"
-    if isinstance(dt, T.ShortType):
-        return "i16"
-    if isinstance(dt, T.ByteType):
-        return "i8"
-    if isinstance(dt, T.DoubleType):
-        return "double"
-    if isinstance(dt, T.FloatType):
-        return "float"
-    if isinstance(dt, T.DateType):
-        return "date"
-    if isinstance(dt, T.BooleanType):
-        return "bool"
-    raise TypeError(f"unsupported column type: {dt}")
+    try:
+        return _BY_SPARK[dt.simpleString()]
+    except KeyError:
+        raise TypeError(f"unsupported column type: {dt}") from None
+
+
+def arrow_vtype(t: pa.DataType) -> str:
+    if pa.types.is_timestamp(t):
+        return "ts" if t.tz else "tsntz"
+    try:
+        return _BY_ARROW[t]
+    except KeyError:
+        raise TypeError(f"unsupported column type: {t}") from None
 
 
 def arrow_type_for(vtype: str) -> pa.DataType:
-    return {
-        "str": pa.large_string(),
-        "binary": pa.large_binary(),
-        "ts": pa.timestamp("us", tz="UTC"),
-        "tsntz": pa.timestamp("us"),
-        "int": pa.int64(),
-        "i32": pa.int32(),
-        "i16": pa.int16(),
-        "i8": pa.int8(),
-        "double": pa.float64(),
-        "float": pa.float32(),
-        "date": pa.date32(),
-        "bool": pa.bool_(),
-    }[vtype]
+    return _VTYPES[vtype][0]
 
 
 def spark_type_for(vtype: str) -> str:
-    return {
-        "str": "string",
-        "binary": "binary",
-        "ts": "timestamp",
-        "tsntz": "timestamp_ntz",
-        "int": "bigint",
-        "i32": "int",
-        "i16": "smallint",
-        "i8": "tinyint",
-        "double": "double",
-        "float": "float",
-        "date": "date",
-        "bool": "boolean",
-    }[vtype]
+    return _VTYPES[vtype][1]

@@ -98,6 +98,26 @@ def test_integrity_detects_missing_blocks(spark, small_corpus, tmp_path_factory)
     assert not res["ok"] and len(res["bad_parts"]) == 1
 
 
+def test_integrity_accepts_zero_row_part(spark, tmp_path):
+    """An empty source file commits a marker with n_rows 0 and no column
+    files: a valid part, not a missing one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from arcade_spark.encode import encode_files_job
+
+    d = tmp_path / "src"
+    d.mkdir()
+    t = pa.table({"url": [f"u{i:03d}" for i in range(300)],
+                  "x": pa.array(range(300), pa.int64())})
+    pq.write_table(t, str(d / "a.parquet"))
+    pq.write_table(t.slice(0, 0), str(d / "b.parquet"))
+    out = str(tmp_path / "enc")
+    m = encode_files_job(spark, str(d), out, block_rows=64)
+    assert m["rows"] == 300 and m["new_parts"] == 2
+    assert verify_integrity(spark, out) == {"ok": True, "bad_parts": []}
+
+
 def test_files_mode_roundtrip_and_resume(spark, tmp_path_factory):
     from arcade_spark.corpus import write_corpus_files
     from arcade_spark.encode import encode_files_job

@@ -20,13 +20,20 @@ per ARCADE's own rules.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
-from arcade_spark.convert import series_to_block
+from arcade_spark.convert import arrow_to_block
 from arcade_spark.core import encode_str_block
 from arcade_spark.corpus import corpus_pandas
 from arcade_spark.gdict import GlobalDict
+from arcade_spark.schema import arrow_type_for
 from arcade_spark.stats import profile_str_block
+
+
+def series_block(s, vt):
+    """A pandas column slice → block, through the encoder's own path."""
+    return arrow_to_block(pa.Array.from_pandas(s, type=arrow_type_for(vt)), vt)
 
 
 def _varint_len(x: int) -> int:
@@ -67,7 +74,7 @@ def test_encoded_size_beats_reference_model(col, vt):
     gdict = GlobalDict()
     ours = theirs = 0
     for s in range(0, len(df), 4096):
-        block = series_to_block(df[col].iloc[s : s + 4096], vt)
+        block = series_block(df[col].iloc[s : s + 4096], vt)
         stats = profile_str_block(block)
         blob, meta = encode_str_block(block, gdict)
         ours += len(blob)
@@ -79,7 +86,7 @@ def test_encoded_size_beats_reference_model(col, vt):
 def test_low_cardinality_column_much_smaller():
     df = corpus_pandas(20000, seed=11)
     gdict = GlobalDict()
-    block = series_to_block(df["lang"], "str")
+    block = series_block(df["lang"], "str")
     stats = profile_str_block(block)
     blob, _ = encode_str_block(block, gdict)
     ref = arcade_reference_size(block, stats)
@@ -98,7 +105,7 @@ def test_plain_post_pass_ratio_floor(col, vt, bound):
     gdict = GlobalDict()
     raw = stored = 0
     for s in range(0, len(df), 4096):
-        block = series_to_block(df[col].iloc[s : s + 4096], vt)
+        block = series_block(df[col].iloc[s : s + 4096], vt)
         _blob, meta = encode_str_block(block, gdict)
         assert (meta["codec"], meta["post"]) == ("plain", "zstd")
         raw += meta["raw_bytes"]

@@ -30,6 +30,14 @@ line per run in the same form. Run only that section with
 
     python tools/show_plans.py rank
 
+The write section runs the three write jobs (``encode_files_job`` and
+``encode_job`` on a 20k-row, 4-file corpus, then ``compact_job`` of the
+files-mode table 4 → 1) and prints one line per job: its Spark job and
+stage counts and the Python depth of every stage of the DataFrames it
+collects (an RDD job shows none). Run only that section with
+
+    python tools/show_plans.py write
+
 Every corpus and table it writes is removed when it exits.
 """
 
@@ -68,6 +76,9 @@ def main() -> None:
     if sys.argv[1:] == ["rank"]:
         show_rank(spark, _root("plans_rank"))
         return
+    if sys.argv[1:] == ["write"]:
+        show_write(spark, _root("plans_write"))
+        return
     _ROOTS.append("/tmp/plans_corpus")
     corpus = write_corpus_files(_ROOTS[-1], 20000, 4)
 
@@ -84,6 +95,7 @@ def main() -> None:
     show_keyed(spark, _root("plans_keyed"))
     show_agg(spark, _root("plans_agg"))
     show_rank(spark, _root("plans_rank"))
+    show_write(spark, _root("plans_write"))
 
 
 def _tables(spark, root: str) -> tuple[str, str]:
@@ -291,6 +303,52 @@ def show_rank(spark, root: str) -> None:
     }
     print("=== rank and sort operators: jobs and per-stage python depth ===")
     _print_runs(spark, runs)
+
+
+def show_write(spark, root: str) -> None:
+    """Run the write jobs and print each one's Spark job and stage
+    counts and the per-stage Python depth of every DataFrame it
+    collects (recorded by wrapping ``DataFrame.collect`` for the run)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from arcade_spark.compact import compact_job
+    from arcade_spark.corpus import write_corpus_files
+    from arcade_spark.encode import encode_files_job, encode_job
+    from arcade_spark.planshape import stages
+
+    src = write_corpus_files(os.path.join(root, "src"), 20000, 4)
+    files = os.path.join(root, "files")
+    runs = {
+        "encode_files_job": lambda: encode_files_job(
+            spark, src, files, block_rows=1024),
+        "encode_job": lambda: encode_job(
+            spark, spark.read.parquet(src), os.path.join(root, "shuffle"),
+            num_parts=4, block_rows=1024),
+        "compact_job 4->1": lambda: compact_job(
+            spark, files, os.path.join(root, "compact"), group_size=4),
+    }
+    sc = spark.sparkContext
+    collect = DataFrame.collect
+    print("=== write jobs: jobs, stages and per-stage python depth ===")
+    for name, run in runs.items():
+        collected = []
+
+        def recording(df):
+            collected.append(df)
+            return collect(df)
+
+        group = f"show-plans-{name.split()[0]}"
+        sc.setJobGroup(group, name)
+        DataFrame.collect = recording
+        try:
+            run()
+        finally:
+            DataFrame.collect = collect
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        n_stages = sum(len(sc.statusTracker().getJobInfo(j).stageIds) for j in jobs)
+        depths = [[st["python_depth"] for st in stages(df)] for df in collected]
+        print(f"{name}: jobs {len(jobs)}, stages {n_stages}, stage depths {depths}")
 
 
 if __name__ == "__main__":
