@@ -44,9 +44,9 @@ class EncodedTable:
     # -- metadata ----------------------------------------------------
     @property
     def columns(self) -> list[tuple[str, str]]:
-        from arcade_spark.partread import load_manifest
+        from arcade_spark.partread import Manifest
 
-        return load_manifest(self.out_dir)[0]
+        return list(Manifest.read(self.out_dir).cols)
 
     def manifest(self) -> DataFrame:
         return self.spark.read.parquet(f"{self.out_dir}/manifest")

@@ -107,7 +107,7 @@ def compact_job(
     ``columns`` projects the output table to a subset — the cheap way
     to DROP heavy columns after they've served their purpose (e.g. raw
     html once text is extracted): untouched columns' files never open."""
-    from arcade_spark.partread import load_manifest, range_rows_df
+    from arcade_spark.partread import Manifest, range_rows_df
     from arcade_spark.schema import MANIFEST_DDL
 
     if group_size < 1:
@@ -119,18 +119,12 @@ def compact_job(
             f"fresh table; mixing groups from different runs would corrupt "
             f"row ids (use a new dest_dir)"
         )
-    all_columns, parts = load_manifest(src_dir)
-    if columns is None:
-        columns = all_columns
-    else:
-        by_name = dict(all_columns)
-        missing = [c for c in columns if c not in by_name]
-        if missing:
-            raise KeyError(f"no such column(s): {missing}")
-        # keep source order
-        keep = set(columns)
-        columns = [(n, v) for n, v in all_columns if n in keep]
-    pids = [p for p, _ in parts]
+    m = Manifest.read(src_dir)
+    if columns is not None:
+        m.vts(columns)  # an unknown name raises before the job
+    # keep source order
+    columns = [(n, v) for n, v in m.cols if columns is None or n in columns]
+    pids = m.pids
     groups = [pids[i: i + group_size] for i in range(0, len(pids), group_size)]
     run_id = uuid.uuid4().hex
 

@@ -59,6 +59,6 @@ def scan(
     inside each chunk, so later blocks need earlier chunks' segments
     replayed (ARCADE resolves these via the previndex walk —
     process.cpp:88-123; we replay in block order)."""
-    from arcade_spark.partread import scan_parts
+    from arcade_spark.partread import Manifest, scan_parts
 
-    return scan_parts(spark, out_dir, columns, emit_meta)
+    return scan_parts(spark, Manifest.read(out_dir), columns, emit_meta)

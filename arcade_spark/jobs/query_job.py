@@ -69,12 +69,11 @@ def build_query(spark, args):
         random_access,
     )
 
-    from arcade_spark.partread import load_manifest
+    from arcade_spark.partread import Manifest
 
-    def coerce(v: str, column: str):
+    def coerce(v: str, vt: str):
         """CLI literals arrive as strings — coerce to the column's
-        logical type (the manifest is authoritative)."""
-        vt = dict(load_manifest(args.encoded)[0]).get(column)
+        logical type ``vt`` (the manifest is authoritative)."""
         if vt in ("int", "i32", "i16", "i8"):
             return int(v)
         if vt in ("double", "float"):
@@ -120,14 +119,6 @@ def build_query(spark, args):
                 "filter needs exactly one of --value / --lo+--hi / --in "
                 "/ --prefix / --contains / --suffix / --like / --sample"
             )
-        if args.value is not None:
-            return equi_filter(spark, args.encoded, args.column,
-                               coerce(args.value, args.column),
-                               project=proj, count_only=args.count_only)
-        if args.in_list is not None:
-            return filter_in(spark, args.encoded, args.column,
-                             [coerce(v, args.column) for v in args.in_list.split(",")],
-                             project=proj, count_only=args.count_only)
         if args.prefix is not None:
             return filter_prefix(spark, args.encoded, args.column, args.prefix,
                                  project=proj, count_only=args.count_only)
@@ -144,10 +135,20 @@ def build_query(spark, args):
             num, den = (int(x) for x in args.sample.split("/"))
             return filter_sample(spark, args.encoded, args.column, num, den,
                                  project=proj, count_only=args.count_only)
+        # the value, IN-list and range literals take the column's type
+        vt = Manifest.read(args.encoded).vt(args.column)
+        if args.value is not None:
+            return equi_filter(spark, args.encoded, args.column,
+                               coerce(args.value, vt),
+                               project=proj, count_only=args.count_only)
+        if args.in_list is not None:
+            return filter_in(spark, args.encoded, args.column,
+                             [coerce(v, vt) for v in args.in_list.split(",")],
+                             project=proj, count_only=args.count_only)
         if args.hi is None:
             raise SystemExit("--lo requires --hi")
         return filter_range(spark, args.encoded, args.column,
-                            coerce(args.lo, args.column), coerce(args.hi, args.column),
+                            coerce(args.lo, vt), coerce(args.hi, vt),
                             project=proj, count_only=args.count_only)
     if args.cmd == "random-access":
         ids = [int(x) for x in args.ids.split(",")]

@@ -28,7 +28,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from arcade_spark.decode import scan
     from arcade_spark.manifest import verify_integrity
-    from arcade_spark.partread import load_manifest
+    from arcade_spark.partread import Manifest
     from arcade_spark.session import get_spark
 
     spark = get_spark(app="arcade-verify", cores=args.cores)
@@ -37,7 +37,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.source:
         src = spark.read.parquet(args.source)
         dec = scan(spark, args.encoded)
-        cols = [n for n, _ in load_manifest(args.encoded)[0] if n != args.key]
+        cols = [n for n, _ in Manifest.read(args.encoded).cols if n != args.key]
         cond = None
         for c in cols:
             eq = F.col(f"s.{c}").eqNullSafe(F.col(f"d.{c}"))

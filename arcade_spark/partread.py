@@ -46,6 +46,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -134,6 +135,49 @@ def load_manifest(out_dir: str) -> tuple[list[tuple[str, str]], list[tuple[int, 
         if n > 0
     )
     return cols, parts
+
+
+@dataclass(frozen=True)
+class Manifest:
+    """One table's manifest, read once per table argument of an operator
+    call: ``cols`` ((name, vtype) in table order) and ``parts``
+    ((part_id, n_rows), sorted, zero-row parts skipped). Every kernel
+    builder takes it in place of the table path, and ``vt`` is the one
+    place an unknown column is reported. Not a cache: each call reads
+    its own, so a rewritten table path is never seen stale."""
+
+    out_dir: str
+    cols: tuple[tuple[str, str], ...]
+    parts: tuple[tuple[int, int], ...]
+
+    @classmethod
+    def read(cls, out_dir: str) -> "Manifest":
+        cols, parts = load_manifest(out_dir)
+        return cls(out_dir, tuple(cols), tuple(parts))
+
+    @property
+    def pids(self) -> list[int]:
+        return [p for p, _ in self.parts]
+
+    @property
+    def rows(self) -> int:
+        return sum(n for _, n in self.parts)
+
+    @property
+    def offsets(self) -> np.ndarray:
+        """Global rowid of each part's first row, then the row total —
+        the ``blocksizes`` prefix sums (reader.cpp:113-115)."""
+        sizes = [n for _, n in self.parts]
+        return np.concatenate([[0], np.cumsum(sizes)]).astype(np.int64)
+
+    def vt(self, name: str) -> str:
+        for n, vt in self.cols:
+            if n == name:
+                return vt
+        raise KeyError(f"no such column: {name}")
+
+    def vts(self, names) -> list[str]:
+        return [self.vt(n) for n in names]
 
 
 def range_rows_df(
@@ -371,22 +415,18 @@ def _decode_at(vt: str, meta: dict, blob, pos, gdec) -> pa.Array:
 
 
 def _resolve_project(
-    all_cols: list[tuple[str, str]], names: list[str], op: str | None = None
+    m: Manifest, names: list[str], op: str | None = None
 ) -> list[tuple[str, str]]:
     """``(name, vtype)`` per projected name, in the caller's order.
     ``op`` names a read that needs at least one column: an empty
     projection then raises before any Spark job."""
     if op is not None and not names:
         raise ValueError(f"{op} needs at least one projected column")
-    vt_of = dict(all_cols)
-    missing = [c for c in names if c not in vt_of]
-    if missing:
-        raise KeyError(f"no such column(s): {missing}")
-    return [(c, vt_of[c]) for c in names]
+    return list(zip(names, m.vts(names)))
 
 
 def _compile_conjuncts(
-    raw_conjs: list[list[tuple[str, tuple]]], cols: dict[str, str]
+    raw_conjs: list[list[tuple[str, tuple]]], m: Manifest
 ) -> list[list]:
     """A DNF predicate spec — an OR of AND-lists of ``(column, pred)``
     — compiled to lists of ``readops._Pred``, at most one per column
@@ -400,15 +440,13 @@ def _compile_conjuncts(
         seen: set[str] = set()
         compiled = []
         for column, pred in conj:
-            if column not in cols:
-                raise KeyError(f"no such column: {column}")
             if column in seen:
                 raise ValueError(
                     f"multiple predicates on {column!r} within one conjunct "
                     "not supported"
                 )
             seen.add(column)
-            compiled.append(_Pred(column, cols[column], pred))
+            compiled.append(_Pred(column, m.vt(column), pred))
         conjuncts.append(compiled)
     return conjuncts
 
@@ -653,48 +691,28 @@ def _part_match_positions(
 
 def filter_parts(
     spark: SparkSession,
-    out_dir: str,
-    preds_spec: list[tuple[str, tuple]] | None = None,
+    m: Manifest,
+    dnf_spec: list[list[tuple[str, tuple]]],
     project: list[str] | None = None,
     count_only: bool = False,
-    combine: str = "and",
-    dnf_spec: list[list[tuple[str, tuple]]] | None = None,
 ) -> DataFrame:
-    """Files-mode filter driver. Predicate forms:
-
-    - ``preds_spec`` + ``combine="and"``: conjunction (at most one
-      predicate per column);
-    - ``preds_spec`` + ``combine="or"``: flat disjunction (repeats
-      allowed);
-    - ``dnf_spec``: full disjunctive normal form — OR of AND-lists
-      (each inner list is a conjunction; columns may repeat anywhere).
-
-    All three lower to the same DNF kernel."""
+    """Files-mode filter driver. ``dnf_spec`` is the predicate in
+    disjunctive normal form — an OR of AND-lists of ``(column, pred)``
+    (columns may repeat across conjuncts): a conjunction is one
+    conjunct, a flat disjunction is singleton conjuncts."""
     from arcade_spark.schema import spark_type_for
 
-    if (preds_spec is None) == (dnf_spec is None):
-        raise ValueError("pass exactly one of preds_spec / dnf_spec")
-    if combine not in ("and", "or"):
-        raise ValueError(f"combine must be 'and' or 'or': {combine!r}")
-    columns, parts = load_manifest(out_dir)
-    all_cols = dict(columns)
-
-    if dnf_spec is not None:
-        raw_conjs = dnf_spec
-    elif combine == "and":
-        raw_conjs = [preds_spec]
-    else:
-        raw_conjs = [[pc] for pc in preds_spec]
-    conjuncts = _compile_conjuncts(raw_conjs, all_cols)
+    conjuncts = _compile_conjuncts(dnf_spec, m)
     seen = {p.column for conj in conjuncts for p in conj}
 
     if count_only:
         proj_items: list[tuple[str, str]] = []
     else:
         names = project if project is not None else [
-            c for c, _ in columns if c not in seen
+            c for c, _ in m.cols if c not in seen
         ]
-        proj_items = _resolve_project(columns, names)
+        proj_items = _resolve_project(m, names)
+    out_dir = m.out_dir
 
     def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
         return _filter_part_batches(
@@ -705,12 +723,12 @@ def filter_parts(
         ddl = "part_id int, block_id int, matches long, zone_skipped int"
     else:
         ddl = ", ".join(f"{n} {spark_type_for(v)}" for n, v in proj_items)
-    return _map_parts(spark, [p for p, _ in parts], part_batches, ddl)
+    return _map_parts(spark, m.pids, part_batches, ddl)
 
 
 def scan_parts(
     spark: SparkSession,
-    out_dir: str,
+    m: Manifest,
     columns: list[str] | None = None,
     emit_meta: bool = False,
 ) -> DataFrame:
@@ -720,14 +738,14 @@ def scan_parts(
     follow ``columns`` (table order when None)."""
     from arcade_spark.schema import spark_type_for
 
-    all_cols, parts = load_manifest(out_dir)
-    sel = all_cols if columns is None else _resolve_project(all_cols, columns, "scan")
+    sel = list(m.cols) if columns is None else _resolve_project(m, columns, "scan")
     ddl = ", ".join(
         (["part_id int", "block_id int", "pos long"] if emit_meta else [])
         + [f"{n} {spark_type_for(v)}" for n, v in sel]
     )
+    out_dir = m.out_dir
     return _map_parts(
-        spark, [p for p, _ in parts],
+        spark, m.pids,
         lambda pid: _scan_part_batches(out_dir, pid, sel, emit_meta), ddl,
     )
 
@@ -757,14 +775,12 @@ def _scan_part_batches(
 
 
 def _random_access_targets(
-    parts: list[tuple[int, int]], row_ids: list[int]
+    m: Manifest, row_ids: list[int]
 ) -> dict[int, list[tuple[int, int]]]:
     """Global rowid → {part_id: [(local position, rowid)]} via the
-    manifest prefix sums over ``parts`` (load_manifest's sorted
-    [(part_id, n_rows)] — the ``blocksizes`` index analogue,
-    reader.cpp:113-115). Driver-side metadata math only."""
-    part_ids = [p for p, _ in parts]
-    offsets = np.concatenate([[0], np.cumsum([n for _, n in parts])])
+    manifest prefix sums (``Manifest.offsets``). Driver-side metadata
+    math only."""
+    part_ids, offsets = m.pids, m.offsets
 
     targets: dict[int, list[tuple[int, int]]] = {}
     for rid in row_ids:
@@ -777,7 +793,7 @@ def _random_access_targets(
 
 def random_access_parts(
     spark: SparkSession,
-    out_dir: str,
+    m: Manifest,
     row_ids: list[int],
     project: list[str] | None = None,
 ) -> DataFrame:
@@ -788,13 +804,13 @@ def random_access_parts(
     in table order, when None)."""
     from arcade_spark.schema import spark_type_for
 
-    all_cols, parts = load_manifest(out_dir)
-    if project is not None:
-        all_cols = _resolve_project(all_cols, project, "random_access")
-    targets = _random_access_targets(parts, row_ids)
+    all_cols = (list(m.cols) if project is None
+                else _resolve_project(m, project, "random_access"))
+    targets = _random_access_targets(m, row_ids)
     ddl = "row_id long, " + ", ".join(
         f"{n} {spark_type_for(v)}" for n, v in all_cols
     )
+    out_dir = m.out_dir
     return _map_parts(
         spark, sorted(targets),
         lambda pid: _ra_part_batches(out_dir, pid, targets[pid], all_cols), ddl,
@@ -849,7 +865,7 @@ def _ra_part_batches(
 
 def key_rowid_parts(
     spark: SparkSession,
-    out_dir: str,
+    m: Manifest,
     key_col: str | list[str],
     preds_spec: list[tuple[str, tuple]] | None = None,
     keep_null_keys: bool = False,
@@ -890,25 +906,15 @@ def key_rowid_parts(
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
     if not key_cols:
         raise ValueError("key_col must name at least one column")
-    all_cols, parts = load_manifest(out_dir)
-    cols = dict(all_cols)
-    kvts = []
-    for kc in key_cols:
-        kvt = cols.get(kc)
-        if kvt is None:
-            raise KeyError(f"no such column: {kc}")
-        if kvt in ("double", "float") and not float_order_lane:
-            raise NotImplementedError(
-                "join/rowid extraction on float keys is not supported "
-                "(float equality is not a sane join contract)"
-            )
-        kvts.append(kvt)
-    conjuncts = _compile_conjuncts([preds_spec], cols) if preds_spec else None
-    offsets: dict[int, int] = {}
-    lo = 0
-    for pid, n in parts:
-        offsets[pid] = lo
-        lo += n
+    kvts = m.vts(key_cols)
+    if not float_order_lane and any(vt in ("double", "float") for vt in kvts):
+        raise NotImplementedError(
+            "join/rowid extraction on float keys is not supported "
+            "(float equality is not a sane join contract)"
+        )
+    conjuncts = _compile_conjuncts([preds_spec], m) if preds_spec else None
+    out_dir = m.out_dir
+    offsets = dict(zip(m.pids, m.offsets.tolist()))
     key_items = list(zip(key_cols, kvts))
     names = [f"k{i}" for i in range(len(key_cols))] + ["rid"]
 
@@ -975,7 +981,7 @@ def key_rowid_parts(
     fn = None
     if post is not None:
         fn, ddl = post
-    df = _map_parts(spark, [p for p, _ in parts], part_batches, ddl, post=fn)
+    df = _map_parts(spark, m.pids, part_batches, ddl, post=fn)
     return df, kvts
 
 
@@ -984,7 +990,7 @@ _MAT_SPLIT_ROWS = 1 << 18  # late-materialization group cap (rowid range)
 
 def attach_rowids_parts(
     spark: SparkSession,
-    out_dir: str,
+    m: Manifest,
     stream: DataFrame,
     rid_col: str,
     project: list[str],
@@ -1033,14 +1039,12 @@ def attach_rowids_parts(
             f"projected columns {clash} collide with stream columns "
             f"{stream.columns}"
         )
-    all_cols, parts = load_manifest(out_dir)
-    cols = _resolve_project(all_cols, project)
+    cols = _resolve_project(m, project)
     if not keep_null:
         stream = stream.filter(F.col(rid_col).isNotNull())
     if not project:
         return stream
-    pids = np.array([p for p, _ in parts], dtype=np.int64)
-    offs = np.concatenate([[0], np.cumsum([n for _, n in parts])]).astype(np.int64)
+    out_dir, pids, offs = m.out_dir, m.pids, m.offsets
     dec_schema = _out_schema(cols, lead=[pa.field("row_id", pa.int64())])
     out_struct = StructType(
         stream.schema.fields
@@ -1067,7 +1071,7 @@ def attach_rowids_parts(
             for s0, e0 in zip([0, *cuts], [*cuts, len(u)]):
                 p = pi[s0]
                 batches += _ra_part_batches(
-                    out_dir, int(pids[p]), (u[s0:e0] - offs[p], u[s0:e0]), cols
+                    out_dir, pids[p], (u[s0:e0] - offs[p], u[s0:e0]), cols
                 )
             got = pa.Table.from_batches(batches, schema=dec_schema)
             idx = pa.array(inv.reshape(-1), type=pa.int64())
@@ -1120,7 +1124,7 @@ def _attach_keys(stream: DataFrame, rid_col: str, dup_bound: int) -> list:
 
 
 def compile_agg_specs(
-    specs: list[tuple], cols: dict[str, str], agg_scale: int
+    specs: list[tuple], m: Manifest, agg_scale: int
 ) -> list[dict]:
     """Normalize multi-aggregate specs for the fused kernel.
 
@@ -1149,23 +1153,20 @@ def compile_agg_specs(
             terms = [tuple(t) for t in arg]
         else:
             raise ValueError(f"unknown agg kind: {kind!r}")
-        for _c, m, a in terms:
+        for _c, mult, add in terms:
             # spec-constant sanity: the kernel's float-domain overflow
             # guard checks |m·q| and |a + m·q| before each exact int64
             # op, but a constant at/past 2^62 could cancel a wrapped
             # product inside one check — reject it outright
-            if abs(int(m)) >= 2 ** 62 or abs(int(a)) >= 2 ** 62:
+            if abs(int(mult)) >= 2 ** 62 or abs(int(add)) >= 2 ** 62:
                 raise ValueError(
                     "multi-agg affine constants must satisfy "
-                    f"|m|, |a| < 2^62: got m={m}, a={a}"
+                    f"|m|, |a| < 2^62: got m={mult}, a={add}"
                 )
         div = 1
         col_vt = None
         for col, _m, _a in terms:
-            vt = cols.get(col)
-            if vt is None:
-                raise KeyError(f"no such column: {col}")
-            col_vt = vt
+            vt = col_vt = m.vt(col)
             if vt not in _AGG_VTS:
                 # MIN/MAX over ts/date/bool are real queries and the
                 # int64 lane already carries them (micros / days / 0-1)
@@ -1294,7 +1295,7 @@ def _spec_values(sp: dict, qcache: dict, smask) -> np.ndarray:
 
 def filter_group_by_multi_partials(
     spark: SparkSession,
-    out_dir: str,
+    m: Manifest,
     preds_spec: list[tuple[str, tuple]],
     group_cols: list[str],
     agg_specs: list[tuple],
@@ -1328,16 +1329,10 @@ def filter_group_by_multi_partials(
     block's int64 sum is bounded before it is taken: when
     ``max|v|·rows`` reaches 2^62, float64 estimates of the group sums
     decide, and one at or past 2^62 raises rather than wrap."""
-    all_cols, parts = load_manifest(out_dir)
-    cols = dict(all_cols)
     if len(set(group_cols)) != len(group_cols):
         raise ValueError("duplicate group columns")
-    vts = []
-    for g in group_cols:
-        if g not in cols:
-            raise KeyError(f"no such column: {g}")
-        vts.append(cols[g])
-    cspecs = compile_agg_specs(agg_specs, cols, agg_scale)
+    vts = m.vts(group_cols)
+    cspecs = compile_agg_specs(agg_specs, m, agg_scale)
     # str/binary MIN/MAX specs ride a binary VALUE lane, not the int64
     # quantized lane (global dict codes are not order-preserving)
     bin_cols = sorted({
@@ -1351,14 +1346,17 @@ def filter_group_by_multi_partials(
     # need their own dict-replay state
     bin_only = [c for c in bin_cols if c not in group_cols]
     walk = group_cols + [c for c in needed if c not in group_cols] + bin_only
-    walk_items = [(c, cols[c]) for c in walk]
+    walk_items = list(zip(walk, m.vts(walk)))
+    vt_of = dict(walk_items)
+    first_col = list(m.cols[:1])
 
     if dnf_spec is not None:
         if preds_spec:
             raise ValueError("pass either preds_spec or dnf_spec, not both")
-        conjuncts = _compile_conjuncts(dnf_spec, cols)
+        conjuncts = _compile_conjuncts(dnf_spec, m)
     else:  # None = full scan
-        conjuncts = _compile_conjuncts([preds_spec], cols) if preds_spec else None
+        conjuncts = _compile_conjuncts([preds_spec], m) if preds_spec else None
+    out_dir = m.out_dir
 
     def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
         from arcade_spark.core import decode_int_block
@@ -1370,7 +1368,7 @@ def filter_group_by_multi_partials(
         else:
             # no predicate: every row, as views (no gathers); a count
             # with no column to walk reads one column's block sizes
-            cfs = _open_cols(out_dir, pid, walk_items or all_cols[:1])
+            cfs = _open_cols(out_dir, pid, walk_items or first_col)
             rows_of = next(iter(cfs.values())).cm.n_values
             pos_of = [slice(None)] * len(rows_of)
         blocks = (_lockstep([cfs[c] for c in walk], rows_of > 0) if walk
@@ -1434,7 +1432,7 @@ def filter_group_by_multi_partials(
                 ib = decode_int_block(blob_of[c], meta_of[c])
                 v = None if ib.validity is None else ib.validity[pos]
                 q = quantized_agg_lane(
-                    ib.values[pos], v, cols[c], agg_scale
+                    ib.values[pos], v, vt_of[c], agg_scale
                 )
                 qcache[c] = (q, v)
 
@@ -1588,11 +1586,11 @@ def filter_group_by_multi_partials(
         )]
         + ["c long"]
     )
-    return _map_parts(spark, [p for p, _ in parts], part_batches, ddl), vts, cspecs
+    return _map_parts(spark, m.pids, part_batches, ddl), vts, cspecs
 
 
 def column_topk_parts(
-    spark: SparkSession, out_dir: str, column: str, k: int, descending: bool = True
+    spark: SparkSession, m: Manifest, column: str, k: int, descending: bool = True
 ) -> DataFrame:
     """``SELECT col FROM t ORDER BY col [DESC] LIMIT k`` with zone-map
     block pruning — the ARCADE-thesis answer to top-k: each task keeps
@@ -1603,10 +1601,7 @@ def column_topk_parts(
     values)."""
     from arcade_spark.bits import float_order_keys
 
-    all_cols, parts = load_manifest(out_dir)
-    vt = dict(all_cols).get(column)
-    if vt is None:
-        raise KeyError(f"no such column: {column}")
+    vt, out_dir = m.vt(column), m.out_dir
     lane = ("binary" if vt in ("str", "binary")
             else "double" if vt in ("double", "float") else "long")
 
@@ -1619,7 +1614,7 @@ def column_topk_parts(
                else pa.array(best))
         yield pa.RecordBatch.from_arrays([arr], names=["v"])
 
-    partial = _map_parts(spark, [p for p, _ in parts], part_batches, f"v {lane}")
+    partial = _map_parts(spark, m.pids, part_batches, f"v {lane}")
     ordered = partial.orderBy(F.col("v").desc() if descending else F.col("v").asc())
     return ordered.limit(k).select(_group_key_out(F.col("v"), vt).alias("v"))
 
@@ -1752,7 +1747,7 @@ def _topk_part(
     return best
 
 
-def column_agg_parts(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
+def column_agg_parts(spark: SparkSession, m: Manifest, column: str) -> DataFrame:
     """``column_agg(mode="ieee")`` (round-5, double/float only): TRUE
     IEEE float64 sums for arbitrary doubles the fixed-point contract
     can't carry (huge magnitudes, full precision, ±inf/NaN propagate per
@@ -1768,10 +1763,7 @@ def column_agg_parts(spark: SparkSession, out_dir: str, column: str) -> DataFram
     schema (adds min_v/max_v)."""
     from arcade_spark.core import decode_int_block
 
-    all_cols, parts = load_manifest(out_dir)
-    vt = dict(all_cols).get(column)
-    if vt is None:
-        raise KeyError(f"no such column: {column}")
+    vt, out_dir = m.vt(column), m.out_dir
     if vt not in _AGG_VTS:
         raise NotImplementedError(f"column_agg {_AGG_GUARD}")
     if vt not in ("double", "float"):
@@ -1829,7 +1821,7 @@ def column_agg_parts(spark: SparkSession, out_dir: str, column: str) -> DataFram
         )
 
     rows = _map_parts(
-        spark, [p for p, _ in parts], ipart,
+        spark, m.pids, ipart,
         "pid long, s double, mn double, mx double, hn boolean, ca long, cc long",
     ).collect()
     rows = sorted(rows, key=lambda r: r["pid"])  # pinned fold order
@@ -1868,16 +1860,13 @@ def column_agg_parts(spark: SparkSession, out_dir: str, column: str) -> DataFram
 
 
 def column_null_count_parts(
-    spark: SparkSession, out_dir: str, column: str
+    spark: SparkSession, m: Manifest, column: str
 ) -> DataFrame:
     """``SELECT count(*), count(col), count(*) - count(col)`` from
     chunk METADATA only: each task reads the column file's chunk
     metadata — a few KB per partition, no payload bytes (parquet column
     pruning) — and the driver folds |parts| partial rows."""
-    all_cols, parts = load_manifest(out_dir)
-    vt = dict(all_cols).get(column)
-    if vt is None:
-        raise KeyError(f"no such column: {column}")
+    vt, out_dir = m.vt(column), m.out_dir
 
     def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
         cm = _ColFile(out_dir, pid, column, vt).cm
@@ -1887,9 +1876,7 @@ def column_null_count_parts(
             names=["cnt", "nulls"],
         )
 
-    rows = _map_parts(
-        spark, [p for p, _ in parts], part_batches, "cnt long, nulls long"
-    ).collect()
+    rows = _map_parts(spark, m.pids, part_batches, "cnt long, nulls long").collect()
     cnt = sum(r["cnt"] for r in rows)
     nulls = sum(r["nulls"] for r in rows)
     return spark.createDataFrame(
@@ -1897,7 +1884,7 @@ def column_null_count_parts(
     )
 
 
-def column_minmax_parts(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
+def column_minmax_parts(spark: SparkSession, m: Manifest, column: str) -> DataFrame:
     """Files-mode ``SELECT min(col), max(col), count(*)``.
 
     Integer-family columns answer from chunk METADATA only (zone maps
@@ -1910,10 +1897,7 @@ def column_minmax_parts(spark: SparkSession, out_dir: str, column: str) -> DataF
     count(*) includes them."""
     from arcade_spark.schema import spark_type_for
 
-    all_cols, parts = load_manifest(out_dir)
-    vt = dict(all_cols).get(column)
-    if vt is None:
-        raise KeyError(f"no such column: {column}")
+    vt, out_dir = m.vt(column), m.out_dir
     is_str = vt in ("str", "binary")
 
     def part_batches(pid: int) -> Iterator[pa.RecordBatch]:
@@ -1999,7 +1983,7 @@ def column_minmax_parts(spark: SparkSession, out_dir: str, column: str) -> DataF
         )
 
     ddl = "lo_int long, hi_int long, lo_bin binary, hi_bin binary, cnt long, nulls long"
-    rows = _map_parts(spark, [p for p, _ in parts], part_batches, ddl).collect()
+    rows = _map_parts(spark, m.pids, part_batches, ddl).collect()
 
     cnt = sum(r["cnt"] for r in rows)
     if is_str:

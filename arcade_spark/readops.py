@@ -26,7 +26,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from arcade_spark.partread import _group_key_out, filter_parts, load_manifest
+from arcade_spark.partread import Manifest, _group_key_out, filter_parts
 from arcade_spark.schema import spark_type_for
 
 
@@ -61,6 +61,18 @@ def release_key_caches() -> None:
 
 def _register_key_cache(df: DataFrame) -> None:
     _KEY_CACHES.append(df)
+
+
+def _persist_key_cache(df: DataFrame) -> DataFrame:
+    """``df`` persisted and registered, after releasing the previous
+    op's caches: at most one op's streams stay outstanding per
+    session."""
+    from pyspark import StorageLevel
+
+    release_key_caches()
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _register_key_cache(df)
+    return df
 
 
 class _MaskState:
@@ -258,7 +270,8 @@ def equi_filter(
     """``SELECT project... FROM encoded WHERE column = value``
     (ArcadeReader::equi_filter, reader.cpp:7-66)."""
     return filter_parts(
-        spark, out_dir, [(column, ("eq", value))], project, count_only
+        spark, Manifest.read(out_dir), [[(column, ("eq", value))]], project,
+        count_only,
     )
 
 
@@ -277,7 +290,8 @@ def filter_range(
     cheap: blocks prune on min/max, local/rle dicts compare a code
     range, the global dict keeps a growing in-range entry bitmask."""
     return filter_parts(
-        spark, out_dir, [(column, ("range", lo, hi))], project, count_only
+        spark, Manifest.read(out_dir), [[(column, ("range", lo, hi))]], project,
+        count_only,
     )
 
 
@@ -309,7 +323,8 @@ def filter_and(
     rules it out; the kernel intersects per-column match-position sets,
     and projection columns materialize only the intersection."""
     return filter_parts(
-        spark, out_dir, _preds_to_spec(preds), project, count_only
+        spark, Manifest.read(out_dir), [_preds_to_spec(preds)], project,
+        count_only,
     )
 
 
@@ -330,8 +345,8 @@ def filter_dnf(
     ``filter_and`` / ``filter_or`` are the one-conjunct / singleton-
     conjunct special cases."""
     return filter_parts(
-        spark, out_dir, project=project, count_only=count_only,
-        dnf_spec=[_preds_to_spec(c) for c in conjuncts],
+        spark, Manifest.read(out_dir), [_preds_to_spec(c) for c in conjuncts],
+        project, count_only,
     )
 
 
@@ -349,8 +364,8 @@ def filter_or(
     admits it; the kernel unions per-predicate match positions, so
     projection columns still materialize matched positions only."""
     return filter_parts(
-        spark, out_dir, _preds_to_spec(preds), project, count_only,
-        combine="or",
+        spark, Manifest.read(out_dir), [[p] for p in _preds_to_spec(preds)],
+        project, count_only,
     )
 
 
@@ -367,7 +382,8 @@ def filter_in(
     generalization of the equi-filter's carried offset); zone maps
     prune on the [min, max] envelope of the list."""
     return filter_parts(
-        spark, out_dir, [(column, ("in", list(values)))], project, count_only
+        spark, Manifest.read(out_dir), [[(column, ("in", list(values)))]],
+        project, count_only,
     )
 
 
@@ -386,7 +402,8 @@ def filter_prefix(
     prefix-truncated bounds stay safe because a truncated min is ≤ the
     true min."""
     return filter_parts(
-        spark, out_dir, [(column, ("prefix", pattern))], project, count_only
+        spark, Manifest.read(out_dir), [[(column, ("prefix", pattern))]],
+        project, count_only,
     )
 
 
@@ -404,7 +421,8 @@ def filter_contains(
     plain/fsst blocks materialize and run the same kernel. No zone
     pruning is possible (a substring says nothing about value order)."""
     return filter_parts(
-        spark, out_dir, [(column, ("contains", pattern))], project, count_only
+        spark, Manifest.read(out_dir), [[(column, ("contains", pattern))]],
+        project, count_only,
     )
 
 
@@ -452,8 +470,8 @@ def filter_sample(
     group-level splits. Composable in AND/OR/DNF (e.g. sample ∧ lang
     filter) and negatable (``not_sample`` = the exact complement)."""
     return filter_parts(
-        spark, out_dir, [(column, ("sample", numerator, denominator))],
-        project, count_only,
+        spark, Manifest.read(out_dir),
+        [[(column, ("sample", numerator, denominator))]], project, count_only,
     )
 
 
@@ -472,7 +490,8 @@ def filter_like(
     before the first wildcard. ``filter_prefix`` / ``filter_contains``
     / ``filter_suffix`` are the specialized fast forms."""
     return filter_parts(
-        spark, out_dir, [(column, ("like", pattern))], project, count_only
+        spark, Manifest.read(out_dir), [[(column, ("like", pattern))]],
+        project, count_only,
     )
 
 
@@ -487,7 +506,8 @@ def filter_suffix(
     """``WHERE column LIKE '%pattern'`` (Arrow ``ends_with`` over
     dictionary entries; no zone pruning)."""
     return filter_parts(
-        spark, out_dir, [(column, ("suffix", pattern))], project, count_only
+        spark, Manifest.read(out_dir), [[(column, ("suffix", pattern))]],
+        project, count_only,
     )
 
 
@@ -727,7 +747,7 @@ def column_minmax(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
     |parts| rows. See partread.column_minmax_parts."""
     from arcade_spark.partread import column_minmax_parts
 
-    return column_minmax_parts(spark, out_dir, column)
+    return column_minmax_parts(spark, Manifest.read(out_dir), column)
 
 
 def column_topk(
@@ -741,7 +761,7 @@ def column_topk(
     never read. See partread.column_topk_parts."""
     from arcade_spark.partread import column_topk_parts
 
-    return column_topk_parts(spark, out_dir, column, k, descending)
+    return column_topk_parts(spark, Manifest.read(out_dir), column, k, descending)
 
 
 def column_agg(
@@ -763,7 +783,7 @@ def column_agg(
     if mode not in ("fixed", "ieee"):
         raise ValueError(f"mode must be 'fixed' or 'ieee': {mode!r}")
     if mode == "ieee":
-        return column_agg_parts(spark, out_dir, column)
+        return column_agg_parts(spark, Manifest.read(out_dir), column)
     return _column_totals(
         spark, out_dir, [], column, agg_scale, ("sum", "avg")
     ).selectExpr("sum_v", "cnt_rows AS cnt_all", "cnt_valid AS cnt_col", "avg_v")
@@ -1041,7 +1061,7 @@ def _column_totals(
     from arcade_spark.partread import filter_group_by_multi_partials
 
     partial, _vts, cspecs = filter_group_by_multi_partials(
-        spark, out_dir, _preds_to_spec(preds), [],
+        spark, Manifest.read(out_dir), _preds_to_spec(preds), [],
         [(f"{k}_v", k, col) for k in kinds] + [("cnt_rows", "count", None)],
         agg_scale,
     )
@@ -1085,7 +1105,8 @@ def filter_group_by_multi(
     from arcade_spark.partread import filter_group_by_multi_partials
 
     partial, vts, cspecs = filter_group_by_multi_partials(
-        spark, out_dir, _preds_to_spec(preds), group_cols, aggs, agg_scale,
+        spark, Manifest.read(out_dir), _preds_to_spec(preds), group_cols, aggs,
+        agg_scale,
         dnf_spec=[_preds_to_spec(c) for c in dnf] if dnf is not None else None,
     )
     keys = [f"k{i}" for i in range(len(group_cols))]
@@ -1169,17 +1190,14 @@ def filter_group_by_sets(
             f"{len(idx_sets)} grouping sets exceed {_MAX_GROUPING_SETS}"
         )
     partial, vts, cspecs = filter_group_by_multi_partials(
-        spark, out_dir, _preds_to_spec(preds), group_cols, aggs, agg_scale,
+        spark, Manifest.read(out_dir), _preds_to_spec(preds), group_cols, aggs,
+        agg_scale,
         dnf_spec=[_preds_to_spec(c) for c in dnf] if dnf is not None else None,
         keep_null_keys=True,  # SQL GROUP BY semantics: null groups are
         # real groups — a rolled-up level must keep rows that are null
         # in an unrelated group column
     )
-    from pyspark import StorageLevel
-
-    release_key_caches()
-    partial = partial.persist(StorageLevel.MEMORY_AND_DISK)
-    _register_key_cache(partial)
+    partial = _persist_key_cache(partial)
 
     def _null_type(vt: str) -> str:
         return {
@@ -1252,14 +1270,10 @@ def pivot_table(
     if pivot_col in group_cols:
         raise ValueError(f"pivot column {pivot_col!r} is also grouped")
     partial, vts, cspecs = filter_group_by_multi_partials(
-        spark, out_dir, _preds_to_spec(preds or []),
+        spark, Manifest.read(out_dir), _preds_to_spec(preds or []),
         group_cols + [pivot_col], aggs, agg_scale,
     )
-    from pyspark import StorageLevel
-
-    release_key_caches()
-    partial = partial.persist(StorageLevel.MEMORY_AND_DISK)
-    _register_key_cache(partial)
+    partial = _persist_key_cache(partial)
     n = len(group_cols)
     pv_lane = f"k{n}"
     pv = _group_key_out(F.col(pv_lane), vts[n]).cast("string").alias("_pv")
@@ -1393,10 +1407,8 @@ class _SplitPairs:
 
 
 def _zone_splits(
-    spark: SparkSession, out_dir: str, column: str, is_str: bool,
-    parts: list[tuple[int, int]], n_buckets: int,
-    second: str | None = None, second_is_str: bool = False,
-    second_rid: bool = False,
+    spark: SparkSession, m: Manifest, column: str, n_buckets: int,
+    second: str | None = None, second_rid: bool = False,
 ) -> _SplitPairs:
     """Range split pairs for ``column`` from the ZONE MAPS: a
     metadata-only kernel emits weighted per-block-minimum candidates
@@ -1413,95 +1425,83 @@ def _zone_splits(
     1000 buckets), the second component sub-splits hot first values so
     a hot value never degenerates to one task's sort."""
     import pyarrow as pa
-    from arcade_spark.partread import _ColFile, _assign_df
+    from arcade_spark.partread import _ColFile, _map_parts
 
     i64_min = np.iinfo(np.int64).min
-    offsets: dict[int, int] = {}
-    lo = 0
-    for pid, n in parts:
-        offsets[pid] = lo
-        lo += n
+    is_str = m.vt(column) in ("str", "binary")
+    second_is_str = second is not None and m.vt(second) in ("str", "binary")
+    out_dir = m.out_dir
+    offsets = dict(zip(m.pids, m.offsets.tolist()))
 
-    def cand_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for pid in batch.column("part_id").to_pylist():
-                # zone metadata only: the lane type is all that matters
-                cm = _ColFile(out_dir, int(pid), column,
-                              "binary" if is_str else "int").cm
-                w = cm.n_values - cm.n_nulls
-                if is_str:
-                    full = list(cm.min_bin)
-                    keys = np.array(
-                        [_prefix56(b) if b is not None else -1
-                         for b in full],
-                        dtype=np.int64,
-                    )
-                    ok = keys >= 0
-                else:
-                    full = None
-                    keys = cm.min_int
-                    ok = cm.has_zone
-                ok = ok & (w > 0)
-                if not ok.any():
-                    continue
-                if second_rid:
-                    k1c = offsets[int(pid)] + cm.row_start.astype(np.int64)
-                elif second is not None:
-                    cm1 = _ColFile(out_dir, int(pid), second,
-                                   "binary" if second_is_str else "int").cm
-                    if second_is_str:
-                        k1c = np.array(
-                            [_prefix56(b) if b is not None else i64_min
-                             for b in cm1.min_bin],
-                            dtype=np.int64,
-                        )
-                    else:
-                        k1c = np.where(cm1.has_zone, cm1.min_int, i64_min)
-                else:
-                    k1c = np.full(len(keys), i64_min, dtype=np.int64)
-                idx = np.nonzero(ok)[0]
-                # aggregate weights over unique pairs (full bytes for
-                # binary — prefix collisions must not merge distinct
-                # split values) VECTORIZED: factorize the first lane,
-                # lexsort the pairs, reduceat weights over pair runs —
-                # this sits on the startup path of every sort/rank
-                # query, so no per-block Python dict loop; then cap at
-                # 64 even slices
-                k1 = k1c[idx]
-                ww = w[idx].astype(np.float64)
-                if is_str:
-                    c0_obj = np.array([full[j] for j in idx], dtype=object)
-                    uniq0, codes = np.unique(c0_obj, return_inverse=True)
-                else:
-                    uniq0, codes = np.unique(keys[idx], return_inverse=True)
-                order = np.lexsort((k1, codes))
-                cs, ks = codes[order], k1[order]
-                new = np.ones(len(order), dtype=bool)
-                new[1:] = (cs[1:] != cs[:-1]) | (ks[1:] != ks[:-1])
-                starts = np.nonzero(new)[0]
-                wsum = np.add.reduceat(ww[order], starts)
-                pc, pk = cs[starts], ks[starts]
-                if len(starts) > 64:
-                    cuts = np.linspace(0, len(starts), 65).astype(np.int64)
-                    wsum = np.add.reduceat(wsum, cuts[:-1])
-                    pc, pk = pc[cuts[:-1]], pk[cuts[:-1]]
-                if is_str:
-                    c0f = [bytes(uniq0[c]) for c in pc]
-                    c0p = np.array([_prefix56(b) for b in c0f], np.int64)
-                else:
-                    c0p = uniq0[pc].astype(np.int64)
-                    c0f = [b""] * len(pc)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c0p, type=pa.int64()),
-                     pa.array(c0f, type=pa.binary()),
-                     pa.array(pk.astype(np.int64), type=pa.int64()),
-                     pa.array(wsum.astype(np.int64), type=pa.int64())],
-                    names=["c0p", "c0f", "c1", "w"],
-                )
+    def part_cands(pid: int) -> Iterator[pa.RecordBatch]:
+        # zone metadata only: the lane type is all that matters
+        cm = _ColFile(out_dir, pid, column, "binary" if is_str else "int").cm
+        w = cm.n_values - cm.n_nulls
+        if is_str:
+            full = list(cm.min_bin)
+            keys = np.array([_prefix56(b) if b is not None else -1 for b in full],
+                            dtype=np.int64)
+            ok = keys >= 0
+        else:
+            full = None
+            keys = cm.min_int
+            ok = cm.has_zone
+        ok = ok & (w > 0)
+        if not ok.any():
+            return
+        if second_rid:
+            k1c = offsets[pid] + cm.row_start.astype(np.int64)
+        elif second is not None:
+            cm1 = _ColFile(out_dir, pid, second,
+                           "binary" if second_is_str else "int").cm
+            if second_is_str:
+                k1c = np.array([_prefix56(b) if b is not None else i64_min
+                                for b in cm1.min_bin], dtype=np.int64)
+            else:
+                k1c = np.where(cm1.has_zone, cm1.min_int, i64_min)
+        else:
+            k1c = np.full(len(keys), i64_min, dtype=np.int64)
+        idx = np.nonzero(ok)[0]
+        # aggregate weights over unique pairs (full bytes for binary —
+        # prefix collisions must not merge distinct split values)
+        # VECTORIZED: factorize the first lane, lexsort the pairs,
+        # reduceat weights over pair runs — this sits on the startup
+        # path of every sort/rank query, so no per-block Python dict
+        # loop; then cap at 64 even slices
+        k1 = k1c[idx]
+        ww = w[idx].astype(np.float64)
+        if is_str:
+            c0_obj = np.array([full[j] for j in idx], dtype=object)
+            uniq0, codes = np.unique(c0_obj, return_inverse=True)
+        else:
+            uniq0, codes = np.unique(keys[idx], return_inverse=True)
+        order = np.lexsort((k1, codes))
+        cs, ks = codes[order], k1[order]
+        new = np.ones(len(order), dtype=bool)
+        new[1:] = (cs[1:] != cs[:-1]) | (ks[1:] != ks[:-1])
+        starts = np.nonzero(new)[0]
+        wsum = np.add.reduceat(ww[order], starts)
+        pc, pk = cs[starts], ks[starts]
+        if len(starts) > 64:
+            cuts = np.linspace(0, len(starts), 65).astype(np.int64)
+            wsum = np.add.reduceat(wsum, cuts[:-1])
+            pc, pk = pc[cuts[:-1]], pk[cuts[:-1]]
+        if is_str:
+            c0f = [bytes(uniq0[c]) for c in pc]
+            c0p = np.array([_prefix56(b) for b in c0f], np.int64)
+        else:
+            c0p = uniq0[pc].astype(np.int64)
+            c0f = [b""] * len(pc)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c0p, type=pa.int64()),
+             pa.array(c0f, type=pa.binary()),
+             pa.array(pk.astype(np.int64), type=pa.int64()),
+             pa.array(wsum.astype(np.int64), type=pa.int64())],
+            names=["c0p", "c0f", "c1", "w"],
+        )
 
     cand = (
-        _assign_df(spark, [p for p, _ in parts])
-        .mapInArrow(cand_kernel, schema="c0p long, c0f binary, c1 long, w long")
+        _map_parts(spark, m.pids, part_cands, "c0p long, c0f binary, c1 long, w long")
         .groupBy("c0p", "c0f", "c1").agg(F.sum("w").alias("w"))
         .collect()
     )
@@ -1664,7 +1664,7 @@ def _bucketizer(
 
 
 def _bucket_stream(
-    spark: SparkSession, out_dir: str, cols: dict, parts: list[tuple[int, int]],
+    spark: SparkSession, m: Manifest,
     lanes: list[str], preds: list[tuple] | None, keep_null_keys: bool,
     second_mode: str | None, null1_sentinel: int | None = None,
     buckets: int | None = None, persist: bool = True,
@@ -1685,32 +1685,28 @@ def _bucket_stream(
     writes — and registered for ``release_key_caches``.
 
     Returns (stream, lane vtypes, null bucket)."""
-    from pyspark import StorageLevel
     from arcade_spark.partread import key_rowid_parts
 
-    first_str = cols[lanes[0]] in ("str", "binary")
-    second = lanes[1] if second_mode == "col" else None
+    vts = m.vts(lanes)
     n_buckets = buckets or max(
         8, min(1024, 4 * spark.sparkContext.defaultParallelism)
     )
     splits = _zone_splits(
-        spark, out_dir, lanes[0], first_str, parts, n_buckets, second=second,
-        second_is_str=second is not None and cols[second] in ("str", "binary"),
+        spark, m, lanes[0], n_buckets,
+        second=lanes[1] if second_mode == "col" else None,
         second_rid=second_mode == "rid",
     )
     null_bucket = len(splits) + 1
     stream, kvts = key_rowid_parts(
-        spark, out_dir, lanes, _preds_to_spec(preds) if preds else None,
+        spark, m, lanes, _preds_to_spec(preds) if preds else None,
         keep_null_keys=keep_null_keys,
         float_order_lane=True,
-        post=_bucketizer([cols[c] for c in lanes], first_str, splits,
+        post=_bucketizer(vts, vts[0] in ("str", "binary"), splits,
                          null_bucket, second_mode=second_mode,
                          null1_sentinel=null1_sentinel),
     )
     if persist:
-        release_key_caches()  # at most one outstanding per session
-        stream = stream.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(stream)
+        stream = _persist_key_cache(stream)
     return stream, kvts, null_bucket
 
 
@@ -1751,7 +1747,7 @@ def _bucket_counts(stream: DataFrame, gnames: list[str]) -> dict:
 
 
 def _rank_values(
-    spark: SparkSession, out_dir: str, group_cols: list[str], column: str,
+    spark: SparkSession, m: Manifest, group_cols: list[str], column: str,
     quantiles: list[float] | None, ranks: list[int] | None,
     preds: list[tuple] | None, buckets: int | None, persist: bool,
 ) -> DataFrame:
@@ -1771,23 +1767,18 @@ def _rank_values(
         raise ValueError("pass exactly one of ranks= / quantiles=")
     if not (ranks if ranks is not None else quantiles):
         raise ValueError("ranks/quantiles must be non-empty")
-    all_cols, parts = load_manifest(out_dir)
-    cols = dict(all_cols)
-    for c in [column, *group_cols]:
-        if c not in cols:
-            raise KeyError(f"no such column: {c}")
-    if any(cols[g] in ("double", "float") for g in group_cols):
+    vt, *gvts = m.vts([column, *group_cols])
+    if any(g in ("double", "float") for g in gvts):
         raise NotImplementedError(
             "float group keys are not a sane grouping contract"
         )
     for q in quantiles or ():
         if not (0.0 <= q <= 1.0):
             raise ValueError(f"quantile out of [0,1]: {q}")
-    vt = cols[column]
     is_float = vt in ("double", "float")
 
     keyed_b, kvts, _ = _bucket_stream(
-        spark, out_dir, cols, parts, [column, *group_cols], preds,
+        spark, m, [column, *group_cols], preds,
         keep_null_keys=False,  # null value or null group key → dropped
         second_mode="rid", buckets=buckets, persist=persist,
     )
@@ -1902,8 +1893,8 @@ def column_rank_values(
 
     Returns DF (pos long, v <column's logical type>) — one row per
     requested rank."""
-    return _rank_values(spark, out_dir, [], column, quantiles, ranks,
-                        preds, buckets, persist)
+    return _rank_values(spark, Manifest.read(out_dir), [], column, quantiles,
+                        ranks, preds, buckets, persist)
 
 
 def group_rank_values(
@@ -1938,8 +1929,8 @@ def group_rank_values(
     (group_cols..., pos long, v <column type>)."""
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
-    return _rank_values(spark, out_dir, list(group_cols), column, quantiles,
-                        ranks, preds, buckets, persist)
+    return _rank_values(spark, Manifest.read(out_dir), list(group_cols), column,
+                        quantiles, ranks, preds, buckets, persist)
 
 
 def orderby_export(
@@ -2007,11 +1998,8 @@ def orderby_export(
     else:
         dirs = [bool(desc)] * len(order_cols)
         mixed = False
-    all_cols, parts = load_manifest(out_dir)
-    cols = dict(all_cols)
-    for c in order_cols + list(project):
-        if c not in cols:
-            raise KeyError(f"no such column: {c}")
+    m = Manifest.read(out_dir)
+    m.vts(order_cols + list(project))  # unknown names raise before any job
 
     # second split component (round-6): sub-splits hot first values so
     # ORDER BY (lang, url) on 20 langs still fills n_buckets. The
@@ -2035,7 +2023,7 @@ def orderby_export(
     # sorts above +inf (its key exceeds every finite key), and -0.0
     # orders just before 0.0 (deterministic; SQL considers them equal)
     keyed_b, kvts, null_bucket = _bucket_stream(
-        spark, out_dir, cols, parts, order_cols, preds, keep_null_keys=True,
+        spark, m, order_cols, preds, keep_null_keys=True,
         second_mode=second_mode, null1_sentinel=sentinel, buckets=buckets,
         persist=persist,
     )
@@ -2080,7 +2068,7 @@ def orderby_export(
     # the order-KEY transform (bits.float_order_keys), not the value.
     lane_of = {c: f"k{i}" for i, c in reversed(list(enumerate(order_cols)))}
     lanes_cover = all(
-        c in lane_of and cols[c] not in ("double", "float") for c in project
+        c in lane_of and m.vt(c) not in ("double", "float") for c in project
     )
     keep = sorted({lane_of[c] for c in project}) if lanes_cover else ["rid"]
 
@@ -2106,7 +2094,7 @@ def orderby_export(
     if lanes_cover:
         result = sorted_rows.select(
             "pos",
-            *[_group_key_out(F.col(lane_of[c]), cols[c]).alias(c)
+            *[_group_key_out(F.col(lane_of[c]), m.vt(c)).alias(c)
               for c in project],
         )
     else:
@@ -2115,8 +2103,7 @@ def orderby_export(
         # it back would add two exchanges + a sort-merge join AND execute
         # the bucket-sort subtree twice
         sorted_ids, ln = _clear_lanes(sorted_rows, project)
-        mat = attach_rowids_parts(spark, out_dir, sorted_ids, ln["rid"],
-                                  list(project))
+        mat = attach_rowids_parts(spark, m, sorted_ids, ln["rid"], list(project))
         result = mat.select(F.col(ln["pos"]).alias("pos"), *project)
     if persist:
         # handle kept for callers that release eagerly (bench.py);
@@ -2153,7 +2140,7 @@ def group_count_distinct(
     if not dcols:
         raise ValueError("distinct_col must name at least one column")
     partial, vts, _ = filter_group_by_multi_partials(
-        spark, out_dir, _preds_to_spec(preds or []),
+        spark, Manifest.read(out_dir), _preds_to_spec(preds or []),
         group_cols + dcols, [],
     )
     keys = [f"k{i}" for i in range(len(group_cols))]
@@ -2184,7 +2171,7 @@ def distinct_count_approx(
     from arcade_spark.partread import filter_group_by_multi_partials
 
     partial, _vts, _ = filter_group_by_multi_partials(
-        spark, out_dir, [], [column], []
+        spark, Manifest.read(out_dir), [], [column], []
     )
     return partial.agg(
         F.approx_count_distinct("k0", rsd).alias("n_distinct_approx")
@@ -2197,8 +2184,7 @@ def table_count(spark: SparkSession, out_dir: str) -> DataFrame:
     At 10^12 rows the manifest is one row per partition; this is the
     cheapest query the format can answer (the blocksizes prefix-sum
     index, reader.cpp:113-115, read for its total)."""
-    _, parts = load_manifest(out_dir)
-    return spark.createDataFrame([(int(sum(n for _, n in parts)),)], "cnt long")
+    return spark.createDataFrame([(Manifest.read(out_dir).rows,)], "cnt long")
 
 
 def column_null_count(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
@@ -2207,7 +2193,7 @@ def column_null_count(spark: SparkSession, out_dir: str, column: str) -> DataFra
     partition). See partread.column_null_count_parts."""
     from arcade_spark.partread import column_null_count_parts
 
-    return column_null_count_parts(spark, out_dir, column)
+    return column_null_count_parts(spark, Manifest.read(out_dir), column)
 
 
 def distinct_values(
@@ -2263,6 +2249,9 @@ def filter_semijoin(
         raise ValueError(
             f"keys_df must have exactly one column, got {keys_df.columns}"
         )
+    # unknown names raise before the key collect runs its jobs
+    m = Manifest.read(out_dir)
+    vt, *_ = m.vts([column, *(project or [])])
     rows = keys_df.distinct().limit(_SEMIJOIN_MAX_KEYS + 1).collect()
     if len(rows) > _SEMIJOIN_MAX_KEYS:
         raise ValueError(
@@ -2270,31 +2259,21 @@ def filter_semijoin(
             "use join_encoded (shuffle join over rowids) instead"
         )
     keys = [r[0] for r in rows if r[0] is not None]
-    if not keys:
-        # empty key set: nothing matches; run the filter with a typed
-        # dummy key and drop every row, keeping the output schema
-        vt = dict(load_manifest(out_dir)[0]).get(column)
-        if vt is None:
-            raise KeyError(f"no such column: {column}")
-        dummy = "" if vt in ("str", "binary") else 0
-        empty = filter_in(
-            spark, out_dir, column, [dummy],
-            project=project, count_only=count_only,
+    if keys:
+        return filter_parts(spark, m, [[(column, ("in", keys))]], project, count_only)
+    # empty key set: nothing matches; run the filter with a typed dummy
+    # key and drop every row, keeping the output schema
+    dummy = "" if vt in ("str", "binary") else 0
+    empty = filter_parts(spark, m, [[(column, ("in", [dummy]))]], project, count_only)
+    # count_only keeps its per-block count rows so SUM(matches) folds to
+    # 0, not NULL — matches forced to 0 in case the typed dummy key
+    # collides with real values; .limit(0) only on the row-returning path
+    if count_only:
+        return empty.select(
+            "part_id", "block_id",
+            F.lit(0).cast("long").alias("matches"), "zone_skipped",
         )
-        # count_only keeps its per-block count rows so SUM(matches)
-        # folds to 0, not NULL — matches forced to 0 in case the typed
-        # dummy key collides with real values; .limit(0) only on the
-        # row-returning path
-        if count_only:
-            return empty.select(
-                "part_id", "block_id",
-                F.lit(0).cast("long").alias("matches"), "zone_skipped",
-            )
-        return empty.limit(0)
-    return filter_in(
-        spark, out_dir, column, keys, project=project,
-        count_only=count_only,
-    )
+    return empty.limit(0)
 
 
 # auto-broadcast cap for join_encoded key streams: 2M (key, rid) rows
@@ -2313,8 +2292,6 @@ _BCAST_MAX_KEY_ROWS = 2_000_000
 # is one map-side-combined O(distinct keys) aggregation.
 _HOT_KEY_ROWS = 4_000_000
 _HOT_KEY_MAX = 100_000  # collectible hot-key descriptors
-
-
 
 
 def join_encoded(
@@ -2402,20 +2379,16 @@ def join_encoded(
     # them (NOT EXISTS holds vacuously for a null key).
     keep_a = how in ("left", "full", "anti")
     keep_b = how in ("right", "full")
+    ma, mb = Manifest.read(out_a), Manifest.read(out_b)
     ka, kvts_a = key_rowid_parts(
-        spark, out_a, keys_a, _preds_to_spec(preds_a) if preds_a else None,
+        spark, ma, keys_a, _preds_to_spec(preds_a) if preds_a else None,
         keep_null_keys=keep_a,
     )
     kb, kvts_b = key_rowid_parts(
-        spark, out_b, keys_b, _preds_to_spec(preds_b) if preds_b else None,
+        spark, mb, keys_b, _preds_to_spec(preds_b) if preds_b else None,
         keep_null_keys=keep_b,
     )
-    for i, (va, vb) in enumerate(zip(kvts_a, kvts_b)):
-        if (va in ("str", "binary")) != (vb in ("str", "binary")):
-            raise ValueError(
-                f"join key lanes differ: {keys_a[i]} is {va}, "
-                f"{keys_b[i]} is {vb}"
-            )
+    _check_join_lanes(list(zip(zip(keys_a, kvts_a), zip(keys_b, kvts_b))))
     knames = [f"k{i}" for i in range(len(keys_a))]
     ka_n = ka.select(*knames, F.col("rid").alias("rid_a"))
     kb_n = kb.select(*knames, F.col("rid").alias("rid_b"))
@@ -2424,11 +2397,10 @@ def join_encoded(
     # manifest row totals are a free pre-job upper bound on each key
     # stream; B under the cap → hint BroadcastHashJoin so the fact
     # side's keys never shuffle (every B usage below is a build side)
-    rows_a, rows_b = _manifest_total_rows(out_a), _manifest_total_rows(out_b)
     bc_b = broadcast == "b" or (
-        broadcast == "auto" and rows_b <= _BCAST_MAX_KEY_ROWS
+        broadcast == "auto" and mb.rows <= _BCAST_MAX_KEY_ROWS
     )
-    bc_a = broadcast == "auto" and rows_a <= _BCAST_MAX_KEY_ROWS
+    bc_a = broadcast == "auto" and ma.rows <= _BCAST_MAX_KEY_ROWS
     _hb = F.broadcast if bc_b else (lambda df: df)
     if how in ("semi", "anti"):
         ids = ka_n.join(
@@ -2441,7 +2413,7 @@ def join_encoded(
             return ids.select(*out_cols)
         # rid_a is unique here (one row per left row after the deduped-
         # probe semi/anti)
-        joined = attach_rowids_parts(spark, out_a, ids, ln["rid_a"], project_a)
+        joined = attach_rowids_parts(spark, ma, ids, ln["rid_a"], project_a)
         return joined.select(*out_cols, *project_a)
     ids = ka_n.join(_hb(kb_n), knames)
     if keep_a:
@@ -2468,13 +2440,13 @@ def join_encoded(
     # unmatched row and keeps null projections
     if project_a:
         joined = attach_rowids_parts(
-            spark, out_a, joined, ln["rid_a"], project_a, keep_null=keep_b,
-            dup_bound=rows_b,
+            spark, ma, joined, ln["rid_a"], project_a, keep_null=keep_b,
+            dup_bound=mb.rows,
         )
     if project_b:
         joined = attach_rowids_parts(
-            spark, out_b, joined, ln["rid_b"], project_b, keep_null=keep_a,
-            dup_bound=rows_a,
+            spark, mb, joined, ln["rid_b"], project_b, keep_null=keep_a,
+            dup_bound=ma.rows,
         )
     return joined.select(*out_cols, *project_a, *project_b)
 
@@ -2490,31 +2462,17 @@ def _require_int64_lane(vt: str, col: str, what: str) -> None:
         )
 
 
-def _lane_vtypes(
-    spark: SparkSession, out_dir: str, cols: list[str]
-) -> list[str]:
-    """Manifest vtypes for ``cols`` (in order), KeyError on a miss."""
-    all_cols = dict(load_manifest(out_dir)[0])
-    out = []
-    for c in cols:
-        if c not in all_cols:
-            raise KeyError(f"no such column: {c}")
-        out.append(all_cols[c])
-    return out
-
-
 def _as_cols(cols: str | list[str]) -> list[str]:
     return [cols] if isinstance(cols, str) else list(cols)
 
 
 def _keyed_vtypes(
-    spark: SparkSession, out_dir: str, keys: list[str], rest: list[str],
-    what: str = "key",
+    m: Manifest, keys: list[str], rest: list[str], what: str = "key",
 ) -> list[str]:
     """The shared lane-type check of the keyed-timeline operators:
     manifest vtypes of ``keys + rest``; a float key column is rejected
     (float equality is not a sane partition contract)."""
-    vts = _lane_vtypes(spark, out_dir, keys + rest)
+    vts = m.vts(keys + rest)
     for c, vt in zip(keys, vts):
         if vt in ("double", "float"):
             raise NotImplementedError(
@@ -2749,9 +2707,7 @@ def _split_hot_keys(
     # persist is materialized. Registering releases the previous op's
     # caches first: at most one op's streams stay outstanding per
     # session.
-    release_key_caches()
-    keyed_c = keyed.persist(StorageLevel.MEMORY_AND_DISK)
-    _register_key_cache(keyed_c)
+    keyed_c = _persist_key_cache(keyed)
     stats_df = (
         keyed_c.groupBy(*knames)
         .agg(
@@ -2862,7 +2818,7 @@ def _keyed_pass(
     finish,
     *,
     t_name: str | None = None,
-    out_dirs: tuple = (),
+    row_bound: int = 0,
     threshold: int | None = None,
     band: tuple[int, int] = (0, 0),
     summary: tuple | None = None,
@@ -2878,9 +2834,9 @@ def _keyed_pass(
     output DDL is ``schema``; ``finish(ids, split)`` turns its output
     into the operator's result.
 
-    Hot-key gate: when ``threshold`` is set and the manifests of
-    ``out_dirs`` hold more rows than it (a free bound — no job when it
-    cannot pass), ``_split_hot_keys`` slices every key past
+    Hot-key gate: when ``threshold`` is set and ``row_bound`` (the
+    operator's manifest row total) exceeds it (a free bound — no job
+    when it cannot pass), ``_split_hot_keys`` slices every key past
     ``threshold`` rows into ``t_name`` ranges. With no hot key the
     stream hash-repartitions on the key lanes into ``final(False)``.
     Otherwise it repartitions on the key lanes plus ``slc`` into
@@ -2913,13 +2869,11 @@ def _keyed_pass(
     from pyspark import StorageLevel
 
     sliced = None
-    if threshold is not None:
-        bound = sum(_manifest_total_rows(d) for d in out_dirs)
-        if bound > threshold:
-            sliced, _n_hot = _split_hot_keys(
-                spark, keyed, knames, k_bin, t_name, overlap=band[0],
-                threshold=threshold, overlap_after=band[1], row_bound=bound,
-            )
+    if threshold is not None and row_bound > threshold:
+        sliced, _n_hot = _split_hot_keys(
+            spark, keyed, knames, k_bin, t_name, overlap=band[0],
+            threshold=threshold, overlap_after=band[1], row_bound=row_bound,
+        )
     keys = [F.col(k) for k in knames]
     if sliced is None:
         ids = keyed.repartition(*keys).mapInArrow(final(False), schema=schema)
@@ -3058,23 +3012,26 @@ def join_asof(
     m = len(by_cols)
     # validate lane types from the manifests BEFORE building either
     # stream, so a bad on-column reports its own error (not a missing-
-    # column KeyError from the other side's key extraction)
-    vts_a = _keyed_vtypes(spark, out_a, by_cols, [on])
+    # column KeyError from the other side's key extraction); projected
+    # names resolve here too, before the hot-key split's jobs
+    ma, mb = Manifest.read(out_a), Manifest.read(out_b)
+    vts_a = _keyed_vtypes(ma, by_cols, [on])
     _require_int64_lane(vts_a[m], on, "as-of on")
-    vts_b = _keyed_vtypes(spark, out_b, by_cols, [on_b])
+    vts_b = _keyed_vtypes(mb, by_cols, [on_b])
     _require_int64_lane(vts_b[m], on_b, "as-of on")
+    ma.vts(project_a), mb.vts(project_b)
     for i, (va, vb) in enumerate(zip(vts_a, vts_b)):
         if (va in ("str", "binary")) != (vb in ("str", "binary")):
             raise ValueError(
                 f"by-key lanes differ: {by_cols[i]} is {va} vs {vb}"
             )
     ka, vts_a = key_rowid_parts(
-        spark, out_a, by_cols + [on],
+        spark, ma, by_cols + [on],
         _preds_to_spec(preds_a) if preds_a else None,
         keep_null_keys=keep_a,
     )
     kb, vts_b = key_rowid_parts(
-        spark, out_b, by_cols + [on_b],
+        spark, mb, by_cols + [on_b],
         _preds_to_spec(preds_b) if preds_b else None,
     )
     knames = [f"k{i}" for i in range(m)]
@@ -3255,13 +3212,13 @@ def join_asof(
         if project_a:
             # rid_a is one-per-left-row in the as-of output (never null)
             joined = attach_rowids_parts(
-                spark, out_a, joined, ln["rid_a"], project_a
+                spark, ma, joined, ln["rid_a"], project_a
             )
         if project_b:
             # one right row may be the match of every left row
             joined = attach_rowids_parts(
-                spark, out_b, joined, ln["rid_b"], project_b,
-                keep_null=keep_a, dup_bound=_manifest_total_rows(out_a),
+                spark, mb, joined, ln["rid_b"], project_b,
+                keep_null=keep_a, dup_bound=ma.rows,
             )
         return joined.select(*out_cols, *project_a, *project_b)
 
@@ -3269,7 +3226,7 @@ def join_asof(
     return _keyed_pass(
         spark, lv.unionByName(rv), knames, lane_is_bin, make_merge,
         f"{lanes_ddl}, t long, t_b long, rid_a long, rid_b long", finish,
-        t_name="t", out_dirs=(out_a, out_b), threshold=hot_key_threshold,
+        t_name="t", row_bound=ma.rows + mb.rows, threshold=hot_key_threshold,
         summary=(asof_edges, f"{lanes_ddl}, slc long, l_t long, "
                              f"l_rid long, f_t long, f_rid long"),
         fold=(carry, "t long, side int, rid long"),
@@ -3353,7 +3310,8 @@ def top_per_key(
         raise ValueError(
             f"mode must be row_number/rank/dense_rank: {mode!r}"
         )
-    vts = _keyed_vtypes(spark, out_dir, group_cols, order_cols, "group")
+    m = Manifest.read(out_dir)
+    vts = _keyed_vtypes(m, group_cols, order_cols, "group")
     g = len(group_cols)
     g_bin = [vt in ("str", "binary") for vt in vts[:g]]
     o_bin = [vt in ("str", "binary") for vt in vts[g:]]
@@ -3405,7 +3363,7 @@ def top_per_key(
     lanes_ddl = _lanes_ddl(knames, g_bin + o_bin)
     # the partial top-N pass runs inside the key kernel's task
     partial, _ = key_rowid_parts(
-        spark, out_dir, group_cols + order_cols,
+        spark, m, group_cols + order_cols,
         _preds_to_spec(preds) if preds else None,
         keep_null_keys=True,
         float_order_lane=True,
@@ -3420,7 +3378,7 @@ def top_per_key(
         )
         out_cols = _keys_out([ln[kn] for kn in knames[:g]], vts, group_cols)
         out_cols.append(F.col(ln["rn"]).alias("rn"))
-        result = attach_rowids_parts(spark, out_dir, stream, ln["rid"], project)
+        result = attach_rowids_parts(spark, m, stream, ln["rid"], project)
         return result.select(*out_cols, *project)
 
     # no hot-key gate: the partial pass already bounds each key's rows
@@ -3429,15 +3387,6 @@ def top_per_key(
         spark, partial, knames[:g], g_bin, lambda _split: topn_kernel(True),
         f"{lanes_ddl}, rn long, rid long", finish,
     )
-
-
-def _manifest_total_rows(out_dir: str) -> int:
-    """Total row count from the manifest alone (the blocksizes-index
-    read) — the free upper bound that lets the per-key window ops skip
-    the hot-key stats pass entirely when no key CAN exceed the
-    threshold."""
-    _cols, parts = load_manifest(out_dir)
-    return sum(n for _pid, n in parts)
 
 
 def _clear_lanes(stream: DataFrame, project: list[str]) -> tuple[DataFrame, dict]:
@@ -3512,10 +3461,11 @@ def sessionize(
     if emit not in ("rows", "sessions"):
         raise ValueError(f"emit must be 'rows' or 'sessions': {emit!r}")
     g = len(key_cols)
-    vts = _keyed_vtypes(spark, out_dir, key_cols, [ts_col])
+    m = Manifest.read(out_dir)
+    vts = _keyed_vtypes(m, key_cols, [ts_col])
     _require_int64_lane(vts[g], ts_col, "sessionize timestamp")
     keyed, kvts = key_rowid_parts(
-        spark, out_dir, key_cols + [ts_col],
+        spark, m, key_cols + [ts_col],
         _preds_to_spec(preds) if preds else None,
     )
     k_bin = [vt in ("str", "binary") for vt in kvts[:g]]
@@ -3613,7 +3563,7 @@ def sessionize(
             f"{lanes_ddl}, session long, n_events long, "
             f"t_start long, t_end long"
         ),
-        finish, t_name=f"k{g}", out_dirs=(out_dir,),
+        finish, t_name=f"k{g}", row_bound=m.rows,
         threshold=hot_key_threshold,
         summary=(make_kernel(True, summary=True),
                  f"{lanes_ddl}, slc long, n_sess long, t_first long, t_last long"),
@@ -3675,9 +3625,10 @@ def join_band(
         raise ValueError(f"projection name clash across sides: {sorted(clash)}")
     m = len(by_cols)
 
-    vts_a = _lane_vtypes(spark, out_a, by_cols + [on_a])
+    ma, mb = Manifest.read(out_a), Manifest.read(out_b)
+    vts_a = ma.vts(by_cols + [on_a])
     _require_int64_lane(vts_a[m], on_a, "band-join on")
-    vts_b = _lane_vtypes(spark, out_b, by_cols + [on_b])
+    vts_b = mb.vts(by_cols + [on_b])
     _require_int64_lane(vts_b[m], on_b, "band-join on")
     for i, (va, vb) in enumerate(zip(vts_a, vts_b)):
         if (va in ("str", "binary")) != (vb in ("str", "binary")):
@@ -3686,12 +3637,12 @@ def join_band(
             )
     keep_a = how == "left"
     ka, _ = key_rowid_parts(
-        spark, out_a, by_cols + [on_a],
+        spark, ma, by_cols + [on_a],
         _preds_to_spec(preds_a) if preds_a else None,
         keep_null_keys=keep_a,
     )
     kb, _ = key_rowid_parts(
-        spark, out_b, by_cols + [on_b],
+        spark, mb, by_cols + [on_b],
         _preds_to_spec(preds_b) if preds_b else None,
     )
     knames = [f"k{i}" for i in range(m)]
@@ -3767,13 +3718,12 @@ def join_band(
     out_cols.append(_group_key_out(F.col(ln["s"]), vts_b[m]).alias(f"{on_b}_b"))
     if project_a:
         joined = attach_rowids_parts(
-            spark, out_a, joined, ln["rid_a"], project_a,
-            dup_bound=_manifest_total_rows(out_b),
+            spark, ma, joined, ln["rid_a"], project_a, dup_bound=mb.rows,
         )
     if project_b:
         joined = attach_rowids_parts(
-            spark, out_b, joined, ln["rid_b"], project_b, keep_null=keep_a,
-            dup_bound=_manifest_total_rows(out_a),
+            spark, mb, joined, ln["rid_b"], project_b, keep_null=keep_a,
+            dup_bound=ma.rows,
         )
     return joined.select(*out_cols, *project_a, *project_b)
 
@@ -3871,14 +3821,13 @@ def rolling_agg(
     if need_val and agg_col is None:
         raise ValueError("sum/avg/min/max need an agg_col")
     g = len(key_cols)
-    vts = _keyed_vtypes(
-        spark, out_dir, key_cols, [ts_col] + ([agg_col] if need_val else [])
-    )
+    m = Manifest.read(out_dir)
+    vts = _keyed_vtypes(m, key_cols, [ts_col] + ([agg_col] if need_val else []))
     _require_int64_lane(vts[g], ts_col, "rolling_agg ts")
     if need_val:
         _require_int64_lane(vts[g + 1], agg_col, "rolling_agg agg")
     keyed, kvts = key_rowid_parts(
-        spark, out_dir, key_cols + [ts_col] + ([agg_col] if need_val else []),
+        spark, m, key_cols + [ts_col] + ([agg_col] if need_val else []),
         _preds_to_spec(preds) if preds else None,
     )
     k_bin = [vt in ("str", "binary") for vt in kvts[:g]]
@@ -4086,7 +4035,7 @@ def rolling_agg(
         spark, keyed, knames, k_bin, make_kernel,
         f"{lanes_ddl}, t long, {', '.join(agg_ddl)}",
         lambda ids, _split: ids.select(*out_cols),
-        t_name=f"k{g}", out_dirs=(out_dir,), threshold=hot_key_threshold,
+        t_name=f"k{g}", row_bound=m.rows, threshold=hot_key_threshold,
         **strategy,
     )
 
@@ -4153,11 +4102,12 @@ def window_shift(
         raise ValueError(f"direction must be 'lag' or 'lead': {direction!r}")
     g = len(key_cols)
     m = len(order_cols)
-    vts = _keyed_vtypes(spark, out_dir, key_cols, order_cols + [val_col])
+    mf = Manifest.read(out_dir)
+    vts = _keyed_vtypes(mf, key_cols, order_cols + [val_col])
     # keep_null_keys so null-VAL rows survive the kernel; the required
     # non-null key/order contract is re-imposed on the lanes below
     keyed, kvts = key_rowid_parts(
-        spark, out_dir, key_cols + order_cols + [val_col],
+        spark, mf, key_cols + order_cols + [val_col],
         _preds_to_spec(preds) if preds else None,
         keep_null_keys=True,
         float_order_lane=any(
@@ -4299,7 +4249,7 @@ def window_shift(
         spark, keyed, knames, k_bin, make_shift_kernel,
         f"{lanes_ddl}, v {v_ddl}, s {v_ddl}",
         lambda ids, _split: ids.select(*out_cols),
-        t_name=onames[0], out_dirs=(out_dir,),
+        t_name=onames[0], row_bound=mf.rows,
         threshold=hot_key_threshold if splittable else None,
         summary=(edge_kernel,
                  _lanes_ddl(edge_names, lane_bin + [False, False])),
@@ -4399,7 +4349,7 @@ def join_group_by(
 
     def side_partials(out, key, groups, preds, dnf, side):
         return filter_group_by_multi_partials(
-            spark, out, _preds_to_spec(preds or []), [key] + groups,
+            spark, Manifest.read(out), _preds_to_spec(preds or []), [key] + groups,
             [sp[:3] for sp, s in zip(aggs, sides) if s == side], agg_scale,
             dnf_spec=[_preds_to_spec(c) for c in dnf] if dnf else None,
         )
@@ -4481,7 +4431,8 @@ def join_group_by_chain(
 
     def partials(out, keys, preds, specs):
         return filter_group_by_multi_partials(
-            spark, out, _preds_to_spec(preds or []), keys, specs, agg_scale
+            spark, Manifest.read(out), _preds_to_spec(preds or []), keys, specs,
+            agg_scale,
         )
 
     partial_a, vts_a, cspecs = partials(
@@ -4519,4 +4470,4 @@ def random_access(
     blocks' row groups."""
     from arcade_spark.partread import random_access_parts
 
-    return random_access_parts(spark, out_dir, row_ids, project)
+    return random_access_parts(spark, Manifest.read(out_dir), row_ids, project)

@@ -51,7 +51,7 @@ def test_attach_expands_duplicate_rids(spark, table):
     data = [(seq, rid) for seq, rid in enumerate(
         rid for rid in range(0, 3000, 7) for _ in range(rid % 4))]
     stream = spark.createDataFrame(data, "seq long, rid long")
-    got = pr.attach_rowids_parts(spark, out, stream, "rid", PROJECT,
+    got = pr.attach_rowids_parts(spark, pr.Manifest.read(out), stream, "rid", PROJECT,
                                  dup_bound=3)
     assert got.columns == ["seq", "rid", *PROJECT]
     rows = got.collect()
@@ -65,7 +65,7 @@ def test_attach_null_rids(spark, table, keep_null):
     data = [(seq, None if seq % 3 == 0 else (seq * 11) % 3000)
             for seq in range(600)]
     stream = spark.createDataFrame(data, "seq long, rid long")
-    got = pr.attach_rowids_parts(spark, out, stream, "rid", PROJECT,
+    got = pr.attach_rowids_parts(spark, pr.Manifest.read(out), stream, "rid", PROJECT,
                                  keep_null=keep_null)
     rows = got.collect()
     want = data if keep_null else [d for d in data if d[1] is not None]
@@ -82,7 +82,7 @@ def test_attach_rid_range_spans_parts(spark, table, monkeypatch):
     assert sum(1 for _p, n in parts if n) >= 2
     monkeypatch.setattr(pr, "_MAT_SPLIT_ROWS", 700)
     stream = spark.range(0, 3000, 2).select(F.col("id").alias("rid"))
-    rows = pr.attach_rowids_parts(spark, out, stream, "rid", PROJECT).collect()
+    rows = pr.attach_rowids_parts(spark, pr.Manifest.read(out), stream, "rid", PROJECT).collect()
     assert sorted(r["rid"] for r in rows) == list(range(0, 3000, 2))
     _check(rows, ref)
 
@@ -107,7 +107,7 @@ def test_attach_hot_rid_spreads_over_groups(spark, table, monkeypatch):
     assert len(sizes) >= n_hot / split
     assert sum(sizes) == n_hot and max(sizes) <= 2 * split
     assert hot_groups() == sizes
-    got = pr.attach_rowids_parts(spark, out, stream, "rid", PROJECT,
+    got = pr.attach_rowids_parts(spark, pr.Manifest.read(out), stream, "rid", PROJECT,
                                  dup_bound=n_hot)
     rows = got.collect()
     assert sorted((r["seq"], r["rid"]) for r in rows) == data
@@ -128,7 +128,7 @@ def test_attach_passes_stream_columns_unchanged(spark, table):
         "seq long, b binary, s string, d double, ts timestamp, ni int, "
         "rid long",
     )
-    got = pr.attach_rowids_parts(spark, out, stream, "rid", PROJECT)
+    got = pr.attach_rowids_parts(spark, pr.Manifest.read(out), stream, "rid", PROJECT)
     assert got.schema.fields[:7] == stream.schema.fields
     rows = got.collect()
     assert sorted(tuple(r)[:7] for r in rows) == sorted(
@@ -163,13 +163,13 @@ def test_attach_many_to_many_range_chunks(spark, table, monkeypatch):
         rid for rid in range(0, 3000, 5) for _ in range(1 + rid % 19))]
     stream = spark.createDataFrame(data, "seq long, rid long")
     whole = sorted(tuple(r) for r in pr.attach_rowids_parts(
-        spark, out, stream, "rid", PROJECT).collect())
+        spark, pr.Manifest.read(out), stream, "rid", PROJECT).collect())
     monkeypatch.setattr(pr, "_MAT_SPLIT_ROWS", 64)
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(conf)
     spark.conf.set(conf, "50")
     try:
-        rows = pr.attach_rowids_parts(spark, out, stream, "rid",
+        rows = pr.attach_rowids_parts(spark, pr.Manifest.read(out), stream, "rid",
                                       PROJECT).collect()
     finally:
         spark.conf.set(conf, old)

@@ -93,11 +93,11 @@ def test_split_bounds_task_rows(spark, hot_table):
     context replication adds at most one copy per row."""
     from pyspark.sql import functions as F
 
-    from arcade_spark.partread import key_rowid_parts
+    from arcade_spark.partread import Manifest, key_rowid_parts
     from arcade_spark.readops import _split_hot_keys
 
     out, _ = hot_table
-    keyed, kvts = key_rowid_parts(spark, out, ["uid", "t"])
+    keyed, kvts = key_rowid_parts(spark, Manifest.read(out), ["uid", "t"])
     sliced, n_hot = _split_hot_keys(
         spark, keyed, ["k0"], [False], "k1",
         overlap=5000, threshold=THRESH)
@@ -351,11 +351,11 @@ def test_window_shift_split_bounds_task_rows(spark, hot_table):
     at most ``offset`` rows per present slice."""
     from pyspark.sql import functions as F
 
-    from arcade_spark.partread import key_rowid_parts
+    from arcade_spark.partread import Manifest, key_rowid_parts
     from arcade_spark.readops import _split_hot_keys
 
     out, _ = hot_table
-    keyed, _ = key_rowid_parts(spark, out, ["uid", "t", "ev", "amt"],
+    keyed, _ = key_rowid_parts(spark, Manifest.read(out), ["uid", "t", "ev", "amt"],
                                keep_null_keys=True)
     keyed = keyed.filter("k0 IS NOT NULL AND k1 IS NOT NULL "
                          "AND k2 IS NOT NULL")

@@ -327,9 +327,10 @@ def test_materialize_split_key_multi_group(spark, tmp_path_factory, monkeypatch)
 
     rids = spark.range(0, 3000, 3).select(F.col("id").alias("rid"))
     whole = sorted(tuple(r) for r in pr.attach_rowids_parts(
-        spark, out, rids, "rid", ["url", "tag", "n"]).collect())
+        spark, pr.Manifest.read(out), rids, "rid", ["url", "tag", "n"]).collect())
     monkeypatch.setattr(pr, "_MAT_SPLIT_ROWS", 500)
-    got = pr.attach_rowids_parts(spark, out, rids, "rid", ["url", "tag", "n"])
+    got = pr.attach_rowids_parts(spark, pr.Manifest.read(out), rids, "rid",
+                                 ["url", "tag", "n"])
     rows = sorted(tuple(r) for r in got.collect())
     assert len(rows) == 1000
     assert rows[0] == (0, "u00000", "t-0", 0)

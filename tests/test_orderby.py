@@ -310,18 +310,15 @@ def test_composite_splits_low_cardinality_first(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("csplit") / "enc")
     encode_job(spark, src, out, num_parts=4, block_rows=128, order_col="lang")
 
-    from arcade_spark.partread import load_manifest
+    from arcade_spark.partread import Manifest
 
-    all_cols, parts = load_manifest(out)
-    splits = _zone_splits(
-        spark, out, "lang", True, parts, 24,
-        second="url", second_is_str=True,
-    )
+    m = Manifest.read(out)
+    splits = _zone_splits(spark, m, "lang", 24, second="url")
     assert len(splits) >= 20, f"only {len(splits)} split pairs"
 
-    kvts = [dict(all_cols)[c] for c in ("lang", "url")]
+    kvts = m.vts(["lang", "url"])
     keyed_b, _ = key_rowid_parts(
-        spark, out, ["lang", "url"],
+        spark, m, ["lang", "url"],
         post=_bucketizer(
             kvts, True, splits, len(splits) + 1,
             second_mode="col", null1_sentinel=np.iinfo(np.int64).max,

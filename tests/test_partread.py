@@ -632,13 +632,14 @@ def test_encode_groups_assignment_is_one_per_task(spark):
 def test_materialize_carry_names_must_not_collide(spark, table):
     """A projected column named like a stream column the attach carries
     would put duplicate fields in the applyInArrow schema."""
-    from arcade_spark.partread import attach_rowids_parts
+    from arcade_spark.partread import Manifest, attach_rowids_parts
 
     out, _ = table
+    m = Manifest.read(out)
     rids = spark.createDataFrame([(0, 5, 6)], "rid long, pos long, x long")
     for project in (["url", "x"], ["rid"], ["pos", "url"]):
         with pytest.raises(ValueError, match="collide"):
-            attach_rowids_parts(spark, out, rids, "rid", project)
-    got = attach_rowids_parts(spark, out, rids, "rid", ["url"])
+            attach_rowids_parts(spark, m, rids, "rid", project)
+    got = attach_rowids_parts(spark, m, rids, "rid", ["url"])
     assert got.columns == ["rid", "pos", "x", "url"]
     assert [tuple(r) for r in got.select("rid", "pos", "x").collect()] == [(0, 5, 6)]

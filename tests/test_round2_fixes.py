@@ -225,8 +225,9 @@ def test_random_access_ships_only_touched_blocks(fetch_table, fetched):
     from arcade_spark import partread
 
     out, _ = fetch_table
-    cols, parts = partread.load_manifest(out)
-    targets = partread._random_access_targets(parts, [3, 1500, 2500, 3999])
+    m = partread.Manifest.read(out)
+    cols = list(m.cols)
+    targets = partread._random_access_targets(m, [3, 1500, 2500, 3999])
     fulls = {
         pid: pa.Table.from_batches(
             list(partread._scan_part_batches(out, pid, cols, False))
