@@ -426,15 +426,17 @@ def _resolve_project(
 
 
 def _compile_conjuncts(
-    raw_conjs: list[list[tuple[str, tuple]]], m: Manifest
-) -> list[list]:
-    """A DNF predicate spec — an OR of AND-lists of ``(column, pred)``
-    — compiled to lists of ``readops._Pred``, at most one per column
-    within a conjunct."""
+    where: list[list[tuple[str, tuple]]] | None, m: Manifest
+) -> list[list] | None:
+    """A kernel builder's ``where`` — None (no predicate) or a DNF
+    spec, an OR of AND-lists of ``(column, pred)`` — compiled to lists
+    of ``readops._Pred``, at most one per column within a conjunct."""
     from arcade_spark.readops import _Pred
 
+    if where is None:
+        return None
     conjuncts = []
-    for conj in raw_conjs:
+    for conj in where:
         if not conj:
             raise ValueError("empty conjunct")
         seen: set[str] = set()
@@ -692,17 +694,19 @@ def _part_match_positions(
 def filter_parts(
     spark: SparkSession,
     m: Manifest,
-    dnf_spec: list[list[tuple[str, tuple]]],
+    where: list[list[tuple[str, tuple]]],
     project: list[str] | None = None,
     count_only: bool = False,
 ) -> DataFrame:
-    """Files-mode filter driver. ``dnf_spec`` is the predicate in
+    """Files-mode filter driver. ``where`` is the predicate in
     disjunctive normal form — an OR of AND-lists of ``(column, pred)``
     (columns may repeat across conjuncts): a conjunction is one
-    conjunct, a flat disjunction is singleton conjuncts."""
+    conjunct, a flat disjunction is singleton conjuncts. A filter
+    always has one: unlike the other builders, ``where`` is never
+    None here."""
     from arcade_spark.schema import spark_type_for
 
-    conjuncts = _compile_conjuncts(dnf_spec, m)
+    conjuncts = _compile_conjuncts(where, m)
     seen = {p.column for conj in conjuncts for p in conj}
 
     if count_only:
@@ -866,16 +870,15 @@ def _ra_part_batches(
 def key_rowid_parts(
     spark: SparkSession,
     m: Manifest,
+    where: list[list[tuple[str, tuple]]] | None,
     key_col: str | list[str],
-    preds_spec: list[tuple[str, tuple]] | None = None,
     keep_null_keys: bool = False,
-    float_order_lane: bool = False,
     post: tuple | None = None,
 ) -> tuple[DataFrame, list[str]]:
     """(key..., global row id) tuples for every [predicate-matched] row
     with a fully-non-null key — the probe side of the encoded-to-encoded
     shuffle join. The kernel decodes ONLY the key column(s) (positions
-    from the shared DNF predicate pass when ``preds_spec`` is given;
+    from the shared DNF predicate pass when ``where`` is given;
     zone-pruned blocks replay segments only), and each emitted row is
     (key lanes, rowid) — tens of bytes — so the join shuffle never
     carries payload columns. Global rowids come from the manifest
@@ -886,13 +889,12 @@ def key_rowid_parts(
     round-5): each key column gets its own output lane ``k0..kn``
     (binary for str/binary, long otherwise). A row's key is null if
     ANY component is null (SQL composite equi-join: a null component
-    makes the conjunct unknown). Integer-family and str/binary keys
-    only (double keys need canonicalization the join contract doesn't
-    define) — unless ``float_order_lane`` is set, which emits
-    double/float columns as their ORDER-PRESERVING int64 key
-    (bits.float_order_keys) instead of raising: valid for ORDER BY /
-    range semantics, NOT for equality joins (-0.0 and 0.0 get distinct
-    keys). ``keep_null_keys`` emits null-key rows too — they never
+    makes the conjunct unknown). Double/float columns ride their
+    ORDER-PRESERVING int64 key (bits.float_order_keys): valid for ORDER
+    BY / range semantics, NOT for equality joins (-0.0 and 0.0 get
+    distinct keys), so the join and keyed operators reject float KEY
+    columns before they build a stream (``readops._check_keys``).
+    ``keep_null_keys`` emits null-key rows too — they never
     equi-match but outer joins must preserve them.
 
     ``post = (fn, ddl)`` runs the batch kernel ``fn`` over the key
@@ -907,12 +909,7 @@ def key_rowid_parts(
     if not key_cols:
         raise ValueError("key_col must name at least one column")
     kvts = m.vts(key_cols)
-    if not float_order_lane and any(vt in ("double", "float") for vt in kvts):
-        raise NotImplementedError(
-            "join/rowid extraction on float keys is not supported "
-            "(float equality is not a sane join contract)"
-        )
-    conjuncts = _compile_conjuncts([preds_spec], m) if preds_spec else None
+    conjuncts = _compile_conjuncts(where, m)
     out_dir = m.out_dir
     offsets = dict(zip(m.pids, m.offsets.tolist()))
     key_items = list(zip(key_cols, kvts))
@@ -1296,17 +1293,16 @@ def _spec_values(sp: dict, qcache: dict, smask) -> np.ndarray:
 def filter_group_by_multi_partials(
     spark: SparkSession,
     m: Manifest,
-    preds_spec: list[tuple[str, tuple]],
+    where: list[list[tuple[str, tuple]]] | None,
     group_cols: list[str],
     agg_specs: list[tuple],
     agg_scale: int = AGG_SCALE,
-    dnf_spec: list[list[tuple[str, tuple]]] | None = None,
     keep_null_keys: bool = False,
 ) -> tuple[DataFrame, list[str], list[dict]]:
-    """MULTI-aggregate fused ``WHERE <conj> GROUP BY g1.. `` — the
+    """MULTI-aggregate fused ``WHERE <dnf> GROUP BY g1.. `` — the
     engine's one group-by kernel (group_count, group_sum, group_by and
     the rest are aggregate specs over it) and the COMPLETE TPC-H Q1
-    shape: one predicate pass (none for an empty conjunction), one
+    shape: one predicate pass (none for ``where=None``), one
     positional decode per referenced agg column, N integer accumulators
     per group. Group columns contribute per-row codes (dictionary/RLE
     codes as stored — no string materialization; int and float lanes
@@ -1350,12 +1346,7 @@ def filter_group_by_multi_partials(
     vt_of = dict(walk_items)
     first_col = list(m.cols[:1])
 
-    if dnf_spec is not None:
-        if preds_spec:
-            raise ValueError("pass either preds_spec or dnf_spec, not both")
-        conjuncts = _compile_conjuncts(dnf_spec, m)
-    else:  # None = full scan
-        conjuncts = _compile_conjuncts([preds_spec], m) if preds_spec else None
+    conjuncts = _compile_conjuncts(where, m)  # None = full scan
     out_dir = m.out_dir
 
     def part_batches(pid: int) -> Iterator[pa.RecordBatch]:

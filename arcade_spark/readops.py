@@ -310,6 +310,21 @@ def _preds_to_spec(preds: list[tuple]) -> list[tuple[str, tuple]]:
     return spec
 
 
+def _where(
+    preds: list[tuple] | None = None, dnf: list[list[tuple]] | None = None,
+) -> list[list[tuple[str, tuple]]] | None:
+    """A public operator's predicate in the kernel builders' one form
+    (their ``where``): ``preds`` is a conjunction, ``dnf`` an OR of
+    conjunctions; the result is None when there is no predicate (no
+    ``dnf`` and an empty or absent ``preds``), else the DNF spec of
+    ``(column, pred)`` lists."""
+    if dnf is None:
+        return [_preds_to_spec(preds)] if preds else None
+    if preds:
+        raise ValueError("pass either preds or dnf, not both")
+    return [_preds_to_spec(c) for c in dnf]
+
+
 def filter_and(
     spark: SparkSession,
     out_dir: str,
@@ -323,7 +338,7 @@ def filter_and(
     rules it out; the kernel intersects per-column match-position sets,
     and projection columns materialize only the intersection."""
     return filter_parts(
-        spark, Manifest.read(out_dir), [_preds_to_spec(preds)], project,
+        spark, Manifest.read(out_dir), _where(dnf=[preds]), project,
         count_only,
     )
 
@@ -345,8 +360,8 @@ def filter_dnf(
     ``filter_and`` / ``filter_or`` are the one-conjunct / singleton-
     conjunct special cases."""
     return filter_parts(
-        spark, Manifest.read(out_dir), [_preds_to_spec(c) for c in conjuncts],
-        project, count_only,
+        spark, Manifest.read(out_dir), _where(dnf=conjuncts), project,
+        count_only,
     )
 
 
@@ -364,7 +379,7 @@ def filter_or(
     admits it; the kernel unions per-predicate match positions, so
     projection columns still materialize matched positions only."""
     return filter_parts(
-        spark, Manifest.read(out_dir), [[p] for p in _preds_to_spec(preds)],
+        spark, Manifest.read(out_dir), _where(dnf=[[p] for p in preds]),
         project, count_only,
     )
 
@@ -447,7 +462,8 @@ def filter_agg(
     — cross-engine bit-identical either way. A sum that would pass
     2^62 raises."""
     return _column_totals(
-        spark, out_dir, preds, agg_col, agg_scale, ("sum", "min", "max", "avg")
+        spark, out_dir, _where(preds), agg_col, agg_scale,
+        ("sum", "min", "max", "avg"),
     ).select("cnt_rows", "cnt_valid", "sum_v", "min_v", "max_v", "avg_v")
 
 
@@ -785,7 +801,7 @@ def column_agg(
     if mode == "ieee":
         return column_agg_parts(spark, Manifest.read(out_dir), column)
     return _column_totals(
-        spark, out_dir, [], column, agg_scale, ("sum", "avg")
+        spark, out_dir, None, column, agg_scale, ("sum", "avg")
     ).selectExpr("sum_v", "cnt_rows AS cnt_all", "cnt_valid AS cnt_col", "avg_v")
 
 
@@ -1035,33 +1051,40 @@ def _check_aggs(keys: list[str], aggs: list[tuple]) -> None:
         raise ValueError(f"output name clash: {names}")
 
 
-def _check_join_lanes(pairs: list[tuple[tuple[str, str], tuple[str, str]]]) -> None:
-    """Each ``((col, vtype), (col, vtype))`` pair is joinable: a float
-    key raises (float equality is not a sane join contract), and a
-    string key against an integer key is a lane mismatch."""
-    for (ca, va), (cb, vb) in pairs:
-        for col, vt in ((ca, va), (cb, vb)):
+def _check_keys(
+    ma: Manifest, keys_a: list[str],
+    mb: Manifest | None = None, keys_b: list[str] | None = None,
+) -> None:
+    """The one key-lane rule of the join and keyed operators, read off
+    the manifests before any key stream is built: a float key column
+    raises (float equality is not a sane join or partition contract),
+    and a str/binary key joined to an integer-lane key (``keys_b`` of
+    ``mb``, pairwise) is a lane mismatch."""
+    mb, keys_b = (ma, keys_a) if mb is None else (mb, keys_b)
+    for pair in zip(zip(keys_a, ma.vts(keys_a)), zip(keys_b, mb.vts(keys_b))):
+        for col, vt in pair:
             if vt in ("double", "float"):
                 raise NotImplementedError(
-                    f"join on float keys is not supported: {col}"
+                    f"float keys are not supported: {col} is {vt}"
                 )
+        (ca, va), (cb, vb) = pair
         if (va in ("str", "binary")) != (vb in ("str", "binary")):
-            raise ValueError(f"join key lanes differ: {ca} is {va}, {cb} is {vb}")
+            raise ValueError(f"key lanes differ: {ca} is {va}, {cb} is {vb}")
 
 
 def _column_totals(
-    spark: SparkSession, out_dir: str, preds: list[tuple], col: str,
+    spark: SparkSession, out_dir: str, where: list | None, col: str,
     agg_scale: int, kinds: tuple[str, ...],
 ) -> DataFrame:
     """``count(*) cnt_rows``, ``count(col) cnt_valid`` and one
     ``{kind}_v`` per aggregate kind over ``col`` (``kinds`` starts with
-    ``"sum"``) [WHERE <conjunction>] in one row: the zero-key kernel
+    ``"sum"``) [WHERE ``where``] in one row: the zero-key kernel
     and the finalizer (filter_agg, column_agg). count(col) is the sum
     spec's valid-row lane ``c0``."""
     from arcade_spark.partread import filter_group_by_multi_partials
 
     partial, _vts, cspecs = filter_group_by_multi_partials(
-        spark, Manifest.read(out_dir), _preds_to_spec(preds), [],
+        spark, Manifest.read(out_dir), where, [],
         [(f"{k}_v", k, col) for k in kinds] + [("cnt_rows", "count", None)],
         agg_scale,
     )
@@ -1105,9 +1128,8 @@ def filter_group_by_multi(
     from arcade_spark.partread import filter_group_by_multi_partials
 
     partial, vts, cspecs = filter_group_by_multi_partials(
-        spark, Manifest.read(out_dir), _preds_to_spec(preds), group_cols, aggs,
+        spark, Manifest.read(out_dir), _where(preds, dnf), group_cols, aggs,
         agg_scale,
-        dnf_spec=[_preds_to_spec(c) for c in dnf] if dnf is not None else None,
     )
     keys = [f"k{i}" for i in range(len(group_cols))]
     return _fold_out(partial, keys, vts, group_cols, cspecs)
@@ -1190,9 +1212,8 @@ def filter_group_by_sets(
             f"{len(idx_sets)} grouping sets exceed {_MAX_GROUPING_SETS}"
         )
     partial, vts, cspecs = filter_group_by_multi_partials(
-        spark, Manifest.read(out_dir), _preds_to_spec(preds), group_cols, aggs,
+        spark, Manifest.read(out_dir), _where(preds, dnf), group_cols, aggs,
         agg_scale,
-        dnf_spec=[_preds_to_spec(c) for c in dnf] if dnf is not None else None,
         keep_null_keys=True,  # SQL GROUP BY semantics: null groups are
         # real groups — a rolled-up level must keep rows that are null
         # in an unrelated group column
@@ -1270,7 +1291,7 @@ def pivot_table(
     if pivot_col in group_cols:
         raise ValueError(f"pivot column {pivot_col!r} is also grouped")
     partial, vts, cspecs = filter_group_by_multi_partials(
-        spark, Manifest.read(out_dir), _preds_to_spec(preds or []),
+        spark, Manifest.read(out_dir), _where(preds),
         group_cols + [pivot_col], aggs, agg_scale,
     )
     partial = _persist_key_cache(partial)
@@ -1664,14 +1685,14 @@ def _bucketizer(
 
 
 def _bucket_stream(
-    spark: SparkSession, m: Manifest,
-    lanes: list[str], preds: list[tuple] | None, keep_null_keys: bool,
+    spark: SparkSession, m: Manifest, where: list | None,
+    lanes: list[str], keep_null_keys: bool,
     second_mode: str | None, null1_sentinel: int | None = None,
     buckets: int | None = None, persist: bool = True,
 ) -> tuple[DataFrame, list[str], int]:
     """The front half of every rank and sort operator: the bucketed
     ``(bkt, k0.., rid)`` key stream over ``lanes`` (order lanes first,
-    then any group lanes).
+    then any group lanes) of the rows ``where`` keeps.
 
     Range split points for the first lane come from the ZONE MAPS
     (``_zone_splits``, no sampling pass), sub-split on ``second_mode``
@@ -1698,9 +1719,7 @@ def _bucket_stream(
     )
     null_bucket = len(splits) + 1
     stream, kvts = key_rowid_parts(
-        spark, m, lanes, _preds_to_spec(preds) if preds else None,
-        keep_null_keys=keep_null_keys,
-        float_order_lane=True,
+        spark, m, where, lanes, keep_null_keys=keep_null_keys,
         post=_bucketizer(vts, vts[0] in ("str", "binary"), splits,
                          null_bucket, second_mode=second_mode,
                          null1_sentinel=null1_sentinel),
@@ -1749,7 +1768,7 @@ def _bucket_counts(stream: DataFrame, gnames: list[str]) -> dict:
 def _rank_values(
     spark: SparkSession, m: Manifest, group_cols: list[str], column: str,
     quantiles: list[float] | None, ranks: list[int] | None,
-    preds: list[tuple] | None, buckets: int | None, persist: bool,
+    where: list | None, buckets: int | None, persist: bool,
 ) -> DataFrame:
     """``group_rank_values`` for any number of group columns, zero
     included (``column_rank_values``): count → target → pick over one
@@ -1767,18 +1786,15 @@ def _rank_values(
         raise ValueError("pass exactly one of ranks= / quantiles=")
     if not (ranks if ranks is not None else quantiles):
         raise ValueError("ranks/quantiles must be non-empty")
-    vt, *gvts = m.vts([column, *group_cols])
-    if any(g in ("double", "float") for g in gvts):
-        raise NotImplementedError(
-            "float group keys are not a sane grouping contract"
-        )
+    vt = m.vt(column)
+    _check_keys(m, group_cols)
     for q in quantiles or ():
         if not (0.0 <= q <= 1.0):
             raise ValueError(f"quantile out of [0,1]: {q}")
     is_float = vt in ("double", "float")
 
     keyed_b, kvts, _ = _bucket_stream(
-        spark, m, [column, *group_cols], preds,
+        spark, m, where, [column, *group_cols],
         keep_null_keys=False,  # null value or null group key → dropped
         second_mode="rid", buckets=buckets, persist=persist,
     )
@@ -1894,7 +1910,7 @@ def column_rank_values(
     Returns DF (pos long, v <column's logical type>) — one row per
     requested rank."""
     return _rank_values(spark, Manifest.read(out_dir), [], column, quantiles,
-                        ranks, preds, buckets, persist)
+                        ranks, _where(preds), buckets, persist)
 
 
 def group_rank_values(
@@ -1930,7 +1946,7 @@ def group_rank_values(
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
     return _rank_values(spark, Manifest.read(out_dir), list(group_cols), column,
-                        quantiles, ranks, preds, buckets, persist)
+                        quantiles, ranks, _where(preds), buckets, persist)
 
 
 def orderby_export(
@@ -1983,7 +1999,6 @@ def orderby_export(
     keys (bits.float_order_keys — NaN above +inf, -0.0 just before
     0.0)."""
     import pyarrow as pa
-    from arcade_spark.partread import attach_rowids_parts
 
     order_cols = [order_cols] if isinstance(order_cols, str) else list(order_cols)
     if not order_cols:
@@ -2023,7 +2038,7 @@ def orderby_export(
     # sorts above +inf (its key exceeds every finite key), and -0.0
     # orders just before 0.0 (deterministic; SQL considers them equal)
     keyed_b, kvts, null_bucket = _bucket_stream(
-        spark, m, order_cols, preds, keep_null_keys=True,
+        spark, m, _where(preds), order_cols, keep_null_keys=True,
         second_mode=second_mode, null1_sentinel=sentinel, buckets=buckets,
         persist=persist,
     )
@@ -2102,9 +2117,8 @@ def orderby_export(
         # the global rank rides the attach shuffle with its rid: joining
         # it back would add two exchanges + a sort-merge join AND execute
         # the bucket-sort subtree twice
-        sorted_ids, ln = _clear_lanes(sorted_rows, project)
-        mat = attach_rowids_parts(spark, m, sorted_ids, ln["rid"], list(project))
-        result = mat.select(F.col(ln["pos"]).alias("pos"), *project)
+        result = _attach_back(spark, sorted_rows, ["pos"], ["int"], ["pos"],
+                              [(m, "rid", list(project), False, 1)])
     if persist:
         # handle kept for callers that release eagerly (bench.py);
         # otherwise the NEXT sort/rank call — or release_key_caches() —
@@ -2140,8 +2154,7 @@ def group_count_distinct(
     if not dcols:
         raise ValueError("distinct_col must name at least one column")
     partial, vts, _ = filter_group_by_multi_partials(
-        spark, Manifest.read(out_dir), _preds_to_spec(preds or []),
-        group_cols + dcols, [],
+        spark, Manifest.read(out_dir), _where(preds), group_cols + dcols, [],
     )
     keys = [f"k{i}" for i in range(len(group_cols))]
     vkeys = [f"k{len(group_cols) + j}" for j in range(len(dcols))]
@@ -2171,7 +2184,7 @@ def distinct_count_approx(
     from arcade_spark.partread import filter_group_by_multi_partials
 
     partial, _vts, _ = filter_group_by_multi_partials(
-        spark, Manifest.read(out_dir), [], [column], []
+        spark, Manifest.read(out_dir), None, [column], []
     )
     return partial.agg(
         F.approx_count_distinct("k0", rsd).alias("n_distinct_approx")
@@ -2294,6 +2307,86 @@ _HOT_KEY_ROWS = 4_000_000
 _HOT_KEY_MAX = 100_000  # collectible hot-key descriptors
 
 
+def _join_front(
+    spark: SparkSession, out_a: str, out_b: str,
+    lanes_a: list[str], lanes_b: list[str], names: list[str],
+    project_a: list[str], project_b: list[str],
+    preds_a: list[tuple] | None, preds_b: list[tuple] | None,
+    keep_a: bool = False, keep_b: bool = False, on_what: str | None = None,
+) -> tuple[tuple, tuple]:
+    """The front of the two-sided joins (join_encoded, join_asof,
+    join_band), everything before their own match logic. The output
+    names — ``names`` (the key / ``on`` outputs), then ``project_a``,
+    then ``project_b`` — must be distinct. Each side's ``lanes`` are
+    its key columns, then, with ``on_what``, its ``on`` column, which
+    must ride int64. One manifest snapshot per side; the key-lane rule
+    (``_check_keys``) over the key columns; projections resolve. Then
+    each side's (lanes, rid) key stream, keeping null-key rows when
+    ``keep_a`` / ``keep_b`` is set. Returns ``(manifest, stream, lane
+    vtypes)`` per side."""
+    from arcade_spark.partread import key_rowid_parts
+
+    out = names + project_a + project_b
+    dup = sorted({c for c in out if out.count(c) > 1})
+    if dup:
+        raise ValueError(f"join output name clash: {dup}")
+    ma, mb = Manifest.read(out_a), Manifest.read(out_b)
+    n_keys = len(lanes_a) - (on_what is not None)
+    _check_keys(ma, lanes_a[:n_keys], mb, lanes_b[:n_keys])
+    sides = ((ma, lanes_a, preds_a, keep_a, project_a),
+             (mb, lanes_b, preds_b, keep_b, project_b))
+    for m, lanes, *_, project in sides:
+        if on_what is not None:
+            _require_int64_lane(m.vt(lanes[-1]), lanes[-1], on_what)
+        m.vts(project)  # unknown names raise before any job
+    return tuple(
+        (m, *key_rowid_parts(spark, m, _where(preds), lanes, keep_null_keys=keep))
+        for m, lanes, preds, keep, _ in sides
+    )
+
+
+def _attach_back(
+    spark: SparkSession, ids: DataFrame, lanes: list[str], vts: list[str],
+    names: list[str], sides: list[tuple],
+) -> DataFrame:
+    """The back of every operator that late-materializes a rowid stream
+    (the two-sided joins, ``top_per_key``, ``orderby_export``): the
+    stream ``ids``' output ``lanes`` come out as ``names`` (typed by
+    ``vts``), then one gather-expand attach per projected side —
+    ``sides`` holds ``(manifest, rid lane, project, keep_null,
+    dup_bound)`` — and the output is those names, then each side's
+    projection."""
+    from arcade_spark.partread import attach_rowids_parts
+
+    project = [c for _m, _rid, proj, *_ in sides for c in proj]
+    joined, ln = _clear_lanes(ids, project)
+    out_cols = _keys_out([ln[c] for c in lanes], vts, names)
+    for m, rid, proj, keep_null, dup_bound in sides:
+        if proj:
+            joined = attach_rowids_parts(
+                spark, m, joined, ln[rid], proj, keep_null=keep_null,
+                dup_bound=dup_bound,
+            )
+    return joined.select(*out_cols, *project)
+
+
+def _null_key_split(
+    stream: DataFrame, knames: list[str], t_lane: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The left side of join_asof / join_band under ``how="left"``:
+    (rows whose by lanes and ``t_lane`` are all non-null, the rest) —
+    the rest match nothing but are kept, already in the match-stream
+    shape ``(by lanes, t, t_b, rid_a, rid_b)`` with null ``t_b`` and
+    ``rid_b``."""
+    nn = F.lit(True)
+    for c in knames + [t_lane]:
+        nn = nn & F.col(c).isNotNull()
+    return stream.filter(nn), stream.filter(~nn).select(
+        *knames, F.col(t_lane).alias("t"), F.lit(None).cast("long").alias("t_b"),
+        F.col("rid").alias("rid_a"), F.lit(None).cast("long").alias("rid_b"),
+    )
+
+
 def join_encoded(
     spark: SparkSession,
     out_a: str,
@@ -2334,7 +2427,8 @@ def join_encoded(
     outer-ness costs key-only shuffles, never payload ones. Output
     columns: key components (named after ``key_a``, carrying
     COALESCE(a.k, b.k) as in a USING join), then project_a, then
-    project_b — names must not clash. The reference lists joins as
+    project_b — all distinct (a projection may not repeat a key name
+    either; ``ValueError`` before any job). The reference lists joins as
     future work (README.md:126-131); this is the Spark-native design
     for it.
 
@@ -2346,26 +2440,19 @@ def join_encoded(
     so without the hint a dim⋈fact join sort-merges both streams until
     AQE notices at runtime). ``broadcast="b"`` forces the hint on B,
     ``broadcast=None`` disables (both sides huge — let AQE decide)."""
-    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
-
     if how not in ("inner", "left", "right", "full", "semi", "anti"):
         raise ValueError(
             f"how must be 'inner', 'left', 'right', 'full', 'semi' "
             f"or 'anti': {how!r}"
         )
-    keys_a = [key_a] if isinstance(key_a, str) else list(key_a)
-    keys_b = keys_a if key_b is None else (
-        [key_b] if isinstance(key_b, str) else list(key_b)
-    )
+    keys_a = _as_cols(key_a)
+    keys_b = keys_a if key_b is None else _as_cols(key_b)
     if len(keys_a) != len(keys_b):
         raise ValueError(
             f"key count mismatch: {keys_a} vs {keys_b}"
         )
     project_a = project_a or []
     project_b = project_b or []
-    clash = set(project_a) & set(project_b)
-    if clash:
-        raise ValueError(f"projection name clash across sides: {sorted(clash)}")
     if how in ("semi", "anti") and project_b:
         raise ValueError(
             "semi/anti joins return left-side columns only — "
@@ -2379,16 +2466,10 @@ def join_encoded(
     # them (NOT EXISTS holds vacuously for a null key).
     keep_a = how in ("left", "full", "anti")
     keep_b = how in ("right", "full")
-    ma, mb = Manifest.read(out_a), Manifest.read(out_b)
-    ka, kvts_a = key_rowid_parts(
-        spark, ma, keys_a, _preds_to_spec(preds_a) if preds_a else None,
-        keep_null_keys=keep_a,
+    (ma, ka, kvts_a), (mb, kb, _) = _join_front(
+        spark, out_a, out_b, keys_a, keys_b, keys_a, project_a, project_b,
+        preds_a, preds_b, keep_a, keep_b,
     )
-    kb, kvts_b = key_rowid_parts(
-        spark, mb, keys_b, _preds_to_spec(preds_b) if preds_b else None,
-        keep_null_keys=keep_b,
-    )
-    _check_join_lanes(list(zip(zip(keys_a, kvts_a), zip(keys_b, kvts_b))))
     knames = [f"k{i}" for i in range(len(keys_a))]
     ka_n = ka.select(*knames, F.col("rid").alias("rid_a"))
     kb_n = kb.select(*knames, F.col("rid").alias("rid_b"))
@@ -2407,14 +2488,10 @@ def join_encoded(
             _hb(kb_n.select(*knames).distinct()), knames,
             "left_semi" if how == "semi" else "left_anti",
         )
-        ids, ln = _clear_lanes(ids, project_a)
-        out_cols = _keys_out([ln[kn] for kn in knames], kvts_a, keys_a)
-        if not project_a:
-            return ids.select(*out_cols)
         # rid_a is unique here (one row per left row after the deduped-
         # probe semi/anti)
-        joined = attach_rowids_parts(spark, ma, ids, ln["rid_a"], project_a)
-        return joined.select(*out_cols, *project_a)
+        return _attach_back(spark, ids, knames, kvts_a, keys_a,
+                          [(ma, "rid_a", project_a, False, 1)])
     ids = ka_n.join(_hb(kb_n), knames)
     if keep_a:
         # ANTI join keeps null-key rows too (null never equi-matches)
@@ -2432,23 +2509,13 @@ def join_encoded(
             .select(*knames, F.lit(None).cast("long").alias("rid_a"), "rid_b")
         )
         ids = ids.unionByName(unmatched_b)
-    joined, ln = _clear_lanes(ids, project_a + project_b)
-    out_cols = _keys_out([ln[kn] for kn in knames], kvts_a, keys_a)
-    # the match stream flows through one gather-expand attach per side
-    # (a rid repeats once per match; the other side's manifest row
-    # total bounds that multiplicity); a null rid is an outer side's
+    # a rid repeats once per match (the other side's manifest row total
+    # bounds that multiplicity); a null rid is an outer side's
     # unmatched row and keeps null projections
-    if project_a:
-        joined = attach_rowids_parts(
-            spark, ma, joined, ln["rid_a"], project_a, keep_null=keep_b,
-            dup_bound=mb.rows,
-        )
-    if project_b:
-        joined = attach_rowids_parts(
-            spark, mb, joined, ln["rid_b"], project_b, keep_null=keep_a,
-            dup_bound=ma.rows,
-        )
-    return joined.select(*out_cols, *project_a, *project_b)
+    return _attach_back(spark, ids, knames, kvts_a, keys_a, [
+        (ma, "rid_a", project_a, keep_b, mb.rows),
+        (mb, "rid_b", project_b, keep_a, ma.rows),
+    ])
 
 
 def _require_int64_lane(vt: str, col: str, what: str) -> None:
@@ -2464,21 +2531,6 @@ def _require_int64_lane(vt: str, col: str, what: str) -> None:
 
 def _as_cols(cols: str | list[str]) -> list[str]:
     return [cols] if isinstance(cols, str) else list(cols)
-
-
-def _keyed_vtypes(
-    m: Manifest, keys: list[str], rest: list[str], what: str = "key",
-) -> list[str]:
-    """The shared lane-type check of the keyed-timeline operators:
-    manifest vtypes of ``keys + rest``; a float key column is rejected
-    (float equality is not a sane partition contract)."""
-    vts = m.vts(keys + rest)
-    for c, vt in zip(keys, vts):
-        if vt in ("double", "float"):
-            raise NotImplementedError(
-                f"float {what} columns are not a sane partition contract: {c}"
-            )
-    return vts
 
 
 def _lanes_ddl(names: list[str], is_bin: list[bool]) -> str:
@@ -2985,9 +3037,9 @@ def join_asof(
 
     Output: by columns (left values), ``on`` (left), ``{on_b}_b``
     (matched right value, null if unmatched), project_a..., project_b...
+    — all distinct (``ValueError`` before any job).
     """
     import pyarrow as pa
-    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
 
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left': {how!r}")
@@ -3002,37 +3054,17 @@ def join_asof(
     on_b = on if on_b is None else on_b
     project_a = project_a or []
     project_b = project_b or []
-    clash = set(project_a) & set(project_b)
-    if clash:
-        raise ValueError(f"projection name clash across sides: {sorted(clash)}")
     if tolerance is not None and tolerance < 0:
         raise ValueError(f"tolerance must be >= 0: {tolerance}")
 
     keep_a = how == "left"
     m = len(by_cols)
-    # validate lane types from the manifests BEFORE building either
-    # stream, so a bad on-column reports its own error (not a missing-
-    # column KeyError from the other side's key extraction); projected
-    # names resolve here too, before the hot-key split's jobs
-    ma, mb = Manifest.read(out_a), Manifest.read(out_b)
-    vts_a = _keyed_vtypes(ma, by_cols, [on])
-    _require_int64_lane(vts_a[m], on, "as-of on")
-    vts_b = _keyed_vtypes(mb, by_cols, [on_b])
-    _require_int64_lane(vts_b[m], on_b, "as-of on")
-    ma.vts(project_a), mb.vts(project_b)
-    for i, (va, vb) in enumerate(zip(vts_a, vts_b)):
-        if (va in ("str", "binary")) != (vb in ("str", "binary")):
-            raise ValueError(
-                f"by-key lanes differ: {by_cols[i]} is {va} vs {vb}"
-            )
-    ka, vts_a = key_rowid_parts(
-        spark, ma, by_cols + [on],
-        _preds_to_spec(preds_a) if preds_a else None,
-        keep_null_keys=keep_a,
-    )
-    kb, vts_b = key_rowid_parts(
-        spark, mb, by_cols + [on_b],
-        _preds_to_spec(preds_b) if preds_b else None,
+    names = by_cols + [on, f"{on_b}_b"]
+    # every lane and projection is checked in the front, before the
+    # hot-key split's jobs
+    (ma, ka, vts_a), (mb, kb, vts_b) = _join_front(
+        spark, out_a, out_b, by_cols + [on], by_cols + [on_b], names,
+        project_a, project_b, preds_a, preds_b, keep_a, on_what="as-of on",
     )
     knames = [f"k{i}" for i in range(m)]
     lane_is_bin = [vt in ("str", "binary") for vt in vts_a[:m]]
@@ -3043,13 +3075,8 @@ def join_asof(
     side_right, side_left = (0, 1) if allow_exact else (1, 0)
     negate = direction == "forward"  # backward merge over negated lane
     nearest = direction == "nearest"
-    left_valid = ka
-    if keep_a:
-        nn = F.lit(True)
-        for c in knames + [f"k{m}"]:
-            nn = nn & F.col(c).isNotNull()
-        left_null = ka.filter(~nn)
-        left_valid = ka.filter(nn)
+    left_valid, left_null = (_null_key_split(ka, knames, f"k{m}") if keep_a
+                             else (ka, None))
     lv = left_valid.select(
         *knames, F.col(f"k{m}").alias("t"),
         F.lit(side_left).cast("int").alias("side"), "rid",
@@ -3191,36 +3218,18 @@ def join_asof(
 
     def finish(ids, _split):
         if keep_a:
-            ids = ids.unionByName(
-                left_null.select(
-                    *knames, F.col(f"k{m}").alias("t"),
-                    F.lit(None).cast("long").alias("t_b"),
-                    F.col("rid").alias("rid_a"),
-                    F.lit(None).cast("long").alias("rid_b"),
-                )
-            )
+            ids = ids.unionByName(left_null)
         # (measured round-8: persisting ids here HURTS — the merge
         # kernel re-run that exchange reuse leaves is cheaper than
         # forcing cache materialization, unlike join_encoded's
         # triple-consumed stream)
-        joined, ln = _clear_lanes(ids, project_a + project_b)
-        out_cols = _keys_out([ln[kn] for kn in knames], vts_a, by_cols)
-        out_cols.append(_group_key_out(F.col(ln["t"]), vts_a[m]).alias(on))
-        out_cols.append(
-            _group_key_out(F.col(ln["t_b"]), vts_b[m]).alias(f"{on_b}_b")
+        # rid_a is one-per-left-row in the as-of output (never null);
+        # one right row may be the match of every left row
+        return _attach_back(
+            spark, ids, knames + ["t", "t_b"], vts_a[:m + 1] + vts_b[m:], names,
+            [(ma, "rid_a", project_a, False, 1),
+             (mb, "rid_b", project_b, keep_a, ma.rows)],
         )
-        if project_a:
-            # rid_a is one-per-left-row in the as-of output (never null)
-            joined = attach_rowids_parts(
-                spark, ma, joined, ln["rid_a"], project_a
-            )
-        if project_b:
-            # one right row may be the match of every left row
-            joined = attach_rowids_parts(
-                spark, mb, joined, ln["rid_b"], project_b,
-                keep_null=keep_a, dup_bound=ma.rows,
-            )
-        return joined.select(*out_cols, *project_a, *project_b)
 
     lanes_ddl = _lanes_ddl(knames, lane_is_bin)
     return _keyed_pass(
@@ -3283,7 +3292,7 @@ def top_per_key(
     rank, so the per-partition keep is a superset of the survivors.
     Output: group columns, ``rn`` (1-based), projection columns."""
     import pyarrow as pa
-    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
+    from arcade_spark.partread import key_rowid_parts
 
     group_cols = _as_cols(group_cols)
     order_cols = _as_cols(order_cols)
@@ -3311,7 +3320,8 @@ def top_per_key(
             f"mode must be row_number/rank/dense_rank: {mode!r}"
         )
     m = Manifest.read(out_dir)
-    vts = _keyed_vtypes(m, group_cols, order_cols, "group")
+    _check_keys(m, group_cols)
+    vts = m.vts(group_cols + order_cols)
     g = len(group_cols)
     g_bin = [vt in ("str", "binary") for vt in vts[:g]]
     o_bin = [vt in ("str", "binary") for vt in vts[g:]]
@@ -3363,23 +3373,17 @@ def top_per_key(
     lanes_ddl = _lanes_ddl(knames, g_bin + o_bin)
     # the partial top-N pass runs inside the key kernel's task
     partial, _ = key_rowid_parts(
-        spark, m, group_cols + order_cols,
-        _preds_to_spec(preds) if preds else None,
-        keep_null_keys=True,
-        float_order_lane=True,
+        spark, m, _where(preds), group_cols + order_cols, keep_null_keys=True,
         post=(topn_kernel(False), f"{lanes_ddl}, rid long"),
     )
 
     def finish(final, _split):
         # every output row has a distinct rid; the group lanes and rn
         # ride the attach shuffle (the order lanes are dropped first)
-        stream, ln = _clear_lanes(
-            final.select(*knames[:g], "rn", "rid"), project
+        return _attach_back(
+            spark, final.select(*knames[:g], "rn", "rid"), knames[:g] + ["rn"],
+            vts[:g] + ["int"], group_cols + ["rn"], [(m, "rid", project, False, 1)],
         )
-        out_cols = _keys_out([ln[kn] for kn in knames[:g]], vts, group_cols)
-        out_cols.append(F.col(ln["rn"]).alias("rn"))
-        result = attach_rowids_parts(spark, m, stream, ln["rid"], project)
-        return result.select(*out_cols, *project)
 
     # no hot-key gate: the partial pass already bounds each key's rows
     # per task to n per encode partition
@@ -3462,12 +3466,9 @@ def sessionize(
         raise ValueError(f"emit must be 'rows' or 'sessions': {emit!r}")
     g = len(key_cols)
     m = Manifest.read(out_dir)
-    vts = _keyed_vtypes(m, key_cols, [ts_col])
-    _require_int64_lane(vts[g], ts_col, "sessionize timestamp")
-    keyed, kvts = key_rowid_parts(
-        spark, m, key_cols + [ts_col],
-        _preds_to_spec(preds) if preds else None,
-    )
+    _check_keys(m, key_cols)
+    _require_int64_lane(m.vt(ts_col), ts_col, "sessionize timestamp")
+    keyed, kvts = key_rowid_parts(spark, m, _where(preds), key_cols + [ts_col])
     k_bin = [vt in ("str", "binary") for vt in kvts[:g]]
     knames = [f"k{i}" for i in range(g)]
     gap_units = gap
@@ -3609,9 +3610,8 @@ def join_band(
     SQL null semantics: null by/on values never match; ``how="left"``
     keeps unmatched (and null-key) A rows with null B columns.
     Output: by columns (A values), ``on_a``, ``{on_b}_b``,
-    project_a..., project_b... — one row per matched pair."""
-    from arcade_spark.partread import attach_rowids_parts, key_rowid_parts
-
+    project_a..., project_b... (all distinct; ``ValueError`` before
+    any job) — one row per matched pair."""
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left': {how!r}")
     if lo > hi:
@@ -3620,30 +3620,12 @@ def join_band(
     on_b = on_a if on_b is None else on_b
     project_a = project_a or []
     project_b = project_b or []
-    clash = set(project_a) & set(project_b)
-    if clash:
-        raise ValueError(f"projection name clash across sides: {sorted(clash)}")
     m = len(by_cols)
-
-    ma, mb = Manifest.read(out_a), Manifest.read(out_b)
-    vts_a = ma.vts(by_cols + [on_a])
-    _require_int64_lane(vts_a[m], on_a, "band-join on")
-    vts_b = mb.vts(by_cols + [on_b])
-    _require_int64_lane(vts_b[m], on_b, "band-join on")
-    for i, (va, vb) in enumerate(zip(vts_a, vts_b)):
-        if (va in ("str", "binary")) != (vb in ("str", "binary")):
-            raise ValueError(
-                f"by-key lanes differ: {by_cols[i]} is {va} vs {vb}"
-            )
     keep_a = how == "left"
-    ka, _ = key_rowid_parts(
-        spark, ma, by_cols + [on_a],
-        _preds_to_spec(preds_a) if preds_a else None,
-        keep_null_keys=keep_a,
-    )
-    kb, _ = key_rowid_parts(
-        spark, mb, by_cols + [on_b],
-        _preds_to_spec(preds_b) if preds_b else None,
+    names = by_cols + [on_a, f"{on_b}_b"]
+    (ma, ka, vts_a), (mb, kb, vts_b) = _join_front(
+        spark, out_a, out_b, by_cols + [on_a], by_cols + [on_b], names,
+        project_a, project_b, preds_a, preds_b, keep_a, on_what="band-join on",
     )
     knames = [f"k{i}" for i in range(m)]
     tname, G = f"k{m}", max(hi - lo, 1)
@@ -3659,30 +3641,24 @@ def join_band(
         num = c - F.pmod(c, F.lit(G).cast(DEC))
         return (num / F.lit(G).cast(DEC)).cast("long")
 
-    left_valid = ka
-    left_null = None
-    if keep_a:
-        nn = F.lit(True)
-        for c in knames + [tname]:
-            nn = nn & F.col(c).isNotNull()
-        left_null = ka.filter(~nn)
-        left_valid = ka.filter(nn)
+    left_valid, left_null = (_null_key_split(ka, knames, tname) if keep_a
+                             else (ka, None))
     av = left_valid.select(
         *knames, F.col(tname).alias("t"), F.col("rid").alias("rid_a"),
         _bdiv(F.col(tname)).alias("bkt"),
     )
     bv = (
         kb.select(
-            *knames, F.col(tname).alias("s"), F.col("rid").alias("rid_b"),
+            *knames, F.col(tname).alias("t_b"), F.col("rid").alias("rid_b"),
         )
         .withColumn(
             "bkt",
-            # band edges in decimal too — s + hi on longs wraps for s
-            # near the int64 boundary
+            # band edges in decimal too — t_b + hi on longs wraps for
+            # t_b near the int64 boundary
             F.explode(
                 F.sequence(
-                    _bdiv(F.col("s").cast(DEC) + F.lit(lo)),
-                    _bdiv(F.col("s").cast(DEC) + F.lit(hi)),
+                    _bdiv(F.col("t_b").cast(DEC) + F.lit(lo)),
+                    _bdiv(F.col("t_b").cast(DEC) + F.lit(hi)),
                 )
             ),
         )
@@ -3690,10 +3666,10 @@ def join_band(
     pairs = (
         av.join(bv, [*knames, "bkt"])
         .filter(
-            (F.col("t").cast(DEC) >= F.col("s").cast(DEC) + F.lit(lo))
-            & (F.col("t").cast(DEC) <= F.col("s").cast(DEC) + F.lit(hi))
+            (F.col("t").cast(DEC) >= F.col("t_b").cast(DEC) + F.lit(lo))
+            & (F.col("t").cast(DEC) <= F.col("t_b").cast(DEC) + F.lit(hi))
         )
-        .select(*knames, "t", "s", "rid_a", "rid_b")
+        .select(*knames, "t", "t_b", "rid_a", "rid_b")
     )
     ids = pairs
     if keep_a:
@@ -3701,31 +3677,16 @@ def join_band(
         unmatched = (
             av.join(matched, "rid_a", "left_anti")
             .select(
-                *knames, "t", F.lit(None).cast("long").alias("s"),
+                *knames, "t", F.lit(None).cast("long").alias("t_b"),
                 "rid_a", F.lit(None).cast("long").alias("rid_b"),
             )
         )
-        nulls = left_null.select(
-            *knames, F.col(tname).alias("t"),
-            F.lit(None).cast("long").alias("s"),
-            F.col("rid").alias("rid_a"),
-            F.lit(None).cast("long").alias("rid_b"),
-        )
-        ids = pairs.unionByName(unmatched).unionByName(nulls)
-    joined, ln = _clear_lanes(ids, project_a + project_b)
-    out_cols = _keys_out([ln[kn] for kn in knames], vts_a, by_cols)
-    out_cols.append(_group_key_out(F.col(ln["t"]), vts_a[m]).alias(on_a))
-    out_cols.append(_group_key_out(F.col(ln["s"]), vts_b[m]).alias(f"{on_b}_b"))
-    if project_a:
-        joined = attach_rowids_parts(
-            spark, ma, joined, ln["rid_a"], project_a, dup_bound=mb.rows,
-        )
-    if project_b:
-        joined = attach_rowids_parts(
-            spark, mb, joined, ln["rid_b"], project_b, keep_null=keep_a,
-            dup_bound=ma.rows,
-        )
-    return joined.select(*out_cols, *project_a, *project_b)
+        ids = pairs.unionByName(unmatched).unionByName(left_null)
+    return _attach_back(
+        spark, ids, knames + ["t", "t_b"], vts_a[:m + 1] + vts_b[m:], names,
+        [(ma, "rid_a", project_a, False, mb.rows),
+         (mb, "rid_b", project_b, keep_a, ma.rows)],
+    )
 
 
 def rolling_agg(
@@ -3822,13 +3783,13 @@ def rolling_agg(
         raise ValueError("sum/avg/min/max need an agg_col")
     g = len(key_cols)
     m = Manifest.read(out_dir)
-    vts = _keyed_vtypes(m, key_cols, [ts_col] + ([agg_col] if need_val else []))
-    _require_int64_lane(vts[g], ts_col, "rolling_agg ts")
+    _check_keys(m, key_cols)
+    _require_int64_lane(m.vt(ts_col), ts_col, "rolling_agg ts")
     if need_val:
-        _require_int64_lane(vts[g + 1], agg_col, "rolling_agg agg")
+        _require_int64_lane(m.vt(agg_col), agg_col, "rolling_agg agg")
     keyed, kvts = key_rowid_parts(
-        spark, m, key_cols + [ts_col] + ([agg_col] if need_val else []),
-        _preds_to_spec(preds) if preds else None,
+        spark, m, _where(preds),
+        key_cols + [ts_col] + ([agg_col] if need_val else []),
     )
     k_bin = [vt in ("str", "binary") for vt in kvts[:g]]
     knames = [f"k{i}" for i in range(g)]
@@ -4103,16 +4064,12 @@ def window_shift(
     g = len(key_cols)
     m = len(order_cols)
     mf = Manifest.read(out_dir)
-    vts = _keyed_vtypes(mf, key_cols, order_cols + [val_col])
+    _check_keys(mf, key_cols)
     # keep_null_keys so null-VAL rows survive the kernel; the required
     # non-null key/order contract is re-imposed on the lanes below
     keyed, kvts = key_rowid_parts(
-        spark, mf, key_cols + order_cols + [val_col],
-        _preds_to_spec(preds) if preds else None,
+        spark, mf, _where(preds), key_cols + order_cols + [val_col],
         keep_null_keys=True,
-        float_order_lane=any(
-            vt in ("double", "float") for vt in vts[g:]
-        ),
     )
     keyed = keyed.filter(
         F.expr(" AND ".join(f"k{i} IS NOT NULL" for i in range(g + m)))
@@ -4347,18 +4304,19 @@ def join_group_by(
             "b_exists (EXISTS semijoin) cannot aggregate side-B columns"
         )
 
-    def side_partials(out, key, groups, preds, dnf, side):
+    ma, mb = Manifest.read(out_a), Manifest.read(out_b)
+    _check_keys(ma, [key_a], mb, [key_b])
+
+    def side_partials(m, key, groups, preds, dnf, side):
         return filter_group_by_multi_partials(
-            spark, Manifest.read(out), _preds_to_spec(preds or []), [key] + groups,
+            spark, m, _where(preds, dnf or None), [key] + groups,
             [sp[:3] for sp, s in zip(aggs, sides) if s == side], agg_scale,
-            dnf_spec=[_preds_to_spec(c) for c in dnf] if dnf else None,
         )
 
     partial_a, vts_a, cspecs_a = side_partials(
-        out_a, key_a, group_a, preds_a, dnf_a, "a")
+        ma, key_a, group_a, preds_a, dnf_a, "a")
     partial_b, vts_b, cspecs_b = side_partials(
-        out_b, key_b, group_b, preds_b, dnf_b, "b")
-    _check_join_lanes([((key_a, vts_a[0]), (key_b, vts_b[0]))])
+        mb, key_b, group_b, preds_b, dnf_b, "b")
     a = _side_merge(partial_a, [f"k{i}" for i in range(len(vts_a))], cspecs_a)
     # EXISTS: clamp B's multiplicity to 1 (a merged tuple has c >= 1,
     # so least(sum(c), 1) is exactly the indicator)
@@ -4429,18 +4387,19 @@ def join_group_by_chain(
                 f"got side {sp[3]!r}"
             )
 
-    def partials(out, keys, preds, specs):
+    ma, mb, mc = (Manifest.read(o) for o in (out_a, out_b, out_c))
+    _check_keys(ma, [key_a], mb, [key_b_a])
+    _check_keys(mb, [key_b_c], mc, [key_c])
+
+    def partials(m, keys, preds, specs):
         return filter_group_by_multi_partials(
-            spark, Manifest.read(out), _preds_to_spec(preds or []), keys, specs,
-            agg_scale,
+            spark, m, _where(preds), keys, specs, agg_scale,
         )
 
-    partial_a, vts_a, cspecs = partials(
-        out_a, [key_a], preds_a, [sp[:3] for sp in aggs])
-    partial_b, vts_b, _ = partials(out_b, [key_b_a, key_b_c], preds_b, [])
-    partial_c, vts_c, _ = partials(out_c, [key_c] + group_c, preds_c, [])
-    _check_join_lanes([((key_a, vts_a[0]), (key_b_a, vts_b[0])),
-                       ((key_b_c, vts_b[1]), (key_c, vts_c[0]))])
+    partial_a, _, cspecs = partials(
+        ma, [key_a], preds_a, [sp[:3] for sp in aggs])
+    partial_b, _, _ = partials(mb, [key_b_a, key_b_c], preds_b, [])
+    partial_c, vts_c, _ = partials(mc, [key_c] + group_c, preds_c, [])
     specs = [("l", i, sp) for i, sp in enumerate(cspecs)]
     # hop 1 re-keys A's partials to C's key through the bridge
     ab = _side_merge(_hop(

@@ -97,7 +97,7 @@ def test_split_bounds_task_rows(spark, hot_table):
     from arcade_spark.readops import _split_hot_keys
 
     out, _ = hot_table
-    keyed, kvts = key_rowid_parts(spark, Manifest.read(out), ["uid", "t"])
+    keyed, kvts = key_rowid_parts(spark, Manifest.read(out), None, ["uid", "t"])
     sliced, n_hot = _split_hot_keys(
         spark, keyed, ["k0"], [False], "k1",
         overlap=5000, threshold=THRESH)
@@ -355,8 +355,8 @@ def test_window_shift_split_bounds_task_rows(spark, hot_table):
     from arcade_spark.readops import _split_hot_keys
 
     out, _ = hot_table
-    keyed, _ = key_rowid_parts(spark, Manifest.read(out), ["uid", "t", "ev", "amt"],
-                               keep_null_keys=True)
+    keyed, _ = key_rowid_parts(spark, Manifest.read(out), None,
+                               ["uid", "t", "ev", "amt"], keep_null_keys=True)
     keyed = keyed.filter("k0 IS NOT NULL AND k1 IS NOT NULL "
                          "AND k2 IS NOT NULL")
     sliced, n_hot = _split_hot_keys(

@@ -318,7 +318,7 @@ def test_composite_splits_low_cardinality_first(spark, tmp_path_factory):
 
     kvts = m.vts(["lang", "url"])
     keyed_b, _ = key_rowid_parts(
-        spark, m, ["lang", "url"],
+        spark, m, None, ["lang", "url"],
         post=_bucketizer(
             kvts, True, splits, len(splits) + 1,
             second_mode="col", null1_sentinel=np.iinfo(np.int64).max,

@@ -30,6 +30,13 @@ line per run in the same form. Run only that section with
 
     python tools/show_plans.py rank
 
+The join section runs the two-sided joins on the same two tables:
+``join_encoded`` for every ``how`` (inner, left, right, full, semi,
+anti), ``join_band`` inner and left, and ``join_asof`` backward, one
+line per run in the same form. Run only that section with
+
+    python tools/show_plans.py join
+
 The write section runs the three write jobs (``encode_files_job`` and
 ``encode_job`` on a 20k-row, 4-file corpus, then ``compact_job`` of the
 files-mode table 4 → 1) and prints one line per job: its Spark job and
@@ -76,6 +83,9 @@ def main() -> None:
     if sys.argv[1:] == ["rank"]:
         show_rank(spark, _root("plans_rank"))
         return
+    if sys.argv[1:] == ["join"]:
+        show_join(spark, _root("plans_join"))
+        return
     if sys.argv[1:] == ["write"]:
         show_write(spark, _root("plans_write"))
         return
@@ -95,6 +105,7 @@ def main() -> None:
     show_keyed(spark, _root("plans_keyed"))
     show_agg(spark, _root("plans_agg"))
     show_rank(spark, _root("plans_rank"))
+    show_join(spark, _root("plans_join"))
     show_write(spark, _root("plans_write"))
 
 
@@ -302,6 +313,34 @@ def show_rank(spark, root: str) -> None:
             spark, f, ["tag", "x"], ["id", "x"], desc=[True, False]),
     }
     print("=== rank and sort operators: jobs and per-stage python depth ===")
+    _print_runs(spark, runs)
+
+
+def show_join(spark, root: str) -> None:
+    """Run the two-sided joins on the small tables and print each run's
+    job count and per-stage Python depth. Both sides keep unmatched
+    rows: B's predicate drops keys 0-9 (A's fk 0-9 find no match) and
+    B's keys 50-59 have no A row; the band's B predicate leaves A rows
+    past id 1099 without a match."""
+    from arcade_spark.readops import join_asof, join_band, join_encoded
+
+    oa, ob = _tables(spark, root)
+    runs = {
+        f"join_encoded {how}": lambda how=how: join_encoded(
+            spark, oa, ob, "fk", "pk", project_a=["tag", "id"],
+            project_b=[] if how in ("semi", "anti") else ["grade"],
+            preds_b=[("range", "pk", 10, 59)], how=how)
+        for how in ("inner", "left", "right", "full", "semi", "anti")
+    }
+    runs.update({
+        f"join_band {how}": lambda how=how: join_band(
+            spark, oa, oa, "ts", lo=0, hi=1000, by="fk", project_a=["tag"],
+            project_b=["id"], preds_b=[("range", "id", 0, 999)], how=how)
+        for how in ("inner", "left")
+    })
+    runs["join_asof backward"] = lambda: join_asof(
+        spark, oa, oa, "ts", "fk", project_a=["tag"], project_b=["id"])
+    print("=== two-sided joins: jobs and per-stage python depth ===")
     _print_runs(spark, runs)
 
 
